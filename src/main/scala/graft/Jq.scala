@@ -3,8 +3,7 @@ package graft
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.functions.{col, explode}
-import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.sql.functions.explode
 
 import graft.jq.{JqParser, JqEval, JqEvalMeta, JqDocs, JqExtract}
 import graft.functions._

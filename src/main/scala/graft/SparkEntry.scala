@@ -199,6 +199,14 @@ object SparkEntry {
         expr("((doc_id * 2654435761L + j * 40503L) % 1000003L) % n_docs").as("dst"))
   }
 
+  /** Connected components of `doc_id`s over a checkpointed pair frame
+    * the query owns (a `minhashNearDups` result): nearDupClusters copies
+    * the pairs into its own edge frame, so they release the moment it
+    * returns and only the cluster labels stay persisted. */
+  private def nearDupClustersOf(ids: DataFrame, pairs: DataFrame): DataFrame =
+    try operators.Dedup.nearDupClusters(ids, "doc_id", pairs)
+    finally operators.Checkpoints.release(pairs)
+
   /** Corpus-level ANN oracle contract (round 17, r16 verdict ask #7).
     *
     * The pre-r17 per-qid booleans (`recall@5 ≥ cut` for every query)
@@ -1573,10 +1581,8 @@ object SparkEntry {
     // actually writes out
     "dedup_keep" -> ((s, dir) => {
       val docs = table(s, dir, "documents")
-      val pairs = operators.Dedup.minhashNearDups(docs, "doc_id", col("text"), 3, 0.8)
-        .select(col("id_a"), col("id_b"))
-      val clusters = operators.Dedup.nearDupClusters(
-        docs.select(col("doc_id")), "doc_id", pairs)
+      val clusters = nearDupClustersOf(docs.select(col("doc_id")),
+        operators.Dedup.minhashNearDups(docs, "doc_id", col("text"), 3, 0.8))
       docs.join(clusters.filter(col("id") === col("rep"))
           .select(col("id").as("doc_id")), "doc_id")
         .select(col("doc_id"), col("lang"))
@@ -1588,9 +1594,8 @@ object SparkEntry {
     // closure over the same brute-force pair list.
     "dedup_clusters" -> ((s, dir) => {
       val docs = table(s, dir, "documents")
-      val pairs = operators.Dedup.minhashNearDups(docs, "doc_id", col("text"), 3, 0.8)
-        .select(col("id_a"), col("id_b"))
-      operators.Dedup.nearDupClusters(docs.select(col("doc_id")), "doc_id", pairs)
+      nearDupClustersOf(docs.select(col("doc_id")),
+          operators.Dedup.minhashNearDups(docs, "doc_id", col("text"), 3, 0.8))
         .select(col("id").as("doc_id"), col("rep"))
     }),
 
@@ -1646,15 +1651,12 @@ object SparkEntry {
       // parquet scan, which is cheaper re-read than pinned.
       val exact = operators.Checkpoints.checkpoint(
         operators.Dedup.exactDedup(kept, Seq(col("text")), col("doc_id")))
-      val clusters = try {
-        val pairs = operators.Dedup.minhashNearDups(exact, "doc_id", col("text"), 3, 0.8)
-          .select(col("id_a"), col("id_b"))
-        // both minhashNearDups' result and nearDupClusters' labels are
-        // eagerly checkpointed inside the calls, so every read of
-        // `exact`'s blocks has happened by the time this block exits
-        operators.Dedup.nearDupClusters(
-          exact.select(col("doc_id")), "doc_id", pairs)
-      } finally operators.Checkpoints.release(exact)
+      // both minhashNearDups' result and nearDupClusters' labels are
+      // eagerly checkpointed inside the calls, so every read of `exact`'s
+      // blocks has happened by the time this block exits
+      val clusters = try nearDupClustersOf(exact.select(col("doc_id")),
+          operators.Dedup.minhashNearDups(exact, "doc_id", col("text"), 3, 0.8))
+        finally operators.Checkpoints.release(exact)
       // The representatives ARE the answer (round 18): nearDupClusters'
       // output id set is exactly its `ids` input — `exact`'s ids — and
       // reps are a subset of those, so the old `exact ⋈ reps` closing

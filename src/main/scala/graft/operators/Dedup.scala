@@ -4,9 +4,13 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.ColumnBridge
+import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
 import org.apache.spark.storage.StorageLevel
 
 import graft.functions.{MinhashSig, Simhash64}
+
+import scala.concurrent.Await
+import scala.concurrent.duration.DurationInt
 
 /** Deduplication operators for large-scale training-data pipelines.
   *
@@ -117,7 +121,6 @@ object Dedup {
   // h·a + b < 2^62 + 2^60 — provably overflow-free under ANSI arithmetic.
   private val hashA: Array[Long] = Array.fill(MinhashK)((rnd.nextLong() & ((1L << 30) - 1)) | 1L)
   private val hashB: Array[Long] = Array.fill(MinhashK)(rnd.nextLong() & ((1L << 60) - 1))
-  private def litArr(xs: Array[Long]): Column = array(xs.map(lit(_)): _*)
 
   /** MinHash signature (ARRAY<LONG> of length [[MinhashK]]): one 32-bit
     * murmur base hash per shingle, K affine permutations, min per
@@ -450,174 +453,149 @@ object Dedup {
   // ------------------------------------------------------------ clustering
 
   /** Connected components over a near-dup pair list — the reduce step of
-    * web-scale dedup: pairs from [[minhashNearDups]]/[[simhashNearDups]]
-    * form clusters, and the pipeline keeps ONE document per cluster.
-    * Returns (id, rep) where rep is the MINIMUM id transitively reachable
-    * through the pair relation (isolated ids are their own rep).
+    * web-scale dedup, and graft's one components operator (dedup, graph
+    * and multimodal callers all land here): pairs from
+    * [[minhashNearDups]]/[[simhashNearDups]] (or any `(id_a, id_b)` edge
+    * list) form clusters, and the pipeline keeps ONE document per
+    * cluster. Returns `(id, rep)` for every row of `ids`, where rep is
+    * the MINIMUM id transitively reachable through the pair relation
+    * (isolated ids are their own rep).
     *
-    * Algorithm: min-label propagation with POINTER JUMPING — per round,
-    * (1) every id takes the min of its label and its direct neighbors'
-    * labels (one hop), then (2) `jumps` successive pointer jumps
-    * (`rep := min(rep, rep(rep))`) each compose two label links into
-    * one. A single jump per round is NOT the textbook halving: the hop
-    * only injects one new edge of information, so hop+1-jump grows the
+    * LOCAL FIRST. The pair projection materializes ONCE — `pairs` is
+    * usually a whole near-dup pipeline (shingle → LSH → verify), and
+    * every later read hits these blocks, so the pipeline runs once on
+    * either path. A LIMIT-bounded collect then pulls at most
+    * `localLimit + 1` edges to the driver:
+    *   - if the whole edge set fits (≤ `localLimit`; the default 2M
+    *     edges hold the driver to tens of MB), a min-id-root union-find
+    *     finishes on the driver in O(E α(N)) with zero rounds; its labels
+    *     (one per non-root id, so at most one per edge) left-join onto
+    *     `ids` — ids without a label are their own rep;
+    *   - past the budget the collect stops at `localLimit + 1` rows (the
+    *     driver never holds more than the budget) and the distributed
+    *     fixpoint below runs over the materialized edges.
+    * Each component's minimum id is unique, so both paths return the
+    * same (id, rep) set by construction (spec-pinned). `localLimit = 0`
+    * forces the fixpoint; `maxIters` and `jumps` only govern it.
+    *
+    * DISTRIBUTED FIXPOINT: min-label propagation with POINTER JUMPING —
+    * per round, (1) every id takes the min of its label and its direct
+    * neighbors' labels (one hop), then (2) `jumps` successive pointer
+    * jumps (`rep := min(rep, rep(rep))`) each compose two label links
+    * into one. One jump per round is NOT the textbook halving: the hop
+    * injects one new edge of information, so hop+1-jump grows the
     * covered distance ~φ× per round and an adversarial id layout on a
-    * long cycle crawls (measured 23 rounds on a 100-node LCG cycle
-    * component — label distance here is distance in the pointer graph,
-    * which the hop rebuilds each round). Multiple jumps per round restore
-    * geometric depth reduction at one cheap (id, rep)⋈(id, rep)
-    * self-join each — jumps=3 brings that same component to ~8 rounds.
-    * The default stays jumps=1: near-dup pair graphs (this operator's
-    * domain) have tiny components that converge in ~2 rounds, where
-    * extra jumps are pure per-round job overhead; callers clustering
-    * high-diameter graphs raise it. Shuffles per round: 1 groupBy +
-    * `jumps` self-joins, no driver-side union-find,
-    * no full closure materialization. The fixpoint iterates over PAIRED
-    * ids only (round 13): ids with no incident pair are their own rep by
-    * definition and fold back in at the end, so each round's exchanges
-    * carry the near-dup graph (≤ 2·|pairs| rows), never the corpus id
-    * space — at real dedup rates that is most of the round cost gone. Each round materializes eagerly
-    * (Checkpoints.checkpoint) so lineage stays flat, and superseded
-    * rounds are RELEASED as soon as the next one lands — only the final
-    * (id, rep) frame outlives the call (an un-released checkpoint taxes
-    * every later query in the session). The loop stops as soon as a
-    * round changes no label — a driver-side CONVERGENCE check, not
-    * driver-side data. `checkpointDir` switches rounds to reliable
-    * checkpoints for long jobs on real clusters.
+    * long cycle crawls (23 rounds on a 100-node LCG cycle); jumps=3
+    * brings that component to ~8 rounds at one (id, rep) self-join
+    * each. Callers clustering high-diameter graphs raise `jumps`. The
+    * rounds iterate over PAIRED ids only — an id with no incident pair
+    * is its own rep and folds back in at the end — so each round
+    * shuffles the pair graph (≤ 2·|pairs| rows), never the corpus id
+    * space. Each round materializes eagerly so lineage stays flat, and
+    * the loop stops as soon as a round changes no label (a driver-side
+    * CONVERGENCE check, not driver-side data). If `maxIters` rounds run
+    * out first the labels would split clusters (duplicates surviving
+    * dedup_keep), so that exit THROWS; with pointer jumping maxIters=10
+    * covers diameters up to ~2^10, so the throw is a corrupted-input
+    * tripwire. `checkpointDir` switches every checkpoint to a reliable
+    * one for long jobs on real clusters.
     *
-    * The jump's self-join is total because labels are always ids already
-    * in the table: initial reps are the ids themselves, the hop takes
-    * mins over existing reps, and the jump only follows them.
+    * OWNERSHIP: the returned frame is eagerly checkpointed — the one
+    * result frame of the [[Checkpoints]] contract — and the CALLER owns
+    * it (`Checkpoints.release` when done). Every working checkpoint
+    * (edge projection, rounds) releases on every exit path, the
+    * non-convergence throw included. `pairs` stays the caller's: a
+    * checkpointed pair frame can be released as soon as this returns.
     *
-    * If the loop exhausts `maxIters` without converging the result would
-    * silently contain split clusters (duplicate documents surviving
-    * dedup_keep), so that exit THROWS instead — with pointer jumping,
-    * maxIters=10 covers component diameters up to ~2^10, far beyond any
-    * real near-dup graph, so the throw is a corrupted-input tripwire,
-    * not an expected path.
+    * IDS must be integral (byte/short/int/long) in `idCol`, `id_a` and
+    * `id_b`: both paths carry them as BIGINT, where a non-integral cast
+    * would silently null rows out. The output columns take `idCol`'s
+    * type. A pair with a null endpoint links nothing.
     *
-    * PRECONDITION: every id in `pairs` appears in `ids` — propagation
-    * would otherwise surface the unknown ids in the output (pairs from
-    * the near-dup operators over the same corpus satisfy this by
-    * construction). */
-  /** Hybrid connected components — the [[graft.operators.TextAnalysis]]
-    * bpeLearn discipline applied to clustering: when BOTH the node and
-    * edge counts fit a bounded driver budget, union-find runs locally in
-    * milliseconds (zero fixpoint rounds, zero checkpoints) and the
-    * labels return as one small frame; past the budget it falls back to
-    * the distributed pointer-jumping fixpoint unchanged. The intended
-    * callers are METADATA-sized graphs — distinct perceptual hashes,
-    * cluster representatives — where the graph is orders of magnitude
-    * smaller than the corpus but its DIAMETER can be large (a Hamming
-    * chain over distinct hashes measured > 2^10 at a 5k-image corpus),
-    * exactly where per-round fixpoint cost dominates and local
-    * union-find is O(E α(N)). The two probes (a count and a
-    * limit-bounded edge collect) are plan-build driver scalars, the same
-    * bounded-metadata class as IVF centroid sampling. Results are
-    * spec-pinned identical to the distributed path. */
-  def nearDupClustersHybrid(ids: DataFrame, idCol: String, pairs: DataFrame,
-                            localLimit: Int = 2000000,
-                            maxIters: Int = 10,
-                            checkpointDir: Option[String] = None,
-                            jumps: Int = 1): DataFrame = {
-    val spark = ids.sparkSession
-    val n = ids.count()
-    if (n > localLimit)
-      return nearDupClusters(ids, idCol, pairs, maxIters, checkpointDir, jumps)
-    // The pair projection MATERIALIZES once before the probe (round-14
-    // judge ask): `pairs` is usually a whole near-dup pipeline (decode →
-    // hash → band → verify), and an un-checkpointed frame would run it
-    // TWICE whenever the limit-bounded collect overflows and the
-    // distributed fallback then re-reads the same edges — the exact
-    // re-execution bug the fixpoint itself was cured of in round 13.
-    // Two narrow long columns, released on every exit path.
-    val edgeProj = Checkpoints.checkpoint(
-      pairs.select(col("id_a").cast("long").as("id_a"),
-        col("id_b").cast("long").as("id_b")), checkpointDir)
-    try {
-      // edges collect is LIMIT-bounded: an edge set past the budget
-      // aborts the collect at localLimit+1 rows and falls back — the
-      // driver never holds more than the budget either way
-      val edges = edgeProj.limit(localLimit + 1).collect()
-      if (edges.length <= localLimit) {
-        val parent = new java.util.HashMap[Long, Long]()
-        def find(x: Long): Long = {
-          var r = x
-          while (parent.getOrDefault(r, r) != r) r = parent.get(r)
-          var c = x // path compression
-          while (parent.getOrDefault(c, c) != r) { val nx = parent.get(c); parent.put(c, r); c = nx }
-          r
-        }
-        edges.foreach { e =>
-          val (ra, rb) = (find(e.getLong(0)), find(e.getLong(1)))
-          if (ra != rb) parent.put(math.max(ra, rb), math.min(ra, rb)) // min-id root
-        }
-        val labels = ids.select(col(idCol).cast("long").as("id")).collect()
-          .map(r => (r.getLong(0), find(r.getLong(0))))
-        import spark.implicits._
-        labels.toSeq.toDF("id", "rep")
-      } else {
-        // fallback reads the MATERIALIZED edges, not the pairs pipeline
-        nearDupClusters(ids, idCol, edgeProj, maxIters, checkpointDir, jumps)
-      }
-    } finally Checkpoints.release(edgeProj)
-  }
-
+    * PRECONDITION: `ids` is distinct and holds every id in `pairs`
+    * (pairs from the near-dup operators over the same corpus satisfy
+    * this by construction). */
   def nearDupClusters(ids: DataFrame, idCol: String, pairs: DataFrame,
                       maxIters: Int = 10,
                       checkpointDir: Option[String] = None,
-                      jumps: Int = 1): DataFrame = {
+                      jumps: Int = 1,
+                      localLimit: Int = 2000000): DataFrame = {
     require(jumps >= 1, s"jumps must be >= 1, got $jumps")
-    // The edge list is MATERIALIZED once (round 13): `pairs` is usually
-    // the whole upstream near-dup pipeline (shingle → LSH → verify), and
-    // an un-checkpointed edge frame re-runs that pipeline in EVERY
-    // round's neighbor join — the fixpoint's real per-round cost at any
-    // scale. Edges are ≤ 2·|pairs| narrow rows, squarely inside the
-    // bounded-small-frame checkpoint contract; released before return.
+    require(localLimit >= 0 && localLimit < Int.MaxValue,
+      s"localLimit must be in [0, Int.MaxValue), got $localLimit")
+    for ((df, c) <- Seq((ids, idCol), (pairs, "id_a"), (pairs, "id_b"))) {
+      val dt = df.schema(c).dataType
+      require(Seq(ByteType, ShortType, IntegerType, LongType).contains(dt),
+        s"nearDupClusters requires integral ids; $c is ${dt.simpleString}")
+    }
+    val idType = ids.schema(idCol).dataType
+    val keyed = ids.select(col(idCol).cast("long").as("id"))
+    // the one result frame, in the caller's id type
+    def result(labels: DataFrame): DataFrame = Checkpoints.checkpoint(
+      labels.select(col("id").cast(idType).as("id"), col("rep").cast(idType).as("rep")),
+      checkpointDir)
+    val edges = Checkpoints.checkpoint(
+      pairs.select(col("id_a").cast("long").as("id_a"), col("id_b").cast("long").as("id_b"))
+        .filter(col("id_a").isNotNull && col("id_b").isNotNull),
+      checkpointDir)
+    try {
+      val spark = ids.sparkSession
+      import spark.implicits._
+      val local = edges.limit(localLimit + 1).as[(Long, Long)].collect()
+      if (local.length <= localLimit) {
+        val parent = scala.collection.mutable.LongMap.empty[Long]
+        def find(x: Long): Long = {
+          var r = x
+          while (parent.getOrElse(r, r) != r) r = parent(r)
+          var c = x // path compression
+          while (c != r) { val nx = parent(c); parent(c) = r; c = nx }
+          r
+        }
+        local.foreach { case (a, b) =>
+          val (ra, rb) = (find(a), find(b))
+          if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb) // min-id root
+        }
+        // parent's keys are exactly the non-root ids
+        val labels = parent.keys.toSeq.map(x => (x, find(x))).toDF("__lid", "__lrep")
+        result(keyed.join(labels, col("id") === col("__lid"), "left")
+          .select(col("id"), coalesce(col("__lrep"), col("id")).as("rep")))
+      } else pointerJumpComponents(keyed, edges, maxIters, checkpointDir, jumps, result)
+    } finally Checkpoints.release(edges)
+  }
+
+  /** The distributed fixpoint of [[nearDupClusters]] over its
+    * materialized `(id_a, id_b)` edges; `result` materializes the output. */
+  private def pointerJumpComponents(keyed: DataFrame, pairs: DataFrame, maxIters: Int,
+                                    checkpointDir: Option[String], jumps: Int,
+                                    result: DataFrame => DataFrame): DataFrame = {
+    // both directions of every pair, materialized once: every round's
+    // neighbor join reads these blocks
     val edges = Checkpoints.checkpoint(
       pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
         .unionByName(pairs.select(col("id_b").as("src"), col("id_a").as("dst"))),
       checkpointDir)
-    // Singleton fast path (round 13): an id with no incident pair is its
-    // own rep by definition and can never change — the fixpoint need not
-    // carry it through every round's exchange. The iterating frame
-    // shrinks from |corpus| to |paired ids| (≤ 2·|pairs|; at real dedup
-    // rates a small fraction of the corpus), so each round shuffles the
-    // near-dup GRAPH, not the whole id space — at 100 TB that is the
-    // round-cost difference between the graph and the corpus. One narrow
-    // semi/anti split up front (8-byte ids, against the materialized
-    // edges — the pairs pipeline never re-evaluates); singletons
-    // re-enter the result as (id, id) with no per-round cost.
-    //
     // EVERY working checkpoint releases on EVERY exit path (round-14
     // ADVICE): the non-convergence throw — and any mid-round failure —
     // previously leaked edges/singletons/labels, and a localCheckpoint's
     // pinned blocks tax every later query in the session (the exact leak
     // the Checkpoints scaladoc warns about). release() is an idempotent
     // unpersist, so the success path's eager releases and the finally's
-    // sweep compose; only the returned `out` frame survives.
+    // sweep compose; only the returned frame survives.
     var marked: DataFrame = null
     var labels: DataFrame = null
     var cur: DataFrame = null
     try {
-      val keyed = ids.select(col(idCol).as("id"))
       // ONE materialization feeds both sides of the singleton split
-      // (round 17, optimization): the semi/anti checkpoint pair each
-      // re-derived a distinct over the edge endpoints and paid its own
-      // join + checkpoint job — a left join with a presence marker runs
+      // (round 17, optimization): a left join with a presence marker runs
       // one aggregation, materializes once, and both consumers are
-      // narrow filters over the same blocks. Same total footprint (the
-      // two old frames partitioned the id space this one holds whole).
-      // The aggregation computes min(dst) instead of mere presence,
-      // which SEEDS labels with round 1's hop — min over self ∪
-      // neighbor ids, exactly what the first loop round would produce
-      // from the identity labels — so the fixpoint starts one round in:
-      // one fewer graph-sized hop+jump round at every scale, for the
-      // same exchange the presence distinct already paid. (Min-label
-      // propagation's fixpoint is invariant to starting k rounds ahead:
-      // labels stay within [component-min, id] and decrease
-      // monotonically; the unique hop-stable point is
-      // constant-per-component = the component min.)
+      // narrow filters over the same blocks. The aggregation computes
+      // min(dst) instead of mere presence, which SEEDS labels with round
+      // 1's hop — min over self ∪ neighbor ids, exactly what the first
+      // loop round would produce from the identity labels — so the
+      // fixpoint starts one round in. (Min-label propagation's fixpoint
+      // is invariant to starting k rounds ahead: labels stay within
+      // [component-min, id] and decrease monotonically; the unique
+      // hop-stable point is constant-per-component = the component min.)
       val minNbr = edges.groupBy(col("src")).agg(min(col("dst")).as("__nbr0"))
         .withColumnRenamed("src", "id")
       marked = Checkpoints.checkpoint(
@@ -634,11 +612,8 @@ object Dedup {
         // the round CARRIES each id's previous label as `prev` (neighbors
         // contribute null, so max(prev) is the id's own old label through
         // the same single exchange) — the convergence check then rides the
-        // final jump's checkpoint as an OBSERVED METRIC (round 17): the
-        // old `filter(rep =!= prev).limit(1).count()` was one more job per
-        // round over blocks the checkpoint action already scans; the
-        // observation evaluates the identical predicate on the identical
-        // materialized rows for free
+        // final jump's checkpoint as an OBSERVED METRIC (round 17) instead
+        // of one more count job per round
         val viaNeighbors = edges.join(labels, edges("src") === labels("id"))
           .select(col("dst").as("id"), col("rep"),
             lit(null).cast("long").as("prev"))
@@ -650,9 +625,10 @@ object Dedup {
           checkpointDir)
         // pointer jumps: each materializes (the next jump reads it twice —
         // as the table and as the lookup) and releases its predecessor;
-        // the LAST jump carries the convergence observation (the old count
-        // read the post-jump frame, so observing any earlier one would
-        // flag hop-stable states whose jump still contracts a pointer)
+        // the LAST jump carries the convergence observation (observing
+        // any earlier one would flag hop-stable states whose jump still
+        // contracts a pointer). The jump's self-join is total because
+        // labels are always ids already in the table.
         var obs: org.apache.spark.sql.Observation = null
         for (j <- 1 to jumps) {
           val jumpedPlan = cur
@@ -669,21 +645,16 @@ object Dedup {
           Checkpoints.release(cur)
           cur = jumped
         }
-        // Bounded wait on the observation (round-17 ADVICE): the eager
-        // checkpoint action has already completed by this line, so the
-        // metric is normally available immediately — but `obs.get` alone
-        // would block FOREVER if a Spark upgrade ever stopped Observation
-        // completing on this action shape (the exact risk ObsProbeSpec
-        // pins). On timeout, fall back to the pre-r17 existence probe
-        // over the materialized blocks — one extra cheap job, never a
-        // hang; the fallback only needs zero/nonzero, which `limit(1)`
-        // preserves.
-        val changed: Long = {
-          import scala.concurrent.{Await, Future}
-          import scala.concurrent.duration.DurationInt
-          import scala.concurrent.ExecutionContext.Implicits.global
-          try Await.result(Future(obs.get), 30.seconds)("changed")
-            .asInstanceOf[Long]
+        // Bounded wait on the observation's own future (round-17 ADVICE):
+        // the eager checkpoint action has completed by this line, so the
+        // metric is normally ready — but an unbounded wait would block
+        // FOREVER if a Spark upgrade ever stopped Observation completing
+        // on this action shape (the risk ObsProbeSpec pins). Awaiting
+        // `obs.future` parks no pool thread on a timeout. On timeout,
+        // fall back to an existence probe over the materialized blocks —
+        // one extra cheap job, never a hang.
+        val changed: Long =
+          try Await.result(obs.future, 30.seconds).getAs[Long]("changed")
           catch {
             case _: java.util.concurrent.TimeoutException =>
               org.slf4j.LoggerFactory.getLogger("graft.operators.Dedup").warn(
@@ -692,7 +663,6 @@ object Dedup {
                   "count probe over the checkpointed round")
               cur.filter(col("rep") =!= col("prev")).limit(1).count()
           }
-        }
         if (iters > 0) Checkpoints.release(labels) // round 0's labels view rides `marked`
         labels = cur.select(col("id"), col("rep"))
         converged = changed == 0
@@ -703,9 +673,9 @@ object Dedup {
           s"nearDupClusters did not converge within $maxIters rounds — " +
             "component diameter exceeds 2^maxIters or `pairs` references ids " +
             "missing from `ids`; the partial labels would split clusters")
-      // fold singletons back in and keep the one-result-frame contract:
-      // the union materializes once, its parts release immediately
-      Checkpoints.checkpoint(labels.unionByName(singletons), checkpointDir)
+      // fold singletons back in: the union materializes once, its parts
+      // release in the finally below
+      result(labels.unionByName(singletons))
     } finally {
       Checkpoints.release(edges)
       if (marked != null) Checkpoints.release(marked)
@@ -912,6 +882,12 @@ object Dedup {
         when(size(col("sh_b")) > 0, inter / size(col("sh_b"))).as("c_ba"))
   }
 
+  /** Ceiling on TOTAL oversized keys the tuner's tagging path may
+    * broadcast (across all widening levels): 2^18 keys ≈ tens of MB of
+    * prefix strings — comfortably inside executor broadcast budgets,
+    * far above any boilerplate-prefix population observed in practice. */
+  private[graft] val OversizedKeyBroadcastBudget: Int = 1 << 18
+
   /** Edit-distance near-dup pairs under BLOCKING-KEY candidate
     * generation — the record-linkage shape (sorted-neighborhood /
     * standard blocking): candidates are pairs agreeing on a cheap
@@ -998,13 +974,7 @@ object Dedup {
     * bounds the population before committing (≤ maxWiden·rowsOver/cap);
     * corpora past `broadcastKeyBudget` total keys fall back to the r13
     * decision-map shuffle join, which has no size ceiling — the same
-    * bounded-budget hybrid discipline as [[nearDupClustersHybrid]]. */
-  /** Ceiling on TOTAL oversized keys the tuner's tagging path may
-    * broadcast (across all widening levels): 2^18 keys ≈ tens of MB of
-    * prefix strings — comfortably inside executor broadcast budgets,
-    * far above any boilerplate-prefix population observed in practice. */
-  private[graft] val OversizedKeyBroadcastBudget: Int = 1 << 18
-
+    * bounded-budget local-first discipline as [[nearDupClusters]]. */
   def editDistancePairs(docs: DataFrame, id: String, text: Column,
                         minSim: Double, blockTokens: Int = 1,
                         lenBand: Int = 64, maxBlockSize: Int = 16,

@@ -662,7 +662,8 @@ object Multimodal {
     *      as the residual valve for band-level degeneracy among
     *      *distinct* hashes);
     *   3. connected components over the rep graph
-    *      ([[Dedup.nearDupClusters]] — log-diameter pointer jumping);
+    *      ([[Dedup.nearDupClusters]] — driver-local union-find within
+    *      its budget, log-diameter pointer jumping past it);
     *   4. every id re-joins its class rep, then its cluster rep; since
     *      the class rep is the class MIN id, the cluster min over reps
     *      is the cluster min over ids.
@@ -680,8 +681,9 @@ object Multimodal {
     // the same move [[dhashNearDups]] documents for its own input).
     // One row of five ints per image — bounded tiny state under the
     // return-one-small-checkpointed-frame contract; like dhashNearDups'
-    // checkpoint it stays pinned for the returned frame's lifetime
-    // (callers own it; the bench drops session storage between queries).
+    // checkpoint (and the class and cluster frames below) it stays pinned
+    // for the returned frame's lifetime (callers own it; the bench drops
+    // session storage between queries).
     val withId = Checkpoints.checkpoint(
       hashes.select(col(idCol).as("id"),
         col("b0"), col("b1"), col("b2"), col("b3")))
@@ -707,16 +709,12 @@ object Multimodal {
       "id", maxDist, maxBucketSize)
       .select(col("id_a"), col("id_b"))
     // hash near-dup graphs CHAIN: ≤ maxDist steps at a time can walk far
-    // across the 64-bit Hamming lattice (smoothly-varying corpora produce
-    // components whose diameter grows with the corpus — measured > 2^10
-    // at a 5k-image gradient fixture), which is the worst case for a
-    // per-round fixpoint (measured: 16s of rounds at sf0.1, 13% of the
-    // whole bench ledger). The rep graph is METADATA-sized — one node
-    // per distinct hash — so the hybrid components run driver-local
-    // union-find inside a bounded budget and only fall back to the
-    // pointer-jumping fixpoint (with deep-chain headroom: 2 jumps, 40
-    // rounds, free when converged early) past it.
-    val clusters = Dedup.nearDupClustersHybrid(
+    // across the 64-bit Hamming lattice (component diameter measured
+    // > 2^10 at a 5k-image gradient fixture). The rep graph is one node
+    // per distinct hash, so it normally fits the components operator's
+    // driver budget and finishes locally; past it the fixpoint gets
+    // deep-chain headroom (2 jumps, 40 rounds, free when converged early).
+    val clusters = Dedup.nearDupClusters(
       classes.select(col("crep").as("id")), "id", repPairs,
       maxIters = 40, jumps = 2)
     val kept = imgs

@@ -136,9 +136,6 @@ object TextAnalysis {
   def fingerprint(text: Column): Column =
     ColumnBridge.column(graft.functions.RollingFingerprint(ColumnBridge.expression(text)))
 
-  private def substring(c: Column, pos: Column, len: Column): Column =
-    c.substr(pos, len)
-
   /** Overlapping fixed-size character chunks — the context-window
     * splitting step of a training-data pipeline. Chunk i covers
     * characters [i·step, i·step + size) with step = size − overlap; the

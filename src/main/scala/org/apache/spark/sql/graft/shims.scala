@@ -88,8 +88,6 @@ object ColumnBridge {
         def partRefs(p: org.apache.spark.sql.catalyst.plans.physical.Partitioning)
             : org.apache.spark.sql.catalyst.expressions.AttributeSet = p match {
           case e: org.apache.spark.sql.catalyst.expressions.Expression => e.references
-          case c: org.apache.spark.sql.catalyst.plans.physical.CoalescedHashPartitioning =>
-            c.from.references
           case _ => org.apache.spark.sql.catalyst.expressions.AttributeSet.empty
         }
         val (part0, order0) = layout.getOrElse(

@@ -128,7 +128,7 @@ class JBigIntPropsSpec extends AnyFunSuite {
     assert(JsonText.parse((min - 1).toString) == JDouble((min - 1).toDouble))
     assert(JsonText.parse("1" + "0" * 39) == JDouble(1e39))
     // the jq literal parser rides the same ladder
-    import graft.jq.{JqParser, Interp}
+    import graft.jq.Interp
     val out = Interp.run(max.toString, JNull).map(_.doc)
     assert(out == Vector(JBigInt(max)), s"jq literal at i128 max: $out")
   }

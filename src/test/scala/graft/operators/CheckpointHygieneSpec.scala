@@ -33,13 +33,32 @@ class CheckpointHygieneSpec extends SparkTestBase {
   test("nearDupClusters leaves only its result frame persisted") {
     val ids = (1L to 10L).toDF("id")
     val pairs = Seq((1L, 2L), (2L, 3L), (7L, 8L)).toDF("id_a", "id_b")
+    // both paths: the fixpoint (localLimit = 0) and driver-local
+    for (limit <- Seq(0, 100)) {
+      val before = persistedNow
+      val labels = Dedup.nearDupClusters(ids, "id", pairs, localLimit = limit)
+      assert(labels.count() == 10)
+      val leaked = persistedNow -- before
+      assert(leaked.size <= 1,
+        s"nearDupClusters(localLimit=$limit) stranded ${leaked.size} persisted RDDs")
+      Checkpoints.release(labels)
+      assert((persistedNow -- before).isEmpty)
+    }
+  }
+
+  test("dedup_clusters releases its near-dup pair frame: only the clusters stay persisted") {
     val before = persistedNow
-    val labels = Dedup.nearDupClusters(ids, "id", pairs)
-    assert(labels.count() == 10)
-    val leaked = persistedNow -- before
-    assert(leaked.size <= 1,
-      s"nearDupClusters stranded ${leaked.size} persisted RDDs")
-    Checkpoints.release(labels)
+    val clusters = graft.SparkEntry.queries("dedup_clusters")(spark, sfDir)
+    // snapshot the moment the query returns: getPersistentRDDs holds RDDs
+    // weakly, so a later GC could hide an unreleased (unreachable) frame
+    // whose blocks stay pinned until the cleaner happens to run
+    val held = persistedNow -- before
+    assert(held.size == 1,
+      s"dedup_clusters left ${held.size} persisted RDDs — the minhashNearDups " +
+        "pair frame must be released once the clusters are built")
+    assert(clusters.collect().nonEmpty)
+    assert(persistedNow -- before == held, "collecting the result persisted more")
+    Checkpoints.release(clusters)
     assert((persistedNow -- before).isEmpty)
   }
 
@@ -107,7 +126,8 @@ class CheckpointHygieneSpec extends SparkTestBase {
     try {
       val ids = (1L to 6L).toDF("id")
       val pairs = Seq((5L, 6L), (4L, 5L), (1L, 2L)).toDF("id_a", "id_b")
-      val got = Dedup.nearDupClusters(ids, "id", pairs, checkpointDir = Some(dir))
+      val got = Dedup.nearDupClusters(ids, "id", pairs, checkpointDir = Some(dir),
+          localLimit = 0)
         .orderBy("id").collect().map(r => (r.getLong(0), r.getLong(1)))
       assert(got.sameElements(Array(
         (1L, 1L), (2L, 1L), (3L, 3L), (4L, 4L), (5L, 4L), (6L, 4L))))

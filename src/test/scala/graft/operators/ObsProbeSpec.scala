@@ -9,12 +9,12 @@ import org.apache.spark.sql.functions._
   * Spark's Observation completes on the checkpoint action itself — for
   * BOTH checkpoint kinds `Checkpoints.checkpoint` can take. These tests
   * pin that contract against the Spark version in use (a regression
-  * here would hang the fixpoint, not corrupt it — obs.get blocks). */
+  * here would not corrupt the fixpoint: each round would wait out its
+  * 30 s bound on `obs.future`, then fall back to a count job). */
 class ObsProbeSpec extends SparkTestBase {
 
-  import scala.concurrent.{Await, Future}
+  import scala.concurrent.Await
   import scala.concurrent.duration._
-  import scala.concurrent.ExecutionContext.Implicits.global
 
   test("observation fires on eager localCheckpoint") {
     import spark.implicits._
@@ -22,8 +22,8 @@ class ObsProbeSpec extends SparkTestBase {
     val df = Seq((1L, 2L), (3L, 3L)).toDF("a", "b")
       .observe(obs, count(when(col("a") =!= col("b"), lit(1))).as("changed"))
     val ck = Checkpoints.checkpoint(df)
-    val m = Await.result(Future(obs.get), 30.seconds)
-    assert(m("changed") == 1L)
+    val m = Await.result(obs.future, 30.seconds)
+    assert(m.getAs[Long]("changed") == 1L)
     assert(ck.count() == 2)
     Checkpoints.release(ck)
   }
@@ -36,8 +36,8 @@ class ObsProbeSpec extends SparkTestBase {
       val df = Seq((1L, 1L), (3L, 3L)).toDF("a", "b")
         .observe(obs, count(when(col("a") =!= col("b"), lit(1))).as("changed"))
       val ck = Checkpoints.checkpoint(df, Some(dir))
-      val m = Await.result(Future(obs.get), 30.seconds)
-      assert(m("changed") == 0L)
+      val m = Await.result(obs.future, 30.seconds)
+      assert(m.getAs[Long]("changed") == 0L)
       assert(ck.count() == 2)
     } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
   }

@@ -290,10 +290,14 @@ class OperatorsSpec extends SparkTestBase {
     val n = 60L
     val ids = (1L to n).toDF("doc_id")
     val pairs = (1L until n).map(i => (i, i + 1)).toDF("id_a", "id_b")
-    val got = Dedup.nearDupClusters(ids, "doc_id", pairs)
+    val got = Dedup.nearDupClusters(ids, "doc_id", pairs, localLimit = 0)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
     assert(got.size == n && got.values.forall(_ == 1L),
       s"every chain node should label to the minimum id, got ${got.filter(_._2 != 1L)}")
+    // the driver-local path lands the identical labels
+    val local = Dedup.nearDupClusters(ids, "doc_id", pairs)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
+    assert(local == got)
   }
 
   test("nearDupClusters: throws instead of returning split clusters when rounds run out") {
@@ -302,9 +306,27 @@ class OperatorsSpec extends SparkTestBase {
     val ids = (1L to n).toDF("doc_id")
     val pairs = (1L until n).map(i => (i, i + 1)).toDF("id_a", "id_b")
     val ex = intercept[IllegalStateException] {
-      Dedup.nearDupClusters(ids, "doc_id", pairs, maxIters = 2)
+      Dedup.nearDupClusters(ids, "doc_id", pairs, maxIters = 2, localLimit = 0)
     }
     assert(ex.getMessage.contains("did not converge"))
+  }
+
+  test("nearDupClusters: integral ids only; output columns keep the id type") {
+    import spark.implicits._
+    // a pair with a null endpoint links nothing, on both paths
+    val pairs = Seq((Some(1L), Some(2L)), (Some(3L), None)).toDF("id_a", "id_b")
+    val ex = intercept[IllegalArgumentException] {
+      Dedup.nearDupClusters(Seq("1", "2").toDF("doc_id"), "doc_id", pairs)
+    }
+    assert(ex.getMessage.contains("integral"))
+    val intIds = Seq(1, 2, 3).toDF("doc_id")
+    for (limit <- Seq(0, 10)) {
+      val out = Dedup.nearDupClusters(intIds, "doc_id", pairs, localLimit = limit)
+      assert(out.schema.map(_.dataType) ==
+        Seq(org.apache.spark.sql.types.IntegerType, org.apache.spark.sql.types.IntegerType))
+      assert(out.as[(Int, Int)].collect().sorted.toSeq == Seq((1, 1), (2, 1), (3, 3)))
+      Checkpoints.release(out)
+    }
   }
 
   test("pqTopK: corpus smaller than the requested codebook size stays aligned") {
@@ -607,7 +629,6 @@ class OperatorsSpec extends SparkTestBase {
 }
 
 class AsofJoinSpec extends graft.SparkTestBase {
-  import org.apache.spark.sql.functions._
 
   test("asofJoin picks the latest right row at or before each left time") {
     import spark.implicits._

@@ -3,8 +3,8 @@ package graft.operators
 import graft.SparkTestBase
 import org.apache.spark.sql.functions._
 
-/** Round-14 operator specs: the hybrid-components single-evaluation
-  * contract, leak-free fixpoint exits, any-band-null keep rows, the
+/** Round-14 operator specs: the components single-evaluation contract
+  * on both paths, leak-free fixpoint exits, any-band-null keep rows, the
   * hierarchical-assignment NaN guard, and the lowered edit-blocking cap. */
 class Round14OpsSpec extends SparkTestBase {
 
@@ -13,9 +13,9 @@ class Round14OpsSpec extends SparkTestBase {
 
   private def docs = spark.read.parquet(s"$sfDir/documents.parquet")
 
-  // --------------------------- nearDupClustersHybrid single evaluation
+  // --------------------------------- nearDupClusters single evaluation
 
-  test("nearDupClustersHybrid evaluates the pairs pipeline ONCE on the overflow→fallback path") {
+  test("nearDupClusters evaluates the pairs pipeline ONCE on the overflow→fallback path") {
     // 60 ids, complete graph: 1770 edges > localLimit=100 ≥ n=60, so the
     // probe collects, overflows, and falls back — the r13 shape where an
     // un-materialized pairs frame would re-run its pipeline twice
@@ -26,7 +26,7 @@ class Round14OpsSpec extends SparkTestBase {
       .toDF("id_a", "id_b")
     val pairs = rawPairs.select(bump(col("id_a")).as("id_a"), col("id_b"))
     val ids = (1L to n).toDF("id")
-    val labels = Dedup.nearDupClustersHybrid(ids, "id", pairs, localLimit = 100)
+    val labels = Dedup.nearDupClusters(ids, "id", pairs, localLimit = 100)
       .collect().map(r => (r.getLong(0), r.getLong(1))).sorted
     assert(labels.forall(_._2 == 1L), "complete graph: one min-id cluster")
     assert(labels.map(_._1).toSeq == (1L to n).toSeq)
@@ -43,13 +43,13 @@ class Round14OpsSpec extends SparkTestBase {
         s"re-evaluation), saw ${acc.value}")
   }
 
-  test("nearDupClustersHybrid evaluates the pairs pipeline ONCE on the local path too") {
+  test("nearDupClusters evaluates the pairs pipeline ONCE on the local path too") {
     val acc = spark.sparkContext.longAccumulator("pairEvalsLocal")
     val bump = udf((x: Long) => { acc.add(1L); x })
     val rawPairs = (1L until 20L).map(i => (i, i + 1)).toDF("id_a", "id_b")
     val pairs = rawPairs.select(bump(col("id_a")).as("id_a"), col("id_b"))
     val ids = (1L to 20L).toDF("id")
-    val labels = Dedup.nearDupClustersHybrid(ids, "id", pairs)
+    val labels = Dedup.nearDupClusters(ids, "id", pairs)
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(labels.forall(_._2 == 1L))
     // same retry-tolerant bound as above: 2x = the re-evaluation this
@@ -58,7 +58,7 @@ class Round14OpsSpec extends SparkTestBase {
       s"expected ~19 bump calls (2x = re-evaluation), saw ${acc.value}")
   }
 
-  // ------------------------------- leak-free exits (fixpoint + hybrid)
+  // ------------------------------------ leak-free exits (both paths)
 
   test("nearDupClusters releases every working checkpoint on the non-convergence throw") {
     // a 40-chain with maxIters=2 cannot converge (diameter ≫ 2^2·jumps)
@@ -69,17 +69,21 @@ class Round14OpsSpec extends SparkTestBase {
       .keySet.toSet
     val before = persisted()
     intercept[IllegalStateException] {
-      Dedup.nearDupClusters(ids, "id", pairs, maxIters = 2)
+      Dedup.nearDupClusters(ids, "id", pairs, maxIters = 2, localLimit = 0)
     }
     assert((persisted() -- before).isEmpty,
       "edges/singletons/labels checkpoints must release on the throw path")
-    // success path still releases everything except the returned frame
-    val out = Dedup.nearDupClusters(ids, "id", pairs, maxIters = 10, jumps = 2)
-    assert(out.collect().forall(_.getLong(1) == 1L))
-    assert((persisted() -- before).size <= 1,
-      "only the returned result frame may stay persisted")
-    Checkpoints.release(out)
-    assert((persisted() -- before).isEmpty)
+    // success paths (fixpoint, driver-local) still release everything
+    // except the returned frame
+    for (limit <- Seq(0, 1000)) {
+      val out = Dedup.nearDupClusters(ids, "id", pairs, maxIters = 10, jumps = 2,
+        localLimit = limit)
+      assert(out.collect().forall(_.getLong(1) == 1L))
+      assert((persisted() -- before).size <= 1,
+        s"only the returned result frame may stay persisted (localLimit=$limit)")
+      Checkpoints.release(out)
+      assert((persisted() -- before).isEmpty)
+    }
   }
 
   // ----------------------------------- dhashDedupKeep any-band-null rows

@@ -54,12 +54,6 @@ class SrpKernelSpec extends SparkTestBase {
       }: _*)))
   }
 
-  private def collectRows(c: org.apache.spark.sql.Column) =
-    vecs.select(col("vec_id"), posexplode(array(lit(1))), c.as("tb"))
-      .drop("pos", "col")
-      .select(col("vec_id"), col("tb.t"), col("tb.b"))
-      .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).sorted.toSeq
-
   test("kernel buckets are bit-identical to the literal formulation (banding side)") {
     val kernel = Similarity.srpBucketsFn(spark, dim, tables, h, probes = false)
     val viaKernel = vecs.select(col("vec_id"), explode(kernel(col("v"))).as("tb"))

@@ -25,8 +25,8 @@ import org.apache.spark.storage.StorageLevel
 class StatsInvarianceSpec extends SparkTestBase {
   import spark.implicits._
 
-  private def withHooks[A](level: StorageLevel, scale: Long = 1L,
-                           raw: Boolean = false)(body: => A): A = {
+  private def withHooks[A](level: StorageLevel, scale: Long,
+                           raw: Boolean)(body: => A): A = {
     val (s0, sc0, r0) = (Checkpoints.storage, Checkpoints.statsScale, Checkpoints.rawLeaf)
     Checkpoints.storage = level
     Checkpoints.statsScale = scale
@@ -85,6 +85,6 @@ class StatsInvarianceSpec extends SparkTestBase {
   test("nearDupClusters is storage-level and stats invariant") {
     val ids = (1L to 50L).toDF("id")
     val pairs = ((1L to 20L).map(i => (i, i + 1)) ++ Seq((40L, 45L))).toDF("id_a", "id_b")
-    sweep("nearDupClusters") { Dedup.nearDupClusters(ids, "id", pairs) }
+    sweep("nearDupClusters") { Dedup.nearDupClusters(ids, "id", pairs, localLimit = 0) }
   }
 }
