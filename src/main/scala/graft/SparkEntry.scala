@@ -204,8 +204,9 @@ object SparkEntry {
     * the pairs into its own edge frame, so they release the moment it
     * returns and only the cluster labels stay persisted. */
   private def nearDupClustersOf(ids: DataFrame, pairs: DataFrame): DataFrame =
-    try operators.Dedup.nearDupClusters(ids, "doc_id", pairs)
-    finally operators.Checkpoints.release(pairs)
+    operators.Checkpoints.scope() { s =>
+      operators.Dedup.nearDupClusters(ids, "doc_id", s.own(pairs))
+    }
 
   /** Corpus-level ANN oracle contract (round 17, r16 verdict ask #7).
     *
@@ -1649,14 +1650,15 @@ object SparkEntry {
       // materialized) pays the pass once. dedup_keep/dedup_clusters
       // deliberately do NOT get this: their input is a bare pruned
       // parquet scan, which is cheaper re-read than pinned.
-      val exact = operators.Checkpoints.checkpoint(
-        operators.Dedup.exactDedup(kept, Seq(col("text")), col("doc_id")))
       // both minhashNearDups' result and nearDupClusters' labels are
       // eagerly checkpointed inside the calls, so every read of `exact`'s
-      // blocks has happened by the time this block exits
-      val clusters = try nearDupClustersOf(exact.select(col("doc_id")),
+      // blocks has happened by the time the scope exits
+      val clusters = operators.Checkpoints.scope() { s =>
+        val exact = s.checkpoint(
+          operators.Dedup.exactDedup(kept, Seq(col("text")), col("doc_id")))
+        nearDupClustersOf(exact.select(col("doc_id")),
           operators.Dedup.minhashNearDups(exact, "doc_id", col("text"), 3, 0.8))
-        finally operators.Checkpoints.release(exact)
+      }
       // The representatives ARE the answer (round 18): nearDupClusters'
       // output id set is exactly its `ids` input — `exact`'s ids — and
       // reps are a subset of those, so the old `exact ⋈ reps` closing

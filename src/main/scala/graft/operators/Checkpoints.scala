@@ -1,19 +1,25 @@
 package graft.operators
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.storage.StorageLevel
 
-/** Checkpoint lifecycle for iterative DataFrame operators.
+/** Checkpoint lifecycle for DataFrame operators: ONE ownership rule.
   *
   * Iterative fixpoints (pageRank, nearDupClusters) MUST truncate lineage
   * per round — without it round N replays rounds 1..N-1 and the DAG cost
   * is quadratic in iterations. But a `localCheckpoint(true)` pins its
-  * blocks in the block manager for the SESSION lifetime, so an
-  * un-released checkpoint from one query taxes every query that runs
-  * after it in the same session. The rule here mirrors
-  * `Dedup.withShingles`: every checkpoint is paired with a `release` the
-  * moment it is superseded, and an operator returns at most ONE small
-  * checkpointed frame (its result), never its working set.
+  * blocks for the SESSION lifetime, so an un-released checkpoint from one
+  * query taxes every query that runs after it in the same session.
+  *
+  * The rule: library code checkpoints only inside a [[scope]], which
+  * owns every frame it checkpoints (`s.checkpoint`) or adopts
+  * (`s.own`) and, on EVERY exit path, releases all of them but the one
+  * frame the body returns (`s.release` drops a superseded one early).
+  * That frame must be an owned checkpoint or read none of them — a
+  * released frame has no lineage to rebuild from. So an operator
+  * returns at most ONE checkpointed frame, which the caller owns.
   */
 object Checkpoints {
 
@@ -56,15 +62,7 @@ object Checkpoints {
     * bench A/B within run-to-run variance). StatsInvarianceSpec pins
     * result equality across storage levels on the originally-affected
     * operator set. */
-  /** A/B knob (round 16, judge ask #2): `SPARK_GRAFT_CKPT_STORAGE=deser`
-    * flips local-checkpoint blocks back to deserialized MEMORY_AND_DISK
-    * so the SER-vs-deserialized cost question can be measured on any
-    * harness run without a code edit. Unset (production) = SER, the
-    * shipped default documented above. */
-  private[graft] var storage: org.apache.spark.storage.StorageLevel =
-    if (sys.env.get("SPARK_GRAFT_CKPT_STORAGE").contains("deser"))
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    else org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER
+  private[graft] var storage: StorageLevel = StorageLevel.MEMORY_AND_DISK_SER
   private[graft] var statsScale: Long = 1L
   private[graft] var rawLeaf: Boolean = false
 
@@ -119,7 +117,7 @@ object Checkpoints {
     // (reliable checkpoints live in files). release() walks the short
     // dependency chain to the persisted RDD underneath.
     if (rawLeaf) return ck
-    val measured = persistedRddId(ck).flatMap(
+    val measured = leafRdds(ck).find(persisted).map(_.id).flatMap(
       org.apache.spark.sql.graft.ColumnBridge.persistedBytes(ck.sparkSession, _))
     // physical layout of the frame the checkpoint just materialized
     // (round 17): read off the SOURCE df's now-executed final plan —
@@ -133,17 +131,21 @@ object Checkpoints {
       ck, measured.map(BigInt(_) * statsScale), Some(layout))
   }
 
-  /** Id of the persisted RDD underneath a checkpointed frame's leaf, if
-    * any — the same short walk release() unpersists. */
-  private def persistedRddId(df: DataFrame): Option[Int] = {
-    def find(r: org.apache.spark.rdd.RDD[_]): Option[Int] =
-      if (r.getStorageLevel != org.apache.spark.storage.StorageLevel.NONE) Some(r.id)
-      else r.dependencies.iterator.flatMap(d => find(d.rdd)).nextOption()
+  /** Every RDD reachable from the frame's `LogicalRDD` leaves, pre-order.
+    * A checkpoint's lineage is truncated, so for a checkpointed frame (or
+    * a lazy frame over one) this is the short chain down to its blocks. */
+  private[graft] def leafRdds(df: DataFrame): Iterator[RDD[_]] = {
+    val seen = scala.collection.mutable.Set.empty[Int]
+    def walk(r: RDD[_]): Iterator[RDD[_]] =
+      if (!seen.add(r.id)) Iterator.empty
+      else Iterator.single(r) ++ r.dependencies.iterator.flatMap(d => walk(d.rdd))
     df.queryExecution.analyzed.collectLeaves().iterator.flatMap {
-      case lr: LogicalRDD => find(lr.rdd)
-      case _ => None
-    }.nextOption()
+      case lr: LogicalRDD => walk(lr.rdd)
+      case _ => Iterator.empty
+    }
   }
+
+  private def persisted(r: RDD[_]): Boolean = r.getStorageLevel != StorageLevel.NONE
 
   /** Spark WARNs every time a locally-checkpointed RDD is unpersisted
     * ("lineage has been truncated and cannot be recomputed") — for
@@ -157,23 +159,52 @@ object Checkpoints {
       "org.apache.spark.rdd.MapPartitionsRDD",
       org.apache.logging.log4j.Level.ERROR)
 
-  /** Drop the block-manager storage behind a checkpointed frame.
-    * ONLY for superseded frames: a local checkpoint has no lineage left
-    * to rebuild from, so a released frame must never be referenced
-    * again. No-op for frames that hold no checkpointed RDD. */
+  /** Drop the block-manager storage behind a checkpointed frame: every
+    * persisted RDD under its leaves (the leaf may be an unpersisted
+    * freshLeaf wrapper over the actual blocks). ONLY for superseded
+    * frames: a local checkpoint has no lineage left to rebuild from.
+    * Idempotent; a no-op for frames that hold no persisted RDD. */
   def release(df: DataFrame): Unit = {
     quietUnpersistWarn
-    // the frame's leaf RDD may be an unpersisted wrapper over the actual
-    // checkpoint blocks (freshLeaf rebasing) — walk the (short, truncated)
-    // dependency chain and unpersist every persisted ancestor
-    def unpersistTree(r: org.apache.spark.rdd.RDD[_]): Unit = {
-      if (r.getStorageLevel != org.apache.spark.storage.StorageLevel.NONE)
-        r.unpersist(blocking = false)
-      r.dependencies.foreach(d => unpersistTree(d.rdd))
+    leafRdds(df).filter(persisted).foreach(_.unpersist(blocking = false))
+  }
+
+  /** The owner of a [[scope]]'s checkpoints. */
+  final class Scope private[Checkpoints] (dir: Option[String]) {
+    private[Checkpoints] val owned = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    // every RDD an owned frame reached, released ones included
+    private[Checkpoints] val marks = scala.collection.mutable.Set.empty[Int]
+
+    /** Eager [[Checkpoints.checkpoint]] (to the scope's `dir`), owned. */
+    def checkpoint(df: DataFrame): DataFrame = own(Checkpoints.checkpoint(df, dir))
+
+    /** Adopt a checkpointed frame another operator returned. */
+    def own(df: DataFrame): DataFrame = {
+      owned += df
+      marks ++= leafRdds(df).map(_.id)
+      df
     }
-    df.queryExecution.analyzed.collectLeaves().foreach {
-      case lr: LogicalRDD => unpersistTree(lr.rdd)
-      case _ => ()
+
+    /** Release a superseded frame (or a view of one) before scope exit. */
+    def release(df: DataFrame): Unit = {
+      Checkpoints.release(df)
+      owned -= df
     }
+  }
+
+  /** Run `body` with a [[Scope]] owning its checkpoints: on every exit
+    * path every owned frame except the returned one is released, and the
+    * returned frame must be an owned checkpoint or read none of them. */
+  def scope(dir: Option[String] = None)(body: Scope => DataFrame): DataFrame = {
+    val s = new Scope(dir)
+    var kept: Option[DataFrame] = None
+    try {
+      val out = body(s)
+      kept = s.owned.find(_ eq out)
+      require(kept.nonEmpty || !leafRdds(out).exists(r => s.marks.contains(r.id)),
+        "Checkpoints.scope: the returned frame reads a checkpoint the scope " +
+          "releases on exit — checkpoint the result with s.checkpoint")
+      out
+    } finally s.owned.foreach(f => if (!kept.exists(_ eq f)) release(f))
   }
 }

@@ -305,31 +305,31 @@ object Curation {
     // re-running the corpus-scale count for each of its three consumers
     // (Σw, the rank gate, the final join): exactly 2 corpus passes total
     // (count + rank), at any scale
-    val counts = Checkpoints.checkpoint(
-      df.groupBy(col(source)).agg(count(lit(1)).as("n_docs"))
-        .withColumn("w", floor(sqrt(col("n_docs").cast("double"))).cast("long")))
-    val total = counts.agg(sum(col("w")).as("w_total"))
-    val targets = counts.crossJoin(broadcast(total))
-      .withColumn("wb", col("w") * lit(budget))
-      // exact integer floor-div: (x - x mod y) is a multiple of y, so the
-      // double quotient is exact for any magnitude either engine allows
-      .withColumn("target_n",
-        ((col("wb") - pmod(col("wb"), col("w_total"))) / col("w_total")).cast("long"))
-      .select(col(source), col("n_docs"), col("target_n"))
-    val rk = Window.partitionBy(col(source)).orderBy(col(key).asc)
-    val kept = df.select(col(source), col(key))
-      .withColumn("rn", row_number().over(rk).cast("long"))
-      .join(broadcast(targets.select(col(source), col("target_n").as("__t"))), source)
-      .filter(col("rn") <= col("__t"))
-      .groupBy(col(source))
-      .agg(count(lit(1)).as("kept_n"), sum(col(key)).as("kept_key_sum"))
-    val out = Checkpoints.checkpoint(
-      targets.join(kept, Seq(source), "left")
-        .select(col(source), col("n_docs"), col("target_n"),
-          coalesce(col("kept_n"), lit(0L)).as("kept_n"),
-          coalesce(col("kept_key_sum"), lit(0L)).as("kept_key_sum")))
-    Checkpoints.release(counts)
-    out
+    Checkpoints.scope() { s =>
+      val counts = s.checkpoint(
+        df.groupBy(col(source)).agg(count(lit(1)).as("n_docs"))
+          .withColumn("w", floor(sqrt(col("n_docs").cast("double"))).cast("long")))
+      val total = counts.agg(sum(col("w")).as("w_total"))
+      val targets = counts.crossJoin(broadcast(total))
+        .withColumn("wb", col("w") * lit(budget))
+        // exact integer floor-div: (x - x mod y) is a multiple of y, so the
+        // double quotient is exact for any magnitude either engine allows
+        .withColumn("target_n",
+          ((col("wb") - pmod(col("wb"), col("w_total"))) / col("w_total")).cast("long"))
+        .select(col(source), col("n_docs"), col("target_n"))
+      val rk = Window.partitionBy(col(source)).orderBy(col(key).asc)
+      val kept = df.select(col(source), col(key))
+        .withColumn("rn", row_number().over(rk).cast("long"))
+        .join(broadcast(targets.select(col(source), col("target_n").as("__t"))), source)
+        .filter(col("rn") <= col("__t"))
+        .groupBy(col(source))
+        .agg(count(lit(1)).as("kept_n"), sum(col(key)).as("kept_key_sum"))
+      s.checkpoint(
+        targets.join(kept, Seq(source), "left")
+          .select(col(source), col("n_docs"), col("target_n"),
+            coalesce(col("kept_n"), lit(0L)).as("kept_n"),
+            coalesce(col("kept_key_sum"), lit(0L)).as("kept_key_sum")))
+    }
   }
 
   // ------------------------------------------------- importance resampling
@@ -366,29 +366,29 @@ object Curation {
       .withColumn("b", TextAnalysis.fingerprint(col("g")) % buckets.toLong)
     // one corpus gram pass: per-(doc, bucket) counts serve all three
     // consumers (bucket counts, totals, scoring join)
-    val gb = Checkpoints.checkpoint(
-      gr.groupBy(col(id), col("tgt"), col("b")).agg(count(lit(1)).as("c")))
-    val cb = gb.groupBy(col("b")).agg(
-      sum(when(col("tgt"), col("c")).otherwise(0L)).as("n_t"),
-      sum(when(!col("tgt"), col("c")).otherwise(0L)).as("n_r"))
-    val tot = gb.agg(
-      sum(when(col("tgt"), col("c")).otherwise(0L)).as("nt_tot"),
-      sum(when(!col("tgt"), col("c")).otherwise(0L)).as("nr_tot"))
-    val bl = lit(buckets.toLong)
-    // single-log form with a fixed evaluation order — both engines
-    // compute the identical IEEE double chain before the micro-nat round
-    val model = cb.crossJoin(broadcast(tot)).select(col("b"),
-      round(log(((col("n_t") + 1L).cast("double") * (col("nr_tot") + bl).cast("double")) /
-          ((col("n_r") + 1L).cast("double") * (col("nt_tot") + bl).cast("double"))) * 1e6)
-        .cast("long").as("w_micro"))
-    val out = Checkpoints.checkpoint(
-      gb.join(broadcast(model), "b")
-        .groupBy(col(id))
-        .agg(sum(col("c")).as("n_grams"),
-          sum(col("c") * col("w_micro")).as("score_micro"))
-        .withColumn("keep", col("score_micro") > 0L))
-    Checkpoints.release(gb)
-    out
+    Checkpoints.scope() { s =>
+      val gb = s.checkpoint(
+        gr.groupBy(col(id), col("tgt"), col("b")).agg(count(lit(1)).as("c")))
+      val cb = gb.groupBy(col("b")).agg(
+        sum(when(col("tgt"), col("c")).otherwise(0L)).as("n_t"),
+        sum(when(!col("tgt"), col("c")).otherwise(0L)).as("n_r"))
+      val tot = gb.agg(
+        sum(when(col("tgt"), col("c")).otherwise(0L)).as("nt_tot"),
+        sum(when(!col("tgt"), col("c")).otherwise(0L)).as("nr_tot"))
+      val bl = lit(buckets.toLong)
+      // single-log form with a fixed evaluation order — both engines
+      // compute the identical IEEE double chain before the micro-nat round
+      val model = cb.crossJoin(broadcast(tot)).select(col("b"),
+        round(log(((col("n_t") + 1L).cast("double") * (col("nr_tot") + bl).cast("double")) /
+            ((col("n_r") + 1L).cast("double") * (col("nt_tot") + bl).cast("double"))) * 1e6)
+          .cast("long").as("w_micro"))
+      s.checkpoint(
+        gb.join(broadcast(model), "b")
+          .groupBy(col(id))
+          .agg(sum(col("c")).as("n_grams"),
+            sum(col("c") * col("w_micro")).as("score_micro"))
+          .withColumn("keep", col("score_micro") > 0L))
+    }
   }
 
   /** Cluster-balanced diversity sampling: assign every embedding to its

@@ -185,15 +185,8 @@ object Dedup {
   /** MinHash+LSH near-duplicate pairs with exact-jaccard verification:
     * returns (id_a, id_b, j) for all pairs with true jaccard ≥ threshold
     * that collide in ≥1 band (recall ≈ 1 for thresholds ≤ the banding
-    * design point).
-    *
-    * OWNERSHIP (r17 ADVICE, documented round 18): the returned frame is
-    * eagerly checkpointed — the pair list, bounded by the near-dup rate,
-    * the one-result-frame contract of Checkpoints. CALLERS OWN IT: a
-    * consume-and-drop caller should `Checkpoints.release` it when done
-    * (nearDupClusters-style pipelines copy it into their own edge
-    * checkpoint; the bench drops all session storage between queries).
-    * Same contract for [[simhashNearDups]]. */
+    * design point). Returns one checkpointed frame the caller owns
+    * (the pair list, bounded by the near-dup rate). */
   def minhashNearDups(docs: DataFrame, id: String, text: Column,
                       n: Int, threshold: Double, maxBucketSize: Int = 0): DataFrame = {
     // the shingle table feeds bucketing AND both verify joins. It is NOT
@@ -209,23 +202,21 @@ object Dedup {
     // kernel over the corpus (no exchange/stage reuse fires across the
     // aliased sides — measured on the executed plan), so one narrow
     // checkpoint (id + K longs, ~270 B/doc — an order smaller than the
-    // text) halves the most expensive pass. Released before return; the
-    // verified pair result is the operator's one surviving checkpointed
-    // frame (the nearDupClusters edge-frame contract). The shingle
-    // frame itself stays unpersisted — at 100 TB it is LARGER than the
-    // corpus (round-1 ADVICE); the verify joins recompute it, which is
-    // the documented scalable trade.
-    val sigCk = Checkpoints.checkpoint(
-      docs.select(col(id), minhashSignature(wordShingles(text, n)).as("sig")))
-    try {
+    // text) halves the most expensive pass. The shingle frame itself
+    // stays unpersisted — at 100 TB it is LARGER than the corpus
+    // (round-1 ADVICE); the verify joins recompute it, which is the
+    // documented scalable trade.
+    Checkpoints.scope() { s =>
+      val sigCk = s.checkpoint(
+        docs.select(col(id), minhashSignature(wordShingles(text, n)).as("sig")))
       val cands = lshCandidatesFromSig(sigCk, id, maxBucketSize)
       val sa = shingled.select(col(id).as("id_a"), col("sh").as("sh_a"))
       val sb = shingled.select(col(id).as("id_b"), col("sh").as("sh_b"))
-      Checkpoints.checkpoint(
+      s.checkpoint(
         cands.join(sa, "id_a").join(sb, "id_b")
           .select(col("id_a"), col("id_b"), jaccard(col("sh_a"), col("sh_b")).as("j"))
           .filter(col("j") >= threshold))
-    } finally Checkpoints.release(sigCk)
+    }
   }
 
   /** Intra-document repeats — the other half of the Lee et al. dedup
@@ -251,11 +242,8 @@ object Dedup {
     // join exchanges; the O(corpus chars) gram stream never crosses the
     // network. Both branches (grams, text) fork from the same
     // repartitioned frame, so the doc shuffle is one reused exchange.
-    val spark = docs.sparkSession
-    val parts = math.max(spark.sparkContext.defaultParallelism,
-      docs.rdd.getNumPartitions)
     val d0 = docs.select(col(id).as("d"), text.as("__t0"))
-      .repartition(parts, col("d"))
+      .repartition(TextAnalysis.scanPartitions(docs), col("d"))
     val grams = d0.select(col("d"),
         posexplode(ColumnBridge.column(
           graft.functions.CharGramHashes(ColumnBridge.expression(col("__t0")), k))))
@@ -365,16 +353,13 @@ object Dedup {
     // no stage reuse fires across the aliased sides (r17 plan-dump
     // finding on the minhash twin). Shingles deliberately stay
     // unpersisted (the documented 100 TB trade: the shingle frame is
-    // larger than the corpus); the verify joins recompute them. The
-    // returned pair frame is checkpointed so the sketch can be released
-    // before return — callers own the (bounded, pair-list-sized) result
-    // frame, as with minhashNearDups.
-    val sketchCk = Checkpoints.checkpoint(
-      shingled.select(col(id), simhash64(col("sh")).as("simhash")))
-    try {
-      Checkpoints.checkpoint(
-        simhashPairsPlan(sketchCk, shingled, id, threshold, maxBucketSize))
-    } finally Checkpoints.release(sketchCk)
+    // larger than the corpus); the verify joins recompute them. Returns
+    // one checkpointed frame the caller owns, as minhashNearDups does.
+    Checkpoints.scope() { s =>
+      val sketchCk = s.checkpoint(
+        shingled.select(col(id), simhash64(col("sh")).as("simhash")))
+      s.checkpoint(simhashPairsPlan(sketchCk, shingled, id, threshold, maxBucketSize))
+    }
   }
 
   /** The banded-self-join pair plan over an (id, simhash) sketch frame —
@@ -500,12 +485,9 @@ object Dedup {
     * tripwire. `checkpointDir` switches every checkpoint to a reliable
     * one for long jobs on real clusters.
     *
-    * OWNERSHIP: the returned frame is eagerly checkpointed — the one
-    * result frame of the [[Checkpoints]] contract — and the CALLER owns
-    * it (`Checkpoints.release` when done). Every working checkpoint
-    * (edge projection, rounds) releases on every exit path, the
-    * non-convergence throw included. `pairs` stays the caller's: a
-    * checkpointed pair frame can be released as soon as this returns.
+    * Returns one checkpointed frame the caller owns. `pairs` stays the
+    * caller's: a checkpointed pair frame can be released as soon as
+    * this returns.
     *
     * IDS must be integral (byte/short/int/long) in `idCol`, `id_a` and
     * `id_b`: both paths carry them as BIGINT, where a non-integral cast
@@ -530,19 +512,14 @@ object Dedup {
     }
     val idType = ids.schema(idCol).dataType
     val keyed = ids.select(col(idCol).cast("long").as("id"))
-    // the one result frame, in the caller's id type
-    def result(labels: DataFrame): DataFrame = Checkpoints.checkpoint(
-      labels.select(col("id").cast(idType).as("id"), col("rep").cast(idType).as("rep")),
-      checkpointDir)
-    val edges = Checkpoints.checkpoint(
-      pairs.select(col("id_a").cast("long").as("id_a"), col("id_b").cast("long").as("id_b"))
-        .filter(col("id_a").isNotNull && col("id_b").isNotNull),
-      checkpointDir)
-    try {
+    Checkpoints.scope(checkpointDir) { s =>
+      val edges = s.checkpoint(
+        pairs.select(col("id_a").cast("long").as("id_a"), col("id_b").cast("long").as("id_b"))
+          .filter(col("id_a").isNotNull && col("id_b").isNotNull))
       val spark = ids.sparkSession
       import spark.implicits._
       val local = edges.limit(localLimit + 1).as[(Long, Long)].collect()
-      if (local.length <= localLimit) {
+      val labels = if (local.length <= localLimit) {
         val parent = scala.collection.mutable.LongMap.empty[Long]
         def find(x: Long): Long = {
           var r = x
@@ -556,132 +533,115 @@ object Dedup {
           if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb) // min-id root
         }
         // parent's keys are exactly the non-root ids
-        val labels = parent.keys.toSeq.map(x => (x, find(x))).toDF("__lid", "__lrep")
-        result(keyed.join(labels, col("id") === col("__lid"), "left")
-          .select(col("id"), coalesce(col("__lrep"), col("id")).as("rep")))
-      } else pointerJumpComponents(keyed, edges, maxIters, checkpointDir, jumps, result)
-    } finally Checkpoints.release(edges)
+        val roots = parent.keys.toSeq.map(x => (x, find(x))).toDF("__lid", "__lrep")
+        keyed.join(roots, col("id") === col("__lid"), "left")
+          .select(col("id"), coalesce(col("__lrep"), col("id")).as("rep"))
+      } else pointerJumpComponents(s, keyed, edges, maxIters, jumps)
+      // the one result frame, in the caller's id type
+      s.checkpoint(
+        labels.select(col("id").cast(idType).as("id"), col("rep").cast(idType).as("rep")))
+    }
   }
 
   /** The distributed fixpoint of [[nearDupClusters]] over its
-    * materialized `(id_a, id_b)` edges; `result` materializes the output. */
-  private def pointerJumpComponents(keyed: DataFrame, pairs: DataFrame, maxIters: Int,
-                                    checkpointDir: Option[String], jumps: Int,
-                                    result: DataFrame => DataFrame): DataFrame = {
+    * materialized `(id_a, id_b)` edges: lazy `(id, rep)` labels over
+    * frames `s` owns, which the caller checkpoints before `s` exits. */
+  private def pointerJumpComponents(s: Checkpoints.Scope, keyed: DataFrame,
+                                    pairs: DataFrame, maxIters: Int,
+                                    jumps: Int): DataFrame = {
     // both directions of every pair, materialized once: every round's
     // neighbor join reads these blocks
-    val edges = Checkpoints.checkpoint(
+    val edges = s.checkpoint(
       pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
-        .unionByName(pairs.select(col("id_b").as("src"), col("id_a").as("dst"))),
-      checkpointDir)
-    // EVERY working checkpoint releases on EVERY exit path (round-14
-    // ADVICE): the non-convergence throw — and any mid-round failure —
-    // previously leaked edges/singletons/labels, and a localCheckpoint's
-    // pinned blocks tax every later query in the session (the exact leak
-    // the Checkpoints scaladoc warns about). release() is an idempotent
-    // unpersist, so the success path's eager releases and the finally's
-    // sweep compose; only the returned frame survives.
-    var marked: DataFrame = null
-    var labels: DataFrame = null
-    var cur: DataFrame = null
-    try {
-      // ONE materialization feeds both sides of the singleton split
-      // (round 17, optimization): a left join with a presence marker runs
-      // one aggregation, materializes once, and both consumers are
-      // narrow filters over the same blocks. The aggregation computes
-      // min(dst) instead of mere presence, which SEEDS labels with round
-      // 1's hop — min over self ∪ neighbor ids, exactly what the first
-      // loop round would produce from the identity labels — so the
-      // fixpoint starts one round in. (Min-label propagation's fixpoint
-      // is invariant to starting k rounds ahead: labels stay within
-      // [component-min, id] and decrease monotonically; the unique
-      // hop-stable point is constant-per-component = the component min.)
-      val minNbr = edges.groupBy(col("src")).agg(min(col("dst")).as("__nbr0"))
-        .withColumnRenamed("src", "id")
-      marked = Checkpoints.checkpoint(
-        keyed.join(minNbr, Seq("id"), "left")
-          .select(col("id"),
-            least(col("id"), coalesce(col("__nbr0"), col("id"))).as("rep"),
-            col("__nbr0").isNotNull.as("__p")),
-        checkpointDir)
-      val singletons = marked.filter(!col("__p")).select(col("id"), col("rep"))
-      labels = marked.filter(col("__p")).select(col("id"), col("rep"))
-      var iters = 0
-      var converged = false
-      while (iters < maxIters && !converged) {
-        // the round CARRIES each id's previous label as `prev` (neighbors
-        // contribute null, so max(prev) is the id's own old label through
-        // the same single exchange) — the convergence check then rides the
-        // final jump's checkpoint as an OBSERVED METRIC (round 17) instead
-        // of one more count job per round
-        val viaNeighbors = edges.join(labels, edges("src") === labels("id"))
-          .select(col("dst").as("id"), col("rep"),
-            lit(null).cast("long").as("prev"))
-        cur = Checkpoints.checkpoint(
-          labels.select(col("id"), col("rep"), col("rep").as("prev"))
-            .unionByName(viaNeighbors)
-            .groupBy(col("id"))
-            .agg(min(col("rep")).as("rep"), max(col("prev")).as("prev")),
-          checkpointDir)
-        // pointer jumps: each materializes (the next jump reads it twice —
-        // as the table and as the lookup) and releases its predecessor;
-        // the LAST jump carries the convergence observation (observing
-        // any earlier one would flag hop-stable states whose jump still
-        // contracts a pointer). The jump's self-join is total because
-        // labels are always ids already in the table.
-        var obs: org.apache.spark.sql.Observation = null
-        for (j <- 1 to jumps) {
-          val jumpedPlan = cur
-            .join(cur.select(col("id").as("jid"), col("rep").as("jrep")),
-              cur("rep") === col("jid"))
-            .select(col("id"), least(col("rep"), col("jrep")).as("rep"),
-              col("prev"))
-          val withObs = if (j < jumps) jumpedPlan else {
-            obs = org.apache.spark.sql.Observation()
-            jumpedPlan.observe(obs,
-              count(when(col("rep") =!= col("prev"), lit(1))).as("changed"))
-          }
-          val jumped = Checkpoints.checkpoint(withObs, checkpointDir)
-          Checkpoints.release(cur)
-          cur = jumped
+        .unionByName(pairs.select(col("id_b").as("src"), col("id_a").as("dst"))))
+    // ONE materialization feeds both sides of the singleton split
+    // (round 17, optimization): a left join with a presence marker runs
+    // one aggregation, materializes once, and both consumers are
+    // narrow filters over the same blocks. The aggregation computes
+    // min(dst) instead of mere presence, which SEEDS labels with round
+    // 1's hop — min over self ∪ neighbor ids, exactly what the first
+    // loop round would produce from the identity labels — so the
+    // fixpoint starts one round in. (Min-label propagation's fixpoint
+    // is invariant to starting k rounds ahead: labels stay within
+    // [component-min, id] and decrease monotonically; the unique
+    // hop-stable point is constant-per-component = the component min.)
+    val minNbr = edges.groupBy(col("src")).agg(min(col("dst")).as("__nbr0"))
+      .withColumnRenamed("src", "id")
+    val marked = s.checkpoint(
+      keyed.join(minNbr, Seq("id"), "left")
+        .select(col("id"),
+          least(col("id"), coalesce(col("__nbr0"), col("id"))).as("rep"),
+          col("__nbr0").isNotNull.as("__p")))
+    val singletons = marked.filter(!col("__p")).select(col("id"), col("rep"))
+    var labels = marked.filter(col("__p")).select(col("id"), col("rep"))
+    var iters = 0
+    var converged = false
+    while (iters < maxIters && !converged) {
+      // the round CARRIES each id's previous label as `prev` (neighbors
+      // contribute null, so max(prev) is the id's own old label through
+      // the same single exchange) — the convergence check then rides the
+      // final jump's checkpoint as an OBSERVED METRIC (round 17) instead
+      // of one more count job per round
+      val viaNeighbors = edges.join(labels, edges("src") === labels("id"))
+        .select(col("dst").as("id"), col("rep"),
+          lit(null).cast("long").as("prev"))
+      var cur = s.checkpoint(
+        labels.select(col("id"), col("rep"), col("rep").as("prev"))
+          .unionByName(viaNeighbors)
+          .groupBy(col("id"))
+          .agg(min(col("rep")).as("rep"), max(col("prev")).as("prev")))
+      // pointer jumps: each materializes (the next jump reads it twice —
+      // as the table and as the lookup) and releases its predecessor;
+      // the LAST jump carries the convergence observation (observing
+      // any earlier one would flag hop-stable states whose jump still
+      // contracts a pointer). The jump's self-join is total because
+      // labels are always ids already in the table.
+      var obs: org.apache.spark.sql.Observation = null
+      for (j <- 1 to jumps) {
+        val jumpedPlan = cur
+          .join(cur.select(col("id").as("jid"), col("rep").as("jrep")),
+            cur("rep") === col("jid"))
+          .select(col("id"), least(col("rep"), col("jrep")).as("rep"),
+            col("prev"))
+        val withObs = if (j < jumps) jumpedPlan else {
+          obs = org.apache.spark.sql.Observation()
+          jumpedPlan.observe(obs,
+            count(when(col("rep") =!= col("prev"), lit(1))).as("changed"))
         }
-        // Bounded wait on the observation's own future (round-17 ADVICE):
-        // the eager checkpoint action has completed by this line, so the
-        // metric is normally ready — but an unbounded wait would block
-        // FOREVER if a Spark upgrade ever stopped Observation completing
-        // on this action shape (the risk ObsProbeSpec pins). Awaiting
-        // `obs.future` parks no pool thread on a timeout. On timeout,
-        // fall back to an existence probe over the materialized blocks —
-        // one extra cheap job, never a hang.
-        val changed: Long =
-          try Await.result(obs.future, 30.seconds).getAs[Long]("changed")
-          catch {
-            case _: java.util.concurrent.TimeoutException =>
-              org.slf4j.LoggerFactory.getLogger("graft.operators.Dedup").warn(
-                "nearDupClusters: convergence observation did not complete " +
-                  "within 30s of its eager action — falling back to a " +
-                  "count probe over the checkpointed round")
-              cur.filter(col("rep") =!= col("prev")).limit(1).count()
-          }
-        if (iters > 0) Checkpoints.release(labels) // round 0's labels view rides `marked`
-        labels = cur.select(col("id"), col("rep"))
-        converged = changed == 0
-        iters += 1
+        val jumped = s.checkpoint(withObs)
+        s.release(cur)
+        cur = jumped
       }
-      if (!converged)
-        throw new IllegalStateException(
-          s"nearDupClusters did not converge within $maxIters rounds — " +
-            "component diameter exceeds 2^maxIters or `pairs` references ids " +
-            "missing from `ids`; the partial labels would split clusters")
-      // fold singletons back in: the union materializes once, its parts
-      // release in the finally below
-      result(labels.unionByName(singletons))
-    } finally {
-      Checkpoints.release(edges)
-      if (marked != null) Checkpoints.release(marked)
-      if (labels != null) Checkpoints.release(labels)
-      if (cur != null) Checkpoints.release(cur)
+      // Bounded wait on the observation's own future (round-17 ADVICE):
+      // the eager checkpoint action has completed by this line, so the
+      // metric is normally ready — but an unbounded wait would block
+      // FOREVER if a Spark upgrade ever stopped Observation completing
+      // on this action shape (the risk ObsProbeSpec pins). Awaiting
+      // `obs.future` parks no pool thread on a timeout. On timeout,
+      // fall back to an existence probe over the materialized blocks —
+      // one extra cheap job, never a hang.
+      val changed: Long =
+        try Await.result(obs.future, 30.seconds).getAs[Long]("changed")
+        catch {
+          case _: java.util.concurrent.TimeoutException =>
+            org.slf4j.LoggerFactory.getLogger("graft.operators.Dedup").warn(
+              "nearDupClusters: convergence observation did not complete " +
+                "within 30s of its eager action — falling back to a " +
+                "count probe over the checkpointed round")
+            cur.filter(col("rep") =!= col("prev")).limit(1).count()
+        }
+      if (iters > 0) s.release(labels) // round 0's labels view rides `marked`
+      labels = cur.select(col("id"), col("rep"))
+      converged = changed == 0
+      iters += 1
     }
+    if (!converged)
+      throw new IllegalStateException(
+        s"nearDupClusters did not converge within $maxIters rounds — " +
+          "component diameter exceeds 2^maxIters or `pairs` references ids " +
+          "missing from `ids`; the partial labels would split clusters")
+    // fold singletons back in: the caller's result checkpoint reads both
+    labels.unionByName(singletons)
   }
 
   // ------------------------------------------------------------ substring runs
@@ -716,8 +676,9 @@ object Dedup {
     duplicateRunFrames(docs, id, text, k, minRunLen, maxPositionsPerGram).confirmed
 
   /** The stage frames of [[duplicateRuns]], exposed for stage-level cost
-    * profiling (round 17, r16 verdict ask #6 — HeavyRowsProfile times
-    * each frame to a noop sink per factor): gram stream →
+    * profiling (SCALING.md, round 17, "Substring dedup: the valve's
+    * count branch, removed" — each frame timed to a noop sink per
+    * factor): gram stream →
     * bounded postings lists → merged runs → byte-confirmed output.
     * `confirmed` IS the operator's return frame. */
   private[graft] final case class DuplicateRunStages(

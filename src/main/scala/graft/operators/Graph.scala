@@ -37,10 +37,9 @@ object Graph {
     * the DAG cost is quadratic in iterations. The degree-annotated edge
     * list checkpoints once too (it is read every round; re-deriving it
     * means re-shuffling the raw edges per iteration). Checkpoints
-    * ROTATE: rank_{i-1} is released the moment rank_i materializes, and
-    * the edge/node frames are released before returning — only the
-    * final (node, rank) frame (16 bytes a node) outlives the call.
-    * `checkpointDir` switches the per-round checkpoints to reliable
+    * ROTATE: rank_{i-1} is released the moment rank_i materializes.
+    * Returns one checkpointed frame the caller owns: (node, rank), 16
+    * bytes a node. `checkpointDir` switches the checkpoints to reliable
     * storage (see Checkpoints.checkpoint) for long jobs on real
     * clusters; unset uses executor-local blocks. */
   def pageRank(edges: DataFrame, iterations: Int,
@@ -57,48 +56,45 @@ object Graph {
     // edges per construction; the window derives it once (one exchange on
     // src + a partition-local sort). Same result: every edge row carries
     // its source's out-degree.
-    val eDeg = Checkpoints.checkpoint(
-      e.withColumn("deg", count(lit(1)).over(
-        org.apache.spark.sql.expressions.Window.partitionBy(col("src")))),
-      checkpointDir)
-    val nodes = Checkpoints.checkpoint(
-      eDeg.select(col("src").as("node"))
-        .union(eDeg.select(col("dst").as("node"))).distinct(), checkpointDir)
-    val base = lit(scale * (dampDen - dampNum) / dampDen)
-    var ranks = nodes.withColumn("rank", lit(scale))
-    var prev: Option[DataFrame] = None
-    // Per-iteration shape (round 18, guide §2.4): the previous form
-    // aggregated contributions on dst and LEFT-JOINED the node list back
-    // in (nodes with no in-edges must keep the base rank) — a
-    // SortMergeJoin whose nodes side re-exchanged + re-sorted EVERY round
-    // (the checkpoint's AQE-coalesced layout claim cannot match the
-    // aggregate side's partition count, measured r17: graph_pagerank 32
-    // Exchanges before AND after the layout work). The join is not needed:
-    // unioning one zero-contribution row per node into the aggregate
-    // computes the identical integer sum — sum(contribs ∪ {0}) ==
-    // coalesce(sum(contribs), 0) — so each round is ONE exchange (the
-    // contribution groupBy, map-side partial-aggregated as before) and
-    // zero joins/sorts on the rank side. `nodes` is distinct by
-    // construction, so exactly one zero row per node; a node with no
-    // in-edges aggregates to sum=0 → rank = base, as the left join's
-    // NULL-coalesce produced.
-    val zeros = nodes.select(col("node"), lit(0L).as("contrib"))
-    for (_ <- 1 to iterations) {
-      val contribs = eDeg
-        .join(ranks, eDeg("src") === ranks("node"))
-        .select(col("dst").as("node"), expr("rank DIV deg").as("contrib"))
-      ranks = Checkpoints.checkpoint(
-        contribs.union(zeros)
-          .groupBy(col("node"))
-          .agg((base + expr(s"sum(contrib) * $dampNum DIV $dampDen")).as("rank")),
-        checkpointDir)
-      prev.foreach(Checkpoints.release)
-      prev = Some(ranks)
+    Checkpoints.scope(checkpointDir) { s =>
+      val eDeg = s.checkpoint(
+        e.withColumn("deg", count(lit(1)).over(
+          org.apache.spark.sql.expressions.Window.partitionBy(col("src")))))
+      val nodes = s.checkpoint(
+        eDeg.select(col("src").as("node"))
+          .union(eDeg.select(col("dst").as("node"))).distinct())
+      val base = lit(scale * (dampDen - dampNum) / dampDen)
+      var ranks = nodes.withColumn("rank", lit(scale))
+      var prev: Option[DataFrame] = None
+      // Per-iteration shape (round 18, guide §2.4): the previous form
+      // aggregated contributions on dst and LEFT-JOINED the node list back
+      // in (nodes with no in-edges must keep the base rank) — a
+      // SortMergeJoin whose nodes side re-exchanged + re-sorted EVERY round
+      // (the checkpoint's AQE-coalesced layout claim cannot match the
+      // aggregate side's partition count, measured r17: graph_pagerank 32
+      // Exchanges before AND after the layout work). The join is not needed:
+      // unioning one zero-contribution row per node into the aggregate
+      // computes the identical integer sum — sum(contribs ∪ {0}) ==
+      // coalesce(sum(contribs), 0) — so each round is ONE exchange (the
+      // contribution groupBy, map-side partial-aggregated as before) and
+      // zero joins/sorts on the rank side. `nodes` is distinct by
+      // construction, so exactly one zero row per node; a node with no
+      // in-edges aggregates to sum=0 → rank = base, as the left join's
+      // NULL-coalesce produced.
+      val zeros = nodes.select(col("node"), lit(0L).as("contrib"))
+      for (_ <- 1 to iterations) {
+        val contribs = eDeg
+          .join(ranks, eDeg("src") === ranks("node"))
+          .select(col("dst").as("node"), expr("rank DIV deg").as("contrib"))
+        ranks = s.checkpoint(
+          contribs.union(zeros)
+            .groupBy(col("node"))
+            .agg((base + expr(s"sum(contrib) * $dampNum DIV $dampDen")).as("rank")))
+        prev.foreach(s.release)
+        prev = Some(ranks)
+      }
+      ranks
     }
-    // the final ranks frame is lineage-free — the working set can go
-    Checkpoints.release(eDeg)
-    Checkpoints.release(nodes)
-    ranks
   }
 
   /** Exact triangle counting by degree orientation (the standard
@@ -136,27 +132,26 @@ object Graph {
     // closing semi-join — and each lazy reference re-executed the whole
     // upstream (edge distinct + degree aggregate + two joins) and
     // inlined it into the plan (the sf0.1 plan text carried the subtree
-    // 3×, 69 KB). Two longs per edge — the same bounded-narrow-frame
-    // checkpoint contract as nearDupClusters' edge frame; released
-    // before return, only the node-sized result survives.
-    val oriented = Checkpoints.checkpoint(und.join(du, "u").join(dv, "v")
-      .select(
-        when(col("du") < col("dv") ||
-          (col("du") === col("dv") && col("u") < col("v")), col("u"))
-          .otherwise(col("v")).as("a"),
-        when(col("du") < col("dv") ||
-          (col("du") === col("dv") && col("u") < col("v")), col("v"))
-          .otherwise(col("u")).as("b")))
-    try {
+    // 3×, 69 KB). Two longs per edge, like nearDupClusters' edge frame;
+    // only the node-sized result outlives the scope.
+    Checkpoints.scope() { s =>
+      val oriented = s.checkpoint(und.join(du, "u").join(dv, "v")
+        .select(
+          when(col("du") < col("dv") ||
+            (col("du") === col("dv") && col("u") < col("v")), col("u"))
+            .otherwise(col("v")).as("a"),
+          when(col("du") < col("dv") ||
+            (col("du") === col("dv") && col("u") < col("v")), col("v"))
+            .otherwise(col("u")).as("b")))
       val e1 = oriented.select(col("a"), col("b"))
       val e2 = oriented.select(col("a").as("b"), col("b").as("c"))
       val wedges = e1.join(e2, "b").select(col("a"), col("b"), col("c"))
       val closing = oriented.select(col("a"), col("b").as("c"))
-      Checkpoints.checkpoint(
+      s.checkpoint(
         wedges.join(closing, Seq("a", "c"), "left_semi")
           .select(explode(array(col("a"), col("b"), col("c"))).as("node"))
           .groupBy(col("node")).agg(count(lit(1)).as("triangles")))
-    } finally Checkpoints.release(oriented)
+    }
   }
 
   /** In/out degree per node — the cheap centrality for cut-offs. */

@@ -551,8 +551,7 @@ object Multimodal {
 
   /** Frame sampling for video-kind records: every `stride`-th frame index
     * up to the decoded frame count. Explodes without shuffling. */
-  def sampleFrames(decoded: Dataset[DecodedMedia], stride: Int)
-      (implicit spark: SparkSession): DataFrame = {
+  def sampleFrames(decoded: Dataset[DecodedMedia], stride: Int): DataFrame = {
     decoded.toDF()
       .select(col("media_id"),
         explode(sequence(lit(0), col("n_frames") - 1, lit(stride))).as("frame_idx"))
@@ -563,7 +562,7 @@ object Multimodal {
     * accepts yield NULL bands (they cannot be perceptually compared).
     * Narrow codegen'd projection ([[graft.functions.DhashBandsExpr]]) —
     * no shuffle, payloads never leave their partition. */
-  def imageDhash(media: Dataset[MediaRecord])(implicit spark: SparkSession): DataFrame = {
+  def imageDhash(media: Dataset[MediaRecord]): DataFrame = {
     val bands = ColumnBridge.column(graft.functions.DhashBandsExpr(
       ColumnBridge.expression(col("content"))))
     media.toDF()
@@ -596,49 +595,48 @@ object Multimodal {
     * is what capping trades away: run exact whole-hash dedup first (or
     * use [[dhashDedupKeep]], which collapses identical hashes before any
     * pair is enumerated, so the mega-class regime never reaches this
-    * join). */
+    * join). Returns one checkpointed frame the caller owns. */
   def dhashNearDups(hashes: DataFrame, idCol: String, maxDist: Int,
-                    maxBucketSize: Int = 0)
-      (implicit spark: SparkSession): DataFrame = {
+                    maxBucketSize: Int = 0): DataFrame = {
     require(maxDist >= 0 && maxDist < 4,
       s"banded exactness holds for maxDist < 4 (bands=4), got $maxDist")
     // The hash frame feeds THREE plan arms (banding + both verify
     // sides); without materialization each arm would re-run the upstream
     // decode+hash — for real media that is the whole codec cost ×3.
-    // The frame is bounded tiny state (one row of five ints per image),
-    // the same return-one-small-checkpointed-frame contract the
-    // iterative operators follow (see Checkpoints scaladoc).
-    val withId = Checkpoints.checkpoint(
-      hashes.select(col(idCol).as("id"),
-        col("b0"), col("b1"), col("b2"), col("b3"))
-        .filter(col("b0").isNotNull))
-    val banded0 = withId.select(col("id"),
-      posexplode(array(col("b0"), col("b1"), col("b2"), col("b3")))
-        .as(Seq("band_idx", "band_val")))
-    val banded =
-      if (maxBucketSize <= 0) banded0
-      else banded0.join(
-        banded0.groupBy(col("band_idx"), col("band_val")).count()
-          .filter(col("count") <= maxBucketSize)
-          .select(col("band_idx"), col("band_val")),
-        Seq("band_idx", "band_val"))
-    val cand = banded.as("x").join(banded.as("y"),
-        col("x.band_idx") === col("y.band_idx") &&
-          col("x.band_val") === col("y.band_val") &&
-          col("x.id") < col("y.id"))
-      .select(col("x.id").as("id_a"), col("y.id").as("id_b"))
-      .distinct()
-    val ha = withId.select(col("id").as("id_a"), col("b0").as("a0"),
-      col("b1").as("a1"), col("b2").as("a2"), col("b3").as("a3"))
-    val hb = withId.select(col("id").as("id_b"), col("b0").as("c0"),
-      col("b1").as("c1"), col("b2").as("c2"), col("b3").as("c3"))
-    val ham = bit_count(col("a0").bitwiseXOR(col("c0"))) +
-      bit_count(col("a1").bitwiseXOR(col("c1"))) +
-      bit_count(col("a2").bitwiseXOR(col("c2"))) +
-      bit_count(col("a3").bitwiseXOR(col("c3")))
-    cand.join(ha, "id_a").join(hb, "id_b")
-      .select(col("id_a"), col("id_b"), ham.cast("long").as("hamming"))
-      .filter(col("hamming") <= maxDist)
+    // One row of five ints per image, released once the pairs are.
+    Checkpoints.scope() { s =>
+      val withId = s.checkpoint(
+        hashes.select(col(idCol).as("id"),
+          col("b0"), col("b1"), col("b2"), col("b3"))
+          .filter(col("b0").isNotNull))
+      val banded0 = withId.select(col("id"),
+        posexplode(array(col("b0"), col("b1"), col("b2"), col("b3")))
+          .as(Seq("band_idx", "band_val")))
+      val banded =
+        if (maxBucketSize <= 0) banded0
+        else banded0.join(
+          banded0.groupBy(col("band_idx"), col("band_val")).count()
+            .filter(col("count") <= maxBucketSize)
+            .select(col("band_idx"), col("band_val")),
+          Seq("band_idx", "band_val"))
+      val cand = banded.as("x").join(banded.as("y"),
+          col("x.band_idx") === col("y.band_idx") &&
+            col("x.band_val") === col("y.band_val") &&
+            col("x.id") < col("y.id"))
+        .select(col("x.id").as("id_a"), col("y.id").as("id_b"))
+        .distinct()
+      val ha = withId.select(col("id").as("id_a"), col("b0").as("a0"),
+        col("b1").as("a1"), col("b2").as("a2"), col("b3").as("a3"))
+      val hb = withId.select(col("id").as("id_b"), col("b0").as("c0"),
+        col("b1").as("c1"), col("b2").as("c2"), col("b3").as("c3"))
+      val ham = bit_count(col("a0").bitwiseXOR(col("c0"))) +
+        bit_count(col("a1").bitwiseXOR(col("c1"))) +
+        bit_count(col("a2").bitwiseXOR(col("c2"))) +
+        bit_count(col("a3").bitwiseXOR(col("c3")))
+      s.checkpoint(cand.join(ha, "id_a").join(hb, "id_b")
+        .select(col("id_a"), col("id_b"), ham.cast("long").as("hamming"))
+        .filter(col("hamming") <= maxDist))
+    }
   }
 
   /** Keep/drop decision per image — the CLASSES-not-pairs image dedup
@@ -670,61 +668,57 @@ object Multimodal {
     * Rows with ANY band NULL (payloads no reader accepts; partial
     * hashes from arbitrary caller frames) cannot be perceptually
     * compared and are kept as their own singletons — every input row
-    * appears in the output exactly once. */
+    * appears in the output exactly once. Returns one checkpointed frame
+    * the caller owns. */
   def dhashDedupKeep(hashes: DataFrame, idCol: String, maxDist: Int,
-                     maxBucketSize: Int = 0)
-      (implicit spark: SparkSession): DataFrame = {
+                     maxBucketSize: Int = 0): DataFrame = {
     // The hash frame feeds THREE arms here — the class aggregation, the
     // final class re-join, and the null-band singleton union — and for
     // real media each un-materialized arm re-runs the whole upstream
     // encode+decode+hash (the codec cost IS these rows' cost; round 18,
     // the same move [[dhashNearDups]] documents for its own input).
-    // One row of five ints per image — bounded tiny state under the
-    // return-one-small-checkpointed-frame contract; like dhashNearDups'
-    // checkpoint (and the class and cluster frames below) it stays pinned
-    // for the returned frame's lifetime (callers own it; the bench drops
-    // session storage between queries).
-    val withId = Checkpoints.checkpoint(
-      hashes.select(col(idCol).as("id"),
-        col("b0"), col("b1"), col("b2"), col("b3")))
-    // ANY-band-null takes the singleton path (round-14 ADVICE):
-    // [[imageDhash]] emits bands all-or-none, but this is a public API
-    // over arbitrary hash frames, and a row with b0 set but another band
-    // null would pass a b0-only filter, group fine (groupBy is
-    // null-safe), then vanish at the null-REJECTING equi-re-join on
-    // (b0..b3) — silently violating the one-output-row-per-input
-    // contract. A partial hash cannot be perceptually compared anyway.
-    val anyBandNull = col("b0").isNull || col("b1").isNull ||
-      col("b2").isNull || col("b3").isNull
-    val imgs = withId.filter(!anyBandNull)
-    // distinct-hash classes: bounded tiny frame (one row per distinct
-    // 64-bit hash) feeding pair enumeration AND the final re-join — the
-    // same return-one-small-checkpointed-frame contract dhashNearDups
-    // documents for the hash frame itself
-    val classes = Checkpoints.checkpoint(
-      imgs.groupBy(col("b0"), col("b1"), col("b2"), col("b3"))
-        .agg(min(col("id")).as("crep")))
-    val repPairs = dhashNearDups(
-      classes.select(col("crep").as("id"), col("b0"), col("b1"), col("b2"), col("b3")),
-      "id", maxDist, maxBucketSize)
-      .select(col("id_a"), col("id_b"))
-    // hash near-dup graphs CHAIN: ≤ maxDist steps at a time can walk far
-    // across the 64-bit Hamming lattice (component diameter measured
-    // > 2^10 at a 5k-image gradient fixture). The rep graph is one node
-    // per distinct hash, so it normally fits the components operator's
-    // driver budget and finishes locally; past it the fixpoint gets
-    // deep-chain headroom (2 jumps, 40 rounds, free when converged early).
-    val clusters = Dedup.nearDupClusters(
-      classes.select(col("crep").as("id")), "id", repPairs,
-      maxIters = 40, jumps = 2)
-    val kept = imgs
-      .join(classes, Seq("b0", "b1", "b2", "b3"))
-      .join(clusters.select(col("id").as("crep"), col("rep")), "crep")
-      .select(col("id"), col("rep"))
-    val nulls = withId.filter(anyBandNull)
-      .select(col("id"), col("id").as("rep"))
-    kept.unionByName(nulls)
-      .select(col("id"), col("rep"), (col("id") === col("rep")).as("keep"))
+    // One row of five ints per image, released once the result is.
+    Checkpoints.scope() { s =>
+      val withId = s.checkpoint(
+        hashes.select(col(idCol).as("id"),
+          col("b0"), col("b1"), col("b2"), col("b3")))
+      // ANY-band-null takes the singleton path (round-14 ADVICE):
+      // [[imageDhash]] emits bands all-or-none, but this is a public API
+      // over arbitrary hash frames, and a row with b0 set but another band
+      // null would pass a b0-only filter, group fine (groupBy is
+      // null-safe), then vanish at the null-REJECTING equi-re-join on
+      // (b0..b3) — silently violating the one-output-row-per-input
+      // contract. A partial hash cannot be perceptually compared anyway.
+      val anyBandNull = col("b0").isNull || col("b1").isNull ||
+        col("b2").isNull || col("b3").isNull
+      val imgs = withId.filter(!anyBandNull)
+      // distinct-hash classes: bounded tiny frame (one row per distinct
+      // 64-bit hash) feeding pair enumeration AND the final re-join
+      val classes = s.checkpoint(
+        imgs.groupBy(col("b0"), col("b1"), col("b2"), col("b3"))
+          .agg(min(col("id")).as("crep")))
+      val repPairs = s.own(dhashNearDups(
+        classes.select(col("crep").as("id"), col("b0"), col("b1"), col("b2"), col("b3")),
+        "id", maxDist, maxBucketSize))
+        .select(col("id_a"), col("id_b"))
+      // hash near-dup graphs CHAIN: ≤ maxDist steps at a time can walk far
+      // across the 64-bit Hamming lattice (component diameter measured
+      // > 2^10 at a 5k-image gradient fixture). The rep graph is one node
+      // per distinct hash, so it normally fits the components operator's
+      // driver budget and finishes locally; past it the fixpoint gets
+      // deep-chain headroom (2 jumps, 40 rounds, free when converged early).
+      val clusters = s.own(Dedup.nearDupClusters(
+        classes.select(col("crep").as("id")), "id", repPairs,
+        maxIters = 40, jumps = 2))
+      val kept = imgs
+        .join(classes, Seq("b0", "b1", "b2", "b3"))
+        .join(clusters.select(col("id").as("crep"), col("rep")), "crep")
+        .select(col("id"), col("rep"))
+      val nulls = withId.filter(anyBandNull)
+        .select(col("id"), col("id").as("rep"))
+      s.checkpoint(kept.unionByName(nulls)
+        .select(col("id"), col("rep"), (col("id") === col("rep")).as("keep")))
+    }
   }
 
   /** Wrap any (id, string) DataFrame as a media table — used by tests and

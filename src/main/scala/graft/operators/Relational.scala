@@ -261,40 +261,40 @@ object Relational {
     *
     * The ranged frame checkpoints so the counting pass and the
     * bucketing pass see ONE partitioning (range bounds are sampled — a
-    * replay could legally re-draw them) and is released before
-    * returning; only the B-row histogram outlives the call. */
+    * replay could legally re-draw them). Returns one checkpointed frame
+    * the caller owns: the B-row histogram. */
   def ntileHistogram(df: DataFrame, nBuckets: Int, value: Column,
                      tiebreak: Column): DataFrame = {
     require(nBuckets >= 1, s"nBuckets must be >= 1, got $nBuckets")
     val parts = math.max(df.sparkSession.sessionState.conf.numShufflePartitions, 1)
-    val ranged = Checkpoints.checkpoint(
-      df.select(value.as("v"), tiebreak.as("tb"))
-        .repartitionByRange(parts, col("v"), col("tb"))
-        .withColumn("pid", spark_partition_id()))
-    val cnts = ranged.groupBy(col("pid")).agg(count(lit(1)).as("c"))
-      .collect().map(r => (r.getInt(0), r.getLong(1))).sortBy(_._1)
-    val total = cnts.map(_._2).sum
-    val q0 = total / nBuckets
-    val rem = total % nBuckets
-    var acc = 0L
-    val offs = cnts.map { case (pid, c) => val o = acc; acc += c; (pid, o) }
-    val offCol =
-      if (offs.isEmpty) lit(0L)
-      else element_at(
-        map(offs.flatMap { case (p, o) => Seq(lit(p), lit(o)) }.toSeq: _*),
-        col("pid"))
-    val w = Window.partitionBy(col("pid")).orderBy(col("v"), col("tb"))
-    val cut = rem * (q0 + 1)
-    val bucketed = ranged
-      .withColumn("i", offCol + row_number().over(w).cast("long") - lit(1L))
-      .withColumn("bucket",
-        when(col("i") < lit(cut), expr(s"i DIV ${q0 + 1}L") + 1L)
-          .otherwise(expr(s"(i - ${cut}L) DIV ${math.max(q0, 1L)}L") + lit(rem + 1)))
-    val hist = Checkpoints.checkpoint(
-      bucketed.groupBy(col("bucket").cast("bigint").as("bucket"))
-        .agg(count(lit(1)).as("n"), min(col("v")).as("lo"), max(col("v")).as("hi")))
-    Checkpoints.release(ranged)
-    hist
+    Checkpoints.scope() { s =>
+      val ranged = s.checkpoint(
+        df.select(value.as("v"), tiebreak.as("tb"))
+          .repartitionByRange(parts, col("v"), col("tb"))
+          .withColumn("pid", spark_partition_id()))
+      val cnts = ranged.groupBy(col("pid")).agg(count(lit(1)).as("c"))
+        .collect().map(r => (r.getInt(0), r.getLong(1))).sortBy(_._1)
+      val total = cnts.map(_._2).sum
+      val q0 = total / nBuckets
+      val rem = total % nBuckets
+      var acc = 0L
+      val offs = cnts.map { case (pid, c) => val o = acc; acc += c; (pid, o) }
+      val offCol =
+        if (offs.isEmpty) lit(0L)
+        else element_at(
+          map(offs.flatMap { case (p, o) => Seq(lit(p), lit(o)) }.toSeq: _*),
+          col("pid"))
+      val w = Window.partitionBy(col("pid")).orderBy(col("v"), col("tb"))
+      val cut = rem * (q0 + 1)
+      val bucketed = ranged
+        .withColumn("i", offCol + row_number().over(w).cast("long") - lit(1L))
+        .withColumn("bucket",
+          when(col("i") < lit(cut), expr(s"i DIV ${q0 + 1}L") + 1L)
+            .otherwise(expr(s"(i - ${cut}L) DIV ${math.max(q0, 1L)}L") + lit(rem + 1)))
+      s.checkpoint(
+        bucketed.groupBy(col("bucket").cast("bigint").as("bucket"))
+          .agg(count(lit(1)).as("n"), min(col("v")).as("lo"), max(col("v")).as("hi")))
+    }
   }
 
   /** Time-series resample with gap fill: bucket each row to a
@@ -380,55 +380,55 @@ object Relational {
     * per partition whose prefix-min seeds each partition with the
     * dominator minimum from all higher-x partitions — no single-task
     * global sort anywhere. The ranged frame checkpoints so the minima
-    * pass and the filter pass see one sampled partitioning; released
-    * before return, only the (typically tiny) frontier survives. */
+    * pass and the filter pass see one sampled partitioning. Returns one
+    * checkpointed frame the caller owns: the (typically tiny) frontier. */
   def skyline2d(df: DataFrame, x: Column, y: Column): DataFrame = {
     val parts = math.max(df.sparkSession.sessionState.conf.numShufflePartitions, 1)
-    val ranged = Checkpoints.checkpoint(
-      df.select(x.as("x"), y.as("y"))
-        .repartitionByRange(parts, col("x").desc)
-        .withColumn("pid", spark_partition_id()))
-    val yType = ranged.schema("y").dataType
-    val mins = ranged.groupBy(col("pid")).agg(min(col("y")).as("my"))
-      .collect().map(r => (r.getInt(0), r.get(1))).sortBy(_._1)
-    // seed[pid] = min y over partitions pid' < pid — all strictly larger x
-    val seeds = mins.scanLeft((Int.MinValue, null: Any)) { case ((_, acc), (pid, my)) =>
-      // collected externals (Long/Double/BigDecimal/String/Timestamp) are
-      // all Comparable; nulls never reach here (min() skips them)
-      val nxt =
-        if (acc == null || my == null) if (acc == null) my else acc
-        else if (my.asInstanceOf[Comparable[Any]].compareTo(acc) < 0) my else acc
-      (pid, nxt)
-    }.sliding(2).collect { case Array((_, acc), (pid, _)) => (pid, acc) }.toArray
-    val seedCol =
-      if (seeds.isEmpty) lit(null).cast(yType)
-      else element_at(
-        map(seeds.flatMap { case (p, b) =>
-          Seq(lit(p), (if (b == null) lit(null) else lit(b)).cast(yType))
-        }.toSeq: _*), col("pid"))
-    // within a partition: under (x desc, y asc) ordering the FIRST row of
-    // an x-group sees exactly the strictly-greater-x rows as its window
-    // prefix; min over that prefix, broadcast group-wide, is the local
-    // strict-dominator minimum. least() skips nulls, so boundary
-    // partitions (no seed / empty prefix) fall through correctly.
-    val wScan = Window.partitionBy(col("pid")).orderBy(col("x").desc, col("y"))
-    val wGroup = Window.partitionBy(col("pid"), col("x"))
-    val frontier = ranged
-      .withColumn("__seed", seedCol)
-      .withColumn("__prefMin",
-        min(col("y")).over(wScan.rowsBetween(Window.unboundedPreceding, -1)))
-      .withColumn("__gRank", row_number().over(
-        Window.partitionBy(col("pid"), col("x")).orderBy(col("y"))))
-      .withColumn("__aboveLocal", when(col("__gRank") === 1, col("__prefMin")))
-      .withColumn("__above",
-        least(min(col("__aboveLocal")).over(wGroup), col("__seed")))
-      .withColumn("__gMin", min(col("y")).over(wGroup))
-      .filter((col("__above").isNull || col("__above") > col("y")) &&
-        col("y") === col("__gMin"))
-      .select(col("x"), col("y"))
-    val out = Checkpoints.checkpoint(frontier)
-    Checkpoints.release(ranged)
-    out
+    Checkpoints.scope() { s =>
+      val ranged = s.checkpoint(
+        df.select(x.as("x"), y.as("y"))
+          .repartitionByRange(parts, col("x").desc)
+          .withColumn("pid", spark_partition_id()))
+      val yType = ranged.schema("y").dataType
+      val mins = ranged.groupBy(col("pid")).agg(min(col("y")).as("my"))
+        .collect().map(r => (r.getInt(0), r.get(1))).sortBy(_._1)
+      // seed[pid] = min y over partitions pid' < pid — all strictly larger x
+      val seeds = mins.scanLeft((Int.MinValue, null: Any)) { case ((_, acc), (pid, my)) =>
+        // collected externals (Long/Double/BigDecimal/String/Timestamp) are
+        // all Comparable; nulls never reach here (min() skips them)
+        val nxt =
+          if (acc == null || my == null) if (acc == null) my else acc
+          else if (my.asInstanceOf[Comparable[Any]].compareTo(acc) < 0) my else acc
+        (pid, nxt)
+      }.sliding(2).collect { case Array((_, acc), (pid, _)) => (pid, acc) }.toArray
+      val seedCol =
+        if (seeds.isEmpty) lit(null).cast(yType)
+        else element_at(
+          map(seeds.flatMap { case (p, b) =>
+            Seq(lit(p), (if (b == null) lit(null) else lit(b)).cast(yType))
+          }.toSeq: _*), col("pid"))
+      // within a partition: under (x desc, y asc) ordering the FIRST row of
+      // an x-group sees exactly the strictly-greater-x rows as its window
+      // prefix; min over that prefix, broadcast group-wide, is the local
+      // strict-dominator minimum. least() skips nulls, so boundary
+      // partitions (no seed / empty prefix) fall through correctly.
+      val wScan = Window.partitionBy(col("pid")).orderBy(col("x").desc, col("y"))
+      val wGroup = Window.partitionBy(col("pid"), col("x"))
+      val frontier = ranged
+        .withColumn("__seed", seedCol)
+        .withColumn("__prefMin",
+          min(col("y")).over(wScan.rowsBetween(Window.unboundedPreceding, -1)))
+        .withColumn("__gRank", row_number().over(
+          Window.partitionBy(col("pid"), col("x")).orderBy(col("y"))))
+        .withColumn("__aboveLocal", when(col("__gRank") === 1, col("__prefMin")))
+        .withColumn("__above",
+          least(min(col("__aboveLocal")).over(wGroup), col("__seed")))
+        .withColumn("__gMin", min(col("y")).over(wGroup))
+        .filter((col("__above").isNull || col("__above") > col("y")) &&
+          col("y") === col("__gMin"))
+        .select(col("x"), col("y"))
+      s.checkpoint(frontier)
+    }
   }
 
   /** Winsorized per-group statistics: clamp `value` to its group's exact

@@ -1205,44 +1205,44 @@ object Similarity {
           .select(col("qid"), col("vec_id"),
             round(col("sim") * 1e6).cast("long").as("rel"))
     }
-    val cand = Checkpoints.checkpoint(scored
-      .withColumn("__r", row_number().over(wTop)).filter(col("__r") <= cands)
-      .drop("__r"))
-    // candidate-candidate similarity matrix (|q|·cands² tiny rows)
-    val cv = cand.join(e, "vec_id")
-    val ca = cv.select(col("qid"), col("vec_id").as("id_a"), col("v").as("va"))
-    val cb = cv.select(col("qid"), col("vec_id").as("id_b"), col("v").as("vb"))
-    val pairSim = ca.join(cb, "qid")
-      .filter(col("id_a") =!= col("id_b"))
-      .select(col("qid"), col("id_a"), col("id_b"),
-        round(cosine(col("va"), col("vb")) * 1e6).cast("long").as("s"))
-    // greedy trace in ONE bounded-state aggregate (round 17): everything
-    // past candidate generation is |q|·cands rows, so the k-step
-    // anti-join → join → join → groupBy → window → union loop (3
-    // exchanges per step, and a checkpointed pair matrix to keep it from
-    // re-deriving) collapses into one exchange on qid — relevance rows
-    // and pair rows union, group, and [[graft.functions.MmrGreedyAgg]]
-    // replays the exact integer selection (semantics spec-pinned, per-
-    // group state bounded by cands², MmrKernelSpec). ids ride as BIGINT
-    // — the cast is a no-op for the integral ids this operator serves.
-    val relRows = cand.select(col("qid").cast("long").as("qid"),
-      col("vec_id").cast("long").as("vec_id"), col("rel"),
-      lit(null).cast("long").as("id_b"), lit(null).cast("long").as("s"))
-    val pairRows = pairSim.select(col("qid").cast("long").as("qid"),
-      col("id_a").cast("long").as("vec_id"), lit(null).cast("long").as("rel"),
-      col("id_b").cast("long").as("id_b"), col("s"))
-    val traced = relRows.unionByName(pairRows)
-      .groupBy(col("qid"))
-      .agg(ColumnBridge.column(graft.functions.MmrGreedyAgg(
-        ColumnBridge.expression(col("vec_id")), ColumnBridge.expression(col("rel")),
-        ColumnBridge.expression(col("id_b")), ColumnBridge.expression(col("s")),
-        k, lam).toAggregateExpression()).as("trace"))
-    val out = Checkpoints.checkpoint(
-      traced.select(col("qid"), explode(col("trace")).as("tr"))
-        .select(col("qid"), col("tr.vec_id").as("vec_id"),
-          col("tr.sel_rank").as("sel_rank")))
-    Checkpoints.release(cand)
-    out
+    Checkpoints.scope() { s =>
+      val cand = s.checkpoint(scored
+        .withColumn("__r", row_number().over(wTop)).filter(col("__r") <= cands)
+        .drop("__r"))
+      // candidate-candidate similarity matrix (|q|·cands² tiny rows)
+      val cv = cand.join(e, "vec_id")
+      val ca = cv.select(col("qid"), col("vec_id").as("id_a"), col("v").as("va"))
+      val cb = cv.select(col("qid"), col("vec_id").as("id_b"), col("v").as("vb"))
+      val pairSim = ca.join(cb, "qid")
+        .filter(col("id_a") =!= col("id_b"))
+        .select(col("qid"), col("id_a"), col("id_b"),
+          round(cosine(col("va"), col("vb")) * 1e6).cast("long").as("s"))
+      // greedy trace in ONE bounded-state aggregate (round 17): everything
+      // past candidate generation is |q|·cands rows, so the k-step
+      // anti-join → join → join → groupBy → window → union loop (3
+      // exchanges per step, and a checkpointed pair matrix to keep it from
+      // re-deriving) collapses into one exchange on qid — relevance rows
+      // and pair rows union, group, and [[graft.functions.MmrGreedyAgg]]
+      // replays the exact integer selection (semantics spec-pinned, per-
+      // group state bounded by cands², MmrKernelSpec). ids ride as BIGINT
+      // — the cast is a no-op for the integral ids this operator serves.
+      val relRows = cand.select(col("qid").cast("long").as("qid"),
+        col("vec_id").cast("long").as("vec_id"), col("rel"),
+        lit(null).cast("long").as("id_b"), lit(null).cast("long").as("s"))
+      val pairRows = pairSim.select(col("qid").cast("long").as("qid"),
+        col("id_a").cast("long").as("vec_id"), lit(null).cast("long").as("rel"),
+        col("id_b").cast("long").as("id_b"), col("s"))
+      val traced = relRows.unionByName(pairRows)
+        .groupBy(col("qid"))
+        .agg(ColumnBridge.column(graft.functions.MmrGreedyAgg(
+          ColumnBridge.expression(col("vec_id")), ColumnBridge.expression(col("rel")),
+          ColumnBridge.expression(col("id_b")), ColumnBridge.expression(col("s")),
+          k, lam).toAggregateExpression()).as("trace"))
+      s.checkpoint(
+        traced.select(col("qid"), explode(col("trace")).as("tr"))
+          .select(col("qid"), col("tr.vec_id").as("vec_id"),
+            col("tr.sel_rank").as("sel_rank")))
+    }
   }
 
   // ------------------------------------------- random projection (JL)

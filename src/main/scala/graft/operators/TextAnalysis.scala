@@ -276,8 +276,9 @@ object TextAnalysis {
     * Round 17 (r16 verdict ask #1 — the shipped plan CHANGED): the
     * pre-r17 form fused the two passes by local-checkpointing the
     * per-(doc, gram) count frame and reading it from both sides. The
-    * TextPplDecompose stage measurement killed it: the checkpoint is
-    * the operator's entire scale term — 5.3/10.7/21.3 GB resident at
+    * stage measurement (SCALING.md, round 17, "text_ppl / ccnet LM
+    * core: the fused checkpoint WAS the scale term") killed it: the
+    * checkpoint is the operator's entire scale term — 5.3/10.7/21.3 GB resident at
     * ×128/×256/×512 (exactly linear — the single-JVM peak-state heap
     * class the r16 heap A/B flagged) and 22.6/73.6/135.5 s just to
     * materialize, while the model side is trivially FLAT (vocabulary
@@ -356,41 +357,40 @@ object TextAnalysis {
       val wordCnt = words.collect().map(r => (r.getString(0), r.getLong(1)))
       return bpeMergeLoopLocal(wordCnt, merges).toDF("merge_rank", "lhs", "rhs", "pair_count")
     }
-    var vocab = Checkpoints.checkpoint(
-      words.select(
-        concat(lit("  "), array_join(split(col("w"), ""), "  "), lit("  ")).as("toks"),
-        col("cnt")),
-      checkpointDir)
-    val learned = scala.collection.mutable.ArrayBuffer.empty[(Long, String, String, Long)]
-    var exhausted = false
-    for (i <- 1 to merges if !exhausted) {
-      val a = split(trim(col("toks")), "  ")
-      val best = vocab
-        .filter(size(a) >= 2)
-        .select(col("cnt"), explode(arrays_zip(
-          slice(a, lit(1), size(a) - 1).as("l"),
-          slice(a, lit(2), size(a) - 1).as("r"))).as("p"))
-        .groupBy(col("p.l").as("l"), col("p.r").as("r"))
-        .agg(sum(col("cnt")).as("pc"))
-        .orderBy(col("pc").desc, col("l").asc, col("r").asc)
-        .limit(1).collect()
-      if (best.isEmpty) exhausted = true
-      else {
-        val l = best(0).getString(0)
-        val r = best(0).getString(1)
-        val pc = best(0).getLong(2)
-        learned += ((i.toLong, l, r, pc))
-        val next = Checkpoints.checkpoint(
-          vocab.select(
-            replace(col("toks"), lit(s" $l  $r "), lit(s" $l$r ")).as("toks"),
-            col("cnt")),
-          checkpointDir)
-        Checkpoints.release(vocab)
-        vocab = next
+    Checkpoints.scope(checkpointDir) { s =>
+      var vocab = s.checkpoint(
+        words.select(
+          concat(lit("  "), array_join(split(col("w"), ""), "  "), lit("  ")).as("toks"),
+          col("cnt")))
+      val learned = scala.collection.mutable.ArrayBuffer.empty[(Long, String, String, Long)]
+      var exhausted = false
+      for (i <- 1 to merges if !exhausted) {
+        val a = split(trim(col("toks")), "  ")
+        val best = vocab
+          .filter(size(a) >= 2)
+          .select(col("cnt"), explode(arrays_zip(
+            slice(a, lit(1), size(a) - 1).as("l"),
+            slice(a, lit(2), size(a) - 1).as("r"))).as("p"))
+          .groupBy(col("p.l").as("l"), col("p.r").as("r"))
+          .agg(sum(col("cnt")).as("pc"))
+          .orderBy(col("pc").desc, col("l").asc, col("r").asc)
+          .limit(1).collect()
+        if (best.isEmpty) exhausted = true
+        else {
+          val l = best(0).getString(0)
+          val r = best(0).getString(1)
+          val pc = best(0).getLong(2)
+          learned += ((i.toLong, l, r, pc))
+          val next = s.checkpoint(
+            vocab.select(
+              replace(col("toks"), lit(s" $l  $r "), lit(s" $l$r ")).as("toks"),
+              col("cnt")))
+          s.release(vocab)
+          vocab = next
+        }
       }
+      learned.toSeq.toDF("merge_rank", "lhs", "rhs", "pair_count")
     }
-    Checkpoints.release(vocab)
-    learned.toSeq.toDF("merge_rank", "lhs", "rhs", "pair_count")
   }
 
   /** Spark's default string collation is BINARY = unsigned UTF-8 byte
@@ -693,14 +693,9 @@ object TextAnalysis {
     // partition, serializing the gram-sized work downstream; an explicit
     // count (REPARTITION_BY_NUM — AQE never coalesces it) fixes that
     // root cause. The count is scale-adaptive, not a local constant:
-    // the input's scan partitioning already reflects corpus bytes
-    // (maxPartitionBytes sizing), and the gram explode amplifies each
-    // doc's bytes only by the small factor n, so scan partitions floored
-    // by cluster parallelism keep per-task gram work bounded at any SF.
-    val spark = docs.sparkSession
-    val parts = math.max(spark.sparkContext.defaultParallelism,
-      docs.rdd.getNumPartitions)
-    val base = docs.select(col(id), text.as("__t")).repartition(parts, col(id))
+    // see [[scanPartitions]].
+    val base = docs.select(col(id), text.as("__t"))
+      .repartition(scanPartitions(docs), col(id))
     def gramCounts(n: Int) = base
       .select(col(id), explode(wordGrams(col("__t"), n)).as("g"))
       .groupBy(col(id), col("g")).agg(count(lit(1)).as("c"))
@@ -713,6 +708,22 @@ object TextAnalysis {
       .join(top, Seq(id), "left")
       .join(dup, Seq(id), "left")
       .na.fill(0L, Seq("top_chars", "dup_chars"))
+  }
+
+  /** Scan-sized partition count for a per-doc exchange over `docs`: its
+    * estimated bytes over `spark.sql.files.maxPartitionBytes`, floored by
+    * cluster parallelism. Read off plan statistics, so nothing executes
+    * (`docs.rdd.getNumPartitions` would run the caller's upstream
+    * shuffles here and again at the action). A join estimates the
+    * PRODUCT of its sides, so the bytes read by known-size leaves cap it. */
+  private[graft] def scanPartitions(docs: DataFrame): Int = {
+    val conf = docs.sparkSession.sessionState.conf
+    val plan = docs.queryExecution.optimizedPlan
+    val read = plan.collectLeaves().map(_.stats.sizeInBytes)
+      .filter(_ < conf.defaultSizeInBytes).sum
+    val bytes = plan.stats.sizeInBytes.min(read)
+    math.max(docs.sparkSession.sparkContext.defaultParallelism,
+      (bytes / conf.filesMaxPartitionBytes).min(Int.MaxValue).toInt)
   }
 
   // --------------------------------------------------- co-occurrence pairs

@@ -134,10 +134,10 @@ object NearDupStream {
 
   /** The stateless front half of [[nearDupPairs]] — shingle + minhash
     * once per doc, then explode to one `(bkey, doc_id, ts, event_time,
-    * sh)` row per band. Exposed for the scale harness's stage
-    * decomposition (graft.tools.StreamNearDupDecompose measures this
-    * projection, its bucket occupancy, and the stateful engine
-    * separately); production callers use [[nearDupPairs]]. */
+    * sh)` row per band. Split out so this projection, its bucket
+    * occupancy and the stateful engine can be measured separately
+    * (SCALING.md, "stream_neardup addendum (round 16)"); production
+    * callers use [[nearDupPairs]]. */
   private[graft] def bandedFrame(docs: DataFrame, id: String, tsCol: String,
                                  text: Column, n: Int,
                                  hashShingles: Boolean): DataFrame = {

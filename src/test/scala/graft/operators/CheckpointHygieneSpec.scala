@@ -135,4 +135,74 @@ class CheckpointHygieneSpec extends SparkTestBase {
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
     }
   }
+
+  // ------------------------------------------------ Checkpoints.scope
+
+  private val small = (1L to 20L).toDF("k")
+
+  test("scope: a body that throws after two checkpoints strands nothing") {
+    val before = persistedNow
+    intercept[IllegalStateException] {
+      Checkpoints.scope() { s =>
+        s.checkpoint(small)
+        s.checkpoint(small.select((col("k") * 2).as("k")))
+        throw new IllegalStateException("mid-operator failure")
+      }
+    }
+    assert((persistedNow -- before).isEmpty)
+  }
+
+  test("scope: keeps only the returned checkpoint; rejects a lazy frame over an owned one") {
+    val before = persistedNow
+    val out = Checkpoints.scope() { s =>
+      val a = s.checkpoint(small)
+      s.checkpoint(a.filter(col("k") > 10))
+    }
+    assert(out.count() == 10)
+    assert((persistedNow -- before).size == 1)
+    Checkpoints.release(out)
+    assert((persistedNow -- before).isEmpty)
+    val e = intercept[IllegalArgumentException] {
+      Checkpoints.scope() { s => s.checkpoint(small).filter(col("k") > 10) }
+    }
+    assert(e.getMessage.contains("reads a checkpoint the scope releases"))
+    assert((persistedNow -- before).isEmpty)
+  }
+
+  test("scope: an owned frame from another operator is released on exit") {
+    val before = persistedNow
+    val adopted = Checkpoints.checkpoint(small)
+    val out = Checkpoints.scope() { s =>
+      s.own(adopted)
+      small.filter(col("k") > 15) // reads no checkpoint
+    }
+    assert(out.count() == 5)
+    assert((persistedNow -- before).isEmpty)
+  }
+
+  // The registry leak sweep: every row that checkpoints, run at sf0.001.
+  // Whatever a row leaves persisted must be reachable from the returned
+  // frame's plan leaves (so the caller can release it), and releasing
+  // the frame must leave nothing behind.
+  private val checkpointingRows = Seq(
+    "dedup_minhash", "dedup_simhash", "dedup_clusters", "dedup_keep",
+    "pipeline_clean", "graph_pagerank", "graph_triangles", "graph_components",
+    "mm_phash_dedup", "mm_phash_keep", "mm_phash_keep_capped", "text_bpe_learn",
+    "curation_temperature", "curation_dsir", "rel_ntile", "rel_skyline", "sim_mmr")
+
+  test("registry leak sweep: checkpointing rows leave only what their frame reaches") {
+    for (row <- checkpointingRows) {
+      val before = persistedNow
+      val frame = graft.SparkEntry.queries(row)(spark, sfDir)
+      // snapshot the moment the row returns: getPersistentRDDs holds RDDs
+      // weakly, so a later GC could hide an unreachable stranded frame
+      val added = persistedNow -- before
+      val reachable = Checkpoints.leafRdds(frame).map(_.id).toSet
+      assert(added.subsetOf(reachable),
+        s"$row stranded ${(added -- reachable).size} persisted RDDs its frame cannot reach")
+      Checkpoints.release(frame)
+      assert((persistedNow -- before).isEmpty,
+        s"$row: release(frame) left ${(persistedNow -- before).size} persisted RDDs")
+    }
+  }
 }

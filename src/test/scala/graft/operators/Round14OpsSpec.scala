@@ -9,7 +9,6 @@ import org.apache.spark.sql.functions._
 class Round14OpsSpec extends SparkTestBase {
 
   import spark.implicits._
-  private implicit def sp: org.apache.spark.sql.SparkSession = spark
 
   private def docs = spark.read.parquet(s"$sfDir/documents.parquet")
 

@@ -174,8 +174,8 @@ class ScaleOpsSpec extends SparkTestBase {
 
   test("ngramScoreSelf == the retired fused (checkpointed) form — the r17 flip changed cost, not results") {
     // round 17 made the two-pass composition THE shipped ngramScoreSelf
-    // (TextPplDecompose: the fused form's corpus-scale checkpoint was
-    // its entire scale term). This pins the flip's no-result-change
+    // (SCALING.md, round 17 text_ppl section: the fused form's corpus-scale
+    // checkpoint was its entire scale term). This pins the flip's no-result-change
     // claim against the retired form, rebuilt inline as the strawman.
     val dg = graft.operators.Checkpoints.checkpoint(
       docs.select(col("doc_id"), explode(TextAnalysis.charGrams(col("text"), 3)).as("g"))
