@@ -1,7 +1,8 @@
 package graft
 import org.apache.spark.sql.SparkSession
 
-/** Benchmark main. Emits ONE JSON line with per-query wall times.
+/** Benchmark main. Prints a JSON line with per-query wall times, then a
+  * compact summary line LAST (the driver's contract; see [[summaryLine]]).
   *
   * Stability design (round 3): per-query times are only comparable across
   * rounds if (a) queries always run in the same order, and (b) the timed run
@@ -213,20 +214,26 @@ object Bench {
       if (sf == sfDir && qs.nonEmpty) Some(qs) else None
     }.takeRight(window).reverse
 
+  // Locale.ROOT: the default-locale f-interpolator would emit "62,000" on
+  // comma-decimal locales and corrupt the JSON line.
+  private def fmt(v: Double): String =
+    if (v < 0) "-1" else String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
+
+  /** The LAST stdout line, the driver's contract: a compact summary that
+    * fits its 2000-char tail capture at any query count (the full 214-entry
+    * map is about 6 KB). The per-query map is on the line before it and in
+    * `BENCH_DETAIL.json`. `n_queries` counts only the queries inside the
+    * total; failures (`-1` sentinels) are counted separately. */
+  def summaryLine(results: Seq[(String, Double)], sfDir: String): String = {
+    val ok = results.map(_._2).filter(_ >= 0)
+    val nFailed = results.size - ok.size
+    s"""{"metric":"total","value":${fmt(ok.sum)},"unit":"sec","n_queries":${ok.size},"n_failed":$nFailed,"sf":"$sfDir","detail_file":"BENCH_DETAIL.json"}"""
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.unionOutputPartitioning", "false") // Spark 4.1 union claim/exec mismatch; see Checkpoints.scala
-      .getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val spark = SparkEntry.driverSession(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // noop sink forces FULL evaluation of every output column — a bare
     // count() would let Catalyst prune the projected expressions and
@@ -287,9 +294,7 @@ object Bench {
     // dev loop: SPARK_GRAFT_ONLY=q1,q2 restricts the run (driver sets no
     // filter and benches everything) — same contract as Verify
     val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val ordered = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => only.forall(_.contains(name)) }
+    val ordered = SparkEntry.selected(only).map(q => q.name -> q.run)
     // per-query 1-min loadavg AT COMPLETION: when one ledger entry spikes
     // across rounds, this column answers "was the host busy right then"
     // without a judge re-measure (round-10 follow-up to the r9 adjudication)
@@ -422,10 +427,6 @@ object Bench {
     val medians = results.map { case (k, _) =>
       k -> medianOf(rawRuns.getOrElse(k, Vector.empty))
     }
-    // Locale.ROOT: the default-locale f-interpolator would emit "62,000" on
-    // comma-decimal locales and corrupt the JSON line.
-    def fmt(v: Double): String =
-      if (v < 0) "-1" else String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
     val total = results.map(_._2).filter(_ >= 0).sum
     val nFailed = results.count(_._2 < 0)
     val nOk = results.size - nFailed
@@ -440,8 +441,9 @@ object Bench {
       s""""host":{"loadavg_start":${fmt(loadStart)},"loadavg_end":${fmt(loadAvg())},"cpus":$nCpus,"other_java_procs_start":$javaProcsStart,"other_java_procs_end":${otherJavaProcs()},"contended":$contended,"contended_midrun":$contendedMidrun,"load_spikes_midrun":$loadSpikes,"reprobe_n":${reprobeNames.size},"reprobe_improved":$reprobeImproved,"reprobe2_n":${surviving2.size},"reprobe2_improved":$reprobe2Improved,"history_n":${prevLedger.size},"n_suspect":${suspects.size},"drift_window_n":${historyWindow.size},"n_drift":${drift.size}}"""
     // A SPARK_GRAFT_ONLY dev run writes a PARTIAL total; without a marker a
     // stale partial ledger is indistinguishable from a full run. Record the
-    // restriction list verbatim (empty field when unrestricted).
-    val onlyField = only.map(s => s""","only":[${s.toSeq.sorted.map(q => s"\"$q\"").mkString(",")}]""").getOrElse("")
+    // selected names (empty field when unrestricted).
+    val onlyField =
+      if (only.isEmpty) "" else ordered.map(q => s"\"${q._1}\"").mkString(""","only":[""", ",", "]")
     val loadDetail = loadAt.map { case (k, v) => s"\"$k\":${fmt(v)}" }
       .mkString("{", ",", "}")
     // re-probe bookkeeping: first-pass min vs end-of-run probe, per entry —
@@ -494,33 +496,13 @@ object Bench {
           java.nio.file.StandardCopyOption.ATOMIC_MOVE)
       } catch { case e: Throwable => System.err.println(s"[bench] history append failed: ${e.getMessage}") }
     }
-    // human-oriented stdout line: bounded to ~1500 chars (the slowest
-    // entries that fit; the rest are summarized). Kept for quick reading —
-    // the MACHINE line below is the driver's contract.
-    val budget = 1500
-    val bySlowest = results.filter(_._2 >= 0).sortBy(-_._2) ++ results.filter(_._2 < 0)
     // drift names ride the stdout line (bounded to 8 — the full detail
     // with evidence is in the detail file); an empty list is explicit
     val driftStdout = drift.take(8).map(s => s"\"$s\"").mkString("[", ",", "]")
-    val head = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n_queries":$nOk,"n_failed":$nFailed,$host$onlyField,"drift":$driftStdout,"sf":"$sfDir","detail_file":"BENCH_DETAIL.json","queries":{"""
-    val entries = scala.collection.mutable.ArrayBuffer.empty[String]
-    var len = head.length + 60 // reserve for closing braces + omitted field
-    for ((k, v) <- bySlowest) {
-      val e = s"\"$k\":${fmt(v)}"
-      if (len + e.length + 1 <= budget) { entries += e; len += e.length + 1 }
-    }
-    val omitted = results.size - entries.size
-    println(head + entries.mkString(",") + s"""},"queries_omitted":$omitted}""")
-    // Driver-parseable line, printed LAST (round 18, fixing the round-14
-    // truncation regression): the ~1500-char cap above dropped all but the
-    // ~39 slowest entries from stdout, and every BENCH_r*.json since r14
-    // parsed as null — the driver's per-query perf comparison ran empty
-    // for four rounds. The COMPLETE per-query map is ~6 KB for 214
-    // entries, well within a tail capture; it carries the full contract
-    // shape ({"metric","value","unit","queries","sf"}) so whichever line
-    // the driver's tail-parser picks up, the newest (last) one is the
-    // complete one. BENCH_DETAIL.json keeps the rich evidence fields.
-    println(s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n_queries":$nOk,"n_failed":$nFailed,$host$onlyField,"drift":$driftStdout,"sf":"$sfDir","detail_file":"BENCH_DETAIL.json","queries":$detail,"queries_omitted":0}""")
+    // the complete per-query map first, then the compact summary LAST —
+    // the line the driver's tail capture parses (see summaryLine)
+    println(s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n_queries":$nOk,"n_failed":$nFailed,$host$onlyField,"drift":$driftStdout,"sf":"$sfDir","detail_file":"BENCH_DETAIL.json","queries":$detail}""")
+    println(summaryLine(results, sfDir))
     spark.stop()
   }
 }

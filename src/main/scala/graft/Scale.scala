@@ -451,18 +451,9 @@ object Scale {
       if (queriesEnv.trim == "all") SparkEntry.queries.keys.toSeq.sorted
       else queriesEnv.split(",").map(_.trim).filter(_.nonEmpty).toSeq.sorted
     val regen = sys.env.get("SPARK_GRAFT_SCALE_REGEN").contains("1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
 
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.unionOutputPartitioning", "false") // Spark 4.1 union claim/exec mismatch; see Checkpoints.scala
+    val builder = SparkEntry.driverSession(cpus)
     if (!sys.env.get("SPARK_GRAFT_SCALE_GC").contains("explicit"))
       builder.config("spark.cleaner.periodicGC.interval", "30s")
     val spark = builder.getOrCreate()
@@ -548,7 +539,7 @@ object Scale {
     // a scaled-parameter variant that also receives the factor
     val fns: Map[String, (SparkSession, String, Int) => DataFrame] =
       entryFns.map { case (n, q) =>
-        n -> ((s: SparkSession, d: String, _: Int) => q(s, d))
+        n -> ((s: SparkSession, d: String, _: Int) => q.run(s, d))
       } ++ scaledQueries
     val missing = queryNames.filterNot(fns.contains)
     require(missing.isEmpty, s"unknown queries: ${missing.mkString(",")}")
@@ -587,7 +578,7 @@ object Scale {
       // dedup_substring gram join at ×32/32 partitions). AQE's partition
       // coalescing shrinks the excess at small factors, so over-providing
       // is safe in the same config.
-      val shufP = math.max(cpus.toInt, cpus.toInt * f / 4)
+      val shufP = math.max(cpus, cpus * f / 4)
       spark.conf.set("spark.sql.shuffle.partitions", shufP.toString)
       queryNames.foreach { name =>
         val sec =

@@ -3,25 +3,36 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Driver contract — see SURVEY.md §7 and the builder prompt.
+import graft.queries.{CurationQueries, DedupQueries, GraphQueries, JqQueries,
+  MmQueries, RelationalQueries, SimQueries, StreamQueries, TextQueries}
+
+/** One declared query: `run(spark, sfDir)` builds its Spark plan over the
+  * sf dir's parquet tables, and `oracleSql` is the equivalent DuckDB SQL
+  * the driver hash-compares its rows against on the same tables (views
+  * named after them). Column names are aliased identically on both sides —
+  * the driver sorts columns by name before hashing. */
+final case class Query(name: String, run: (SparkSession, String) => DataFrame, oracleSql: String)
+
+/** Driver contract — see SURVEY.md §7.
   *
-  * Every entry in [[queries]] is one operator/capability from SURVEY.md §2
-  * (or the beyond-parity layer, §7 step 7); [[oracleSql]] carries the
-  * equivalent DuckDB SQL the driver hash-compares against on the same
-  * parquet tables. Column names are aliased identically on both sides —
-  * the driver sorts columns by name before hashing.
+  * [[queries]] is the one catalogue of declared queries: each [[Query]] is
+  * one operator/capability from SURVEY.md §2 (or the beyond-parity layer,
+  * §7 step 7) and carries its plan and its oracle together. The entries
+  * live one file per family under `graft/queries/`, and the name prefix
+  * picks the file. This object keeps what several families share: the
+  * table scan, the sink dirs, the memos and the near-dup cluster helper.
   */
 object SparkEntry {
 
   /** Per-process unique ORC sink for rel_orc_roundtrip: concurrent
     * bench/verify runs on one host must not race on a shared path.
     * Removed on JVM exit; within the process `overwrite` keeps one copy. */
-  private lazy val orcSinkDir: String = sinkDir("orc")
-  private lazy val concatSinkDir: String = sinkDir("concat")
-  private lazy val csvSinkDir: String = sinkDir("csv")
-  private lazy val jsonSinkDir: String = sinkDir("json")
-  private lazy val partitionedSinkDir: String = sinkDir("partitioned")
-  private lazy val bucketedSinkDir: String = sinkDir("bucketed")
+  private[graft] lazy val orcSinkDir: String = sinkDir("orc")
+  private[graft] lazy val concatSinkDir: String = sinkDir("concat")
+  private[graft] lazy val csvSinkDir: String = sinkDir("csv")
+  private[graft] lazy val jsonSinkDir: String = sinkDir("json")
+  private[graft] lazy val partitionedSinkDir: String = sinkDir("partitioned")
+  private[graft] lazy val bucketedSinkDir: String = sinkDir("bucketed")
 
   private def sinkDir(kind: String): String = {
     val d = new java.io.File(System.getProperty("java.io.tmpdir"),
@@ -36,7 +47,7 @@ object SparkEntry {
     * DuckDB oracle re-derives the IDENTICAL assignment from the same
     * literals — Double.toString round-trips exactly through DuckDB's
     * decimal parser. */
-  private val SemCentroids: Seq[Seq[Double]] = Seq(
+  private[graft] val SemCentroids: Seq[Seq[Double]] = Seq(
     Seq.tabulate(64)(i => if (i % 2 == 0) 1.0 else 0.0),
     Seq.tabulate(64)(i => if (i % 2 == 1) 1.0 else 0.0),
     Seq.tabulate(64)(i => if (i % 4 < 2) 1.0 else -1.0),
@@ -64,7 +75,7 @@ object SparkEntry {
     new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
 
   /** One-time bucketed-layout build guard for rel_bucketed_join. */
-  private val bucketedTablesMemo =
+  private[graft] val bucketedTablesMemo =
     new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), java.lang.Boolean]()
 
   def table(spark: SparkSession, dir: String, name: String): DataFrame =
@@ -167,5478 +178,53 @@ object SparkEntry {
       .agg(count(lit(1)).as("n"), sum(col("k")).as("sum_k"))
   }
 
-  /** 3-level nested JSON document built from real event columns
-    * (`{"a":{"b":{"c":C}},"tags":[T,"zz"],"xs":[X,2X]}`). Keys are
-    * pre-sorted and values are ints / plain words, so simple string
-    * concatenation, the engine's canonical serializer, and DuckDB's JSON
-    * parser all agree on the byte form — which is what lets the nested
-    * oracles hash-compare canonical output. */
-  private def nestedDoc: org.apache.spark.sql.Column =
-    concat(
-      lit("{\"a\":{\"b\":{\"c\":"), col("event_id") % 100,
-      lit("}},\"tags\":[\""), col("event_type"), lit("\",\"zz\"],\"xs\":["),
-      col("user_id") % 50, lit(","), (col("user_id") % 50) * 2, lit("]}"))
-
-  /** DuckDB expression producing byte-identically the same document as
-    * [[nestedDoc]] (same key order, same integer formatting). */
-  private val NestedDocSql: String =
-    """'{"a":{"b":{"c":' || (event_id % 100) || '}},"tags":["' || event_type ||""" +
-      """ '","zz"],"xs":[' || (user_id % 50) || ',' || ((user_id % 50) * 2) || ']}'"""
-
-  /** Deterministic sparse citation graph on the documents table (3 LCG
-    * out-links per doc): the testdata carries no link column, so the
-    * graph operators' fixture is synthesized identically in both engines
-    * (same discipline as the crawl URLs). n_docs rides a broadcast
-    * one-row frame, never a driver constant. */
-  private def citationLinks(docs: DataFrame): DataFrame = {
-    val n = docs.agg(count(lit(1)).as("n_docs"))
-    docs.select(col("doc_id")).crossJoin(broadcast(n))
-      .select(col("doc_id"), col("n_docs"),
-        explode(array(lit(1L), lit(2L), lit(3L))).as("j"))
-      .select(col("doc_id").as("src"),
-        expr("((doc_id * 2654435761L + j * 40503L) % 1000003L) % n_docs").as("dst"))
-  }
-
   /** Connected components of `doc_id`s over a checkpointed pair frame
     * the query owns (a `minhashNearDups` result): nearDupClusters copies
     * the pairs into its own edge frame, so they release the moment it
     * returns and only the cluster labels stay persisted. */
-  private def nearDupClustersOf(ids: DataFrame, pairs: DataFrame): DataFrame =
+  private[graft] def nearDupClustersOf(ids: DataFrame, pairs: DataFrame): DataFrame =
     operators.Checkpoints.scope() { s =>
       operators.Dedup.nearDupClusters(ids, "doc_id", s.own(pairs))
     }
 
-  /** Corpus-level ANN oracle contract (round 17, r16 verdict ask #7).
-    *
-    * The pre-r17 per-qid booleans (`recall@5 ≥ cut` for every query)
-    * rested on a FIXTURE ARTIFACT: centroid/codebook seeds were the
-    * first K vectors by id, and the query set is `vec_id < 10` — the
-    * queries WERE the centroids, so per-query recall was privileged.
-    * De-biasing the seeds (hash-ordered pool + farthest-point/Lloyd,
-    * [[graft.operators.Similarity.seedSample]]) exposed the real
-    * per-query recall distribution of these small index configurations
-    * (16 cells / 4 probes): mins of 1–2, too variable to pin per qid
-    * without the cut going vacuous. The honest replacement is the
-    * corpus-level MACRO contract this helper computes — total hits
-    * against the exact top-5 across the 10 queries (macro recall@5),
-    * plus the self-hit count — each cut ~20% under the minimum measured
-    * at sf0.001/0.01/0.1 (AnnRecallProbe; per-row tables in the query
-    * comments). One row out: (recall_ok, self_ok). */
-  private def annAggContract(exact: DataFrame, ann: DataFrame,
-                             recallSumCut: Long, selfHitsCut: Long): DataFrame = {
-    val hits = exact.join(
-        ann.select(col("qid"), col("vec_id"), lit(1L).as("hit")),
-        Seq("qid", "vec_id"), "left")
-      .agg(sum(coalesce(col("hit"), lit(0L))).as("rsum"))
-    val self = ann.filter(col("rnk") === 1)
-      .agg(sum(when(col("vec_id") === col("qid"), 1L).otherwise(0L)).as("selfhits"))
-    hits.crossJoin(self).select(
-      (col("rsum") >= recallSumCut).as("recall_ok"),
-      (col("selfhits") >= selfHitsCut).as("self_ok"))
+  /** Every declared query by name, built once. */
+  lazy val queries: Map[String, Query] = registry(
+    JqQueries.all ++ RelationalQueries.all ++ CurationQueries.all ++
+      DedupQueries.all ++ SimQueries.all ++ TextQueries.all ++
+      MmQueries.all ++ StreamQueries.all ++ GraphQueries.all)
+
+  /** Keys `qs` by name. A repeated name throws: a map would silently keep
+    * the last one and shadow a green oracle row. */
+  def registry(qs: Seq[Query]): Map[String, Query] = {
+    val dups = qs.groupBy(_.name).collect { case (n, g) if g.size > 1 => n }
+    require(dups.isEmpty, s"duplicate query names: ${dups.toSeq.sorted.mkString(",")}")
+    qs.map(q => q.name -> q).toMap
   }
 
-  /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // identity: canonical re-serialization of the whole document (§2.2)
-    "jq_identity" -> ((s, dir) =>
-      table(s, dir, "events").select(
-        col("event_id"),
-        Jq.string(".", col("props")).as("doc"))),
-
-    // literals of every type (§2.3)
-    "jq_literals" -> ((s, dir) =>
-      table(s, dir, "events").select(
-        col("event_id"),
-        Jq.long("42", col("props")).as("i"),
-        Jq.double("10.2", col("props")).as("f"),
-        Jq.string("\"hi\"", col("props")).as("s"),
-        Jq.bool("true", col("props")).as("b"),
-        Jq.string("[1, 2]", col("props")).as("arr"),
-        Jq.string("{a: 1}", col("props")).as("obj"))),
-
-    // the §2.1 scan path itself (reference json.rs:123-160), driver-checked
-    // end-to-end: a whitespace-separated concatenated-JSON byte stream is
-    // synthesized from the nation table (three values per row — a
-    // PRETTY-PRINTED object whose value spans lines and whose keys arrive
-    // unsorted, an array, a bare literal — separated by mixed tabs/spaces/
-    // newlines), written to a per-process text sink, then scanned back with
-    // readConcatenated's incremental parse. The oracle reconstructs every
-    // expected canonical value (sorted keys, compact separators) straight
-    // off the table, so a parse/canonicalization drift anywhere in the
-    // stream breaks the hash.
-    "scan_concatenated" -> ((s, dir) => {
-      table(s, dir, "nation")
-        .select(concat(
-          lit("{\n  \"name\": \""), col("n_name"), lit("\",\n  \"k\": "),
-          col("n_nationkey").cast("string"), lit("\n}\t [ "),
-          col("n_nationkey").cast("string"), lit(", \"x\" ]\n  true")
-        ).as("value"))
-        .write.mode("overwrite").text(concatSinkDir)
-      sources.JsonDocs.readConcatenated(s, concatSinkDir)
-        .select(col("doc"), col("error"))
-    }),
-
-    // the InputMem analogue (§2.1, reference input_mem.rs:4-46): an
-    // in-memory document vector fed through the same parse+canonicalize
-    // contract the file scans use. The corpus is literal (that is what an
-    // in-memory source is for), chosen to pin re-ordering of unsorted
-    // keys, nesting, negative ints, unicode pass-through, and bare
-    // scalars; the oracle states the expected canonical text verbatim.
-    "scan_mem" -> ((s, dir) => {
-      val raws = Seq(
-        """ {"b": 1, "a": [1, "x", true]} """,
-        """[ -2, {"z": null} ]""",
-        "\"café strings\"",
-        "42",
-        "null")
-      sources.JsonDocs.fromStrings(s, raws)
-        .select(element_at(Jq.docs(".", col("doc")), 1).as("doc"))
-    }),
-
-    // §2.1 CLI `q` — the one §2 item that had no driver-checked row
-    // (round-10 verdict residual). This drives the ACTUAL CLI entry:
-    // args → parse → scan → compile → toLocalIterator stream, via
-    // Cli.execute (the code path main wraps with a process boundary).
-    // The input file is built from the nation table (25 rows, bounded
-    // driver material) so DuckDB can derive the same lines.
-    "cli_q" -> ((s, dir) => {
-      import s.implicits._
-      val lines = table(s, dir, "nation")
-        .select(concat(lit("{\"k\":"), col("n_nationkey"),
-          lit(",\"name\":\""), col("n_name"), lit("\"}")).as("j"))
-        .collect().map(_.getString(0))
-      val f = java.nio.file.Files.createTempFile("graft_cli_q", ".jsonl")
-      try {
-        java.nio.file.Files.write(f, lines.mkString("\n")
-          .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        val outLines = scala.collection.mutable.ArrayBuffer.empty[String]
-        val errLines = scala.collection.mutable.ArrayBuffer.empty[String]
-        val code = Cli.execute(s, Array(".name", f.toString),
-          outLines += _, errLines += _)
-        require(code == 0 && errLines.isEmpty,
-          s"cli_q: exit=$code errors=${errLines.take(3)}")
-        outLines.toSeq.toDF("doc")
-      } finally java.nio.file.Files.deleteIfExists(f)
-    }),
-
-    // --- jq core: navigation (§2.2) -------------------------------------
-    "jq_index" -> ((s, dir) =>
-      table(s, dir, "events").select(
-        col("event_id"),
-        Jq.long(".k", col("props")).as("k"))),
-
-    // pipe + object construction + index (§2.2, §2.3)
-    "jq_pipe_construct" -> ((s, dir) =>
-      table(s, dir, "events").select(
-        col("event_id"),
-        Jq.long("{id: .k} | .id", col("props")).as("id"))),
-
-    // arithmetic on documents (§2.4)
-    "jq_arith" -> ((s, dir) =>
-      table(s, dir, "events").select(
-        col("event_id"),
-        Jq.long(".k * 2 + 1", col("props")).as("v"))),
-
-    // comparison + logic predicates (§2.5)
-    "jq_predicate" -> ((s, dir) =>
-      table(s, dir, "events").select(
-        col("event_id"),
-        Jq.bool(".k > 20 && .k <= 80", col("props")).as("mid"))),
-
-    // list construction + iteration + explode (§2.2, §2.3)
-    "jq_explode" -> ((s, dir) => {
-      val ev = table(s, dir, "events")
-      Jq.explodeDocs(ev, "[.k, .k * 10] | .[]", col("props"), "v_doc")
-        .select(col("event_id"), col("v_doc").cast("bigint").as("v"))
-    }),
-
-    // builtin map over list (§2.6) — [.k] | map(.+1) | .[0]
-    "jq_map_builtin" -> ((s, dir) =>
-      table(s, dir, "events").select(
-        col("event_id"),
-        Jq.long("[.k] | map(. + 1) | .[0]", col("props")).as("v"))),
-
-    // builtin in() membership (§2.6)
-    "jq_in_builtin" -> ((s, dir) =>
-      table(s, dir, "events").select(
-        col("event_id"),
-        Jq.bool(".k | in([5, 23, 42, 69])", col("props")).as("hit"))),
-
-    // recurse `..` over a constructed array document (§2.2)
-    "jq_recurse" -> ((s, dir) =>
-      table(s, dir, "events")
-        .select(col("event_id"),
-          concat(lit("["), col("event_id") % 7, lit(","), (col("event_id") % 7) * 2, lit("]")).as("doc"))
-        .select(col("event_id"), explode(Jq.docs("..", col("doc"))).as("v"))),
-
-    // string slice over a document built from the documents table (§2.2)
-    "jq_slice_str" -> ((s, dir) =>
-      table(s, dir, "documents").select(
-        col("doc_id"),
-        Jq.string(".text | .[0..16]", struct(col("text"))).as("prefix"))),
-
-    // string split (div) + length builtin: token count (§2.4, §2.6)
-    "jq_tokens" -> ((s, dir) =>
-      table(s, dir, "documents").select(
-        col("doc_id"),
-        Jq.long(""".text / " " | length""", struct(col("text"))).as("n_tokens"))),
-
-    // byte-length semantics of length (§2.6)
-    "jq_strlen" -> ((s, dir) =>
-      table(s, dir, "documents").select(
-        col("doc_id"),
-        Jq.long(".text | length", struct(col("text"))).as("n_bytes"))),
-
-    // `?` error suppression: missing key yields SQL NULL (§2.7)
-    "jq_opt_suppress" -> ((s, dir) =>
-      table(s, dir, "events").select(
-        col("event_id"),
-        Jq.long(".missing? | length", col("props")).as("v"))),
-
-    // array subtraction (single-occurrence removal) + integer rem (§2.4)
-    "jq_sub_rem" -> ((s, dir) =>
-      table(s, dir, "events")
-        .select(col("event_id"), Jq.multi(Seq(("after_sub", "[5, .k, 5] - [5] | length", "long"), ("k_mod", ".k % 7", "long")), col("props")).as("m"))
-        .select(col("event_id"), col("m.after_sub"), col("m.k_mod"))),
-
-    // unary neg / truthiness not (§2.4, §2.5)
-    "jq_neg_not" -> ((s, dir) =>
-      table(s, dir, "events")
-        .select(col("event_id"), Jq.multi(Seq(("neg_k", "-.k", "long"), ("not_gt", "!(.k > 50)", "bool")), col("props")).as("m"))
-        .select(col("event_id"), col("m.neg_k"), col("m.not_gt"))),
-
-    // equality / inequality / ordered comparisons (§2.5)
-    "jq_compare" -> ((s, dir) =>
-      table(s, dir, "events")
-        .select(col("event_id"), Jq.multi(Seq(("is42", ".k == 42", "bool"), ("not42", ".k != 42", "bool"), ("le50", ".k <= 50", "bool"), ("ge50", ".k >= 50", "bool")), col("props")).as("m"))
-        .select(col("event_id"), col("m.is42"), col("m.not42"), col("m.le50"), col("m.ge50"))),
-
-    // shifts and bitwise ops (§2.4)
-    "jq_bitops" -> ((s, dir) =>
-      table(s, dir, "events")
-        .select(col("event_id"), Jq.multi(Seq(("band", ".k & 12", "long"), ("bor_", ".k bor 5", "long"), ("bxor", ".k ^ 3", "long"), ("shl", ".k << 2", "long"), ("shr", ".k >> 1", "long")), col("props")).as("m"))
-        .select(col("event_id"), col("m.band"), col("m.bor_"), col("m.bxor"), col("m.shl"), col("m.shr"))),
-
-    // exact wide integers past ±2^63 (reference json.rs:469 Integer(i128),
-    // parse at json.rs:234): a wide literal promotes the arithmetic to the
-    // exact JBigInt path, round-trips byte-exactly through parse/serialize,
-    // and re-enters long range losslessly. Wide results travel as their
-    // canonical STRINGS (Spark BIGINT cannot carry them); the oracle
-    // replays the arithmetic in DuckDB HUGEINT (int128, the reference's
-    // own width).
-    "jq_bigint" -> ((s, dir) =>
-      table(s, dir, "events")
-        .select(col("event_id"), Jq.multi(Seq(
-          ("wide_add", ".k + 18446744073709551615 | tostring", "string"),
-          ("wide_mul", ".k * 18446744073709551616 | tostring", "string"),
-          ("wide_lit", "\"{\\\"big\\\":18446744073709551616}\" | fromjson | .big | tostring", "string"),
-          // full i128 width (reference json.rs:469): the 39-digit domain
-          // bounds round-trip exactly, and 39-digit arithmetic inside the
-          // range stays exact — DuckDB HUGEINT replays the identical i128
-          ("i128_max", "170141183460469231731687303715884105727 | tostring", "string"),
-          ("i128_min", "\"-170141183460469231731687303715884105728\" | fromjson | tostring", "string"),
-          ("wide39_add", ".k + 170141183460469231731687303715884105000 | tostring", "string"),
-          ("back_in_range", ".k + 18446744073709551615 - 18446744073709551615", "long")),
-          col("props")).as("m"))
-        .select(col("event_id"), col("m.wide_add"), col("m.wide_mul"),
-          col("m.wide_lit"), col("m.i128_max"), col("m.i128_min"),
-          col("m.wide39_add"), col("m.back_in_range"))),
-
-    // the lineage meta envelope END-TO-END (reference meta.rs:63-74,
-    // entry.rs:5-28): each record is seeded with the provenance envelope a
-    // reference source would attach (two sources + a domain, derived from
-    // event_id so the oracle re-derives them), then a COMBINING operator
-    // (`+`, Entry::new_merged) runs — its fresh Meta::new() envelope
-    // merges the input's lists (list ++ list append through Meta::append),
-    // and the final envelope travels back as canonical text the oracle
-    // reconstructs verbatim.
-    "jq_meta_lineage" -> ((s, dir) => {
-      val withMeta = table(s, dir, "events").select(
-        col("event_id"), col("props"),
-        concat(lit("{\"sources\":[\"events/"), (col("event_id") % 4).cast("string"),
-          lit("\",\"raw/"), (col("event_id") % 4).cast("string"),
-          lit("\"],\"domains\":[\"d"), (col("event_id") % 3).cast("string"),
-          lit("\"]}")).as("meta_in"))
-      withMeta
-        .select(col("event_id"),
-          element_at(Jq.evalWithMeta(".k + 1", col("props"), col("meta_in")), 1).as("o"))
-        .select(col("event_id"), col("o.doc").as("doc"), col("o.meta").as("meta"))
-    }),
-
-    // logical and/or over truthiness (§2.5)
-    "jq_logic" -> ((s, dir) =>
-      table(s, dir, "events")
-        .select(col("event_id"), Jq.multi(Seq(("both", ".k > 20 && .k < 80", "bool"), ("either", ".k < 10 || .k > 90", "bool")), col("props")).as("m"))
-        .select(col("event_id"), col("m.both"), col("m.either"))),
-
-    // keys/has builtins (§2.6) — has() membership is data-dependent
-    "jq_keys_has" -> ((s, dir) =>
-      table(s, dir, "events")
-        .select(col("event_id"), Jq.multi(Seq(("first_key", "{a: .k, b: 2} | keys | .[0]", "string"), ("has42", "[.k] | has(42)", "bool")), col("props")).as("m"))
-        .select(col("event_id"), col("m.first_key"), col("m.has42"))),
-
-    // chars builtin: Unicode code points (§2.6)
-    "jq_chars" -> ((s, dir) =>
-      table(s, dir, "documents")
-        .select(col("doc_id"), Jq.multi(Seq(("first_cp", ".text | chars | .[0]", "long"), ("n_chars", ".text | chars | length", "long")), struct(col("text"))).as("m"))
-        .select(col("doc_id"), col("m.first_cp"), col("m.n_chars"))),
-
-    // any/all builtins (§2.6)
-    "jq_anyall" -> ((s, dir) =>
-      table(s, dir, "events")
-        .select(col("event_id"), Jq.multi(Seq(("any_gt", "[.k] | any(. > 50)", "bool"), ("all_ge", "[.k, 100] | all(. >= 10)", "bool")), col("props")).as("m"))
-        .select(col("event_id"), col("m.any_gt"), col("m.all_ge"))),
-
-    // array slices incl. negative index (§2.2)
-    "jq_slice_arr" -> ((s, dir) =>
-      table(s, dir, "events")
-        .select(col("event_id"), Jq.multi(Seq(("second", "[.k, .k+1, .k+2, .k+3] | .[1..3] | .[0]", "long"), ("last", "[.k, .k+1, .k+2, .k+3] | .[-1]", "long")), col("props")).as("m"))
-        .select(col("event_id"), col("m.second"), col("m.last"))),
-
-    // dict construction with multi-valued value stream: cartesian fan-out (§2.3)
-    "jq_dict_fanout" -> ((s, dir) => {
-      val ev = table(s, dir, "events")
-      Jq.explodeDocs(ev, "{v: [.k, .k * 3] | .[]} | .v", col("props"), "v_doc")
-        .select(col("event_id"), col("v_doc").cast("bigint").as("v"))
-    }),
-
-    // iterate over several identifiers: round-robin streams (§2.2)
-    "jq_iterate_multi" -> ((s, dir) => {
-      val li = table(s, dir, "lineitem")
-        .select(col("l_orderkey"), col("l_linenumber"),
-          struct(col("l_quantity"), col("l_discount")).as("doc"))
-      Jq.explodeDocs(li, ".[l_quantity, l_discount]", col("doc"), "v_doc")
-        .select(col("l_orderkey"), col("l_linenumber"), col("v_doc").cast("double").as("v"))
-    }),
-
-    // string ops: repeat (mul), split + first token (§2.4)
-    "jq_string_ops" -> ((s, dir) =>
-      table(s, dir, "documents").select(
-        col("doc_id"),
-        Jq.string("""("ab" * 2) + "!"""", struct(col("text"))).as("rep"),
-        Jq.string(""".text / " " | .[0]""", struct(col("text"))).as("first_tok"))),
-
-    // EXTENSION builtins: jq's everyday vocabulary (type/add/sort/min/max/
-    // unique/reverse/join/tostring/tonumber/floor/sqrt/abs)
-    "jq_ext_builtins" -> ((s, dir) =>
-      table(s, dir, "events")
-        .select(col("event_id"), Jq.multi(Seq(
-          ("sorted", "[.k + 10, 2, 1] | sort", "string"),
-          ("total", "[.k, 1, 2] | add", "long"),
-          ("mx", "[.k, 50] | max", "long"),
-          ("mn", "[.k, 50] | min", "long"),
-          ("uniq_n", "[.k, .k, 1] | unique | length", "long"),
-          ("rev0", "[1, 2, .k] | reverse | .[0]", "long"),
-          ("joined", """["a", .k | tostring] | join("-")""", "string"),
-          ("fl", ".k | sqrt | floor", "double"),
-          ("ab", "0 - .k | abs", "long"),
-          ("has4", """.k | tostring | test("4")""", "bool")), col("props")).as("m"))
-        .select(col("event_id"), col("m.sorted"), col("m.total"), col("m.mx"),
-          col("m.mn"), col("m.uniq_n"), col("m.rev0"), col("m.joined"),
-          col("m.fl"), col("m.ab"), col("m.has4"))),
-
-    // errors-as-data through the ORACLE GATE: deterministically corrupt
-    // every 13th document (truncate the closing byte) and show the
-    // malformation arrives as a per-row error value — rows keep flowing,
-    // no task ever fails (the reference's Entry.op.errors contract,
-    // src/entry.rs:31; at 100 TB corrupt inputs are a certainty)
-    "jq_errors_as_data" -> ((s, dir) => {
-      val corrupted = when(pmod(col("event_id"), lit(13)) === 0,
-        expr("substring(props, 1, length(props) - 1)")).otherwise(col("props"))
-      table(s, dir, "events").select(
-        col("event_id"),
-        Jq.query(".k", corrupted).as("entries"))
-        .select(
-          col("event_id"),
-          size(col("entries")).cast("long").as("n_entries"),
-          (size(element_at(col("entries"), 1).getField("errors")) > 0).as("errored"))
-    }),
-
-    // EXTENSION: round-5 builtin batch — type filters (select-shaped),
-    // utf8bytelength, combinations, with_entries, and the math family
-    // (only EXACT cases are oracled: integer powers, Math.log10's 10^n
-    // contract; transcendental outputs stay conformance-only)
-    "jq_misc_builtins" -> ((s, dir) =>
-      table(s, dir, "events")
-        .select(col("event_id"), Jq.multi(Seq(
-          ("nums", """[.k, "s", null] | [.[] | numbers] | add""", "long"),
-          ("scal", """[.k, [1], {"a":2}, null] | [.[] | scalars] | length""", "long"),
-          ("byte_len", ".k | tostring | utf8bytelength", "long"),
-          ("combos", "[[.k, 1], [2, 3]] | [combinations | add] | add", "long"),
-          ("wentries", "{a: .k} | with_entries(.value |= . + 1) | .a", "long"),
-          ("p2", "pow(2, 10)", "double"),
-          ("t", ".k + 0.5 | trunc", "double"),
-          ("l10", "pow(10, 3) | log10", "double"),
-          ("fa", ".k - 200 | fabs", "double")), col("props")).as("m"))
-        .select(col("event_id"), col("m.nums"), col("m.scal"), col("m.byte_len"),
-          col("m.combos"), col("m.wentries"), col("m.p2"), col("m.t"),
-          col("m.l10"), col("m.fa"))),
-
-    // EXTENSION: control flow — if/then/elif/else/end and the //
-    // alternative operator
-    "jq_ifelse" -> ((s, dir) =>
-      table(s, dir, "events")
-        .select(col("event_id"), Jq.multi(Seq(
-          ("branched", "if .k > 50 then .k else 0 - .k end", "long"),
-          ("tiered", """if .k > 80 then "hi" elif .k > 40 then "mid" else "lo" end""", "string"),
-          ("alt", ".missing // .k", "long")), col("props")).as("m"))
-        .select(col("event_id"), col("m.branched"), col("m.tiered"), col("m.alt"))),
-
-    // EXTENSION: select — the jq filter primitive; rows fan out only for
-    // documents whose predicate holds
-    "jq_select" -> ((s, dir) => {
-      val ev = table(s, dir, "events")
-      Jq.explodeDocs(ev, "select(.k > 50) | .k", col("props"), "v_doc")
-        .select(col("event_id"), col("v_doc").cast("bigint").as("k"))
-    }),
-
-    // EXTENSION: jq assignment/update operators (`=`, `|=`) — static-path
-    // writes, the expression-language companion to json_patch
-    "jq_assign" -> ((s, dir) =>
-      table(s, dir, "events").select(
-        col("event_id"),
-        Jq.string(".k = .k * 2", col("props")).as("doubled"),
-        Jq.long(".k |= . + 1 | .k", col("props")).as("bumped"))),
-
-    // RFC 6902 patch over the props documents (reference README goal 4)
-    "jq_patch" -> ((s, dir) =>
-      table(s, dir, "events")
-        .select(col("event_id"), col("props"), Jq.long(".k", col("props")).as("k"))
-        .select(
-          col("event_id"),
-          Jq.jsonPatch(col("props"),
-            concat(lit("[{\"op\":\"replace\",\"path\":\"/k\",\"value\":"),
-              col("k") * 2, lit("}]"))).as("patched"),
-          Jq.jsonPatch(col("props"),
-            lit("[{\"op\":\"test\",\"path\":\"/k\",\"value\":42}]")).as("tested"))),
-
-    // CBOR second-codec round trip (reference README goals: a second
-    // Document implementation): props → CBOR bytes → canonical JSON;
-    // the oracle pins the same canonical text the JSON path produces
-    "cbor_roundtrip" -> ((s, dir) =>
-      table(s, dir, "events").select(
-        col("event_id"),
-        Jq.fromCbor(Jq.toCbor(col("props"))).as("doc"))),
-
-    // MessagePack third codec round trip, same oracle shape
-    "msgpack_roundtrip" -> ((s, dir) =>
-      table(s, dir, "events").select(
-        col("event_id"),
-        Jq.fromMsgPack(Jq.toMsgPack(col("props"))).as("doc"))),
-
-    // MVCC snapshot merge (reference goals (5)-(6)): per-key latest
-    // version across base ∪ changes, one key shuffle
-    "rel_upsert" -> ((s, dir) => {
-      val orders = table(s, dir, "orders")
-      val base = orders.select(col("o_orderkey"), col("o_totalprice").as("price"))
-        .withColumn("__v", lit(1L))
-      val changes = orders.filter(col("o_orderkey") % 10 === 0)
-        .select(col("o_orderkey"), (col("o_totalprice") * 2).as("price"))
-        .withColumn("__v", lit(2L))
-      operators.Relational.upsert(base, changes, Seq(col("o_orderkey")), col("__v"))
-        .select(col("o_orderkey"), col("price"))
-    }),
-
-    // README goals (6)-(7) storage mapping, persisted: the upsert snapshot
-    // written as a BUCKETED table (the disk-b-tree/bucket-index analogue)
-    // and read back co-bucketed with a bucketed fact table. The merge-
-    // hinted join then plans with ZERO exchange on either side — the
-    // one-time layout cost that replaces every successive snapshot⋈fact
-    // shuffle at 100 TB (plan evidence: BucketingSpec + PLANS.md).
-    "rel_bucketed_join" -> ((s, dir) => {
-      // the bucketed LAYOUT is write-once/join-many by definition — build
-      // it once per (session, input dir); every run (and every successive
-      // snapshot⋈fact join in production) then measures the zero-exchange
-      // merge join the layout exists to provide. Table names and paths
-      // are DIR-SCOPED: a global singleton would hand a revisited dir
-      // another dir's data on a memo hit
-      val tag = java.lang.Long.toHexString(
-        org.apache.spark.unsafe.types.UTF8String.fromString(dir).hashCode().toLong & 0xffffffffL)
-      val (snapT, liT) = (s"graft_snap_b_$tag", s"graft_li_b_$tag")
-      bucketedTablesMemo.computeIfAbsent(
-        (s, dir), _ => {
-          val orders = table(s, dir, "orders")
-          val base = orders
-            .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice").as("price"))
-            .withColumn("__v", lit(1L))
-          val changes = orders.filter(col("o_orderkey") % 10 === 0)
-            .select(col("o_orderkey"), col("o_orderstatus"), (col("o_totalprice") * 2).as("price"))
-            .withColumn("__v", lit(2L))
-          val snap = operators.Relational.upsert(base, changes, Seq(col("o_orderkey")), col("__v"))
-            .select(col("o_orderkey"), col("o_orderstatus"), col("price"))
-          // filesystem paths fold the pid in (via bucketedSinkDir): two
-          // concurrent JVMs on the same data dir must not rebuild and
-          // overwrite each other's bucketed files mid-scan. The table
-          // NAMES stay dir-scoped only — the catalog is session-local.
-          snap.write.bucketBy(8, "o_orderkey").sortBy("o_orderkey")
-            .option("path", s"$bucketedSinkDir/snap_b_$tag").mode("overwrite")
-            .saveAsTable(snapT)
-          table(s, dir, "lineitem").select(col("l_orderkey"), col("l_quantity"))
-            .write.bucketBy(8, "l_orderkey").sortBy("l_orderkey")
-            .option("path", s"$bucketedSinkDir/li_b_$tag").mode("overwrite")
-            .saveAsTable(liT)
-          java.lang.Boolean.TRUE
-        })
-      s.table(snapT).hint("merge")
-        .join(s.table(liT), col("o_orderkey") === col("l_orderkey"))
-        .groupBy(col("o_orderstatus"))
-        .agg(count(lit(1)).as("n_lines"),
-          sum(col("price").cast("decimal(18,2)")).as("sum_price"))
-        .select(col("o_orderstatus"), col("n_lines"),
-          col("sum_price").cast("double").as("sum_price"))
-    }),
-
-    // time-series resample + gap fill: hourly grid per event type with
-    // zero-filled counts and last-observation-carried-forward values —
-    // one keyed aggregate + one per-key fill window; the grid size is
-    // keys × span, independent of input volume
-    "rel_resample" -> ((s, dir) =>
-      operators.Relational.resampleLocf(table(s, dir, "events"),
-          col("event_type"), expr("ts DIV 1000"), col("value"),
-          stepMicros = 3600L * 1000000L)
-        .select(col("k").as("event_type"), col("b").as("hour_bucket"),
-          col("n"), col("v_filled"))),
-
-    // columnar-format interchange: parquet → ORC → read-back, with a
-    // content-sensitive aggregate (rolling fingerprints) proving the
-    // typed round-trip is lossless — the oracle computes the same
-    // aggregate straight off the parquet, so any ORC write/read
-    // corruption (encoding, nulls, unicode) breaks the hash. The sink
-    // is a PER-PROCESS unique dir (round-6 ADVICE: concurrent bench /
-    // verify runs on one host raced on a shared /tmp path); overwrite
-    // keeps one copy within the process, the JVM exit hook removes it
-    "rel_orc_roundtrip" -> ((s, dir) => {
-      val docs = table(s, dir, "documents")
-        .select(col("doc_id"), col("text"), col("lang"), col("n_chars"))
-      docs.write.mode("overwrite").orc(orcSinkDir)
-      s.read.orc(orcSinkDir)
-        .groupBy(col("lang"))
-        .agg(count(lit(1)).as("n"), sum(col("n_chars")).as("sum_chars"),
-          sum(operators.TextAnalysis.fingerprint(col("text"))).as("sum_fp"),
-          min(col("doc_id")).as("min_id"), max(col("doc_id")).as("max_id"))
-    }),
-
-    // text-format interchange: parquet → CSV (RFC 4180 ""-escaping,
-    // multiLine read) → read-back with the same content-sensitive
-    // fingerprint aggregate as the ORC roundtrip — quoting, embedded
-    // quotes/commas/newlines and unicode all have to survive the text
-    // round trip for the hash to match. Trim options OFF on write:
-    // Spark's defaults would silently strip leading/trailing spaces
-    "rel_csv_roundtrip" -> ((s, dir) => {
-      val docs = table(s, dir, "documents")
-        .select(col("doc_id"), col("text"), col("lang"), col("n_chars"))
-      docs.write.mode("overwrite")
-        .option("header", "true").option("escape", "\"")
-        .option("ignoreLeadingWhiteSpace", "false")
-        .option("ignoreTrailingWhiteSpace", "false")
-        .csv(csvSinkDir)
-      s.read.schema("doc_id BIGINT, text STRING, lang STRING, n_chars BIGINT")
-        .option("header", "true").option("escape", "\"")
-        .option("multiLine", "true")
-        .csv(csvSinkDir)
-        .groupBy(col("lang"))
-        .agg(count(lit(1)).as("n"), sum(col("n_chars")).as("sum_chars"),
-          sum(operators.TextAnalysis.fingerprint(col("text"))).as("sum_fp"),
-          min(col("doc_id")).as("min_id"), max(col("doc_id")).as("max_id"))
-    }),
-
-    // document-format interchange: parquet → canonical JSONL (Spark's
-    // native json sink — the reference's own document format) →
-    // schema'd read-back, same content-sensitive fingerprint aggregate
-    // as the ORC/CSV roundtrips: escaping, unicode, and the typed
-    // re-parse all have to survive for the hash to match
-    "rel_json_roundtrip" -> ((s, dir) => {
-      val docs = table(s, dir, "documents")
-        .select(col("doc_id"), col("text"), col("lang"), col("n_chars"))
-      docs.write.mode("overwrite").json(jsonSinkDir)
-      s.read.schema("doc_id BIGINT, text STRING, lang STRING, n_chars BIGINT")
-        .json(jsonSinkDir)
-        .groupBy(col("lang"))
-        .agg(count(lit(1)).as("n"), sum(col("n_chars")).as("sum_chars"),
-          sum(operators.TextAnalysis.fingerprint(col("text"))).as("sum_fp"),
-          min(col("doc_id")).as("min_id"), max(col("doc_id")).as("max_id"))
-    }),
-
-    // TPC-H Q3 (shipping priority): the canonical dim-filter → fact-join
-    // → top-k aggregate — customer dim BROADCAST, orders⋈lineitem on the
-    // shared orderkey shuffle, revenue summed in exact DECIMAL, top-10
-    // via TakeOrderedAndProject (never a full sort)
-    "rel_tpch_q3" -> ((s, dir) => {
-      val cutoff = lit("1998-07-01 00:00:00").cast("timestamp")
-      val c = table(s, dir, "customer")
-        .filter(col("c_mktsegment") === "BUILDING").select(col("c_custkey"))
-      val o = table(s, dir, "orders").filter(col("o_orderdate") < cutoff)
-        .select(col("o_orderkey"), col("o_custkey"), col("o_orderdate"),
-          col("o_orderpriority"))
-      val l = table(s, dir, "lineitem").filter(col("l_shipdate") > cutoff)
-        .select(col("l_orderkey"),
-          (col("l_extendedprice").cast("decimal(18,2)") *
-            (lit(1.0).cast("decimal(18,2)") - col("l_discount").cast("decimal(18,2)")))
-            .as("rev")) // decimal-first: see rel_tpch_q5
-      o.join(broadcast(c), col("o_custkey") === col("c_custkey"))
-        .join(l, col("o_orderkey") === col("l_orderkey"))
-        .groupBy(col("o_orderkey"), col("o_orderdate"), col("o_orderpriority"))
-        .agg(sum(col("rev")).cast("double").as("revenue"))
-        .orderBy(col("revenue").desc, col("o_orderkey").asc).limit(10)
-    }),
-
-    // TPC-H Q18 (large-volume customers): aggregate-HAVING as the join
-    // prefilter — the qty rollup keyed on the same orderkey the join
-    // needs, so the HAVING output (tiny) drives the probe; customer dim
-    // broadcast, top-20 TakeOrdered
-    "rel_tpch_q18" -> ((s, dir) => {
-      val big = table(s, dir, "lineitem")
-        .groupBy(col("l_orderkey"))
-        .agg(sum(col("l_quantity").cast("decimal(18,2)")).as("sum_qty"))
-        .filter(col("sum_qty") > 250)
-      val o = table(s, dir, "orders")
-        .select(col("o_orderkey"), col("o_custkey"), col("o_orderdate"),
-          col("o_totalprice"))
-      val c = table(s, dir, "customer").select(col("c_custkey"), col("c_name"))
-      o.join(big, col("o_orderkey") === col("l_orderkey"))
-        .join(broadcast(c), col("o_custkey") === col("c_custkey"))
-        .select(col("c_name"), col("c_custkey"), col("o_orderkey"),
-          col("o_orderdate"), col("o_totalprice"),
-          col("sum_qty").cast("double").as("sum_qty"))
-        .orderBy(col("o_totalprice").desc, col("o_orderkey").asc).limit(20)
-    }),
-
-    // one-scan table profiler: per-column nulls/ndv/min/max — the
-    // data-quality reconnaissance pass; k distinct aggregates plan as
-    // ONE Expand scan, output is k rows
-    "rel_profile" -> ((s, dir) =>
-      operators.Relational.profile(table(s, dir, "orders"),
-        Seq("o_orderstatus", "o_orderpriority", "o_orderkey", "o_custkey"))),
-
-    // asymmetric containment on the adjacent-pairs list: the
-    // doc-inside-doc signal Jaccard misses (see pairwiseContainment)
-    "dedup_containment" -> ((s, dir) => {
-      val docs = table(s, dir, "documents")
-      val pairs = docs.select(col("doc_id").as("id_a"), (col("doc_id") + 1).as("id_b"))
-      operators.Dedup.pairwiseContainment(docs, "doc_id", col("text"), n = 3, pairs = pairs)
-    }),
-
-    // corpus-wide segment boilerplate removal (RefinedWeb line-dedup
-    // restated over 5-word windows): per-doc counts + kept fingerprint
-    "dedup_paragraph" -> ((s, dir) =>
-      operators.Dedup.segmentBoilerplate(
-        table(s, dir, "documents"), "doc_id", col("text"), segWords = 5, minDocs = 3)),
-
-    // incremental view maintenance over the upsert semantics: post-change
-    // per-group aggregate from base aggregate + change deltas only (the
-    // oracle recomputes the whole snapshot; the Spark side never does)
-    "rel_ivm" -> ((s, dir) => {
-      val o = table(s, dir, "orders")
-        .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
-      val changes = o.filter(col("o_orderkey") % 10 === 0)
-        .withColumn("o_totalprice", col("o_totalprice") * 2)
-      operators.Relational.incrementalAgg(o, changes,
-        "o_orderkey", "o_orderstatus", "o_totalprice")
-    }),
-
-    // JSON collation order vs a pivot (reference README goal 3)
-    "jq_collate" -> ((s, dir) =>
-      table(s, dir, "events")
-        .select(col("event_id"), Jq.long(".k", col("props")).as("k"))
-        .select(col("event_id"),
-          when(col("k") % 3 === 0, col("k").cast("string"))
-            .when(col("k") % 3 === 1, concat(lit("\""), col("k"), lit("\"")))
-            .otherwise(lit("null")).as("doc"))
-        .select(col("event_id"), Jq.jsonCmp(col("doc"), lit("50")).as("c"))),
-
-    // --- relational layer (SURVEY.md §2.8 beyond-parity) ----------------
-    "rel_agg_pricing" -> ((s, dir) =>
-      operators.Relational.pricingSummary(table(s, dir, "lineitem"))),
-
-    "rel_join_nation_revenue" -> ((s, dir) =>
-      operators.Relational.revenueByNation(
-        table(s, dir, "customer"), table(s, dir, "orders"),
-        table(s, dir, "lineitem"), table(s, dir, "nation"))),
-
-    "rel_join_anti" -> ((s, dir) => {
-      val c = table(s, dir, "customer")
-      val o = table(s, dir, "orders").filter(col("o_orderstatus") === "F")
-      c.join(o, c("c_custkey") === o("o_custkey"), "left_anti")
-        .groupBy(col("c_mktsegment")).agg(count(lit(1)).as("n"))
-    }),
-
-    "rel_join_semi" -> ((s, dir) => {
-      val c = table(s, dir, "customer"); val o = table(s, dir, "orders")
-      c.join(o, c("c_custkey") === o("o_custkey"), "left_semi")
-        .groupBy(col("c_nationkey")).agg(count(lit(1)).as("n"))
-    }),
-
-    // full outer join (completes the join-type set: inner/left/semi/anti/
-    // asof/range/salted): customers and suppliers by nation, either side
-    // may be missing
-    "rel_join_full" -> ((s, dir) => {
-      val c = table(s, dir, "customer").groupBy(col("c_nationkey")).agg(count(lit(1)).as("n_cust"))
-      val su = table(s, dir, "supplier").groupBy(col("s_nationkey")).agg(count(lit(1)).as("n_supp"))
-      c.join(su, c("c_nationkey") === su("s_nationkey"), "full_outer")
-        .select(
-          coalesce(col("c_nationkey"), col("s_nationkey")).as("nationkey"),
-          coalesce(col("n_cust"), lit(0L)).as("n_cust"),
-          coalesce(col("n_supp"), lit(0L)).as("n_supp"))
-    }),
-
-    "rel_window_topk" -> ((s, dir) =>
-      operators.Relational.topKPerGroup(
-        table(s, dir, "lineitem"),
-        Seq(col("l_orderkey")),
-        Seq(col("l_extendedprice").desc, col("l_linenumber").asc), 3)
-        .select(col("l_orderkey"), col("l_linenumber"), col("rnk").cast("bigint").as("rnk"))),
-
-    "rel_window_running" -> ((s, dir) =>
-      // ordering includes quantity/price: (orderkey, linenumber) is NOT
-      // unique in every testdata generation (sf0.1 carries a duplicate
-      // key), and a running sum under a tied order is engine-dependent —
-      // the extended key is total, or the tied rows are full duplicates
-      // whose assignment cannot matter
-      operators.Relational.runningTotal(
-        table(s, dir, "lineitem"),
-        Seq(col("l_suppkey")),
-        Seq(col("l_shipdate"), col("l_orderkey"), col("l_linenumber"),
-          col("l_quantity"), col("l_extendedprice")),
-        col("l_quantity"), "running")
-        .select(col("l_suppkey"), col("l_orderkey"), col("l_linenumber"), col("running"))),
-
-    "rel_sort_limit" -> ((s, dir) =>
-      table(s, dir, "orders")
-        .orderBy(col("o_totalprice").desc, col("o_orderkey").asc)
-        .limit(100)
-        .select(col("o_orderkey"), col("o_totalprice"))),
-
-    // RANGE-frame window (vs the ROWS frames elsewhere): trailing 7-day
-    // per-supplier shipment volume — the frame is VALUE-keyed (all rows
-    // within 6 days), so ties and gaps are handled by definition rather
-    // than row position; DECIMAL sum keeps it order-exact
-    "rel_window_range" -> ((s, dir) => {
-      val li = table(s, dir, "lineitem").withColumn("ship_day",
-        datediff(col("l_shipdate").cast("date"), lit("1970-01-01").cast("date")))
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("l_suppkey")).orderBy(col("ship_day"))
-        .rangeBetween(-6, org.apache.spark.sql.expressions.Window.currentRow)
-      li.select(col("l_suppkey"), col("l_orderkey"), col("l_linenumber"),
-        col("ship_day").cast("long").as("ship_day"),
-        sum(col("l_quantity").cast("decimal(18,2)")).over(w)
-          .cast("double").as("qty_7d"))
-    }),
-
-    // equi-depth histogram: exact decile boundaries of the price
-    // distribution WITHOUT a partition-less ntile window (a
-    // single-partition global sort dies first at scale) — distributed
-    // range sort + cumulative partition offsets + per-partition row
-    // numbers reproduce ntile's exact fill rule at any parallelism; the
-    // approx companion at 100 TB is approx_percentile (sketch_stats)
-    "rel_ntile" -> ((s, dir) =>
-      operators.Relational.ntileHistogram(
-        table(s, dir, "orders"), 10, col("o_totalprice"), col("o_orderkey"))),
-
-    "rel_distinct" -> ((s, dir) =>
-      table(s, dir, "lineitem").select(col("l_returnflag"), col("l_linestatus")).distinct()),
-
-    "rel_setop_except" -> ((s, dir) => {
-      val o = table(s, dir, "orders")
-      o.filter(col("o_orderstatus") === "O").select(col("o_custkey").as("custkey"))
-        .except(o.filter(col("o_orderstatus") === "F").select(col("o_custkey").as("custkey")))
-    }),
-
-    "rel_setop_intersect" -> ((s, dir) => {
-      val o = table(s, dir, "orders")
-      o.filter(col("o_orderstatus") === "O").select(col("o_custkey").as("custkey"))
-        .intersect(o.filter(col("o_orderstatus") === "F").select(col("o_custkey").as("custkey")))
-    }),
-
-    "rel_rollup" -> ((s, dir) =>
-      table(s, dir, "lineitem")
-        .rollup(col("l_returnflag"), col("l_linestatus"))
-        .agg(count(lit(1)).as("n"), operators.Relational.dsum(col("l_quantity")).as("sum_qty"))),
-
-    "rel_cube" -> ((s, dir) =>
-      table(s, dir, "lineitem")
-        .cube(col("l_returnflag"), col("l_linestatus"))
-        .agg(count(lit(1)).as("n"), operators.Relational.dsum(col("l_quantity")).as("sum_qty"))),
-
-    // exact second moments from DECIMAL sums (round 5): variance/stddev/
-    // correlation computed by the SAME closed-form double expression on
-    // both engines — decimal sums are exact, the double arithmetic is
-    // written in identical order, so the hash gate applies to statistics
-    // that are normally fp-flaky across engines
-    // moment-sum variance/stddev/correlation — EXACT centi-unit DECIMAL
-    // moments; the float arithmetic is a pinned chain of correctly-rounded
-    // ops on identical exact inputs, so the doubles are bit-identical on
-    // any engine/partitioning (round 10: the old double-moments version
-    // diverged from DuckDB by an ulp at sf0.001 — FMA-class intermediate
-    // drift — exactly what corrExact's discipline exists to prevent).
-    // var in centi² units rescales by 1e4 at the end.
-    "rel_agg_variance" -> ((s, dir) => {
-      def d(c: org.apache.spark.sql.Column) = c.cast("decimal(38,0)")
-      val q = table(s, dir, "lineitem").select(col("l_returnflag"),
-        round(col("l_quantity").cast("double") * 100).cast("long").as("xi"),
-        round(col("l_extendedprice").cast("double") * 100).cast("long").as("yi"))
-      val m = q.groupBy(col("l_returnflag"))
-        .agg(count(lit(1)).as("n"),
-          sum(d(col("xi"))).as("sx"), sum(d(col("yi"))).as("sy"),
-          sum(d(col("xi")) * d(col("xi"))).as("sxx"),
-          sum(d(col("yi")) * d(col("yi"))).as("syy"),
-          sum(d(col("xi")) * d(col("yi"))).as("sxy"))
-      val varNum = (d(col("n")) * col("sxx") - col("sx") * col("sx")).cast("double")
-      val varDen = (d(col("n")) * (d(col("n")) - lit(1))).cast("double")
-      val dx = d(col("n")) * col("sxx") - col("sx") * col("sx")
-      val dy = d(col("n")) * col("syy") - col("sy") * col("sy")
-      // degenerate groups are pinned NULL on BOTH engines (a 1-row group's
-      // 0/0 is NULL under Spark's non-ANSI divide but inf/nan in DuckDB's
-      // IEEE division; a constant column likewise zeroes a corr leg)
-      m.select(col("l_returnflag"), col("n"),
-        when(col("n") > 1, varNum / varDen / lit(1e4)).as("var_qty"),
-        when(col("n") > 1, sqrt(varNum / varDen / lit(1e4))).as("std_qty"),
-        when(col("n") > 1 && dx > 0 && dy > 0,
-          (d(col("n")) * col("sxy") - col("sx") * col("sy")).cast("double") /
-            sqrt(dx.cast("double") * dy.cast("double")))
-          .as("corr_qp"))
-    }),
-
-    // explicit grouping sets (beyond rollup/cube's fixed lattices): the
-    // DataFrame API has no grouping-sets verb, so this drops to SQL — the
-    // Catalyst plan is the same Expand + partial-agg shape as cube
-    "rel_grouping_sets" -> ((s, dir) => {
-      table(s, dir, "lineitem").createOrReplaceTempView("gs_lineitem")
-      s.sql("""
-        SELECT l_returnflag, l_linestatus, count(*) AS n,
-               CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty
-        FROM gs_lineitem
-        GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), ())""")
-    }),
-
-    // the SQL surface end-to-end: the same jq_*/json_* expressions a
-    // cluster gets from --conf spark.sql.extensions=graft.GraftExtensions,
-    // driven from plain SQL text (no DataFrame code)
-    "jq_sql_api" -> ((s, dir) => {
-      Jq.register(s)
-      table(s, dir, "events").createOrReplaceTempView("sqlapi_events")
-      s.sql("""
-        SELECT event_id,
-               jq_long('.k', props) AS k,
-               jq_string('{k2: (.k * 2)} | tojson', props) AS doubled,
-               json_length(props) AS n_props,
-               json_cmp(props, props) AS self_cmp,
-               json_canonical(props) AS canon
-        FROM sqlapi_events""")
-    }),
-
-    // lead/lag/ntile/percent_rank over one deterministic-order window
-    // spec — a single exchange serves all four
-    "rel_window_misc" -> ((s, dir) => {
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("o_custkey"))
-        .orderBy(col("o_orderdate"), col("o_orderkey"))
-      table(s, dir, "orders").select(col("o_custkey"), col("o_orderkey"),
-        lag(col("o_totalprice"), 1).over(w).cast("double").as("prev_price"),
-        lead(col("o_totalprice"), 1).over(w).cast("double").as("next_price"),
-        ntile(4).over(w).cast("bigint").as("quartile"),
-        percent_rank().over(w).as("pr"))
-    }),
-
-    // skew-safe salted join (round 5): deterministic fact-side salt + dim
-    // replicated salts× — one hot custkey spreads over 8 tasks; the
-    // ORACLE is the plain unsalted join, pinning result-equality
-    "rel_skew_join" -> ((s, dir) => {
-      val o = table(s, dir, "orders")
-      val c = table(s, dir, "customer")
-        .select(col("c_custkey").as("o_custkey"), col("c_nationkey"))
-      operators.Relational.saltedJoin(o, c, "o_custkey", col("o_orderkey"), 8)
-        .groupBy(col("c_nationkey"))
-        .agg(count(lit(1)).as("n"),
-          operators.Relational.dsum(col("o_totalprice")).as("rev"))
-    }),
-
-    // partitioned-layout write + partition-PRUNED read-back (round 5):
-    // the filtered scan reads ONLY the matching event_type directory
-    // (PartitionFilters in the plan, pinned by BucketingSpec) — at
-    // 100 TB, layout pruning is the difference between scanning one
-    // partition and scanning the lake. The write is inside the query so
-    // the oracle covers the whole write→read cycle, like rel_bucketed_join.
-    "rel_partition_prune" -> ((s, dir) => {
-      table(s, dir, "events")
-        .select(col("event_id"), col("user_id"), col("event_type"), col("value"))
-        .write.partitionBy("event_type").mode("overwrite")
-        .parquet(s"$partitionedSinkDir/events_by_type")
-      s.read.parquet(s"$partitionedSinkDir/events_by_type")
-        .filter(col("event_type") === "purchase")
-        .groupBy(col("user_id"))
-        .agg(count(lit(1)).as("n"),
-          operators.Relational.dsum(col("value")).as("sum_value"))
-    }),
-
-    "rel_agg_stats" -> ((s, dir) =>
-      table(s, dir, "lineitem")
-        .groupBy(col("l_returnflag"))
-        .agg(
-          countDistinct(col("l_partkey")).as("n_parts"),
-          min(col("l_quantity")).as("min_qty"),
-          max(col("l_quantity")).as("max_qty"),
-          count(lit(1)).as("n"))),
-
-    "rel_pivot_manual" -> ((s, dir) =>
-      table(s, dir, "lineitem")
-        .groupBy(col("l_returnflag"))
-        .agg(
-          sum(when(col("l_linestatus") === "F", col("l_quantity").cast("decimal(18,2)"))).cast("double").as("qty_f"),
-          sum(when(col("l_linestatus") === "O", col("l_quantity").cast("decimal(18,2)"))).cast("double").as("qty_o"))),
-
-    // unpivot/melt: wide → long with the native Unpivot plan (an Expand
-    // node — narrow, zero shuffles, splits with the scan)
-    "rel_unpivot" -> ((s, dir) =>
-      table(s, dir, "lineitem")
-        .select(col("l_orderkey"), col("l_linenumber"), col("l_quantity"),
-          col("l_discount"), col("l_tax"))
-        .unpivot(
-          Array(col("l_orderkey"), col("l_linenumber")),
-          Array(col("l_quantity"), col("l_discount"), col("l_tax")),
-          "measure", "val")),
-
-    "rel_above_avg" -> ((s, dir) => {
-      val sup = table(s, dir, "supplier")
-      val stats = sup.agg(
-        sum(col("s_acctbal").cast("decimal(18,2)")).cast("double").as("tot"),
-        count(lit(1)).as("cnt"))
-      sup.crossJoin(broadcast(stats))
-        .filter(col("s_acctbal") * col("cnt") > col("tot"))
-        .select(col("s_suppkey"), col("s_name"))
-    }),
-
-    "rel_dates" -> ((s, dir) =>
-      table(s, dir, "orders")
-        .groupBy(year(col("o_orderdate")).cast("bigint").as("yr"))
-        .agg(count(lit(1)).as("n"),
-          operators.Relational.dsum(col("o_totalprice")).as("total"))),
-
-    // as-of (temporal) join: latest order at or before each event (§2.8)
-    "rel_asof_join" -> ((s, dir) => {
-      val ev = table(s, dir, "events").select(
-        col("event_id"), col("user_id"),
-        streaming.EventStreams.eventTime(col("ts")).as("event_time"))
-      val ord = table(s, dir, "orders")
-        .groupBy(col("o_custkey"), col("o_orderdate"))
-        .agg(max(col("o_orderkey")).as("o_orderkey"))
-      operators.Relational.asofJoin(ev, ord,
-          "user_id", "o_custkey", "event_time", "o_orderdate", Seq("o_orderkey"))
-        .select(col("event_id"), col("o_orderkey"))
-    }),
-
-    // sketches: HLL++ distinct-count and t-digest-style quantiles beside
-    // their exact counterparts; approximation error asserted as data
-    "sketch_stats" -> ((s, dir) => {
-      val li = table(s, dir, "lineitem")
-      // keep the distinct aggregate (Expand plan) separate from the
-      // imperative sketch buffers (HLL / percentile digest): mixing them
-      // in one agg forces buffer serialization across the expand and was
-      // ~20x slower at sf0.1
-      val exact = li.groupBy(col("l_returnflag"))
-        .agg(countDistinct(col("l_partkey")).as("exact_parts"))
-      val approx = li.groupBy(col("l_returnflag"))
-        .agg(
-          approx_count_distinct(col("l_partkey")).as("approx_parts_raw"),
-          expr("approx_percentile(l_quantity, 0.5)").as("p50_raw"),
-          min(col("l_quantity")).as("min_qty"), max(col("l_quantity")).as("max_qty"))
-      exact.join(approx, "l_returnflag")
-        .select(
-          col("l_returnflag"), col("exact_parts"),
-          (abs(col("approx_parts_raw") - col("exact_parts")) <
-            col("exact_parts") * 0.1).as("approx_ok"),
-          (col("p50_raw") >= col("min_qty") && col("p50_raw") <= col("max_qty")).as("p50_ok"))
-    }),
-
-    // MERGEABLE distinct-count sketches (Apache DataSketches HLL, built
-    // into Spark 4): per-group sketches built in one pass, then the ALL
-    // row re-aggregates the GROUP SKETCHES via hll_union_agg — the
-    // mergeability that lets 1000 executors sketch independently and
-    // union bounded register arrays, the scale story approx_count_distinct
-    // (sketch_stats) hides inside one aggregate. Estimates are emitted as
-    // an error-bound boolean next to the exact count (the sketch_stats
-    // recall-as-data pattern) — at lgK=14 the bound is deterministic
-    "sketch_hll_merge" -> ((s, dir) => {
-      val ev = table(s, dir, "events")
-      val perG = ev.groupBy(col("event_type").as("grp")).agg(
-        expr("hll_sketch_estimate(hll_sketch_agg(user_id, 14))").as("est"),
-        countDistinct(col("user_id")).as("exact_distinct"))
-      val mergedEst = ev.groupBy(col("event_type"))
-        .agg(expr("hll_sketch_agg(user_id, 14)").as("sk"))
-        .agg(expr("hll_sketch_estimate(hll_union_agg(sk, true))").as("est"))
-      val exactAll = ev.agg(countDistinct(col("user_id")).as("exact_distinct"))
-      val allRow = mergedEst.crossJoin(broadcast(exactAll))
-        .select(lit("ALL").as("grp"), col("est"), col("exact_distinct"))
-      perG.select(col("grp"), col("est"), col("exact_distinct"))
-        .unionByName(allRow)
-        .select(col("grp"), col("exact_distinct").cast("long").as("exact_distinct"),
-          (abs(col("est").cast("double") - col("exact_distinct").cast("double")) <=
-            col("exact_distinct").cast("double") * lit(0.05)).as("ok"))
-    }),
-
-    // count-min sketch as a grouped aggregate (no driver state): the
-    // deterministic BIGINT hash family lets DuckDB replicate the whole
-    // sketch bit-for-bit, so estimates hash-compare exactly
-    "sketch_cms" -> ((s, dir) => {
-      val ev = table(s, dir, "events")
-      val sketch = operators.Sketches.countMin(ev, col("user_id"), depth = 4, width = 8192)
-      val queries = ev.select(col("user_id")).distinct()
-      operators.Sketches.cmsEstimate(sketch, queries, col("user_id"), depth = 4, width = 8192)
-        .select(col("key").as("user_id"), col("est"))
-    }),
-
-    // binned range join: events within the hour after each error event
-    // of the same user (self interval join)
-    "rel_range_join" -> ((s, dir) => {
-      val hourUs = 3600L * 1000 * 1000
-      def us(c: org.apache.spark.sql.Column) =
-        ((c - pmod(c, lit(1000L))).cast("decimal(20,0)") / 1000).cast("long")
-      val ev = table(s, dir, "events")
-      val probes = ev.select(col("event_id"), col("user_id"), us(col("ts")).as("t_us"))
-      val anchors = ev.filter(col("event_type") === "error").select(
-        col("event_id").as("anchor_id"), col("user_id").as("anchor_user"),
-        us(col("ts")).as("start_us"), (us(col("ts")) + hourUs).as("end_us"))
-      operators.Relational.rangeJoinBinned(probes, anchors,
-          "user_id", "anchor_user", "t_us", "start_us", "end_us", binWidth = hourUs)
-        .select(col("event_id"), col("anchor_id"))
-    }),
-
-    // *_by family + flatten/paths/getpath/tojson/fromjson (round-3
-    // extension builtins) over an array-of-objects document built from
-    // real columns; every output pinned against closed-form SQL
-    "jq_by_builtins" -> ((s, dir) => {
-      val doc = concat(
-        lit("[{\"a\":"), col("event_id") % 5, lit(",\"b\":1},{\"a\":"),
-        col("user_id") % 5, lit(",\"b\":2}]"))
-      table(s, dir, "events")
-        .select(col("event_id"), doc.as("doc"))
-        .select(col("event_id"),
-          Jq.multi(Seq(
-            ("sorted_b", "sort_by(.a) | map(.b) | tojson", "string"),
-            ("n_groups", "group_by(.a) | length", "long"),
-            ("uniq_n", "unique_by(.a) | length", "long"),
-            ("min_b", "min_by(.a) | .b", "long"),
-            ("max_b", "max_by(.a) | .b", "long"),
-            ("flat", "[[.[0].a],[.[1].a,[.[0].b]]] | flatten | tojson", "string"),
-            ("npaths", "[paths] | length", "long"),
-            ("gp", """getpath([1,"a"])""", "long"),
-            ("rt", "tojson | fromjson | .[0].a", "long")), col("doc")).as("m"))
-        .select(col("event_id"), col("m.sorted_b"), col("m.n_groups"),
-          col("m.uniq_n"), col("m.min_b"), col("m.max_b"), col("m.flat"),
-          col("m.npaths"), col("m.gp"), col("m.rt"))
-    }),
-
-    // tostream/fromstream wire form: event count + byte-exact round trip
-    "jq_stream_rt" -> ((s, dir) =>
-      table(s, dir, "events")
-        .select(col("event_id"), nestedDoc.as("doc"))
-        .select(col("event_id"),
-          Jq.string("[tostream] | fromstream | tojson", col("doc")).as("rt"),
-          Jq.long("[tostream] | length", col("doc")).as("n_events"))),
-
-    // @format strings: base64 round trip vs DuckDB's own encoder, CSV row
-    "jq_formats" -> ((s, dir) => {
-      val ev = table(s, dir, "events")
-      val docs = table(s, dir, "documents")
-        .select(col("doc_id"), struct(col("text")).as("doc"))
-        .select(col("doc_id"),
-          Jq.string(".text | @base64", col("doc")).as("b64"),
-          Jq.string(".text | @base64 | @base64d", col("doc")).as("rt"))
-      val csv = ev.select(col("event_id"),
-        Jq.string("""[.k, .k * 2, "x,y"] | @csv""", col("props")).as("csvrow"))
-      docs.join(csv, docs("doc_id") === csv("event_id"))
-        .select(col("doc_id"), col("b64"), col("rt"), col("csvrow"))
-    }),
-
-    // regex replace + codepoint round-trip + rounding (round-3 builtins)
-    "jq_regex_text" -> ((s, dir) =>
-      table(s, dir, "documents")
-        .select(col("doc_id"), struct(col("text")).as("doc"))
-        .select(col("doc_id"),
-          Jq.multi(Seq(
-            ("subbed", """.text | gsub("[aeiou]", "_")""", "string"),
-            ("sub1", """.text | sub("e", "3")""", "string"),
-            ("rt", ".text | chars | implode", "string"),
-            // `s` flag (DOTALL): the .* must cross the injected newline,
-            // so the answer is row-dependent (does the text contain 'a')
-            ("ds", """.text + "\nEND" | test("a.*END", "s")""", "bool"),
-            // `m` flag (MULTILINE): words to lines, count lines starting
-            // with a letter — ^ must anchor at every line break
-            ("ml", """.text | split(" ") | join("\n") | [match("^[A-Za-z]", "gm")] | length""", "long")),
-            col("doc")).as("m"))
-        .select(col("doc_id"), col("m.subbed"), col("m.sub1"), col("m.rt"),
-          col("m.ds"), col("m.ml"))),
-
-    // limit/while/until loops + runtime-path setpath/delpaths (round 3)
-    "jq_paths_update" -> ((s, dir) =>
-      table(s, dir, "events").select(
-        col("event_id"),
-        Jq.multi(Seq(
-          ("sp", """setpath(["a"], .k) | tojson""", "string"),
-          ("wh", ".k | [while(. < 50, . + 7)] | length", "long"),
-          ("ut", ".k | until(. * 2 > 100, . + 13)", "long"),
-          ("lim", "[limit(.k % 3 + 1, range(9))] | length", "long")), col("props")).as("m"))
-        .select(col("event_id"), col("m.sp"), col("m.wh"), col("m.ut"), col("m.lim"))),
-
-    // user function definitions incl. recursion (round-3 `def` prologue)
-    "jq_userdef" -> ((s, dir) =>
-      table(s, dir, "events").select(
-        col("event_id"),
-        Jq.long("def double: . * 2; def add2($a, $b): $a + $b; add2(.k | double, 7)",
-          col("props")).as("v"),
-        Jq.long("def fact: if . < 2 then 1 else . * (. - 1 | fact) end; .k % 6 + 1 | fact",
-          col("props")).as("f"),
-        Jq.long("def mymap(f): [.[] | f]; [.k, .k * 2] | mymap(. + 1) | add",
-          col("props")).as("fm"))),
-
-    // reduce/foreach folds, `as $x` binders, string interpolation
-    // (round-3 jq-language constructs) — closed-form oracle per column
-    "jq_fold_interp" -> ((s, dir) => {
-      val k = col("event_id") % 100
-      val arrDoc = concat(lit("["), k, lit(","), k * 2, lit(",7]"))
-      table(s, dir, "events")
-        .select(col("event_id"), arrDoc.as("doc"), col("props"))
-        .select(col("event_id"),
-          Jq.long("reduce .[] as $x (0; . + $x)", col("doc")).as("total"),
-          Jq.string("[foreach .[] as $x (0; . + $x)] | tojson", col("doc")).as("scan"),
-          Jq.long(".[0] as $x | .[1] + $x", col("doc")).as("bound"),
-          Jq.string("\"k=\\(.k)!\"", col("props")).as("label"))
-    }),
-
-    // --- jq over genuinely nested documents -----------------------------
-    // Round-2 gap (VERDICT): every jq oracle ran over flat {"k": int}
-    // docs, so nested navigation was conformance-spec-only. These build
-    // 3-level docs from real columns (keys pre-sorted so the canonical
-    // serializer and plain string concatenation agree) and DuckDB
-    // navigates the SAME string with its own JSON parser.
-
-    // 3-level field navigation + array index + string field (§2.2)
-    "jq_nested_nav" -> ((s, dir) =>
-      table(s, dir, "events")
-        .select(col("event_id"), nestedDoc.as("doc"))
-        .select(col("event_id"),
-          Jq.multi(Seq(
-            ("c", ".a.b.c", "long"),
-            ("x1", ".xs | .[1]", "long"),
-            ("t0", ".tags | .[0]", "string")), col("doc")).as("m"))
-        .select(col("event_id"), col("m.c"), col("m.x1"), col("m.t0"))),
-
-    // EXTENSION: path-mode evaluation — path(f)/paths(f)/dynamic del(f)
-    // round-tripped through getpath over the 3-level nested doc
-    "jq_path_mode" -> ((s, dir) =>
-      table(s, dir, "events")
-        .select(col("event_id"), nestedDoc.as("doc"))
-        .select(col("event_id"), Jq.multi(Seq(
-          ("pc", "path(.a.b.c) | tojson", "string"),
-          ("p1", "path(.tags.[1]) | tojson", "string"),
-          ("npaths", "[path(..)] | length", "long"),
-          ("big_xs", "[paths(numbers | . >= 25)] | length", "long"),
-          ("del_small", "del(.xs.[] | select(. < 25)) | .xs | length", "long"),
-          ("getp", "getpath(path(.a.b.c))", "long")), col("doc")).as("m"))
-        .select(col("event_id"), col("m.pc"), col("m.p1"), col("m.npaths"),
-          col("m.big_xs"), col("m.del_small"), col("m.getp"))),
-
-    // EXTENSION: dynamic-path assignment — `p |= f` / `p = e` where p is
-    // a navigation filter (select gates, iteration), via the path-mode
-    // compiler's reduce semantics
-    "jq_assign_dynamic" -> ((s, dir) =>
-      table(s, dir, "events")
-        .select(col("event_id"), col("event_type"), nestedDoc.as("doc"))
-        .select(col("event_id"), Jq.multi(Seq(
-          ("bump", ".xs.[] |= . + 1 | .xs | add", "long"),
-          ("zero_big", "(.xs.[] | select(. >= 25)) |= 0 | .xs | add", "long"),
-          ("set_all", ".xs.[] = 1 | .xs | add", "long"),
-          ("tagged", """(.tags.[] | select(. == "zz")) |= "x" | .tags | join("-")""", "string")),
-          col("doc")).as("m"))
-        .select(col("event_id"), col("m.bump"), col("m.zero_big"),
-          col("m.set_all"), col("m.tagged"))),
-
-    // recurse `..` over 3-level nesting: pre-order, every sub-value (§2.2)
-    "jq_nested_recurse" -> ((s, dir) => {
-      val ev = table(s, dir, "events").select(col("event_id"), nestedDoc.as("doc"))
-      ev.select(col("event_id"), explode(Jq.docs("..", col("doc"))).as("v"))
-    }),
-
-    // re-collection of a nested array with arithmetic: [.xs | .[] | . * 2]
-    // (§2.3 List collect-all over an iterated nested array)
-    "jq_nested_collect" -> ((s, dir) =>
-      table(s, dir, "events")
-        .select(col("event_id"), nestedDoc.as("doc"))
-        .select(col("event_id"),
-          Jq.string("[.xs | .[] | . * 2]", col("doc")).as("doubled"))),
-
-    // dict fan-out driven by a NESTED array, carrying a deep nav (§2.3)
-    "jq_nested_fanout" -> ((s, dir) => {
-      val ev = table(s, dir, "events").select(col("event_id"), nestedDoc.as("doc"))
-      Jq.explodeDocs(ev, "{c: .a.b.c, t: .tags | .[]}", col("doc"), "v_doc")
-        .select(col("event_id"), col("v_doc"))
-    }),
-
-    // VARIANT carrier: parse_json → Spark VARIANT → the binary-native jq
-    // walk (JqInput.fromVariant), no JSON text re-parse per pipeline (§1.4)
-    "jq_variant_path" -> ((s, dir) =>
-      table(s, dir, "events")
-        .select(col("event_id"), nestedDoc.as("doc"), col("props"))
-        .select(col("event_id"),
-          Jq.long(".k", parse_json(col("props"))).as("k"),
-          Jq.long(".a.b.c", parse_json(col("doc"))).as("c"))),
-
-    // jq over a TYPED (struct) carrier, aggregated — the whole query runs
-    // through the JqPathCompile optimizer rule: the index paths become
-    // native GetStructField accesses inside whole-stage codegen, so the
-    // plan is a plain scan → agg with no interpreter node (the rule's
-    // equivalence contract is what this row hash-gates; plan-shape
-    // evidence lives in JqPathCompileSpec)
-    "jq_typed_path" -> ((s, dir) => {
-      val li = table(s, dir, "lineitem")
-      val d = struct(
-        struct(col("l_quantity").as("qty"), col("l_discount").as("disc")).as("m"),
-        col("l_returnflag").as("flag"))
-      li.select(d.as("d"))
-        .select(Jq.string(".flag", col("d")).as("flag"),
-          Jq.double(".m.qty", col("d")).as("qty"),
-          Jq.double(".m.disc", col("d")).as("disc"))
-        .groupBy(col("flag"))
-        .agg(count(lit(1)).as("n"),
-          operators.Relational.dsum(col("qty")).as("sq"),
-          operators.Relational.dsum(col("disc")).as("sd"))
-        .select(col("flag"), col("n"),
-          col("sq").cast("double").as("sum_qty"),
-          col("sd").cast("double").as("sum_disc"))
-    }),
-
-    // walk builtin + user-def recursive closure (round-5 specialization
-    // cells: `uw(f)` inside uw's own body) + a mid-pipeline def — all
-    // three of round 5's jq-language additions in one hash-gated row
-    "jq_walk" -> ((s, dir) =>
-      table(s, dir, "events")
-        .select(col("event_id"), nestedDoc.as("doc"))
-        .select(col("event_id"),
-          Jq.multi(Seq(
-            ("w", "walk(if type == \"number\" then . + 1 else . end)", "string"),
-            ("uw", "def uw(f): if type == \"array\" then map(uw(f)) " +
-              "elif type == \"object\" then map_values(uw(f)) else f end; " +
-              "uw(if type == \"number\" then . + 1 else . end)", "string"),
-            ("md", ".a.b.c | def inc: . + 1; inc | inc", "long")), col("doc")).as("m"))
-        .select(col("event_id"), col("m.w"), col("m.uw"), col("m.md"))),
-
-    // try/catch: suppression, handler replacement, error VALUE as the
-    // handler's input (round 5)
-    "jq_trycatch" -> ((s, dir) =>
-      table(s, dir, "events").select(
-        col("event_id"),
-        Jq.long("try .missing catch -1", col("props")).as("t1"),
-        Jq.long("try .k catch -1", col("props")).as("t2"),
-        Jq.string("try error(\"bad \\(.k)\") catch .", col("props")).as("t3"),
-        Jq.long("[try .nope] | length", col("props")).as("t4"))),
-
-    // regex match objects + scan streams (round 5) — DuckDB's own regex
-    // engine is the oracle for the extracted strings; codepoint offsets
-    // are conformance-pinned (DuckDB exposes no offset function)
-    "jq_scan" -> ((s, dir) =>
-      table(s, dir, "documents")
-        .select(col("doc_id"), struct(col("text")).as("doc"))
-        .select(col("doc_id"),
-          Jq.multi(Seq(
-            ("sc", ".text | [scan(\"[aeiou]+\")] | join(\"|\")", "string"),
-            ("mg", ".text | [match(\"[a-z]+\", \"g\") | .string] | join(\",\")", "string"),
-            ("mo", ".text | [match(\"e\", \"g\") | .offset] | length", "long")), col("doc")).as("m"))
-        .select(col("doc_id"), col("m.sc"), col("m.mg"), col("m.mo"))),
-
-    // label/break (round 5): stop a stream mid-way, keeping the prefix —
-    // the jq early-termination construct, data-dependent cut point
-    "jq_labelbreak" -> ((s, dir) => {
-      val k = col("event_id") % 100
-      val arrDoc = concat(lit("["), k, lit(","), k * 2, lit(",7]"))
-      table(s, dir, "events")
-        .select(col("event_id"), arrDoc.as("doc"))
-        .select(col("event_id"),
-          Jq.string("[label $out | .[] | if . >= 100 then break $out else . end] | tojson",
-            col("doc")).as("pfx"))
-    }),
-
-    // sequence/search builtins (round 5): indices (overlap-aware),
-    // rindex, transpose (null-padded), @sh quoting — data-dependent
-    // pipelines with closed-form SQL
-    "jq_seq_builtins" -> ((s, dir) =>
-      table(s, dir, "events").select(
-        col("event_id"),
-        Jq.string("[.k % 2, 1, 0] | indices(1) | tojson", col("props")).as("idx"),
-        Jq.string("[[.k], [.k + 1, 9]] | transpose | tojson", col("props")).as("tr"),
-        Jq.long("\"ab\" * (.k % 3 + 1) | rindex(\"ab\")", col("props")).as("ridx"),
-        Jq.long("\"ab\" * (.k % 3 + 1) | indices(\"ab\") | length", col("props")).as("nidx"),
-        Jq.string("[(.k | tostring), \"a b\"] | @sh", col("props")).as("sh"))),
-
-    // context-window chunking (round 5): overlapping fixed-size chunks,
-    // the training-data splitting step — narrow transform+explode, no
-    // shuffle; DuckDB replays the same arithmetic with generate_series
-    "text_chunks" -> ((s, dir) =>
-      operators.TextAnalysis.chunkText(
-        table(s, dir, "documents"), col("text"), size = 200, overlap = 40,
-        idCols = Seq(col("doc_id")))),
-
-    // corpus-level term statistics (round 5): global top-k tokens —
-    // explode → partial-agg count → TakeOrdered; deterministic
-    // tie-break (count desc, term asc)
-    "text_term_freq" -> ((s, dir) =>
-      table(s, dir, "documents")
-        .select(explode(operators.TextAnalysis.tokens(col("text"))).as("term"))
-        .groupBy(col("term")).agg(count(lit(1)).as("n"))
-        .orderBy(col("n").desc, col("term").asc)
-        .limit(20)),
-
-    // inverted-index build: per-term posting list (distinct docs, sorted)
-    // — one explode + one partial-agg'd exchange on the term; posting
-    // lists serialize to strings for the cross-engine hash. At 100 TB
-    // postings for mega-terms are the skew (cap or tier them); df and
-    // the list come out of the same aggregate
-    "text_postings" -> ((s, dir) =>
-      table(s, dir, "documents")
-        .select(col("doc_id"),
-          explode(array_distinct(operators.TextAnalysis.tokens(col("text")))).as("term"))
-        .filter(length(col("term")) >= 5) // keeps the fixture vocabulary bounded
-        .groupBy(col("term"))
-        .agg(count(lit(1)).as("df"),
-          array_join(sort_array(collect_set(col("doc_id"))), ",").as("postings"))),
-
-    // BM25-style relevance scoring (round 5): tf from one token explode,
-    // corpus stats (N, avg length, per-term df) broadcast as a one-row
-    // frame, per-term contributions added in WRITTEN order. The idf is
-    // the RATIONAL core (N - df + 0.5)/(df + 0.5) — the ln() of textbook
-    // BM25 is deliberately omitted: ln is not correctly-rounded-guaranteed
-    // across engines, while +,*,/ are, so this variant stays hash-exact
-    // (same trick as rel_agg_variance)
-    "text_bm25" -> ((s, dir) => {
-      val docs = table(s, dir, "documents")
-      val toks = docs.select(col("doc_id"),
-        explode(operators.TextAnalysis.tokens(col("text"))).as("t"))
-      val tf = toks.groupBy(col("doc_id")).agg(
-        sum(when(col("t") === "the", 1L).otherwise(0L)).as("tf1"),
-        sum(when(col("t") === "data", 1L).otherwise(0L)).as("tf2"),
-        sum(when(col("t") === "model", 1L).otherwise(0L)).as("tf3"),
-        count(lit(1)).as("len"))
-      val stats = tf.agg(
-        count(lit(1)).as("n"),
-        sum(col("len")).as("toklen"),
-        sum(when(col("tf1") > 0, 1L).otherwise(0L)).as("df1"),
-        sum(when(col("tf2") > 0, 1L).otherwise(0L)).as("df2"),
-        sum(when(col("tf3") > 0, 1L).otherwise(0L)).as("df3"))
-      val j = tf.crossJoin(broadcast(stats))
-      def term(tfc: org.apache.spark.sql.Column, dfc: org.apache.spark.sql.Column) = {
-        val k1 = lit(1.2); val b = lit(0.75)
-        val idf = (col("n").cast("double") - dfc.cast("double") + lit(0.5)) /
-          (dfc.cast("double") + lit(0.5))
-        val avg = col("toklen").cast("double") / col("n").cast("double")
-        idf * (tfc.cast("double") * (k1 + lit(1.0))) /
-          (tfc.cast("double") + k1 * (lit(1.0) - b + b * col("len").cast("double") / avg))
-      }
-      j.select(col("doc_id"),
-        (term(col("tf1"), col("df1")) + term(col("tf2"), col("df2")) +
-          term(col("tf3"), col("df3"))).as("bm25"))
-    }),
-
-    // date builtins (round 5): epoch↔ISO-8601 round trip, gmtime/mktime
-    // composition, strftime subset — DuckDB formats the same instants
-    "jq_dates" -> ((s, dir) =>
-      table(s, dir, "events").select(
-        col("event_id"),
-        Jq.string(".k * 86400 + 1500000000 | todate", col("props")).as("iso"),
-        Jq.long(".k * 86400 + 1500000000 | todate | fromdate", col("props")).as("rt"),
-        Jq.long(".k * 86400 + 1500000000 | gmtime | mktime", col("props")).as("gm"),
-        Jq.string(".k * 86400 + 1500000000 | strftime(\"%Y/%j %H:%M\")", col("props")).as("fmt"))),
-
-    // streaming dedup (round 5): the SAME declaration that runs
-    // dropDuplicatesWithinWatermark (bounded state, watermark eviction)
-    // on a live stream, here on its batch-backfill path; the kept KEY SET
-    // is the deterministic surface (which row survives is unspecified),
-    // so the query projects the key. StreamingSpec drives the live path.
-    "stream_dedup" -> ((s, dir) =>
-      graft.streaming.EventStreams
-        .dedupWithinWatermark(table(s, dir, "events"), Seq("props"), "10 minutes")
-        .select(col("props"))),
-
-    // --- dedup family (LLM-pipeline layer) ------------------------------
-    // grouping key is (xxhash64(props), props): the full key must ride the
-    // exchange anyway (it IS the output column), but the 8-byte hash prefix
-    // means the sort-based fallback the hash aggregate spills into at scale
-    // resolves comparisons on the hash, not the whole document
-    "dedup_exact" -> ((s, dir) =>
-      table(s, dir, "events")
-        .groupBy(xxhash64(col("props")).as("__h"), col("props"))
-        .agg(min(col("event_id")).as("keeper"), count(lit(1)).as("n"))
-        .drop("__h")),
-
-    "dedup_exact_docs" -> ((s, dir) =>
-      operators.Dedup.exactDedup(
-        table(s, dir, "documents"), Seq(col("text")), col("doc_id"))
-        .select(col("doc_id"))),
-
-    "dedup_minhash" -> ((s, dir) =>
-      operators.Dedup.minhashNearDups(
-        table(s, dir, "documents"), "doc_id", col("text"), n = 3, threshold = 0.8)),
-
-    // the end-to-end dedup pipeline output: the corpus with one document
-    // kept per near-dup cluster (shingle → minhash LSH → verify →
-    // components → keep representatives) — what a training-data run
-    // actually writes out
-    "dedup_keep" -> ((s, dir) => {
-      val docs = table(s, dir, "documents")
-      val clusters = nearDupClustersOf(docs.select(col("doc_id")),
-        operators.Dedup.minhashNearDups(docs, "doc_id", col("text"), 3, 0.8))
-      docs.join(clusters.filter(col("id") === col("rep"))
-          .select(col("id").as("doc_id")), "doc_id")
-        .select(col("doc_id"), col("lang"))
-    }),
-
-    // the dedup REDUCE: connected components over the near-dup pairs,
-    // one representative (min id) per cluster — what a training-data
-    // pipeline actually keeps. Oracle: DuckDB recursive-CTE transitive
-    // closure over the same brute-force pair list.
-    "dedup_clusters" -> ((s, dir) => {
-      val docs = table(s, dir, "documents")
-      nearDupClustersOf(docs.select(col("doc_id")),
-          operators.Dedup.minhashNearDups(docs, "doc_id", col("text"), 3, 0.8))
-        .select(col("id").as("doc_id"), col("rep"))
-    }),
-
-    "dedup_simhash" -> ((s, dir) =>
-      operators.Dedup.simhashNearDups(
-        table(s, dir, "documents"), "doc_id", col("text"), n = 3, threshold = 0.8)),
-
-    // the valve-engaged production configuration of the row above
-    // (round 15): simhashNearDups was the LAST quadratic candidate
-    // surface without a bucket cap (minhash/LSH, dhash and the embedding
-    // paths all grew theirs in earlier rounds) — the ×256 sweep priced
-    // that gap at 299s where the minhash twin rides its cap. Same
-    // oracle-compatibility argument as mm_phash_dedup's engaged cap: the
-    // bucket-size valve is a no-op at the driver's gate SFs (measured
-    // largest block-pair bucket: 10 at sf0.001, 11 at sf0.01, 59 even at
-    // the sf0.1 bench corpus — all far under 256), so the brute-force
-    // all-pairs oracle contract (recall = 1 at
-    // jaccard ≥ 0.8, Hamming ≤ 12 pigeonhole) is checked UNWEAKENED;
-    // at web scale the cap drops only boilerplate-saturated buckets
-    // (drop-only-weakens, exact-dedup-first order documented on the
-    // operator).
-    "dedup_simhash_capped" -> ((s, dir) =>
-      operators.Dedup.simhashNearDups(
-        table(s, dir, "documents"), "doc_id", col("text"), n = 3, threshold = 0.8,
-        maxBucketSize = 256)),
-
-    // CAPSTONE (round 5): the end-to-end corpus-cleaning run a
-    // training-data pipeline actually executes — language gate →
-    // punctuation quality gate → exact dedup (hash-keyed, min-id keep) →
-    // near-dup keep-one (minhash LSH → exact-jaccard verify → connected
-    // components) — composed from the operators above and hash-checked
-    // END TO END against DuckDB running the identical pipeline (gates in
-    // SQL, closure via recursive CTE). Every stage is the scale shape:
-    // narrow filters, hash-keyed exchange, banded LSH, log-round
-    // label propagation.
-    "pipeline_clean" -> ((s, dir) => {
-      val docs = table(s, dir, "documents")
-      val kept = docs
-        .filter(operators.TextAnalysis.langId(col("text")) === "en" &&
-          operators.TextAnalysis.punctRatio(col("text")) < 0.3)
-        .select(col("doc_id"), col("text"))
-      // The gated+deduped corpus materializes ONCE (round 18): `exact`
-      // is an EXPENSIVE derived frame (text scan → langId/punct gates →
-      // full-text hash-window exchange), and its consumers evaluate it
-      // four times — minhashNearDups reads its input through three plan
-      // arms (signature pass + both verify sides; no stage reuse fires
-      // across the aliased sides) and the cluster id list is a fourth.
-      // That is 4 gate passes and 4 corpus-text shuffles per run. One
-      // SER checkpoint (the pageRank-edge-frame class: corpus-sized by
-      // necessity, released the moment the last consumer has
-      // materialized) pays the pass once. dedup_keep/dedup_clusters
-      // deliberately do NOT get this: their input is a bare pruned
-      // parquet scan, which is cheaper re-read than pinned.
-      // both minhashNearDups' result and nearDupClusters' labels are
-      // eagerly checkpointed inside the calls, so every read of `exact`'s
-      // blocks has happened by the time the scope exits
-      val clusters = operators.Checkpoints.scope() { s =>
-        val exact = s.checkpoint(
-          operators.Dedup.exactDedup(kept, Seq(col("text")), col("doc_id")))
-        nearDupClustersOf(exact.select(col("doc_id")),
-          operators.Dedup.minhashNearDups(exact, "doc_id", col("text"), 3, 0.8))
-      }
-      // The representatives ARE the answer (round 18): nearDupClusters'
-      // output id set is exactly its `ids` input — `exact`'s ids — and
-      // reps are a subset of those, so the old `exact ⋈ reps` closing
-      // join was an identity semi-join that re-evaluated the whole
-      // gates→exactDedup subtree (scan, langId, punctRatio, hash-window
-      // exchange) a third time to keep every row it was handed.
-      clusters.filter(col("id") === col("rep"))
-        .select(col("id").as("doc_id"))
-    }),
-
-    // CAPSTONE 2 — corpus PREPARATION: decontaminate (vs the eval split)
-    // → stratified sample by language → train/val/test assignment →
-    // per-source context-window packing → per-split corpus accounting.
-    // Every stage is one of the curation operators; the whole chain has
-    // two data-bounded exchanges (decontam hits, final agg) plus the
-    // per-source packing window — nothing corpus-sized shuffles twice.
-    // Splits draw from a SHIFTED key so sampling and splitting are
-    // independent decisions.
-    "pipeline_prepare" -> ((s, dir) => {
-      val docs = table(s, dir, "documents")
-      val bench = docs.filter(pmod(col("doc_id"), lit(37)) === 0)
-      val train0 = docs.filter(pmod(col("doc_id"), lit(37)) =!= 0)
-      val flagged = operators.Curation.contaminationHits(
-        train0, bench, "doc_id", col("text"), n = 3, minOverlap = 2)
-      val clean = train0.join(flagged.select(col("doc_id")), Seq("doc_id"), "left_anti")
-      val sampled = operators.Curation.stratifiedSample(
-        clean, col("lang"), col("doc_id"), Map("en" -> 0.5, "de" -> 0.25), 0.1)
-      val split = operators.Curation.assignSplits(
-        sampled, col("doc_id") + lit(777), Seq(("train", 0.9), ("val", 0.95)), "test")
-      val packed = operators.Curation.packSequential(
-        split, col("source"), col("doc_id"),
-        operators.TextAnalysis.tokenCount(col("text")), binTokens = 512)
-      packed.groupBy(col("split"))
-        .agg(count(lit(1)).as("n_docs"),
-          sum(operators.TextAnalysis.tokenCount(col("text"))).as("n_tokens"),
-          count_distinct(concat(col("source"), lit("#"), col("bin"))).as("n_bins"))
-    }),
-
-    // benchmark decontamination: train docs sharing >= 2 distinct 3-gram
-    // shingles with the (broadcast) eval split — the eval side never
-    // forces a shuffle of the corpus shingles
-    "pipeline_decontam" -> ((s, dir) => {
-      val docs = table(s, dir, "documents")
-      val bench = docs.filter(pmod(col("doc_id"), lit(37)) === 0)
-      val train = docs.filter(pmod(col("doc_id"), lit(37)) =!= 0)
-      operators.Curation.contaminationHits(train, bench, "doc_id", col("text"),
-        n = 3, minOverlap = 2)
-    }),
-
-    // deterministic stratified Bernoulli sample — zero-shuffle filter,
-    // retry/partitioning-invariant (selection is a pure function of doc_id)
-    "pipeline_stratified" -> ((s, dir) =>
-      operators.Curation.stratifiedSample(table(s, dir, "documents"),
-          col("lang"), col("doc_id"),
-          Map("en" -> 0.5, "de" -> 0.25), default = 0.1)
-        .select(col("doc_id"), col("lang"), col("source"))),
-
-    // pretraining chunking: long documents → overlapping fixed-length
-    // token windows (window 32, stride 16); last chunk = first window
-    // reaching the end, every token covered, zero exchanges
-    "pipeline_chunks" -> ((s, dir) =>
-      operators.TextAnalysis.tokenChunks(table(s, dir, "documents"),
-        "doc_id", col("text"), window = 32, stride = 16)),
-
-    // temperature (α) source resampling — mT5/XLM-R mixture flattening
-    // as a downsample-only deterministic filter; rates derive from the
-    // per-source counts (rarest source keeps 100%), micro-quantized so
-    // the one pow() step pins identically across engines
-    "pipeline_temperature" -> ((s, dir) =>
-      operators.Curation.temperatureSample(table(s, dir, "documents"),
-          col("lang"), col("doc_id"), alpha = 0.3)
-        .select(col("doc_id"), col("lang"))),
-
-    // deterministic training-order shuffle: sharded pseudo-random
-    // permutation (one exchange on the shard, parallel windows — never a
-    // global row_number)
-    "pipeline_shuffle" -> ((s, dir) =>
-      operators.Curation.shuffleOrder(table(s, dir, "documents"),
-          col("doc_id"), shards = 16)
-        .select(col("doc_id"), col("shard"), col("pos"))),
-
-    // deterministic train/val/test split assignment — zero shuffles,
-    // retry-stable, incremental-refresh-safe (existing rows never move)
-    "pipeline_splits" -> ((s, dir) =>
-      operators.Curation.assignSplits(table(s, dir, "documents"),
-          col("doc_id"), Seq(("train", 0.9), ("val", 0.95)), last = "test")
-        .groupBy(col("lang"), col("split"))
-        .agg(count(lit(1)).as("n"))),
-
-    // sequential context-window packing: per-source running-total fill,
-    // one exchange on the partition column (never a global order)
-    "pipeline_pack" -> ((s, dir) =>
-      operators.Curation.packSequential(table(s, dir, "documents"),
-          col("source"), col("doc_id"),
-          operators.TextAnalysis.tokenCount(col("text")), binTokens = 512)
-        .groupBy(col("source"), col("bin"))
-        .agg(count(lit(1)).as("n_docs"),
-          sum(operators.TextAnalysis.tokenCount(col("text"))).as("n_tokens"))),
-
-    // domain mixing by exact per-source quota: deterministic draw ranks
-    // within each source, one shuffle on the stratum
-    "pipeline_mix" -> ((s, dir) =>
-      operators.Curation.mixByQuota(table(s, dir, "documents"),
-          col("source"), col("doc_id"),
-          Map("src0" -> 15, "src1" -> 10), default = 5)
-        .select(col("doc_id"), col("source"))),
-
-    // temperature-scaled source mixing (α = 1/2 so ⌊√n⌋ keeps the whole
-    // budget split in exact integers — no cross-engine pow() drift)
-    "curation_temperature" -> ((s, dir) =>
-      operators.Curation.temperatureMix(
-        table(s, dir, "documents"), "source", "doc_id", budget = 200L)),
-
-    // DSIR importance resampling: hashed uni+bigram features, add-one
-    // smoothed target/raw log-ratios in micro-nat fixed point — the
-    // oracle re-derives the whole model (hash, counts, weights, scores)
-    // independently; target = the English subset
-    "curation_dsir" -> ((s, dir) =>
-      operators.Curation.dsirWeights(
-        table(s, dir, "documents"), "doc_id", col("text"),
-        col("lang") === "en")),
-
-    // CCNet perplexity bucketing (Wenzek et al. 2020): per-language
-    // head/middle/tail thirds by char-trigram LM cost — the LM pass is
-    // text_ppl's, the split is exact integer rank arithmetic, and the
-    // only new exchange is one language-keyed window
-    "curation_ccnet_buckets" -> ((s, dir) =>
-      operators.Curation.ccnetBuckets(
-        table(s, dir, "documents"), "doc_id", col("text"), col("lang"))),
-
-    // cluster-balanced diversity sample: SemDeDup centroid assignment +
-    // flat deterministic quota per cluster (WindowGroupLimit bounds the
-    // rank exchange to n rows per cluster per input partition)
-    "curation_cluster_sample" -> ((s, dir) =>
-      operators.Curation.clusterBalancedSample(
-        table(s, dir, "embeddings"), SemCentroids, perCluster = 25)),
-
-    // contamination evidence: maximal matched-3-gram word spans per
-    // (train doc, bench doc) — the leakage-audit report behind the
-    // pipeline_decontam counts (same synthetic bench split)
-    "curation_decontam_spans" -> ((s, dir) => {
-      val docs = table(s, dir, "documents")
-      operators.Curation.contaminationSpans(
-        docs.filter(col("doc_id") % 37 =!= 0),
-        docs.filter(col("doc_id") % 37 === 0),
-        "doc_id", col("text"), n = 3)
-    }),
-
-    // CAPSTONE 3 — hybrid retrieval with reciprocal-rank fusion: a
-    // semantic ranking (exact cosine top-20) and a lexical ranking
-    // (distinct-token overlap top-20) fuse by RRF with FIXED-POINT
-    // integer contributions (10⁶ DIV (60 + rank)) — ranks are exact
-    // ints, so the fused scores hash-match across engines where a
-    // float 1/(60+r) sum could not. Top-10 per query, deterministic
-    // tiebreak.
-    "pipeline_rrf" -> ((s, dir) => {
-      val emb = table(s, dir, "embeddings")
-      val docs = table(s, dir, "documents")
-      val cosRanks = operators.Similarity.cosineTopK(
-        emb, emb.filter(col("vec_id") < 10), k = 20)
-      val toks = docs.select(col("doc_id"),
-        explode(array_distinct(operators.TextAnalysis.tokens(col("text")))).as("t"))
-      val qtoks = toks.filter(col("doc_id") < 10)
-        .select(col("doc_id").as("qid"), col("t"))
-      val wLex = org.apache.spark.sql.expressions.Window.partitionBy(col("qid"))
-        .orderBy(col("c").desc, col("doc_id").asc)
-      val lexRanks = qtoks.join(toks, "t")
-        .groupBy(col("qid"), col("doc_id")).agg(count(lit(1)).as("c"))
-        .withColumn("rnk", row_number().over(wLex)).filter(col("rnk") <= 20)
-      val contrib = cosRanks
-        .select(col("qid"), col("vec_id").as("id"),
-          expr("1000000L DIV (60 + rnk)").as("s"))
-        .unionByName(lexRanks
-          .select(col("qid"), col("doc_id").as("id"),
-            expr("1000000L DIV (60 + rnk)").as("s")))
-      val wF = org.apache.spark.sql.expressions.Window.partitionBy(col("qid"))
-        .orderBy(col("rrf_micro").desc, col("id").asc)
-      contrib.groupBy(col("qid"), col("id"))
-        .agg(sum(col("s")).as("rrf_micro"))
-        .withColumn("rnk", row_number().over(wF).cast("bigint"))
-        .filter(col("rnk") <= 10)
-        .select(col("qid"), col("rnk"), col("id").as("doc_id"), col("rrf_micro"))
-    }),
-
-    // blocklist decontamination with a Bloom prefilter: bloom-negative
-    // rows pass inside the scan's codegen stage (zero exchanges for the
-    // bulk of the corpus); only the bloom-positive sliver pays the exact
-    // anti-join — output is EXACTLY the anti-join, deterministically
-    "pipeline_bloom" -> ((s, dir) => {
-      val docs = table(s, dir, "documents")
-      val block = docs.filter(pmod(col("doc_id"), lit(41)) === 0)
-      operators.Curation.bloomDecontaminate(docs, block, col("text"), col("text"),
-          expectedItems = 1000L, fpp = 0.03)
-        .select(col("doc_id"), col("lang"), col("source"))
-    }),
-
-    // exact duplicated-substring runs (Lee et al. 2022 shape): k-gram
-    // hash anchoring + gaps-and-islands run merge + byte-equality
-    // confirm — the distributed stand-in for the paper's suffix array
-    "dedup_substring" -> ((s, dir) =>
-      operators.Dedup.duplicateRuns(table(s, dir, "documents"),
-        "doc_id", col("text"), k = 40, minRunLen = 80)),
-
-    // the CAPPED substring-dedup configuration (round 14) — the mega-gram
-    // valve a 100-TB run has engaged (boilerplate grams at B corpus-wide
-    // positions are B² pairs of low-signal work) under the hash oracle
-    // with the same parameters the ×256 scale curve measures: grams at
-    // > 64 positions are dropped BEFORE postings lists form, and the
-    // oracle replays the cap (count per gram ≤ 64) so the row is exact
-    // at any SF whether or not any gram saturates.
-    "dedup_substring_capped" -> ((s, dir) =>
-      operators.Dedup.duplicateRuns(table(s, dir, "documents"),
-        "doc_id", col("text"), k = 40, minRunLen = 80, maxPositionsPerGram = 64)),
-
-    // intra-document repeats: ≥20-char substrings occurring twice in the
-    // SAME document — the self-repetition/boilerplate half of the
-    // substring-dedup story
-    "dedup_substring_self" -> ((s, dir) =>
-      operators.Dedup.selfRepeatRuns(table(s, dir, "documents"),
-        "doc_id", col("text"), k = 20, minRunLen = 20)),
-
-    // incremental corpus-vs-delta dedup: a "new batch" of re-labeled
-    // copies probes the corpus's LSH bands. Oracled in the exact regime
-    // (threshold 1.0 = equal shingle sets, where banding recall is
-    // deterministically 1 — identical sets ⇒ identical signatures);
-    // the fuzzy regime is spec-pinned (ScaleOpsSpec)
-    "dedup_incremental" -> ((s, dir) => {
-      val docs = table(s, dir, "documents")
-      val corpus = docs.filter(size(operators.Dedup.wordShingles(col("text"), 3)) > 0)
-      val delta = corpus.filter(pmod(col("doc_id"), lit(7)) === 0)
-        .select((col("doc_id") + 100000L).as("doc_id"), col("text"))
-      operators.Dedup.incrementalNearDups(corpus, delta, "doc_id",
-        col("text"), n = 3, threshold = 1.0)
-    }),
-
-    // character-entropy quality signal (compression proxy: boilerplate/
-    // repetition scores low, gibberish high) — one-pass kernel, zero
-    // shuffle, fixed-point micro-nat fields so the hash is exact
-    "text_entropy" -> ((s, dir) =>
-      table(s, dir, "documents")
-        .filter(length(col("text")) > 0)
-        .select(col("doc_id"),
-          operators.TextAnalysis.charEntropy(col("text")).as("e"))
-        .select(col("doc_id"), col("e.n_cp").as("n_cp"),
-          col("e.ent_sum_micro").as("ent_sum_micro"))),
-
-    // char-trigram LM self-scoring (CCNet-style quality prior): model and
-    // scores in fixed-point micro-nats, every aggregate exact BIGINT;
-    // the fused single-gram-pass form (the two-step fit/score API exists
-    // for scoring a different corpus)
-    "text_ppl" -> ((s, dir) =>
-      operators.TextAnalysis.ngramScoreSelf(
-        table(s, dir, "documents"), "doc_id", col("text"), n = 3)),
-
-    // link-graph authority prior: fixed-point PageRank over the
-    // supplier→part incidence graph, 3 synchronous iterations, one
-    // shuffle per iteration (contributions aggregate on dst)
-    "graph_pagerank" -> ((s, dir) => {
-      val li = table(s, dir, "lineitem")
-      val edges = li.select(col("l_suppkey").as("src"),
-        (col("l_partkey") + lit(1000000L)).as("dst")).distinct()
-      operators.Graph.pageRank(edges, iterations = 3)
-        .orderBy(col("rank").desc, col("node").asc).limit(20)
-    }),
-
-    // z-order layout: Morton-code bucketing of (partkey, suppkey) — each
-    // z-bucket covers a narrow rectangle in BOTH keys (the min/max spans
-    // below are what min-max file stats would prune on after zorderBy).
-    // Keys quantize proportionally into the 16-bit z domain (broadcast
-    // one-row max — the "range-rank first" rule from Layout.zValue2)
-    "rel_zorder" -> ((s, dir) => {
-      val li = table(s, dir, "lineitem")
-      val mx = li.agg(max(col("l_partkey")).as("mp"), max(col("l_suppkey")).as("ms"))
-      val q = li.crossJoin(broadcast(mx))
-        .withColumn("x", expr("(l_partkey * 65536) DIV (mp + 1)"))
-        .withColumn("y", expr("(l_suppkey * 65536) DIV (ms + 1)"))
-      val z = operators.Layout.zValue2(col("x"), col("y"))
-      q.select(shiftright(z, 26).as("zbucket"), col("l_partkey"), col("l_suppkey"))
-        .groupBy(col("zbucket"))
-        .agg(count(lit(1)).as("n"),
-          min(col("l_partkey")).as("min_pk"), max(col("l_partkey")).as("max_pk"),
-          min(col("l_suppkey")).as("min_sk"), max(col("l_suppkey")).as("max_sk"))
-    }),
-
-    "dedup_ngram_pairs" -> ((s, dir) => {
-      val docs = table(s, dir, "documents")
-      val pairs = docs.select(col("doc_id").as("id_a"), (col("doc_id") + 1).as("id_b"))
-      operators.Dedup.pairwiseJaccard(docs, "doc_id", col("text"), n = 3, pairs = pairs)
-    }),
-
-    // int8 quantization accounting (vector-store compression): the
-    // code's exact integer invariants + the scale, zero shuffle. Two
-    // SYNTHETIC edge rows ride along so the oracle pins the kernel's
-    // documented contract (round-6 ADVICE) instead of relying on the
-    // fixture avoiding it: empty vector → (0.0, 0, 0); non-finite
-    // element → NULL stats
-    "sim_quantize" -> ((s, dir) => {
-      import s.implicits._
-      val edges = Seq(
-        (-1L, Array.empty[Float]),
-        (-2L, Array(1.0f, Float.NaN))).toDF("vec_id", "embedding")
-      operators.Similarity.int8QuantStats(
-        table(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
-          .unionByName(edges))
-    }),
-
-    // exact threshold-range pairs: block-partitioned equi-join (see
-    // Similarity.cosineNearDupPairs for why LSH cannot be recall-exact at
-    // a 0.45 threshold — the shape here is a distributed GEMM tiling)
-    "dedup_embedding" -> ((s, dir) =>
-      operators.Similarity.cosineNearDupPairs(table(s, dir, "embeddings"), 0.45)),
-
-    // SemDeDup (Abbas et al. 2023): cluster-scoped embedding dedup —
-    // nearest-centroid assignment (literal centroids, zero-exchange
-    // projection), pairs only WITHIN a cluster (C balanced tasks, the
-    // subquadratic shape all-pairs dedup_embedding cannot have), keep
-    // the smallest id of any ≥-threshold pair; micro-quantized integer
-    // similarities make assignment + drops engine-exact
-    "dedup_semantic" -> ((s, dir) =>
-      operators.Similarity.semanticDedup(
-        table(s, dir, "embeddings"), SemCentroids, thresholdMicro = 450000L)),
-
-    // SemDeDup through the HIERARCHICAL assignment kernel (round 14) —
-    // the headline production configuration (C ∝ n with S = ⌈√C⌉) under
-    // the hash oracle, not just specs and scale curves: superCells = 3
-    // over the 8 literal centroids is a genuine two-level search
-    // (stride-sampled supers 0/2/4, per-super member lists). The oracle
-    // replays the WHOLE two-level argmax independently in SQL — super
-    // member assignment from the centroid literals, then per-vector
-    // super argmax and member argmax with the kernel's first-max-wins
-    // tie rule — so a kernel defect in either level breaks the hash.
-    "dedup_semantic_hier" -> ((s, dir) =>
-      operators.Similarity.semanticDedup(
-        table(s, dir, "embeddings"), SemCentroids, thresholdMicro = 450000L,
-        superCells = 3)),
-
-    // subquadratic SRP-LSH near-dup path (high-similarity regime): the
-    // corpus is doubled with byte-identical copies; identical vectors hash
-    // to identical buckets in every table, so recall on the duplicated
-    // pairs is deterministically 1 and the oracle is exact.
-    // planesPerTable = 8 is PINNED (round 17): this row is the
-    // strawman-tagged uncapped FIXED-width configuration — the API
-    // default flipped to the derived width (r16 verdict ask #3), so the
-    // old default lives on here explicitly as the rule-test curve.
-    "dedup_embedding_lsh" -> ((s, dir) => {
-      val emb = table(s, dir, "embeddings")
-      val copies = emb.withColumn("vec_id", col("vec_id") + lit(1000000))
-      operators.Similarity.nearDupPairsLSH(emb.unionByName(copies), threshold = 0.9,
-        dim = 64, planesPerTable = 8)
-    }),
-
-    // the same pair operator with the OCCUPANCY-DERIVED signature width
-    // (round 14): planesPerTable = 0 sizes H from one corpus count — the
-    // configuration the +log₂(growth) scale rule actually ships. The
-    // byte-identical-duplicate contract is width-INDEPENDENT (equal
-    // vectors share every bucket at any H), so the exact oracle
-    // transfers verbatim; threshold 0.9 keeps chance near-dups out at
-    // the driver SFs exactly as the fixed-width row does.
-    // planesPerTable = 0 is now ALSO the API default (round 17) — this
-    // row oracles exactly what a plain caller gets
-    "dedup_embedding_lsh_derived" -> ((s, dir) => {
-      val emb = table(s, dir, "embeddings")
-      val copies = emb.withColumn("vec_id", col("vec_id") + lit(1000000))
-      operators.Similarity.nearDupPairsLSH(emb.unionByName(copies), threshold = 0.9,
-        dim = 64, planesPerTable = 0)
-    }),
-
-    // the fixed-width operator WITH its round-16 `maxBucketSize` valve —
-    // the configuration that survives a growing corpus at fixed signature
-    // bits (the `dedup_simhash_capped` playbook, r15 verdict ask #1). The
-    // cap is a measured NO-OP at every driver SF (largest (table,bucket)
-    // occupancy on this doubled corpus: 64 at sf0.1, 24 at sf0.001 —
-    // pinned by Round16OpsSpec's headroom test), so this row sits under
-    // the UNWEAKENED exact oracle: every byte-identical pair, nothing
-    // else. At sweep scale the cap engages and bounds the bucket
-    // self-join (the 4.56×/octave ×256 tail this valve exists for).
-    "dedup_embedding_lsh_capped" -> ((s, dir) => {
-      val emb = table(s, dir, "embeddings")
-      val copies = emb.withColumn("vec_id", col("vec_id") + lit(1000000))
-      operators.Similarity.nearDupPairsLSH(emb.unionByName(copies), threshold = 0.9,
-        dim = 64, planesPerTable = 8, maxBucketSize = 256)
-    }),
-
-    // --- similarity search ----------------------------------------------
-    "sim_topk" -> ((s, dir) => {
-      val emb = table(s, dir, "embeddings")
-      operators.Similarity.cosineTopK(emb, emb.filter(col("vec_id") < 10), k = 5)
-    }),
-
-    // hard-negative mining (DPR/Contriever): strongest non-positive
-    // neighbors per query — self excluded, near-dups (cosine >= 0.9)
-    // excluded as unlabeled positives; exact filtered ranking, ids only
-    "sim_hard_negatives" -> ((s, dir) => {
-      val emb = table(s, dir, "embeddings")
-      operators.Similarity.hardNegatives(
-        emb, emb.filter(col("vec_id") < 10), k = 5, posThreshold = 0.9)
-    }),
-
-    // k-NN majority-vote classification (labels from the corpus, exact
-    // cosine neighbors, deterministic tie-breaks)
-    "sim_knn_classify" -> ((s, dir) => {
-      val emb = table(s, dir, "embeddings")
-      operators.Similarity.knnClassify(
-        emb.filter(col("vec_id") >= 20), emb.filter(col("vec_id") < 20), k = 5)
-    }),
-
-    // approximate top-k with a HARD oracle (sketch_stats pattern): per
-    // query, the ANN hit count against the exact top-5 is emitted as a
-    // recall-ok boolean the driver hash-checks. Deterministic planes +
-    // deterministic data ⇒ stable booleans; the ≥4-of-5 cut has margin
-    // (measured hits are 5/5 on the driver SFs, asserted in SimilaritySpec).
-    "sim_ann_lsh" -> ((s, dir) => {
-      val emb = table(s, dir, "embeddings")
-      val qs = emb.filter(col("vec_id") < 10)
-      // L=8 tables: per-neighbor miss ≈ 0.46⁸ ≈ 2e-3 even at this data's
-      // weak similarities, so ≥4-of-5 holds with wide margin on every SF
-      val ann = operators.Similarity.annTopK(emb, qs, k = 5, dim = 64, tables = 8)
-      val exact = operators.Similarity.cosineTopK(emb, qs, k = 5)
-      exact.join(ann.select(col("qid"), col("vec_id"), lit(1L).as("hit")),
-          Seq("qid", "vec_id"), "left")
-        .groupBy(col("qid"))
-        .agg((sum(coalesce(col("hit"), lit(0L))) >= 4).as("recall_ok"))
-    }),
-
-    // IVF coarse-quantizer ANN (the second index family next to SRP-LSH):
-    // recall vs exact top-5 emitted AS DATA and hash-checked, plus the
-    // deterministic self-hit contract (identical vector ⇒ same cell ⇒
-    // always found at rank 1). Measured hits: 4-5/5 at sf0.01, 5/5 at
-    // sf0.1 — the ≥4-of-5 cut has the same margin sim_ann_lsh uses.
-    // round 17: corpus-level macro contract (see [[annAggContract]] —
-    // the per-qid cuts rested on the biased first-K-by-id seeds).
-    // Measured macro recall@5 sums with trained centroids:
-    // 30/31/31 at sf0.001/0.01/0.1 → cut ≥ 24; self-hit is structural
-    // for the flat build (the query's own copy assigns to the cell the
-    // query probes first) → = 10.
-    "sim_ivf" -> ((s, dir) => {
-      val emb = table(s, dir, "embeddings")
-      val qs = emb.filter(col("vec_id") < 10)
-      val ivf = operators.Similarity.ivfTopK(emb, qs, k = 5)
-      val exact = operators.Similarity.cosineTopK(emb, qs, k = 5)
-      annAggContract(exact, ivf, recallSumCut = 24, selfHitsCut = 10)
-    }),
-
-    // IVF with ONE distributed Lloyd refinement pass (round 11): the
-    // refined centroids are bit-deterministic — the Lloyd step
-    // accumulates micro-unit integer sums (decimal(38,0),
-    // order-independent) and divides once on the driver — so refinement
-    // is inside the hash oracle. Round 17: corpus-level macro contract;
-    // measured sums 32/29/33 → cut ≥ 24, self = 10 (structural).
-    "sim_ivf_refined" -> ((s, dir) => {
-      val emb = table(s, dir, "embeddings")
-      val qs = emb.filter(col("vec_id") < 10)
-      val ivf = operators.Similarity.ivfTopK(emb, qs, k = 5, refineIters = 1)
-      val exact = operators.Similarity.cosineTopK(emb, qs, k = 5)
-      annAggContract(exact, ivf, recallSumCut = 24, selfHitsCut = 10)
-    }),
-
-    // IVF built through the HIERARCHICAL assignment kernel (round 14,
-    // judge ask): `superCells = ⌈√cells⌉` is the configuration the C ∝ n
-    // production rule actually runs — the corpus-side index build goes
-    // through CellAssignHier's two-level O((S + P·C/S)·dim) search
-    // instead of the flat O(C·dim) scan. Round 15 (judge ask 2): the
-    // build-side MULTI-PROBE default (superProbes = 3) searches the 3
-    // nearest supers' member lists, recovering the single-probe build's
-    // parking loss — measured recall@5 floor rose from 2-of-5 (P=1, the
-    // r14 configuration) to 3-of-5 at sf0.001/0.01 and 4-of-5 at sf0.1,
-    // i.e. FLAT-build family parity — so the cut is ≥2 (sim_ivf's own
-    // cut), margin 1 under the observed minimum. The SHARP deterministic
-    // contract is the self-hit: the query's own corpus copy hier-assigns
-    // to the same cell the query probes first — measured 10/10 at
-    // sf0.001/0.01/0.1, pinned exactly. Both booleans are stable
-    // (deterministic kernel, deterministic stride-sampled supers).
-    // Round 17: corpus-level macro contract; measured sums 30/33/32 →
-    // cut ≥ 24. Self-hit under the hier build is MEASURED (two-level
-    // assignment may park a vector outside the probed cells): 10/10 at
-    // every driver SF → cut ≥ 9, margin 1.
-    "sim_ivf_hier" -> ((s, dir) => {
-      val emb = table(s, dir, "embeddings")
-      val qs = emb.filter(col("vec_id") < 10)
-      val ivf = operators.Similarity.ivfTopK(emb, qs, k = 5, superCells = 4)
-      val exact = operators.Similarity.cosineTopK(emb, qs, k = 5)
-      annAggContract(exact, ivf, recallSumCut = 24, selfHitsCut = 9)
-    }),
-
-    // the single-probe hier build kept as the RULE-TEST strawman
-    // (round 15, same pattern as dedup_semantic vs _hier): P=1 is the
-    // r14 configuration whose measured parking loss (recall@5 floor
-    // 2-of-5 at every driver SF) motivated the superProbes=3 default —
-    // pinned here as data so the multi-probe gain stays measurable
-    // under the hash gate. Cut ≥1 = margin 1 under ITS observed
-    // minimum; the sharp self-hit contract holds at any P (identical
-    // vectors co-assign).
-    // Round 17: corpus-level macro contract; measured sums 26/28/26 →
-    // cut ≥ 20. P=1 parking loss is REAL with de-biased seeds — the
-    // query's corpus copy can hier-assign outside the probed cells
-    // (self-hits measured 8/9/10 across SFs → cut ≥ 7): exactly the
-    // strawman behavior this rule-test row exists to keep measurable
-    // against the superProbes=3 default above.
-    "sim_ivf_hier_p1" -> ((s, dir) => {
-      val emb = table(s, dir, "embeddings")
-      val qs = emb.filter(col("vec_id") < 10)
-      val ivf = operators.Similarity.ivfTopK(emb, qs, k = 5,
-        superCells = 4, superProbes = 1)
-      val exact = operators.Similarity.cosineTopK(emb, qs, k = 5)
-      annAggContract(exact, ivf, recallSumCut = 20, selfHitsCut = 7)
-    }),
-
-    // SRP-LSH ANN with the DERIVED signature width (round 14, judge
-    // ask): `planesPerTable = 0` sizes H from the corpus count
-    // (H = ⌈log₂(n/16)⌉, deriveSrpPlanes) — the occupancy-constant
-    // configuration a production corpus runs, where fixed bits would let
-    // candidate counts grow linearly with the data. The derived widths
-    // at the driver SFs (5 bits at n=500, 7 at n=2000) are NARROWER than
-    // sim_ann_lsh's fixed 8, so buckets are coarser and per-table
-    // collision probability strictly higher — the same ≥4-of-5 cut
-    // holds with at least sim_ann_lsh's margin (measured 5/5).
-    "sim_ann_lsh_derived" -> ((s, dir) => {
-      val emb = table(s, dir, "embeddings")
-      val qs = emb.filter(col("vec_id") < 10)
-      val ann = operators.Similarity.annTopK(emb, qs, k = 5, dim = 64,
-        tables = 8, planesPerTable = 0)
-      val exact = operators.Similarity.cosineTopK(emb, qs, k = 5)
-      exact.join(ann.select(col("qid"), col("vec_id"), lit(1L).as("hit")),
-          Seq("qid", "vec_id"), "left")
-        .groupBy(col("qid"))
-        .agg((sum(coalesce(col("hit"), lit(0L))) >= 4).as("recall_ok"))
-    }),
-
-    // PQ compressed-code ANN (third index family): exact re-rank of an
-    // ADC candidate set; recall + self-hit as data. Round 17:
-    // Lloyd-TRAINED codebooks (pool k-means per subspace) replaced
-    // sampled codewords; corpus-level macro contract, measured sums
-    // 38/38/37 → cut ≥ 30 — the strongest recall floor in the family,
-    // which is what trained books buy. Self measured 10/10 everywhere
-    // → = 10. All PQ arithmetic is per-row left-to-right, so the
-    // booleans are exact.
-    "sim_pq" -> ((s, dir) => {
-      val emb = table(s, dir, "embeddings")
-      val qs = emb.filter(col("vec_id") < 10)
-      val pq = operators.Similarity.pqTopK(emb, qs, k = 5)
-      val exact = operators.Similarity.cosineTopK(emb, qs, k = 5)
-      annAggContract(exact, pq, recallSumCut = 30, selfHitsCut = 10)
-    }),
-
-    // IVF-PQ composed ANN (the billion-vector production index): coarse
-    // cells bound WHICH codes a query scans, PQ bounds WHAT a scan reads;
-    // exact re-rank of the ADC candidates, recall contract as data like
-    // sim_ivf/sim_pq. Round 17: trained centroids + codebooks,
-    // corpus-level macro contract; measured sums 28/31/35 → cut ≥ 22,
-    // self measured 10/10 everywhere → = 10.
-    "sim_ivfpq" -> ((s, dir) => {
-      val emb = table(s, dir, "embeddings")
-      val qs = emb.filter(col("vec_id") < 10)
-      val ivfpq = operators.Similarity.ivfPqTopK(emb, qs, k = 5)
-      val exact = operators.Similarity.cosineTopK(emb, qs, k = 5)
-      annAggContract(exact, ivfpq, recallSumCut = 22, selfHitsCut = 10)
-    }),
-
-    // IVF-PQ with BY-RESIDUAL coding (FAISS `IVFx,PQy` default): codes
-    // quantize v̂ − ĉ(cell) instead of v̂ — residuals span a tighter ball,
-    // so the same codebook budget quantizes finer; scoring adds the
-    // separable cell term dot(q, ĉ) back via a broadcast per (qid, probed
-    // cell) scalar, leaving the corpus scan shape identical to sim_ivfpq.
-    // Same contract family as the non-residual row (round 17: measured
-    // sums 29/32/30 → cut ≥ 22, self = 10). With only 10 queries the
-    // residual-vs-raw ordering is noise-bounded (±5 hits across SFs);
-    // the spec pins near-parity with slack, not strict superiority — the
-    // pre-r17 "residual ≥ raw" pin was another artifact of the biased
-    // seeds.
-    "sim_ivfpq_residual" -> ((s, dir) => {
-      val emb = table(s, dir, "embeddings")
-      val qs = emb.filter(col("vec_id") < 10)
-      val ivfpq = operators.Similarity.ivfPqTopK(emb, qs, k = 5, residual = true)
-      val exact = operators.Similarity.cosineTopK(emb, qs, k = 5)
-      annAggContract(exact, ivfpq, recallSumCut = 22, selfHitsCut = 10)
-    }),
-
-    // --- text analysis ---------------------------------------------------
-    "text_langid" -> ((s, dir) =>
-      table(s, dir, "documents").select(
-        col("doc_id"),
-        operators.TextAnalysis.langId(col("text")).as("lang_pred"))),
-
-    "text_tokens" -> ((s, dir) =>
-      table(s, dir, "documents").select(
-        col("doc_id"),
-        operators.TextAnalysis.tokenCount(col("text")).as("n_tokens"),
-        operators.TextAnalysis.wordTokenCount(col("text")).as("n_words"))),
-
-    // intra-document repetition rate (Gopher/C4 quality signal): fraction
-    // of word 3-grams that repeat within the doc — narrow, zero shuffles
-    "text_rep_rate" -> ((s, dir) =>
-      table(s, dir, "documents").select(
-        col("doc_id"),
-        greatest(size(operators.TextAnalysis.tokens(col("text"))) - 2, lit(0))
-          .cast("long").as("n3_total"),
-        size(operators.Dedup.wordShingles(col("text"), 3)).cast("long").as("n3_uniq"),
-        operators.TextAnalysis.repetitionRate(col("text"), 3).as("rep_rate"))),
-
-    // PII scrub over text with deterministically planted email/IP/phone
-    // (the raw corpus has none — planting makes every row exercise all
-    // three patterns); narrow triple regexp_replace, zero shuffles
-    "text_redact" -> ((s, dir) => {
-      val planted = concat(
-        col("text"), lit(" contact u"), col("doc_id").cast("string"),
-        lit("@mail.example.org from 10.2."), pmod(col("doc_id"), lit(250)).cast("string"),
-        lit(".9 call 415-555-"), lpad(pmod(col("doc_id"), lit(10000)).cast("string"), 4, "0"))
-      table(s, dir, "documents").select(
-        col("doc_id"),
-        operators.TextAnalysis.redactPII(planted).as("redacted"),
-        operators.TextAnalysis.piiCount(planted).cast("long").as("n_pii"))
-    }),
-
-    "text_quality" -> ((s, dir) =>
-      // one-pass TextStats kernel; ratios derived from the struct so the
-      // text is scanned once per row, not once per output column
-      table(s, dir, "documents")
-        .select(col("doc_id"), operators.TextAnalysis.stats(col("text")).as("t"))
-        .select(
-          col("doc_id"),
-          (col("t.n_stop").cast("double") / col("t.n_tokens")).as("stop_ratio"),
-          (col("t.n_punct").cast("double") / col("t.n_chars")).as("punct_ratio"),
-          (col("t.sum_token_len").cast("double") / col("t.n_tokens")).as("mean_tok_len"))
-        .withColumn("quality",
-          col("stop_ratio") * lit(0.5) + (lit(1.0) - col("punct_ratio")) * lit(0.3) +
-            when(col("mean_tok_len") >= 3 && col("mean_tok_len") <= 8, lit(0.2)).otherwise(lit(0.0)))),
-
-    "text_fingerprint" -> ((s, dir) =>
-      table(s, dir, "documents").select(
-        col("doc_id"),
-        operators.TextAnalysis.fingerprint(col("text")).as("fp"))),
-
-    // Gopher heuristic rules (Rae et al. 2021, App. A) — the published
-    // filter set, one narrow zero-shuffle projection; every ratio is an
-    // exact integer quotient, re-derived independently by the oracle
-    "text_gopher" -> ((s, dir) =>
-      // `keep` applies the published thresholds (uniformly false here:
-      // the synthetic vocabulary has one required stopword — a real
-      // corpus splits); `keep_tuned` is the retuned gate that splits the
-      // fixture, so the oracle hash pins a VARYING gate decision too
-      table(s, dir, "documents")
-        .select(col("doc_id"),
-          operators.TextAnalysis.gopherSignals(col("text")).as("g"),
-          operators.TextAnalysis.gopherSignals(col("text"),
-            minWords = 30L, minStopHits = 1L).as("gt"))
-        .select(col("doc_id"),
-          col("g.n_words").as("n_words"),
-          col("g.mean_word_len").as("mean_word_len"),
-          col("g.symbol_ratio").as("symbol_ratio"),
-          col("g.bullet_ratio").as("bullet_ratio"),
-          col("g.ellipsis_ratio").as("ellipsis_ratio"),
-          col("g.alpha_ratio").as("alpha_ratio"),
-          col("g.n_stop_hits").as("n_stop_hits"),
-          col("g.keep").as("keep"),
-          col("gt.keep").as("keep_tuned"))),
-
-    // C4 cleaning rules (Raffel et al. 2020 §2.2) over a page with line
-    // structure. The corpus is single-line word soup, so the page is
-    // PLANTED deterministically (the text_redact pattern): 7-word lines
-    // whose terminal punctuation varies by (doc_id + line), plus a
-    // "lorem ipsum" line on doc_id%11 and a brace+javascript line on
-    // doc_id%13 — every rule fires on some rows and the oracle rebuilds
-    // the identical page byte-for-byte
-    "text_c4_rules" -> ((s, dir) => {
-      val words = split(col("text"), " ")
-      val nLines = ceil(size(words).cast("double") / 7.0).cast("int")
-      val lineArr = transform(sequence(lit(0), nLines - 1), i =>
-        concat(array_join(slice(words, i * 7 + 1, lit(7)), " "),
-          when(pmod(col("doc_id") + i, lit(3)) === 0, lit("."))
-            .when(pmod(col("doc_id") + i, lit(3)) === 1, lit("?"))
-            .otherwise(lit(""))))
-      val page = concat(array_join(lineArr, "\n"),
-        when(pmod(col("doc_id"), lit(11)) === 0,
-          lit("\nlorem ipsum dolor sit amet.")).otherwise(lit("")),
-        when(pmod(col("doc_id"), lit(13)) === 0,
-          lit("\nvar x = { javascript }")).otherwise(lit("")))
-      table(s, dir, "documents")
-        .select(col("doc_id"), operators.TextAnalysis.c4Signals(page).as("c"))
-        .select(col("doc_id"),
-          col("c.n_lines").as("n_lines"),
-          col("c.n_kept_lines").as("n_kept_lines"),
-          col("c.n_sentences").as("n_sentences"),
-          col("c.has_lorem").as("has_lorem"),
-          col("c.has_brace").as("has_brace"),
-          col("c.keep").as("keep"))
-    }),
-
-    // Gopher duplicate-n-gram signals (Rae et al. 2021 App. A.2): chars
-    // covered by the top 2-gram and by duplicated 3-grams, as exact
-    // integers beside the total — vocabulary-sized (id, gram) exchanges,
-    // never the text
-    "text_dup_ngrams" -> ((s, dir) =>
-      operators.TextAnalysis.dupNgramStats(
-        table(s, dir, "documents"), "doc_id", col("text"), nTop = 2, nDup = 3)),
-
-    // skip-gram co-occurrence statistics (word2vec/GloVe prep): ordered
-    // pairs at distance 1..2, top-50 deterministic cut — equi-joins on
-    // (doc, pos+d), one partial-agg'd pair exchange, TakeOrdered
-    "text_cooccurrence" -> ((s, dir) =>
-      operators.TextAnalysis.cooccurrenceTopK(
-        table(s, dir, "documents"), "doc_id", col("text"), window = 2, k = 50)),
-
-    // distributed BPE vocabulary learning (Sennrich et al. 2016): one
-    // corpus pass folds to a (word, freq) vocab, then every merge is
-    // vocabulary-bounded — the learned merge table, deterministic
-    // tie-breaks, all-integer/string output
-    "text_bpe_learn" -> ((s, dir) =>
-      operators.TextAnalysis.bpeLearn(
-        table(s, dir, "documents"), col("text"), merges = 8)),
-
-    // tokenizer ENCODE with the merges learned from the same corpus:
-    // the apply side is a zero-shuffle chain of plan-literal replaces
-    // (left-to-right non-overlapping = BPE apply order)
-    "text_bpe_encode" -> ((s, dir) => {
-      val learned = operators.TextAnalysis.bpeLearn(
-          table(s, dir, "documents"), col("text"), merges = 8)
-        .orderBy("merge_rank").collect()
-        .map(r => (r.getString(1), r.getString(2))).toSeq
-      table(s, dir, "documents")
-        .select(col("doc_id"),
-          operators.TextAnalysis.bpeEncode(col("text"), learned).as("e"))
-        .select(col("doc_id"), col("e.n_tokens").as("n_tokens"),
-          col("e.tokens").as("tokens"))
-    }),
-
-    // model-based quality filtering: hashed linear classifier with
-    // formula-derived integer weights (engine-exact, no weight table)
-    "text_quality_model" -> ((s, dir) =>
-      table(s, dir, "documents")
-        .select(col("doc_id"), operators.TextAnalysis.qualityModel(col("text")).as("qm"))
-        .select(col("doc_id"), col("qm.n_tokens").as("n_tokens"),
-          col("qm.score").as("qm_score"), (col("qm.score") > 0).as("keep"))),
-
-    // --- multimodal plumbing (stub codec, real batch shape) -------------
-    // layer composition: exact dedup over OPAQUE BINARY media payloads —
-    // the same hash-keyed keepFirstByHash shape the text path uses, with
-    // xxhash64 over raw bytes as the 8-byte exchange key
-    "mm_dedup" -> ((s, dir) => {
-      implicit val sp: SparkSession = s
-      val media = operators.Multimodal.fromText(
-        table(s, dir, "documents"), "doc_id", "text", "image")
-      operators.Dedup.exactDedup(media.toDF(), Seq(col("content")), col("media_id"))
-        .select(col("media_id"))
-    }),
-
-    // REAL image decode: one JDK-encoded PNG per document (dims derived
-    // from n_chars, constant gray = doc_id mod 256), read back through
-    // javax.imageio — the oracle predicts the decoded width/height and
-    // the luma-feature gray level analytically, so any encode/decode or
-    // pixel-path defect breaks the hash. (Audio decodes real WAV in
-    // mm_audio; video decodes real GIF in mm_video/mm_frames — the stub
-    // remains only for payloads no JDK reader accepts.)
-    "mm_decode" -> ((s, dir) => {
-      implicit val sp: SparkSession = s
-      val media = operators.Multimodal.pngMedia(
-        table(s, dir, "documents"), "doc_id",
-        lit(16) + col("n_chars") % 64, lit(16) + (col("n_chars") * 7) % 48)
-      operators.Multimodal.decode(media).toDF()
-        .select(col("media_id"),
-          col("width").cast("bigint").as("width"),
-          col("height").cast("bigint").as("height"),
-          col("n_frames").cast("bigint").as("n_frames"),
-          // features hold mean luma in [0,1]; ×255 recovers the exact
-          // constant fill (float error ≪ 0.5, so round is exact)
-          round(element_at(col("features"), 1) * 255).cast("bigint").as("luma_q"))
-    }),
-
-    // REAL audio decode: one JDK-encoded 16-bit PCM mono WAV per document
-    // (rate 8000/12000/16000 by doc_id mod 3, 400 + n_chars mod 256
-    // samples, waveform ((i·31 + id·17) mod 2001) − 1000), read back
-    // through javax.sound.sampled — the oracle re-derives the sample
-    // rate, frame count, and per-segment mean-|amplitude| features
-    // analytically (exact integer sums, one correctly-rounded float
-    // divide), so a container or PCM parsing defect breaks the hash.
-    // Video stays stubbed (the JDK has no video codec; documented).
-    "mm_audio" -> ((s, dir) => {
-      implicit val sp: SparkSession = s
-      val media = operators.Multimodal.wavMedia(
-        table(s, dir, "documents"), "doc_id",
-        lit(8000) + (col("doc_id") % 3) * 4000,
-        lit(400) + col("n_chars") % 256)
-      operators.Multimodal.decode(media).toDF()
-        .select(col("media_id"),
-          col("width").cast("bigint").as("sample_rate"),
-          col("height").cast("bigint").as("channels"),
-          col("n_frames").cast("bigint").as("n_samples"),
-          element_at(col("features"), 1).cast("double").as("f1"),
-          element_at(col("features"), 4).cast("double").as("f4"),
-          element_at(col("features"), 8).cast("double").as("f8"))
-    }),
-
-    // perceptual-hash image near-dup: real JDK PNG encode (gray GRADIENT
-    // rasters, dims/seed per doc) → real ImageIO decode → 64-bit dHash in
-    // four 16-bit bands → pigeonhole-exact band blocking → Hamming ≤ 3
-    // verify. The oracle replays the whole pixel path analytically
-    // (nearest-pixel 9×8 grid over the closed-form gradient), so an
-    // encode, decode, sampling, or banding defect breaks the hash.
-    // maxBucketSize=256 ENGAGED (round 14, judge ask): the unvalved row
-    // was 38% of the entire ×32 sweep wall (288.8s) for fixture-output
-    // cost the capped scale entry already measures; the oracle replays
-    // the cap exactly (band buckets > 256 excluded before candidate
-    // enumeration — a no-op at the sf0.01 gate, where the largest bucket
-    // is 36, so capped ≡ uncapped there; measured 194/143 identical
-    // pairs at sf0.001/sf0.01). The pairs-shaped quadratic regime itself
-    // stays covered by mm_phash_keep (classes-not-pairs, linear).
-    "mm_phash_dedup" -> ((s, dir) => {
-      implicit val sp: SparkSession = s
-      val media = operators.Multimodal.pngMedia(
-        table(s, dir, "documents"), "doc_id",
-        lit(16) + col("n_chars") % 64, lit(16) + (col("n_chars") * 7) % 48,
-        gradient = true)
-      val hashes = operators.Multimodal.imageDhash(media)
-      operators.Multimodal.dhashNearDups(hashes, "media_id", maxDist = 3,
-        maxBucketSize = 256)
-    }),
-
-    // the image-dedup REDUCE (round 13): classes-not-pairs keep/drop over
-    // the same real PNG → ImageIO → dHash path — identical hashes
-    // collapse to one representative BEFORE pair enumeration (linear in
-    // duplicate-class size where the pair surface is quadratic), near-dup
-    // hash classes merge by connected components, and every image gets
-    // (rep, keep). Oracle replays the pixel path analytically, then the
-    // class collapse + transitive closure as a recursive CTE.
-    "mm_phash_keep" -> ((s, dir) => {
-      implicit val sp: SparkSession = s
-      val media = operators.Multimodal.pngMedia(
-        table(s, dir, "documents"), "doc_id",
-        lit(16) + col("n_chars") % 64, lit(16) + (col("n_chars") * 7) % 48,
-        gradient = true)
-      val hashes = operators.Multimodal.imageDhash(media)
-      operators.Multimodal.dhashDedupKeep(hashes, "media_id", maxDist = 3)
-        .select(col("id").as("media_id"), col("rep"), col("keep"))
-    }),
-
-    // the keep reduce WITH the residual band-bucket valve engaged
-    // (round 14): maxBucketSize = 16 over the DISTINCT-hash class reps —
-    // the last spec-only valve configuration, now under the hash oracle.
-    // The cap genuinely bites at every driver SF (13/11 class-band
-    // buckets exceed 16 at sf0.001/sf0.01), so the row pins the
-    // engaged-valve semantics, not a no-op: the oracle replays banding,
-    // the bucket cap, the Hamming verify, and the transitive closure —
-    // capping drops LINKS between classes (clusters split/shrink, the
-    // spec-pinned drop-only direction), never a row.
-    "mm_phash_keep_capped" -> ((s, dir) => {
-      implicit val sp: SparkSession = s
-      val media = operators.Multimodal.pngMedia(
-        table(s, dir, "documents"), "doc_id",
-        lit(16) + col("n_chars") % 64, lit(16) + (col("n_chars") * 7) % 48,
-        gradient = true)
-      val hashes = operators.Multimodal.imageDhash(media)
-      operators.Multimodal.dhashDedupKeep(hashes, "media_id", maxDist = 3,
-        maxBucketSize = 16)
-        .select(col("id").as("media_id"), col("rep"), col("keep"))
-    }),
-
-    // REAL multi-frame video decode: one JDK-encoded animated GIF per
-    // document (dims + frame count from n_chars, constant-gray frames
-    // seeded by doc_id), read back frame-by-frame through ImageIO — the
-    // oracle predicts the actual frame count and the temporal luma
-    // samples in closed form, so a container/frame-enumeration/pixel
-    // defect breaks the hash. (GIF is the one video container the JDK
-    // ships a codec for; MP4/WebM stay behind the documented stub.)
-    "mm_video" -> ((s, dir) => {
-      implicit val sp: SparkSession = s
-      val media = operators.Multimodal.gifMedia(
-        table(s, dir, "documents"), "doc_id",
-        lit(16) + col("n_chars") % 32, lit(16) + (col("n_chars") * 5) % 24,
-        lit(1) + col("n_chars") % 12)
-      operators.Multimodal.decode(media).toDF()
-        .select(col("media_id"),
-          col("width").cast("bigint").as("width"),
-          col("height").cast("bigint").as("height"),
-          col("n_frames").cast("bigint").as("n_frames"),
-          round(element_at(col("features"), 1) * 255).cast("bigint").as("g1"),
-          round(element_at(col("features"), 4) * 255).cast("bigint").as("g4"),
-          round(element_at(col("features"), 8) * 255).cast("bigint").as("g8"))
-    }),
-
-    // frame sampling over REAL decoded video (the same GIF frame counts
-    // mm_video verifies): every 3rd frame index, then per-media
-    // sampled-count and max index — the decode→sample composition runs
-    // on actual frame enumeration, not stub arithmetic
-    "mm_frames" -> ((s, dir) => {
-      implicit val sp: SparkSession = s
-      val media = operators.Multimodal.gifMedia(
-        table(s, dir, "documents"), "doc_id",
-        lit(16), lit(16), lit(1) + col("n_chars") % 12)
-      val decoded = operators.Multimodal.decode(media)
-      operators.Multimodal.sampleFrames(decoded, stride = 3)
-        .groupBy(col("media_id"))
-        .agg(count(lit(1)).as("n_sampled"),
-          max(col("frame_idx")).cast("bigint").as("max_idx"))
-    }),
-
-    // --- streaming surface (batch-equivalent of the streaming transforms)
-    "stream_window" -> ((s, dir) =>
-      streaming.EventStreams.windowedStats(
-        table(s, dir, "events"), "1 hour", "10 minutes")),
-
-    // streaming jq: the jq projection + watermarked windowed aggregate
-    // composition, run here in its batch/backfill form (identical
-    // declaration; StreamingSpec drives the live micro-batch path)
-    "stream_jq_window" -> ((s, dir) =>
-      streaming.EventStreams.jqWindowedStats(
-        table(s, dir, "events"), ".k", "1 hour", "10 minutes")),
-
-    // stream-static enrichment: unbounded events x broadcast dimension —
-    // zero streaming state, event volume never shuffles (batch/backfill
-    // form; StreamingSpec drives the live path)
-    "stream_enrich" -> ((s, dir) =>
-      streaming.EventStreams.enrichWithDim(
-          table(s, dir, "events"),
-          table(s, dir, "customer").select(col("c_custkey"), col("c_name")),
-          "user_id", "c_custkey")
-        .select(col("event_id"), col("user_id"), col("c_name"))),
-
-    // per-window count-min sketch: sketching as watermark-evicted
-    // streaming state (batch/backfill form; StreamingSpec drives the live
-    // micro-batch path and asserts bit-equality with this declaration)
-    "stream_cms" -> ((s, dir) =>
-      streaming.EventStreams.windowedCms(
-        table(s, dir, "events"), col("user_id"), "1 hour", "10 minutes")),
-
-    // stream-stream interval join (batch/backfill form of the
-    // watermarked streaming declaration; StreamingSpec drives the
-    // MemoryStream path): purchases within 1h after a click, same user
-    "stream_interval_join" -> ((s, dir) => {
-      val ev = table(s, dir, "events")
-      streaming.EventStreams.intervalJoin(
-          ev.filter(col("event_type") === "click"),
-          ev.filter(col("event_type") === "purchase"),
-          "user_id", windowMicros = 3600L * 1000 * 1000, watermarkDelay = "10 minutes")
-        .select(col("l_event_id").as("click_id"), col("r_event_id").as("purchase_id"))
-    }),
-
-    "stream_sessionize" -> ((s, dir) =>
-      // DuckDB reads the TIMESTAMP(NANOS) parquet at µs precision, so the
-      // oracle comparison runs on µs-truncated nanos (semantics unchanged)
-      streaming.EventStreams.sessionizeBatch(
-        table(s, dir, "events")
-          .withColumn("ts", col("ts") - pmod(col("ts"), lit(1000L))),
-        gapNanos = 1800L * 1000 * 1000 * 1000)),
-
-    // streaming MinHash-LSH near-dup: the SAME stateful declaration that
-    // tails a live stream (per-(band,bucket) exemplar state, horizon
-    // eviction — StreamingSpec drives the MemoryStream path), run here in
-    // its batch/backfill form. Event time is synthesized from doc_id (the
-    // documents table has no timestamp); the emitted pair set is
-    // arrival-order independent, so the oracle is the brute-force exact
-    // Jaccard pair list.
-    "stream_neardup" -> ((s, dir) => {
-      implicit val sp: SparkSession = s
-      streaming.NearDupStream.nearDupPairs(
-        table(s, dir, "documents")
-          .withColumn("ts", lit(1700000000L * 1000000000L) + col("doc_id") * lit(1000000000L)),
-        "doc_id", "ts", col("text"), n = 3, threshold = 0.75)
-    }),
-
-    // edit-distance near-dup under blocking-key candidates (record-linkage
-    // shape): first-token + length-band blocks, exact Levenshtein verify.
-    // The oracle SQL replays the FULL tuner decision: the round-15
-    // engagement floor (largest block > 4×cap AND excess pairs > 4×rows,
-    // else the fixed key) and, when engaged, the per-level widen CASE —
-    // so the row stays exact at any SF whichever branch the probe takes.
-    "dedup_edit" -> ((s, dir) =>
-      operators.Dedup.editDistancePairs(
-        table(s, dir, "documents"), "doc_id", col("text"), minSim = 0.8)),
-
-    // SCD type-2 dimension build: per-customer order-priority history as
-    // validity intervals (collapse equal runs, close with lead)
-    "rel_scd2" -> ((s, dir) =>
-      operators.Relational.scd2(table(s, dir, "orders"),
-          col("o_custkey"), col("o_orderdate"), col("o_orderpriority"))
-        .select(col("k").as("o_custkey"), col("a").as("priority"),
-          col("valid_from"), col("valid_to"), col("version"), col("is_current"))),
-
-    // 2-D Pareto frontier (max price, min date) — distributed sorted scan
-    // vs the oracle's O(n²) dominance anti-join
-    "rel_skyline" -> ((s, dir) =>
-      operators.Relational.skyline2d(table(s, dir, "orders"),
-          col("o_totalprice"), col("o_orderdate"))
-        .select(col("x").as("o_totalprice"), col("y").as("o_orderdate"))),
-
-    // robust per-group stats: clamp to exact [p5, p95] then average
-    "rel_winsorize" -> ((s, dir) =>
-      operators.Relational.winsorize(table(s, dir, "customer"),
-          col("c_nationkey"), col("c_acctbal"))
-        .withColumnRenamed("g", "c_nationkey")),
-
-    // data-constrained epoch planner: proportional token allocation as
-    // capped repeat epochs, all DECIMAL(38,0) integer arithmetic
-    "curation_epochs" -> ((s, dir) =>
-      operators.Curation.epochPlan(table(s, dir, "documents"),
-        col("source"), col("n_chars"), budget = 2000000L, maxEpochs = 3)),
-
-    // MMR diversified top-k re-rank (λ=0.7, micro-int greedy trace)
-    "sim_mmr" -> ((s, dir) => {
-      val emb = table(s, dir, "embeddings")
-      operators.Similarity.mmrSelect(emb, emb.filter(col("vec_id") < 4),
-        k = 3, cands = 8, lambdaPermille = 700)
-    }),
-
-    // MMR with SRP-LSH candidate generation — the 100 TB shape (the exact
-    // path above scans the whole corpus per query batch; this one only
-    // scores same-bucket candidates). The oracle is the sim_ann_lsh
-    // pattern: agreement with the exact-candidate greedy trace is emitted
-    // AS DATA and hash-checked (deterministic planes + deterministic data
-    // ⇒ stable booleans; L=8 tables gives the exact top-8 with wide
-    // margin on every driver SF, asserted in SimilaritySpec).
-    "sim_mmr_ann" -> ((s, dir) => {
-      val emb = table(s, dir, "embeddings")
-      val qs = emb.filter(col("vec_id") < 4)
-      val viaAnn = operators.Similarity.mmrSelect(emb, qs,
-        k = 3, cands = 8, lambdaPermille = 700,
-        candidates = operators.Similarity.MmrCandidates.Lsh(dim = 64, tables = 8))
-      val viaExact = operators.Similarity.mmrSelect(emb, qs,
-        k = 3, cands = 8, lambdaPermille = 700)
-      viaExact.join(viaAnn.withColumn("hit", lit(1L)),
-          Seq("qid", "vec_id", "sel_rank"), "left")
-        .groupBy(col("qid"))
-        .agg((sum(coalesce(col("hit"), lit(0L))) === 3L).as("agree"))
-    }),
-
-    // Rademacher random projection to 8 exact-integer components
-    // proj is serialized to a canonical CSV string: the driver's pandas
-    // compare sorts every output column, and a raw array column is
-    // unsortable there (unhashable ndarray) — exact BIGINT components
-    // stringify identically in both engines, so nothing is lost
-    "sim_rp" -> ((s, dir) =>
-      operators.Similarity.randomProjection(table(s, dir, "embeddings"), outDim = 8)
-        .select(col("vec_id"),
-          concat_ws(",", transform(col("proj"), _.cast("string"))).as("proj_s"),
-          col("norm2"))),
-
-    // BM25 top-k retrieval (Okapi): the RANKED-retrieval complement to
-    // text_bm25's per-doc rational-idf scoring — textbook ln idf carried
-    // as micro-nats, exact integer tf-fraction polynomials, one pinned
-    // float step per term (see bm25TopK scaladoc)
-    "text_bm25_topk" -> ((s, dir) =>
-      operators.TextAnalysis.bm25TopK(
-        table(s, dir, "documents"), col("doc_id"), col("text"),
-        query = Seq("table", "hash", "data"), k = 10)),
-
-    // multi-query BM25 (round 11): Q queries ranked in ONE corpus pass;
-    // the top-k window partitions by qid (WindowGroupLimit partial per
-    // partition — no unpartitioned window left in retrieval). Query 1
-    // repeats text_bm25_topk's terms, so its ranking cross-checks the
-    // single-query row inside the same hash-gated output.
-    "text_bm25_topk_multi" -> ((s, dir) =>
-      operators.TextAnalysis.bm25TopKMulti(
-        table(s, dir, "documents"), col("doc_id"), col("text"),
-        queries = Seq(
-          1L -> Seq("table", "hash", "data"),
-          2L -> Seq("filter", "batch", "scan"),
-          3L -> Seq("join", "merge")), k = 10)),
-
-    // positional-postings phrase query: consecutive-term equi-join
-    "text_phrase" -> ((s, dir) =>
-      operators.TextAnalysis.phraseSearch(
-        table(s, dir, "documents"), "doc_id", col("text"), "table hash")),
-
-    // Zipf slope of the term distribution, micro-nat least squares
-    "text_zipf" -> ((s, dir) =>
-      operators.TextAnalysis.zipfSlope(
-        table(s, dir, "documents"), col("text"), topV = 200)),
-
-    // --- round 8 ---------------------------------------------------------
-
-    // exact triangle counting by degree orientation (Suri & Vassilvitskii
-    // 2011) over a deterministic sparse citation graph on documents
-    // (3 LCG out-links per doc — the testdata has no link column, so the
-    // links are synthesized identically in both engines, like the crawl
-    // URLs below); per-node triangle memberships = the local clustering
-    // numerator. Orientation bounds every out-adjacency at O(√m) — no
-    // celebrity-node wedge blow-up at crawl scale
-    "graph_triangles" -> ((s, dir) =>
-      operators.Graph.triangleCount(citationLinks(table(s, dir, "documents")))),
-
-    // connected components — pure reuse of the min-label-propagation core
-    // (Dedup.nearDupClusters: hop + pointer jump, rotating checkpoints,
-    // fixpoint early-stop). The fixture is a HIERARCHICAL containment
-    // graph (page → 5-block head → 25-shard head, some blocks detached):
-    // diameter ≤ 4 so the fixpoint lands in ~3 rounds, components vary
-    // 5..20 in size — the 3-link global graph of graph_triangles is one
-    // giant component, a vacuous CC test, and LCG ring graphs have
-    // ~100-hop label distances that make an iterative bench query out of
-    // what converges in O(1) rounds on real containment/near-dup shapes.
-    // Output is the component census (rep, size)
-    "graph_components" -> ((s, dir) => {
-      val docs = table(s, dir, "documents")
-      val l1 = docs.select(col("doc_id").as("src"), expr("(doc_id DIV 5) * 5").as("dst"))
-      val l2 = docs.filter(expr("doc_id % 5 = 0 AND (doc_id DIV 5) % 3 != 0"))
-        .select(col("doc_id").as("src"), expr("(doc_id DIV 25) * 25").as("dst"))
-      val pairs = l1.unionByName(l2).filter(col("src") =!= col("dst"))
-        .select(least(col("src"), col("dst")).as("id_a"),
-          greatest(col("src"), col("dst")).as("id_b")).distinct()
-      operators.Dedup.nearDupClusters(
-          docs.select(col("doc_id")), "doc_id", pairs, maxIters = 10)
-        .groupBy(col("rep")).agg(count(lit(1)).as("size"))
-    }),
-
-    // batch sessionization (gaps-and-islands, 12 h inactivity gap): the
-    // backfill twin of stream_sessionize — one exchange on the user key
-    // reused by both windows; value sums are exact micro-units
-    "rel_sessionize" -> ((s, dir) =>
-      // µs-truncated nanos like stream_sessionize above: DuckDB reads a
-      // TIMESTAMP(NANOS) parquet generation at µs precision, so the
-      // oracle comparison must not see sub-µs residues
-      operators.Relational.sessionize(
-          table(s, dir, "events")
-            .withColumn("ts", col("ts") - pmod(col("ts"), lit(1000L))),
-          col("user_id"), col("ts"),
-          round(col("value") * lit(1000000.0)).cast("long"),
-          gapNanos = 12L * 3600L * 1000000000L)
-        .select(col("k").as("user_id"), col("session_no"),
-          col("session_start"), col("session_end"), col("n_events"),
-          col("sum_value").as("sum_value_micro"))),
-
-    // per-doc top-k terms by tf·idf with the idf as an exact integer
-    // quotient (linear-idf variant — hash-exact where tf·ln cannot be)
-    "text_tfidf" -> ((s, dir) =>
-      operators.TextAnalysis.tfIdfTopK(
-        table(s, dir, "documents"), col("doc_id"), col("text"),
-        k = 3, minTermLen = 5)
-        .filter(col("doc_id") < 200)),
-
-    // TPC-H Q5 (local-supplier volume): the canonical snowflake — tiny
-    // region⋈nation broadcast into supplier, fact tables shuffle-join on
-    // their natural keys (customer/supplier are NOT broadcast: they grow
-    // with SF), revenue in exact DECIMAL
-    "rel_tpch_q5" -> ((s, dir) => {
-      val lo = lit("1996-01-01 00:00:00").cast("timestamp")
-      val hi = lit("1997-01-01 00:00:00").cast("timestamp")
-      val nr = table(s, dir, "nation")
-        .join(broadcast(table(s, dir, "region")
-          .filter(col("r_name") === "ASIA")),
-          col("n_regionkey") === col("r_regionkey"))
-        .select(col("n_nationkey"), col("n_name"))
-      val sn = table(s, dir, "supplier")
-        .join(broadcast(nr), col("s_nationkey") === col("n_nationkey"))
-        .select(col("s_suppkey"), col("s_nationkey"), col("n_name"))
-      val c = table(s, dir, "customer").select(col("c_custkey"), col("c_nationkey"))
-      val o = table(s, dir, "orders")
-        .filter(col("o_orderdate") >= lo && col("o_orderdate") < hi)
-        .select(col("o_orderkey"), col("o_custkey"))
-      val l = table(s, dir, "lineitem").select(col("l_orderkey"), col("l_suppkey"),
-        // decimal-FIRST: casting the double PRODUCT to decimal hits
-        // representable .xx5 ties (e.g. price*0.75 ending in .125) that
-        // HALF_UP and half-even resolve differently across engines; with
-        // both factors cast first the product is exact at scale 4 and no
-        // tie can form (the double-product form lost 1 cent on 3 of 5
-        // nations at sf0.1)
-        (col("l_extendedprice").cast("decimal(18,2)") *
-          (lit(1.0).cast("decimal(18,2)") - col("l_discount").cast("decimal(18,2)")))
-          .as("rev"))
-      o.join(l, col("o_orderkey") === col("l_orderkey"))
-        .join(c, col("o_custkey") === col("c_custkey"))
-        .join(sn, col("l_suppkey") === col("s_suppkey") &&
-          col("c_nationkey") === col("s_nationkey"))
-        .groupBy(col("n_name"))
-        .agg(sum(col("rev")).cast("double").as("revenue"))
-        .orderBy(col("revenue").desc, col("n_name").asc)
-    }),
-
-    // canonical-URL crawl dedup (C4/RefinedWeb's first pass): URLs are
-    // synthesized deterministically from doc columns (scheme/www/port/
-    // tracking-param/fragment/trailing-slash variants), canonicalized by
-    // Curation.canonicalUrl, grouped; first fetch wins
-    "curation_url_dedup" -> ((s, dir) => {
-      val docs = table(s, dir, "documents")
-      val url = concat(
-        when(col("doc_id") % 2 === 0, lit("http://")).otherwise(lit("HTTPS://")),
-        when(col("doc_id") % 3 === 0, lit("WWW.")).otherwise(lit("")),
-        col("source"), lit(".Example.COM"),
-        when(col("doc_id") % 5 === 0, lit(":443")).otherwise(lit("")),
-        lit("/docs/"), (col("doc_id") % 50).cast("string"),
-        when(col("doc_id") % 7 === 0, lit("/")).otherwise(lit("")),
-        when(col("doc_id") % 2 === 0,
-          concat(lit("?utm_source=feed&ref="), (col("doc_id") % 10).cast("string")))
-          .otherwise(concat(lit("?ref="), (col("doc_id") % 10).cast("string"))),
-        when(col("doc_id") % 11 === 0, lit("&fbclid=abc123")).otherwise(lit("")),
-        when(col("doc_id") % 4 === 0, lit("#sec")).otherwise(lit("")))
-      operators.Curation.urlDedup(docs, col("doc_id"), url)
-    }),
-
-    // Unicode text normalization: NFC → casefold → whitespace collapse.
-    // The corpus rows prove the pass is safe on clean ASCII; the planted
-    // rows pin the interesting contracts (decomposed é == precomposed é,
-    // U+212B ANGSTROM → å, tabs/newlines/runs collapse)
-    "text_normalize" -> ((s, dir) => {
-      val docs = table(s, dir, "documents")
-        .filter(col("doc_id") < 100).select(col("doc_id"), col("text"))
-      val planted = s.createDataFrame(Seq(
-        (10000001L, "Café  du   Monde"),
-        (10000002L, "Café du Monde"),
-        (10000003L, "Å ring"),
-        (10000004L, " tabs\tand\nnewlines  here ")))
-        .toDF("doc_id", "text")
-      docs.unionByName(planted)
-        .select(col("doc_id"),
-          operators.TextAnalysis.normalizeText(col("text")).as("norm"))
-    }),
-
-    // theta sketches (DataSketches): the mergeable SET-OPERATION sketch —
-    // |A|, |A∩B|, |A∪B|, |A∖B| from compact sketch blobs alone, built by
-    // a custom TypedImperativeAggregate; exact mode below the nominal-
-    // entry threshold makes the small-SF oracle hash-exact while the
-    // same plan degrades to ±ε estimates at crawl scale
-    "sketch_theta" -> ((s, dir) => {
-      val ev = table(s, dir, "events")
-      val a = ev.filter(col("event_type") === "click" && col("value") > 480)
-        .agg(operators.Sketches.thetaAgg(col("user_id")).as("ska"))
-      val b = ev.filter(col("event_type") === "purchase" && col("value") > 480)
-        .agg(operators.Sketches.thetaAgg(col("user_id")).as("skb"))
-      import operators.Sketches._
-      a.crossJoin(broadcast(b)).select(
-        thetaCount(col("ska")).as("n_click"),
-        thetaCount(col("skb")).as("n_purchase"),
-        thetaCount(thetaIntersect(col("ska"), col("skb"))).as("n_both"),
-        thetaCount(thetaUnion(col("ska"), col("skb"))).as("n_either"),
-        thetaCount(thetaANotB(col("ska"), col("skb"))).as("n_click_only"))
-    }),
-
-    // streaming windowed top-k (trending keys): space-saving summary per
-    // window inside ONE flatMapGroupsWithState, emitted when the
-    // watermark finalizes the window; exact while distinct keys ≤
-    // capacity (this regime — the oracle pins it), published ε·N bound
-    // past it. Batch/backfill form here; StreamingSpec drives the live
-    // micro-batch path and pins stream == batch
-    "stream_topk" -> ((s, dir) => {
-      implicit val sp: SparkSession = s
-      streaming.TopKStream.windowTopK(
-        table(s, dir, "events"), "ts", col("user_id"),
-        windowNanos = 86400L * 1000000000L, k = 3, capacity = 2048)
-    }),
-
-    // exact per-group Pearson correlation: moment sums in DECIMAL(38,0)
-    // over centi-unit integers — built-in corr's running doubles are
-    // partitioning-dependent; this one is bit-stable anywhere
-    "rel_corr" -> ((s, dir) =>
-      operators.Relational.corrExact(table(s, dir, "lineitem"),
-          col("l_returnflag"), col("l_quantity"), col("l_extendedprice"))
-        .withColumnRenamed("g", "l_returnflag")),
-
-    // main-content extraction from raw HTML (the first transform of any
-    // web-crawl pipeline): script/style/comment elimination, tag strip,
-    // entity decode (amp last), whitespace fold — the HTML is
-    // synthesized from doc columns identically in both engines
-    "text_html_extract" -> ((s, dir) => {
-      val docs = table(s, dir, "documents").filter(col("doc_id") < 200)
-      // script/style/comment payloads span NEWLINES, like real HTML —
-      // pins the (?s)/(?is) DOTALL contract (round-9 ADVICE): without it
-      // these payloads would leak through the tag-stripper
-      val html = concat(
-        lit("<html><head><title>doc "), col("doc_id"),
-        lit("</title><style>\np { color: red; }\n</style></head><body><h1>Doc "),
-        col("doc_id"),
-        lit("</h1><p>"),
-        regexp_replace(col("text"), " the ", " <b>the</b> "),
-        lit("</p><p>A &amp; B &lt;ok&gt; &quot;q&quot; &#39;s&#39;</p>"),
-        lit("<script>\ntrack(\""), col("doc_id"),
-        lit("\");\n</script><!-- crawler\nnote --></body></html>"))
-      docs.select(col("doc_id"),
-        operators.TextAnalysis.htmlExtract(html).as("content"))
-    }),
-
-    // exact equi-width histogram: global min/max ride a broadcast one-row
-    // frame into the bucket projection — one scan + one tiny exchange;
-    // the formula is written identically in both engines so edge-case
-    // doubles land in the same bucket bit-for-bit
-    "rel_histogram" -> ((s, dir) => {
-      val o = table(s, dir, "orders")
-      val mm = o.agg(min(col("o_totalprice")).as("mn"), max(col("o_totalprice")).as("mx"))
-      o.crossJoin(broadcast(mm))
-        .select(least(lit(7L),
-          floor((col("o_totalprice") - col("mn")) /
-            ((col("mx") - col("mn")) / lit(8.0)))).as("bucket"),
-          col("o_totalprice"))
-        .groupBy(col("bucket"))
-        .agg(count(lit(1)).as("n"),
-          min(col("o_totalprice")).as("lo"),
-          max(col("o_totalprice")).as("hi"))
-    })
-  )
-
-  /** Shared CTE chain for the BPE oracles: the (word, freq) vocabulary,
-    * its char-tokenized form v0, then per merge i the pair-count argmax
-    * b_i (count desc, lexicographic pair tie-break — binary collation on
-    * the [a-z0-9] alphabet, identical in both engines) and the rewritten
-    * vocabulary v_i via left-to-right non-overlapping `replace`. Token
-    * boundaries are TWO spaces and the pattern consumes one per side
-    * (" l  r " → " lr "), so back-to-back occurrences all merge in one
-    * pass — textbook BPE, mirroring the engine exactly (round 11).
-    * MATERIALIZED is load-bearing: DuckDB inlines plain CTEs per
-    * reference, making the un-materialized chain exponential in the
-    * merge count. */
-  private def bpeOracleCtes(n: Int): String = {
-    val head = """WITH words AS MATERIALIZED (
-        SELECT w, count(*) AS cnt
-        FROM (SELECT unnest(regexp_extract_all(lower(text), '[a-z0-9]+')) AS w FROM documents)
-        GROUP BY w),
-      v0 AS MATERIALIZED (
-        SELECT '  ' || array_to_string(regexp_extract_all(w, '.'), '  ') || '  ' AS toks, cnt
-        FROM words)"""
-    val iters = (1 to n).map { i =>
-      s"""b$i AS MATERIALIZED (
-        SELECT u.l AS l, u.r AS r, sum(cnt) AS pc FROM (
-          SELECT cnt, unnest([{'l': a[i], 'r': a[i+1]} for i in generate_series(1, len(a)-1)]) AS u
-          FROM (SELECT string_split(trim(toks), '  ') AS a, cnt FROM v${i - 1})
-        ) GROUP BY 1, 2 ORDER BY pc DESC, l, r LIMIT 1),
-      v$i AS MATERIALIZED (
-        SELECT replace(toks, (SELECT ' '||l||'  '||r||' ' FROM b$i),
-                             (SELECT ' '||l||r||' ' FROM b$i)) AS toks, cnt
-        FROM v${i - 1})"""
-    }
-    (head +: iters).mkString(",\n      ")
+  /** The queries a driver main runs, sorted by name: every query, or only
+    * those named in `only`, the comma list of `SPARK_GRAFT_ONLY`. A name
+    * that is not declared throws, so a typo cannot silently run nothing. */
+  def selected(only: Option[String]): Seq[Query] = only match {
+    case None => queries.values.toSeq.sortBy(_.name)
+    case Some(list) =>
+      val names = list.split(",").map(_.trim).filter(_.nonEmpty).distinct.sorted.toSeq
+      val unknown = names.filterNot(queries.contains)
+      require(names.nonEmpty && unknown.isEmpty,
+        s"unknown queries: ${unknown.mkString(",")} (SPARK_GRAFT_ONLY=$list)")
+      names.map(queries)
   }
 
-  /** The learn oracle: one row per merge from the b_i argmax CTEs. */
-  private def bpeLearnOracle(n: Int): String =
-    bpeOracleCtes(n) + "\n      " + (1 to n).map { i =>
-      s"SELECT CAST($i AS BIGINT) AS merge_rank, l AS lhs, r AS rhs, CAST(pc AS BIGINT) AS pair_count FROM b$i"
-    }.mkString("\n      UNION ALL ")
-
-  /** The encode oracle: per-document char tokenization with `|` word
-    * sentinels, then the same n merges applied as a replace chain driven
-    * by scalar subqueries over the learned b_i pairs. */
-  private def bpeEncodeOracle(n: Int): String = {
-    val enc0 = """enc0 AS MATERIALIZED (
-        SELECT doc_id, '  ' || array_to_string(
-          [array_to_string(regexp_extract_all(w, '.'), '  ')
-           for w in regexp_extract_all(lower(text), '[a-z0-9]+')], '  |  ') || '  ' AS toks
-        FROM documents)"""
-    val encs = (1 to n).map { i =>
-      s"""enc$i AS MATERIALIZED (
-        SELECT doc_id, replace(toks, (SELECT ' '||l||'  '||r||' ' FROM b$i),
-                                     (SELECT ' '||l||r||' ' FROM b$i)) AS toks FROM enc${i - 1})"""
-    }
-    bpeOracleCtes(n) + ",\n      " + (enc0 +: encs).mkString(",\n      ") + s"""
-      SELECT doc_id,
-        CAST(len(list_filter(string_split(trim(toks), '  '), t -> t != '|')) AS BIGINT) AS n_tokens,
-        array_to_string(list_filter(string_split(trim(toks), '  '), t -> t != '|'), ' ') AS tokens
-      FROM enc$n"""
-  }
-
-  /** DuckDB-equivalent SQL per query (runs on views named after the parquet
-    * tables). Aliases match the Spark side exactly. */
-  def oracleSql: Map[String, String] = Map(
-    "text_bpe_learn" -> bpeLearnOracle(8),
-    "text_bpe_encode" -> bpeEncodeOracle(8),
-    "scan_concatenated" -> """
-      SELECT '{"k":' || n_nationkey || ',"name":"' || n_name || '"}' AS doc,
-             CAST(NULL AS VARCHAR) AS error FROM nation
-      UNION ALL
-      SELECT '[' || n_nationkey || ',"x"]', CAST(NULL AS VARCHAR) FROM nation
-      UNION ALL
-      SELECT 'true', CAST(NULL AS VARCHAR) FROM nation""",
-
-    "scan_mem" -> """
-      SELECT * FROM (VALUES
-        ('{"a":[1,"x",true],"b":1}'),
-        ('[-2,{"z":null}]'),
-        ('"café strings"'),
-        ('42'),
-        ('null')) AS t(doc)""",
-
-    "cli_q" -> """
-      SELECT '"' || n_name || '"' AS doc FROM nation""",
-
-    "jq_identity" -> """
-      SELECT event_id, '{"k":' || CAST(json_extract(props, '$.k') AS BIGINT) || '}' AS doc
-      FROM events""",
-
-    "jq_literals" -> """
-      SELECT event_id, CAST(42 AS BIGINT) AS i, CAST(10.2 AS DOUBLE) AS f, 'hi' AS s, true AS b,
-             '[1,2]' AS arr, '{"a":1}' AS obj
-      FROM events""",
-
-    "jq_index" ->
-      "SELECT event_id, CAST(json_extract(props, '$.k') AS BIGINT) AS k FROM events",
-    "jq_pipe_construct" ->
-      "SELECT event_id, CAST(json_extract(props, '$.k') AS BIGINT) AS id FROM events",
-    "jq_arith" ->
-      "SELECT event_id, CAST(json_extract(props, '$.k') AS BIGINT) * 2 + 1 AS v FROM events",
-    "jq_predicate" ->
-      "SELECT event_id, (CAST(json_extract(props, '$.k') AS BIGINT) > 20 AND CAST(json_extract(props, '$.k') AS BIGINT) <= 80) AS mid FROM events",
-    "jq_explode" ->
-      "SELECT event_id, CAST(json_extract(props, '$.k') AS BIGINT) AS v FROM events UNION ALL SELECT event_id, CAST(json_extract(props, '$.k') AS BIGINT) * 10 AS v FROM events",
-    "jq_map_builtin" ->
-      "SELECT event_id, CAST(json_extract(props, '$.k') AS BIGINT) + 1 AS v FROM events",
-    "jq_in_builtin" ->
-      "SELECT event_id, CAST(json_extract(props, '$.k') AS BIGINT) IN (5, 23, 42, 69) AS hit FROM events",
-    "jq_recurse" ->
-      "SELECT event_id, '[' || (event_id % 7) || ',' || ((event_id % 7) * 2) || ']' AS v FROM events UNION ALL SELECT event_id, CAST(event_id % 7 AS VARCHAR) AS v FROM events UNION ALL SELECT event_id, CAST((event_id % 7) * 2 AS VARCHAR) AS v FROM events",
-    "jq_slice_str" ->
-      "SELECT doc_id, substring(text, 1, 16) AS prefix FROM documents",
-    "jq_tokens" ->
-      "SELECT doc_id, len(string_split(text, ' ')) AS n_tokens FROM documents",
-    "jq_strlen" ->
-      "SELECT doc_id, strlen(text) AS n_bytes FROM documents",
-    "jq_opt_suppress" ->
-      "SELECT event_id, CAST(NULL AS BIGINT) AS v FROM events",
-
-    "jq_sub_rem" -> """
-      SELECT event_id, CAST(2 AS BIGINT) AS after_sub,
-             CAST(json_extract(props, '$.k') AS BIGINT) % 7 AS k_mod
-      FROM events""",
-
-    "jq_neg_not" -> """
-      SELECT event_id, -k AS neg_k, NOT (k > 50) AS not_gt
-      FROM (SELECT event_id, CAST(json_extract(props, '$.k') AS BIGINT) AS k FROM events) t""",
-
-    "jq_compare" -> """
-      SELECT event_id, k = 42 AS is42, k != 42 AS not42, k <= 50 AS le50, k >= 50 AS ge50
-      FROM (SELECT event_id, CAST(json_extract(props, '$.k') AS BIGINT) AS k FROM events) t""",
-
-    "jq_bitops" -> """
-      SELECT event_id, k & 12 AS band, k | 5 AS bor_, xor(k, 3) AS bxor,
-             k << 2 AS shl, k >> 1 AS shr
-      FROM (SELECT event_id, CAST(json_extract(props, '$.k') AS BIGINT) AS k FROM events) t""",
-
-    "jq_bigint" -> """
-      SELECT event_id,
-             CAST(CAST(k AS HUGEINT) + CAST('18446744073709551615' AS HUGEINT) AS VARCHAR) AS wide_add,
-             CAST(CAST(k AS HUGEINT) * CAST('18446744073709551616' AS HUGEINT) AS VARCHAR) AS wide_mul,
-             '18446744073709551616' AS wide_lit,
-             '170141183460469231731687303715884105727' AS i128_max,
-             '-170141183460469231731687303715884105728' AS i128_min,
-             CAST(CAST(k AS HUGEINT) + CAST('170141183460469231731687303715884105000' AS HUGEINT) AS VARCHAR) AS wide39_add,
-             k AS back_in_range
-      FROM (SELECT event_id, CAST(json_extract(props, '$.k') AS BIGINT) AS k FROM events) t""",
-
-    "jq_meta_lineage" -> """
-      SELECT event_id,
-             CAST(k + 1 AS VARCHAR) AS doc,
-             '{"domains":["d' || (event_id % 3) || '"],"keys":[],"sources":["events/'
-               || (event_id % 4) || '","raw/' || (event_id % 4) || '"]}' AS meta
-      FROM (SELECT event_id, CAST(json_extract(props, '$.k') AS BIGINT) AS k FROM events) t""",
-
-    "jq_logic" -> """
-      SELECT event_id, (k > 20 AND k < 80) AS both, (k < 10 OR k > 90) AS either
-      FROM (SELECT event_id, CAST(json_extract(props, '$.k') AS BIGINT) AS k FROM events) t""",
-
-    "jq_keys_has" -> """
-      SELECT event_id, 'a' AS first_key,
-             CAST(json_extract(props, '$.k') AS BIGINT) = 42 AS has42
-      FROM events""",
-
-    "jq_chars" -> """
-      SELECT doc_id, ord(substring(text, 1, 1))::BIGINT AS first_cp,
-             length(text)::BIGINT AS n_chars
-      FROM documents""",
-
-    "jq_anyall" -> """
-      SELECT event_id, k > 50 AS any_gt, k >= 10 AS all_ge
-      FROM (SELECT event_id, CAST(json_extract(props, '$.k') AS BIGINT) AS k FROM events) t""",
-
-    "jq_slice_arr" -> """
-      SELECT event_id, k + 1 AS second, k + 3 AS last
-      FROM (SELECT event_id, CAST(json_extract(props, '$.k') AS BIGINT) AS k FROM events) t""",
-
-    "jq_dict_fanout" -> """
-      SELECT event_id, CAST(json_extract(props, '$.k') AS BIGINT) AS v FROM events
-      UNION ALL
-      SELECT event_id, CAST(json_extract(props, '$.k') AS BIGINT) * 3 AS v FROM events""",
-
-    "jq_iterate_multi" -> """
-      SELECT l_orderkey, l_linenumber, l_quantity AS v FROM lineitem
-      UNION ALL
-      SELECT l_orderkey, l_linenumber, l_discount AS v FROM lineitem""",
-
-    "jq_string_ops" -> """
-      SELECT doc_id, 'abab!' AS rep, string_split(text, ' ')[1] AS first_tok
-      FROM documents""",
-
-    "jq_ext_builtins" -> """
-      SELECT event_id,
-             '[1,2,' || (k + 10) || ']' AS sorted,
-             k + 3 AS total,
-             greatest(k, 50) AS mx,
-             least(k, 50) AS mn,
-             CAST(CASE WHEN k = 1 THEN 1 ELSE 2 END AS BIGINT) AS uniq_n,
-             k AS rev0,
-             'a-' || k AS joined,
-             floor(sqrt(k)) AS fl,
-             k AS ab,
-             contains(CAST(k AS VARCHAR), '4') AS has4
-      FROM (SELECT event_id, CAST(json_extract(props, '$.k') AS BIGINT) AS k FROM events) t""",
-
-    "jq_errors_as_data" -> """
-      SELECT event_id, 1::BIGINT AS n_entries, (event_id % 13 = 0) AS errored
-      FROM events""",
-
-    "jq_misc_builtins" -> """
-      SELECT event_id,
-             k AS nums,
-             2::BIGINT AS scal,
-             strlen(CAST(k AS VARCHAR))::BIGINT AS byte_len,
-             2 * k + 12 AS combos,
-             k + 1 AS wentries,
-             CAST(1024 AS DOUBLE) AS p2,
-             CAST(k AS DOUBLE) AS t,
-             CAST(3 AS DOUBLE) AS l10,
-             CAST(200 - k AS DOUBLE) AS fa
-      FROM (SELECT event_id, CAST(json_extract(props, '$.k') AS BIGINT) AS k FROM events) t""",
-
-    "jq_select" -> """
-      SELECT event_id, CAST(json_extract(props, '$.k') AS BIGINT) AS k
-      FROM events WHERE CAST(json_extract(props, '$.k') AS BIGINT) > 50""",
-
-    "jq_ifelse" -> """
-      SELECT event_id,
-             CASE WHEN k > 50 THEN k ELSE -k END AS branched,
-             CASE WHEN k > 80 THEN 'hi' WHEN k > 40 THEN 'mid' ELSE 'lo' END AS tiered,
-             k AS alt
-      FROM (SELECT event_id, CAST(json_extract(props, '$.k') AS BIGINT) AS k FROM events) t""",
-
-    "jq_assign" -> """
-      SELECT event_id,
-             '{"k":' || (CAST(json_extract(props, '$.k') AS BIGINT) * 2) || '}' AS doubled,
-             CAST(json_extract(props, '$.k') AS BIGINT) + 1 AS bumped
-      FROM events""",
-
-    "jq_patch" -> """
-      SELECT event_id,
-             '{"k":' || (k * 2) || '}' AS patched,
-             CASE WHEN k = 42 THEN '{"k":' || k || '}' END AS tested
-      FROM (SELECT event_id, CAST(json_extract(props, '$.k') AS BIGINT) AS k FROM events) t""",
-
-    "cbor_roundtrip" -> """
-      SELECT event_id, '{"k":' || CAST(json_extract(props, '$.k') AS BIGINT) || '}' AS doc
-      FROM events""",
-
-    "msgpack_roundtrip" -> """
-      SELECT event_id, '{"k":' || CAST(json_extract(props, '$.k') AS BIGINT) || '}' AS doc
-      FROM events""",
-
-    "rel_upsert" -> """
-      SELECT o_orderkey,
-             CASE WHEN o_orderkey % 10 = 0 THEN o_totalprice * 2 ELSE o_totalprice END AS price
-      FROM orders""",
-
-    "rel_bucketed_join" -> """
-      WITH snap AS (
-        SELECT o_orderkey, o_orderstatus,
-               CASE WHEN o_orderkey % 10 = 0 THEN o_totalprice * 2 ELSE o_totalprice END AS price
-        FROM orders)
-      SELECT s.o_orderstatus, count(*) AS n_lines,
-             CAST(sum(CAST(s.price AS DECIMAL(18,2))) AS DOUBLE) AS sum_price
-      FROM snap s JOIN lineitem l ON s.o_orderkey = l.l_orderkey
-      GROUP BY s.o_orderstatus""",
-
-    "rel_ivm" -> """
-      WITH snap AS (
-        SELECT o_orderstatus,
-               CASE WHEN o_orderkey % 10 = 0 THEN o_totalprice * 2 ELSE o_totalprice END AS p
-        FROM orders)
-      SELECT o_orderstatus, count(*) AS n,
-             CAST(sum(CAST(p AS DECIMAL(18,2))) AS DOUBLE) AS total
-      FROM snap GROUP BY o_orderstatus""",
-
-    "jq_collate" -> """
-      SELECT event_id,
-             CASE WHEN k % 3 = 0 THEN (CASE WHEN k < 50 THEN -1 WHEN k = 50 THEN 0 ELSE 1 END)
-                  WHEN k % 3 = 1 THEN 1
-                  ELSE -1 END AS c
-      FROM (SELECT event_id, CAST(json_extract(props, '$.k') AS BIGINT) AS k FROM events) t""",
-
-    // --- relational layer ----------------------------------------------
-    "rel_agg_pricing" -> """
-      SELECT l_returnflag, l_linestatus,
-             CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
-             CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_base,
-             CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2)) * CAST(1 - l_discount AS DECIMAL(9,4))) AS DOUBLE) AS sum_disc,
-             CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) / count(*) AS avg_qty,
-             count(*) AS n
-      FROM lineitem GROUP BY l_returnflag, l_linestatus""",
-
-    "rel_join_nation_revenue" -> """
-      SELECT n_name,
-             CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2)) * CAST(1 - l_discount AS DECIMAL(9,4))) AS DOUBLE) AS revenue,
-             count(*) AS n_lines
-      FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-           JOIN customer ON o_custkey = c_custkey
-           JOIN nation ON c_nationkey = n_nationkey
-      GROUP BY n_name""",
-
-    "rel_join_anti" -> """
-      SELECT c_mktsegment, count(*) AS n FROM customer
-      WHERE NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey AND o_orderstatus = 'F')
-      GROUP BY c_mktsegment""",
-
-    "rel_join_semi" -> """
-      SELECT c_nationkey, count(*) AS n FROM customer
-      WHERE EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)
-      GROUP BY c_nationkey""",
-
-    "rel_join_full" -> """
-      WITH c AS (SELECT c_nationkey, count(*) AS n_cust FROM customer GROUP BY 1),
-           su AS (SELECT s_nationkey, count(*) AS n_supp FROM supplier GROUP BY 1)
-      SELECT coalesce(c_nationkey, s_nationkey) AS nationkey,
-             coalesce(n_cust, 0) AS n_cust, coalesce(n_supp, 0) AS n_supp
-      FROM c FULL OUTER JOIN su ON c_nationkey = s_nationkey""",
-
-    "rel_window_topk" -> """
-      SELECT l_orderkey, l_linenumber, rnk FROM (
-        SELECT l_orderkey, l_linenumber,
-               row_number() OVER (PARTITION BY l_orderkey
-                                  ORDER BY l_extendedprice DESC, l_linenumber) AS rnk
-        FROM lineitem) t
-      WHERE rnk <= 3""",
-
-    "rel_window_running" -> """
-      SELECT l_suppkey, l_orderkey, l_linenumber,
-             CAST(sum(CAST(l_quantity AS DECIMAL(18,2)))
-                  OVER (PARTITION BY l_suppkey
-                        ORDER BY l_shipdate, l_orderkey, l_linenumber, l_quantity, l_extendedprice
-                        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE) AS running
-      FROM lineitem""",
-
-    "rel_sort_limit" -> """
-      SELECT o_orderkey, o_totalprice FROM orders
-      ORDER BY o_totalprice DESC, o_orderkey LIMIT 100""",
-
-    "rel_window_range" -> """
-      SELECT l_suppkey, l_orderkey, l_linenumber,
-             CAST(date_diff('day', DATE '1970-01-01', CAST(l_shipdate AS DATE)) AS BIGINT) AS ship_day,
-             CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) OVER (
-               PARTITION BY l_suppkey
-               ORDER BY date_diff('day', DATE '1970-01-01', CAST(l_shipdate AS DATE))
-               RANGE BETWEEN 6 PRECEDING AND CURRENT ROW) AS DOUBLE) AS qty_7d
-      FROM lineitem""",
-
-    "rel_ntile" -> """
-      SELECT bucket, CAST(count(*) AS BIGINT) AS n,
-             min(o_totalprice) AS lo, max(o_totalprice) AS hi
-      FROM (SELECT o_totalprice,
-                   CAST(ntile(10) OVER (ORDER BY o_totalprice, o_orderkey) AS BIGINT) AS bucket
-            FROM orders) t
-      GROUP BY bucket""",
-
-    "rel_distinct" ->
-      "SELECT DISTINCT l_returnflag, l_linestatus FROM lineitem",
-
-    "rel_setop_except" -> """
-      SELECT o_custkey AS custkey FROM orders WHERE o_orderstatus = 'O'
-      EXCEPT
-      SELECT o_custkey AS custkey FROM orders WHERE o_orderstatus = 'F'""",
-
-    "rel_setop_intersect" -> """
-      SELECT o_custkey AS custkey FROM orders WHERE o_orderstatus = 'O'
-      INTERSECT
-      SELECT o_custkey AS custkey FROM orders WHERE o_orderstatus = 'F'""",
-
-    "rel_rollup" -> """
-      SELECT l_returnflag, l_linestatus, count(*) AS n,
-             CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty
-      FROM lineitem GROUP BY ROLLUP (l_returnflag, l_linestatus)""",
-
-    "rel_cube" -> """
-      SELECT l_returnflag, l_linestatus, count(*) AS n,
-             CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty
-      FROM lineitem GROUP BY CUBE (l_returnflag, l_linestatus)""",
-
-    "pipeline_clean" -> """
-      WITH RECURSIVE base AS (
-        SELECT doc_id, text FROM documents
-        WHERE len(list_filter(string_split(text, ' '),
-                t -> t IN ('the','a','an','of','and','to','in','is','on','for','with','as','at','by','be','this','that','it','or','are','was','from')))::DOUBLE
-              / len(string_split(text, ' ')) >= 0.05
-          AND (strlen(text) - strlen(regexp_replace(lower(text), '[^a-z0-9 ]', '', 'g')))::DOUBLE
-              / strlen(text) < 0.3),
-      kept AS (
-        SELECT min(doc_id) AS doc_id, text FROM base GROUP BY text),
-      sh AS (
-        SELECT doc_id, list_distinct(CASE WHEN len(s) >= 3
-          THEN [s[i] || ' ' || s[i+1] || ' ' || s[i+2] for i in range(1, len(s) - 1)]
-          ELSE [] END) AS shingles
-        FROM (SELECT doc_id, string_split(text, ' ') AS s FROM kept)),
-      p AS (
-        SELECT id_a, id_b FROM (
-          SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-                 len(list_intersect(a.shingles, b.shingles))::DOUBLE
-                   / len(list_distinct(a.shingles || b.shingles)) AS j
-          FROM sh a JOIN sh b ON a.doc_id < b.doc_id) t
-        WHERE j >= 0.8),
-      edges AS (SELECT id_a AS src, id_b AS dst FROM p
-                UNION SELECT id_b, id_a FROM p),
-      reach(src, dst) AS (
-        SELECT doc_id, doc_id FROM kept
-        UNION
-        SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src)
-      SELECT k.doc_id FROM kept k
-      JOIN (SELECT src, min(dst) AS rep FROM reach GROUP BY src) c
-        ON k.doc_id = c.src AND k.doc_id = c.rep""",
-
-    "pipeline_prepare" -> """
-      WITH sh AS (
-        SELECT doc_id, list_distinct(CASE WHEN len(s) >= 3
-          THEN [s[i] || ' ' || s[i+1] || ' ' || s[i+2] for i in range(1, len(s) - 1)]
-          ELSE [] END) AS shingles
-        FROM (SELECT doc_id, string_split(text, ' ') AS s FROM documents)),
-      tr AS (SELECT doc_id, unnest(shingles) AS sgram FROM sh WHERE doc_id % 37 <> 0),
-      ev AS (SELECT DISTINCT unnest(shingles) AS sgram FROM sh WHERE doc_id % 37 = 0),
-      flagged AS (
-        SELECT tr.doc_id FROM tr JOIN ev USING (sgram)
-        GROUP BY tr.doc_id HAVING count(DISTINCT tr.sgram) >= 2),
-      sampled AS (
-        SELECT d.* FROM documents d
-        WHERE d.doc_id % 37 <> 0
-          AND d.doc_id NOT IN (SELECT doc_id FROM flagged)
-          AND (((d.doc_id % 1000003) * 2654435761) % 4294967296)::DOUBLE / 4294967296.0
-              < CASE d.lang WHEN 'en' THEN 0.5 WHEN 'de' THEN 0.25 ELSE 0.1 END),
-      split AS (
-        SELECT *, CASE WHEN u2 < 0.9 THEN 'train'
-                       WHEN u2 < 0.95 THEN 'val'
-                       ELSE 'test' END AS split
-        FROM (SELECT *,
-                ((((doc_id + 777) % 1000003) * 2654435761) % 4294967296)::DOUBLE
-                  / 4294967296.0 AS u2
-              FROM sampled) s0),
-      packed AS (
-        SELECT split, source, tok,
-               CAST(floor((cum - tok) / 512.0) AS BIGINT) AS bin
-        FROM (SELECT split, source,
-                     len(string_split(text, ' ')) AS tok,
-                     sum(len(string_split(text, ' ')))
-                       OVER (PARTITION BY source ORDER BY doc_id
-                             ROWS UNBOUNDED PRECEDING) AS cum
-              FROM split) p)
-      SELECT split, count(*) AS n_docs, sum(tok)::BIGINT AS n_tokens,
-             count(DISTINCT source || '#' || bin) AS n_bins
-      FROM packed GROUP BY 1""",
-
-    "pipeline_decontam" -> """
-      WITH sh AS (
-        SELECT doc_id, list_distinct(CASE WHEN len(s) >= 3
-          THEN [s[i] || ' ' || s[i+1] || ' ' || s[i+2] for i in range(1, len(s) - 1)]
-          ELSE [] END) AS shingles
-        FROM (SELECT doc_id, string_split(text, ' ') AS s FROM documents)),
-      tr AS (SELECT doc_id, unnest(shingles) AS sgram FROM sh WHERE doc_id % 37 <> 0),
-      ev AS (SELECT DISTINCT unnest(shingles) AS sgram FROM sh WHERE doc_id % 37 = 0)
-      SELECT tr.doc_id, count(DISTINCT tr.sgram) AS n_hits
-      FROM tr JOIN ev USING (sgram)
-      GROUP BY tr.doc_id HAVING count(DISTINCT tr.sgram) >= 2""",
-
-    // positioned 3-grams on both sides, islands by pos - row_number
-    "curation_decontam_spans" -> """
-      WITH t AS (SELECT doc_id, string_split(text, ' ') AS s FROM documents),
-      g AS (
-        SELECT doc_id, u.pos, u.g FROM (
-          SELECT doc_id, unnest([{'pos': i - 1, 'g': s[i] || ' ' || s[i+1] || ' ' || s[i+2]}
-                                 for i in range(1, len(s) - 1)]) AS u
-          FROM t WHERE len(s) >= 3)),
-      tr AS (SELECT doc_id, pos, g FROM g WHERE doc_id % 37 <> 0),
-      ev AS (SELECT DISTINCT doc_id AS bench_id, g FROM g WHERE doc_id % 37 = 0),
-      hits AS (
-        SELECT tr.doc_id, ev.bench_id, tr.pos,
-               tr.pos - row_number() OVER (PARTITION BY tr.doc_id, ev.bench_id
-                                           ORDER BY tr.pos) AS island
-        FROM tr JOIN ev USING (g))
-      SELECT doc_id, bench_id,
-             CAST(min(pos) AS BIGINT) AS start_word,
-             CAST(max(pos) + 2 AS BIGINT) AS end_word,
-             count(*) AS n_grams
-      FROM hits GROUP BY doc_id, bench_id, island""",
-
-    "pipeline_stratified" -> """
-      SELECT doc_id, lang, source FROM documents
-      WHERE (((doc_id % 1000003) * 2654435761) % 4294967296)::DOUBLE / 4294967296.0
-            < CASE lang WHEN 'en' THEN 0.5 WHEN 'de' THEN 0.25 ELSE 0.1 END""",
-
-    // sliding token windows: k in 0..max(0, ceil((len-32)/16)); DuckDB
-    // list slicing is 1-based inclusive like Spark's slice
-    "pipeline_chunks" -> """
-      WITH t AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
-      k AS (SELECT doc_id, toks, len(toks) AS n,
-                   unnest(generate_series(0, greatest(0, (len(toks) - 32 + 16 - 1) // 16))) AS chunk_id
-            FROM t)
-      SELECT doc_id, chunk_id::BIGINT AS chunk_id,
-             len(toks[chunk_id * 16 + 1 : least(chunk_id * 16 + 32, n)])::BIGINT AS n_tokens,
-             array_to_string(toks[chunk_id * 16 + 1 : least(chunk_id * 16 + 32, n)], ' ') AS chunk_text
-      FROM k""",
-
-    // the same draw; rate = (n_min/n_source)^(1-alpha) micro-quantized
-    "pipeline_temperature" -> """
-      WITH c AS (SELECT lang AS s, COUNT(*) AS n FROM documents GROUP BY 1),
-      r AS (SELECT s, ROUND(POW((SELECT MIN(n) FROM c)::DOUBLE / n, 0.7) * 1e6)
-                   AS rate_micro FROM c)
-      SELECT d.doc_id, d.lang FROM documents d JOIN r ON d.lang = r.s
-      WHERE (((d.doc_id % 1000003) * 2654435761) % 4294967296)::DOUBLE / 4294967296.0
-            < rate_micro / 1e6""",
-
-    "pipeline_shuffle" -> """
-      WITH t AS (SELECT doc_id,
-                        ((doc_id % 1000003) * 2654435761) % 4294967296 AS d
-                 FROM documents)
-      SELECT doc_id, (d % 16)::INT AS shard,
-             row_number() OVER (PARTITION BY d % 16 ORDER BY d, doc_id) AS pos
-      FROM t""",
-
-    "pipeline_splits" -> """
-      WITH t AS (
-        SELECT lang,
-               CASE WHEN u < 0.9 THEN 'train'
-                    WHEN u < 0.95 THEN 'val'
-                    ELSE 'test' END AS split
-        FROM (SELECT lang,
-                     (((doc_id % 1000003) * 2654435761) % 4294967296)::DOUBLE
-                       / 4294967296.0 AS u
-              FROM documents) d)
-      SELECT lang, split, count(*) AS n FROM t GROUP BY 1, 2""",
-
-    "pipeline_pack" -> """
-      WITH t AS (
-        SELECT source,
-               len(string_split(text, ' ')) AS tok,
-               sum(len(string_split(text, ' ')))
-                 OVER (PARTITION BY source ORDER BY doc_id
-                       ROWS UNBOUNDED PRECEDING) AS cum
-        FROM documents)
-      SELECT source, CAST(floor((cum - tok) / 512.0) AS BIGINT) AS bin,
-             count(*) AS n_docs, sum(tok)::BIGINT AS n_tokens
-      FROM t GROUP BY 1, 2""",
-
-    "pipeline_mix" -> """
-      SELECT doc_id, source FROM (
-        SELECT doc_id, source,
-               row_number() OVER (PARTITION BY source
-                 ORDER BY ((doc_id % 1000003) * 2654435761) % 4294967296, doc_id) AS rk
-        FROM documents) t
-      WHERE rk <= CASE source WHEN 'src0' THEN 15 WHEN 'src1' THEN 10 ELSE 5 END""",
-
-    // ⌊√n⌋ weights (IEEE sqrt is correctly rounded in every engine) keep
-    // the whole budget split in exact integer arithmetic
-    "curation_temperature" -> """
-      WITH c AS (
-        SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
-               CAST(floor(sqrt(count(*))) AS BIGINT) AS w
-        FROM documents GROUP BY source),
-      t AS (SELECT CAST(sum(w) AS BIGINT) AS w_total FROM c),
-      tg AS (SELECT source, n_docs, CAST((w * 200) // w_total AS BIGINT) AS target_n FROM c, t),
-      r AS (
-        SELECT doc_id, source,
-               row_number() OVER (PARTITION BY source ORDER BY doc_id) AS rn
-        FROM documents)
-      SELECT tg.source, tg.n_docs, tg.target_n,
-             CAST(count(r.doc_id) AS BIGINT) AS kept_n,
-             CAST(coalesce(sum(r.doc_id), 0) AS BIGINT) AS kept_key_sum
-      FROM tg LEFT JOIN r ON r.source = tg.source AND r.rn <= tg.target_n
-      GROUP BY tg.source, tg.n_docs, tg.target_n""",
-
-    // full independent DSIR re-derivation: same rolling-hash buckets,
-    // add-one smoothing, single-log IEEE chain, micro-nat round
-    "curation_dsir" -> """
-      WITH sp AS (
-        SELECT doc_id, lang = 'en' AS tgt, string_split(text, ' ') AS s
-        FROM documents),
-      uni AS (SELECT doc_id, tgt, unnest(s) AS g FROM sp),
-      bi AS (
-        SELECT doc_id, tgt, s[i] || ' ' || s[i + 1] AS g
-        FROM (SELECT doc_id, tgt, s,
-                     unnest(generate_series(1, len(s) - 1))::BIGINT AS i
-              FROM sp WHERE len(s) >= 2)),
-      gr AS (
-        SELECT doc_id, tgt,
-               list_reduce(list_prepend(0::BIGINT,
-                 [ord(substring(g, i, 1))::BIGINT for i in range(1, strlen(g) + 1)]),
-                 (h, c) -> (h * 31 + c) % 1000000007) % 1024 AS b
-        FROM (SELECT * FROM uni UNION ALL SELECT * FROM bi)),
-      cb AS (
-        SELECT b, CAST(sum(CASE WHEN tgt THEN 1 ELSE 0 END) AS BIGINT) AS n_t,
-               CAST(sum(CASE WHEN tgt THEN 0 ELSE 1 END) AS BIGINT) AS n_r
-        FROM gr GROUP BY b),
-      tot AS (
-        SELECT CAST(sum(CASE WHEN tgt THEN 1 ELSE 0 END) AS BIGINT) AS nt_tot,
-               CAST(sum(CASE WHEN tgt THEN 0 ELSE 1 END) AS BIGINT) AS nr_tot
-        FROM gr),
-      model AS (
-        SELECT b, CAST(round(ln(
-                 ((n_t + 1)::DOUBLE * (nr_tot + 1024)::DOUBLE) /
-                 ((n_r + 1)::DOUBLE * (nt_tot + 1024)::DOUBLE)) * 1000000.0) AS BIGINT) AS w_micro
-        FROM cb, tot)
-      SELECT doc_id, CAST(count(*) AS BIGINT) AS n_grams,
-             CAST(sum(w_micro) AS BIGINT) AS score_micro,
-             sum(w_micro) > 0 AS keep
-      FROM gr JOIN model USING (b)
-      GROUP BY doc_id""",
-
-    // both rankings and the fused score are exact integers end-to-end
-    "pipeline_rrf" -> """
-      WITH cos AS (
-        SELECT qid, id, r FROM (
-          SELECT q.vec_id AS qid, e.vec_id AS id,
-                 row_number() OVER (PARTITION BY q.vec_id
-                   ORDER BY list_cosine_similarity(q.embedding, e.embedding) DESC,
-                            e.vec_id) AS r
-          FROM embeddings q CROSS JOIN embeddings e
-          WHERE q.vec_id < 10) t WHERE r <= 20),
-      tok AS (SELECT DISTINCT doc_id, unnest(string_split(text, ' ')) AS t FROM documents),
-      ov AS (
-        SELECT qt.doc_id AS qid, dt.doc_id AS id, count(*) AS c
-        FROM tok qt JOIN tok dt USING (t) WHERE qt.doc_id < 10
-        GROUP BY qt.doc_id, dt.doc_id),
-      lex AS (
-        SELECT qid, id, r FROM (
-          SELECT qid, id, row_number() OVER (PARTITION BY qid ORDER BY c DESC, id) AS r
-          FROM ov) t WHERE r <= 20),
-      contrib AS (
-        SELECT qid, id, 1000000 // (60 + r) AS s FROM cos
-        UNION ALL
-        SELECT qid, id, 1000000 // (60 + r) AS s FROM lex),
-      fused AS (
-        SELECT qid, id, CAST(sum(s) AS BIGINT) AS rrf_micro
-        FROM contrib GROUP BY qid, id)
-      SELECT qid, rnk, id AS doc_id, rrf_micro FROM (
-        SELECT qid, id, rrf_micro,
-               row_number() OVER (PARTITION BY qid
-                 ORDER BY rrf_micro DESC, id) AS rnk
-        FROM fused) t WHERE rnk <= 10""",
-
-    // the bloom prefilter is exact-confirmed, so the oracle is the plain
-    // anti-join the operator provably equals
-    "pipeline_bloom" -> """
-      SELECT d.doc_id, d.lang, d.source FROM documents d
-      WHERE NOT EXISTS (
-        SELECT 1 FROM documents b WHERE b.doc_id % 41 = 0 AND b.text = d.text)""",
-
-    "dedup_substring" -> """
-      WITH pos AS (
-        SELECT doc_id AS d,
-               unnest(generate_series(1, len(text) - 40 + 1))::BIGINT AS p, text
-        FROM documents WHERE len(text) >= 40),
-      g AS (SELECT d, p, substr(text, p, 40) AS gr FROM pos),
-      pairs AS (
-        SELECT a.d AS d1, b.d AS d2, a.p AS p1, b.p AS p2, a.p - b.p AS diff
-        FROM g a JOIN g b ON a.gr = b.gr AND a.d < b.d),
-      isl AS (
-        SELECT d1, d2, diff, p1,
-               p1 - row_number() OVER (PARTITION BY d1, d2, diff ORDER BY p1) AS i
-        FROM pairs),
-      runs AS (
-        SELECT d1, d2, diff, min(p1) AS s1, max(p1) AS e1
-        FROM isl GROUP BY d1, d2, diff, i)
-      SELECT d1, d2, s1 AS start1, s1 - diff AS start2,
-             CAST(e1 - s1 + 40 AS BIGINT) AS run_len
-      FROM runs WHERE e1 - s1 + 40 >= 80""",
-
-    // the uncapped replay with one extra CTE: grams above 64 positions
-    // corpus-wide are dropped before pairing, exactly as the semi-joined
-    // count filter does on the Spark side
-    "dedup_substring_capped" -> """
-      WITH pos AS (
-        SELECT doc_id AS d,
-               unnest(generate_series(1, len(text) - 40 + 1))::BIGINT AS p, text
-        FROM documents WHERE len(text) >= 40),
-      g0 AS (SELECT d, p, substr(text, p, 40) AS gr FROM pos),
-      gc AS (SELECT gr FROM g0 GROUP BY gr HAVING count(*) <= 64),
-      g AS (SELECT g0.d, g0.p, g0.gr FROM g0 JOIN gc USING (gr)),
-      pairs AS (
-        SELECT a.d AS d1, b.d AS d2, a.p AS p1, b.p AS p2, a.p - b.p AS diff
-        FROM g a JOIN g b ON a.gr = b.gr AND a.d < b.d),
-      isl AS (
-        SELECT d1, d2, diff, p1,
-               p1 - row_number() OVER (PARTITION BY d1, d2, diff ORDER BY p1) AS i
-        FROM pairs),
-      runs AS (
-        SELECT d1, d2, diff, min(p1) AS s1, max(p1) AS e1
-        FROM isl GROUP BY d1, d2, diff, i)
-      SELECT d1, d2, s1 AS start1, s1 - diff AS start2,
-             CAST(e1 - s1 + 40 AS BIGINT) AS run_len
-      FROM runs WHERE e1 - s1 + 40 >= 80""",
-
-    "dedup_substring_self" -> """
-      WITH pos AS (
-        SELECT doc_id AS d,
-               unnest(generate_series(1, len(text) - 20 + 1))::BIGINT AS p, text
-        FROM documents WHERE len(text) >= 20),
-      g AS (SELECT d, p, substr(text, p, 20) AS gr FROM pos),
-      pairs AS (
-        SELECT a.d, a.p AS p1, b.p AS p2, a.p - b.p AS diff
-        FROM g a JOIN g b ON a.gr = b.gr AND a.d = b.d AND a.p > b.p),
-      isl AS (
-        SELECT d, diff, p1,
-               p1 - row_number() OVER (PARTITION BY d, diff ORDER BY p1) AS i
-        FROM pairs),
-      runs AS (
-        SELECT d, diff, min(p1) AS s1, max(p1) AS e1
-        FROM isl GROUP BY d, diff, i)
-      SELECT d, s1 AS start1, s1 - diff AS start2,
-             CAST(e1 - s1 + 20 AS BIGINT) AS run_len
-      FROM runs WHERE e1 - s1 + 20 >= 20""",
-
-    // exact regime: pairs with EQUAL distinct-shingle sets (jaccard 1);
-    // DuckDB compares sorted distinct shingle lists
-    "dedup_incremental" -> """
-      WITH sh AS (
-        SELECT doc_id, list_sort(list_distinct(CASE WHEN len(s) >= 3
-          THEN [s[i] || ' ' || s[i+1] || ' ' || s[i+2] for i in range(1, len(s) - 1)]
-          ELSE [] END)) AS g
-        FROM (SELECT doc_id, string_split(text, ' ') AS s FROM documents)),
-      corp AS (SELECT doc_id, g FROM sh WHERE len(g) > 0),
-      delta AS (SELECT doc_id + 100000 AS id_d, g FROM corp WHERE doc_id % 7 = 0)
-      SELECT d.id_d, c.doc_id AS id_c, CAST(1.0 AS DOUBLE) AS j
-      FROM delta d JOIN corp c ON d.g = c.g""",
-
-    "text_entropy" -> """
-      WITH ch AS (
-        SELECT doc_id, unnest(generate_series(1, len(text)))::BIGINT AS i, text
-        FROM documents WHERE len(text) > 0),
-      counts AS (
-        SELECT doc_id, substring(text, i, 1) AS c, count(*) AS cnt
-        FROM ch GROUP BY doc_id, substring(text, i, 1)),
-      tot AS (SELECT doc_id, CAST(sum(cnt) AS BIGINT) AS n FROM counts GROUP BY doc_id)
-      SELECT t.doc_id, t.n AS n_cp,
-             CAST(sum(cnt * CAST(round(ln(cnt::DOUBLE / t.n::DOUBLE) * 1000000.0) AS BIGINT)) AS BIGINT)
-               AS ent_sum_micro
-      FROM counts JOIN tot t USING (doc_id)
-      GROUP BY t.doc_id, t.n""",
-
-    "text_ppl" -> """
-      WITH tri AS (
-        SELECT doc_id, substr(text, i, 3) AS g
-        FROM (SELECT doc_id, text,
-                     unnest(generate_series(1, len(text) - 2))::BIGINT AS i
-              FROM documents WHERE len(text) >= 3)),
-      counts AS (SELECT g, count(*) AS c FROM tri GROUP BY g),
-      pre AS (SELECT substr(g, 1, 2) AS pre, sum(c) AS cp FROM counts GROUP BY 1),
-      model AS (
-        SELECT g, CAST(round(ln(c::DOUBLE / cp::DOUBLE) * 1000000.0) AS BIGINT) AS lp
-        FROM counts JOIN pre ON substr(g, 1, 2) = pre.pre)
-      SELECT doc_id, CAST(count(*) AS BIGINT) AS n_grams,
-             CAST(sum(lp) AS BIGINT) AS logp_sum_micro
-      FROM tri JOIN model USING (g)
-      GROUP BY doc_id""",
-
-    // fixed-point PageRank, 3 unrolled synchronous iterations — integer
-    // arithmetic end-to-end so the recursion is engine-exact
-    "graph_pagerank" -> """
-      WITH e AS (SELECT DISTINCT l_suppkey AS src, l_partkey + 1000000 AS dst FROM lineitem),
-      nodes AS (SELECT src AS node FROM e UNION SELECT dst FROM e),
-      deg AS (SELECT src, count(*) AS deg FROM e GROUP BY src),
-      r0 AS (SELECT node, CAST(1000000 AS BIGINT) AS rank FROM nodes),
-      c1 AS (SELECT dst, sum(rank // deg) AS s
-             FROM e JOIN r0 ON e.src = r0.node JOIN deg USING (src) GROUP BY dst),
-      r1 AS (SELECT node, 150000 + (coalesce(s, 0) * 850) // 1000 AS rank
-             FROM nodes LEFT JOIN c1 ON node = c1.dst),
-      c2 AS (SELECT dst, sum(rank // deg) AS s
-             FROM e JOIN r1 ON e.src = r1.node JOIN deg USING (src) GROUP BY dst),
-      r2 AS (SELECT node, 150000 + (coalesce(s, 0) * 850) // 1000 AS rank
-             FROM nodes LEFT JOIN c2 ON node = c2.dst),
-      c3 AS (SELECT dst, sum(rank // deg) AS s
-             FROM e JOIN r2 ON e.src = r2.node JOIN deg USING (src) GROUP BY dst),
-      r3 AS (SELECT node, 150000 + (coalesce(s, 0) * 850) // 1000 AS rank
-             FROM nodes LEFT JOIN c3 ON node = c3.dst)
-      SELECT node, CAST(rank AS BIGINT) AS rank FROM r3
-      ORDER BY rank DESC, node LIMIT 20""",
-
-    // Morton-code bucket stats: identical mask-doubling bit spread
-    "rel_zorder" -> """
-      WITH mx AS (SELECT max(l_partkey) AS mp, max(l_suppkey) AS ms FROM lineitem),
-      q AS (SELECT l_partkey, l_suppkey,
-                   (l_partkey * 65536) // (mp + 1) AS x,
-                   (l_suppkey * 65536) // (ms + 1) AS y
-            FROM lineitem, mx),
-      a AS (SELECT *, (x | (x << 8)) & 16711935 AS x1,
-                      (y | (y << 8)) & 16711935 AS y1 FROM q),
-      b AS (SELECT *, (x1 | (x1 << 4)) & 252645135 AS x2,
-                      (y1 | (y1 << 4)) & 252645135 AS y2 FROM a),
-      c AS (SELECT *, (x2 | (x2 << 2)) & 858993459 AS x3,
-                      (y2 | (y2 << 2)) & 858993459 AS y3 FROM b),
-      d AS (SELECT *, (x3 | (x3 << 1)) & 1431655765 AS x4,
-                      (y3 | (y3 << 1)) & 1431655765 AS y4 FROM c)
-      SELECT (x4 | (y4 << 1)) >> 26 AS zbucket, count(*) AS n,
-             min(l_partkey) AS min_pk, max(l_partkey) AS max_pk,
-             min(l_suppkey) AS min_sk, max(l_suppkey) AS max_sk
-      FROM d GROUP BY 1""",
-
-    "rel_agg_variance" -> """
-      WITH q AS (
-        SELECT l_returnflag,
-               CAST(round(CAST(l_quantity AS DOUBLE) * 100) AS BIGINT) AS xi,
-               CAST(round(CAST(l_extendedprice AS DOUBLE) * 100) AS BIGINT) AS yi
-        FROM lineitem),
-      m AS (
-        SELECT l_returnflag, CAST(count(*) AS HUGEINT) AS n,
-               sum(CAST(xi AS HUGEINT)) AS sx, sum(CAST(yi AS HUGEINT)) AS sy,
-               sum(CAST(xi AS HUGEINT) * CAST(xi AS HUGEINT)) AS sxx,
-               sum(CAST(yi AS HUGEINT) * CAST(yi AS HUGEINT)) AS syy,
-               sum(CAST(xi AS HUGEINT) * CAST(yi AS HUGEINT)) AS sxy
-        FROM q GROUP BY l_returnflag)
-      SELECT l_returnflag, CAST(n AS BIGINT) AS n,
-             CASE WHEN n > 1 THEN
-               CAST(n * sxx - sx * sx AS DOUBLE) / CAST(n * (n - 1) AS DOUBLE) / 1e4
-             END AS var_qty,
-             CASE WHEN n > 1 THEN
-               sqrt(CAST(n * sxx - sx * sx AS DOUBLE) / CAST(n * (n - 1) AS DOUBLE) / 1e4)
-             END AS std_qty,
-             CASE WHEN n > 1 AND n * sxx - sx * sx > 0 AND n * syy - sy * sy > 0 THEN
-               CAST(n * sxy - sx * sy AS DOUBLE) /
-                 sqrt(CAST(n * sxx - sx * sx AS DOUBLE) *
-                      CAST(n * syy - sy * sy AS DOUBLE))
-             END AS corr_qp
-      FROM m""",
-
-    "rel_grouping_sets" -> """
-      SELECT l_returnflag, l_linestatus, count(*) AS n,
-             CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty
-      FROM lineitem GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), ())""",
-
-    "rel_window_misc" -> """
-      SELECT o_custkey, o_orderkey,
-             CAST(lag(o_totalprice, 1) OVER w AS DOUBLE) AS prev_price,
-             CAST(lead(o_totalprice, 1) OVER w AS DOUBLE) AS next_price,
-             CAST(ntile(4) OVER w AS BIGINT) AS quartile,
-             percent_rank() OVER w AS pr
-      FROM orders
-      WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey)""",
-
-    "rel_skew_join" -> """
-      SELECT c_nationkey, count(*) AS n,
-             CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS rev
-      FROM orders JOIN customer ON o_custkey = c_custkey
-      GROUP BY c_nationkey""",
-
-    "rel_partition_prune" -> """
-      SELECT user_id, count(*) AS n,
-             CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
-      FROM events WHERE event_type = 'purchase' GROUP BY user_id""",
-
-    "rel_agg_stats" -> """
-      SELECT l_returnflag, count(DISTINCT l_partkey) AS n_parts,
-             min(l_quantity) AS min_qty, max(l_quantity) AS max_qty, count(*) AS n
-      FROM lineitem GROUP BY l_returnflag""",
-
-    "rel_unpivot" -> """
-      SELECT l_orderkey, l_linenumber, 'l_quantity' AS measure, l_quantity AS val
-      FROM lineitem
-      UNION ALL
-      SELECT l_orderkey, l_linenumber, 'l_discount', l_discount FROM lineitem
-      UNION ALL
-      SELECT l_orderkey, l_linenumber, 'l_tax', l_tax FROM lineitem""",
-
-    "rel_pivot_manual" -> """
-      SELECT l_returnflag,
-             CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) FILTER (WHERE l_linestatus = 'F') AS DOUBLE) AS qty_f,
-             CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) FILTER (WHERE l_linestatus = 'O') AS DOUBLE) AS qty_o
-      FROM lineitem GROUP BY l_returnflag""",
-
-    "rel_above_avg" -> """
-      SELECT s_suppkey, s_name FROM supplier
-      WHERE s_acctbal * (SELECT count(*) FROM supplier)
-            > CAST((SELECT sum(CAST(s_acctbal AS DECIMAL(18,2))) FROM supplier) AS DOUBLE)""",
-
-    "rel_dates" -> """
-      SELECT year(o_orderdate) AS yr, count(*) AS n,
-             CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total
-      FROM orders GROUP BY year(o_orderdate)""",
-
-    "rel_asof_join" -> """
-      WITH o AS (SELECT o_custkey, o_orderdate, max(o_orderkey) AS o_orderkey
-                 FROM orders GROUP BY o_custkey, o_orderdate)
-      SELECT e.event_id, o.o_orderkey
-      FROM events e ASOF LEFT JOIN o
-        ON e.user_id = o.o_custkey AND e.ts >= o.o_orderdate""",
-
-    "rel_range_join" -> """
-      SELECT e.event_id, a.event_id AS anchor_id
-      FROM events e JOIN events a
-        ON e.user_id = a.user_id
-       AND a.event_type = 'error'
-       AND e.ts >= a.ts
-       AND e.ts < a.ts + INTERVAL 1 HOUR""",
-
-    "sketch_stats" -> """
-      SELECT l_returnflag, count(DISTINCT l_partkey) AS exact_parts,
-             true AS approx_ok, true AS p50_ok
-      FROM lineitem GROUP BY l_returnflag""",
-
-    "sketch_hll_merge" -> """
-      SELECT event_type AS grp,
-             CAST(count(DISTINCT user_id) AS BIGINT) AS exact_distinct,
-             true AS ok
-      FROM events GROUP BY event_type
-      UNION ALL
-      SELECT 'ALL' AS grp,
-             CAST(count(DISTINCT user_id) AS BIGINT) AS exact_distinct,
-             true AS ok
-      FROM events""",
-
-    "curation_ccnet_buckets" -> """
-      WITH tri AS (
-        SELECT doc_id, substr(text, i, 3) AS g
-        FROM (SELECT doc_id, text,
-                     unnest(generate_series(1, len(text) - 2))::BIGINT AS i
-              FROM documents WHERE len(text) >= 3)),
-      counts AS (SELECT g, count(*) AS c FROM tri GROUP BY g),
-      pre AS (SELECT substr(g, 1, 2) AS pre, sum(c) AS cp FROM counts GROUP BY 1),
-      model AS (
-        SELECT g, CAST(round(ln(c::DOUBLE / cp::DOUBLE) * 1000000.0) AS BIGINT) AS lp
-        FROM counts JOIN pre ON substr(g, 1, 2) = pre.pre),
-      scored AS (
-        SELECT doc_id, count(*) AS n_grams, sum(lp) AS lps
-        FROM tri JOIN model USING (g) GROUP BY doc_id),
-      j AS (
-        SELECT d.doc_id, d.lang,
-               CAST((-lps) // n_grams AS BIGINT) AS cost_micro
-        FROM scored JOIN documents d USING (doc_id)),
-      r AS (
-        SELECT doc_id, lang, cost_micro,
-               row_number() OVER (PARTITION BY lang ORDER BY cost_micro, doc_id) AS rn,
-               count(*) OVER (PARTITION BY lang) AS cnt
-        FROM j)
-      SELECT doc_id, lang, cost_micro,
-             CAST(((rn - 1) * 3) // cnt + 1 AS BIGINT) AS bucket,
-             CASE ((rn - 1) * 3) // cnt + 1 WHEN 1 THEN 'head' WHEN 3 THEN 'tail'
-                  ELSE 'middle' END AS label
-      FROM r""",
-
-    "sketch_cms" -> """
-      WITH h(i, a, b) AS (VALUES
-        (0, 2654435761, 1013904223), (1, 2246822519, 374761393),
-        (2, 3266489917, 668265263), (3, 2654435789, 97)),
-      sk AS (
-        SELECT i, ((user_id % 1000003) * a + b) % 8192 AS bucket, count(*) AS cnt
-        FROM events CROSS JOIN h GROUP BY 1, 2),
-      q AS (SELECT DISTINCT user_id FROM events),
-      probes AS (
-        SELECT q.user_id, h.i, ((q.user_id % 1000003) * h.a + h.b) % 8192 AS bucket
-        FROM q CROSS JOIN h)
-      SELECT p.user_id, min(coalesce(sk.cnt, 0))::BIGINT AS est
-      FROM probes p LEFT JOIN sk ON sk.i = p.i AND sk.bucket = p.bucket
-      GROUP BY 1""",
-
-    "jq_by_builtins" -> """
-      WITH d AS (SELECT event_id, event_id % 5 AS a, user_id % 5 AS b FROM events)
-      SELECT event_id,
-             CASE WHEN a <= b THEN '[1,2]' ELSE '[2,1]' END AS sorted_b,
-             CAST(CASE WHEN a = b THEN 1 ELSE 2 END AS BIGINT) AS n_groups,
-             CAST(CASE WHEN a = b THEN 1 ELSE 2 END AS BIGINT) AS uniq_n,
-             CAST(CASE WHEN a <= b THEN 1 ELSE 2 END AS BIGINT) AS min_b,
-             CAST(CASE WHEN a > b THEN 1 ELSE 2 END AS BIGINT) AS max_b,
-             '[' || a || ',' || b || ',1]' AS flat,
-             CAST(6 AS BIGINT) AS npaths,
-             b AS gp,
-             a AS rt
-      FROM d""",
-
-    "jq_stream_rt" -> s"""
-      SELECT event_id, $NestedDocSql AS rt, CAST(10 AS BIGINT) AS n_events
-      FROM events""",
-
-    "jq_formats" -> """
-      WITH c AS (SELECT event_id, CAST(json_extract(props, '$.k') AS BIGINT) AS k FROM events)
-      SELECT d.doc_id,
-             to_base64(encode(d.text)) AS b64,
-             d.text AS rt,
-             c.k || ',' || (c.k * 2) || ',"x,y"' AS csvrow
-      FROM documents d JOIN c ON d.doc_id = c.event_id""",
-
-    "jq_regex_text" -> """
-      SELECT doc_id,
-             regexp_replace(text, '[aeiou]', '_', 'g') AS subbed,
-             regexp_replace(text, 'e', '3') AS sub1,
-             text AS rt,
-             regexp_matches(text || chr(10) || 'END', '(?s)a.*END') AS ds,
-             len(regexp_extract_all(replace(text, ' ', chr(10)), '(?m)^[A-Za-z]')) AS ml
-      FROM documents""",
-
-    "jq_paths_update" -> """
-      WITH d AS (SELECT event_id, CAST(json_extract(props, '$.k') AS BIGINT) AS k FROM events)
-      SELECT event_id,
-             '{"a":' || k || ',"k":' || k || '}' AS sp,
-             CASE WHEN k >= 50 THEN 0 ELSE CAST(CEIL((50 - k) / 7.0) AS BIGINT) END AS wh,
-             CASE WHEN k > 50 THEN k
-                  ELSE k + 13 * (CAST(FLOOR((50 - k) / 13.0) AS BIGINT) + 1) END AS ut,
-             k % 3 + 1 AS lim
-      FROM d""",
-
-    "jq_userdef" -> """
-      WITH d AS (SELECT event_id, CAST(json_extract(props, '$.k') AS BIGINT) AS k FROM events)
-      SELECT event_id, k * 2 + 7 AS v,
-             CAST(factorial(CAST(k % 6 + 1 AS INTEGER)) AS BIGINT) AS f,
-             k * 3 + 2 AS fm
-      FROM d""",
-
-    "jq_fold_interp" -> """
-      WITH d AS (SELECT event_id, event_id % 100 AS k,
-                        CAST(json_extract(props, '$.k') AS BIGINT) AS pk FROM events)
-      SELECT event_id,
-             k * 3 + 7 AS total,
-             '[' || k || ',' || (k * 3) || ',' || (k * 3 + 7) || ']' AS scan,
-             k * 3 AS bound,
-             'k=' || pk || '!' AS label
-      FROM d""",
-
-    // --- jq over nested documents ----------------------------------------
-    // NESTED_DOC_SQL builds byte-identically the doc nestedDoc builds in
-    // Spark; navigation oracles then use DuckDB's OWN JSON parser on it.
-
-    "jq_assign_dynamic" -> """
-      SELECT event_id,
-             3 * x0 + 2 AS bump,
-             (CASE WHEN x0 < 25 THEN x0 ELSE 0 END
-              + CASE WHEN 2 * x0 < 25 THEN 2 * x0 ELSE 0 END) AS zero_big,
-             2::BIGINT AS set_all,
-             event_type || '-x' AS tagged
-      FROM (SELECT event_id, user_id % 50 AS x0, event_type FROM events) t""",
-
-    "jq_sql_api" -> """
-      SELECT event_id, k,
-             '{"k2":' || (k * 2) || '}' AS doubled,
-             1::BIGINT AS n_props,
-             0::INT AS self_cmp,
-             '{"k":' || k || '}' AS canon
-      FROM (SELECT event_id, CAST(json_extract(props, '$.k') AS BIGINT) AS k
-            FROM events) t""",
-
-    "jq_path_mode" -> """
-      WITH t AS (SELECT event_id, event_id % 100 AS c, user_id % 50 AS x0,
-                        (user_id % 50) * 2 AS x1 FROM events)
-      SELECT event_id,
-             '["a","b","c"]' AS pc,
-             '["tags",1]' AS p1,
-             10::BIGINT AS npaths,
-             ((CASE WHEN c >= 25 THEN 1 ELSE 0 END)
-              + (CASE WHEN x0 >= 25 THEN 1 ELSE 0 END)
-              + (CASE WHEN x1 >= 25 THEN 1 ELSE 0 END))::BIGINT AS big_xs,
-             ((CASE WHEN x0 >= 25 THEN 1 ELSE 0 END)
-              + (CASE WHEN x1 >= 25 THEN 1 ELSE 0 END))::BIGINT AS del_small,
-             c AS getp
-      FROM t""",
-
-    "jq_nested_nav" -> s"""
-      WITH d AS (SELECT event_id, $NestedDocSql AS doc FROM events)
-      SELECT event_id,
-             CAST(json_extract(doc, '$$.a.b.c') AS BIGINT) AS c,
-             CAST(json_extract(doc, '$$.xs[1]') AS BIGINT) AS x1,
-             json_extract_string(doc, '$$.tags[0]') AS t0
-      FROM d""",
-
-    "jq_nested_recurse" -> s"""
-      WITH d AS (SELECT event_id, event_id % 100 AS c, event_type AS t,
-                        user_id % 50 AS x FROM events)
-      SELECT event_id, $NestedDocSql AS v FROM events
-      UNION ALL SELECT event_id, '{"b":{"c":' || c || '}}' FROM d
-      UNION ALL SELECT event_id, '{"c":' || c || '}' FROM d
-      UNION ALL SELECT event_id, CAST(c AS VARCHAR) FROM d
-      UNION ALL SELECT event_id, '["' || t || '","zz"]' FROM d
-      UNION ALL SELECT event_id, '"' || t || '"' FROM d
-      UNION ALL SELECT event_id, '"zz"' FROM d
-      UNION ALL SELECT event_id, '[' || x || ',' || (x * 2) || ']' FROM d
-      UNION ALL SELECT event_id, CAST(x AS VARCHAR) FROM d
-      UNION ALL SELECT event_id, CAST(x * 2 AS VARCHAR) FROM d""",
-
-    "jq_nested_collect" -> """
-      SELECT event_id,
-             '[' || ((user_id % 50) * 2) || ',' || ((user_id % 50) * 4) || ']' AS doubled
-      FROM events""",
-
-    "jq_nested_fanout" -> """
-      SELECT event_id,
-             '{"c":' || (event_id % 100) || ',"t":"' || event_type || '"}' AS v_doc
-      FROM events
-      UNION ALL
-      SELECT event_id, '{"c":' || (event_id % 100) || ',"t":"zz"}' AS v_doc
-      FROM events""",
-
-    "jq_variant_path" -> s"""
-      WITH d AS (SELECT event_id, $NestedDocSql AS doc FROM events)
-      SELECT e.event_id,
-             CAST(json_extract(e.props, '$$.k') AS BIGINT) AS k,
-             CAST(json_extract(d.doc, '$$.a.b.c') AS BIGINT) AS c
-      FROM events e JOIN d ON e.event_id = d.event_id""",
-
-    "jq_typed_path" -> """
-      SELECT l_returnflag AS flag, count(*) AS n,
-             CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
-             CAST(sum(CAST(l_discount AS DECIMAL(18,2))) AS DOUBLE) AS sum_disc
-      FROM lineitem GROUP BY 1""",
-
-    "jq_walk" -> """
-      WITH d AS (SELECT event_id, event_id % 100 + 1 AS c, event_type AS t,
-                        user_id % 50 AS x FROM events)
-      SELECT event_id,
-             '{"a":{"b":{"c":' || c || '}},"tags":["' || t || '","zz"],"xs":['
-               || (x + 1) || ',' || (x * 2 + 1) || ']}' AS w,
-             '{"a":{"b":{"c":' || c || '}},"tags":["' || t || '","zz"],"xs":['
-               || (x + 1) || ',' || (x * 2 + 1) || ']}' AS uw,
-             c + 1 AS md
-      FROM d""",
-
-    "jq_trycatch" -> """
-      WITH d AS (SELECT event_id, CAST(json_extract(props, '$.k') AS BIGINT) AS k FROM events)
-      SELECT event_id,
-             CAST(-1 AS BIGINT) AS t1,
-             k AS t2,
-             'bad ' || k AS t3,
-             CAST(0 AS BIGINT) AS t4
-      FROM d""",
-
-    "jq_scan" -> """
-      SELECT doc_id,
-             array_to_string(regexp_extract_all(text, '[aeiou]+'), '|') AS sc,
-             array_to_string(regexp_extract_all(text, '[a-z]+'), ',') AS mg,
-             CAST(length(text) - length(replace(text, 'e', '')) AS BIGINT) AS mo
-      FROM documents""",
-
-    // --- dedup family ----------------------------------------------------
-    "dedup_exact" ->
-      "SELECT props, min(event_id) AS keeper, count(*) AS n FROM events GROUP BY props",
-
-    "dedup_exact_docs" ->
-      "SELECT min(doc_id) AS doc_id FROM documents GROUP BY text",
-
-    "dedup_minhash" -> """
-      WITH sh AS (
-        SELECT doc_id, list_distinct(CASE WHEN len(s) >= 3
-          THEN [s[i] || ' ' || s[i+1] || ' ' || s[i+2] for i in range(1, len(s) - 1)]
-          ELSE [] END) AS shingles
-        FROM (SELECT doc_id, string_split(text, ' ') AS s FROM documents))
-      SELECT id_a, id_b, j FROM (
-        SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-               len(list_intersect(a.shingles, b.shingles))::DOUBLE
-                 / len(list_distinct(a.shingles || b.shingles)) AS j
-        FROM sh a JOIN sh b ON a.doc_id < b.doc_id) t
-      WHERE j >= 0.8""",
-
-    "dedup_keep" -> """
-      WITH RECURSIVE sh AS (
-        SELECT doc_id, list_distinct(CASE WHEN len(s) >= 3
-          THEN [s[i] || ' ' || s[i+1] || ' ' || s[i+2] for i in range(1, len(s) - 1)]
-          ELSE [] END) AS shingles
-        FROM (SELECT doc_id, string_split(text, ' ') AS s FROM documents)),
-      p AS (
-        SELECT id_a, id_b FROM (
-          SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-                 len(list_intersect(a.shingles, b.shingles))::DOUBLE
-                   / len(list_distinct(a.shingles || b.shingles)) AS j
-          FROM sh a JOIN sh b ON a.doc_id < b.doc_id) t
-        WHERE j >= 0.8),
-      edges AS (SELECT id_a AS src, id_b AS dst FROM p
-                UNION SELECT id_b, id_a FROM p),
-      reach(src, dst) AS (
-        SELECT doc_id, doc_id FROM documents
-        UNION
-        SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src)
-      SELECT d.doc_id, d.lang
-      FROM documents d
-      JOIN (SELECT src, min(dst) AS rep FROM reach GROUP BY src) c
-        ON d.doc_id = c.src AND d.doc_id = c.rep""",
-
-    "dedup_clusters" -> """
-      WITH RECURSIVE sh AS (
-        SELECT doc_id, list_distinct(CASE WHEN len(s) >= 3
-          THEN [s[i] || ' ' || s[i+1] || ' ' || s[i+2] for i in range(1, len(s) - 1)]
-          ELSE [] END) AS shingles
-        FROM (SELECT doc_id, string_split(text, ' ') AS s FROM documents)),
-      p AS (
-        SELECT id_a, id_b FROM (
-          SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-                 len(list_intersect(a.shingles, b.shingles))::DOUBLE
-                   / len(list_distinct(a.shingles || b.shingles)) AS j
-          FROM sh a JOIN sh b ON a.doc_id < b.doc_id) t
-        WHERE j >= 0.8),
-      edges AS (SELECT id_a AS src, id_b AS dst FROM p
-                UNION SELECT id_b, id_a FROM p),
-      reach(src, dst) AS (
-        SELECT doc_id, doc_id FROM documents
-        UNION
-        SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src)
-      SELECT src AS doc_id, min(dst) AS rep FROM reach GROUP BY src""",
-
-    "dedup_simhash" -> """
-      WITH sh AS (
-        SELECT doc_id, list_distinct(CASE WHEN len(s) >= 3
-          THEN [s[i] || ' ' || s[i+1] || ' ' || s[i+2] for i in range(1, len(s) - 1)]
-          ELSE [] END) AS shingles
-        FROM (SELECT doc_id, string_split(text, ' ') AS s FROM documents))
-      SELECT id_a, id_b, j FROM (
-        SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-               len(list_intersect(a.shingles, b.shingles))::DOUBLE
-                 / len(list_distinct(a.shingles || b.shingles)) AS j
-        FROM sh a JOIN sh b ON a.doc_id < b.doc_id) t
-      WHERE j >= 0.8""",
-
-    // identical brute-force contract as dedup_simhash: the cap is a
-    // measured no-op at the gate SFs (largest bucket 11 ≪ 256 at
-    // sf0.01), so the capped run must STILL find every true pair —
-    // recall = 1 is checked unweakened, and any over-dropping valve bug
-    // (pruning a bucket it shouldn't) breaks the hash here
-    "dedup_simhash_capped" -> """
-      WITH sh AS (
-        SELECT doc_id, list_distinct(CASE WHEN len(s) >= 3
-          THEN [s[i] || ' ' || s[i+1] || ' ' || s[i+2] for i in range(1, len(s) - 1)]
-          ELSE [] END) AS shingles
-        FROM (SELECT doc_id, string_split(text, ' ') AS s FROM documents))
-      SELECT id_a, id_b, j FROM (
-        SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-               len(list_intersect(a.shingles, b.shingles))::DOUBLE
-                 / len(list_distinct(a.shingles || b.shingles)) AS j
-        FROM sh a JOIN sh b ON a.doc_id < b.doc_id) t
-      WHERE j >= 0.8""",
-
-    "dedup_ngram_pairs" -> """
-      WITH sh AS (
-        SELECT doc_id, list_distinct(CASE WHEN len(s) >= 3
-          THEN [s[i] || ' ' || s[i+1] || ' ' || s[i+2] for i in range(1, len(s) - 1)]
-          ELSE [] END) AS shingles
-        FROM (SELECT doc_id, string_split(text, ' ') AS s FROM documents))
-      SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-             len(list_intersect(a.shingles, b.shingles))::DOUBLE
-               / len(list_distinct(a.shingles || b.shingles)) AS j
-      FROM sh a JOIN sh b ON b.doc_id = a.doc_id + 1""",
-
-    // the oracle never touches the CSV: it recomputes the aggregate from
-    // the parquet (same derivation as rel_orc_roundtrip), so any
-    // write/read corruption breaks the hash
-    "rel_csv_roundtrip" -> """
-      SELECT lang, CAST(count(*) AS BIGINT) AS n,
-             CAST(sum(n_chars) AS BIGINT) AS sum_chars,
-             CAST(sum(list_reduce(list_prepend(0::BIGINT,
-               [ord(substring(text, i, 1))::BIGINT for i in range(1, strlen(text) + 1)]),
-               (h, c) -> (h * 31 + c) % 1000000007)) AS BIGINT) AS sum_fp,
-             min(doc_id) AS min_id, max(doc_id) AS max_id
-      FROM documents GROUP BY lang""",
-
-    "rel_profile" -> """
-      SELECT 'o_orderstatus' AS col_name, CAST(count(*) AS BIGINT) AS n_rows,
-             CAST(count(*) - count(o_orderstatus) AS BIGINT) AS n_nulls,
-             CAST(count(DISTINCT o_orderstatus) AS BIGINT) AS n_distinct,
-             CAST(min(o_orderstatus) AS VARCHAR) AS min_str,
-             CAST(max(o_orderstatus) AS VARCHAR) AS max_str FROM orders
-      UNION ALL
-      SELECT 'o_orderpriority', CAST(count(*) AS BIGINT),
-             CAST(count(*) - count(o_orderpriority) AS BIGINT),
-             CAST(count(DISTINCT o_orderpriority) AS BIGINT),
-             CAST(min(o_orderpriority) AS VARCHAR), CAST(max(o_orderpriority) AS VARCHAR) FROM orders
-      UNION ALL
-      SELECT 'o_orderkey', CAST(count(*) AS BIGINT),
-             CAST(count(*) - count(o_orderkey) AS BIGINT),
-             CAST(count(DISTINCT o_orderkey) AS BIGINT),
-             CAST(min(o_orderkey) AS VARCHAR), CAST(max(o_orderkey) AS VARCHAR) FROM orders
-      UNION ALL
-      SELECT 'o_custkey', CAST(count(*) AS BIGINT),
-             CAST(count(*) - count(o_custkey) AS BIGINT),
-             CAST(count(DISTINCT o_custkey) AS BIGINT),
-             CAST(min(o_custkey) AS VARCHAR), CAST(max(o_custkey) AS VARCHAR) FROM orders""",
-
-    "dedup_containment" -> """
-      WITH sh AS (
-        SELECT doc_id, list_distinct(CASE WHEN len(s) >= 3
-          THEN [s[i] || ' ' || s[i+1] || ' ' || s[i+2] for i in range(1, len(s) - 1)]
-          ELSE [] END) AS shingles
-        FROM (SELECT doc_id, string_split(text, ' ') AS s FROM documents))
-      SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-             CASE WHEN len(a.shingles) > 0
-               THEN len(list_intersect(a.shingles, b.shingles))::DOUBLE / len(a.shingles) END AS c_ab,
-             CASE WHEN len(b.shingles) > 0
-               THEN len(list_intersect(a.shingles, b.shingles))::DOUBLE / len(b.shingles) END AS c_ba
-      FROM sh a JOIN sh b ON b.doc_id = a.doc_id + 1""",
-
-    // same 5-word non-overlapping windows, same 31-polynomial fingerprint,
-    // same position-weighted kept sum — all exact integers
-    "dedup_paragraph" -> """
-      WITH segs AS (
-        SELECT doc_id, seg, CAST(pos AS BIGINT) AS pos
-        FROM (SELECT doc_id,
-                [{'pos': i, 'seg': array_to_string(ws[(i*5+1):(i*5+5)], ' ')}
-                   for i in range(0, CAST(ceil(len(ws) / 5.0) AS BIGINT))] AS sl
-              FROM (SELECT doc_id, string_split(text, ' ') AS ws FROM documents)) t,
-             LATERAL (SELECT unnest(sl, recursive := true)) u(pos, seg)),
-      df AS (
-        SELECT seg, count(DISTINCT doc_id) AS seg_df FROM segs GROUP BY seg),
-      fp AS (
-        SELECT doc_id, pos, s.seg, seg_df,
-               list_reduce(list_prepend(0::BIGINT,
-                 [ord(substring(s.seg, i, 1))::BIGINT for i in range(1, strlen(s.seg) + 1)]),
-                 (h, c) -> (h * 31 + c) % 1000000007) AS segfp
-        FROM segs s JOIN df ON df.seg = s.seg)
-      SELECT doc_id,
-             CAST(count(*) AS BIGINT) AS n_segs,
-             CAST(sum(CASE WHEN seg_df >= 3 THEN 1 ELSE 0 END) AS BIGINT) AS n_boiler,
-             CAST(sum(CASE WHEN seg_df >= 3 THEN 0 ELSE (pos + 1) * segfp END) AS BIGINT) AS kept_fp
-      FROM fp GROUP BY doc_id""",
-
-    "dedup_embedding" -> """
-      SELECT a.vec_id AS id_a, b.vec_id AS id_b
-      FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
-      WHERE list_cosine_similarity(a.embedding, b.embedding) >= 0.45""",
-
-    // same centroid literals as the Spark side (SemCentroids is the one
-    // source of truth; the SQL is assembled from it), same micro-quantized
-    // integer argmax + threshold — an independent derivation of the full
-    // assign→pair→keep pipeline
-    "dedup_semantic" -> {
-      def lst(c: Seq[Double]) = c.mkString("[", ", ", "]")
-      val sims = SemCentroids
-        .map(c => s"CAST(round(1e6 * list_cosine_similarity(v, ${lst(c)})) AS BIGINT)")
-        .mkString("[", ", ", "]")
-      s"""
-      WITH e AS (
-        SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-        FROM embeddings),
-      a AS (
-        SELECT vec_id, v, CAST(list_position(sims, list_max(sims)) AS BIGINT) AS cluster
-        FROM (SELECT vec_id, v, $sims AS sims FROM e)),
-      d AS (
-        SELECT DISTINCT y.vec_id
-        FROM a x JOIN a y ON x.cluster = y.cluster AND x.vec_id < y.vec_id
-        WHERE CAST(round(1e6 * list_cosine_similarity(x.v, y.v)) AS BIGINT) >= 450000)
-      SELECT vec_id, cluster FROM a WHERE vec_id NOT IN (SELECT vec_id FROM d)"""
-    },
-
-    // the two-level coarse search replayed INDEPENDENTLY of the kernel:
-    // super member lists are re-derived here (plain Scala argmax over
-    // the centroid literals — not hierAssignFn), the per-vector super
-    // and member argmaxes run in SQL over micro-quantized cosine
-    // literals with list_position's first-match = the kernel's
-    // first-max-wins tie rule, members ascending = ties to lowest cell
-    "dedup_semantic_hier" -> {
-      def lst(c: Seq[Double]) = c.mkString("[", ", ", "]")
-      def micro(c: Seq[Double]) =
-        s"CAST(round(1e6 * list_cosine_similarity(v, ${lst(c)})) AS BIGINT)"
-      val cents = SemCentroids
-      val nC = cents.length
-      val supers = 3
-      val stride = math.max(1, nC / supers)
-      val superIdx = (0 until nC by stride).take(supers)
-      // independent member-list replay (matches hierAssignFn's contract,
-      // re-derived from scratch): supers anchor their own list; every
-      // other centroid joins its nearest super, micro-cosine first-max
-      def microScala(a: Seq[Double], b: Seq[Double]): Long = {
-        val dot = a.lazyZip(b).map(_ * _).sum
-        val cos = dot / (math.sqrt(a.map(x => x * x).sum) * math.sqrt(b.map(x => x * x).sum))
-        java.math.BigDecimal.valueOf(cos * 1e6)
-          .setScale(0, java.math.RoundingMode.HALF_UP).longValue()
-      }
-      val anchor = superIdx.zipWithIndex.toMap
-      val members = Array.fill(supers)(scala.collection.mutable.ArrayBuffer.empty[Int])
-      (0 until nC).foreach { ci =>
-        anchor.get(ci) match {
-          case Some(s) => members(s) += ci
-          case None =>
-            val best = superIdx.indices.maxBy(s =>
-              (microScala(cents(ci), cents(superIdx(s))), -s))
-            members(best) += ci
-        }
-      }
-      val ssims = superIdx.map(si => micro(cents(si))).mkString("[", ", ", "]")
-      val arms = superIdx.indices.map { s =>
-        val ms = members(s).sorted.toSeq
-        val msims = ms.map(ci => micro(cents(ci))).mkString("[", ", ", "]")
-        val ids = ms.map(_ + 1).mkString("[", ", ", "]")
-        s"WHEN ${s + 1} THEN CAST(($ids)[list_position($msims, list_max($msims))] AS BIGINT)"
-      }.mkString(" ")
-      s"""
-      WITH e AS (
-        SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-        FROM embeddings),
-      vs AS (
-        SELECT vec_id, v,
-               CAST(list_position(ssims, list_max(ssims)) AS BIGINT) AS sbest
-        FROM (SELECT vec_id, v, $ssims AS ssims FROM e)),
-      a AS (
-        SELECT vec_id, v, CASE sbest $arms END AS cluster FROM vs),
-      d AS (
-        SELECT DISTINCT y.vec_id
-        FROM a x JOIN a y ON x.cluster = y.cluster AND x.vec_id < y.vec_id
-        WHERE CAST(round(1e6 * list_cosine_similarity(x.v, y.v)) AS BIGINT) >= 450000)
-      SELECT vec_id, cluster FROM a WHERE vec_id NOT IN (SELECT vec_id FROM d)"""
-    },
-
-    // same centroid-argmax CTE as dedup_semantic; the quota draw is the
-    // lcg integer replayed verbatim
-    "curation_cluster_sample" -> {
-      def lst(c: Seq[Double]) = c.mkString("[", ", ", "]")
-      val sims = SemCentroids
-        .map(c => s"CAST(round(1e6 * list_cosine_similarity(v, ${lst(c)})) AS BIGINT)")
-        .mkString("[", ", ", "]")
-      s"""
-      WITH e AS (
-        SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-        FROM embeddings),
-      a AS (
-        SELECT vec_id, CAST(list_position(sims, list_max(sims)) AS BIGINT) AS cluster
-        FROM (SELECT vec_id, v, $sims AS sims FROM e)),
-      r AS (
-        SELECT vec_id, cluster,
-               CAST(row_number() OVER (PARTITION BY cluster
-                 ORDER BY ((vec_id % 1000003) * 2654435761) % 4294967296, vec_id)
-                 AS BIGINT) AS rk
-        FROM a)
-      SELECT vec_id, cluster, rk FROM r WHERE rk <= 25"""
-    },
-
-    "dedup_embedding_lsh" ->
-      "SELECT vec_id AS id_a, vec_id + 1000000 AS id_b FROM embeddings",
-
-    "dedup_embedding_lsh_derived" ->
-      "SELECT vec_id AS id_a, vec_id + 1000000 AS id_b FROM embeddings",
-
-    "dedup_embedding_lsh_capped" ->
-      "SELECT vec_id AS id_a, vec_id + 1000000 AS id_b FROM embeddings",
-
-    "sim_ann_lsh" ->
-      "SELECT DISTINCT vec_id AS qid, true AS recall_ok FROM embeddings WHERE vec_id < 10",
-
-    // round 17: the IVF/PQ family oracles are corpus-level macro
-    // contracts (one row: recall_ok, self_ok) — see annAggContract for
-    // why the per-qid booleans were retired with the biased seeds
-    "sim_ivf" ->
-      "SELECT true AS recall_ok, true AS self_ok",
-
-    "sim_ivf_refined" ->
-      "SELECT true AS recall_ok, true AS self_ok",
-
-    // hier-build IVF: self-hit is a MEASURED contract here (two-level
-    // assignment may park a vector outside the probed cells) — observed
-    // 10/10 at every driver SF, cut >= 9
-    "sim_ivf_hier" ->
-      "SELECT true AS recall_ok, true AS self_ok",
-
-    // the P=1 rule-test strawman: parking loss is real (self-hits 8-10
-    // of 10 across SFs, cut >= 7)
-    "sim_ivf_hier_p1" ->
-      "SELECT true AS recall_ok, true AS self_ok",
-
-    "sim_ann_lsh_derived" ->
-      "SELECT DISTINCT vec_id AS qid, true AS recall_ok FROM embeddings WHERE vec_id < 10",
-
-    "sim_pq" ->
-      "SELECT true AS recall_ok, true AS self_ok",
-
-    "sim_ivfpq" ->
-      "SELECT true AS recall_ok, true AS self_ok",
-
-    "sim_ivfpq_residual" ->
-      "SELECT true AS recall_ok, true AS self_ok",
-
-    // --- similarity search ----------------------------------------------
-    // mirrors the Int8QuantStats kernel's documented edge contract
-    // (round-6 ADVICE): empty vector → (0.0, 0, 0); any non-finite
-    // element → the whole row's stats are NULL — the oracle PINS the
-    // edges instead of relying on the fixture avoiding them
-    "sim_quantize" -> """
-      WITH e AS (
-        SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-        FROM embeddings
-        UNION ALL SELECT -1, CAST([] AS DOUBLE[])
-        UNION ALL SELECT -2, [CAST(1.0 AS DOUBLE), CAST('nan' AS DOUBLE)]),
-      m AS (
-        SELECT vec_id, v, len(v) AS n,
-               coalesce(list_aggregate(list_transform(v, x -> isfinite(x)), 'bool_and'), true) AS fin,
-               list_max(list_transform(v, x -> abs(x))) / 127.0 AS raw_scale
-        FROM e),
-      q AS (
-        SELECT vec_id, n, fin,
-               CASE WHEN n = 0 THEN 0.0 WHEN NOT fin THEN NULL ELSE raw_scale END AS scale,
-               CASE WHEN n = 0 OR NOT fin THEN NULL
-                    WHEN raw_scale > 0
-                      THEN list_transform(v, x -> CAST(round(x / raw_scale) AS BIGINT))
-                    ELSE list_transform(v, x -> CAST(0 AS BIGINT)) END AS qs
-        FROM m)
-      SELECT vec_id, scale,
-             CASE WHEN n = 0 THEN CAST(0 AS BIGINT)
-                  ELSE CAST(list_sum(qs) AS BIGINT) END AS q_sum,
-             CASE WHEN n = 0 THEN CAST(0 AS BIGINT)
-                  ELSE CAST(list_sum(list_transform(qs, x -> x * x)) AS BIGINT) END AS q_norm2
-      FROM q""",
-
-    "sim_topk" -> """
-      SELECT qid, rnk, vec_id FROM (
-        SELECT q.vec_id AS qid, e.vec_id AS vec_id,
-               row_number() OVER (PARTITION BY q.vec_id
-                 ORDER BY list_cosine_similarity(q.embedding, e.embedding) DESC,
-                          e.vec_id) AS rnk
-        FROM embeddings q CROSS JOIN embeddings e
-        WHERE q.vec_id < 10) t
-      WHERE rnk <= 5""",
-
-    "sim_hard_negatives" -> """
-      SELECT qid, rnk, vec_id FROM (
-        SELECT q.vec_id AS qid, e.vec_id AS vec_id,
-               row_number() OVER (PARTITION BY q.vec_id
-                 ORDER BY list_cosine_similarity(q.embedding, e.embedding) DESC,
-                          e.vec_id) AS rnk
-        FROM embeddings q CROSS JOIN embeddings e
-        WHERE q.vec_id < 10 AND e.vec_id <> q.vec_id
-          AND list_cosine_similarity(q.embedding, e.embedding) < 0.9) t
-      WHERE rnk <= 5""",
-
-    "sim_knn_classify" -> """
-      WITH nn AS (
-        SELECT qid, vec_id FROM (
-          SELECT q.vec_id AS qid, e.vec_id AS vec_id,
-                 row_number() OVER (PARTITION BY q.vec_id
-                   ORDER BY list_cosine_similarity(q.embedding, e.embedding) DESC,
-                            e.vec_id) AS rnk
-          FROM embeddings q CROSS JOIN embeddings e
-          WHERE q.vec_id < 20 AND e.vec_id >= 20) t
-        WHERE rnk <= 5),
-      votes AS (
-        SELECT nn.qid, e.label, count(*) AS votes
-        FROM nn JOIN embeddings e ON nn.vec_id = e.vec_id
-        GROUP BY 1, 2)
-      SELECT qid, label AS predicted, votes FROM (
-        SELECT qid, label, votes,
-               row_number() OVER (PARTITION BY qid ORDER BY votes DESC, label) AS rk
-        FROM votes) v
-      WHERE rk = 1""",
-
-    // --- text analysis ---------------------------------------------------
-    "text_langid" -> """
-      SELECT doc_id,
-        CASE WHEN len(list_filter(string_split(text, ' '),
-                t -> t IN ('the','a','an','of','and','to','in','is','on','for','with','as','at','by','be','this','that','it','or','are','was','from')))::DOUBLE
-              / len(string_split(text, ' ')) >= 0.05
-             THEN 'en' ELSE 'unknown' END AS lang_pred
-      FROM documents""",
-
-    "text_tokens" -> """
-      SELECT doc_id,
-             len(string_split(text, ' '))::BIGINT AS n_tokens,
-             len(regexp_extract_all(lower(text), '[a-z0-9]+'))::BIGINT AS n_words
-      FROM documents""",
-
-    "text_rep_rate" -> """
-      WITH t AS (
-        SELECT doc_id,
-               greatest(len(s) - 2, 0) AS n3_total,
-               len(list_distinct(CASE WHEN len(s) >= 3
-                 THEN [s[i] || ' ' || s[i+1] || ' ' || s[i+2] for i in range(1, len(s) - 1)]
-                 ELSE [] END)) AS n3_uniq
-        FROM (SELECT doc_id, string_split(text, ' ') AS s FROM documents))
-      SELECT doc_id, n3_total::BIGINT AS n3_total, n3_uniq::BIGINT AS n3_uniq,
-             CASE WHEN n3_total > 0
-                  THEN CAST(1 AS DOUBLE) - n3_uniq::DOUBLE / n3_total
-                  ELSE CAST(0 AS DOUBLE) END AS rep_rate
-      FROM t""",
-
-    "text_redact" -> """
-      WITH planted AS (
-        SELECT doc_id,
-               text || ' contact u' || doc_id || '@mail.example.org from 10.2.' ||
-               (doc_id % 250) || '.9 call 415-555-' ||
-               lpad((doc_id % 10000)::VARCHAR, 4, '0') AS t
-        FROM documents),
-      s1 AS (
-        SELECT doc_id, t,
-               regexp_replace(t, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}',
-                              '<EMAIL>', 'g') AS t1
-        FROM planted),
-      s2 AS (
-        SELECT doc_id, t, t1,
-               regexp_replace(t1, '\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b',
-                              '<IP>', 'g') AS t2
-        FROM s1)
-      SELECT doc_id,
-             regexp_replace(t2, '\b\d{3}-\d{3}-\d{4}\b', '<PHONE>', 'g') AS redacted,
-             (len(regexp_extract_all(t, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}'))
-              + len(regexp_extract_all(t1, '\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b'))
-              + len(regexp_extract_all(t2, '\b\d{3}-\d{3}-\d{4}\b')))::BIGINT AS n_pii
-      FROM s2""",
-
-    "text_quality" -> """
-      WITH f AS (
-        SELECT doc_id,
-          len(list_filter(string_split(text, ' '),
-            t -> t IN ('the','a','an','of','and','to','in','is','on','for','with','as','at','by','be','this','that','it','or','are','was','from')))::DOUBLE
-            / len(string_split(text, ' ')) AS stop_ratio,
-          (strlen(text) - strlen(regexp_replace(lower(text), '[^a-z0-9 ]', '', 'g')))::DOUBLE
-            / strlen(text) AS punct_ratio,
-          list_reduce(list_prepend(0::BIGINT, [strlen(t)::BIGINT for t in string_split(text, ' ')]), (a, x) -> a + x)::DOUBLE
-            / len(string_split(text, ' ')) AS mean_tok_len
-        FROM documents)
-      SELECT doc_id, stop_ratio, punct_ratio, mean_tok_len,
-             stop_ratio * 0.5 + (1.0 - punct_ratio) * 0.3 +
-             CASE WHEN mean_tok_len >= 3 AND mean_tok_len <= 8 THEN 0.2 ELSE 0.0 END AS quality
-      FROM f""",
-
-    "text_fingerprint" -> """
-      SELECT doc_id,
-             list_reduce(list_prepend(0::BIGINT,
-               [ord(substring(text, i, 1))::BIGINT for i in range(1, strlen(text) + 1)]),
-               (h, c) -> (h * 31 + c) % 1000000007) AS fp
-      FROM documents""",
-
-    // independent re-derivation of the Gopher rule signals: same word /
-    // line decomposition (regex whitespace split, blank lines dropped),
-    // exact integer quotients cast to DOUBLE
-    "text_gopher" -> """
-      WITH d AS (
-        SELECT doc_id, text,
-               list_filter(string_split_regex(text, '\s+'), w -> length(w) > 0) AS words,
-               list_filter(string_split(text, chr(10)), l -> length(trim(l)) > 0) AS lines
-        FROM documents),
-      m AS (
-        SELECT doc_id,
-               len(words)::BIGINT AS n_words,
-               len(lines)::BIGINT AS n_lines,
-               coalesce(list_sum(list_transform(words, w -> length(w))), 0)::BIGINT AS sum_len,
-               len(list_filter(words, w -> regexp_matches(w, '[A-Za-z]')))::BIGINT AS n_alpha,
-               (list_contains(list_transform(words, w -> lower(w)), 'the')::BIGINT
-                + list_contains(list_transform(words, w -> lower(w)), 'be')::BIGINT
-                + list_contains(list_transform(words, w -> lower(w)), 'to')::BIGINT
-                + list_contains(list_transform(words, w -> lower(w)), 'of')::BIGINT
-                + list_contains(list_transform(words, w -> lower(w)), 'and')::BIGINT
-                + list_contains(list_transform(words, w -> lower(w)), 'that')::BIGINT
-                + list_contains(list_transform(words, w -> lower(w)), 'have')::BIGINT
-                + list_contains(list_transform(words, w -> lower(w)), 'with')::BIGINT) AS n_stop_hits,
-               (length(text) - length(replace(text, '#', '')))::BIGINT
-                 + (length(text) - length(replace(text, chr(8230), '')))::BIGINT
-                 + (length(text) - length(replace(text, '...', ''))) // 3 AS n_sym,
-               len(list_filter(lines, l -> starts_with(ltrim(l), '-')
-                 OR starts_with(ltrim(l), '*') OR starts_with(ltrim(l), chr(8226))))::BIGINT AS n_bullet,
-               len(list_filter(lines, l -> ends_with(rtrim(l), '...')
-                 OR ends_with(rtrim(l), chr(8230))))::BIGINT AS n_ellend
-        FROM d)
-      SELECT doc_id, n_words,
-             CASE WHEN n_words = 0 THEN NULL ELSE sum_len::DOUBLE / n_words END AS mean_word_len,
-             CASE WHEN n_words = 0 THEN NULL ELSE n_sym::DOUBLE / n_words END AS symbol_ratio,
-             CASE WHEN n_lines = 0 THEN NULL ELSE n_bullet::DOUBLE / n_lines END AS bullet_ratio,
-             CASE WHEN n_lines = 0 THEN NULL ELSE n_ellend::DOUBLE / n_lines END AS ellipsis_ratio,
-             CASE WHEN n_words = 0 THEN NULL ELSE n_alpha::DOUBLE / n_words END AS alpha_ratio,
-             n_stop_hits,
-             CASE WHEN n_words = 0 THEN false ELSE
-               n_words >= 50 AND n_words <= 100000
-               AND sum_len::DOUBLE / n_words >= 3.0 AND sum_len::DOUBLE / n_words <= 10.0
-               AND n_sym::DOUBLE / n_words <= 0.1
-               AND n_bullet::DOUBLE / n_lines <= 0.9
-               AND n_ellend::DOUBLE / n_lines <= 0.3
-               AND n_alpha::DOUBLE / n_words >= 0.8
-               AND n_stop_hits >= 2 END AS keep,
-             CASE WHEN n_words = 0 THEN false ELSE
-               n_words >= 30 AND n_words <= 100000
-               AND sum_len::DOUBLE / n_words >= 3.0 AND sum_len::DOUBLE / n_words <= 10.0
-               AND n_sym::DOUBLE / n_words <= 0.1
-               AND n_bullet::DOUBLE / n_lines <= 0.9
-               AND n_ellend::DOUBLE / n_lines <= 0.3
-               AND n_alpha::DOUBLE / n_words >= 0.8
-               AND n_stop_hits >= 1 END AS keep_tuned
-      FROM m""",
-
-    "text_c4_rules" -> """
-      WITH w AS (
-        SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
-      p AS (
-        SELECT doc_id,
-          array_to_string(list_transform(
-            generate_series(0, CAST(ceil(len(ws) / 7.0) AS INT) - 1),
-            i -> array_to_string(list_slice(ws, i*7 + 1, i*7 + 7), ' ') ||
-                 CASE (doc_id + i) % 3 WHEN 0 THEN '.' WHEN 1 THEN '?' ELSE '' END),
-            chr(10)) ||
-          CASE WHEN doc_id % 11 = 0 THEN chr(10) || 'lorem ipsum dolor sit amet.' ELSE '' END ||
-          CASE WHEN doc_id % 13 = 0 THEN chr(10) || 'var x = { javascript }' ELSE '' END AS page
-        FROM w),
-      k AS (
-        SELECT doc_id, page,
-          string_split(page, chr(10)) AS lines,
-          list_filter(string_split(page, chr(10)), l ->
-            regexp_matches(rtrim(l), '[.!?"]$')
-            AND len(list_filter(string_split(l, ' '), x -> length(x) > 0)) >= 3
-            AND NOT contains(lower(l), 'javascript')) AS kept
-        FROM p),
-      f AS (
-        SELECT doc_id,
-          len(lines)::BIGINT AS n_lines,
-          len(kept)::BIGINT AS n_kept_lines,
-          (length(array_to_string(kept, chr(10))) -
-           length(regexp_replace(array_to_string(kept, chr(10)), '[.!?]', '', 'g')))::BIGINT AS n_sentences,
-          contains(lower(page), 'lorem ipsum') AS has_lorem,
-          contains(page, '{') AS has_brace
-        FROM k)
-      SELECT doc_id, n_lines, n_kept_lines, n_sentences, has_lorem, has_brace,
-             (NOT has_lorem AND NOT has_brace AND n_sentences >= 5) AS keep
-      FROM f""",
-
-    "text_dup_ngrams" -> """
-      WITH w AS (SELECT doc_id, string_split(text, ' ') AS ws,
-                        length(text)::BIGINT AS chars_total FROM documents),
-      g2 AS (SELECT doc_id, array_to_string(list_slice(ws, i, i + 1), ' ') AS g
-             FROM (SELECT doc_id, ws, unnest(generate_series(1, len(ws) - 1))::BIGINT AS i
-                   FROM w WHERE len(ws) >= 2)),
-      c2 AS (SELECT doc_id, g, count(*) AS c FROM g2 GROUP BY doc_id, g),
-      t2 AS (SELECT doc_id, max(c * length(g)) AS top_chars FROM c2 GROUP BY doc_id),
-      g3 AS (SELECT doc_id, array_to_string(list_slice(ws, i, i + 2), ' ') AS g
-             FROM (SELECT doc_id, ws, unnest(generate_series(1, len(ws) - 2))::BIGINT AS i
-                   FROM w WHERE len(ws) >= 3)),
-      c3 AS (SELECT doc_id, g, count(*) AS c FROM g3 GROUP BY doc_id, g),
-      d3 AS (SELECT doc_id, sum(CASE WHEN c >= 2 THEN c * length(g) ELSE 0 END) AS dup_chars
-             FROM c3 GROUP BY doc_id)
-      SELECT w.doc_id, chars_total,
-             CAST(coalesce(top_chars, 0) AS BIGINT) AS top_chars,
-             CAST(coalesce(dup_chars, 0) AS BIGINT) AS dup_chars
-      FROM w LEFT JOIN t2 USING (doc_id) LEFT JOIN d3 USING (doc_id)""",
-
-    "text_cooccurrence" -> """
-      WITH t AS (
-        SELECT doc_id, i, ws[i] AS tok
-        FROM (SELECT doc_id, ws, unnest(generate_series(1, len(ws)))::BIGINT AS i
-              FROM (SELECT doc_id, string_split(text, ' ') AS ws FROM documents))
-        WHERE length(ws[i]) > 0),
-      p AS (
-        SELECT a.tok AS w1, b.tok AS w2
-        FROM t a JOIN t b ON a.doc_id = b.doc_id AND b.i = a.i + 1
-        UNION ALL
-        SELECT a.tok AS w1, b.tok AS w2
-        FROM t a JOIN t b ON a.doc_id = b.doc_id AND b.i = a.i + 2)
-      SELECT w1, w2, CAST(count(*) AS BIGINT) AS cnt
-      FROM p GROUP BY w1, w2
-      ORDER BY cnt DESC, w1, w2 LIMIT 50""",
-
-    // same token hash as the Spark kernel: 31-polynomial over codepoints
-    // mod 1e9+7, bucketed to 256, integer weight formula — bit-exact
-    "text_quality_model" -> """
-      WITH scored AS (
-        SELECT doc_id,
-               CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens,
-               CAST(list_sum([
-                 ((1 + (list_reduce(list_prepend(0::BIGINT,
-                     [ord(substring(w, i, 1))::BIGINT for i in range(1, strlen(w) + 1)]),
-                   (h, c) -> (h * 31 + c) % 1000000007) % 256)) * 2654435761) % 1000003 - 501001
-                 for w in string_split(text, ' ')]) AS BIGINT) AS qm_score
-        FROM documents)
-      SELECT doc_id, n_tokens, qm_score, qm_score > 0 AS keep FROM scored""",
-
-    // same µs truncation as Spark's ts DIV 1000 (DuckDB stores µs);
-    // LOCF via last_value IGNORE NULLS over the gap-filled grid
-    "rel_resample" -> """
-      WITH rows_ AS (
-        SELECT event_type AS k, epoch_us(ts) AS t, value AS v,
-               epoch_us(ts) // 3600000000 AS b
-        FROM events),
-      agg AS (SELECT k, b, count(*) AS n FROM rows_ GROUP BY k, b),
-      lastv AS (
-        SELECT k, b, v AS lv FROM (
-          SELECT k, b, v,
-                 row_number() OVER (PARTITION BY k, b ORDER BY t DESC, v DESC) AS rn
-          FROM rows_) WHERE rn = 1),
-      span AS (SELECT k, min(b) AS b0, max(b) AS b1 FROM rows_ GROUP BY k),
-      grid AS (SELECT k, unnest(generate_series(b0, b1)) AS b FROM span)
-      SELECT g.k AS event_type, g.b AS hour_bucket,
-             CAST(coalesce(n, 0) AS BIGINT) AS n,
-             last_value(lv IGNORE NULLS) OVER (PARTITION BY g.k ORDER BY g.b
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS v_filled
-      FROM grid g LEFT JOIN agg USING (k, b) LEFT JOIN lastv USING (k, b)""",
-
-    // the oracle reads the PARQUET directly — equality proves the Spark
-    // side's parquet → ORC → read-back round-trip preserved every value
-    "rel_orc_roundtrip" -> """
-      SELECT lang, CAST(count(*) AS BIGINT) AS n,
-             CAST(sum(n_chars) AS BIGINT) AS sum_chars,
-             CAST(sum(list_reduce(list_prepend(0::BIGINT,
-               [ord(substring(text, i, 1))::BIGINT for i in range(1, strlen(text) + 1)]),
-               (h, c) -> (h * 31 + c) % 1000000007)) AS BIGINT) AS sum_fp,
-             min(doc_id) AS min_id, max(doc_id) AS max_id
-      FROM documents GROUP BY lang""",
-
-    // same derivation: the oracle reads the parquet directly, so the
-    // JSONL encode→decode must be lossless for the hash to match
-    "rel_json_roundtrip" -> """
-      SELECT lang, CAST(count(*) AS BIGINT) AS n,
-             CAST(sum(n_chars) AS BIGINT) AS sum_chars,
-             CAST(sum(list_reduce(list_prepend(0::BIGINT,
-               [ord(substring(text, i, 1))::BIGINT for i in range(1, strlen(text) + 1)]),
-               (h, c) -> (h * 31 + c) % 1000000007)) AS BIGINT) AS sum_fp,
-             min(doc_id) AS min_id, max(doc_id) AS max_id
-      FROM documents GROUP BY lang""",
-
-    "rel_tpch_q3" -> """
-      SELECT o_orderkey,
-             CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2)) * (CAST(1.0 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS revenue,
-             o_orderdate, o_orderpriority
-      FROM customer, orders, lineitem
-      WHERE c_mktsegment = 'BUILDING' AND c_custkey = o_custkey AND l_orderkey = o_orderkey
-        AND o_orderdate < TIMESTAMP '1998-07-01 00:00:00'
-        AND l_shipdate > TIMESTAMP '1998-07-01 00:00:00'
-      GROUP BY o_orderkey, o_orderdate, o_orderpriority
-      ORDER BY revenue DESC, o_orderkey LIMIT 10""",
-
-    "rel_tpch_q18" -> """
-      WITH big AS (
-        SELECT l_orderkey, sum(CAST(l_quantity AS DECIMAL(18,2))) AS sum_qty
-        FROM lineitem GROUP BY l_orderkey
-        HAVING sum(CAST(l_quantity AS DECIMAL(18,2))) > 250)
-      SELECT c_name, c_custkey, o_orderkey, o_orderdate, o_totalprice,
-             CAST(sum_qty AS DOUBLE) AS sum_qty
-      FROM big JOIN orders ON o_orderkey = l_orderkey
-      JOIN customer ON c_custkey = o_custkey
-      ORDER BY o_totalprice DESC, o_orderkey LIMIT 20""",
-
-    // --- multimodal ------------------------------------------------------
-    "mm_dedup" ->
-      "SELECT min(doc_id) AS media_id FROM documents GROUP BY text",
-
-    "mm_decode" -> """
-      SELECT doc_id AS media_id,
-             16 + n_chars % 64 AS width,
-             16 + (n_chars * 7) % 48 AS height,
-             1::BIGINT AS n_frames,
-             doc_id % 256 AS luma_q
-      FROM documents""",
-
-    // the dHash pixel path replayed in closed form: gradient pixel
-    // (px·7 + py·13 + base) mod 256, grid px = ⌊gx·w/9⌋, py = ⌊gy·h/8⌋
-    // (gray pixels make Rec.601 luma = the gray level exactly), dHash bit
-    // = right-neighbor-brighter, 16-bit bands, pigeonhole candidates
-    // from buckets of ≤ 256 members only (the engaged maxBucketSize
-    // valve, replayed exactly — a no-op at sf0.01 where the largest
-    // bucket is 36), Hamming ≤ 3 verify
-    "mm_phash_dedup" -> """
-      WITH p AS (
-        SELECT doc_id, 16 + n_chars % 64 AS w, 16 + (n_chars * 7) % 48 AS h,
-               doc_id % 256 AS base
-        FROM documents),
-      cells AS (
-        SELECT doc_id, gy, gx,
-               ((gx * w // 9) * 7 + (gy * h // 8) * 13 + base) % 256 AS l,
-               (((gx + 1) * w // 9) * 7 + (gy * h // 8) * 13 + base) % 256 AS lr
-        FROM p
-        CROSS JOIN (SELECT unnest(generate_series(0, 7)) AS gy)
-        CROSS JOIN (SELECT unnest(generate_series(0, 7)) AS gx)),
-      bits AS (
-        SELECT doc_id, gy * 8 + gx AS bit, CASE WHEN lr > l THEN 1 ELSE 0 END AS b
-        FROM cells),
-      hh AS (
-        SELECT doc_id,
-          CAST(sum(CASE WHEN bit // 16 = 0 THEN b * (1 << (bit % 16)) ELSE 0 END) AS BIGINT) AS b0,
-          CAST(sum(CASE WHEN bit // 16 = 1 THEN b * (1 << (bit % 16)) ELSE 0 END) AS BIGINT) AS b1,
-          CAST(sum(CASE WHEN bit // 16 = 2 THEN b * (1 << (bit % 16)) ELSE 0 END) AS BIGINT) AS b2,
-          CAST(sum(CASE WHEN bit // 16 = 3 THEN b * (1 << (bit % 16)) ELSE 0 END) AS BIGINT) AS b3
-        FROM bits GROUP BY doc_id),
-      hb AS (
-        SELECT doc_id, band_idx, val FROM (
-          SELECT doc_id, 0 AS band_idx, b0 AS val FROM hh UNION ALL
-          SELECT doc_id, 1, b1 FROM hh UNION ALL
-          SELECT doc_id, 2, b2 FROM hh UNION ALL
-          SELECT doc_id, 3, b3 FROM hh)),
-      okb AS (
-        SELECT band_idx, val FROM hb
-        GROUP BY band_idx, val HAVING count(*) <= 256),
-      hbf AS (
-        SELECT hb.doc_id, hb.band_idx, hb.val
-        FROM hb JOIN okb ON hb.band_idx = okb.band_idx AND hb.val = okb.val),
-      cand AS (
-        SELECT DISTINCT x.doc_id AS id_a, y.doc_id AS id_b
-        FROM hbf x JOIN hbf y
-          ON x.band_idx = y.band_idx AND x.val = y.val AND x.doc_id < y.doc_id)
-      SELECT id_a, id_b,
-             CAST(bit_count(xor(a.b0, c.b0)) + bit_count(xor(a.b1, c.b1)) +
-                  bit_count(xor(a.b2, c.b2)) + bit_count(xor(a.b3, c.b3)) AS BIGINT) AS hamming
-      FROM cand JOIN hh a ON cand.id_a = a.doc_id JOIN hh c ON cand.id_b = c.doc_id
-      WHERE hamming <= 3""",
-
-    // same analytic hash derivation, then the classes-not-pairs reduce:
-    // identical hashes collapse to min-id class reps, near-dup links
-    // (Hamming ≤ 3) among DISTINCT hashes only, transitive closure by
-    // recursive CTE, cluster rep = min class rep = min id overall
-    "mm_phash_keep" -> """
-      WITH RECURSIVE p AS (
-        SELECT doc_id, 16 + n_chars % 64 AS w, 16 + (n_chars * 7) % 48 AS h,
-               doc_id % 256 AS base
-        FROM documents),
-      cells AS (
-        SELECT doc_id, gy, gx,
-               ((gx * w // 9) * 7 + (gy * h // 8) * 13 + base) % 256 AS l,
-               (((gx + 1) * w // 9) * 7 + (gy * h // 8) * 13 + base) % 256 AS lr
-        FROM p
-        CROSS JOIN (SELECT unnest(generate_series(0, 7)) AS gy)
-        CROSS JOIN (SELECT unnest(generate_series(0, 7)) AS gx)),
-      bits AS (
-        SELECT doc_id, gy * 8 + gx AS bit, CASE WHEN lr > l THEN 1 ELSE 0 END AS b
-        FROM cells),
-      hh AS (
-        SELECT doc_id,
-          CAST(sum(CASE WHEN bit // 16 = 0 THEN b * (1 << (bit % 16)) ELSE 0 END) AS BIGINT) AS b0,
-          CAST(sum(CASE WHEN bit // 16 = 1 THEN b * (1 << (bit % 16)) ELSE 0 END) AS BIGINT) AS b1,
-          CAST(sum(CASE WHEN bit // 16 = 2 THEN b * (1 << (bit % 16)) ELSE 0 END) AS BIGINT) AS b2,
-          CAST(sum(CASE WHEN bit // 16 = 3 THEN b * (1 << (bit % 16)) ELSE 0 END) AS BIGINT) AS b3
-        FROM bits GROUP BY doc_id),
-      cls AS (
-        SELECT b0, b1, b2, b3, min(doc_id) AS crep
-        FROM hh GROUP BY b0, b1, b2, b3),
-      pr AS (
-        SELECT x.crep AS id_a, y.crep AS id_b
-        FROM cls x JOIN cls y ON x.crep < y.crep
-        WHERE bit_count(xor(x.b0, y.b0)) + bit_count(xor(x.b1, y.b1)) +
-              bit_count(xor(x.b2, y.b2)) + bit_count(xor(x.b3, y.b3)) <= 3),
-      edges AS (SELECT id_a AS src, id_b AS dst FROM pr
-                UNION SELECT id_b, id_a FROM pr),
-      reach(src, dst) AS (
-        SELECT crep, crep FROM cls
-        UNION
-        SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src),
-      crep2 AS (SELECT src AS crep, min(dst) AS rep FROM reach GROUP BY src)
-      SELECT h.doc_id AS media_id, c2.rep, h.doc_id = c2.rep AS keep
-      FROM hh h
-      JOIN cls c ON h.b0 = c.b0 AND h.b1 = c.b1 AND h.b2 = c.b2 AND h.b3 = c.b3
-      JOIN crep2 c2 ON c.crep = c2.crep""",
-
-    // keep with the band-bucket valve: the class-rep links come from
-    // CAPPED band buckets (16-bit band values shared by ≤ 16 distinct
-    // hashes) instead of all class pairs — banding + cap + Hamming
-    // verify + transitive closure all replayed
-    "mm_phash_keep_capped" -> """
-      WITH RECURSIVE p AS (
-        SELECT doc_id, 16 + n_chars % 64 AS w, 16 + (n_chars * 7) % 48 AS h,
-               doc_id % 256 AS base
-        FROM documents),
-      cells AS (
-        SELECT doc_id, gy, gx,
-               ((gx * w // 9) * 7 + (gy * h // 8) * 13 + base) % 256 AS l,
-               (((gx + 1) * w // 9) * 7 + (gy * h // 8) * 13 + base) % 256 AS lr
-        FROM p
-        CROSS JOIN (SELECT unnest(generate_series(0, 7)) AS gy)
-        CROSS JOIN (SELECT unnest(generate_series(0, 7)) AS gx)),
-      bits AS (
-        SELECT doc_id, gy * 8 + gx AS bit, CASE WHEN lr > l THEN 1 ELSE 0 END AS b
-        FROM cells),
-      hh AS (
-        SELECT doc_id,
-          CAST(sum(CASE WHEN bit // 16 = 0 THEN b * (1 << (bit % 16)) ELSE 0 END) AS BIGINT) AS b0,
-          CAST(sum(CASE WHEN bit // 16 = 1 THEN b * (1 << (bit % 16)) ELSE 0 END) AS BIGINT) AS b1,
-          CAST(sum(CASE WHEN bit // 16 = 2 THEN b * (1 << (bit % 16)) ELSE 0 END) AS BIGINT) AS b2,
-          CAST(sum(CASE WHEN bit // 16 = 3 THEN b * (1 << (bit % 16)) ELSE 0 END) AS BIGINT) AS b3
-        FROM bits GROUP BY doc_id),
-      cls AS (
-        SELECT b0, b1, b2, b3, min(doc_id) AS crep
-        FROM hh GROUP BY b0, b1, b2, b3),
-      cb AS (
-        SELECT crep, band_idx, val FROM (
-          SELECT crep, 0 AS band_idx, b0 AS val FROM cls UNION ALL
-          SELECT crep, 1, b1 FROM cls UNION ALL
-          SELECT crep, 2, b2 FROM cls UNION ALL
-          SELECT crep, 3, b3 FROM cls) t),
-      okb AS (
-        SELECT band_idx, val FROM cb
-        GROUP BY band_idx, val HAVING count(*) <= 16),
-      cbf AS (
-        SELECT cb.crep, cb.band_idx, cb.val
-        FROM cb JOIN okb ON cb.band_idx = okb.band_idx AND cb.val = okb.val),
-      cand AS (
-        SELECT DISTINCT x.crep AS ia, y.crep AS ib
-        FROM cbf x JOIN cbf y
-          ON x.band_idx = y.band_idx AND x.val = y.val AND x.crep < y.crep),
-      pr AS (
-        SELECT ia AS id_a, ib AS id_b
-        FROM cand JOIN cls a ON cand.ia = a.crep JOIN cls c ON cand.ib = c.crep
-        WHERE bit_count(xor(a.b0, c.b0)) + bit_count(xor(a.b1, c.b1)) +
-              bit_count(xor(a.b2, c.b2)) + bit_count(xor(a.b3, c.b3)) <= 3),
-      edges AS (SELECT id_a AS src, id_b AS dst FROM pr
-                UNION SELECT id_b, id_a FROM pr),
-      reach(src, dst) AS (
-        SELECT crep, crep FROM cls
-        UNION
-        SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src),
-      crep2 AS (SELECT src AS crep, min(dst) AS rep FROM reach GROUP BY src)
-      SELECT h.doc_id AS media_id, c2.rep, h.doc_id = c2.rep AS keep
-      FROM hh h
-      JOIN cls c ON h.b0 = c.b0 AND h.b1 = c.b1 AND h.b2 = c.b2 AND h.b3 = c.b3
-      JOIN crep2 c2 ON c.crep = c2.crep""",
-
-    // frame f is constant gray (f·37 + id) mod 256; feature i samples
-    // frame ⌊i·n/8⌋, and round(g/255·255) recovers g exactly
-    "mm_video" -> """
-      WITH p AS (
-        SELECT doc_id, 16 + n_chars % 32 AS w, 16 + (n_chars * 5) % 24 AS h,
-               1 + n_chars % 12 AS n
-        FROM documents)
-      SELECT doc_id AS media_id,
-             CAST(w AS BIGINT) AS width, CAST(h AS BIGINT) AS height,
-             CAST(n AS BIGINT) AS n_frames,
-             CAST(doc_id % 256 AS BIGINT) AS g1,
-             CAST((((3 * n) // 8) * 37 + doc_id) % 256 AS BIGINT) AS g4,
-             CAST((((7 * n) // 8) * 37 + doc_id) % 256 AS BIGINT) AS g8
-      FROM p""",
-
-    // real frame count n = 1 + n_chars % 12, stride 3 over 0..n-1
-    "mm_frames" -> """
-      SELECT doc_id AS media_id,
-             ((1 + n_chars % 12) - 1) // 3 + 1 AS n_sampled,
-             (((1 + n_chars % 12) - 1) // 3) * 3 AS max_idx
-      FROM documents""",
-
-    // analytic re-derivation of the decoded WAV: the waveform formula
-    // replayed over generate_series, segment k = ⌊i·8/n⌋, exact integer
-    // sums, then the SAME double divide + float32 round-trip as the
-    // decoder (both engines correctly round, so the doubles are
-    // bit-identical)
-    "mm_audio" -> """
-      WITH params AS (
-        SELECT doc_id, 8000 + (doc_id % 3) * 4000 AS sr, 400 + (n_chars % 256) AS n
-        FROM documents),
-      samp AS (
-        SELECT doc_id, n, (i * 8) // n AS k,
-               abs(((i * 31 + doc_id * 17) % 2001) - 1000) AS a
-        FROM (SELECT doc_id, n, unnest(generate_series(0, n - 1)) AS i FROM params)),
-      seg AS (
-        SELECT doc_id, any_value(n) AS n,
-               CAST(CAST(sum(CASE WHEN k = 0 THEN a END) AS DOUBLE)
-                 / (32768.0 * count(CASE WHEN k = 0 THEN a END)) AS FLOAT)::DOUBLE AS f1,
-               CAST(CAST(sum(CASE WHEN k = 3 THEN a END) AS DOUBLE)
-                 / (32768.0 * count(CASE WHEN k = 3 THEN a END)) AS FLOAT)::DOUBLE AS f4,
-               CAST(CAST(sum(CASE WHEN k = 7 THEN a END) AS DOUBLE)
-                 / (32768.0 * count(CASE WHEN k = 7 THEN a END)) AS FLOAT)::DOUBLE AS f8
-        FROM samp GROUP BY doc_id)
-      SELECT p.doc_id AS media_id, CAST(p.sr AS BIGINT) AS sample_rate,
-             1::BIGINT AS channels, CAST(p.n AS BIGINT) AS n_samples,
-             s.f1, s.f4, s.f8
-      FROM params p JOIN seg s ON p.doc_id = s.doc_id""",
-
-    // --- streaming surface ----------------------------------------------
-    "stream_window" -> """
-      SELECT CAST(epoch(date_trunc('hour', ts)) AS BIGINT) AS wstart, event_type,
-             count(*) AS n,
-             CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
-      FROM events GROUP BY 1, 2""",
-
-    "stream_enrich" -> """
-      SELECT e.event_id, e.user_id, c.c_name
-      FROM events e LEFT JOIN customer c ON e.user_id = c.c_custkey""",
-
-    "stream_cms" -> """
-      WITH h(i, a, b) AS (VALUES
-        (0, 2654435761, 1013904223), (1, 2246822519, 374761393),
-        (2, 3266489917, 668265263), (3, 2654435789, 97))
-      SELECT CAST(epoch(date_trunc('hour', ts)) AS BIGINT) AS wstart, i,
-             ((user_id % 1000003) * a + b) % 8192 AS bucket, count(*) AS cnt
-      FROM events CROSS JOIN h GROUP BY 1, 2, 3""",
-
-    "stream_jq_window" -> """
-      SELECT CAST(epoch(date_trunc('hour', ts)) AS BIGINT) AS wstart, event_type,
-             count(*) AS n,
-             CAST(sum(CAST(json_extract(props, '$.k') AS BIGINT)) AS BIGINT) AS sum_k,
-             max(CAST(json_extract(props, '$.k') AS BIGINT)) AS max_k
-      FROM events GROUP BY 1, 2""",
-
-    "stream_interval_join" -> """
-      SELECT l.event_id AS click_id, r.event_id AS purchase_id
-      FROM events l JOIN events r
-        ON l.user_id = r.user_id
-       AND l.event_type = 'click' AND r.event_type = 'purchase'
-       AND r.ts >= l.ts AND r.ts <= l.ts + INTERVAL 1 HOUR""",
-
-    "stream_sessionize" -> """
-      WITH e AS (SELECT user_id, epoch_ns(ts) AS tsn FROM events),
-      f AS (SELECT user_id, tsn,
-              CASE WHEN lag(tsn) OVER w IS NULL OR tsn - lag(tsn) OVER w > 1800000000000
-                   THEN 1 ELSE 0 END AS new_session
-            FROM e WINDOW w AS (PARTITION BY user_id ORDER BY tsn)),
-      g AS (SELECT user_id, tsn,
-              CAST(sum(new_session) OVER (PARTITION BY user_id ORDER BY tsn
-                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS session_seq
-            FROM f)
-      SELECT user_id, session_seq, min(tsn) AS session_start,
-             max(tsn) - min(tsn) AS duration_ns, count(*) AS n_events
-      FROM g GROUP BY user_id, session_seq""",
-
-    "stream_dedup" -> "SELECT DISTINCT props FROM events",
-
-    // brute-force exact-Jaccard pairs: the streaming LSH path emits a pair
-    // when the later doc arrives, so the backfilled SET equals this list
-    // (banding misses at j >= 0.75 have probability (1-0.75^2)^16 ~ 2e-6)
-    "stream_neardup" -> """
-      WITH sh AS (
-        SELECT doc_id, list_distinct(CASE WHEN len(s) >= 3
-          THEN [s[i] || ' ' || s[i+1] || ' ' || s[i+2] for i in range(1, len(s) - 1)]
-          ELSE [] END) AS shingles
-        FROM (SELECT doc_id, string_split(text, ' ') AS s FROM documents))
-      SELECT id_a, id_b, j FROM (
-        SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-               len(list_intersect(a.shingles, b.shingles))::DOUBLE
-                 / len(list_distinct(a.shingles || b.shingles)) AS j
-        FROM sh a JOIN sh b ON a.doc_id < b.doc_id) t
-      WHERE j >= 0.75""",
-
-    "jq_labelbreak" -> """
-      WITH d AS (SELECT event_id, event_id % 100 AS k FROM events)
-      SELECT event_id,
-             CASE WHEN k * 2 >= 100 THEN '[' || k || ']'
-                  ELSE '[' || k || ',' || (k * 2) || ',7]' END AS pfx
-      FROM d""",
-
-    "jq_seq_builtins" -> """
-      WITH d AS (SELECT event_id, CAST(json_extract(props, '$.k') AS BIGINT) AS k FROM events)
-      SELECT event_id,
-             CASE WHEN k % 2 = 1 THEN '[0,1]' ELSE '[1]' END AS idx,
-             '[[' || k || ',' || (k + 1) || '],[null,9]]' AS tr,
-             (k % 3) * 2 AS ridx,
-             k % 3 + 1 AS nidx,
-             '''' || k || ''' ''a b''' AS sh
-      FROM d""",
-
-    "text_chunks" -> """
-      WITH d AS (
-        SELECT doc_id, text,
-               greatest(CAST(ceil((length(text) - 40)::DOUBLE / 160) AS BIGINT), 1) AS n
-        FROM documents),
-      e AS (SELECT doc_id, text, unnest(range(0, n)) AS i FROM d)
-      SELECT doc_id, i AS chunk_id, substr(text, i * 160 + 1, 200) AS chunk
-      FROM e""",
-
-    "text_bm25" -> """
-      WITH tf AS (
-        SELECT doc_id,
-               CAST(len(list_filter(string_split(text, ' '), x -> x = 'the')) AS BIGINT) AS tf1,
-               CAST(len(list_filter(string_split(text, ' '), x -> x = 'data')) AS BIGINT) AS tf2,
-               CAST(len(list_filter(string_split(text, ' '), x -> x = 'model')) AS BIGINT) AS tf3,
-               CAST(len(string_split(text, ' ')) AS BIGINT) AS len
-        FROM documents),
-      st AS (
-        SELECT count(*) AS n, CAST(sum(len) AS BIGINT) AS toklen,
-               CAST(sum(CASE WHEN tf1 > 0 THEN 1 ELSE 0 END) AS BIGINT) AS df1,
-               CAST(sum(CASE WHEN tf2 > 0 THEN 1 ELSE 0 END) AS BIGINT) AS df2,
-               CAST(sum(CASE WHEN tf3 > 0 THEN 1 ELSE 0 END) AS BIGINT) AS df3
-        FROM tf)
-      SELECT doc_id,
-             (CAST(n AS DOUBLE) - CAST(df1 AS DOUBLE) + 0.5) / (CAST(df1 AS DOUBLE) + 0.5)
-               * (CAST(tf1 AS DOUBLE) * (1.2 + 1.0))
-               / (CAST(tf1 AS DOUBLE) + 1.2 * (1.0 - 0.75 + 0.75 * CAST(len AS DOUBLE)
-                    / (CAST(toklen AS DOUBLE) / CAST(n AS DOUBLE))))
-           + (CAST(n AS DOUBLE) - CAST(df2 AS DOUBLE) + 0.5) / (CAST(df2 AS DOUBLE) + 0.5)
-               * (CAST(tf2 AS DOUBLE) * (1.2 + 1.0))
-               / (CAST(tf2 AS DOUBLE) + 1.2 * (1.0 - 0.75 + 0.75 * CAST(len AS DOUBLE)
-                    / (CAST(toklen AS DOUBLE) / CAST(n AS DOUBLE))))
-           + (CAST(n AS DOUBLE) - CAST(df3 AS DOUBLE) + 0.5) / (CAST(df3 AS DOUBLE) + 0.5)
-               * (CAST(tf3 AS DOUBLE) * (1.2 + 1.0))
-               / (CAST(tf3 AS DOUBLE) + 1.2 * (1.0 - 0.75 + 0.75 * CAST(len AS DOUBLE)
-                    / (CAST(toklen AS DOUBLE) / CAST(n AS DOUBLE)))) AS bm25
-      FROM tf, st""",
-
-    "text_term_freq" -> """
-      SELECT term, count(*) AS n
-      FROM (SELECT unnest(string_split(text, ' ')) AS term FROM documents)
-      GROUP BY term ORDER BY n DESC, term ASC LIMIT 20""",
-
-    "text_postings" -> """
-      WITH t AS (
-        SELECT DISTINCT doc_id, unnest(string_split(text, ' ')) AS term
-        FROM documents)
-      SELECT term, CAST(count(*) AS BIGINT) AS df,
-             string_agg(doc_id::VARCHAR, ',' ORDER BY doc_id) AS postings
-      FROM t WHERE length(term) >= 5
-      GROUP BY term""",
-
-    "jq_dates" -> """
-      WITH d AS (SELECT event_id,
-                        make_timestamp((CAST(json_extract(props, '$.k') AS BIGINT)
-                          * 86400 + 1500000000) * 1000000) AS t,
-                        CAST(json_extract(props, '$.k') AS BIGINT)
-                          * 86400 + 1500000000 AS sec
-                 FROM events)
-      SELECT event_id,
-             strftime(t, '%Y-%m-%dT%H:%M:%SZ') AS iso,
-             sec AS rt,
-             sec AS gm,
-             strftime(t, '%Y/%j %H:%M') AS fmt
-      FROM d""",
-
-    // blocking key + exact Levenshtein verify; the (1.0 - 0.8) length
-    // pre-filter bound is written as the SAME double subtraction the
-    // Spark side evaluates, so the boundary compare is bit-identical
-    // widen-aware oracle (round 14): replays the self-tuning blocking
-    // CASE exactly — per-level block counts over the whole corpus, the
-    // effective key is the narrowest level within maxBlockSize=16 (the
-    // widest level unconditionally), so the oracle stays exact at ANY sf
-    // whether or not re-blocking engages (at the sf0.01 gate the largest
-    // level-0 block is 7 and every CASE arm picks level 0)
-    "dedup_edit" -> """
-      WITH k AS (SELECT doc_id, text,
-          array_to_string((string_split(text, ' '))[1:1], ' ') || '|' ||
-            CAST(length(text) // 64 AS VARCHAR) AS k0,
-          array_to_string((string_split(text, ' '))[1:2], ' ') || '|' ||
-            CAST(length(text) // 64 AS VARCHAR) AS k1,
-          array_to_string((string_split(text, ' '))[1:3], ' ') || '|' ||
-            CAST(length(text) // 64 AS VARCHAR) AS k2,
-          array_to_string((string_split(text, ' '))[1:4], ' ') || '|' ||
-            CAST(length(text) // 64 AS VARCHAR) AS k3
-        FROM documents),
-      c0 AS (SELECT k0, count(*) AS c,
-                    max(count(*)) OVER () AS mx,
-                    sum(CASE WHEN count(*) > 16
-                        THEN count(*)*(count(*)-1)//2 ELSE 0 END) OVER () AS pov,
-                    sum(count(*)) OVER () AS n
-             FROM k GROUP BY k0),
-      c1 AS (SELECT k1, count(*) AS c FROM k GROUP BY k1),
-      c2 AS (SELECT k2, count(*) AS c FROM k GROUP BY k2),
-      eff AS (SELECT k.doc_id, k.text,
-          CASE WHEN c0.mx <= 4*16 OR c0.pov <= 4*c0.n THEN k.k0
-               WHEN c0.c <= 16 THEN k.k0
-               WHEN c1.c <= 16 THEN k.k1
-               WHEN c2.c <= 16 THEN k.k2
-               ELSE k.k3 END AS blk
-        FROM k JOIN c0 USING (k0) JOIN c1 USING (k1) JOIN c2 USING (k2))
-      SELECT id_a, id_b, lev, sim FROM (
-        SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-               CAST(levenshtein(a.text, b.text) AS BIGINT) AS lev,
-               1.0 - levenshtein(a.text, b.text) /
-                 CAST(greatest(length(a.text), length(b.text)) AS DOUBLE) AS sim
-        FROM eff a JOIN eff b ON a.blk = b.blk AND a.doc_id < b.doc_id
-        WHERE CAST(abs(length(a.text) - length(b.text)) AS DOUBLE)
-              <= (CAST(1.0 AS DOUBLE) - CAST(0.8 AS DOUBLE))
-                 * greatest(length(a.text), length(b.text))) t
-      WHERE sim >= 0.8""",
-
-    "rel_scd2" -> """
-      WITH c AS (
-        SELECT o_custkey AS k, o_orderdate AS t, o_orderpriority AS a,
-               lag(o_orderpriority) OVER w AS prev,
-               row_number() OVER w AS rn
-        FROM orders
-        WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderpriority)),
-      ch AS (SELECT k, t, a FROM c WHERE rn = 1 OR prev IS DISTINCT FROM a)
-      SELECT k AS o_custkey, a AS priority, t AS valid_from,
-             lead(t) OVER w2 AS valid_to,
-             CAST(row_number() OVER w2 AS BIGINT) AS version,
-             lead(t) OVER w2 IS NULL AS is_current
-      FROM ch WINDOW w2 AS (PARTITION BY k ORDER BY t, a)""",
-
-    "rel_skyline" -> """
-      SELECT o_totalprice, o_orderdate FROM orders a
-      WHERE NOT EXISTS (
-        SELECT 1 FROM orders b
-        WHERE b.o_totalprice >= a.o_totalprice AND b.o_orderdate <= a.o_orderdate
-          AND (b.o_totalprice > a.o_totalprice OR b.o_orderdate < a.o_orderdate))""",
-
-    "rel_winsorize" -> """
-      WITH nn AS (
-        SELECT c_nationkey, CAST(c_acctbal AS DOUBLE) AS v
-        FROM customer WHERE c_acctbal IS NOT NULL),
-      b AS (
-        SELECT c_nationkey AS g, count(*) AS n,
-               quantile_cont(v, 0.05) AS lo,
-               quantile_cont(v, 0.95) AS hi
-        FROM nn GROUP BY 1),
-      a AS (
-        SELECT g, n, lo, hi,
-               sum(CAST(CASE WHEN c.v >= b.lo AND c.v <= b.hi
-                             THEN c.v ELSE 0.0 END AS DECIMAL(38,9))) AS sum_in,
-               CAST(sum(CASE WHEN c.v < b.lo THEN 1 ELSE 0 END) AS BIGINT) AS n_clip_lo,
-               CAST(sum(CASE WHEN c.v > b.hi THEN 1 ELSE 0 END) AS BIGINT) AS n_clip_hi
-        FROM nn c JOIN b ON c.c_nationkey = b.g
-        GROUP BY g, n, lo, hi)
-      SELECT g AS c_nationkey, n, round(lo, 6) AS p_lo, round(hi, 6) AS p_hi,
-             round((CAST(sum_in AS DOUBLE)
-                    + CAST(n_clip_lo AS DOUBLE) * lo
-                    + CAST(n_clip_hi AS DOUBLE) * hi) / CAST(n AS DOUBLE), 6)
-               AS winsor_mean,
-             n_clip_lo, n_clip_hi
-      FROM a""",
-
-    "curation_epochs" -> """
-      WITH s AS (SELECT source, CAST(sum(n_chars) AS BIGINT) AS n_tokens
-                 FROM documents GROUP BY 1),
-      t AS (SELECT CAST(sum(n_tokens) AS HUGEINT) AS tok_total FROM s),
-      a AS (SELECT source, n_tokens,
-              CAST((CAST(2000000 AS HUGEINT) * n_tokens) // tok_total AS BIGINT)
-                AS alloc
-            FROM s CROSS JOIN t)
-      SELECT source, n_tokens, alloc,
-             least(alloc // n_tokens, 3) AS epochs_full,
-             CASE WHEN alloc // n_tokens < 3 THEN alloc % n_tokens ELSE 0 END
-               AS partial_tokens,
-             least(alloc // n_tokens, 3) * n_tokens +
-               CASE WHEN alloc // n_tokens < 3 THEN alloc % n_tokens ELSE 0 END
-               AS served_tokens,
-             alloc - (least(alloc // n_tokens, 3) * n_tokens +
-               CASE WHEN alloc // n_tokens < 3 THEN alloc % n_tokens ELSE 0 END)
-               AS unused_tokens
-      FROM a""",
-
-    // unrolled k=3 greedy MMR trace in micro-int space — identical
-    // integer argmax decisions to the Spark plan loop
-    "sim_mmr_ann" ->
-      "SELECT DISTINCT vec_id AS qid, true AS agree FROM embeddings WHERE vec_id < 4",
-
-    "sim_mmr" -> """
-      WITH q AS (SELECT vec_id AS qid,
-                        list_transform(embedding, x -> CAST(x AS DOUBLE)) AS qv
-                 FROM embeddings WHERE vec_id < 4),
-      e AS (SELECT vec_id,
-                   list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-            FROM embeddings),
-      cand AS (
-        SELECT qid, vec_id, rel FROM (
-          SELECT q.qid, e.vec_id,
-                 CAST(round(list_cosine_similarity(q.qv, e.v) * 1e6) AS BIGINT) AS rel
-          FROM q CROSS JOIN e) t
-        QUALIFY row_number() OVER (PARTITION BY qid ORDER BY rel DESC, vec_id) <= 8),
-      ps AS (
-        SELECT a.qid, a.vec_id AS id_a, b.vec_id AS id_b,
-               CAST(round(list_cosine_similarity(ea.v, eb.v) * 1e6) AS BIGINT) AS s
-        FROM cand a JOIN cand b ON a.qid = b.qid AND a.vec_id <> b.vec_id
-        JOIN e ea ON ea.vec_id = a.vec_id
-        JOIN e eb ON eb.vec_id = b.vec_id),
-      s1 AS (SELECT qid, vec_id FROM cand
-             QUALIFY row_number() OVER (PARTITION BY qid ORDER BY rel DESC, vec_id) = 1),
-      p2 AS (SELECT c.qid, c.vec_id, c.rel, max(ps.s) AS pen
-             FROM cand c
-             JOIN ps ON ps.qid = c.qid AND ps.id_a = c.vec_id
-             JOIN s1 ON s1.qid = ps.qid AND s1.vec_id = ps.id_b
-             WHERE NOT EXISTS (SELECT 1 FROM s1 x
-                               WHERE x.qid = c.qid AND x.vec_id = c.vec_id)
-             GROUP BY 1, 2, 3),
-      s2 AS (SELECT qid, vec_id FROM p2
-             QUALIFY row_number() OVER (PARTITION BY qid
-               ORDER BY 700 * rel - 300 * pen DESC, vec_id) = 1),
-      sel12 AS (SELECT qid, vec_id FROM s1 UNION ALL SELECT qid, vec_id FROM s2),
-      p3 AS (SELECT c.qid, c.vec_id, c.rel, max(ps.s) AS pen
-             FROM cand c
-             JOIN ps ON ps.qid = c.qid AND ps.id_a = c.vec_id
-             JOIN sel12 ON sel12.qid = ps.qid AND sel12.vec_id = ps.id_b
-             WHERE NOT EXISTS (SELECT 1 FROM sel12 x
-                               WHERE x.qid = c.qid AND x.vec_id = c.vec_id)
-             GROUP BY 1, 2, 3),
-      s3 AS (SELECT qid, vec_id FROM p3
-             QUALIFY row_number() OVER (PARTITION BY qid
-               ORDER BY 700 * rel - 300 * pen DESC, vec_id) = 1)
-      SELECT qid, vec_id, CAST(1 AS BIGINT) AS sel_rank FROM s1
-      UNION ALL SELECT qid, vec_id, CAST(2 AS BIGINT) FROM s2
-      UNION ALL SELECT qid, vec_id, CAST(3 AS BIGINT) FROM s3""",
-
-    // the ±1 matrix is the same closed-form LCG bit; every component is
-    // an exact BIGINT so the row hashes bit-identically
-    "sim_rp" -> """
-      WITH p AS (
-        SELECT vec_id,
-               [CAST(list_sum(list_transform(range(0, len(embedding)),
-                  j -> (1 - 2 * (((i * 1103515245 + j * 12345) >> 16) & 1)) *
-                       CAST(round(CAST(embedding[j + 1] AS DOUBLE) * 1000) AS BIGINT)))
-                 AS BIGINT)
-                for i in range(0, 8)] AS proj
-        FROM embeddings)
-      SELECT vec_id, array_to_string(proj, ',') AS proj_s,
-             CAST(list_sum(list_transform(proj, x -> x * x)) AS BIGINT) AS norm2
-      FROM p""",
-
-    "text_phrase" -> """
-      WITH t AS (SELECT doc_id, string_split(text, ' ') AS s FROM documents),
-      m AS (SELECT doc_id,
-              CAST(len([i for i in range(1, len(s))
-                        if s[i] = 'table' AND s[i + 1] = 'hash']) AS BIGINT)
-                AS n_matches
-            FROM t)
-      SELECT doc_id, n_matches FROM m WHERE n_matches > 0""",
-
-    // micro-nat least squares over HUGEINT normal-equation sums — the
-    // same integer sums as the Spark DECIMAL(38,0) aggregation, with the
-    // final divisions mirrored operation-for-operation in DOUBLE
-    "text_zipf" -> """
-      WITH f AS (
-        SELECT tok, count(*) AS f FROM (
-          SELECT unnest(string_split(text, ' ')) AS tok FROM documents) t
-        WHERE length(tok) > 0
-        GROUP BY tok ORDER BY f DESC, tok LIMIT 200),
-      r AS (SELECT f, row_number() OVER (ORDER BY f DESC, tok) AS r FROM f),
-      p AS (SELECT CAST(round(ln(r) * 1e6) AS BIGINT) AS x,
-                   CAST(round(ln(f) * 1e6) AS BIGINT) AS y
-            FROM r),
-      a AS (SELECT CAST(count(*) AS HUGEINT) AS n,
-                   sum(CAST(x AS HUGEINT)) AS sx,
-                   sum(CAST(y AS HUGEINT)) AS sy,
-                   sum(CAST(x AS HUGEINT) * CAST(y AS HUGEINT)) AS sxy,
-                   sum(CAST(x AS HUGEINT) * CAST(x AS HUGEINT)) AS sxx
-            FROM p)
-      SELECT CAST(n AS BIGINT) AS n_terms,
-             round(CAST(n * sxy - sx * sy AS DOUBLE) /
-                   CAST(n * sxx - sx * sx AS DOUBLE), 6) AS slope,
-             round((CAST(sy AS DOUBLE) -
-                    CAST(n * sxy - sx * sy AS DOUBLE) /
-                      CAST(n * sxx - sx * sx AS DOUBLE) *
-                      CAST(sx AS DOUBLE)) / CAST(n AS DOUBLE), 6) AS intercept
-      FROM a""",
-
-    // --- round 8 ---------------------------------------------------------
-
-    // triangles enumerated ONCE as ordered triples x<y<z (orientation-
-    // free), then each corner counted — the same per-node membership
-    // counts the degree-oriented engine emits
-    "graph_triangles" -> """
-      WITH n AS (SELECT count(*) AS n_docs FROM documents),
-      links AS (
-        SELECT doc_id AS src,
-               ((doc_id * 2654435761 + j * 40503) % 1000003) % (SELECT n_docs FROM n) AS dst
-        FROM documents, (SELECT unnest([1, 2, 3]) AS j)),
-      und AS (
-        SELECT DISTINCT least(src, dst) AS u, greatest(src, dst) AS v
-        FROM links WHERE src <> dst),
-      tri AS (
-        SELECT e1.u AS x, e1.v AS y, e2.v AS z
-        FROM und e1 JOIN und e2 ON e1.v = e2.u
-        JOIN und e3 ON e3.u = e1.u AND e3.v = e2.v)
-      SELECT node, count(*) AS triangles
-      FROM (SELECT unnest([x, y, z]) AS node FROM tri) m
-      GROUP BY node""",
-
-    // exact reachability closure (recursive CTE) → min-label rep per
-    // node → component census; the engine's label propagation must land
-    // the identical labeling
-    "graph_components" -> """
-      WITH RECURSIVE links AS (
-        SELECT doc_id AS src, (doc_id // 5) * 5 AS dst FROM documents
-        UNION ALL
-        SELECT doc_id, (doc_id // 25) * 25 FROM documents
-        WHERE doc_id % 5 = 0 AND (doc_id // 5) % 3 != 0),
-      edges AS (
-        SELECT least(src, dst) AS src, greatest(src, dst) AS dst
-        FROM links WHERE src <> dst
-        UNION
-        SELECT greatest(src, dst), least(src, dst) FROM links WHERE src <> dst),
-      reach(src, dst) AS (
-        SELECT doc_id, doc_id FROM documents
-        UNION
-        SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src),
-      labels AS (SELECT src AS id, min(dst) AS rep FROM reach GROUP BY src)
-      SELECT rep, count(*) AS size FROM labels GROUP BY rep""",
-
-    "rel_sessionize" -> """
-      WITH e AS (
-        SELECT user_id, epoch_us(ts) * 1000 AS ts,
-               CAST(round(value * 1000000.0) AS BIGINT) AS v
-        FROM events),
-      marked AS (
-        SELECT user_id, ts, v,
-               CASE WHEN ts - lag(ts) OVER (PARTITION BY user_id ORDER BY ts)
-                         <= 43200000000000 THEN 0 ELSE 1 END AS new_session
-        FROM e),
-      numbered AS (
-        SELECT user_id, ts, v,
-               CAST(sum(new_session) OVER (PARTITION BY user_id ORDER BY ts
-                 ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
-                 AS session_no
-        FROM marked)
-      SELECT user_id, session_no,
-             min(ts) AS session_start, max(ts) AS session_end,
-             count(*) AS n_events, CAST(sum(v) AS BIGINT) AS sum_value_micro
-      FROM numbered GROUP BY user_id, session_no""",
-
-    // tf/df/N over the FULL corpus; the doc_id gate applies to the output
-    "text_bm25_topk" -> """
-      WITH d AS (
-        SELECT doc_id, string_split(text, ' ') AS toks,
-               CAST(len(string_split(text, ' ')) AS BIGINT) AS dl
-        FROM documents),
-      tot AS (SELECT CAST(count(*) AS BIGINT) AS n_docs,
-                     CAST(sum(dl) AS BIGINT) AS t_tokens FROM d),
-      tf AS (SELECT doc_id, dl, term, CAST(count(*) AS BIGINT) AS tf
-             FROM (SELECT doc_id, dl, unnest(toks) AS term FROM d)
-             WHERE term IN ('table', 'hash', 'data')
-             GROUP BY 1, 2, 3),
-      df AS (SELECT term, CAST(count(*) AS BIGINT) AS df FROM tf GROUP BY term),
-      contrib AS (
-        SELECT tf.doc_id,
-               CAST(round(
-                 CAST(round(ln((tot.n_docs - df.df + 0.5) / (df.df + 0.5) + 1.0) * 1e6) AS BIGINT)
-                 * (CAST(tf.tf * 2200 * 1000 * tot.t_tokens AS DOUBLE)
-                    / CAST(tf.tf * 1000000 * tot.t_tokens
-                           + 300000 * tot.t_tokens
-                           + 900000 * tf.dl * tot.n_docs AS DOUBLE))) AS BIGINT) AS c
-        FROM tf JOIN df USING (term), tot),
-      score AS (SELECT doc_id, CAST(sum(c) AS BIGINT) AS bm25_micro FROM contrib GROUP BY doc_id)
-      SELECT doc_id, CAST(rnk AS BIGINT) AS rnk, bm25_micro FROM (
-        SELECT doc_id, bm25_micro,
-               row_number() OVER (ORDER BY bm25_micro DESC, doc_id ASC) AS rnk
-        FROM score) t
-      WHERE rnk <= 10""",
-
-    "text_bm25_topk_multi" -> """
-      WITH d AS (
-        SELECT doc_id, string_split(text, ' ') AS toks,
-               CAST(len(string_split(text, ' ')) AS BIGINT) AS dl
-        FROM documents),
-      tot AS (SELECT CAST(count(*) AS BIGINT) AS n_docs,
-                     CAST(sum(dl) AS BIGINT) AS t_tokens FROM d),
-      tf AS (SELECT doc_id, dl, term, CAST(count(*) AS BIGINT) AS tf
-             FROM (SELECT doc_id, dl, unnest(toks) AS term FROM d)
-             WHERE term IN ('table', 'hash', 'data', 'filter', 'batch', 'scan', 'join', 'merge')
-             GROUP BY 1, 2, 3),
-      df AS (SELECT term, CAST(count(*) AS BIGINT) AS df FROM tf GROUP BY term),
-      contrib AS (
-        SELECT tf.term, tf.doc_id,
-               CAST(round(
-                 CAST(round(ln((tot.n_docs - df.df + 0.5) / (df.df + 0.5) + 1.0) * 1e6) AS BIGINT)
-                 * (CAST(tf.tf * 2200 * 1000 * tot.t_tokens AS DOUBLE)
-                    / CAST(tf.tf * 1000000 * tot.t_tokens
-                           + 300000 * tot.t_tokens
-                           + 900000 * tf.dl * tot.n_docs AS DOUBLE))) AS BIGINT) AS c
-        FROM tf JOIN df USING (term), tot),
-      q AS (SELECT * FROM (VALUES
-              (1, 'table'), (1, 'hash'), (1, 'data'),
-              (2, 'filter'), (2, 'batch'), (2, 'scan'),
-              (3, 'join'), (3, 'merge')) AS v(qid, term)),
-      score AS (SELECT q.qid, contrib.doc_id, CAST(sum(contrib.c) AS BIGINT) AS bm25_micro
-                FROM contrib JOIN q USING (term) GROUP BY 1, 2)
-      SELECT CAST(qid AS BIGINT) AS qid, doc_id, CAST(rnk AS BIGINT) AS rnk, bm25_micro FROM (
-        SELECT qid, doc_id, bm25_micro,
-               row_number() OVER (PARTITION BY qid ORDER BY bm25_micro DESC, doc_id ASC) AS rnk
-        FROM score) t
-      WHERE rnk <= 10""",
-
-    "text_tfidf" -> """
-      WITH toks AS (
-        SELECT doc_id, unnest(string_split(text, ' ')) AS term
-        FROM documents),
-      t5 AS (SELECT doc_id, term FROM toks WHERE length(term) >= 5),
-      tf AS (SELECT doc_id, term, count(*) AS tf FROM t5 GROUP BY doc_id, term),
-      df AS (SELECT term, count(DISTINCT doc_id) AS df FROM t5 GROUP BY term),
-      n AS (SELECT count(DISTINCT doc_id) AS n_docs FROM documents),
-      scored AS (
-        SELECT tf.doc_id, tf.term, tf.tf, df.df,
-               tf.tf * ((n.n_docs * 1000000) // df.df) AS tfidf_q
-        FROM tf JOIN df ON tf.term = df.term, n),
-      ranked AS (
-        SELECT *, row_number() OVER (PARTITION BY doc_id
-                 ORDER BY tfidf_q DESC, term ASC) AS rk
-        FROM scored)
-      SELECT doc_id, CAST(rk AS BIGINT) AS rk, term,
-             CAST(tf AS BIGINT) AS tf, CAST(df AS BIGINT) AS df, tfidf_q
-      FROM ranked WHERE rk <= 3 AND doc_id < 200""",
-
-    "rel_tpch_q5" -> """
-      SELECT n_name,
-             CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2)) * (CAST(1.0 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS revenue
-      FROM customer, orders, lineitem, supplier, nation, region
-      WHERE c_custkey = o_custkey AND l_orderkey = o_orderkey
-        AND l_suppkey = s_suppkey AND c_nationkey = s_nationkey
-        AND s_nationkey = n_nationkey AND n_regionkey = r_regionkey
-        AND r_name = 'ASIA'
-        AND o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
-        AND o_orderdate < TIMESTAMP '1997-01-01 00:00:00'
-      GROUP BY n_name
-      ORDER BY revenue DESC, n_name""",
-
-    // the canonicalization chain mirrored step-for-step; note RE2 has no
-    // lookahead (the engine's regexes avoid it for exactly this reason)
-    // and DuckDB's regexp_replace needs the explicit 'g' flag on the one
-    // pattern expected to match repeatedly
-    "curation_url_dedup" -> """
-      WITH raw AS (
-        SELECT doc_id,
-          (CASE WHEN doc_id % 2 = 0 THEN 'http://' ELSE 'HTTPS://' END)
-          || (CASE WHEN doc_id % 3 = 0 THEN 'WWW.' ELSE '' END)
-          || source || '.Example.COM'
-          || (CASE WHEN doc_id % 5 = 0 THEN ':443' ELSE '' END)
-          || '/docs/' || (doc_id % 50)
-          || (CASE WHEN doc_id % 7 = 0 THEN '/' ELSE '' END)
-          || (CASE WHEN doc_id % 2 = 0 THEN '?utm_source=feed&ref=' || (doc_id % 10)
-                   ELSE '?ref=' || (doc_id % 10) END)
-          || (CASE WHEN doc_id % 11 = 0 THEN '&fbclid=abc123' ELSE '' END)
-          || (CASE WHEN doc_id % 4 = 0 THEN '#sec' ELSE '' END) AS url
-        FROM documents),
-      step1 AS (
-        SELECT doc_id,
-          regexp_replace(
-            regexp_replace(regexp_replace(url, '#.*$', ''),
-              '[?&](?:utm_[a-z0-9]+|gclid|fbclid)=[^&#]*', '', 'g'),
-            '^([^?]*?)&', '\1?') AS u2
-        FROM raw),
-      canon AS (
-        SELECT doc_id,
-          regexp_replace(
-            regexp_replace(
-              regexp_replace(
-                regexp_replace(
-                  regexp_replace(
-                    lower(regexp_extract(u2, '^([A-Za-z][A-Za-z0-9+.-]*://[^/?]*)', 1))
-                      || regexp_replace(u2, '^[A-Za-z][A-Za-z0-9+.-]*://[^/?]*', ''),
-                    '^http://', 'https://'),
-                  '^(https://)www\.', '\1'),
-                '^(https://[^/?:]*):(?:80|443)([/?]|$)', '\1\2'),
-              '^(https://[^/?]*/[^?]*[^/?])/(\?|$)', '\1\2'),
-            '\?$', '') AS canon_url
-        FROM step1)
-      SELECT canon_url, min(doc_id) AS keep_id, count(*) AS n_alias
-      FROM canon GROUP BY canon_url""",
-
-    // same planted rows byte-for-byte; nfc_normalize is DuckDB's UAX #15
-    // implementation of the engine's NfcNormalize kernel
-    "text_normalize" -> ("""
-      WITH src AS (
-        SELECT doc_id, text FROM documents WHERE doc_id < 100
-        UNION ALL VALUES
-          (10000001, 'Café  du   Monde'),
-          (10000002, 'Café du Monde'),
-          (10000003, 'Å ring'),
-          (10000004, ' tabs""" + "\tand\nnewlines" + """  here '))
-      SELECT doc_id,
-             trim(regexp_replace(lower(nfc_normalize(text)), '[ """ +
-      "\t\n" + """]+', ' ', 'g')) AS norm
-      FROM src"""),
-
-    "sketch_theta" -> """
-      WITH a AS (SELECT DISTINCT user_id FROM events
-                 WHERE event_type = 'click' AND value > 480),
-      b AS (SELECT DISTINCT user_id FROM events
-            WHERE event_type = 'purchase' AND value > 480)
-      SELECT (SELECT count(*) FROM a) AS n_click,
-             (SELECT count(*) FROM b) AS n_purchase,
-             (SELECT count(*) FROM a WHERE user_id IN (SELECT user_id FROM b)) AS n_both,
-             (SELECT count(*) FROM (SELECT user_id FROM a UNION SELECT user_id FROM b) u) AS n_either,
-             (SELECT count(*) FROM a WHERE user_id NOT IN (SELECT user_id FROM b)) AS n_click_only""",
-
-    // exact regime: capacity exceeds the per-window key cardinality, so
-    // the space-saving table degenerates to exact counts with err 0
-    "stream_topk" -> """
-      WITH e AS (
-        SELECT (epoch_us(ts) * 1000) - (epoch_us(ts) * 1000) % 86400000000000 AS wstart,
-               user_id AS key
-        FROM events),
-      c AS (SELECT wstart, key, count(*) AS n FROM e GROUP BY wstart, key),
-      r AS (SELECT wstart, key, n,
-                   row_number() OVER (PARTITION BY wstart ORDER BY n DESC, key ASC) AS rank
-            FROM c)
-      SELECT wstart, CAST(rank AS BIGINT) AS rank, key, n, CAST(0 AS BIGINT) AS err
-      FROM r WHERE rank <= 3""",
-
-    "rel_corr" -> """
-      WITH q AS (
-        SELECT l_returnflag AS g,
-               CAST(round(CAST(l_quantity AS DOUBLE) * 100) AS BIGINT) AS xi,
-               CAST(round(CAST(l_extendedprice AS DOUBLE) * 100) AS BIGINT) AS yi
-        FROM lineitem),
-      m AS (
-        SELECT g, CAST(count(*) AS HUGEINT) AS n,
-               sum(CAST(xi AS HUGEINT)) AS sx, sum(CAST(yi AS HUGEINT)) AS sy,
-               sum(CAST(xi AS HUGEINT) * CAST(xi AS HUGEINT)) AS sxx,
-               sum(CAST(yi AS HUGEINT) * CAST(yi AS HUGEINT)) AS syy,
-               sum(CAST(xi AS HUGEINT) * CAST(yi AS HUGEINT)) AS sxy
-        FROM q GROUP BY g)
-      SELECT g AS l_returnflag, CAST(n AS BIGINT) AS n,
-             round(CAST(n * sxy - sx * sy AS DOUBLE) /
-               sqrt(CAST(n * sxx - sx * sx AS DOUBLE) *
-                    CAST(n * syy - sy * sy AS DOUBLE)), 6) AS corr
-      FROM m""",
-
-    // the same synthesis and the same regex chain, step for step; RE2
-    // non-greedy spans, (?i) inline flags, entity decode with amp LAST
-    "text_html_extract" -> ("""
-      WITH h AS (
-        SELECT doc_id,
-          '<html><head><title>doc ' || doc_id ||
-          '</title><style>' || chr(10) || 'p { color: red; }' || chr(10) ||
-          '</style></head><body><h1>Doc ' ||
-          doc_id || '</h1><p>' ||
-          regexp_replace(text, ' the ', ' <b>the</b> ', 'g') ||
-          '</p><p>A &amp; B &lt;ok&gt; &quot;q&quot; &#39;s&#39;</p>' ||
-          '<script>' || chr(10) || 'track("' || doc_id ||
-          '");' || chr(10) || '</script><!-- crawler' || chr(10) ||
-          'note --></body></html>' AS html
-        FROM documents WHERE doc_id < 200)
-      SELECT doc_id,
-        trim(regexp_replace(
-          regexp_replace(
-            regexp_replace(
-              regexp_replace(
-                regexp_replace(
-                  regexp_replace(
-                    regexp_replace(
-                      regexp_replace(
-                        regexp_replace(
-                          regexp_replace(html, '(?is)<script[^>]*>.*?</script>', ' ', 'g'),
-                          '(?is)<style[^>]*>.*?</style>', ' ', 'g'),
-                        '(?s)<!--.*?-->', ' ', 'g'),
-                      '<[^>]*>', ' ', 'g'),
-                    '&lt;', '<', 'g'),
-                  '&gt;', '>', 'g'),
-                '&quot;', '"', 'g'),
-              '&#39;', '''', 'g'),
-            '&amp;', '&', 'g'),
-          '[ """ + "\t\n\r" + """]+', ' ', 'g')) AS content
-      FROM h"""),
-
-    // bucket formula written operation-for-operation as the engine's —
-    // identical IEEE doubles land identical buckets
-    "rel_histogram" -> """
-      WITH mm AS (SELECT min(o_totalprice) AS mn, max(o_totalprice) AS mx FROM orders)
-      SELECT CAST(least(7, floor((o_totalprice - mn) / ((mx - mn) / 8.0))) AS BIGINT) AS bucket,
-             count(*) AS n, min(o_totalprice) AS lo, max(o_totalprice) AS hi
-      FROM orders, mm
-      GROUP BY 1"""
-  )
+  /** The session every driver main (Bench, Verify, PlanDump, Scale) runs
+    * in: `local[cpus]` with as many shuffle partitions, AQE on, graft's
+    * extensions, and the Spark 4.1 union fence. */
+  def driverSession(cpus: Int): SparkSession.Builder = SparkSession.builder()
+    .master(s"local[$cpus]")
+    .config("spark.sql.shuffle.partitions", cpus.toString)
+    .config("spark.ui.enabled", "false")
+    .config("spark.sql.adaptive.enabled", "true")
+    .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
+    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+    .config("spark.sql.session.timeZone", "UTC")
+    .config("spark.sql.extensions", "graft.GraftExtensions")
+    .config("spark.sql.unionOutputPartitioning", "false") // Spark 4.1 union claim/exec mismatch; see Checkpoints.scala
 }

@@ -169,4 +169,22 @@ class BenchReprobeSpec extends AnyFunSuite {
     assert(w.map(_("a")) == Seq(4.0, 3.0, 2.0))
     assert(Bench.parseHistoryWindow(lines, "/d/sf9").isEmpty)
   }
+
+  test("summaryLine: a 214-entry run ends on a compact line under 1500 chars") {
+    // the driver keeps only the last 2000 chars of stdout; the full
+    // 214-entry map (~6 KB) overflowed it and parsed as null for rounds
+    val results = SparkEntry.queries.keys.toSeq.sorted.zipWithIndex.map {
+      case (n, i) => n -> (if (i % 50 == 7) -1.0 else 100.0 + i / 7.0)
+    }
+    assert(results.size == 214)
+    val line = Bench.summaryLine(results, "/d/sf0.1")
+    assert(line.length <= 1500, s"${line.length} chars")
+    val keys = "\"([a-z_]+)\":".r.findAllMatchIn(line).map(_.group(1)).toSeq
+    assert(keys == Seq("metric", "value", "unit", "n_queries", "n_failed", "sf", "detail_file"))
+    assert(line.startsWith("{\"metric\":\"total\",") && line.endsWith("}"))
+    val ok = results.map(_._2).filter(_ >= 0)
+    assert(line.contains(s"\"n_queries\":${ok.size},\"n_failed\":${214 - ok.size},"))
+    assert(line.contains("\"value\":" + String.format(java.util.Locale.ROOT, "%.3f", Double.box(ok.sum))))
+    assert(line.contains("\"sf\":\"/d/sf0.1\""))
+  }
 }

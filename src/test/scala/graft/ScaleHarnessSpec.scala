@@ -183,10 +183,10 @@ class ScaleHarnessSpec extends SparkTestBase {
     val dir = sfDir
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(_.toSeq.map(String.valueOf).mkString("|")).sorted.toSeq
-    val editOracle = SparkEntry.queries("dedup_edit")(spark, dir)
+    val editOracle = SparkEntry.queries("dedup_edit").run(spark, dir)
     val editTuned = Scale.scaledQueries("dedup_edit_btuned")(spark, dir, 1)
     assert(rows(editTuned) == rows(editOracle))
-    val lshOracle = SparkEntry.queries("dedup_embedding_lsh")(spark, dir)
+    val lshOracle = SparkEntry.queries("dedup_embedding_lsh").run(spark, dir)
     val lshTuned = Scale.scaledQueries("dedup_embedding_lsh_htuned")(spark, dir, 1)
     // the tuned variant offsets its duplicate copies differently (1e7 vs
     // 1e6) — normalize before comparing the pair sets

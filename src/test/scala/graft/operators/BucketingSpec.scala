@@ -79,7 +79,7 @@ class BucketingSpec extends SparkTestBase {
     // the oracle query itself (README goals 6-7 storage mapping): the
     // bucketed-snapshot read-back must join co-bucketed — any Exchange
     // below the SortMergeJoin means the layout cost bought nothing
-    val df = graft.SparkEntry.queries("rel_bucketed_join")(spark, sfDir)
+    val df = graft.SparkEntry.queries("rel_bucketed_join").run(spark, sfDir)
     df.collect() // materialize through AQE so the final plan is real
     // scope to the AQE final plan: the appended "== Initial Plan ==" dump
     // repeats the tree and would double-count the post-join agg exchange
@@ -91,7 +91,7 @@ class BucketingSpec extends SparkTestBase {
   }
 
   test("rel_partition_prune: the filter lands in PartitionFilters, not a data filter") {
-    val df = graft.SparkEntry.queries("rel_partition_prune")(spark, sfDir)
+    val df = graft.SparkEntry.queries("rel_partition_prune").run(spark, sfDir)
     df.collect()
     val plan = df.queryExecution.executedPlan.toString.split("== Initial Plan ==")(0)
     // the event_type predicate must prune DIRECTORIES: it appears in

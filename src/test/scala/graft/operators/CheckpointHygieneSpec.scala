@@ -48,7 +48,7 @@ class CheckpointHygieneSpec extends SparkTestBase {
 
   test("dedup_clusters releases its near-dup pair frame: only the clusters stay persisted") {
     val before = persistedNow
-    val clusters = graft.SparkEntry.queries("dedup_clusters")(spark, sfDir)
+    val clusters = graft.SparkEntry.queries("dedup_clusters").run(spark, sfDir)
     // snapshot the moment the query returns: getPersistentRDDs holds RDDs
     // weakly, so a later GC could hide an unreleased (unreachable) frame
     // whose blocks stay pinned until the cleaner happens to run
@@ -193,7 +193,7 @@ class CheckpointHygieneSpec extends SparkTestBase {
   test("registry leak sweep: checkpointing rows leave only what their frame reaches") {
     for (row <- checkpointingRows) {
       val before = persistedNow
-      val frame = graft.SparkEntry.queries(row)(spark, sfDir)
+      val frame = graft.SparkEntry.queries(row).run(spark, sfDir)
       // snapshot the moment the row returns: getPersistentRDDs holds RDDs
       // weakly, so a later GC could hide an unreachable stranded frame
       val added = persistedNow -- before

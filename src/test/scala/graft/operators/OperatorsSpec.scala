@@ -238,7 +238,7 @@ class OperatorsSpec extends SparkTestBase {
 
   test("sim_ann_lsh recall-as-data: ANN top-5 covers ≥4 of exact top-5 per query") {
     // the shipped query's boolean oracle depends on this margin holding
-    val out = graft.SparkEntry.queries("sim_ann_lsh")(spark, sfDir).collect()
+    val out = graft.SparkEntry.queries("sim_ann_lsh").run(spark, sfDir).collect()
     assert(out.nonEmpty && out.forall(_.getBoolean(1)),
       s"recall_ok false for: ${out.filterNot(_.getBoolean(1)).mkString(",")}")
   }

@@ -315,41 +315,6 @@ class Round10OpsSpec extends SparkTestBase {
     }
   }
 
-  test("SparkEntry source literals carry no duplicate query/oracle keys") {
-    // A Map literal silently keeps the LAST duplicate key — adding a new
-    // query under an existing name would SHADOW a green oracle row with
-    // no error anywhere (it nearly happened in round 10: a second
-    // text_bm25 replaced the round-5 rational-idf row until a set-diff
-    // against CORRECTNESS_r09 exposed it). Pin it at the source level.
-    val src = new String(
-      java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get("src/main/scala/graft/SparkEntry.scala")),
-      java.nio.charset.StandardCharsets.UTF_8)
-    // split the source at the map definitions so keys count GENERICALLY
-    // within each region (oracle entries come as triple-quoted blocks,
-    // one-liners, parenthesized strings, and computed { } blocks — any
-    // value-shape-specific regex silently under-counts)
-    val qStart = src.indexOf("def queries")
-    val oStart = src.indexOf("def oracleSql")
-    assert(qStart >= 0 && oStart > qStart, "SparkEntry map definitions moved")
-    // map entries sit at exactly 4-space indentation; deeper matches are
-    // literals INSIDE query lambdas (mixing weights like "en" -> 0.5)
-    val keyRe = """(?m)^    "([a-z0-9_]+)" ->""".r
-    val qkeys = keyRe.findAllMatchIn(src.substring(qStart, oStart)).map(_.group(1)).toSeq
-    assert(qkeys.distinct.size == qkeys.size,
-      s"duplicate query keys: ${qkeys.diff(qkeys.distinct).distinct}")
-    val okeys = keyRe.findAllMatchIn(src.substring(oStart)).map(_.group(1)).toSeq
-    assert(okeys.distinct.size == okeys.size,
-      s"duplicate oracle keys: ${okeys.diff(okeys.distinct).distinct}")
-    // the regions really are the maps: counts line up with the runtime
-    assert(qkeys.size >= graft.SparkEntry.queries.size,
-      s"query-key scan lost entries: ${qkeys.size} vs ${graft.SparkEntry.queries.size}")
-    assert(okeys.size >= graft.SparkEntry.oracleSql.size,
-      s"oracle-key scan lost entries: ${okeys.size} vs ${graft.SparkEntry.oracleSql.size}")
-    // and the runtime maps agree 1:1 (every query oracled, no orphans)
-    assert(graft.SparkEntry.queries.keySet == graft.SparkEntry.oracleSql.keySet)
-  }
-
   test("expression dhash: same bands as the direct kernel, null for non-images") {
     implicit val s = spark
     val docs = spark.read.parquet(s"$sfDir/documents.parquet").limit(10)

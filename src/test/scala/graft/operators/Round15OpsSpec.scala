@@ -48,8 +48,9 @@ class Round15OpsSpec extends SparkTestBase {
   test("ivfTopK default superProbes keeps the measured macro-recall floor") {
     // the sim_ivf_hier oracle cut is a corpus-level sum >= 24 (round 17:
     // per-qid floors went to 1 with de-biased seeds — see
-    // SparkEntry.annAggContract) — this pins the measured macro floor
-    // the cut rests on at the spec SF (sums 30/33/32 across driver SFs)
+    // graft.queries.SimQueries.annAggContract) — this pins the measured
+    // macro floor the cut rests on at the spec SF (sums 30/33/32 across
+    // driver SFs)
     val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
     val qs = emb.filter(col("vec_id") < 10)
     val ivf = Similarity.ivfTopK(emb, qs, k = 5, superCells = 4)

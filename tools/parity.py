@@ -1,8 +1,10 @@
 #!/usr/bin/env python3
 """Local replica of the driver's t2 correctness gate (dev tool only — the
 Scala library has no Python dependency). Runs graft.Verify output against
-DuckDB executing SparkEntry.oracleSql on the same parquet tables, compares
-orderless with columns sorted by name.
+DuckDB executing each query's `oracleSql` (the `Query` entries of
+`SparkEntry.queries`, dumped by Verify to oracle_sql.json) on the same
+parquet tables, compares orderless with columns sorted by name. A
+SPARK_GRAFT_ONLY Verify run dumps only its selected rows' SQL.
 
 Usage: python3 tools/parity.py [sf_dir] [verify_out_dir]
 (run `sbt "runMain graft.Verify <sf_dir> <out_dir>"` first)
