@@ -20,17 +20,29 @@ object JEntry {
 }
 
 /** The jq evaluator, structured as a closure compiler: [[compile]] turns an
-  * AST into a `JDoc => Vector[JEntry]` once — node dispatch is resolved and
-  * literal subtrees are pre-evaluated at compile time, so per-document
-  * evaluation is a call through a tree of monomorphic closures (≈3-5×
-  * faster than re-walking the AST per row; JqEval caches the compiled form
-  * per executor instance).
+  * AST into a [[Interp.Pipe]], a `(JDoc, Env) => Vector[JEntry]`, once —
+  * node dispatch is resolved and literal subtrees are pre-evaluated at
+  * compile time, so per-document evaluation is a call through a tree of
+  * monomorphic closures (≈3-5× faster than re-walking the AST per row;
+  * JqEval caches the compiled form per executor instance).
   *
   * A jq expression is set-valued: one input document produces a stream of
   * output entries, which is what makes the whole pipeline a narrow per-row
   * map under Spark — no shuffle, no state. Semantics follow reference
   * src/ops.rs with the intended (not buggy) behavior where the reference
   * differs from its own tests (SURVEY.md §1.2, §2.7).
+  *
+  * Most nodes emit exactly one entry per input, so the per-row cost is
+  * dominated by how cheaply a one-entry stream is built and combined:
+  *   - every one-entry stream is built by `one` (`Vector.empty :+ e`, a
+  *     bare `Vector1`), never by the varargs `Vector(e)`;
+  *   - the stream combinators (`breakFlatMap`, `Bin`, `MkList`) take a
+  *     no-builder path when their input stream has one entry, and
+  *     build an error list only when an operand has errors;
+  *   - a combined entry's lineage envelope is the shared `JMeta.init`
+  *     constant whenever every operand carried none or that same constant
+  *     (see [[graft.json.JMeta.merge]]), so the plain jq path allocates no
+  *     envelope per combine.
   */
 object Interp {
 
@@ -57,16 +69,23 @@ object Interp {
   def compileE(ast: Ast): (JEntry, Env) => Vector[JEntry] = {
     val f = compile(ast)
     (e, env) =>
-      if (e.errors.nonEmpty) Vector(e)
+      if (e.errors.nonEmpty) one(e)
       else if (e.meta.isEmpty) f(e.doc, env)
       else f(e.doc, env).map { out =>
         if (out.meta.isEmpty) out.copy(meta = e.meta)
-        else out.copy(meta = JMeta.merge(out.meta, e.meta))
+        else {
+          val m = JMeta.merge(out.meta, e.meta)
+          if (m eq out.meta) out else out.copy(meta = m)
+        }
       }
   }
 
+  /** The one-entry stream: `Vector.empty :+ e` is a bare `Vector1`, where
+    * `Vector(e)` wraps a varargs `ArraySeq` and copies it. */
+  @inline private def one(e: JEntry): Vector[JEntry] = Vector.empty :+ e
+
   private def err(msg: String, opt: Boolean): Vector[JEntry] =
-    if (opt) Vector.empty else Vector(JEntry(JNull, Vector(msg)))
+    if (opt) Vector.empty else one(JEntry(JNull, Vector(msg)))
 
   /** jq label/break control flow: thrown by `break $l`, caught by the
     * matching `label $l` (matched by compile-time id so nested same-name
@@ -96,23 +115,25 @@ object Interp {
     * when a [[BreakSignal]] unwinds mid-stream — the eager-interpreter
     * equivalent of a lazy stream's "outputs before the break are
     * already emitted". */
-  private def breakFlatMap(xs: Vector[JEntry])(f: JEntry => Vector[JEntry]): Vector[JEntry] = {
-    val out = Vector.newBuilder[JEntry]
-    var i = 0
-    while (i < xs.length) {
-      try out ++= f(xs(i))
-      catch { case b: BreakSignal => b.prependAndRethrow(out.result()) }
-      i += 1
+  private def breakFlatMap(xs: Vector[JEntry])(f: JEntry => Vector[JEntry]): Vector[JEntry] =
+    if (xs.length == 1) f(xs(0)) // nothing precedes a break: no prefix to keep
+    else {
+      val out = Vector.newBuilder[JEntry]
+      var i = 0
+      while (i < xs.length) {
+        try out ++= f(xs(i))
+        catch { case b: BreakSignal => b.prependAndRethrow(out.result()) }
+        i += 1
+      }
+      out.result()
     }
-    out.result()
-  }
 
   def compile(ast: Ast): Pipe = ast match {
-    case Identity => (doc, env) => Vector(JEntry.ok(doc))
+    case Identity => (doc, env) => one(JEntry.ok(doc))
     case Recurse  => (doc, env) => JOps.recurse(doc).map(JEntry.ok)
 
     case Lit(v) =>
-      val out = Vector(JEntry.ok(v)) // literals are constant per input
+      val out = one(JEntry.ok(v)) // literals are constant per input
       (_, _) => out
 
     case OptMark(e) =>
@@ -121,26 +142,26 @@ object Interp {
 
     case IndexKey(key, opt) =>
       (doc, env) => JOps.getKey(doc, key) match {
-        case Some(v) => Vector(JEntry.ok(v))
+        case Some(v) => one(JEntry.ok(v))
         case None    => err(s"cannot index $key into ${doc.typeName}", opt)
       }
 
     case IndexNum(off, opt) =>
       (doc, env) => JOps.indexAt(doc, off) match {
-        case Some(v) => Vector(JEntry.ok(v))
+        case Some(v) => one(JEntry.ok(v))
         case None    => err(s"cannot index $off into ${doc.typeName}", opt)
       }
 
     case Ident(name, opt) =>
       // bare identifier ≡ field access (reference: src/ops.rs:332-341)
       (doc, env) => JOps.getKey(doc, name) match {
-        case Some(v) => Vector(JEntry.ok(v))
+        case Some(v) => one(JEntry.ok(v))
         case None    => err(s"cannot index $name into ${doc.typeName}", opt)
       }
 
     case Slice(start, end, opt) =>
       (doc, env) => JOps.slice(doc, start, end) match {
-        case Some(v) => Vector(JEntry.ok(v))
+        case Some(v) => one(JEntry.ok(v))
         case None    => err(s"cannot slice ${doc.typeName}", opt)
       }
 
@@ -176,11 +197,18 @@ object Interp {
       // collect ALL outputs of every sub-expression into one array; errored
       // entries contribute their (null) doc and their errors are merged
       // (reference: src/ops.rs:556-597).
-      val fs = items.map(compile)
-      (doc, env) => {
-        val entries = fs.flatMap(_(doc, env))
-        Vector(JEntry(JArr(entries.map(_.doc).toVector), entries.flatMap(_.errors).toVector,
-          JMeta.newMerged(entries.map(_.meta))))
+      def collect(entries: Vector[JEntry]): Vector[JEntry] = {
+        val errors =
+          if (entries.exists(_.errors.nonEmpty)) entries.flatMap(_.errors) else Vector.empty[String]
+        one(JEntry(JArr(entries.map(_.doc)), errors, JMeta.newMerged(entries.iterator.map(_.meta))))
+      }
+      items.map(compile) match {
+        case f :: Nil => (doc, env) => collect(f(doc, env))
+        case fs => (doc, env) => {
+          val entries = Vector.newBuilder[JEntry]
+          fs.foreach(f => entries ++= f(doc, env))
+          collect(entries.result())
+        }
       }
 
     case MkDict(pairs, _) =>
@@ -200,19 +228,28 @@ object Interp {
       val fl = compile(l)
       val fr = compile(r)
       val kernel = binKernel(op)
+      def combine(le: JEntry, re: JEntry): JEntry = {
+        val errors =
+          if (le.errors.isEmpty) re.errors
+          else if (re.errors.isEmpty) le.errors
+          else le.errors ++ re.errors
+        JEntry(kernel(le.doc, re.doc), errors,
+          JMeta.newMerged(le.meta, re.meta)) // reference: Entry::new_merged, ops.rs:832+
+      }
       (doc, env) => {
         val ls = fl(doc, env)
         val rs = fr(doc, env)
-        val n = math.min(ls.length, rs.length)
-        val out = Vector.newBuilder[JEntry]
-        var i = 0
-        while (i < n) {
-          val le = ls(i); val re = rs(i)
-          out += JEntry(kernel(le.doc, re.doc), le.errors ++ re.errors,
-            JMeta.newMerged(Seq(le.meta, re.meta))) // reference: Entry::new_merged, ops.rs:832+
-          i += 1
+        if (ls.length == 1 && rs.length == 1) one(combine(ls(0), rs(0)))
+        else {
+          val n = math.min(ls.length, rs.length)
+          val out = Vector.newBuilder[JEntry]
+          var i = 0
+          while (i < n) {
+            out += combine(ls(i), rs(i))
+            i += 1
+          }
+          out.result()
         }
-        out.result()
       }
 
     case Pipe(l, r) =>
@@ -258,7 +295,7 @@ object Interp {
       // unbound labels are a constant error entry, not a runtime escape
       labelScope.value.get(name) match {
         case Some(id) => (_, _) => throw new BreakSignal(id, Vector.empty)
-        case None => (_, _) => Vector(JEntry(JNull,
+        case None => (_, _) => one(JEntry(JNull,
           Vector(s"$$$name is not a label in scope")))
       }
 
@@ -272,7 +309,7 @@ object Interp {
       val fb = compile(b)
       val fh = h.map(compile)
       (doc, env) => breakFlatMap(fb(doc, env)) { e =>
-        if (e.errors.isEmpty) Vector(e)
+        if (e.errors.isEmpty) one(e)
         else fh match {
           case None     => Vector.empty
           case Some(hf) => hf(JStr(e.errors.head), env)
@@ -283,9 +320,9 @@ object Interp {
       // EXTENSION (jq if/then/elif/else/end): branch per condition output
       val fc = compile(cond)
       val ft = compile(thenB)
-      val fe = elseB.map(compile).getOrElse((d: JDoc, _: Env) => Vector(JEntry.ok(d)))
+      val fe = elseB.map(compile).getOrElse((d: JDoc, _: Env) => one(JEntry.ok(d)))
       (doc, env) => breakFlatMap(fc(doc, env)) { ce =>
-        if (ce.errors.nonEmpty) Vector(ce)
+        if (ce.errors.nonEmpty) one(ce)
         else if (JOps.truthy(ce.doc)) ft(doc, env)
         else fe(doc, env)
       }
@@ -318,8 +355,8 @@ object Interp {
     case Var(name) =>
       // EXTENSION (jq `$x`): innermost binding wins (env is a prepend list)
       (doc, env) => env.collectFirst { case (n, v) if n == name => v } match {
-        case Some(v) => Vector(JEntry.ok(v))
-        case None    => Vector(JEntry(JNull, Vector(s"$$$name is not defined")))
+        case Some(v) => one(JEntry.ok(v))
+        case None    => one(JEntry(JNull, Vector(s"$$$name is not defined")))
       }
 
     case BindAs(src, name, body) =>
@@ -328,7 +365,7 @@ object Interp {
       val fs = compile(src)
       val fb = compile(body)
       (doc, env) => breakFlatMap(fs(doc, env)) { e =>
-        if (e.errors.nonEmpty) Vector(e)
+        if (e.errors.nonEmpty) one(e)
         else fb(doc, (name, e.doc) :: env)
       }
 
@@ -345,10 +382,10 @@ object Interp {
       (doc, env) => {
         val srcs = fs(doc, env)
         srcs.find(_.errors.nonEmpty) match {
-          case Some(e) => Vector(e)
+          case Some(e) => one(e)
           case None =>
             fi(doc, env).flatMap { i0 =>
-              if (i0.errors.nonEmpty) Vector(i0)
+              if (i0.errors.nonEmpty) one(i0)
               else {
                 var acc = i0.doc
                 val outs = Vector.newBuilder[JEntry]
@@ -372,8 +409,8 @@ object Interp {
                   }
                 }
                 failed match {
-                  case Some(e) => Vector(e)
-                  case None    => if (foreach) outs.result() else Vector(JEntry.ok(acc))
+                  case Some(e) => one(e)
+                  case None    => if (foreach) outs.result() else one(JEntry.ok(acc))
                 }
               }
             }
@@ -388,14 +425,14 @@ object Interp {
       val compiled: List[Either[String, Pipe]] =
         parts.map { case Left(s) => Left(s); case Right(a) => Right(compile(a)) }
       (doc, env) => {
-        var results: Vector[JEntry] = Vector(JEntry.ok(JStr("")))
+        var results: Vector[JEntry] = one(JEntry.ok(JStr("")))
         compiled.foreach { part =>
           results = results.flatMap { cur =>
-            if (cur.errors.nonEmpty) Vector(cur)
+            if (cur.errors.nonEmpty) one(cur)
             else {
               val prefix = cur.doc.asInstanceOf[JStr].v
               part match {
-                case Left(txt) => Vector(JEntry.ok(JStr(prefix + txt)))
+                case Left(txt) => one(JEntry.ok(JStr(prefix + txt)))
                 case Right(f) => f(doc, env).map { e =>
                   if (e.errors.nonEmpty) e
                   else {
@@ -456,7 +493,7 @@ object Interp {
             }
           } else {
             (doc, env) => locate(doc, env) match {
-              case Left(m) => Vector(JEntry(JNull, Vector(m)))
+              case Left(m) => one(JEntry(JNull, Vector(m)))
               case Right(segsList) =>
                 var acc: JDoc = doc
                 var err: String = null
@@ -473,8 +510,8 @@ object Interp {
                     }
                   }
                 }
-                if (err != null) Vector(JEntry(JNull, Vector(err)))
-                else Vector(JEntry.ok(acc))
+                if (err != null) one(JEntry(JNull, Vector(err)))
+                else one(JEntry.ok(acc))
             }
           }
         case Some(segs) =>
@@ -491,15 +528,15 @@ object Interp {
           } else {
             // `.p |= f`: f runs against the CURRENT value; first output wins
             (doc, env) => JOps.getPath(doc, segs) match {
-              case Left(msg) => Vector(JEntry(JNull, Vector(msg)))
+              case Left(msg) => one(JEntry(JNull, Vector(msg)))
               case Right(cur) =>
                 fv(cur, env).headOption match {
-                  case None => Vector(JEntry(JNull, Vector("update produced no output")))
-                  case Some(ve) if ve.errors.nonEmpty => Vector(ve)
+                  case None => one(JEntry(JNull, Vector("update produced no output")))
+                  case Some(ve) if ve.errors.nonEmpty => one(ve)
                   case Some(ve) =>
                     JOps.setPath(doc, segs, ve.doc) match {
-                      case Right(out) => Vector(JEntry(out, Vector.empty, ve.meta))
-                      case Left(msg)  => Vector(JEntry(JNull, Vector(msg)))
+                      case Right(out) => one(JEntry(out, Vector.empty, ve.meta))
+                      case Left(msg)  => one(JEntry(JNull, Vector(msg)))
                     }
                 }
             }
@@ -569,7 +606,7 @@ object Interp {
     case IterValues(opt) =>
       (cur, path, _) => cur match {
         case JArr(items) =>
-          items.zipWithIndex.map { case (v, i) => Right((path :+ JLong(i.toLong), v)) }
+          Vector.tabulate(items.length)(i => Right((path :+ JLong(i.toLong), items(i))))
         case o: JObj =>
           o.props.map { case (k, v) => Right((path :+ JStr(k), v)) }
         case other =>
@@ -582,7 +619,9 @@ object Interp {
         def walk(v: JDoc, p: Vector[JDoc]): Unit = {
           out += Right((p, v))
           v match {
-            case JArr(items) => items.zipWithIndex.foreach { case (c, i) => walk(c, p :+ JLong(i.toLong)) }
+            case JArr(items) =>
+              var i = 0
+              while (i < items.length) { walk(items(i), p :+ JLong(i.toLong)); i += 1 }
             case o: JObj     => o.props.foreach { case (k, c) => walk(c, p :+ JStr(k)) }
             case _           =>
           }
@@ -772,6 +811,14 @@ object Interp {
   private def mapOk(e: JEntry)(f: JDoc => JDoc): JEntry =
     if (e.errors.nonEmpty) e else JEntry(f(e.doc), e.errors)
 
+  // `type`'s outputs, shared across rows
+  private val TypeNull = JStr("null")
+  private val TypeBoolean = JStr("boolean")
+  private val TypeNumber = JStr("number")
+  private val TypeString = JStr("string")
+  private val TypeArray = JStr("array")
+  private val TypeObject = JStr("object")
+
   private def binKernel(op: BinOp): (JDoc, JDoc) => JDoc = {
     import BinOp._
     op match {
@@ -831,7 +878,7 @@ object Interp {
             }
         }
       }
-      if (props.isEmpty) Vector(JEntry.ok(JObj.empty))
+      if (props.isEmpty) one(JEntry.ok(JObj.empty))
       else if (props.exists(_._2.isEmpty)) Vector.empty // a value pipeline produced nothing
       else {
         // cartesian product over value choices; first prop varies slowest
@@ -934,7 +981,7 @@ object Interp {
     * document program and measured to fire well before the JVM stack
     * does (~350 interpreter calls fit a default 1 MB thread stack),
     * turning runaway recursion into an error ENTRY (the errors-as-data
-    * contract) instead of a task crash; runPipe's StackOverflowError
+    * contract) instead of a task crash; JqGuard's StackOverflowError
     * backstop covers pathological non-call recursion. */
   private val callDepth = new ThreadLocal[Array[Int]] {
     override def initialValue(): Array[Int] = Array(0)
@@ -948,7 +995,7 @@ object Interp {
     * (dict fan-out order). */
   private def compileUserCall(name: String, uf: UserFunc, args: List[Ast]): Pipe = {
     if (args.length != uf.params.length)
-      return (_, _) => Vector(JEntry(JNull,
+      return (_, _) => one(JEntry(JNull,
         Vector(s"$name expects ${uf.params.length} args, got ${args.length}")))
     val filterParams = uf.params.zipWithIndex.filter(_._1.filter)
     // per-call-site closure env for wrapped filter args: armed with the
@@ -1003,7 +1050,7 @@ object Interp {
             (doc: JDoc, env: Env) => cell.pipe(doc, env)
           case None =>
             if (specDepth.value >= MaxSpecDepth)
-              return (_, _) => Vector(JEntry(JNull,
+              return (_, _) => one(JEntry(JNull,
                 Vector(s"filter-parameter specialization of $name exceeds depth " +
                   s"$MaxSpecDepth — non-convergent recursive closure")))
             val cell = new SpecCell
@@ -1024,13 +1071,13 @@ object Interp {
         case Nil => body(doc, bound)
         case (p, f) :: pt =>
           breakFlatMap(f(doc, env)) { e =>
-            if (e.errors.nonEmpty) Vector(e)
+            if (e.errors.nonEmpty) one(e)
             else go(pt, (p, e.doc) :: bound)
           }
       }
       val depth = callDepth.get()
       if (depth(0) >= MaxCallDepth)
-        Vector(JEntry(JNull, Vector(
+        one(JEntry(JNull, Vector(
           s"call depth exceeded $MaxCallDepth calling $name — runaway recursion")))
       else {
         depth(0) += 1
@@ -1054,16 +1101,18 @@ object Interp {
     val compiledArgs = args.map(compile)
 
     def inputFor(doc: JDoc, env: Env): Vector[JEntry] =
-      if (compiledArgs.isEmpty) Vector(JEntry.ok(doc)) else compiledArgs.head(doc, env)
+      if (compiledArgs.isEmpty) one(JEntry.ok(doc)) else compiledArgs.head(doc, env)
 
-    def overInput(f: JDoc => Either[String, JDoc]): Pipe =
-      (doc, env) => inputFor(doc, env).map { e =>
-        if (e.errors.nonEmpty) e
-        else f(e.doc) match {
-          case Right(v)  => JEntry.ok(v)
-          case Left(msg) => JEntry(JNull, Vector(msg))
-        }
+    def overInput(f: JDoc => Either[String, JDoc]): Pipe = {
+      def step(d: JDoc): JEntry = f(d) match {
+        case Right(v)  => JEntry.ok(v)
+        case Left(msg) => JEntry(JNull, Vector(msg))
       }
+      if (compiledArgs.isEmpty) (doc, _) => one(step(doc)) // the input is the one value
+      else (doc, env) => compiledArgs.head(doc, env).map { e =>
+        if (e.errors.nonEmpty) e else step(e.doc)
+      }
+    }
 
     /** first output of the compiled arg against `d` (builtin arg position,
       * reference: `thunk(value)?.remove(0)`). */
@@ -1073,7 +1122,7 @@ object Interp {
     }
 
     def wrongArity: Pipe =
-      (_, _) => Vector(JEntry(JNull, Vector(s"expected 1 args, got ${args.length}")))
+      (_, _) => one(JEntry(JNull, Vector(s"expected 1 args, got ${args.length}")))
 
     /** Shared preamble of every one-argument builtin: resolve the
       * argument's first output, propagate its errors, then hand
@@ -1081,15 +1130,15 @@ object Interp {
       * copies of this forget the error-propagation arm (it happened). */
     def withArgValue(fa: Pipe)(f: (JDoc, JDoc) => Vector[JEntry]): Pipe =
       (doc, env) => firstOut(fa, doc, env) match {
-        case Left(msg)                       => Vector(JEntry(JNull, Vector(msg)))
-        case Right(e) if e.errors.nonEmpty   => Vector(JEntry(JNull, e.errors))
+        case Left(msg)                       => one(JEntry(JNull, Vector(msg)))
+        case Right(e) if e.errors.nonEmpty   => one(JEntry(JNull, e.errors))
         case Right(e)                        => f(doc, e.doc)
       }
 
     name match {
       case "length" =>
         if (args.length > 1)
-          return (_, _) => Vector(JEntry(JNull, Vector("invalid number of args for length")))
+          return (_, _) => one(JEntry(JNull, Vector("invalid number of args for length")))
         overInput { d =>
           JOps.lengthOf(d) match {
             case Some(n) => Right(JLong(n))
@@ -1101,7 +1150,7 @@ object Interp {
         // `explode` is jq's name for the same codepoint-array op (the
         // reference calls it chars); both resolve here
         if (args.length > 1)
-          return (_, _) => Vector(JEntry(JNull, Vector(s"invalid number of args for $name")))
+          return (_, _) => one(JEntry(JNull, Vector(s"invalid number of args for $name")))
         overInput { d =>
           JOps.intoIter(d) match {
             case Some(vs) => Right(JArr(vs))
@@ -1111,7 +1160,7 @@ object Interp {
 
       case "keys" =>
         if (args.length > 1)
-          return (_, _) => Vector(JEntry(JNull, Vector("invalid number of args for keys")))
+          return (_, _) => one(JEntry(JNull, Vector("invalid number of args for keys")))
         overInput { d =>
           JOps.keysOf(d) match {
             case Some(v) => Right(v)
@@ -1125,12 +1174,12 @@ object Interp {
         if (args.length != 1) return wrongArity
         val fa = compiledArgs.head
         (doc, env) => firstOut(fa, doc, env) match {
-          case Left(msg) => Vector(JEntry(JNull, Vector(msg)))
+          case Left(msg) => one(JEntry(JNull, Vector(msg)))
           case Right(item) =>
             doc match {
-              case JArr(elems) => Vector(JEntry.ok(JBool(elems.exists(JOps.eqDoc(_, item.doc)))))
-              case JObj(props) => Vector(JEntry.ok(JBool(props.exists(p => JOps.eqDoc(JStr(p._1), item.doc)))))
-              case other       => Vector(JEntry(JNull, Vector(s"${other.typeName} not iterable")))
+              case JArr(elems) => one(JEntry.ok(JBool(elems.exists(JOps.eqDoc(_, item.doc)))))
+              case JObj(props) => one(JEntry.ok(JBool(props.exists(p => JOps.eqDoc(JStr(p._1), item.doc)))))
+              case other       => one(JEntry(JNull, Vector(s"${other.typeName} not iterable")))
             }
         }
 
@@ -1140,12 +1189,12 @@ object Interp {
         if (args.length != 1) return wrongArity
         val fa = compiledArgs.head
         (doc, env) => firstOut(fa, doc, env) match {
-          case Left(msg) => Vector(JEntry(JNull, Vector(msg)))
+          case Left(msg) => one(JEntry(JNull, Vector(msg)))
           case Right(container) =>
             container.doc match {
-              case JArr(elems) => Vector(JEntry.ok(JBool(elems.exists(JOps.eqDoc(_, doc)))))
-              case JObj(props) => Vector(JEntry.ok(JBool(props.exists(p => JOps.eqDoc(JStr(p._1), doc)))))
-              case other       => Vector(JEntry(JNull, Vector(s"${other.typeName} not iterable")))
+              case JArr(elems) => one(JEntry.ok(JBool(elems.exists(JOps.eqDoc(_, doc)))))
+              case JObj(props) => one(JEntry.ok(JBool(props.exists(p => JOps.eqDoc(JStr(p._1), doc)))))
+              case other       => one(JEntry(JNull, Vector(s"${other.typeName} not iterable")))
             }
         }
 
@@ -1160,23 +1209,23 @@ object Interp {
             val out = Vector.newBuilder[JDoc]
             items.foreach { item =>
               firstOut(fa, item, env) match {
-                case Left(msg)                     => return Vector(JEntry(JNull, Vector(msg)))
-                case Right(e) if e.errors.nonEmpty => return Vector(JEntry(JNull, e.errors))
+                case Left(msg)                     => return one(JEntry(JNull, Vector(msg)))
+                case Right(e) if e.errors.nonEmpty => return one(JEntry(JNull, e.errors))
                 case Right(e)                      => out += e.doc
               }
             }
-            Vector(JEntry.ok(JArr(out.result())))
+            one(JEntry.ok(JArr(out.result())))
           case JObj(props) =>
             val out = Vector.newBuilder[(String, JDoc)]
             props.foreach { case (k, v) =>
               firstOut(fa, v, env) match {
-                case Left(msg)                     => return Vector(JEntry(JNull, Vector(msg)))
-                case Right(e) if e.errors.nonEmpty => return Vector(JEntry(JNull, e.errors))
+                case Left(msg)                     => return one(JEntry(JNull, Vector(msg)))
+                case Right(e) if e.errors.nonEmpty => return one(JEntry(JNull, e.errors))
                 case Right(e)                      => out += ((k, e.doc))
               }
             }
-            Vector(JEntry.ok(JObj.fromProps(out.result())))
-          case other => Vector(JEntry(JNull, Vector(s"cannot map over ${other.typeName}")))
+            one(JEntry.ok(JObj(out.result()))) // same keys, still sorted
+          case other => one(JEntry(JNull, Vector(s"cannot map over ${other.typeName}")))
         }
         (doc, env) => evalMap(doc, env)
 
@@ -1200,14 +1249,15 @@ object Interp {
               }
               Right(JArr(out.result()))
             case JObj(props) =>
-              val out = List.newBuilder[(String, JDoc)]
+              // same keys in the same (sorted, unique) order: no re-sort
+              val out = Vector.newBuilder[(String, JDoc)]
               props.foreach { case (k, v) =>
                 wk(v, env) match {
                   case Left(m)   => return Left(m)
                   case Right(nv) => out += ((k, nv))
                 }
               }
-              Right(JObj.fromProps(out.result()))
+              Right(JObj(out.result()))
             case other => Right(other)
           }
           rebuilt.flatMap { d =>
@@ -1219,8 +1269,8 @@ object Interp {
           }
         }
         (doc, env) => wk(doc, env) match {
-          case Left(m)  => Vector(JEntry(JNull, Vector(m)))
-          case Right(d) => Vector(JEntry.ok(d))
+          case Left(m)  => one(JEntry(JNull, Vector(m)))
+          case Right(d) => one(JEntry.ok(d))
         }
 
       case "map_values" =>
@@ -1236,24 +1286,24 @@ object Interp {
             xs.foreach { x =>
               val es = fmv(x, env)
               es.headOption match {
-                case Some(e) if e.errors.nonEmpty => return Vector(JEntry(JNull, e.errors))
+                case Some(e) if e.errors.nonEmpty => return one(JEntry(JNull, e.errors))
                 case Some(e)                      => out += e.doc
                 case None                         => () // empty → drop element
               }
             }
-            Vector(JEntry.ok(JArr(out.result())))
+            one(JEntry.ok(JArr(out.result())))
           case JObj(props) =>
-            val out = List.newBuilder[(String, JDoc)]
+            val out = Vector.newBuilder[(String, JDoc)]
             props.foreach { case (k, v) =>
               val es = fmv(v, env)
               es.headOption match {
-                case Some(e) if e.errors.nonEmpty => return Vector(JEntry(JNull, e.errors))
+                case Some(e) if e.errors.nonEmpty => return one(JEntry(JNull, e.errors))
                 case Some(e)                      => out += ((k, e.doc))
                 case None                         => () // empty → drop key
               }
             }
-            Vector(JEntry.ok(JObj.fromProps(out.result())))
-          case other => Vector(JEntry(JNull, Vector(s"cannot map_values over ${other.typeName}")))
+            one(JEntry.ok(JObj(out.result()))) // a subset of sorted keys is sorted
+          case other => one(JEntry(JNull, Vector(s"cannot map_values over ${other.typeName}")))
         }
         (doc, env) => evalMapValues(doc, env)
 
@@ -1267,7 +1317,7 @@ object Interp {
         // from literal `(?<name>...)` pattern text, like capture().
         if (name == "scan" && args.length != 1) return wrongArity
         if (name == "match" && (args.length < 1 || args.length > 2))
-          return (_, _) => Vector(JEntry(JNull,
+          return (_, _) => one(JEntry(JNull,
             Vector(s"match takes 1 or 2 args, got ${args.length}")))
         val fre2 = compiledArgs.head
         val fflags = if (args.length > 1) Some(compiledArgs(1)) else None
@@ -1294,7 +1344,7 @@ object Interp {
         def runMatch(s: String, re: String, flags: String, env: Env): Vector[JEntry] =
           try {
             val (jf, gflag) = regexFlags(name, flags) match {
-              case Left(m)  => return Vector(JEntry(JNull, Vector(m)))
+              case Left(m)  => return one(JEntry(JNull, Vector(m)))
               case Right(x) => x
             }
             val global = name == "scan" || gflag
@@ -1316,12 +1366,12 @@ object Interp {
             out.result()
           } catch {
             case ex: java.util.regex.PatternSyntaxException =>
-              Vector(JEntry(JNull, Vector(s"invalid regex: ${ex.getDescription}")))
+              one(JEntry(JNull, Vector(s"invalid regex: ${ex.getDescription}")))
           }
         (doc, env) => doc match {
           case JStr(s) => firstOut(fre2, doc, env) match {
-            case Left(m)                       => Vector(JEntry(JNull, Vector(m)))
-            case Right(e) if e.errors.nonEmpty => Vector(JEntry(JNull, e.errors))
+            case Left(m)                       => one(JEntry(JNull, Vector(m)))
+            case Right(e) if e.errors.nonEmpty => one(JEntry(JNull, e.errors))
             case Right(e) => e.doc match {
               case JStr(re) =>
                 val flagsE: Either[String, String] = fflags match {
@@ -1336,13 +1386,13 @@ object Interp {
                   }
                 }
                 flagsE match {
-                  case Left(m)      => Vector(JEntry(JNull, Vector(m)))
+                  case Left(m)      => one(JEntry(JNull, Vector(m)))
                   case Right(flags) => runMatch(s, re, flags, env)
                 }
-              case other => Vector(JEntry(JNull, Vector(s"$name pattern must be a string, got ${other.typeName}")))
+              case other => one(JEntry(JNull, Vector(s"$name pattern must be a string, got ${other.typeName}")))
             }
           }
-          case other => Vector(JEntry(JNull, Vector(s"cannot $name over ${other.typeName}")))
+          case other => one(JEntry(JNull, Vector(s"cannot $name over ${other.typeName}")))
         }
 
       case "any" | "all" if args.length == 2 =>
@@ -1368,19 +1418,19 @@ object Interp {
             case _                 => None
           }
           itemsOpt match {
-            case None => Vector(JEntry(JNull, Vector(s"cannot iterate over ${doc.typeName}")))
+            case None => one(JEntry(JNull, Vector(s"cannot iterate over ${doc.typeName}")))
             case Some(items) =>
               items.foreach { item =>
                 firstOut(fa, item, env) match {
-                  case Left(msg)                     => return Vector(JEntry(JNull, Vector(msg)))
-                  case Right(e) if e.errors.nonEmpty => return Vector(JEntry(JNull, e.errors))
+                  case Left(msg)                     => return one(JEntry(JNull, Vector(msg)))
+                  case Right(e) if e.errors.nonEmpty => return one(JEntry(JNull, e.errors))
                   case Right(e) =>
                     val b = e.doc == JBool(true)
-                    if (isAny && b) return Vector(JEntry.ok(JBool(true)))
-                    if (!isAny && !b) return Vector(JEntry.ok(JBool(false)))
+                    if (isAny && b) return one(JEntry.ok(JBool(true)))
+                    if (!isAny && !b) return one(JEntry.ok(JBool(false)))
                 }
               }
-              Vector(JEntry.ok(JBool(!isAny)))
+              one(JEntry.ok(JBool(!isAny)))
           }
         }
         (doc, env) => evalAnyAll(doc, env)
@@ -1393,14 +1443,14 @@ object Interp {
       case "type" =>
         // int/float both report "number" (jq collapses numeric kinds)
         overInput { d =>
-          Right(JStr(d match {
-            case JNull => "null"
-            case _: JBool => "boolean"
-            case _: JLong | _: JBigInt | _: JDouble => "number"
-            case _: JStr => "string"
-            case _: JArr => "array"
-            case _: JObj => "object"
-          }))
+          Right(d match {
+            case JNull => TypeNull
+            case _: JBool => TypeBoolean
+            case _: JLong | _: JBigInt | _: JDouble => TypeNumber
+            case _: JStr => TypeString
+            case _: JArr => TypeArray
+            case _: JObj => TypeObject
+          })
         }
 
       case "add" =>
@@ -1501,9 +1551,9 @@ object Interp {
         val starts = name == "startswith"
         withArgValue(compiledArgs.head) {
           case (JStr(s), JStr(p)) =>
-            Vector(JEntry.ok(JBool(if (starts) s.startsWith(p) else s.endsWith(p))))
-          case (JStr(_), other) => Vector(JEntry(JNull, Vector(s"$name argument must be a string, got ${other.typeName}")))
-          case (other, _)       => Vector(JEntry(JNull, Vector(s"cannot $name on ${other.typeName}")))
+            one(JEntry.ok(JBool(if (starts) s.startsWith(p) else s.endsWith(p))))
+          case (JStr(_), other) => one(JEntry(JNull, Vector(s"$name argument must be a string, got ${other.typeName}")))
+          case (other, _)       => one(JEntry(JNull, Vector(s"cannot $name on ${other.typeName}")))
         }
 
       case "ltrimstr" | "rtrimstr" =>
@@ -1513,10 +1563,10 @@ object Interp {
         val leftTrim = name == "ltrimstr"
         withArgValue(compiledArgs.head) {
           case (JStr(s), JStr(p)) if leftTrim && s.startsWith(p) =>
-            Vector(JEntry.ok(JStr(s.substring(p.length))))
+            one(JEntry.ok(JStr(s.substring(p.length))))
           case (JStr(s), JStr(p)) if !leftTrim && s.endsWith(p) =>
-            Vector(JEntry.ok(JStr(s.substring(0, s.length - p.length))))
-          case (doc, _) => Vector(JEntry.ok(doc))
+            one(JEntry.ok(JStr(s.substring(0, s.length - p.length))))
+          case (doc, _) => one(JEntry.ok(doc))
         }
 
       case "split" if args.length == 2 =>
@@ -1530,9 +1580,9 @@ object Interp {
         if (args.length != 1) return wrongArity
         withArgValue(compiledArgs.head) {
           case (JStr(s), JStr(sep)) =>
-            Vector(JEntry.ok(JArr(JOps.splitLiteral(s, sep).map(JStr(_)))))
-          case (JStr(_), other) => Vector(JEntry(JNull, Vector(s"split separator must be a string, got ${other.typeName}")))
-          case (other, _)       => Vector(JEntry(JNull, Vector(s"cannot split ${other.typeName}")))
+            one(JEntry.ok(JArr(JOps.splitLiteral(s, sep).map(JStr(_)))))
+          case (JStr(_), other) => one(JEntry(JNull, Vector(s"split separator must be a string, got ${other.typeName}")))
+          case (other, _)       => one(JEntry(JNull, Vector(s"cannot split ${other.typeName}")))
         }
 
       case "contains" | "inside" =>
@@ -1561,9 +1611,9 @@ object Interp {
         withArgValue(compiledArgs.head) { (doc, b) =>
           val (outer, inner) = if (flipped) (b, doc) else (doc, b)
           if (!sameKind(outer, inner))
-            Vector(JEntry(JNull, Vector(
+            one(JEntry(JNull, Vector(
               s"cannot check containment of ${inner.typeName} in ${outer.typeName}")))
-          else Vector(JEntry.ok(JBool(within(outer, inner))))
+          else one(JEntry.ok(JBool(within(outer, inner))))
         }
 
       case "indices" | "index" | "rindex" =>
@@ -1597,19 +1647,20 @@ object Interp {
               case i if ys.indices.forall(j => JOps.eqDoc(xs(i + j), ys(j))) => i.toLong
             }.toVector)
           case (JArr(xs), p) =>
-            Right(xs.zipWithIndex.collect {
-              case (x, i) if JOps.eqDoc(x, p) => i.toLong
-            })
+            val out = Vector.newBuilder[Long]
+            var i = 0
+            while (i < xs.length) { if (JOps.eqDoc(xs(i), p)) out += i.toLong; i += 1 }
+            Right(out.result())
           case (other, _) => Left(s"cannot find $name in ${other.typeName}")
         }
         withArgValue(compiledArgs.head) { (doc, pat) =>
-          if (doc == JNull) Vector(JEntry.ok(JNull))
+          if (doc == JNull) one(JEntry.ok(JNull))
           else occurrences(doc, pat) match {
-            case Left(m) => Vector(JEntry(JNull, Vector(m)))
+            case Left(m) => one(JEntry(JNull, Vector(m)))
             case Right(is) => name match {
-              case "indices" => Vector(JEntry.ok(JArr(is.map(JLong(_)))))
-              case "index"   => Vector(JEntry.ok(is.headOption.map(JLong(_): JDoc).getOrElse(JNull)))
-              case _         => Vector(JEntry.ok(is.lastOption.map(JLong(_): JDoc).getOrElse(JNull)))
+              case "indices" => one(JEntry.ok(JArr(is.map(JLong(_)))))
+              case "index"   => one(JEntry.ok(is.headOption.map(JLong(_): JDoc).getOrElse(JNull)))
+              case _         => one(JEntry.ok(is.lastOption.map(JLong(_): JDoc).getOrElse(JNull)))
             }
           }
         }
@@ -1635,13 +1686,13 @@ object Interp {
         // unchanged. debug(msg) still EVALUATES msg so its errors
         // surface (a typo'd trace shouldn't vanish silently).
         if (args.length > 1) return wrongArity
-        if (args.isEmpty) (doc, _) => Vector(JEntry.ok(doc))
+        if (args.isEmpty) (doc, _) => one(JEntry.ok(doc))
         else {
           val fm = compiledArgs.head
           (doc, env) => {
             val msgErrs = fm(doc, env).filter(_.errors.nonEmpty)
-            if (msgErrs.nonEmpty) Vector(JEntry(JNull, msgErrs.head.errors))
-            else Vector(JEntry.ok(doc))
+            if (msgErrs.nonEmpty) one(JEntry(JNull, msgErrs.head.errors))
+            else one(JEntry.ok(doc))
           }
         }
 
@@ -1665,8 +1716,8 @@ object Interp {
         if (args.length > 1) return wrongArity
         if (args.isEmpty) {
           (doc, env) => JOps.indexAt(doc, if (takeFirst) 0 else -1) match {
-            case Some(v) => Vector(JEntry.ok(v))
-            case None    => Vector(JEntry(JNull, Vector(s"cannot index ${doc.typeName}")))
+            case Some(v) => one(JEntry.ok(v))
+            case None    => one(JEntry(JNull, Vector(s"cannot index ${doc.typeName}")))
           }
         } else {
           val fa = compiledArgs.head
@@ -1684,27 +1735,27 @@ object Interp {
         // deviation from jq's accidental last-output fallback
         // (jq defines nth($n; g) = last(limit($n+1; g)))
         if (args.isEmpty || args.length > 2)
-          return (_, _) => Vector(JEntry(JNull, Vector(s"nth takes 1-2 args, got ${args.length}")))
+          return (_, _) => one(JEntry(JNull, Vector(s"nth takes 1-2 args, got ${args.length}")))
         val fn = compiledArgs.head
         val fg = compiledArgs.lift(1)
         (doc, env) => firstOut(fn, doc, env) match {
-          case Left(m)                       => Vector(JEntry(JNull, Vector(m)))
-          case Right(e) if e.errors.nonEmpty => Vector(JEntry(JNull, e.errors))
+          case Left(m)                       => one(JEntry(JNull, Vector(m)))
+          case Right(e) if e.errors.nonEmpty => one(JEntry(JNull, e.errors))
           case Right(e) => e.doc match {
             case JLong(n) => fg match {
               case None =>
                 JOps.indexAt(doc, n) match {
-                  case Some(v) => Vector(JEntry.ok(v))
-                  case None    => Vector(JEntry(JNull, Vector(s"cannot index ${doc.typeName}")))
+                  case Some(v) => one(JEntry.ok(v))
+                  case None    => one(JEntry(JNull, Vector(s"cannot index ${doc.typeName}")))
                 }
               case Some(g) =>
-                if (n < 0) Vector(JEntry(JNull, Vector("nth: index must not be negative")))
+                if (n < 0) one(JEntry(JNull, Vector("nth: index must not be negative")))
                 else {
                   val out = g(doc, env)
                   if (n < out.length) Vector(out(n.toInt)) else Vector.empty
                 }
             }
-            case other => Vector(JEntry(JNull, Vector(s"nth index must be a number, got ${other.typeName}")))
+            case other => one(JEntry(JNull, Vector(s"nth index must be a number, got ${other.typeName}")))
           }
         }
 
@@ -1714,17 +1765,17 @@ object Interp {
         // Capped: a query-driven bound must be an error entry, never an
         // OOM or an uncaught exception (same policy as JOps.MaxPathPad).
         if (args.isEmpty || args.length > 3)
-          return ((_, _) => Vector(JEntry(JNull,
+          return ((_, _) => one(JEntry(JNull,
             Vector(s"range takes 1 to 3 args, got ${args.length}"))))
         val fs = compiledArgs
         val MaxRange = 1000000L
         def stepped(a: Long, b: Long, step: Long): Vector[JEntry] = {
           if (step == 0)
-            return Vector(JEntry(JNull, Vector("range step must be non-zero")))
+            return one(JEntry(JNull, Vector("range step must be non-zero")))
           // span check BEFORE materializing; BigInt dodges Long overflow
           val span = (BigInt(b) - BigInt(a)) / BigInt(step)
           if (span > MaxRange)
-            return Vector(JEntry(JNull, Vector("refusing to generate a range of more than 1000000 values")))
+            return one(JEntry(JNull, Vector("refusing to generate a range of more than 1000000 values")))
           val out = Vector.newBuilder[JEntry]
           var i = a
           while (if (step > 0) i < b else i > b) { out += JEntry.ok(JLong(i)); i += step }
@@ -1733,16 +1784,16 @@ object Interp {
         (doc, env) => {
           val bounds = fs.map(f => firstOut(f, doc, env))
           bounds.collectFirst { case Left(m) => m } match {
-            case Some(m) => Vector(JEntry(JNull, Vector(m)))
+            case Some(m) => one(JEntry(JNull, Vector(m)))
             case None =>
               val entries = bounds.map(_.toOption.get)
               entries.find(_.errors.nonEmpty) match {
-                case Some(e) => Vector(JEntry(JNull, e.errors)) // propagate, don't type-check a placeholder
+                case Some(e) => one(JEntry(JNull, e.errors)) // propagate, don't type-check a placeholder
                 case None => entries.map(_.doc) match {
                   case Seq(JLong(n))                     => stepped(0L, n, 1L)
                   case Seq(JLong(a), JLong(b))           => stepped(a, b, 1L)
                   case Seq(JLong(a), JLong(b), JLong(s)) => stepped(a, b, s)
-                  case other => Vector(JEntry(JNull,
+                  case other => one(JEntry(JNull,
                     Vector(s"range bounds must be integers, got ${other.map(_.typeName).mkString(", ")}")))
                 }
               }
@@ -1789,8 +1840,8 @@ object Interp {
         if (args.length != 1) return wrongArity
         val fa = compiledArgs.head
         (doc, env) => breakFlatMap(fa(doc, env)) { e =>
-          if (e.errors.nonEmpty) Vector(JEntry(JNull, e.errors))
-          else if (JOps.truthy(e.doc)) Vector(JEntry.ok(doc))
+          if (e.errors.nonEmpty) one(JEntry(JNull, e.errors))
+          else if (JOps.truthy(e.doc)) one(JEntry.ok(doc))
           else Vector.empty
         }
 
@@ -1801,32 +1852,32 @@ object Interp {
         val fre = compiledArgs(0)
         val ffl = compiledArgs(1)
         (doc, env) => firstOut(fre, doc, env) match {
-          case Left(m)                       => Vector(JEntry(JNull, Vector(m)))
-          case Right(e) if e.errors.nonEmpty => Vector(JEntry(JNull, e.errors))
+          case Left(m)                       => one(JEntry(JNull, Vector(m)))
+          case Right(e) if e.errors.nonEmpty => one(JEntry(JNull, e.errors))
           case Right(e) => (doc, e.doc) match {
             case (JStr(s), JStr(re)) =>
               firstOut(ffl, doc, env) match {
-                case Left(m)                        => Vector(JEntry(JNull, Vector(m)))
-                case Right(fe) if fe.errors.nonEmpty => Vector(JEntry(JNull, fe.errors))
+                case Left(m)                        => one(JEntry(JNull, Vector(m)))
+                case Right(fe) if fe.errors.nonEmpty => one(JEntry(JNull, fe.errors))
                 case Right(fe) => fe.doc match {
                   case JStr(flags) =>
                     regexFlags("test", flags) match {
-                      case Left(m) => Vector(JEntry(JNull, Vector(m)))
+                      case Left(m) => one(JEntry(JNull, Vector(m)))
                       case Right((jf, _)) => // 'g' is a no-op: test is a single find
-                        try Vector(JEntry.ok(JBool(
+                        try one(JEntry.ok(JBool(
                           java.util.regex.Pattern.compile(re, jf).matcher(s).find())))
                         catch {
                           case e: java.util.regex.PatternSyntaxException =>
-                            Vector(JEntry(JNull, Vector(s"invalid regex: ${e.getDescription}")))
+                            one(JEntry(JNull, Vector(s"invalid regex: ${e.getDescription}")))
                         }
                     }
-                  case other => Vector(JEntry(JNull,
+                  case other => one(JEntry(JNull,
                     Vector(s"test flags must be a string, got ${other.typeName}")))
                 }
               }
-            case (JStr(_), other) => Vector(JEntry(JNull,
+            case (JStr(_), other) => one(JEntry(JNull,
               Vector(s"test pattern must be a string, got ${other.typeName}")))
-            case (other, _) => Vector(JEntry(JNull,
+            case (other, _) => one(JEntry(JNull,
               Vector(s"cannot test ${other.typeName}")))
           }
         }
@@ -1850,25 +1901,25 @@ object Interp {
         (doc, env) => doc match {
           case JStr(s) =>
             preCompiled match {
-              case Some(Right(p)) => Vector(JEntry.ok(JBool(p.matcher(s).find())))
-              case Some(Left(msg)) => Vector(JEntry(JNull, Vector(msg)))
+              case Some(Right(p)) => one(JEntry.ok(JBool(p.matcher(s).find())))
+              case Some(Left(msg)) => one(JEntry(JNull, Vector(msg)))
               case None =>
                 firstOut(fa, doc, env) match {
-                  case Left(msg) => Vector(JEntry(JNull, Vector(msg)))
-                  case Right(re) if re.errors.nonEmpty => Vector(JEntry(JNull, re.errors))
+                  case Left(msg) => one(JEntry(JNull, Vector(msg)))
+                  case Right(re) if re.errors.nonEmpty => one(JEntry(JNull, re.errors))
                   case Right(re) => re.doc match {
                     case JStr(r) =>
-                      try Vector(JEntry.ok(JBool(
+                      try one(JEntry.ok(JBool(
                         java.util.regex.Pattern.compile(r).matcher(s).find())))
                       catch {
                         case e: java.util.regex.PatternSyntaxException =>
-                          Vector(JEntry(JNull, Vector(s"invalid regex: ${e.getDescription}")))
+                          one(JEntry(JNull, Vector(s"invalid regex: ${e.getDescription}")))
                       }
-                    case other => Vector(JEntry(JNull, Vector(s"test pattern must be a string, got ${other.typeName}")))
+                    case other => one(JEntry(JNull, Vector(s"test pattern must be a string, got ${other.typeName}")))
                   }
                 }
             }
-          case other => Vector(JEntry(JNull, Vector(s"cannot test ${other.typeName}")))
+          case other => one(JEntry(JNull, Vector(s"cannot test ${other.typeName}")))
         }
 
       case "del" =>
@@ -1883,19 +1934,19 @@ object Interp {
         (if (args.length == 1) flattenPath(args.head) else None) match {
           case Some(segs) =>
             (doc, env) => JOps.removePath(doc, segs) match {
-              case Right(out) => Vector(JEntry.ok(out))
-              case Left(msg)  => Vector(JEntry(JNull, Vector(msg)))
+              case Right(out) => one(JEntry.ok(out))
+              case Left(msg)  => one(JEntry(JNull, Vector(msg)))
             }
           case None =>
             val pfs = args.map(compilePath)
             (doc, env) => {
               val results = pfs.toVector.flatMap(pf => pf(doc, Vector.empty, env))
               results.collectFirst { case Left(m) => m } match {
-                case Some(m) => Vector(JEntry(JNull, Vector(m)))
+                case Some(m) => one(JEntry(JNull, Vector(m)))
                 case None =>
                   val paths = results.collect { case Right((p, _)) => JArr(p) }
                   if (paths.exists(_.items.isEmpty))
-                    Vector(JEntry(JNull, Vector("del: cannot delete the root document")))
+                    one(JEntry(JNull, Vector("del: cannot delete the root document")))
                   else {
                     val ordered = paths.distinct
                       .sortWith((a, b) => JOps.totalCmp(a, b) > 0)
@@ -1903,8 +1954,8 @@ object Interp {
                     var cur: Either[String, JDoc] = Right(doc)
                     ordered.foreach { segs => cur = cur.flatMap(d => JOps.removePath(d, segs)) }
                     cur match {
-                      case Right(out) => Vector(JEntry.ok(out))
-                      case Left(m)    => Vector(JEntry(JNull, Vector(m)))
+                      case Right(out) => one(JEntry.ok(out))
+                      case Left(m)    => one(JEntry(JNull, Vector(m)))
                     }
                   }
               }
@@ -1917,7 +1968,7 @@ object Interp {
         if (args.length != 1) return wrongArity
         val fa = compiledArgs.head
         (doc, env) => firstOut(fa, doc, env) match {
-          case Left(msg) => Vector(JEntry(JNull, Vector(msg)))
+          case Left(msg) => one(JEntry(JNull, Vector(msg)))
           case Right(sepE) => (sepE.doc, doc) match {
             case (JStr(sep), JArr(items)) =>
               val parts = items.map {
@@ -1927,11 +1978,11 @@ object Interp {
                 case other   => Left(s"cannot join ${other.typeName}")
               }
               parts.collectFirst { case Left(m) => m } match {
-                case Some(m) => Vector(JEntry(JNull, Vector(m)))
-                case None    => Vector(JEntry.ok(JStr(parts.map(_.toOption.get).mkString(sep))))
+                case Some(m) => one(JEntry(JNull, Vector(m)))
+                case None    => one(JEntry.ok(JStr(parts.map(_.toOption.get).mkString(sep))))
               }
-            case (_: JStr, other) => Vector(JEntry(JNull, Vector(s"cannot join ${other.typeName}")))
-            case (other, _)       => Vector(JEntry(JNull, Vector(s"join separator must be a string, got ${other.typeName}")))
+            case (_: JStr, other) => one(JEntry(JNull, Vector(s"cannot join ${other.typeName}")))
+            case (other, _)       => one(JEntry(JNull, Vector(s"join separator must be a string, got ${other.typeName}")))
           }
         }
 
@@ -1961,17 +2012,17 @@ object Interp {
         (doc, env) => doc match {
           case JArr(items) =>
             keyed(items, env) match {
-              case Left(errs) => Vector(JEntry(JNull, errs))
+              case Left(errs) => one(JEntry(JNull, errs))
               case Right(kv) =>
                 val sorted = kv.sorted(byKey)
                 name match {
-                  case "sort_by" => Vector(JEntry.ok(JArr(sorted.map(_._2))))
+                  case "sort_by" => one(JEntry.ok(JArr(sorted.map(_._2))))
                   case "unique_by" =>
                     val out = sorted.foldLeft(Vector.empty[(JDoc, JDoc)]) { (acc, d) =>
                       if (acc.nonEmpty && JOps.totalCmp(acc.last._1, d._1) == 0) acc
                       else acc :+ d
                     }
-                    Vector(JEntry.ok(JArr(out.map(_._2))))
+                    one(JEntry.ok(JArr(out.map(_._2))))
                   case "group_by" =>
                     val groups = Vector.newBuilder[JDoc]
                     var cur = Vector.empty[JDoc]
@@ -1984,14 +2035,14 @@ object Interp {
                       }
                     }
                     if (curKey.isDefined) groups += JArr(cur)
-                    Vector(JEntry.ok(JArr(groups.result())))
+                    one(JEntry.ok(JArr(groups.result())))
                   case "min_by" =>
-                    Vector(JEntry.ok(sorted.headOption.map(_._2).getOrElse(JNull)))
+                    one(JEntry.ok(sorted.headOption.map(_._2).getOrElse(JNull)))
                   case _ => // max_by
-                    Vector(JEntry.ok(sorted.lastOption.map(_._2).getOrElse(JNull)))
+                    one(JEntry.ok(sorted.lastOption.map(_._2).getOrElse(JNull)))
                 }
             }
-          case other => Vector(JEntry(JNull, Vector(s"cannot $name over ${other.typeName}")))
+          case other => one(JEntry(JNull, Vector(s"cannot $name over ${other.typeName}")))
         }
 
       case "flatten" =>
@@ -2014,15 +2065,15 @@ object Interp {
             }
           }
           (depthE, doc) match {
-            case (Left(errs), _) => Vector(JEntry(JNull, errs))
+            case (Left(errs), _) => one(JEntry(JNull, errs))
             case (Right(d), JArr(items)) =>
               def flat(xs: Vector[JDoc], d: Long): Vector[JDoc] =
                 xs.flatMap {
                   case JArr(inner) if d > 0 => flat(inner, d - 1)
                   case x                    => Vector(x)
                 }
-              Vector(JEntry.ok(JArr(flat(items, d))))
-            case (_, other) => Vector(JEntry(JNull, Vector(s"cannot flatten ${other.typeName}")))
+              one(JEntry.ok(JArr(flat(items, d))))
+            case (_, other) => one(JEntry(JNull, Vector(s"cannot flatten ${other.typeName}")))
           }
         }
 
@@ -2055,7 +2106,9 @@ object Interp {
               }
             }
             d match {
-              case JArr(items) => items.zipWithIndex.foreach { case (c, i) => walk(c, p :+ JLong(i.toLong)) }
+              case JArr(items) =>
+                var i = 0
+                while (i < items.length) { walk(items(i), p :+ JLong(i.toLong)); i += 1 }
               case o: JObj     => o.props.foreach { case (k, c) => walk(c, p :+ JStr(k)) }
               case _           =>
             }
@@ -2069,26 +2122,27 @@ object Interp {
         // EXTENSION (jq): one path array per sub-value, pre-order, root
         // excluded; object fields visited in document (canonical) order —
         // the same traversal `..` uses, but emitting paths not values
-        (doc, env) => inputFor(doc, env).flatMap { e =>
-          if (e.errors.nonEmpty) Vector(e)
+        (doc, env) => breakFlatMap(inputFor(doc, env)) { e =>
+          if (e.errors.nonEmpty) one(e)
           else {
-            val out = Vector.newBuilder[JDoc]
+            val out = Vector.newBuilder[JEntry]
             def walk(d: JDoc, path: Vector[JDoc]): Unit = {
               val leaf = d match {
                 case _: JArr | _: JObj => false
                 case _                 => true
               }
-              if (path.nonEmpty && (!leavesOnly || leaf)) out += JArr(path)
+              if (path.nonEmpty && (!leavesOnly || leaf)) out += JEntry.ok(JArr(path))
               d match {
                 case JArr(items) =>
-                  items.zipWithIndex.foreach { case (v, i) => walk(v, path :+ JLong(i.toLong)) }
+                  var i = 0
+                  while (i < items.length) { walk(items(i), path :+ JLong(i.toLong)); i += 1 }
                 case JObj(props) =>
                   props.foreach { case (k, v) => walk(v, path :+ JStr(k)) }
                 case _ => ()
               }
             }
             walk(e.doc, Vector.empty)
-            out.result().map(JEntry.ok)
+            out.result()
           }
         }
 
@@ -2116,9 +2170,9 @@ object Interp {
                   case _ => alive = false
                 }
               }
-              Vector(JEntry.ok(if (alive) cur else JNull))
+              one(JEntry.ok(if (alive) cur else JNull))
             case other =>
-              Vector(JEntry(JNull, Vector(s"getpath path must be an array, got ${other.typeName}")))
+              one(JEntry(JNull, Vector(s"getpath path must be an array, got ${other.typeName}")))
           }
         }
 
@@ -2133,7 +2187,7 @@ object Interp {
         // every combination — pinned simplification). A literal pattern
         // resolves once at plan time like test().
         if (args.length < 2 || args.length > 3)
-          return (_, _) => Vector(JEntry(JNull, Vector(s"$name takes 2-3 args, got ${args.length}")))
+          return (_, _) => one(JEntry(JNull, Vector(s"$name takes 2-3 args, got ${args.length}")))
         // gsub is always global; sub("…"; rep; "g") ALSO goes global — jq's
         // rule, and consistent with match/scan honoring 'g' (ADVICE r5).
         val baseGlobal = name == "gsub"
@@ -2184,7 +2238,7 @@ object Interp {
                 }
               }
             patE match {
-              case Left(m) => Vector(JEntry(JNull, Vector(m)))
+              case Left(m) => one(JEntry(JNull, Vector(m)))
               case Right((p, names, global)) =>
                 val m = p.matcher(s)
                 val sb = new java.lang.StringBuilder
@@ -2214,13 +2268,13 @@ object Interp {
                     }
                   }
                 }
-                if (err != null) Vector(JEntry(JNull, Vector(err)))
+                if (err != null) one(JEntry(JNull, Vector(err)))
                 else {
                   sb.append(s, last, s.length)
-                  Vector(JEntry.ok(JStr(sb.toString)))
+                  one(JEntry.ok(JStr(sb.toString)))
                 }
             }
-          case other => Vector(JEntry(JNull, Vector(s"cannot $name over ${other.typeName}")))
+          case other => one(JEntry(JNull, Vector(s"cannot $name over ${other.typeName}")))
         }
 
       case "splits" =>
@@ -2235,8 +2289,8 @@ object Interp {
         val ffl = compiledArgs.lift(1)
         (doc, env) => doc match {
           case JStr(s) => firstOut(fre, doc, env) match {
-            case Left(m)                       => Vector(JEntry(JNull, Vector(m)))
-            case Right(e) if e.errors.nonEmpty => Vector(JEntry(JNull, e.errors))
+            case Left(m)                       => one(JEntry(JNull, Vector(m)))
+            case Right(e) if e.errors.nonEmpty => one(JEntry(JNull, e.errors))
             case Right(e) => e.doc match {
               case JStr(re) =>
                 val flagsE: Either[Vector[String], Int] = ffl match {
@@ -2253,19 +2307,19 @@ object Interp {
                   }
                 }
                 flagsE match {
-                  case Left(errs) => Vector(JEntry(JNull, errs))
+                  case Left(errs) => one(JEntry(JNull, errs))
                   case Right(jf) =>
                     try java.util.regex.Pattern.compile(re, jf).split(s, -1).toVector
                       .map(p => JEntry.ok(JStr(p)))
                     catch {
                       case ex: java.util.regex.PatternSyntaxException =>
-                        Vector(JEntry(JNull, Vector(s"invalid regex: ${ex.getDescription}")))
+                        one(JEntry(JNull, Vector(s"invalid regex: ${ex.getDescription}")))
                     }
                 }
-              case other => Vector(JEntry(JNull, Vector(s"splits pattern must be a string, got ${other.typeName}")))
+              case other => one(JEntry(JNull, Vector(s"splits pattern must be a string, got ${other.typeName}")))
             }
           }
-          case other => Vector(JEntry(JNull, Vector(s"cannot splits ${other.typeName}")))
+          case other => one(JEntry(JNull, Vector(s"cannot splits ${other.typeName}")))
         }
 
       case "capture" =>
@@ -2282,23 +2336,23 @@ object Interp {
             val names = groupNameRe.findAllMatchIn(re).map(_.group(1)).toList
             val m = p.matcher(s)
             if (!m.find()) Vector.empty
-            else Vector(JEntry.ok(JObj.fromProps(names.map { n =>
+            else one(JEntry.ok(JObj.fromProps(names.map { n =>
               n -> Option(m.group(n)).map(JStr(_): JDoc).getOrElse(JNull)
             })))
           } catch {
             case e: java.util.regex.PatternSyntaxException =>
-              Vector(JEntry(JNull, Vector(s"invalid regex: ${e.getDescription}")))
+              one(JEntry(JNull, Vector(s"invalid regex: ${e.getDescription}")))
           }
         (doc, env) => doc match {
           case JStr(s) => firstOut(fre, doc, env) match {
-            case Left(m)                       => Vector(JEntry(JNull, Vector(m)))
-            case Right(e) if e.errors.nonEmpty => Vector(JEntry(JNull, e.errors))
+            case Left(m)                       => one(JEntry(JNull, Vector(m)))
+            case Right(e) if e.errors.nonEmpty => one(JEntry(JNull, e.errors))
             case Right(e) => e.doc match {
               case JStr(re) => run(s, re)
-              case other    => Vector(JEntry(JNull, Vector(s"capture pattern must be a string, got ${other.typeName}")))
+              case other    => one(JEntry(JNull, Vector(s"capture pattern must be a string, got ${other.typeName}")))
             }
           }
-          case other => Vector(JEntry(JNull, Vector(s"cannot capture over ${other.typeName}")))
+          case other => one(JEntry(JNull, Vector(s"cannot capture over ${other.typeName}")))
         }
 
       case "implode" =>
@@ -2325,16 +2379,16 @@ object Interp {
         // EXTENSION (jq limit(n; f) — ','-separated here): first n
         // outputs of the filter
         if (args.length != 2)
-          return (_, _) => Vector(JEntry(JNull, Vector(s"limit takes 2 args, got ${args.length}")))
+          return (_, _) => one(JEntry(JNull, Vector(s"limit takes 2 args, got ${args.length}")))
         val fn = compiledArgs(0)
         val ff = compiledArgs(1)
         (doc, env) => firstOut(fn, doc, env) match {
-          case Left(m)                       => Vector(JEntry(JNull, Vector(m)))
-          case Right(e) if e.errors.nonEmpty => Vector(JEntry(JNull, e.errors))
+          case Left(m)                       => one(JEntry(JNull, Vector(m)))
+          case Right(e) if e.errors.nonEmpty => one(JEntry(JNull, e.errors))
           case Right(e) => e.doc match {
             case JLong(n) if n >= 0 => ff(doc, env).take(math.min(n, Int.MaxValue).toInt)
             case other =>
-              Vector(JEntry(JNull, Vector(s"limit count must be a non-negative integer, got ${JsonText.canonical(other)}")))
+              one(JEntry(JNull, Vector(s"limit count must be a non-negative integer, got ${JsonText.canonical(other)}")))
           }
         }
 
@@ -2346,7 +2400,7 @@ object Interp {
         // final value. Capped like range — a divergent loop must be an
         // error entry, never a hang.
         if (args.length != 2)
-          return (_, _) => Vector(JEntry(JNull, Vector(s"$name takes 2 args, got ${args.length}")))
+          return (_, _) => one(JEntry(JNull, Vector(s"$name takes 2 args, got ${args.length}")))
         val fc = compiledArgs(0)
         val fu = compiledArgs(1)
         val isWhile = name == "while"
@@ -2359,20 +2413,20 @@ object Interp {
           var result: Vector[JEntry] = null
           while (!done) {
             if (iters > MaxIters) {
-              result = Vector(JEntry(JNull, Vector(s"$name exceeded $MaxIters iterations")))
+              result = one(JEntry(JNull, Vector(s"$name exceeded $MaxIters iterations")))
               done = true
             } else firstOut(fc, cur, env) match {
-              case Left(m)                       => result = Vector(JEntry(JNull, Vector(m))); done = true
-              case Right(e) if e.errors.nonEmpty => result = Vector(JEntry(JNull, e.errors)); done = true
+              case Left(m)                       => result = one(JEntry(JNull, Vector(m))); done = true
+              case Right(e) if e.errors.nonEmpty => result = one(JEntry(JNull, e.errors)); done = true
               case Right(e) =>
                 val condTrue = JOps.truthy(e.doc)
                 if (isWhile && !condTrue) { result = out.result(); done = true }
-                else if (!isWhile && condTrue) { result = Vector(JEntry.ok(cur)); done = true }
+                else if (!isWhile && condTrue) { result = one(JEntry.ok(cur)); done = true }
                 else {
                   if (isWhile) out += JEntry.ok(cur)
                   firstOut(fu, cur, env) match {
-                    case Left(m)                        => result = Vector(JEntry(JNull, Vector(m))); done = true
-                    case Right(u) if u.errors.nonEmpty  => result = Vector(JEntry(JNull, u.errors)); done = true
+                    case Left(m)                        => result = one(JEntry(JNull, Vector(m))); done = true
+                    case Right(u) if u.errors.nonEmpty  => result = one(JEntry(JNull, u.errors)); done = true
                     case Right(u)                       => cur = u.doc; iters += 1
                   }
                 }
@@ -2386,20 +2440,20 @@ object Interp {
         // dynamic companion of the static `.a.b = v`; missing containers
         // are created, arrays pad (JOps.setPath)
         if (args.length != 2)
-          return (_, _) => Vector(JEntry(JNull, Vector(s"setpath takes 2 args, got ${args.length}")))
+          return (_, _) => one(JEntry(JNull, Vector(s"setpath takes 2 args, got ${args.length}")))
         val fp = compiledArgs(0)
         val fv = compiledArgs(1)
         (doc, env) => (firstOut(fp, doc, env), firstOut(fv, doc, env)) match {
-          case (Left(m), _) => Vector(JEntry(JNull, Vector(m)))
-          case (_, Left(m)) => Vector(JEntry(JNull, Vector(m)))
-          case (Right(pe), _) if pe.errors.nonEmpty => Vector(JEntry(JNull, pe.errors))
-          case (_, Right(ve)) if ve.errors.nonEmpty => Vector(JEntry(JNull, ve.errors))
+          case (Left(m), _) => one(JEntry(JNull, Vector(m)))
+          case (_, Left(m)) => one(JEntry(JNull, Vector(m)))
+          case (Right(pe), _) if pe.errors.nonEmpty => one(JEntry(JNull, pe.errors))
+          case (_, Right(ve)) if ve.errors.nonEmpty => one(JEntry(JNull, ve.errors))
           case (Right(pe), Right(ve)) =>
             runtimeSegs(pe.doc) match {
-              case Left(m) => Vector(JEntry(JNull, Vector(m)))
+              case Left(m) => one(JEntry(JNull, Vector(m)))
               case Right(segs) => JOps.setPath(doc, segs, ve.doc) match {
-                case Right(out) => Vector(JEntry.ok(out))
-                case Left(m)    => Vector(JEntry(JNull, Vector(m)))
+                case Right(out) => one(JEntry.ok(out))
+                case Left(m)    => one(JEntry(JNull, Vector(m)))
               }
             }
         }
@@ -2414,7 +2468,7 @@ object Interp {
             case JArr(paths) =>
               val segsE = paths.map(runtimeSegs)
               segsE.collectFirst { case Left(m) => m } match {
-                case Some(m) => Vector(JEntry(JNull, Vector(m)))
+                case Some(m) => one(JEntry(JNull, Vector(m)))
                 case None =>
                   val ordered = paths.zip(segsE.map(_.toOption.get))
                     .sortWith((a, b) => JOps.totalCmp(a._1, b._1) > 0).map(_._2)
@@ -2423,12 +2477,12 @@ object Interp {
                     cur = cur.flatMap(d => JOps.removePath(d, segs))
                   }
                   cur match {
-                    case Right(out) => Vector(JEntry.ok(out))
-                    case Left(m)    => Vector(JEntry(JNull, Vector(m)))
+                    case Right(out) => one(JEntry.ok(out))
+                    case Left(m)    => one(JEntry(JNull, Vector(m)))
                   }
               }
             case other =>
-              Vector(JEntry(JNull, Vector(s"delpaths takes an array of paths, got ${other.typeName}")))
+              one(JEntry(JNull, Vector(s"delpaths takes an array of paths, got ${other.typeName}")))
           }
         }
 
@@ -2438,13 +2492,13 @@ object Interp {
         // non-empty container (jq's wire form for streaming/diffing).
         // Empty containers and scalars are leaves; a top-level scalar is
         // [[], value].
-        (doc, env) => inputFor(doc, env).flatMap { e =>
-          if (e.errors.nonEmpty) Vector(e)
+        (doc, env) => breakFlatMap(inputFor(doc, env)) { e =>
+          if (e.errors.nonEmpty) one(e)
           else {
             val out = Vector.newBuilder[JEntry]
             def walk(d: JDoc, path: Vector[JDoc]): Unit = {
               val children: Vector[(JDoc, JDoc)] = d match {
-                case JArr(items) => items.zipWithIndex.map { case (v, i) => (JLong(i.toLong): JDoc, v) }
+                case JArr(items) => Vector.tabulate(items.length)(i => (JLong(i.toLong): JDoc, items(i)))
                 case JObj(props) => props.toVector.map { case (k, v) => (JStr(k): JDoc, v) }
                 case _           => Vector.empty
               }
@@ -2503,17 +2557,17 @@ object Interp {
         if (args.length > 1) return wrongArity
         if (args.isEmpty) {
           (doc, _) => doc match {
-            case JStr(s) => Vector(JEntry(JNull, Vector(s)))
-            case d       => Vector(JEntry(JNull, Vector(JsonText.canonical(d))))
+            case JStr(s) => one(JEntry(JNull, Vector(s)))
+            case d       => one(JEntry(JNull, Vector(JsonText.canonical(d))))
           }
         } else {
           val fa = compiledArgs.head
           (doc, env) => firstOut(fa, doc, env) match {
-            case Left(m)                       => Vector(JEntry(JNull, Vector(m)))
-            case Right(e) if e.errors.nonEmpty => Vector(JEntry(JNull, e.errors))
+            case Left(m)                       => one(JEntry(JNull, Vector(m)))
+            case Right(e) if e.errors.nonEmpty => one(JEntry(JNull, e.errors))
             case Right(e) => e.doc match {
-              case JStr(s) => Vector(JEntry(JNull, Vector(s)))
-              case d       => Vector(JEntry(JNull, Vector(JsonText.canonical(d))))
+              case JStr(s) => one(JEntry(JNull, Vector(s)))
+              case d       => one(JEntry(JNull, Vector(JsonText.canonical(d))))
             }
           }
         }
@@ -2611,12 +2665,12 @@ object Interp {
                   i += 2
                 }
               }
-              if (err != null) Vector(JEntry(JNull, Vector(err)))
-              else Vector(JEntry.ok(JStr(sb.toString)))
+              if (err != null) one(JEntry(JNull, Vector(err)))
+              else one(JEntry.ok(JStr(sb.toString)))
             case (JLong(_), other) =>
-              Vector(JEntry(JNull, Vector(s"strftime format must be a string, got ${other.typeName}")))
+              one(JEntry(JNull, Vector(s"strftime format must be a string, got ${other.typeName}")))
             case (other, _) =>
-              Vector(JEntry(JNull, Vector(s"strftime requires a number, got ${other.typeName}")))
+              one(JEntry(JNull, Vector(s"strftime requires a number, got ${other.typeName}")))
           }
         }
 
@@ -2763,9 +2817,9 @@ object Interp {
         // EXTENSION (jq type filters): emit the input unchanged iff it has
         // the named type, else emit NOTHING — select semantics, not errors
         if (args.nonEmpty)
-          return (_, _) => Vector(JEntry(JNull, Vector(s"$name takes no arguments")))
+          return (_, _) => one(JEntry(JNull, Vector(s"$name takes no arguments")))
         (doc, env) => inputFor(doc, env).flatMap { e =>
-          if (e.errors.nonEmpty) Vector(e)
+          if (e.errors.nonEmpty) one(e)
           else {
             val keep = name match {
               case "arrays"    => e.doc.isInstanceOf[JArr]
@@ -2778,7 +2832,7 @@ object Interp {
               case "iterables" => e.doc.isInstanceOf[JArr] || e.doc.isInstanceOf[JObj]
               case _           => !(e.doc.isInstanceOf[JArr] || e.doc.isInstanceOf[JObj]) // scalars
             }
-            if (keep) Vector(e) else Vector.empty
+            if (keep) one(e) else Vector.empty
           }
         }
 
@@ -2788,7 +2842,7 @@ object Interp {
         // length), so on strings the two agree; utf8bytelength additionally
         // rejects non-strings instead of dispatching on type.
         if (args.nonEmpty)
-          return (_, _) => Vector(JEntry(JNull, Vector("utf8bytelength takes no arguments")))
+          return (_, _) => one(JEntry(JNull, Vector("utf8bytelength takes no arguments")))
         overInput {
           case JStr(s) => Right(JLong(s.getBytes(java.nio.charset.StandardCharsets.UTF_8).length.toLong))
           case other   => Left(s"utf8bytelength requires a string, got ${other.typeName}")
@@ -2799,9 +2853,9 @@ object Interp {
         // output array per combination; [] input yields one [] output, an
         // empty inner array yields no outputs
         if (args.nonEmpty)
-          return (_, _) => Vector(JEntry(JNull, Vector("combinations takes no arguments")))
+          return (_, _) => one(JEntry(JNull, Vector("combinations takes no arguments")))
         (doc, env) => inputFor(doc, env).flatMap { e =>
-          if (e.errors.nonEmpty) Vector(e)
+          if (e.errors.nonEmpty) one(e)
           else e.doc match {
             case JArr(xs) =>
               val inner = Vector.newBuilder[Vector[JDoc]]
@@ -2810,13 +2864,13 @@ object Interp {
                 case JArr(ys) => inner += ys
                 case other    => if (err == null) err = s"combinations requires arrays, got ${other.typeName}"
               }
-              if (err != null) Vector(JEntry(JNull, Vector(err)))
+              if (err != null) one(JEntry(JNull, Vector(err)))
               else inner.result()
                 .foldLeft(Vector(Vector.empty[JDoc])) { (acc, ys) =>
                   for { p <- acc; y <- ys } yield p :+ y
                 }
                 .map(c => JEntry.ok(JArr(c)))
-            case other => Vector(JEntry(JNull, Vector(s"combinations requires an array, got ${other.typeName}")))
+            case other => one(JEntry(JNull, Vector(s"combinations requires an array, got ${other.typeName}")))
           }
         }
 
@@ -2836,7 +2890,7 @@ object Interp {
         // elsewhere — conformance pins only the exact cases, oracles never
         // hash transcendental outputs
         if (args.nonEmpty)
-          return (_, _) => Vector(JEntry(JNull, Vector(s"$name takes no arguments")))
+          return (_, _) => one(JEntry(JNull, Vector(s"$name takes no arguments")))
         overInput { d =>
           val vOpt = d match {
             case JLong(v)   => Some(v.toDouble)
@@ -2870,7 +2924,7 @@ object Interp {
         // EXTENSION (jq): pow(x; y) — ','-separated args in this dialect,
         // both evaluated against the input; Float result
         if (args.length != 2)
-          return (_, _) => Vector(JEntry(JNull, Vector(s"pow takes 2 args, got ${args.length}")))
+          return (_, _) => one(JEntry(JNull, Vector(s"pow takes 2 args, got ${args.length}")))
         val fx = compiledArgs(0)
         val fy = compiledArgs(1)
         (doc, env) => {
@@ -2885,9 +2939,9 @@ object Interp {
               }
             }
           (num(fx, "base"), num(fy, "exponent")) match {
-            case (Right(x), Right(y)) => Vector(JEntry.ok(JDouble(math.pow(x, y))))
-            case (Left(errs), _)      => Vector(JEntry(JNull, errs))
-            case (_, Left(errs))      => Vector(JEntry(JNull, errs))
+            case (Right(x), Right(y)) => one(JEntry.ok(JDouble(math.pow(x, y))))
+            case (Left(errs), _)      => one(JEntry(JNull, errs))
+            case (_, Left(errs))      => one(JEntry(JNull, errs))
           }
         }
 
@@ -2900,7 +2954,7 @@ object Interp {
         // than a hung task — same policy as the user-def call-depth guard.
         if (args.isEmpty)
           (doc, env) => inputFor(doc, env).flatMap { e =>
-            if (e.errors.nonEmpty) Vector(e) else JOps.recurse(e.doc).map(JEntry.ok)
+            if (e.errors.nonEmpty) one(e) else JOps.recurse(e.doc).map(JEntry.ok)
           }
         else if (args.length <= 2) {
           val f = compiledArgs.head
@@ -2934,19 +2988,19 @@ object Interp {
             go(doc, 0)
             out.result()
           }
-        } else (_, _) => Vector(JEntry(JNull, Vector(s"recurse takes 0-2 args, got ${args.length}")))
+        } else (_, _) => one(JEntry(JNull, Vector(s"recurse takes 0-2 args, got ${args.length}")))
 
       case "truncate_stream" =>
         // EXTENSION (jq truncate_stream, ','-separated args in this
         // dialect): drop the first n path segments from each [path, value]
         // stream event; events whose path is not longer than n vanish
         if (args.length != 2)
-          return (_, _) => Vector(JEntry(JNull, Vector(s"truncate_stream takes 2 args, got ${args.length}")))
+          return (_, _) => one(JEntry(JNull, Vector(s"truncate_stream takes 2 args, got ${args.length}")))
         val fn = compiledArgs.head
         val fs = compiledArgs(1)
         (doc, env) => firstOut(fn, doc, env) match {
-          case Left(m)                       => Vector(JEntry(JNull, Vector(m)))
-          case Right(e) if e.errors.nonEmpty => Vector(JEntry(JNull, e.errors))
+          case Left(m)                       => one(JEntry(JNull, Vector(m)))
+          case Right(e) if e.errors.nonEmpty => one(JEntry(JNull, e.errors))
           case Right(e) => e.doc match {
             case JLong(n) if n >= 0 =>
               fs(doc, env).flatMap { ev =>
@@ -2956,16 +3010,16 @@ object Interp {
                     items.head match {
                       case JArr(path) =>
                         if (path.length > n)
-                          Vector(JEntry.ok(JArr(JArr(path.drop(n.toInt)) +: items.tail)))
+                          one(JEntry.ok(JArr(JArr(path.drop(n.toInt)) +: items.tail)))
                         else Vector.empty
-                      case other => Vector(JEntry(JNull,
+                      case other => one(JEntry(JNull,
                         Vector(s"truncate_stream: event path must be an array, got ${other.typeName}")))
                     }
-                  case other => Vector(JEntry(JNull,
+                  case other => one(JEntry(JNull,
                     Vector(s"truncate_stream: events must be [path, value] arrays, got ${other.typeName}")))
                 }
               }
-            case other => Vector(JEntry(JNull,
+            case other => one(JEntry(JNull,
               Vector(s"truncate_stream depth must be a non-negative number, got ${JsonText.canonical(other)}")))
           }
         }
@@ -2980,7 +3034,7 @@ object Interp {
         (doc, env) => {
           val results = pf(doc, Vector.empty, env)
           results.collectFirst { case Left(m) => m } match {
-            case Some(m) => Vector(JEntry(JNull, Vector(m)))
+            case Some(m) => one(JEntry(JNull, Vector(m)))
             case None =>
               var acc: JDoc = JNull
               var err: String = null
@@ -2995,13 +3049,13 @@ object Interp {
                   }
                 case _ =>
               }
-              if (err != null) Vector(JEntry(JNull, Vector(err)))
-              else Vector(JEntry.ok(acc))
+              if (err != null) one(JEntry(JNull, Vector(err)))
+              else one(JEntry.ok(acc))
           }
         }
 
       case other =>
-        (_, _) => Vector(JEntry(JNull, Vector(s"unknown builtin $other")))
+        (_, _) => one(JEntry(JNull, Vector(s"unknown builtin $other")))
     }
   }
 }

@@ -2,7 +2,7 @@ package graft.jq
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodeGenerator, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.GenericArrayData
@@ -35,23 +35,40 @@ import graft.json._
   */
 /** The ONE throwable→error-entry ladder every jq expression shares
   * (extracted in round 10 — it had grown a second copy): malformed JSON
-  * text becomes the errors-as-data record; a StackOverflowError is the
-  * backstop behind Interp's call-depth guard (pathological non-call
-  * recursion becomes an error entry at this unwound boundary, not a dead
-  * executor task); an escaped BreakSignal — unreachable by construction,
-  * unbound breaks are compile-time error entries and bound ones are
-  * caught by their label — yields its pre-break outputs as the best
-  * answer. */
+  * text becomes the errors-as-data record; a value nested too deeply to
+  * render ([[JsonText.JsonDepthException]]) becomes an error entry; a
+  * StackOverflowError is the backstop behind Interp's call-depth guard
+  * (pathological non-call recursion becomes an error entry at this unwound
+  * boundary, not a dead executor task); an escaped BreakSignal —
+  * unreachable by construction, unbound breaks are compile-time error
+  * entries and bound ones are caught by their label — yields its pre-break
+  * outputs as the best answer.
+  *
+  * Every sink renders under the ladder too ([[render]]): a fatal error
+  * thrown while a sink turns entries into Spark values would escape the
+  * task, and Spark's uncaught-exception handler ends the whole JVM. */
 private[jq] object JqGuard {
+  private def failed(msg: String): Vector[JEntry] = Vector(JEntry(JNull, Vector(msg)))
+
+  private val failure: PartialFunction[Throwable, Vector[JEntry]] = {
+    case e: JsonText.JsonParseException => failed(s"invalid json: ${e.getMessage}")
+    case e: JsonText.JsonDepthException => failed(e.getMessage)
+    case _: StackOverflowError => failed("jq evaluation exceeded the stack — runaway recursion")
+  }
+
   def entries(thunk: => Vector[JEntry]): Vector[JEntry] =
     try thunk
     catch {
-      case e: JsonText.JsonParseException =>
-        Vector(JEntry(JNull, Vector(s"invalid json: ${e.getMessage}")))
-      case _: StackOverflowError =>
-        Vector(JEntry(JNull, Vector("jq evaluation exceeded the stack — runaway recursion")))
       case b: Interp.BreakSignal => b.partial
+      case t if failure.isDefinedAt(t) => failure(t)
     }
+
+  /** A sink's value from the guarded entries; when rendering them fails,
+    * the value of the one error entry instead (its null doc always
+    * renders). */
+  def render[A](thunk: => Vector[JEntry])(f: Vector[JEntry] => A): A =
+    try f(entries(thunk))
+    catch failure.andThen(f)
 }
 
 trait JqNativeInput extends UnaryExpression {
@@ -60,10 +77,12 @@ trait JqNativeInput extends UnaryExpression {
     * is a monomorphic converter + compiled-pipeline call. */
   @transient protected final lazy val inputConv: JqInput.Conv = JqInput.converter(child.dataType)
 
-  /** Run `compiled` over one input value; malformed JSON *text* becomes the
-    * errors-as-data record, never an exception (reference: src/entry.rs:5-10). */
-  protected final def runPipe(compiled: Interp.Pipe, input: Any): Vector[JEntry] =
-    JqGuard.entries(compiled(inputConv(input), Nil))
+  /** Run `compiled` over one input value and render the entries with `f`;
+    * malformed JSON *text* becomes the errors-as-data record, never an
+    * exception (reference: src/entry.rs:5-10), and so does an output too
+    * deep to render. */
+  protected final def renderPipe[A](compiled: Interp.Pipe, input: Any)(f: Vector[JEntry] => A): A =
+    JqGuard.render(compiled(inputConv(input), Nil))(f)
 
   override def checkInputDataTypes(): TypeCheckResult =
     if (JqInput.supports(child.dataType)) TypeCheckResult.TypeCheckSuccess
@@ -106,9 +125,17 @@ object JqEval {
       StructField("errors", ArrayType(StringType, containsNull = false), nullable = false))),
     containsNull = false)
 
-  /** Typed extraction of one successful entry's doc (shared by JqExtract /
-    * JqMulti): null when the value doesn't fit the requested kind. */
-  private[jq] def extract(kind: String, doc: JDoc): Any = (kind, doc) match {
+  /** The typed value of the first successful entry (shared by JqExtract /
+    * JqMulti): null when there is none. */
+  private[jq] def firstValue(kind: String)(entries: Vector[JEntry]): Any =
+    entries.find(_.errors.isEmpty) match {
+      case None     => null
+      case Some(en) => extract(kind, en.doc)
+    }
+
+  /** Typed extraction of one successful entry's doc: null when the value
+    * doesn't fit the requested kind. */
+  private def extract(kind: String, doc: JDoc): Any = (kind, doc) match {
     case ("long", JLong(v))     => v
     case ("double", JLong(v))   => v.toDouble
     case ("double", JDouble(v)) => v
@@ -125,14 +152,14 @@ case class JqEval(ast: Ast, queryText: String, child: Expression) extends JqNati
   @transient private lazy val compiled = Interp.compile(ast)
   override def dataType: DataType = JqEval.outputType
   override def prettyName: String = "jq_eval"
-  override protected def nullSafeEval(input: Any): Any = {
-    val entries = runPipe(compiled, input)
-    new GenericArrayData(entries.map { en =>
-      InternalRow(
-        UTF8String.fromString(JsonText.canonical(en.doc)),
-        new GenericArrayData(en.errors.map(UTF8String.fromString).toArray[Any]))
-    }.toArray[Any])
-  }
+  override protected def nullSafeEval(input: Any): Any =
+    renderPipe(compiled, input) { entries =>
+      new GenericArrayData(entries.map { en =>
+        InternalRow(
+          UTF8String.fromString(JsonText.canonical(en.doc)),
+          new GenericArrayData(en.errors.map(UTF8String.fromString).toArray[Any]))
+      }.toArray[Any])
+    }
   override protected def withNewChildInternal(newChild: Expression): JqEval =
     copy(child = newChild)
 }
@@ -144,12 +171,12 @@ case class JqDocs(ast: Ast, queryText: String, child: Expression) extends JqNati
   @transient private lazy val compiled = Interp.compile(ast)
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
   override def prettyName: String = "jq_docs"
-  override protected def nullSafeEval(input: Any): Any = {
-    val entries = runPipe(compiled, input)
-    new GenericArrayData(entries.collect {
-      case en if en.errors.isEmpty => UTF8String.fromString(JsonText.canonical(en.doc))
-    }.toArray[Any])
-  }
+  override protected def nullSafeEval(input: Any): Any =
+    renderPipe(compiled, input) { entries =>
+      new GenericArrayData(entries.collect {
+        case en if en.errors.isEmpty => UTF8String.fromString(JsonText.canonical(en.doc))
+      }.toArray[Any])
+    }
   override protected def withNewChildInternal(newChild: Expression): JqDocs =
     copy(child = newChild)
 }
@@ -168,13 +195,8 @@ case class JqExtract(ast: Ast, queryText: String, kind: String, child: Expressio
   override def nullable: Boolean = true
   override def prettyName: String = s"jq_$kind"
   @transient private lazy val compiled = Interp.compile(ast)
-  override protected def nullSafeEval(input: Any): Any = {
-    val entries = runPipe(compiled, input)
-    entries.find(_.errors.isEmpty) match {
-      case None     => null
-      case Some(en) => JqEval.extract(kind, en.doc)
-    }
-  }
+  override protected def nullSafeEval(input: Any): Any =
+    renderPipe(compiled, input)(JqEval.firstValue(kind))
   override protected def withNewChildInternal(newChild: Expression): JqExtract =
     copy(child = newChild)
 }
@@ -228,13 +250,14 @@ case class JqEvalMeta(ast: Ast, queryText: String,
           case o: JObj => Some(graft.json.JMeta.normalize(o))
           case _       => None
         } catch { case _: JsonText.JsonParseException => None }
-    val entries = JqGuard.entries(compiled(JEntry(inputConv(j), Vector.empty, metaObj), Nil))
-    new GenericArrayData(entries.collect {
-      case en if en.errors.isEmpty =>
-        InternalRow(
-          UTF8String.fromString(JsonText.canonical(en.doc)),
-          UTF8String.fromString(en.meta.map(JsonText.canonical).getOrElse("null")))
-    }.toArray[Any])
+    JqGuard.render(compiled(JEntry(inputConv(j), Vector.empty, metaObj), Nil)) { entries =>
+      new GenericArrayData(entries.collect {
+        case en if en.errors.isEmpty =>
+          InternalRow(
+            UTF8String.fromString(JsonText.canonical(en.doc)),
+            UTF8String.fromString(en.meta.map(JsonText.canonical).getOrElse("null")))
+      }.toArray[Any])
+    }
   }
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val ref = ctx.addReferenceObj("jqMetaExpr", this, classOf[JqEvalMeta].getName)
@@ -275,7 +298,10 @@ object JqEvalMeta {
   * kinds follow [[JqExtract]] (string | long | double | bool). */
 case class JqMulti(fields: Seq[(String, Ast, String)], queryText: String, child: Expression)
     extends JqNativeInput {
-  @transient private lazy val compiled = fields.map { case (_, ast, _) => Interp.compile(ast) }
+  @transient private lazy val compiled: Array[Interp.Pipe] =
+    fields.map { case (_, ast, _) => Interp.compile(ast) }.toArray
+  @transient private lazy val firstValues: Array[Vector[JEntry] => Any] =
+    fields.map { case (_, _, kind) => JqEval.firstValue(kind) _ }.toArray
   override def dataType: DataType = StructType(fields.map { case (name, _, kind) =>
     StructField(name, kind match {
       case "long"   => LongType
@@ -293,15 +319,13 @@ case class JqMulti(fields: Seq[(String, Ast, String)], queryText: String, child:
     val values = new Array[Any](fields.length)
     if (doc != null) {
       var i = 0
-      while (i < fields.length) {
-        values(i) = compiled(i)(doc, Nil).find(_.errors.isEmpty) match {
-          case None     => null
-          case Some(en) => JqEval.extract(fields(i)._3, en.doc)
-        }
+      while (i < values.length) {
+        // each field evaluates and renders under the guard on its own
+        values(i) = JqGuard.render(compiled(i)(doc, Nil))(firstValues(i))
         i += 1
       }
     }
-    InternalRow(values: _*)
+    new GenericInternalRow(values) // wraps the array; `InternalRow(values: _*)` copies it
   }
   override protected def withNewChildInternal(newChild: Expression): JqMulti =
     copy(child = newChild)

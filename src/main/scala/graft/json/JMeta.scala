@@ -60,9 +60,20 @@ object JMeta {
       JObj.fromProps(m.props.map { case (k, v) => if (k == key) (k, merged) else (k, v) })
   }
 
-  /** `Meta::merge` (meta.rs:64-75). */
+  /** `Meta::merge` (meta.rs:64-75). Merging the shared [[init]] appends
+    * an empty array to each canonical key, which is exactly [[normalize]]:
+    * that case returns `self` itself when it already holds all three keys
+    * (and the shared `Some(init)` for None), so a combine over envelope-less
+    * operands allocates nothing. */
   def merge(self: Option[JObj], other: Option[JObj]): Option[JObj] = other match {
     case None => self
+    case Some(o) if o eq init =>
+      self match {
+        case None => emptyMerged
+        case Some(s) =>
+          val n = normalize(s)
+          if (n eq s) self else Some(n)
+      }
     case Some(o) =>
       val base = self.getOrElse(JObj.empty)
       Some(Keys.foldLeft(base) { (acc, k) =>
@@ -74,10 +85,16 @@ object JMeta {
   }
 
   /** `Entry::new_merged`'s meta fold (entry.rs:22-29): start from
-    * `Meta::new()`, merge each operand in order — always Some. The
-    * all-None case (every row of a plain Catalyst jq projection) returns
-    * a shared constant: zero allocation per row. */
-  def newMerged(metas: Seq[Option[JObj]]): Option[JObj] =
-    if (metas.forall(_.isEmpty)) emptyMerged
-    else metas.foldLeft(Option(init))(merge)
+    * `Meta::new()`, merge each operand in order — always Some. The fold
+    * starts from the shared `Some(init)`, and [[merge]] keeps it for a None
+    * or `init` operand, so when every operand is one of those (every row of
+    * a plain Catalyst jq projection, where combined entries carry `init`
+    * into later combines) the result is that shared constant and no
+    * envelope is allocated. */
+  def newMerged(metas: IterableOnce[Option[JObj]]): Option[JObj] =
+    metas.iterator.foldLeft(emptyMerged)(merge)
+
+  /** [[newMerged]] of two operands (binary operators), without a sequence. */
+  def newMerged(a: Option[JObj], b: Option[JObj]): Option[JObj] =
+    merge(merge(emptyMerged, a), b)
 }

@@ -18,6 +18,13 @@ object JsonText {
   final case class JsonParseException(msg: String, offset: Int)
       extends Exception(s"$msg at offset $offset")
 
+  /** A value nested deeper than [[MaxDepth]] has no canonical text: the
+    * parser would reject it, and the recursive writer would overflow the
+    * stack. Only computed values get here (`reduce range(n) as $x ([]; [.])`),
+    * never parsed ones. */
+  final case class JsonDepthException(limit: Int)
+      extends Exception(s"cannot render a value nested deeper than $limit")
+
   /** Parse one JSON value; trailing content is an error. */
   def parse(text: String): JDoc = {
     val p = new Parser(text)
@@ -254,14 +261,19 @@ object JsonText {
 
   // ---------------------------------------------------------------- output
 
-  /** Canonical text form (sorted keys come free from the JObj invariant). */
+  /** Canonical text form (sorted keys come free from the JObj invariant).
+    * Throws [[JsonDepthException]] past [[MaxDepth]], the parser's own
+    * bound, so every canonical text re-parses. */
   def canonical(d: JDoc): String = {
     val sb = new java.lang.StringBuilder
     write(sb, d)
     sb.toString
   }
 
-  def write(sb: java.lang.StringBuilder, d: JDoc): Unit = d match {
+  def write(sb: java.lang.StringBuilder, d: JDoc): Unit = write(sb, d, 0)
+
+  /** `depth` counts the containers around `d`. */
+  private def write(sb: java.lang.StringBuilder, d: JDoc, depth: Int): Unit = d match {
     case JNull         => sb.append("null")
     case JBool(true)   => sb.append("true")
     case JBool(false)  => sb.append("false")
@@ -270,22 +282,24 @@ object JsonText {
     case JDouble(v)    => sb.append(rustSci(v))
     case JStr(s)       => writeString(sb, s)
     case JArr(items)   =>
+      if (depth >= MaxDepth) throw JsonDepthException(MaxDepth)
       sb.append('[')
       var i = 0
       while (i < items.length) {
         if (i > 0) sb.append(',')
-        write(sb, items(i))
+        write(sb, items(i), depth + 1)
         i += 1
       }
       sb.append(']')
     case JObj(props)   =>
+      if (depth >= MaxDepth) throw JsonDepthException(MaxDepth)
       sb.append('{')
       var i = 0
       while (i < props.length) {
         if (i > 0) sb.append(',')
         writeString(sb, props(i)._1)
         sb.append(':')
-        write(sb, props(i)._2)
+        write(sb, props(i)._2, depth + 1)
         i += 1
       }
       sb.append('}')

@@ -219,4 +219,33 @@ class JqSparkSpec extends SparkTestBase {
       }
     }
   }
+
+  test("an output nested past the render bound is an error entry or NULL, and the session survives") {
+    // a computed value 100000 arrays deep: rendering it recursed past the
+    // stack outside the jq guard, and the fatal error ended the JVM
+    val docs = spark.range(0, 4, 1, 2).selectExpr("format_string('{\"i\":%d}', id) as doc")
+    val deep = "reduce range(100000) as $x ([]; [.])"
+    val rows = docs.select(
+      col("doc"),
+      Jq.string(deep, col("doc")).as("s"),
+      Jq.query(deep, col("doc")).as("q"),
+      Jq.docs(deep, col("doc")).as("d"),
+      Jq.evalWithMeta(deep, col("doc"), lit("""{"sources":["s"]}""")).as("em"),
+      Jq.multi(Seq(("t", s"$deep | tostring", "string"), ("i", ".i", "long")), col("doc")).as("m"))
+      .collect()
+    assert(rows.length == 4)
+    rows.foreach { r =>
+      assert(r.isNullAt(1), "typed extraction of an unrenderable output is NULL")
+      val q = r.getSeq[org.apache.spark.sql.Row](2)
+      assert(q.length == 1 && q.head.getString(0) == "null")
+      assert(q.head.getSeq[String](1) == Seq(s"cannot render a value nested deeper than ${JsonText.MaxDepth}"))
+      assert(r.getSeq[String](3).isEmpty && r.getSeq[org.apache.spark.sql.Row](4).isEmpty)
+      val m = r.getStruct(5)
+      assert(m.isNullAt(0), "a multi field whose program fails to render is NULL")
+      assert(m.getLong(1) == JsonText.parse(r.getString(0)).asInstanceOf[JObj].get("i").collect {
+        case JLong(v) => v }.get, "the other fields of the row still evaluate")
+    }
+    // the session is still alive and answers a query
+    assert(spark.range(10).selectExpr("sum(id)").head().getLong(0) == 45L)
+  }
 }

@@ -58,6 +58,52 @@ class JMetaSpec extends AnyFunSuite {
       """{"domains":[],"keys":[],"sources":["f.jsons"]}"""))
   }
 
+  /** `Meta::merge` as the reference folds it, with no shortcut for `init`:
+    * the oracle the shared-constant paths must agree with. */
+  private def generalMerge(self: Option[JObj], other: Option[JObj]): Option[JObj] = other match {
+    case None => self
+    case Some(o) =>
+      Some(JMeta.Keys.foldLeft(self.getOrElse(JObj.empty)) { (acc, k) =>
+        o.get(k).fold(acc)(v => JMeta.append(acc, k, v))
+      })
+  }
+
+  private val seeded = JMeta.normalize(JsonText.parse(
+    """{"sources":["f.jsons"],"domains":["web"]}""").asInstanceOf[JObj])
+  private val noKeys = JsonText.parse("""{"domains":["d"],"sources":["s"]}""").asInstanceOf[JObj]
+  private val mistyped = JsonText.parse(
+    """{"domains":"abc","keys":{"x":1},"sources":["q"],"extra":1}""").asInstanceOf[JObj]
+
+  test("merging the shared init equals the general fold for every envelope shape") {
+    for (x <- Seq(None, Some(JMeta.init), Some(seeded), Some(noKeys), Some(mistyped))) {
+      val fast = JMeta.merge(x, Some(JMeta.init))
+      assert(fast == generalMerge(x, Some(JMeta.init)), s"merge($x, Some(init))")
+      assert(fast.map(JsonText.canonical) == generalMerge(x, Some(JMeta.init)).map(JsonText.canonical))
+    }
+    // an envelope that already holds the three keys comes back as itself
+    val s = Some(seeded)
+    assert(JMeta.merge(s, Some(JMeta.init)) eq s)
+    assert(JMeta.merge(None, Some(JMeta.init)).get eq JMeta.init)
+    // the general path is untouched: merging a seeded envelope into init
+    assert(JMeta.merge(Some(JMeta.init), Some(seeded)) == generalMerge(Some(JMeta.init), Some(seeded)))
+  }
+
+  test("newMerged over any mix of None and init is the shared init, by reference") {
+    val mixes: Seq[Seq[Option[JObj]]] = Seq(
+      Nil, Seq(None), Seq(Some(JMeta.init)), Seq(None, None), Seq(None, Some(JMeta.init)),
+      Seq(Some(JMeta.init), None), Seq(Some(JMeta.init), Some(JMeta.init)),
+      Seq(None, Some(JMeta.init), None, Some(JMeta.init)))
+    for (m <- mixes) {
+      assert(JMeta.newMerged(m).get eq JMeta.init, s"newMerged($m)")
+      if (m.length == 2) assert(JMeta.newMerged(m(0), m(1)).get eq JMeta.init, s"newMerged(${m(0)}, ${m(1)})")
+    }
+    // any other operand still folds from Meta::new()
+    val expected = Seq(Some(seeded), None, Some(noKeys)).foldLeft(Option(JMeta.init))(generalMerge)
+    assert(JMeta.newMerged(Seq(Some(seeded), None, Some(noKeys))) == expected)
+    assert(JMeta.newMerged(Some(seeded), Some(mistyped)) ==
+      Seq(Some(seeded), Some(mistyped)).foldLeft(Option(JMeta.init))(generalMerge))
+  }
+
   test("navigation clones the input entry's meta onto its outputs (ops.rs:432)") {
     val m = JMeta.append(JMeta.init, "sources", JArr(Vector(JStr("f.jsons"))))
     val doc = JsonText.parse("""{"a": {"b": 7}}""")

@@ -89,4 +89,18 @@ class JsonCodecSpec extends AnyFunSuite {
     val ok = "[" * JsonText.MaxDepth + "]" * JsonText.MaxDepth
     assert(JsonText.canonical(JsonText.parse(ok)).startsWith("[["))
   }
+
+  test("rendering stops at the parser's depth bound with a typed error, so every canonical text re-parses") {
+    def nest(n: Int, wrap: JDoc => JDoc): JDoc = (1 to n).foldLeft(JLong(1): JDoc)((d, _) => wrap(d))
+    val arr: JDoc => JDoc = d => JArr(Vector(d))
+    val obj: JDoc => JDoc = d => JObj(Vector("k" -> d))
+    for (wrap <- Seq(arr, obj)) {
+      val atLimit = JsonText.canonical(nest(JsonText.MaxDepth, wrap))
+      assert(JsonText.canonical(JsonText.parse(atLimit)) == atLimit)
+      val e = intercept[JsonText.JsonDepthException](JsonText.canonical(nest(JsonText.MaxDepth + 1, wrap)))
+      assert(e.limit == JsonText.MaxDepth)
+      // far past the bound: still the typed error, not a StackOverflowError
+      intercept[JsonText.JsonDepthException](JsonText.canonical(nest(100000, wrap)))
+    }
+  }
 }
