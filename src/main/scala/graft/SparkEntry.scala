@@ -4,14 +4,50 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.queries.{CurationQueries, DedupQueries, GraphQueries, JqQueries,
-  MmQueries, RelationalQueries, SimQueries, StreamQueries, TextQueries}
+  MmQueries, RelationalQueries, ScaleQueries, SimQueries, StreamQueries, TextQueries}
 
-/** One declared query: `run(spark, sfDir)` builds its Spark plan over the
+/** One declared query. `run(spark, sfDir)` builds its Spark plan over the
   * sf dir's parquet tables, and `oracleSql` is the equivalent DuckDB SQL
   * the driver hash-compares its rows against on the same tables (views
   * named after them). Column names are aliased identically on both sides —
-  * the driver sorts columns by name before hashing. */
-final case class Query(name: String, run: (SparkSession, String) => DataFrame, oracleSql: String)
+  * the driver sorts columns by name before hashing.
+  *
+  * A row without an oracle is Scale-only: a tuned-parameter variant that
+  * exists to be measured on `graft.Scale`'s self-scaled corpora, so it
+  * carries a `scaled(spark, dir, factor)` run, and Bench, Verify and
+  * PlanDump never see it. An oracle row may carry one too, when Scale
+  * should time its tuning rule rather than its pinned oracle parameters.
+  * `role` marks a row kept as a measured reference for a twin row. */
+final case class Query(name: String, run: (SparkSession, String) => DataFrame,
+                       oracleSql: Option[String],
+                       scaled: Option[(SparkSession, String, Int) => DataFrame] = None,
+                       role: Option[Role] = None) {
+
+  /** The plan Scale times on the ×`factor` corpus under `dir`. */
+  def runAt(spark: SparkSession, dir: String, factor: Int): DataFrame =
+    scaled.fold(run(spark, dir))(_(spark, dir, factor))
+}
+
+object Query {
+  /** An oracle row: its plan and its DuckDB SQL. */
+  def apply(name: String, run: (SparkSession, String) => DataFrame, oracleSql: String): Query =
+    Query(name, run, Some(oracleSql))
+}
+
+/** Why a row is kept next to a production-shaped `twin` on the same
+  * corpus: its scale tail is the measured justification for the twin,
+  * not a configuration to deploy. Scale writes `kind` and `twin` into its
+  * artifact, so a sweep self-adjudicates without a cross-reference into
+  * prose. */
+sealed abstract class Role(val kind: String) { def twin: String }
+
+object Role {
+  /** The operator's uncapped or flat form, super-linear by construction. */
+  final case class Strawman(twin: String) extends Role("strawman-quadratic")
+  /** A manual-rule reference curve, kept to measure the shipped automatic
+    * rule against. */
+  final case class RuleTest(twin: String) extends Role("rule-test")
+}
 
 /** Driver contract — see SURVEY.md §7.
   *
@@ -187,44 +223,51 @@ object SparkEntry {
       operators.Dedup.nearDupClusters(ids, "doc_id", s.own(pairs))
     }
 
-  /** Every declared query by name, built once. */
+  /** Every declared query by name, built once: the oracle rows and the
+    * Scale-only rows. */
   lazy val queries: Map[String, Query] = registry(
     JqQueries.all ++ RelationalQueries.all ++ CurationQueries.all ++
       DedupQueries.all ++ SimQueries.all ++ TextQueries.all ++
-      MmQueries.all ++ StreamQueries.all ++ GraphQueries.all)
+      MmQueries.all ++ StreamQueries.all ++ GraphQueries.all ++ ScaleQueries.all)
 
-  /** Keys `qs` by name. A repeated name throws: a map would silently keep
-    * the last one and shadow a green oracle row. */
+  /** Keys `qs` by name after three checks. A repeated name throws: a map
+    * would silently keep the last one and shadow a green oracle row. A
+    * role whose twin is not a row throws: the tag would annotate nothing.
+    * A row with neither an oracle nor a scaled run throws: only Scale-only
+    * rows may lack an oracle. */
   def registry(qs: Seq[Query]): Map[String, Query] = {
     val dups = qs.groupBy(_.name).collect { case (n, g) if g.size > 1 => n }
     require(dups.isEmpty, s"duplicate query names: ${dups.toSeq.sorted.mkString(",")}")
-    qs.map(q => q.name -> q).toMap
+    val byName = qs.map(q => q.name -> q).toMap
+    val orphans = qs.flatMap(q => q.role.filterNot(r => byName.contains(r.twin))
+      .map(r => s"${q.name} -> ${r.twin}"))
+    require(orphans.isEmpty, s"role twins that are not queries: ${orphans.sorted.mkString(",")}")
+    val mute = qs.filter(q => q.oracleSql.isEmpty && q.scaled.isEmpty).map(_.name)
+    require(mute.isEmpty, s"queries with neither an oracle nor a scaled run: ${mute.sorted.mkString(",")}")
+    byName
   }
 
-  /** The queries a driver main runs, sorted by name: every query, or only
-    * those named in `only`, the comma list of `SPARK_GRAFT_ONLY`. A name
-    * that is not declared throws, so a typo cannot silently run nothing. */
+  /** The registered rows named in `list`, a comma list, sorted by name. A
+    * name that is not registered throws, so a typo cannot silently run
+    * nothing. */
+  def named(list: String): Seq[Query] = {
+    val names = list.split(",").map(_.trim).filter(_.nonEmpty).distinct.sorted.toSeq
+    val unknown = names.filterNot(queries.contains)
+    require(names.nonEmpty && unknown.isEmpty,
+      s"unknown queries: ${unknown.mkString(",")} (SPARK_GRAFT_ONLY=$list)")
+    names.map(queries)
+  }
+
+  /** The oracle rows Bench, Verify and PlanDump run, sorted by name: all
+    * of them, or those named in `only`, the comma list of
+    * `SPARK_GRAFT_ONLY`. Naming a Scale-only row throws as well. */
   def selected(only: Option[String]): Seq[Query] = only match {
-    case None => queries.values.toSeq.sortBy(_.name)
+    case None => queries.values.filter(_.oracleSql.isDefined).toSeq.sortBy(_.name)
     case Some(list) =>
-      val names = list.split(",").map(_.trim).filter(_.nonEmpty).distinct.sorted.toSeq
-      val unknown = names.filterNot(queries.contains)
-      require(names.nonEmpty && unknown.isEmpty,
-        s"unknown queries: ${unknown.mkString(",")} (SPARK_GRAFT_ONLY=$list)")
-      names.map(queries)
+      val qs = named(list)
+      val scaleOnly = qs.filter(_.oracleSql.isEmpty).map(_.name)
+      require(scaleOnly.isEmpty,
+        s"Scale-only queries (no oracle; graft.Scale runs them): ${scaleOnly.mkString(",")}")
+      qs
   }
-
-  /** The session every driver main (Bench, Verify, PlanDump, Scale) runs
-    * in: `local[cpus]` with as many shuffle partitions, AQE on, graft's
-    * extensions, and the Spark 4.1 union fence. */
-  def driverSession(cpus: Int): SparkSession.Builder = SparkSession.builder()
-    .master(s"local[$cpus]")
-    .config("spark.sql.shuffle.partitions", cpus.toString)
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.adaptive.enabled", "true")
-    .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.extensions", "graft.GraftExtensions")
-    .config("spark.sql.unionOutputPartitioning", "false") // Spark 4.1 union claim/exec mismatch; see Checkpoints.scala
 }

@@ -5,12 +5,10 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
     // dev loop: SPARK_GRAFT_ONLY=q1,q2 restricts the dump and the oracle
-    // file to those rows (driver sets no filter and gets every query)
-    val selected = SparkEntry.selected(sys.env.get("SPARK_GRAFT_ONLY"))
-    val spark = SparkEntry.driverSession(cpus).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // file to those rows (driver sets no filter and gets every oracle row)
+    val selected = SparkEntry.selected(Harness.only)
+    val spark = Harness.session()
     new java.io.File(outDir).mkdirs()
     selected.foreach { query =>
       try query.run(spark, sfDir).coalesce(1).write.mode("overwrite")
@@ -32,7 +30,8 @@ object Verify {
       case c => c.toString
     } + "\""
     val json = selected
-      .map(query => s"${q(query.name)}: ${q(query.oracleSql)}").mkString("{", ",", "}")
+      .flatMap(query => query.oracleSql.map(sql => s"${q(query.name)}: ${q(sql)}"))
+      .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }

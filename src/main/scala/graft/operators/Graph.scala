@@ -153,14 +153,4 @@ object Graph {
           .groupBy(col("node")).agg(count(lit(1)).as("triangles")))
     }
   }
-
-  /** In/out degree per node — the cheap centrality for cut-offs. */
-  def degrees(edges: DataFrame): DataFrame = {
-    val out = edges.groupBy(col("src").as("node")).agg(count(lit(1)).as("out_deg"))
-    val in = edges.groupBy(col("dst").as("node")).agg(count(lit(1)).as("in_deg"))
-    out.join(in, Seq("node"), "full")
-      .select(col("node"),
-        coalesce(col("out_deg"), lit(0L)).as("out_deg"),
-        coalesce(col("in_deg"), lit(0L)).as("in_deg"))
-  }
 }

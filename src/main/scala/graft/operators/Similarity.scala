@@ -55,8 +55,6 @@ object Similarity {
   def dot(a: Column, b: Column): Column =
     ColumnBridge.column(VecDot(ColumnBridge.expression(a), ColumnBridge.expression(b)))
 
-  def l2norm(a: Column): Column = sqrt(dot(a, a))
-
   /** Cosine similarity, single fused pass over both vectors. */
   def cosine(a: Column, b: Column): Column =
     ColumnBridge.column(CosineSim(ColumnBridge.expression(a), ColumnBridge.expression(b)))
@@ -880,7 +878,8 @@ object Similarity {
     * counts: a uniform sample of K=16 leaves clusters uncovered at
     * non-trivial rates (coupon-collector odds), and the driver fixtures'
     * recall@5 floor collapsed 2–4 → 1 across the whole IVF/PQ family
-    * (sf0.01/sf0.1, AnnRecallProbe), with hier-P1 even losing self-hits.
+    * (sf0.01/sf0.1; SCALING.md "ANN recall per driver SF"), with hier-P1
+    * even losing self-hits.
     *
     * So the shipped rule does both: collect a hash-ordered POOL of
     * `poolFactor·k` vectors (uniform over the corpus, id-independent,

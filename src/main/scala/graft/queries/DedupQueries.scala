@@ -3,6 +3,7 @@ package queries
 
 import org.apache.spark.sql.functions._
 
+import graft.Role.Strawman
 import graft.SparkEntry.{nearDupClustersOf, SemCentroids, table}
 
 /** Deduplication: exact, near-duplicate, substring and semantic
@@ -174,7 +175,8 @@ object DedupQueries {
                len(list_intersect(a.shingles, b.shingles))::DOUBLE
                  / len(list_distinct(a.shingles || b.shingles)) AS j
         FROM sh a JOIN sh b ON a.doc_id < b.doc_id) t
-      WHERE j >= 0.8"""),
+      WHERE j >= 0.8""")
+      .copy(role = Some(Strawman("dedup_simhash_capped"))),
 
     // the valve-engaged production configuration of the row above
     // (round 15): simhashNearDups was the LAST quadratic candidate
@@ -236,7 +238,8 @@ object DedupQueries {
         FROM isl GROUP BY d1, d2, diff, i)
       SELECT d1, d2, s1 AS start1, s1 - diff AS start2,
              CAST(e1 - s1 + 40 AS BIGINT) AS run_len
-      FROM runs WHERE e1 - s1 + 40 >= 80"""),
+      FROM runs WHERE e1 - s1 + 40 >= 80""")
+      .copy(role = Some(Strawman("dedup_substring_capped"))),
 
     // the CAPPED substring-dedup configuration (round 14) — the mega-gram
     // valve a 100-TB run has engaged (boilerplate grams at B corpus-wide
@@ -349,7 +352,8 @@ object DedupQueries {
       """
       SELECT a.vec_id AS id_a, b.vec_id AS id_b
       FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
-      WHERE list_cosine_similarity(a.embedding, b.embedding) >= 0.45"""),
+      WHERE list_cosine_similarity(a.embedding, b.embedding) >= 0.45""")
+      .copy(role = Some(Strawman("dedup_embedding_lsh_derived"))),
 
     // SemDeDup (Abbas et al. 2023): cluster-scoped embedding dedup —
     // nearest-centroid assignment (literal centroids, zero-exchange
@@ -381,7 +385,8 @@ object DedupQueries {
         FROM a x JOIN a y ON x.cluster = y.cluster AND x.vec_id < y.vec_id
         WHERE CAST(round(1e6 * list_cosine_similarity(x.v, y.v)) AS BIGINT) >= 450000)
       SELECT vec_id, cluster FROM a WHERE vec_id NOT IN (SELECT vec_id FROM d)"""
-    }),
+    })
+      .copy(role = Some(Strawman("dedup_semantic_hier"))),
 
     // SemDeDup through the HIERARCHICAL assignment kernel (round 14) —
     // the headline production configuration (C ∝ n with S = ⌈√C⌉) under
@@ -453,7 +458,8 @@ object DedupQueries {
         FROM a x JOIN a y ON x.cluster = y.cluster AND x.vec_id < y.vec_id
         WHERE CAST(round(1e6 * list_cosine_similarity(x.v, y.v)) AS BIGINT) >= 450000)
       SELECT vec_id, cluster FROM a WHERE vec_id NOT IN (SELECT vec_id FROM d)"""
-    }),
+    })
+      .copy(scaled = Some(ScaleQueries.semanticHier)),
 
     // subquadratic SRP-LSH near-dup path (high-similarity regime): the
     // corpus is doubled with byte-identical copies; identical vectors hash
@@ -469,7 +475,8 @@ object DedupQueries {
       operators.Similarity.nearDupPairsLSH(emb.unionByName(copies), threshold = 0.9,
         dim = 64, planesPerTable = 8)
     }),
-      "SELECT vec_id AS id_a, vec_id + 1000000 AS id_b FROM embeddings"),
+      "SELECT vec_id AS id_a, vec_id + 1000000 AS id_b FROM embeddings")
+      .copy(role = Some(Strawman("dedup_embedding_lsh_capped"))),
 
     // the same pair operator with the OCCUPANCY-DERIVED signature width
     // (round 14): planesPerTable = 0 sizes H from one corpus count — the

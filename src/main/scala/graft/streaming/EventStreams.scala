@@ -22,16 +22,6 @@ object EventStreams {
       ((tsNanos - pmod(tsNanos, lit(1000L))).cast("decimal(20,0)") / lit(1000))
         .cast("long"))
 
-  /** Read the events directory as an unbounded stream (file source).
-    * `ts` is normalized to BIGINT epoch-nanos whatever the file's
-    * physical timestamp type (see [[graft.SparkEntry.normalizeTs]]) so
-    * the stream and batch paths see one schema. */
-  def streamFromDir(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    val schema = spark.read.parquet(dir).schema
-    graft.SparkEntry.normalizeTs(spark.readStream.schema(schema).parquet(dir))
-  }
-
   /** Tumbling-window counts/sums per event type with an event-time
     * watermark. Works identically on batch input (watermark is a no-op
     * there). Partial aggregation + one shuffle on (window, type). */

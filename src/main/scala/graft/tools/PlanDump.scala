@@ -8,11 +8,8 @@ package graft.tools
   * main renders each declared query's physical plan in FORMATTED mode
   * and writes one file per query.
   *
-  * Env contract (same knobs and session as Bench/Verify):
-  *   SPARK_GRAFT_SF_DIR     data dir (default /root/testdata/sf0.1)
-  *   SPARK_GRAFT_CPUS       local[N] core count (default 4)
-  *   SPARK_GRAFT_ONLY       comma list of query names (default: all;
-  *                          an undeclared name fails the run)
+  * Env contract: the [[graft.Harness]] knobs and session Bench and Verify
+  * use (SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS, SPARK_GRAFT_ONLY), plus
   *   SPARK_GRAFT_PLANS_OUT  output dir (default plans/dump)
   *   SPARK_GRAFT_PLANS_SUFFIX  filename suffix, e.g. "_before" (default "")
   *
@@ -22,13 +19,11 @@ package graft.tools
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val sfDir = graft.Harness.sfDir
     val outDir = sys.env.getOrElse("SPARK_GRAFT_PLANS_OUT", "plans/dump")
     val suffix = sys.env.getOrElse("SPARK_GRAFT_PLANS_SUFFIX", "")
-    val selected = graft.SparkEntry.selected(sys.env.get("SPARK_GRAFT_ONLY"))
-    val spark = graft.SparkEntry.driverSession(cpus).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val selected = graft.SparkEntry.selected(graft.Harness.only)
+    val spark = graft.Harness.session()
     val dir = new java.io.File(outDir)
     dir.mkdirs()
     selected.foreach { query =>
@@ -57,8 +52,7 @@ object PlanDump {
           System.err.println(s"[plandump] $name FAILED: ${e.getMessage}")
       } finally {
         graft.operators.Checkpoints.planTap = null
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
+        graft.Harness.resetStorage(spark)
       }
     }
     spark.stop()

@@ -173,7 +173,7 @@ class BenchReprobeSpec extends AnyFunSuite {
   test("summaryLine: a 214-entry run ends on a compact line under 1500 chars") {
     // the driver keeps only the last 2000 chars of stdout; the full
     // 214-entry map (~6 KB) overflowed it and parsed as null for rounds
-    val results = SparkEntry.queries.keys.toSeq.sorted.zipWithIndex.map {
+    val results = SparkEntry.selected(None).map(_.name).zipWithIndex.map {
       case (n, i) => n -> (if (i % 50 == 7) -1.0 else 100.0 + i / 7.0)
     }
     assert(results.size == 214)

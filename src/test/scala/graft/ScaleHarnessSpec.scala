@@ -184,10 +184,10 @@ class ScaleHarnessSpec extends SparkTestBase {
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(_.toSeq.map(String.valueOf).mkString("|")).sorted.toSeq
     val editOracle = SparkEntry.queries("dedup_edit").run(spark, dir)
-    val editTuned = Scale.scaledQueries("dedup_edit_btuned")(spark, dir, 1)
+    val editTuned = SparkEntry.queries("dedup_edit_btuned").runAt(spark, dir, 1)
     assert(rows(editTuned) == rows(editOracle))
     val lshOracle = SparkEntry.queries("dedup_embedding_lsh").run(spark, dir)
-    val lshTuned = Scale.scaledQueries("dedup_embedding_lsh_htuned")(spark, dir, 1)
+    val lshTuned = SparkEntry.queries("dedup_embedding_lsh_htuned").runAt(spark, dir, 1)
     // the tuned variant offsets its duplicate copies differently (1e7 vs
     // 1e6) — normalize before comparing the pair sets
     def pairs(df: org.apache.spark.sql.DataFrame, off: Long) =
@@ -197,8 +197,8 @@ class ScaleHarnessSpec extends SparkTestBase {
 
   test("dedup_semantic_ctuned: deterministic, keeps one representative per dropped pair") {
     val dir = sfDir
-    val a = Scale.scaledQueries("dedup_semantic_ctuned")(spark, dir, 2)
-    val b = Scale.scaledQueries("dedup_semantic_ctuned")(spark, dir, 2)
+    val a = SparkEntry.queries("dedup_semantic_ctuned").runAt(spark, dir, 2)
+    val b = SparkEntry.queries("dedup_semantic_ctuned").runAt(spark, dir, 2)
     val ra = a.collect().map(_.getLong(0)).sorted.toSeq
     assert(ra == b.collect().map(_.getLong(0)).sorted.toSeq,
       "hash-sampled centroids must make the tuned variant run-deterministic")
@@ -274,19 +274,6 @@ class ScaleHarnessSpec extends SparkTestBase {
     assert(repDeg == baseDeg, "per-replica degree histogram must equal the base")
   }
 
-  test("queryRoles: every tagged row and its twin resolve to runnable queries") {
-    // the sweep artifact's self-adjudication tags (round 15, judge ask 4)
-    // must never name a query that no longer exists — a renamed twin
-    // would silently orphan the tag
-    val known = graft.SparkEntry.queries.keySet ++ graft.Scale.scaledQueries.keySet
-    graft.Scale.queryRoles.foreach { case (name, (role, twin)) =>
-      assert(known.contains(name), s"tagged row $name is not a known query")
-      assert(known.contains(twin), s"$name's twin $twin is not a known query")
-      assert(Set("strawman-quadratic", "rule-test").contains(role),
-        s"$name carries an undocumented role $role")
-    }
-  }
-
   test("pointJson: band fields only for >=2 runs, err field carries an escaped cause") {
     // a clean min-of-1 point is just the number
     assert(Scale.pointJson(512, 86.555, None, None) == """"x512":86.555""")
@@ -304,5 +291,19 @@ class ScaleHarnessSpec extends SparkTestBase {
     // the emitted fragment must parse as JSON when wrapped
     val parsed = graft.json.JsonText.parse(s"{$j}")
     assert(parsed.isInstanceOf[graft.json.JDoc])
+  }
+
+  test("pointJson and harness numbers stay valid JSON on a comma-decimal default locale") {
+    // the default-locale f-interpolator writes 86,555 under Locale.GERMANY,
+    // which made every number of the Scale artifact break its JSON line
+    val saved = java.util.Locale.getDefault
+    try {
+      java.util.Locale.setDefault(java.util.Locale.GERMANY)
+      val j = Scale.pointJson(256, 17.946, Some((1.06, 2)), None)
+      assert(j == """"x256":17.946,"x256_band":1.060,"x256_runs":2""")
+      assert(graft.json.JsonText.parse(s"{$j}").isInstanceOf[graft.json.JDoc])
+      assert(Harness.num(86.555) == "86.555")
+      assert(graft.json.JsonText.parse(s"""{"x":${Harness.num(86.555)}}""").isInstanceOf[graft.json.JDoc])
+    } finally java.util.Locale.setDefault(saved)
   }
 }
