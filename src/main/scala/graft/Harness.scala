@@ -89,23 +89,31 @@ object Harness {
     * time nothing but the scan): one untimed warm-up when `warmup`, then
     * `runs` timed runs, then one more while their max/min exceeds `varBar`,
     * up to `maxRuns`. A throw ends the measurement with -1 and its cause;
-    * `label` names the query on stderr. The session's storage is reset in
-    * `finally`, once after the last run, so a query that leaves blocks
-    * behind never taxes the queries after it. */
+    * `label` names the query on stderr. Each run's frame is the caller's
+    * under the `Checkpoints.scope` contract, so it is released once the
+    * clock stops; the session's storage is then reset in `finally`, once
+    * after the last run, so a query that leaves blocks behind never taxes
+    * the queries after it, and only such strays count as leaked. */
   def minOfN(spark: SparkSession, label: String, runs: Int, warmup: Boolean,
              varBar: Double = Double.PositiveInfinity, maxRuns: Int = 0)(
       query: => DataFrame): Timing = {
-    def sink(): Unit = query.write.format("noop").mode("overwrite").save()
+    def sink(): DataFrame = {
+      val df = query
+      df.write.format("noop").mode("overwrite").save()
+      df
+    }
     def timed(): Double = {
       val t0 = System.nanoTime()
-      sink()
-      (System.nanoTime() - t0) / 1e9
+      val df = sink()
+      val sec = (System.nanoTime() - t0) / 1e9
+      operators.Checkpoints.release(df)
+      sec
     }
     var leaked = 0L
     val (ts, err) =
       try {
         require(runs >= 1, s"$runs timed runs")
-        if (warmup) sink()
+        if (warmup) operators.Checkpoints.release(sink())
         val ts = scala.collection.mutable.ArrayBuffer.fill(runs)(timed())
         while (ts.size < maxRuns && ts.max / ts.min > varBar) {
           System.err.println(s"$label band ${num(ts.max / ts.min, 2)} > ${num(varBar, 2)}" +

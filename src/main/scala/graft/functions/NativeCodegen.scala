@@ -10,10 +10,10 @@ import org.apache.spark.sql.catalyst.expressions.codegen.Block._
   *
   * `CodegenFallback` would not kill the surrounding stage in Spark 4, but it
   * re-enters the interpreted path per row and boxes at every kernel boundary.
-  * The right shape — same as the fused jq pipeline ([[graft.jq.JqNativeInput]])
-  * — is one virtual call through a `ctx.addReferenceObj` handle: the
-  * surrounding project/filter fuses into a single generated function and the
-  * kernel stays a monomorphic JIT-compiled method.
+  * The right shape is one virtual call through a `ctx.addReferenceObj`
+  * handle: the surrounding project/filter fuses into a single generated
+  * function and the kernel stays a monomorphic JIT-compiled method. The
+  * fused jq pipeline ([[graft.jq.JqNativeInput]]) uses the same template.
   */
 trait NativeUnaryCodegen extends UnaryExpression {
 

@@ -2,7 +2,7 @@ package graft.jq
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodeGenerator, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.GenericArrayData
@@ -28,7 +28,7 @@ import graft.json._
   *      ([[JqInput]]): STRING parses as JSON text (unchanged), but STRUCT /
   *      ARRAY / MAP / VARIANT / scalars convert structurally with no
   *      serialize→re-parse round trip;
-  *   2. [[doGenCode]] emits a direct call on the expression instance (via
+  *   2. generated code makes a direct call on the expression instance (via
   *      `ctx.addReferenceObj`), so jq projections participate in
   *      whole-stage codegen instead of forcing the interpreted fallback path
   *      for the entire stage.
@@ -71,7 +71,13 @@ private[jq] object JqGuard {
     catch failure.andThen(f)
 }
 
-trait JqNativeInput extends UnaryExpression {
+/** A jq expression over one input column. The pipeline itself is a
+  * compiled closure tree (driver-compiled, executor-cached), so it joins
+  * whole-stage codegen through [[graft.functions.NativeUnaryCodegen]]'s
+  * one virtual call: the surrounding project/filter/explode fuses into a
+  * single generated function instead of falling back to interpreted rows
+  * for the whole stage. */
+trait JqNativeInput extends graft.functions.NativeUnaryCodegen {
 
   /** Resolved once on the driver from the child's type — the per-row path
     * is a monomorphic converter + compiled-pipeline call. */
@@ -88,32 +94,6 @@ trait JqNativeInput extends UnaryExpression {
     if (JqInput.supports(child.dataType)) TypeCheckResult.TypeCheckSuccess
     else TypeCheckResult.TypeCheckFailure(
       s"$prettyName cannot run over input type ${child.dataType.catalogString}")
-
-  /** Public bridge for generated code (nullSafeEval is protected). */
-  def evalInput(v: Any): Any = nullSafeEval(v)
-
-  /** Stay inside whole-stage codegen: the jq pipeline itself is a compiled
-    * closure tree (driver-compiled, executor-cached), so the right codegen
-    * shape is one virtual call through a reference object — the surrounding
-    * project/filter/explode then fuses into a single generated function
-    * instead of falling back to interpreted rows for the whole stage. */
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("jqExpr", this, classOf[JqNativeInput].getName)
-    val childGen = child.genCode(ctx)
-    val javaType = CodeGenerator.javaType(dataType)
-    val boxed = CodeGenerator.boxedType(dataType)
-    val obj = ctx.freshName("jqOut")
-    ev.copy(code =
-      code"""
-         |${childGen.code}
-         |boolean ${ev.isNull} = ${childGen.isNull};
-         |$javaType ${ev.value} = ${CodeGenerator.defaultValue(dataType)};
-         |if (!${ev.isNull}) {
-         |  Object $obj = $ref.evalInput(${childGen.value});
-         |  if ($obj == null) { ${ev.isNull} = true; } else { ${ev.value} = ($boxed) $obj; }
-         |}
-       """.stripMargin)
-  }
 }
 
 object JqEval {

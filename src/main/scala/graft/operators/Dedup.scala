@@ -132,23 +132,19 @@ object Dedup {
 
   /** Candidate pairs from LSH banding: docs sharing any band bucket.
     * Shuffles on (band, bucket slice); self-join inside buckets.
-    *
-    * `maxBucketSize` (0 = off) is the web-scale safety valve: a bucket
-    * with B members generates B² candidate pairs, and ultra-common
-    * buckets (boilerplate shingles hashing together across unrelated
-    * docs) are both quadratic AND useless as discriminators — the
-    * standard practice is to skip them. CAVEAT, documented loudly:
-    * byte-identical mega-clusters collide in EVERY band, so a capped run
-    * assumes exact duplicates were removed first ([[exactDedup]] — the
-    * pipeline order dedup_keep uses is exact-then-near). Genuine near
-    * (not identical) pairs keep their other bands' chances. The size
-    * filter is one partial-aggregated count on the bucket key the join
-    * shuffles on anyway. */
+    * `maxBucketSize` (0 = off) is the [[Blocking]] B² valve; band slices
+    * are a corpus-sized key space, so it semi-joins. */
   def lshCandidates(docs: DataFrame, id: String, shingleCol: String,
                     maxBucketSize: Int = 0): DataFrame =
     lshCandidatesFromSig(
       docs.select(col(id), minhashSignature(col(shingleCol)).as("sig")),
       id, maxBucketSize)
+
+  /** One row per LSH band of a signature: `struct(band, key)`, the band
+    * index and its [[MinhashRows]]-long slice of `sig` (explode it). */
+  private def minhashBands(sig: Column): Column =
+    explode(transform(sequence(lit(0), lit(MinhashBands - 1)), b =>
+      struct(b.as("band"), slice(sig, b * MinhashRows + 1, lit(MinhashRows)).as("key"))))
 
   /** The banding + bucket self-join over an existing (id, sig) frame —
     * split out (round 17) so [[minhashNearDups]] can band a MATERIALIZED
@@ -157,29 +153,9 @@ object Dedup {
     * exchange/stage reuse fires across the aliased sides at runtime). */
   private[graft] def lshCandidatesFromSig(sig: DataFrame, id: String,
                     maxBucketSize: Int = 0): DataFrame = {
-    val bucketed = sig.select(
-      col(id),
-      explode(transform(sequence(lit(0), lit(MinhashBands - 1)), b =>
-        struct(b.as("band"), slice(col("sig"), b * MinhashRows + 1, lit(MinhashRows)).as("key")))).as("bb"))
-      .select(col(id), col("bb"))
-    // merge hint, round 13: the bucket-count side is one row per DISTINCT
-    // band bucket — corpus-sized (unlike dhash's 16-bit band space, which
-    // is structurally bounded and broadcast-safe) — and Catalyst's
-    // post-aggregation estimate would happily broadcast it (the exact
-    // OOM duplicateRuns measured at a ×32 corpus on its gram counts).
-    // Sort-merge spills both sides at any size.
-    val pruned =
-      if (maxBucketSize <= 0) bucketed
-      else bucketed.join(
-        bucketed.groupBy(col("bb")).count()
-          .filter(col("count") <= maxBucketSize).select(col("bb"))
-          .hint("merge"),
-        Seq("bb"), "left_semi")
-    val a = pruned.select(col(id).as("id_a"), col("bb").as("bb_a"))
-    val b = pruned.select(col(id).as("id_b"), col("bb").as("bb_b"))
-    a.hint("shuffle_hash") // hash beats two sorts of the exploded band rows
-      .join(b, col("bb_a") === col("bb_b") && col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b")).distinct()
+    val bucketed = sig.select(col(id), minhashBands(col("sig")).as("bb"))
+    Blocking.selfJoin(
+      Blocking.valve(bucketed, "bb", Blocking.Unbounded, maxBucketSize), id, "bb")
   }
 
   /** MinHash+LSH near-duplicate pairs with exact-jaccard verification:
@@ -293,14 +269,9 @@ object Dedup {
     * joins re-attach shingles. */
   def incrementalNearDups(corpus: DataFrame, delta: DataFrame, id: String,
                           text: Column, n: Int, threshold: Double): DataFrame = {
-    def banded(docs: DataFrame, outId: String): DataFrame = {
-      val sig = docs.select(col(id).as(outId),
-        minhashSignature(wordShingles(text, n)).as("sig"))
-      sig.select(col(outId),
-        explode(transform(sequence(lit(0), lit(MinhashBands - 1)), b =>
-          struct(b.as("band"),
-            slice(col("sig"), b * MinhashRows + 1, lit(MinhashRows)).as("key")))).as("bb"))
-    }
+    def banded(docs: DataFrame, outId: String): DataFrame =
+      docs.select(col(id).as(outId), minhashSignature(wordShingles(text, n)).as("sig"))
+        .select(col(outId), minhashBands(col("sig")).as("bb"))
     val cands = banded(delta, "id_d").hint("shuffle_hash")
       .join(banded(corpus, "id_c"), "bb")
       .select(col("id_d"), col("id_c")).distinct()
@@ -381,53 +352,18 @@ object Dedup {
       yield (i, j)).zipWithIndex.map { case ((i, j), p) =>
         lit(p.toLong * 4096L) + block(i) * 64L + block(j)
       }
-    val blocked0 = sketched.select(
+    val blocked = sketched.select(
       col(id), col("simhash"), explode(array(pairKeys: _*)).as("bb"))
-    // `maxBucketSize` (0 = off) is the same B² valve as [[lshCandidates]]
-    // / Multimodal.dhashNearDups: at a FIXED key space (91 block pairs ×
-    // ≤2^12 value combos = ≤372,736 buckets, structurally bounded like
-    // dhash's band space) per-bucket occupancy grows linearly with the
-    // corpus, so bucket-collision candidates grow quadratically. Dropping
-    // saturated buckets bounds the self-join; the pigeonhole guarantee
-    // weakens ONLY for pairs whose every intact block pair sits in a
-    // dropped bucket — boilerplate-shaped mass, the same caveat (and the
-    // same run-exact-dedup-first order) lshCandidates documents.
-    //
-    // Round 16 (r15 finding #3): the bounded key space means the
-    // OVER-limit bucket set is bounded driver metadata at any corpus
-    // size — the IVF-centroid class — so instead of left-semi-joining
-    // the corpus-sized explode against the under-limit bucket list, one
-    // partial-agg'd probe job collects the hot keys. When the cap is a
-    // measured no-op (every driver SF today) the hot set is empty and
-    // the main plan is EXACTLY the uncapped plan — the capped oracle
-    // row pays one narrow probe, not a second corpus-wide join. When
-    // engaged, an InSet filter (O(1)/row, codegen'd, ≤372,736 longs ≈
-    // 3 MB task metadata) replaces the join: one exchange fewer on the
-    // n×91-row explode. Since round 18 the probe (and both self-join
-    // sides) read the materialized (id, simhash) sketch, so it no longer
-    // re-evaluates the shingle→simhash kernel — its cost is one narrow
-    // aggregation over 16-byte rows.
-    val blocked =
-      if (maxBucketSize <= 0) blocked0
-      else {
-        val hot = blocked0.groupBy(col("bb")).count()
-          .filter(col("count") > maxBucketSize).select(col("bb"))
-          .collect().map(_.getLong(0)).toSeq
-        if (hot.isEmpty) blocked0
-        else blocked0.filter(!col("bb").isInCollection(hot))
-      }
-    val a = blocked.select(col(id).as("id_a"), col("simhash").as("sim_a"), col("bb").as("bb_a"))
-    val b = blocked.select(col(id).as("id_b"), col("simhash").as("sim_b"), col("bb").as("bb_b"))
-    // prune bucket collisions with a cheap codegen'd Hamming filter before
-    // the expensive exact-jaccard verify; ≤ guarantee is exactly the
-    // blocking promise, so the filter never drops a promised pair
-    // shuffle-hash, not sort-merge: the exploded sides are large (n×91
-    // narrow rows) but each bucket's build set is small — hashing
-    // skips two O(n×91 log) sorts
-    val cands = a.hint("shuffle_hash")
-      .join(b, col("bb_a") === col("bb_b") && col("id_a") < col("id_b"))
-      .filter(bit_count(col("sim_a").bitwiseXOR(col("sim_b"))) <= SimhashHammingGuarantee)
-      .select(col("id_a"), col("id_b")).distinct()
+    // `maxBucketSize` (0 = off) is the [[Blocking]] B² valve; the key
+    // space is ≤ 91 × 2^12 = 372,736 buckets, so it probes. The sketch
+    // rides the bucket exchange, and a codegen'd Hamming filter prunes
+    // collisions before the exact-jaccard verify: ≤ the guarantee is
+    // exactly the blocking promise, so it never drops a promised pair.
+    val cands = Blocking.selfJoin(
+      Blocking.valve(blocked, "bb", pairKeys.size * 4096L, maxBucketSize),
+      id, "bb",
+      payload = Some(s => col("simhash").as(s"sim_$s")),
+      keep = Some(bit_count(col("sim_a").bitwiseXOR(col("sim_b"))) <= SimhashHammingGuarantee))
     val sa = shingled.select(col(id).as("id_a"), col("sh").as("sh_a"))
     val sb = shingled.select(col(id).as("id_b"), col("sh").as("sh_b"))
     cands.join(sa, "id_a").join(sb, "id_b")

@@ -582,20 +582,15 @@ object Multimodal {
     * (band_idx, band_value), per-bucket self-join, distinct pair set —
     * never all-pairs.
     *
-    * `maxBucketSize` (0 = off) is the same B² valve as
-    * [[Dedup.lshCandidates]]: a (band_idx, band_value) bucket with B
-    * members generates B² candidates, and on a real web-image corpus the
-    * degenerate buckets (logos, blank pages, boilerplate frames hashing
-    * to a handful of values) are quadratic AND low-signal. The size
-    * filter is one partial-aggregated count on the key the join shuffles
-    * on anyway; dropping a capped bucket can only SPLIT or SHRINK
-    * reported clusters (a genuinely-near pair keeps its other three
-    * bands' chances — only pairs whose EVERY agreeing band is capped are
-    * lost), never invent a pair. NOTE the pigeonhole-exactness guarantee
-    * is what capping trades away: run exact whole-hash dedup first (or
-    * use [[dhashDedupKeep]], which collapses identical hashes before any
-    * pair is enumerated, so the mega-class regime never reaches this
-    * join). Returns one checkpointed frame the caller owns. */
+    * `maxBucketSize` (0 = off) is the [[Blocking]] B² valve, keyed on
+    * (band_idx, band_value): degenerate buckets (logos, blank pages,
+    * boilerplate frames hashing to a handful of values) are quadratic
+    * AND low-signal. The band space is 4 × 2^16, so it probes. Capping
+    * trades away the pigeonhole exactness above: run exact whole-hash
+    * dedup first, or use [[dhashDedupKeep]], which collapses identical
+    * hashes before any pair is enumerated, so the mega-class regime
+    * never reaches this join. Returns one checkpointed frame the caller
+    * owns. */
   def dhashNearDups(hashes: DataFrame, idCol: String, maxDist: Int,
                     maxBucketSize: Int = 0): DataFrame = {
     require(maxDist >= 0 && maxDist < 4,
@@ -609,22 +604,15 @@ object Multimodal {
         hashes.select(col(idCol).as("id"),
           col("b0"), col("b1"), col("b2"), col("b3"))
           .filter(col("b0").isNotNull))
-      val banded0 = withId.select(col("id"),
-        posexplode(array(col("b0"), col("b1"), col("b2"), col("b3")))
-          .as(Seq("band_idx", "band_val")))
-      val banded =
-        if (maxBucketSize <= 0) banded0
-        else banded0.join(
-          banded0.groupBy(col("band_idx"), col("band_val")).count()
-            .filter(col("count") <= maxBucketSize)
-            .select(col("band_idx"), col("band_val")),
-          Seq("band_idx", "band_val"))
-      val cand = banded.as("x").join(banded.as("y"),
-          col("x.band_idx") === col("y.band_idx") &&
-            col("x.band_val") === col("y.band_val") &&
-            col("x.id") < col("y.id"))
-        .select(col("x.id").as("id_a"), col("y.id").as("id_b"))
-        .distinct()
+      // (band_idx, band_val) packed into one long, injective for any int
+      // band value
+      val banded = withId.select(col("id"),
+          posexplode(array(col("b0"), col("b1"), col("b2"), col("b3")))
+            .as(Seq("band_idx", "band_val")))
+        .select(col("id"), shiftleft(col("band_idx").cast("long"), 32)
+          .bitwiseOR(col("band_val").cast("long") bitwiseAND lit(0xFFFFFFFFL)).as("bb"))
+      val cand = Blocking.selfJoin(
+        Blocking.valve(banded, "bb", 4L << 16, maxBucketSize), "id", "bb")
       val ha = withId.select(col("id").as("id_a"), col("b0").as("a0"),
         col("b1").as("a1"), col("b2").as("a2"), col("b3").as("a3"))
       val hb = withId.select(col("id").as("id_b"), col("b0").as("c0"),

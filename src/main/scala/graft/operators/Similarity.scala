@@ -372,6 +372,20 @@ object Similarity {
         greatest(col("id_a"), col("id_b")).as("id_b"))
   }
 
+  /** Per-(table, bucket) occupancy of the SRP banding — the valve's
+    * engagement diagnostic: `max(count)` vs `maxBucketSize` decides
+    * whether a given cap is a no-op on a given corpus, which is exactly
+    * the headroom contract the capped oracle row pins in its spec. */
+  private[graft] def srpBucketCounts(corpus: DataFrame, dim: Int,
+      tables: Int = 8, planesPerTable: Int = 0): DataFrame = {
+    val h = if (planesPerTable > 0) planesPerTable
+            else deriveSrpPlanes(corpus.count())
+    val buckets = srpBucketsFn(corpus.sparkSession, dim, tables, h, probes = false)
+    corpus.select(dvec(col("embedding")).as("v"))
+      .select(explode(buckets(col("v"))).as("tb"))
+      .groupBy(col("tb")).count()
+  }
+
   /** Near-duplicate pairs via SRP-LSH banding + exact cosine verify — the
     * subquadratic scale path for HIGH thresholds (true near-duplicates).
     * Mirrors the MinHash+LSH design: signature → band explode → equi-join
@@ -406,33 +420,13 @@ object Similarity {
     * the `maxBucketSize` valve below — uncapped fixed width is the
     * rule-test strawman configuration, kept reachable on purpose.
     *
-    * `maxBucketSize` (0 = off) is the same B² valve as
-    * [[graft.operators.Dedup.lshCandidates]] / `simhashNearDups`
-    * (round 16): at FIXED signature width the key space is tables·2^H
-    * buckets, so per-bucket occupancy — and with it the candidate count —
-    * grows linearly with the corpus and the bucket self-join quadratically
-    * (the measured 4.56×/octave `dedup_embedding_lsh` ×256 tail).
-    * Dropping saturated buckets bounds the join. CAVEAT, same as the text
-    * valves: byte-identical mega-clusters collide in EVERY table, so a
-    * capped run assumes exact duplicates were removed first
-    * ([[graft.operators.Dedup.exactDedup]] — the pipeline order is
-    * exact-then-near); genuinely-near pairs keep their other tables'
-    * chances. The derived-width path needs no cap — it holds occupancy
-    * constant by construction — but accepts one for uniformity. */
-  /** Per-(table, bucket) occupancy of the SRP banding — the valve's
-    * engagement diagnostic: `max(count)` vs `maxBucketSize` decides
-    * whether a given cap is a no-op on a given corpus, which is exactly
-    * the headroom contract the capped oracle row pins in its spec. */
-  private[graft] def srpBucketCounts(corpus: DataFrame, dim: Int,
-      tables: Int = 8, planesPerTable: Int = 0): DataFrame = {
-    val h = if (planesPerTable > 0) planesPerTable
-            else deriveSrpPlanes(corpus.count())
-    val buckets = srpBucketsFn(corpus.sparkSession, dim, tables, h, probes = false)
-    corpus.select(dvec(col("embedding")).as("v"))
-      .select(explode(buckets(col("v"))).as("tb"))
-      .groupBy(col("tb")).count()
-  }
-
+    * `maxBucketSize` (0 = off) is the [[Blocking]] B² valve. At FIXED
+    * width the (table, bucket) space is tables·2^H, so per-bucket
+    * occupancy grows linearly with the corpus (the measured
+    * 4.56×/octave `dedup_embedding_lsh` ×256 tail) and the valve probes
+    * on the packed `(t << H) | b` long. The derived-width path needs no
+    * cap — it holds occupancy constant by construction — but accepts
+    * one for uniformity; its space tracks the corpus, so it semi-joins. */
   def nearDupPairsLSH(corpus: DataFrame, threshold: Double,
                       dim: Int, tables: Int = 8, planesPerTable: Int = 0,
                       maxBucketSize: Int = 0): DataFrame = {
@@ -440,58 +434,23 @@ object Similarity {
             else deriveSrpPlanes(corpus.count())
     val buckets = srpBucketsFn(corpus.sparkSession, dim, tables, h, probes = false)
     val v = corpus.select(col("vec_id"), dvec(col("embedding")).as("v"))
-    // Vectors RIDE the band exchange on purpose — measured, do not "slim"
-    // this into an ids-only candidate join + vector re-attach (round 12):
-    // annTopK's dedup-on-ids discipline wins there because its candidates
-    // are per-query top-k BOUNDED, but pair enumeration's candidates are
-    // corpus-proportional, so the ids-first variant shuffles O(candidates)
-    // rows through a distinct AND re-shuffles the corpus vectors through
-    // two attach joins — measured 19× slower on a ×32 corpus (14s → 265s
-    // at fixed signature bits; 3s → 13s even occupancy-tuned). Here the
-    // verify is a codegen'd filter streaming straight out of the band
-    // join: vectors move through exactly ONE exchange, and only SURVIVORS
-    // (not candidates) pay the distinct.
+    // Vectors RIDE the band exchange on purpose, and only SURVIVORS of
+    // the cosine verify pay the distinct (Blocking.selfJoin: measured,
+    // do not "slim" this into an ids-only join)
     val bucketed = v.select(
       col("vec_id"), col("v"),
       explode(buckets(col("v"))).as("tb"))
-    // valve: one partial-agg'd count on the key the self-join shuffles on
-    // anyway. Fixed width ⇒ the space is STRUCTURALLY BOUNDED (tables·2^H,
-    // 2048 at the default 8×8), so the OVER-limit key set is bounded
-    // driver metadata at any corpus size — probe it once at plan build
-    // (the simhash probe-gate, r15 finding #3): an empty hot set (every
-    // driver SF — the capped oracle row's measured-no-op contract) leaves
-    // the main plan EXACTLY the uncapped plan, and an engaged cap filters
-    // with a codegen'd InSet on a packed (table<<H | bucket) long instead
-    // of a second corpus-wide join. The no-op case still pays ONE extra
-    // evaluation of the narrow count projection (vector column pruned by
-    // Catalyst; the sf0.1 ledger prices it ≈ +0.7s) — irreducible without
-    // pinning working-set blocks, which the Checkpoints lifecycle rule
-    // forbids. Derived width tracks the corpus (≈ n/occupancy keys, NOT
-    // driver metadata), so it keeps the spill-safe merge semi-join, as
-    // lshCandidates does for its corpus-sized bucket space.
-    val pruned =
-      if (maxBucketSize <= 0) bucketed
-      else if (planesPerTable > 0 && tables.toLong * (1L << h) <= (1L << 22)) {
-        val hot = bucketed.groupBy(col("tb")).count()
-          .filter(col("count") > maxBucketSize)
-          .select(col("tb.t"), col("tb.b")).collect()
-          .map(r => (r.getInt(0).toLong << h) | r.getLong(1)).toSeq
-        if (hot.isEmpty) bucketed
-        else bucketed.filter(
-          !(col("tb.t").cast("long") * lit(1L << h) + col("tb.b"))
-            .isInCollection(hot))
-      } else {
-        val keep = bucketed.groupBy(col("tb")).count()
-          .filter(col("count") <= maxBucketSize).select(col("tb"))
-        bucketed.join(keep.hint("merge"), Seq("tb"), "left_semi")
-      }
-    val a = pruned.select(col("vec_id").as("id_a"), col("v").as("va"), col("tb").as("tb_a"))
-    val b = pruned.select(col("vec_id").as("id_b"), col("v").as("vb"), col("tb").as("tb_b"))
-    a.hint("shuffle_hash") // hash beats sorting the exploded table rows
-      .join(b, col("tb_a") === col("tb_b") && col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"), col("va"), col("vb"))
-      .filter(cosine(col("va"), col("vb")) >= threshold)
-      .select(col("id_a"), col("id_b")).distinct()
+    // h ≤ 32 keeps the packed key injective (t < 2^31); wider fixed
+    // widths lie far past the probe budget anyway
+    val valved =
+      if (planesPerTable > 0 && h <= 32)
+        Blocking.valve(
+          bucketed.withColumn("tbk", col("tb.t").cast("long") * lit(1L << h) + col("tb.b")),
+          "tbk", tables.toLong << h, maxBucketSize)
+      else Blocking.valve(bucketed, "tb", Blocking.Unbounded, maxBucketSize)
+    Blocking.selfJoin(valved, "vec_id", "tb",
+      payload = Some(s => col("v").as("v" + s)),
+      keep = Some(cosine(col("va"), col("vb")) >= threshold))
   }
 
   // ------------------------------------------------------- IVF (scale path 2)

@@ -500,7 +500,7 @@ object DedupQueries {
     // bits (the `dedup_simhash_capped` playbook, r15 verdict ask #1). The
     // cap is a measured NO-OP at every driver SF (largest (table,bucket)
     // occupancy on this doubled corpus: 64 at sf0.1, 24 at sf0.001 —
-    // pinned by Round16OpsSpec's headroom test), so this row sits under
+    // pinned by BlockingSpec's headroom test), so this row sits under
     // the UNWEAKENED exact oracle: every byte-identical pair, nothing
     // else. At sweep scale the cap engages and bounds the bucket
     // self-join (the 4.56×/octave ×256 tail this valve exists for).

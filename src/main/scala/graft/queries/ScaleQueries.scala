@@ -74,8 +74,8 @@ object ScaleQueries {
       // dhashNearDups with the round-13 band-bucket valve engaged: the
       // unvalved ×32 sweep entry (431s) is the duplicate-class regime a
       // real web-image corpus hits on logos/blank pages — the cap bounds
-      // candidate enumeration per (band_idx, band_val) bucket the same
-      // drop-only-weakens way as Dedup.lshCandidates. Compare against the
+      // candidate enumeration per (band_idx, band_val) bucket the
+      // drop-only-weakens way of operators.Blocking. Compare against the
       // sweep's mm_phash_keep entry, which solves the same regime
       // structurally (classes-not-pairs) instead of by dropping.
       implicit val sp: SparkSession = s

@@ -24,14 +24,26 @@ class HarnessSpec extends SparkTestBase {
   test("resetStorage: a query that leaves one frame persisted reports its bytes; the next reset reports 0") {
     Harness.resetStorage(spark)
     val t = Harness.minOfN(spark, "[spec] leak", runs = 2, warmup = true) {
-      val df = spark.range(5000).toDF("id").persist()
-      df.count()
-      df
+      val side = spark.range(5000).toDF("id").persist()
+      side.count()
+      spark.range(10).toDF("id")
     }
     assert(t.sec >= 0 && t.runs.size == 2 && t.err.isEmpty)
     assert(t.leakedBytes > 0)
     assert(persisted.isEmpty)
     assert(Harness.resetStorage(spark) == 0L)
+  }
+
+  test("minOfN: the checkpoint a query returns is released after each run, so it reads 0") {
+    Harness.resetStorage(spark)
+    val t = Harness.minOfN(spark, "[spec] owned", runs = 2, warmup = true) {
+      operators.Checkpoints.scope() { s =>
+        s.checkpoint(spark.range(5000).toDF("id"))
+      }
+    }
+    assert(t.sec >= 0 && t.runs.size == 2 && t.err.isEmpty)
+    assert(t.leakedBytes == 0L, s"the returned frame counted as leaked: ${t.leakedBytes} B")
+    assert(persisted.isEmpty)
   }
 
   test("minOfN: escalates past its scheduled runs only while the band exceeds the bar") {

@@ -243,33 +243,6 @@ class OperatorsSpec extends SparkTestBase {
       s"recall_ok false for: ${out.filterNot(_.getBoolean(1)).mkString(",")}")
   }
 
-  test("LSH bucket cap drops mega-buckets, keeps genuine near-dup recall") {
-    import spark.implicits._
-    // 40 byte-identical docs (a mega-cluster colliding in EVERY band) +
-    // one genuine near-dup pair with a one-word edit
-    val base = "alpha beta gamma delta epsilon zeta eta theta iota kappa " * 3
-    // the near pair must be textually UNRELATED to the mega-cluster —
-    // otherwise its signatures inherit the mega-buckets and the cap
-    // rightly drops them too (that is the documented exact-dedup-first
-    // contract, not a recall bug)
-    val other = "red orange yellow green blue indigo violet cyan magenta white " * 3
-    val rows = (1L to 40L).map(i => (i, base)) ++
-      Seq((100L, other + "one two three four"), (101L, other + "one two three five"))
-    val docs = rows.toDF("doc_id", "text")
-    val capped = Dedup.minhashNearDups(docs, "doc_id", col("text"), 3, 0.8, maxBucketSize = 10)
-      .select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    // the identical mega-cluster is gone (that is exactDedup's job —
-    // documented pipeline order), the genuine near pair survives because
-    // its buckets are small
-    assert(capped.contains((100L, 101L)), s"near pair lost: $capped")
-    assert(!capped.exists(p => p._1 <= 40 && p._2 <= 40),
-      s"mega-bucket pairs should be capped away: $capped")
-    // cap off: behavior unchanged, all pairs present
-    val uncapped = Dedup.minhashNearDups(docs, "doc_id", col("text"), 3, 0.8)
-      .select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(uncapped.contains((1L, 2L)) && uncapped.contains((100L, 101L)))
-  }
-
   test("nearDupClusters: connected components via min-label propagation") {
     import spark.implicits._
     // components: chain 1-2-3-4, triangle 10-11-12, pair 20-21, isolates 30/31

@@ -3,9 +3,9 @@ package graft.operators
 import graft.SparkTestBase
 import org.apache.spark.sql.functions._
 
-/** Round-13 operator specs: the dhash B²-valve + classes-not-pairs image
-  * dedup, self-tuning edit-distance blocking, and occupancy-derived SRP
-  * signature bits. */
+/** Round-13 operator specs: classes-not-pairs image dedup, self-tuning
+  * edit-distance blocking, and occupancy-derived SRP signature bits (the
+  * dhash valve lives in BlockingSpec). */
 class Round13OpsSpec extends SparkTestBase {
 
   import spark.implicits._
@@ -59,29 +59,6 @@ class Round13OpsSpec extends SparkTestBase {
     pairs.foreach { case (a, b) =>
       assert(repOf(a) == repOf(b), s"pair ($a,$b) split across clusters")
     }
-  }
-
-  // ------------------------------------------------- dhashNearDups valve
-
-  test("dhashNearDups maxBucketSize: capped pairs are a subset; only capped-band pairs drop") {
-    // band 0 is degenerate (all six hashes share b0=100 → bucket size 6,
-    // over cap 4). Pair (1,2) also agrees on bands 1 and 3 → survives;
-    // (5,6) also agrees on band 3 → survives; (3,4) agrees ONLY on the
-    // capped band 0 (hamming 3 spread across bands 1,2,3) → the
-    // documented drop.
-    val hs = Seq(
-      (1L, 100, 7, 1, 1), (2L, 100, 7, 2, 1),        // hamming 2 (1^2 = 2 bits)
-      (3L, 100, 20, 30, 40), (4L, 100, 21, 31, 41),  // hamming 3, one bit per band 1..3
-      (5L, 100, 50, 60, 70), (6L, 100, 51, 61, 70)   // hamming 2
-    ).toDF("media_id", "b0", "b1", "b2", "b3")
-    val uncapped = Multimodal.dhashNearDups(hs, "media_id", maxDist = 3)
-      .select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val capped = Multimodal.dhashNearDups(hs, "media_id", maxDist = 3, maxBucketSize = 4)
-      .select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(uncapped == Set((1L, 2L), (3L, 4L), (5L, 6L)), s"fixture sanity: $uncapped")
-    assert(capped.subsetOf(uncapped), "capping must never invent a pair")
-    assert(capped == Set((1L, 2L), (5L, 6L)),
-      "cap keeps exactly the pairs that agree on an uncapped band")
   }
 
   test("dhashDedupKeep on a mega duplicate class stays linear in the class (pairs would be quadratic)") {

@@ -160,75 +160,4 @@ class Round15OpsSpec extends SparkTestBase {
       .groupBy("bb").count().agg(max("count")).head().getLong(0)
     assert(largest <= 64, s"gate-corpus occupancy crept toward the cap: $largest")
   }
-
-  test("simhash valve: saturated buckets drop, small buckets survive") {
-    // 40 byte-identical docs share EVERY block-pair bucket (the
-    // boilerplate mega-cluster the valve exists for — and the reason the
-    // documented pipeline order runs exactDedup first); one genuine
-    // near-dup pair lives in size-2 buckets and must survive the cap
-    val mega = (0L until 40L).map(i =>
-      (i, "alpha beta gamma delta epsilon zeta eta theta iota kappa"))
-    val near = Seq(
-      (100L, "one two three four five six seven eight nine ten eleven twelve"),
-      (101L, "one two three four five six seven eight nine ten eleven swap"))
-    val d = spark.createDataFrame(mega ++ near).toDF("doc_id", "text")
-    val uncapped = simhashPairs(d, 0)
-    val capped = simhashPairs(d, 16)
-    assert(uncapped.contains((100L, 101L)) && uncapped.exists(_._2 < 40L),
-      "uncapped finds both the near pair and the mega-cluster pairs")
-    assert(capped.contains((100L, 101L)),
-      "pairs in small buckets must survive the valve")
-    assert(!capped.exists(_._2 < 40L),
-      "every bucket of the 40-identical cluster is saturated and dropped")
-  }
-
-  // round 16 (r15 finding #3 + ADVICE): the valve is now a driver-probed
-  // InSet filter, and the no-op case (empty hot set) runs the EXACT
-  // uncapped plan — no join, no filter. Asserted on the optimized
-  // LOGICAL plan (typed node collection), not a substring of the
-  // executed-plan string, per the r15 ADVICE on format brittleness.
-  private def hotFilterCount(df: org.apache.spark.sql.DataFrame): Int = {
-    import org.apache.spark.sql.catalyst.expressions.{In, InSet, Not}
-    df.queryExecution.optimizedPlan.collect {
-      case f: org.apache.spark.sql.catalyst.plans.logical.Filter
-        if f.condition.exists {
-          case Not(_: In) | Not(_: InSet) => true
-          case _ => false
-        } => f
-    }.size
-  }
-
-  // Since round 18 simhashNearDups returns a CHECKPOINTED pair frame (its
-  // (id, simhash) sketch is materialized once and released before return),
-  // so the public method's plan is one ExistingRDD leaf. The plan-shape
-  // assertions target the lazy plan-builder simhashPairsPlan — the exact
-  // pipeline the public method materializes — fed a raw (uncheckpointed)
-  // sketch projection so the full lineage is visible.
-  private def simhashPlan(d: org.apache.spark.sql.DataFrame, cap: Int) = {
-    val shingled = d.select(col("doc_id"), Dedup.wordShingles(col("text"), 3).as("sh"))
-    val sketch = shingled.select(col("doc_id"), Dedup.simhash64(col("sh")).as("simhash"))
-    Dedup.simhashPairsPlan(sketch, shingled, "doc_id", 0.8, cap)
-  }
-
-  test("simhash valve: no-op cap compiles to the exact uncapped plan") {
-    val docs = spark.read.parquet(s"$sfDir/documents.parquet").limit(50)
-    assert(hotFilterCount(simhashPlan(docs, 0)) == 0,
-      "cap 0 must not add a hot-bucket filter")
-    // 50 distinct docs, cap 256: no block-pair bucket can be saturated,
-    // so the probe finds an empty hot set and the plan is unchanged
-    assert(hotFilterCount(simhashPlan(docs, 256)) == 0,
-      "a no-op cap must run the uncapped plan (probe only, no filter)")
-    assert(simhashPlan(docs, 256).queryExecution.optimizedPlan.sameResult(
-             simhashPlan(docs, 0).queryExecution.optimizedPlan),
-      "no-op capped plan must be result-identical to the uncapped plan")
-  }
-
-  test("simhash valve: an engaged cap prunes via NOT-IN on the bucket key") {
-    val mega = (0L until 40L).map(i =>
-      (i, "alpha beta gamma delta epsilon zeta eta theta iota kappa"))
-    val d = spark.createDataFrame(mega).toDF("doc_id", "text")
-    // both the a-side and b-side of the self-join carry the pushed filter
-    assert(hotFilterCount(simhashPlan(d, 16)) >= 1,
-      "an engaged cap must filter hot buckets out of the explode")
-  }
 }
