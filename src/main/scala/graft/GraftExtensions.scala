@@ -101,7 +101,7 @@ object GraftExtensions {
       // lineage-entry evaluation (round 10): jq with a seeded meta envelope
       "jq_eval_meta" -> arity(3, "jq_eval_meta")(exprs => {
         val q = foldableString(exprs.head, "jq_eval_meta")
-        JqEvalMeta(JqParser.parse(q), q, exprs(1), exprs(2))
+        JqEvalMeta.seeded(JqParser.parse(q), q, exprs(1), exprs(2))
       }),
       // media decode from SQL (round 10): the builder runs at analysis
       // time on the driver — plan time — so it captures the SAME decoder

@@ -14,6 +14,11 @@ import graft.functions._
   * evaluates it as a single fused Catalyst expression on executors — the
   * plan stays a narrow projection (scan→project, zero shuffles), so it
   * scales linearly with partitions.
+  *
+  * Every jq function takes its document as STRING json text or as a
+  * STRUCT, ARRAY, MAP, scalar or Spark 4 VARIANT column; non-text inputs
+  * convert structurally with no to_json round trip, and a VARIANT binary
+  * is navigated natively (graft.jq.JqInput.fromVariant).
   */
 object Jq {
 
@@ -33,7 +38,7 @@ object Jq {
     * pipeline with full entry semantics, returns
     * ARRAY<STRUCT<doc STRING, meta STRING>> (both canonical). */
   def evalWithMeta(q: String, jsonCol: Column, metaJsonCol: Column): Column =
-    toCol(JqEvalMeta(JqParser.parse(q), q, toExpr(jsonCol), toExpr(metaJsonCol)))
+    toCol(JqEvalMeta.seeded(JqParser.parse(q), q, toExpr(jsonCol), toExpr(metaJsonCol)))
 
   /** First successful output as a typed scalar (NULL if none / mismatch). */
   def string(q: String, jsonCol: Column): Column =
@@ -75,18 +80,6 @@ object Jq {
   /** MessagePack third codec: JSON text ⇄ MsgPack binary columns. */
   def toMsgPack(jsonCol: Column): Column = toCol(MsgPackEncodeExpr(toExpr(jsonCol)))
   def fromMsgPack(mpCol: Column): Column = toCol(MsgPackDecodeExpr(toExpr(mpCol)))
-
-  // ------------------------------------------------------ Variant interop
-
-  /** Run a jq pipeline over a Spark 4 VARIANT column (SURVEY.md §1.4's
-    * dynamic-value bridge). Round 2: the variant binary is navigated
-    * NATIVELY (graft.jq.JqInput.fromVariant) — parse once at the source
-    * (`parse_json` / variant scan), no to_json text round-trip. These
-    * aliases remain for API compatibility; `query`/`docs`/`long` now accept
-    * VARIANT (and STRUCT/ARRAY/MAP) columns directly. */
-  def queryVariant(q: String, variantCol: Column): Column = query(q, variantCol)
-  def docsVariant(q: String, variantCol: Column): Column = docs(q, variantCol)
-  def longVariant(q: String, variantCol: Column): Column = long(q, variantCol)
 
   // ------------------------------------------------------- SQL registration
 

@@ -643,20 +643,19 @@ case class NfcNormalize(child: Expression)
 }
 
 /** `cell_sims(v)` → ARRAY<DOUBLE> of cosine similarities of `v` to each
-  * of C coarse centroids, the broadcast-side twin of the IVF literal
-  * formulation `array(cosine(v, lit(c0)), …)`. Below
-  * [[graft.operators.Similarity.CentroidBroadcastThreshold]] cells the
-  * literal array is the right call (bounded plan metadata, analyzable in
-  * O(C·dim)); at production cell counts (C ≈ 16-64k) the PLAN would grow
-  * to hundreds of MB and analysis cost explodes, so the centroid matrix
-  * ships ONCE as a broadcast variable and this expression is the single
-  * O(C·dim)-per-row kernel consuming it — the same hybrid plan-literal /
-  * broadcast discipline `bpeLearn` uses for its vocabulary.
+  * of C coarse centroids: the one kernel every centroid consumer
+  * (IVF, IVF-PQ, Lloyd refinement, SemDeDup assignment) builds through
+  * [[graft.operators.Similarity.cellSimsFn]]. The centroid matrix ships
+  * ONCE as a broadcast variable and this expression is the single
+  * O(C·dim)-per-row kernel consuming it, so the plan holds one node at
+  * any C; the literal formulation `array(cosine(v, lit(c0)), …)` put C
+  * cosine trees of dim literals each into the plan (350 KB of plan text
+  * at C = 16, hundreds of MB at production C ≈ 16-64k).
   *
   * Bit-compatibility contract (spec-pinned): per centroid the kernel is
   * EXACTLY [[CosineSim]]'s accumulation — left-to-right `dot/na/nb` over
   * (v, centroid), quotient `dot / (sqrt(na)·sqrt(nb))` — so the emitted
-  * array is bit-identical to the literal path and downstream
+  * array is bit-identical to the literal formulation and downstream
   * `array_position(·, array_max(·))` argmax assignments cannot diverge.
   * Dimension mismatch yields an all-NULL array, as C pairwise
   * [[CosineSim]] calls would.
@@ -846,8 +845,8 @@ case class CellAssignHier(child: Expression,
 }
 
 /** `cell_vec(cell)` → ARRAY<DOUBLE>: row `cell` (1-indexed, like the IVF
-  * assignment) of a broadcast centroid matrix — the broadcast twin of
-  * `element_at(centsNLit, cell)` for residual IVF-PQ at large C. Out-of-
+  * assignment) of a broadcast centroid matrix — equal to
+  * `element_at(centsNLit, cell)`, at any C, for residual IVF-PQ. Out-of-
   * range indices yield NULL (element_at under ansi=false). Equality by
   * broadcast id, as [[CellSims]]. */
 case class CellVec(child: Expression,

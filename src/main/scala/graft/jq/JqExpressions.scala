@@ -2,9 +2,7 @@ package graft.jq
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodeGenerator, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.catalyst.expressions.{Coalesce, Expression, GenericInternalRow, Literal}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -71,17 +69,32 @@ private[jq] object JqGuard {
     catch failure.andThen(f)
 }
 
+/** The document operand every jq expression converts: resolved once on
+  * the driver from the operand's type, so the per-row path is a
+  * monomorphic converter + compiled-pipeline call. */
+trait JqDocInput extends Expression {
+
+  /** The document column (STRING json text, STRUCT, ARRAY, MAP, VARIANT
+    * or a scalar). */
+  protected def docInput: Expression
+
+  @transient protected final lazy val inputConv: JqInput.Conv = JqInput.converter(docInput.dataType)
+
+  protected final def checkDocType(): TypeCheckResult =
+    if (JqInput.supports(docInput.dataType)) TypeCheckResult.TypeCheckSuccess
+    else TypeCheckResult.TypeCheckFailure(
+      s"$prettyName cannot run over input type ${docInput.dataType.catalogString}")
+}
+
 /** A jq expression over one input column. The pipeline itself is a
   * compiled closure tree (driver-compiled, executor-cached), so it joins
   * whole-stage codegen through [[graft.functions.NativeUnaryCodegen]]'s
   * one virtual call: the surrounding project/filter/explode fuses into a
   * single generated function instead of falling back to interpreted rows
   * for the whole stage. */
-trait JqNativeInput extends graft.functions.NativeUnaryCodegen {
+trait JqNativeInput extends graft.functions.NativeUnaryCodegen with JqDocInput {
 
-  /** Resolved once on the driver from the child's type — the per-row path
-    * is a monomorphic converter + compiled-pipeline call. */
-  @transient protected final lazy val inputConv: JqInput.Conv = JqInput.converter(child.dataType)
+  override protected final def docInput: Expression = child
 
   /** Run `compiled` over one input value and render the entries with `f`;
     * malformed JSON *text* becomes the errors-as-data record, never an
@@ -90,10 +103,7 @@ trait JqNativeInput extends graft.functions.NativeUnaryCodegen {
   protected final def renderPipe[A](compiled: Interp.Pipe, input: Any)(f: Vector[JEntry] => A): A =
     JqGuard.render(compiled(inputConv(input), Nil))(f)
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (JqInput.supports(child.dataType)) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName cannot run over input type ${child.dataType.catalogString}")
+  override def checkInputDataTypes(): TypeCheckResult = checkDocType()
 }
 
 object JqEval {
@@ -191,46 +201,32 @@ case class JqExtract(ast: Ast, queryText: String, kind: String, child: Expressio
   * envelope back as canonical text. Returns
   * ARRAY<STRUCT<doc STRING, meta STRING>>; a malformed or non-object
   * `meta_json` means "no envelope" (errors-as-data discipline — lineage
-  * must never kill the batch). */
+  * must never kill the batch). Build it with [[JqEvalMeta.seeded]], which
+  * reads a NULL meta as no envelope. */
 case class JqEvalMeta(ast: Ast, queryText: String,
                       left: Expression, right: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
+    extends graft.functions.NativeBinaryCodegen with JqDocInput {
   @transient private lazy val compiled = Interp.compileE(ast)
-  @transient private lazy val inputConv: JqInput.Conv = JqInput.converter(left.dataType)
+  override protected def docInput: Expression = left
   override def dataType: DataType = JqEvalMeta.outputType
   override def prettyName: String = "jq_eval_meta"
-  // NULL gates on the DOCUMENT only: a NULL meta column is the natural
-  // "this record has no provenance" representation and must evaluate the
-  // pipeline with no envelope — swallowing the row's outputs because its
-  // lineage is absent would violate the lineage-never-kills-the-batch
-  // contract (round-10 review finding).
-  override def nullable: Boolean = left.nullable
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (!JqInput.supports(left.dataType))
-      TypeCheckResult.TypeCheckFailure(
-        s"$prettyName cannot run over input type ${left.dataType.catalogString}")
-    else if (right.dataType != StringType)
+  override def checkInputDataTypes(): TypeCheckResult = checkDocType() match {
+    case TypeCheckResult.TypeCheckSuccess if right.dataType != StringType =>
       TypeCheckResult.TypeCheckFailure(
         s"$prettyName meta envelope must be STRING json, got ${right.dataType.catalogString}")
-    else TypeCheckResult.TypeCheckSuccess
-  override def eval(input: InternalRow): Any = {
-    val j = left.eval(input)
-    if (j == null) null else evalDocMeta(j, right.eval(input))
+    case docCheck => docCheck
   }
-  /** Public bridge for generated code. `m` may be null (no envelope). */
-  def evalDocMeta(j: Any, m: Any): Any = {
+  override protected def nullSafeEval(doc: Any, meta: Any): Any = {
     val metaObj: Option[JObj] =
-      if (m == null) None
-      else
-        try JsonText.parse(m.asInstanceOf[UTF8String].toString) match {
-          // normalize on seed (reference meta.rs Meta::some invariant):
-          // every envelope carries all of domains/sources/keys, so a
-          // seeded envelope missing `keys` cannot propagate verbatim
-          // through cloning navigation (round-10 advice)
-          case o: JObj => Some(graft.json.JMeta.normalize(o))
-          case _       => None
-        } catch { case _: JsonText.JsonParseException => None }
-    JqGuard.render(compiled(JEntry(inputConv(j), Vector.empty, metaObj), Nil)) { entries =>
+      try JsonText.parse(meta.asInstanceOf[UTF8String].toString) match {
+        // normalize on seed (reference meta.rs Meta::some invariant):
+        // every envelope carries all of domains/sources/keys, so a
+        // seeded envelope missing `keys` cannot propagate verbatim
+        // through cloning navigation (round-10 advice)
+        case o: JObj => Some(graft.json.JMeta.normalize(o))
+        case _       => None
+      } catch { case _: JsonText.JsonParseException => None }
+    JqGuard.render(compiled(JEntry(inputConv(doc), Vector.empty, metaObj), Nil)) { entries =>
       new GenericArrayData(entries.collect {
         case en if en.errors.isEmpty =>
           InternalRow(
@@ -238,26 +234,6 @@ case class JqEvalMeta(ast: Ast, queryText: String,
             UTF8String.fromString(en.meta.map(JsonText.canonical).getOrElse("null")))
       }.toArray[Any])
     }
-  }
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("jqMetaExpr", this, classOf[JqEvalMeta].getName)
-    val lGen = left.genCode(ctx)
-    val rGen = right.genCode(ctx)
-    val javaType = CodeGenerator.javaType(dataType)
-    val boxed = CodeGenerator.boxedType(dataType)
-    val obj = ctx.freshName("jqMetaOut")
-    ev.copy(code =
-      code"""
-         |${lGen.code}
-         |boolean ${ev.isNull} = ${lGen.isNull};
-         |$javaType ${ev.value} = ${CodeGenerator.defaultValue(dataType)};
-         |if (!${ev.isNull}) {
-         |  ${rGen.code}
-         |  Object $obj = $ref.evalDocMeta(${lGen.value},
-         |    ${rGen.isNull} ? null : ${rGen.value});
-         |  ${ev.value} = ($boxed) $obj;
-         |}
-       """.stripMargin)
   }
   override protected def withNewChildrenInternal(l: Expression, r: Expression): JqEvalMeta =
     copy(left = l, right = r)
@@ -269,6 +245,16 @@ object JqEvalMeta {
       StructField("doc", StringType, nullable = false),
       StructField("meta", StringType, nullable = false))),
     containsNull = false)
+
+  /** `jq_eval_meta` over `doc`, seeded from `meta`. NULL gates on the
+    * DOCUMENT only: a NULL meta column is the natural "this record has no
+    * provenance" representation and must evaluate the pipeline with no
+    * envelope — swallowing the row's outputs because its lineage is
+    * absent would violate the lineage-never-kills-the-batch contract
+    * (round-10 review finding). The meta operand is therefore coalesced to
+    * the JSON text `null`, which already means "no envelope". */
+  def seeded(ast: Ast, queryText: String, doc: Expression, meta: Expression): JqEvalMeta =
+    JqEvalMeta(ast, queryText, doc, Coalesce(Seq(meta, Literal("null"))))
 }
 
 /** `jq_multi`: evaluate SEVERAL jq pipelines against one document with a

@@ -392,8 +392,8 @@ object Curation {
   }
 
   /** Cluster-balanced diversity sampling: assign every embedding to its
-    * nearest plan-literal centroid ([[Similarity.assignClusters]] — the
-    * SemDeDup assignment, zero exchanges), then keep at most
+    * nearest centroid ([[Similarity.assignClusters]] — the SemDeDup
+    * assignment, zero exchanges), then keep at most
     * `perCluster` rows per cluster by a DETERMINISTIC draw — rank within
     * cluster on ([[lcgUniform]]'s integer form, id). The flat-per-cluster
     * quota is the curation move that stops a corpus's majority mode from

@@ -59,79 +59,101 @@ object Similarity {
   def cosine(a: Column, b: Column): Column =
     ColumnBridge.column(CosineSim(ColumnBridge.expression(a), ColumnBridge.expression(b)))
 
-  /** Cell counts below this ride as C×dim plan literals (bounded
-    * metadata); at or above, the centroid matrix ships ONCE as a
-    * broadcast variable consumed by one custom kernel
-    * ([[graft.functions.CellSims]]/[[graft.functions.CellVec]]) — at a
-    * production C ≈ 16-64k the literal formulation would put hundreds of
-    * MB into the PLAN and analysis cost would dominate. Same hybrid
-    * literal/broadcast discipline as `TextAnalysis.bpeLearn`.
-    *
-    * Round 17 (optimization): 256 → 9. The r16 value parked the default
-    * C = 16 paths on the literal side, and the measured cost was not
-    * hypothetical-at-scale but real at the BENCH SF: each `simsTo` use
-    * inlines C cosine trees of dim literals each, the argmax doubles it,
-    * and the IVF-PQ residual row's plan text reached 350 KB (14k double
-    * literals, 163 inlined vec_cosine trees) — re-analyzed by Catalyst
-    * on every query construction (guide §7.3). Both paths are
-    * bit-identical (spec-pinned, CellSimsSpec/StatsInvarianceSpec), so
-    * the flip changes plan bytes only, never results. 9 keeps the
-    * 8-centroid SemDeDup fixture literal — those centroids are the
-    * SQL-expressible oracle contract and their plan cost is bounded. */
-  private[graft] val CentroidBroadcastThreshold = 9
+  /** Corpus side of every similarity stage: (vec_id, v). */
+  private def corpusVecs(corpus: DataFrame): DataFrame =
+    corpus.select(col("vec_id"), dvec(col("embedding")).as("v"))
+
+  /** Query side of every similarity stage: (qid, qv). */
+  private def queryVecs(queries: DataFrame): DataFrame =
+    queries.select(col("vec_id").as("qid"), dvec(col("embedding")).as("qv"))
+
+  /** Unit-length copy of a driver-side vector (a zero vector stays zero):
+    * the one normalization every index build applies to its pool. */
+  private def unit(v: Array[Double]): Array[Double] = {
+    val n = math.sqrt(v.map(x => x * x).sum)
+    val inv = if (n > 0) 1.0 / n else 0.0
+    v.map(_ * inv)
+  }
+
+  /** The exact stage: every corpus row against every broadcast query,
+    * (qid, vec_id, sim). Queries broadcast, corpus never self-joined. */
+  private def exactScan(corpus: DataFrame, queries: DataFrame): DataFrame =
+    corpusVecs(corpus).crossJoin(broadcast(queryVecs(queries)))
+      .select(col("qid"), col("vec_id"), cosine(col("v"), col("qv")).as("sim"))
+
+  /** The exact re-rank behind every approximate candidate stage: the
+    * vectors re-attach to a narrow (qid, vec_id) candidate set (corpus by
+    * equi-join on the small candidate set, queries by broadcast) and score
+    * exactly, (qid, vec_id, sim) — so an ANN ranking is an exact cosine
+    * ordering of an approximate candidate set. */
+  private def rerankExact(cands: DataFrame, corpus: DataFrame,
+                          queries: DataFrame): DataFrame =
+    cands.join(corpusVecs(corpus), "vec_id")
+      .join(broadcast(queryVecs(queries)), "qid")
+      .select(col("qid"), col("vec_id"), cosine(col("v"), col("qv")).as("sim"))
+
+  /** Per-query top-`n` rows of `scored` by `score` desc, ties by vec_id
+    * asc, with their 1-based `rnk` — the one ranking window behind every
+    * top-k, ADC candidate cut and MMR pool. */
+  private def topPerQuery(scored: DataFrame, n: Int, score: String = "sim"): DataFrame = {
+    val w = Window.partitionBy(col("qid")).orderBy(col(score).desc, col("vec_id").asc)
+    scored.withColumn("rnk", row_number().over(w)).filter(col("rnk") <= n)
+  }
+
+  /** The emitted top-k of a (qid, vec_id, sim) frame:
+    * (qid, rnk BIGINT, vec_id). */
+  private def topK(scored: DataFrame, k: Int): DataFrame =
+    topPerQuery(scored, k)
+      .select(col("qid"), col("rnk").cast("bigint").as("rnk"), col("vec_id"))
 
   /** Builder for the per-row cell-similarity array over a fixed centroid
-    * table: ONE broadcast per operator call (not per column use), shared
-    * by every projection the caller builds. Both paths emit bit-identical
-    * arrays (CellSims replicates CosineSim's accumulation exactly;
-    * spec-pinned), so assignments cannot depend on which side of the
-    * threshold a deployment sits. */
+    * table: the matrix ships ONCE per operator call as a broadcast,
+    * consumed by one kernel ([[graft.functions.CellSims]]) that every
+    * projection the caller builds shares. The kernel replicates
+    * [[cosine]]'s accumulation exactly (bit-identical to
+    * `array(cosine(v, lit(c0)), …)`, spec-pinned), and the plan holds one
+    * node instead of C cosine trees of dim literals each, whatever C is:
+    * at the default C = 16 the literal form put 350 KB of plan text on the
+    * IVF-PQ residual row, re-analyzed on every query construction. */
   private[graft] def cellSimsFn(spark: org.apache.spark.sql.SparkSession,
-                                cents: Array[Array[Double]],
-                                threshold: Int = CentroidBroadcastThreshold): Column => Column =
-    if (cents.length < threshold) {
-      v => array(cents.map(c => cosine(v, array(c.map(lit(_)): _*))): _*)
-    } else {
-      val dim = cents(0).length
-      val flat = new Array[Double](cents.length * dim)
-      var i = 0
-      while (i < cents.length) { System.arraycopy(cents(i), 0, flat, i * dim, dim); i += 1 }
-      val bc = spark.sparkContext.broadcast(flat)
-      v => ColumnBridge.column(graft.functions.CellSims(
-        ColumnBridge.expression(v), bc, cents.length, dim))
-    }
+                                cents: Array[Array[Double]]): Column => Column = {
+    val bc = spark.sparkContext.broadcast(cents.flatten)
+    v => ColumnBridge.column(graft.functions.CellSims(
+      ColumnBridge.expression(v), bc, cents.length, cents(0).length))
+  }
 
-  /** Builder for 1-indexed centroid-row lookup (`element_at(centsLit, i)`
-    * below the threshold, broadcast [[graft.functions.CellVec]] above) —
-    * the residual IVF-PQ path's other centroid consumer. */
+  /** Builder for 1-indexed centroid-row lookup over the same one broadcast
+    * kernel ([[graft.functions.CellVec]], equal to `element_at` over the
+    * literal table) — the residual IVF-PQ path's other centroid consumer. */
   private[graft] def cellVecFn(spark: org.apache.spark.sql.SparkSession,
-                               cents: Array[Array[Double]],
-                               threshold: Int = CentroidBroadcastThreshold): Column => Column =
-    if (cents.length < threshold) {
-      val centsLit = array(cents.map(c => array(c.map(lit(_)): _*)): _*)
-      idx => element_at(centsLit, idx.cast("int"))
-    } else {
-      val dim = cents(0).length
-      val flat = new Array[Double](cents.length * dim)
-      var i = 0
-      while (i < cents.length) { System.arraycopy(cents(i), 0, flat, i * dim, dim); i += 1 }
-      val bc = spark.sparkContext.broadcast(flat)
-      idx => ColumnBridge.column(graft.functions.CellVec(
-        ColumnBridge.expression(idx.cast("long")), bc, cents.length, dim))
-    }
+                               cents: Array[Array[Double]]): Column => Column = {
+    val bc = spark.sparkContext.broadcast(cents.flatten)
+    idx => ColumnBridge.column(graft.functions.CellVec(
+      ColumnBridge.expression(idx.cast("long")), bc, cents.length, cents(0).length))
+  }
+
+  /** 1-based nearest cell under `simsTo`; ties take the lowest cell id
+    * (array_position is first-match). */
+  private def bestCell(simsTo: Column => Column)(v: Column): Column =
+    array_position(simsTo(v), array_max(simsTo(v)))
+
+  /** The P nearest cells per query, (qid, cell) with 1-based cells, ties
+    * to the lowest cell — the one probe list IVF and IVF-PQ share. The
+    * query side is tiny, so its O(|q|·C) similarity row is noise. */
+  private def probeCells(qv: DataFrame, simsTo: Column => Column,
+                         probes: Int): DataFrame = {
+    val w = Window.partitionBy(col("qid")).orderBy(col("csim").desc, col("cell").asc)
+    qv.select(col("qid"), posexplode(simsTo(col("qv"))).as(Seq("cidx", "csim")))
+      .select(col("qid"), (col("cidx").cast("bigint") + 1L).as("cell"), col("csim"))
+      .withColumn("crnk", row_number().over(w))
+      .filter(col("crnk") <= probes).select(col("qid"), col("cell"))
+  }
 
   /** Exact brute-force cosine top-k: for each query vector, the k corpus
     * ids ranked by cosine desc (ties broken by id). Queries broadcast;
     * corpus never self-joined. */
-  def cosineTopK(corpus: DataFrame, queries: DataFrame, k: Int): DataFrame = {
-    val e = corpus.select(col("vec_id"), dvec(col("embedding")).as("v"))
-    val q = queries.select(col("vec_id").as("qid"), dvec(col("embedding")).as("qv"))
-    val scored = e.crossJoin(broadcast(q))
-      .select(col("qid"), col("vec_id"), cosine(col("v"), col("qv")).as("sim"))
-    val w = Window.partitionBy(col("qid")).orderBy(col("sim").desc, col("vec_id").asc)
-    scored.withColumn("rnk", row_number().over(w)).filter(col("rnk") <= k)
-      .select(col("qid"), col("rnk").cast("bigint").as("rnk"), col("vec_id"))
-  }
+  def cosineTopK(corpus: DataFrame, queries: DataFrame, k: Int): DataFrame =
+    topK(exactScan(corpus, queries), k)
 
   /** Hard-negative mining for contrastive training (DPR/Contriever
     * recipe): for each query, the k MOST similar corpus vectors that are
@@ -147,16 +169,9 @@ object Similarity {
     * and the only exchange carries (qid, vec_id, sim) triples into the
     * per-query top-k window. */
   def hardNegatives(corpus: DataFrame, queries: DataFrame, k: Int,
-                    posThreshold: Double): DataFrame = {
-    val e = corpus.select(col("vec_id"), dvec(col("embedding")).as("v"))
-    val q = queries.select(col("vec_id").as("qid"), dvec(col("embedding")).as("qv"))
-    val scored = e.crossJoin(broadcast(q))
-      .select(col("qid"), col("vec_id"), cosine(col("v"), col("qv")).as("sim"))
-      .filter(col("vec_id") =!= col("qid") && col("sim") < posThreshold)
-    val w = Window.partitionBy(col("qid")).orderBy(col("sim").desc, col("vec_id").asc)
-    scored.withColumn("rnk", row_number().over(w)).filter(col("rnk") <= k)
-      .select(col("qid"), col("rnk").cast("bigint").as("rnk"), col("vec_id"))
-  }
+                    posThreshold: Double): DataFrame =
+    topK(exactScan(corpus, queries)
+      .filter(col("vec_id") =!= col("qid") && col("sim") < posThreshold), k)
 
   /** k-NN majority-vote classification over a labeled corpus: predict
     * each query's label from its k nearest neighbors (exact cosine).
@@ -176,22 +191,6 @@ object Similarity {
       .select(col("qid"), col(labelCol).as("predicted"), col("votes"))
   }
 
-  /** All corpus pairs with cosine ≥ threshold — EXACT, expressed as a
-    * block-partitioned equi-join (a distributed dense GEMM tiling, not a
-    * nested-loop broadcast).
-    *
-    * Why not LSH here: a low threshold like 0.45 gives per-hyperplane-bit
-    * agreement 1-acos(0.45)/π ≈ 0.65 for true pairs vs 0.50 background —
-    * an LSH exponent ρ = ln(1/0.65)/ln(1/0.5) ≈ 0.63, so any banding with
-    * recall ≈ 1 admits nearly all pairs as candidates anyway. Exact
-    * all-pairs scoring is inherently O(n²); what CAN be fixed for a
-    * 1000-executor cluster is the *shape*: each vector is assigned one of
-    * `blocks` block ids, the B(B+1)/2 block pairs are a tiny broadcast
-    * relation, and scoring becomes two equi-joins whose shuffle key (the
-    * block id) spreads the n²/2 comparisons evenly as B balanced tasks —
-    * no BroadcastNestedLoopJoin, no CartesianProduct, no driver-side
-    * anything. For the high-similarity regime (true near-duplicates,
-    * cosine ≥ ~0.9) use [[nearDupPairsLSH]], which IS subquadratic. */
   /** Nearest-centroid assignment: (vec_id, v, cluster) with a
     * micro-quantized integer argmax — similarities quantize to micro
     * units (round(cos·10⁶) as BIGINT) BEFORE the argmax, so assignment
@@ -199,16 +198,15 @@ object Similarity {
     * partitionings and retries (a raw double argmax could flip on 1-ulp
     * evaluation-order differences); ties: first max wins
     * (array_position). Zero exchanges: a codegen'd projection that
-    * splits with the scan. Centroids ride [[cellSimsFn]]'s hybrid — plan
-    * literals at the default handful, ONE broadcast above the threshold —
-    * so the documented SemDeDup tuning rule (C grows with the corpus)
-    * never puts a corpus-scaled centroid table into the plan. Zero
-    * vectors (cosine NaN) are a precondition violation —
+    * splits with the scan. Centroids ride [[cellSimsFn]]'s one broadcast
+    * kernel at every C, so the documented SemDeDup tuning rule (C grows
+    * with the corpus) never puts a corpus-scaled centroid table into the
+    * plan. Zero vectors (cosine NaN) are a precondition violation —
     * embed-before-assign pipelines never emit them. */
   def assignClusters(vectors: DataFrame, centroids: Seq[Seq[Double]]): DataFrame = {
     require(centroids.nonEmpty, "assignClusters needs at least one centroid")
     val simsTo = cellSimsFn(vectors.sparkSession, centroids.map(_.toArray).toArray)
-    val v = vectors.select(col("vec_id"), dvec(col("embedding")).as("v"))
+    val v = corpusVecs(vectors)
     // NaN cosines (zero-norm vector or centroid) become NULL micro sims
     // (round-14 ADVICE): under Spark 4's default ANSI mode the bare
     // round(NaN·1e6).cast(long) THROWS CAST_OVERFLOW. A null sim is
@@ -323,12 +321,12 @@ object Similarity {
     * pairs are never formed, so the self-join shuffles on the cluster id
     * into C balanced tasks of B_c² comparisons (pick C ~ corpus/√target
     * so B_c² fits a task; a mega-cluster is the same skew valve as LSH's
-    * maxBucketSize). Centroids are PLAN LITERALS (trained offline or on
-    * a sample, exactly as the paper does with off-the-shelf k-means):
-    * assignment is a zero-exchange projection and the corpus is never
-    * shuffled to build an index. The threshold compare quantizes to
-    * micro units like the assignment, so the drop set is an exact
-    * integer decision too; smallest id kept. */
+    * maxBucketSize). Centroids are given (trained offline or on a
+    * sample, exactly as the paper does with off-the-shelf k-means) and
+    * ride one broadcast kernel: assignment is a zero-exchange projection
+    * and the corpus is never shuffled to build an index. The threshold
+    * compare quantizes to micro units like the assignment, so the drop
+    * set is an exact integer decision too; smallest id kept. */
   def semanticDedup(vectors: DataFrame, centroids: Seq[Seq[Double]],
                     thresholdMicro: Long, superCells: Int = 0): DataFrame = {
     // superCells > 0 switches assignment to the two-level coarse search
@@ -351,6 +349,22 @@ object Similarity {
       .select(col("vec_id"), col("cluster"))
   }
 
+  /** All corpus pairs with cosine ≥ threshold — EXACT, expressed as a
+    * block-partitioned equi-join (a distributed dense GEMM tiling, not a
+    * nested-loop broadcast).
+    *
+    * Why not LSH here: a low threshold like 0.45 gives per-hyperplane-bit
+    * agreement 1-acos(0.45)/π ≈ 0.65 for true pairs vs 0.50 background —
+    * an LSH exponent ρ = ln(1/0.65)/ln(1/0.5) ≈ 0.63, so any banding with
+    * recall ≈ 1 admits nearly all pairs as candidates anyway. Exact
+    * all-pairs scoring is inherently O(n²); what CAN be fixed for a
+    * 1000-executor cluster is the *shape*: each vector is assigned one of
+    * `blocks` block ids, the B(B+1)/2 block pairs are a tiny broadcast
+    * relation, and scoring becomes two equi-joins whose shuffle key (the
+    * block id) spreads the n²/2 comparisons evenly as B balanced tasks —
+    * no BroadcastNestedLoopJoin, no CartesianProduct, no driver-side
+    * anything. For the high-similarity regime (true near-duplicates,
+    * cosine ≥ ~0.9) use [[nearDupPairsLSH]], which IS subquadratic. */
   def cosineNearDupPairs(corpus: DataFrame, threshold: Double, blocks: Int = 32): DataFrame = {
     val spark = corpus.sparkSession
     import spark.implicits._
@@ -433,7 +447,7 @@ object Similarity {
     val h = if (planesPerTable > 0) planesPerTable
             else deriveSrpPlanes(corpus.count())
     val buckets = srpBucketsFn(corpus.sparkSession, dim, tables, h, probes = false)
-    val v = corpus.select(col("vec_id"), dvec(col("embedding")).as("v"))
+    val v = corpusVecs(corpus)
     // Vectors RIDE the band exchange on purpose, and only SURVIVORS of
     // the cosine verify pay the distinct (Blocking.selfJoin: measured,
     // do not "slim" this into an ids-only join)
@@ -458,29 +472,29 @@ object Similarity {
   /** IVF (inverted-file) approximate top-k — the coarse-quantizer
     * counterpart of [[annTopK]]'s LSH tables, the other standard ANN
     * index family. Corpus vectors are assigned to the nearest of C coarse
-    * centroids by a NARROW projection: the centroid table is materialized
-    * once into plan literals (O(C·dim) bytes, exactly like the SRP
+    * centroids by a NARROW projection: the centroid table ships once as
+    * one broadcast kernel ([[cellSimsFn]], O(C·dim) bytes, like the SRP
     * hyperplanes), so the corpus is never shuffled to be indexed. Each
     * query probes its P nearest centroids; exact cosine ranks the union
     * of probed cells. Per-query candidate work is ~corpus × P/C, and the
     * only shuffle in the whole operator is the final top-k window over
     * (qid, vec_id, sim) triples.
     *
-    * Centroids are a deterministic de-biased seed sample of the corpus —
-    * hash-ordered pool + greedy farthest-point, see [[seedSample]]
-    * (round 17; the pre-r17 first-C-by-id rule was biased on
-    * id-correlated corpora). A k-means pass (refineIters) tightens cell
-    * boundaries but not the plan shape, which is what matters at 100 TB.
-    * At production C the
-    * corpus-side assignment cost is O(n·C) — the same term
-    * [[assignClustersHier]] removes for SemDeDup (measured ×128); pass
-    * `superCells ≈ √C` to build the index through the hierarchical
-    * kernel (probe/scan stages unchanged; flat assignment's always-found
-    * self-hit becomes a measured recall statement). Recall characteristics
-    * differ from LSH: a byte-identical duplicate ALWAYS shares the
-    * query's best cell (equal vectors, equal assignment) and is always
-    * found; weakly-similar neighbors spread across cells, so P/C bounds
-    * their hit rate — the sim_ivf oracle emits both contracts as data. */
+    * Centroids are trained deterministically on a de-biased sample of the
+    * corpus — the hash-ordered [[seedPool]], farthest-point-seeded Lloyd
+    * ([[lloydTrain]]); round 17, the pre-r17 first-C-by-id rule was
+    * biased on id-correlated corpora. A k-means pass (refineIters) over
+    * the whole corpus tightens cell boundaries but not the plan shape,
+    * which is what matters at 100 TB. At production C the corpus-side
+    * assignment cost is O(n·C) — the same term [[assignClustersHier]]
+    * removes for SemDeDup (measured ×128); pass `superCells ≈ √C` to build
+    * the index through the hierarchical kernel (probe/scan stages
+    * unchanged; flat assignment's always-found self-hit becomes a measured
+    * recall statement). Recall characteristics differ from LSH: a
+    * byte-identical duplicate ALWAYS shares the query's best cell (equal
+    * vectors, equal assignment) and is always found; weakly-similar
+    * neighbors spread across cells, so P/C bounds their hit rate — the
+    * sim_ivf oracle emits both contracts as data. */
   def ivfTopK(corpus: DataFrame, queries: DataFrame, k: Int,
               cells: Int = 16, probes: Int = 4, refineIters: Int = 0,
               superCells: Int = 0, superProbes: Int = 3): DataFrame = {
@@ -492,16 +506,9 @@ object Similarity {
     val pool: Array[Array[Double]] = seedPool(corpus, cells * 8)
     require(pool.nonEmpty,
       "ivfTopK: corpus is empty — no vectors to sample centroids from")
-    val poolNorm = pool.map { v =>
-      val n = math.sqrt(v.map(x => x * x).sum)
-      val inv = if (n > 0) 1.0 / n else 0.0
-      v.map(_ * inv)
-    }
-    val sampled = lloydTrain(poolNorm, cells)
+    val sampled = lloydTrain(pool.map(unit), cells)
     val cents = (1 to refineIters).foldLeft(sampled)((c, _) => lloydStep(corpus, c))
     val simsTo = cellSimsFn(corpus.sparkSession, cents)
-    // 1-based argmax; ties take the lowest cell id (array_position is first-match)
-    def bestCell(v: Column): Column = array_position(simsTo(v), array_max(simsTo(v)))
     // superCells > 0: the corpus-side index build assigns through the
     // two-level kernel (O((S + P·C/S)·dim)/row — the executable form of
     // the production-C advice above). Query probing stays flat (queries
@@ -519,28 +526,17 @@ object Similarity {
     val assignCell: Column => Column =
       if (superCells > 0)
         hierAssignFn(corpus.sparkSession, cents, superCells, superProbes)
-      else v => bestCell(v)
-    val e = corpus.select(col("vec_id"), dvec(col("embedding")).as("v"))
-      .withColumn("cell", assignCell(col("v")))
-    val qv = queries.select(col("vec_id").as("qid"), dvec(col("embedding")).as("qv"))
-    // probe list: the P nearest centroids per query (query side is tiny)
-    val qprobe = qv
-      .select(col("qid"), posexplode(simsTo(col("qv"))).as(Seq("cidx", "csim")))
-      .select(col("qid"), (col("cidx").cast("bigint") + 1L).as("cell"), col("csim"))
-    val w0 = Window.partitionBy(col("qid")).orderBy(col("csim").desc, col("cell").asc)
-    val probed = qprobe.withColumn("crnk", row_number().over(w0))
-      .filter(col("crnk") <= probes).select(col("qid"), col("cell"))
-    val scored = e.join(broadcast(probed), "cell")
+      else bestCell(simsTo)
+    val e = corpusVecs(corpus).withColumn("cell", assignCell(col("v")))
+    val qv = queryVecs(queries)
+    topK(e.join(broadcast(probeCells(qv, simsTo, probes)), "cell")
       .join(broadcast(qv), "qid")
-      .select(col("qid"), col("vec_id"), cosine(col("v"), col("qv")).as("sim"))
-    val w = Window.partitionBy(col("qid")).orderBy(col("sim").desc, col("vec_id").asc)
-    scored.withColumn("rnk", row_number().over(w)).filter(col("rnk") <= k)
-      .select(col("qid"), col("rnk").cast("bigint").as("rnk"), col("vec_id"))
+      .select(col("qid"), col("vec_id"), cosine(col("v"), col("qv")).as("sim")), k)
   }
 
   /** One Lloyd (k-means) refinement pass over the IVF centroid table:
     * assign every corpus vector to its nearest current centroid — the
-    * same narrow centroids-as-literals projection indexing uses — then
+    * same narrow broadcast-kernel projection indexing uses — then
     * average per (cell, dimension). The shuffle carries only partial
     * (cell, dim, sum, count) rows (C·dim per map partition) and C·dim
     * final rows reach the driver; at 100 TB each pass is one linear scan
@@ -559,7 +555,7 @@ object Similarity {
     val simsTo = cellSimsFn(corpus.sparkSession, cents)
     val assigned = corpus
       .select(dvec(col("embedding")).as("v"))
-      .withColumn("cell", array_position(simsTo(col("v")), array_max(simsTo(col("v")))))
+      .withColumn("cell", bestCell(simsTo)(col("v")))
     val sums = assigned
       .select(col("cell"), posexplode(col("v")).as(Seq("dim", "x")))
       .groupBy(col("cell"), col("dim"))
@@ -576,75 +572,20 @@ object Similarity {
     next
   }
 
-  // ------------------------------------------------------- PQ (scale path 3)
+  // -------------------------------------------- PQ and IVF-PQ (scale path 3)
 
-  /** Product-quantization approximate top-k — the third ANN family next
-    * to SRP-LSH and IVF. Corpus vectors are L2-normalized, split into M
-    * subspaces and encoded as M small centroid indices (8 ints standing
-    * in for 64 floats): the scan that scores candidates reads CODES, not
-    * vectors — at 100 TB this is the difference between scanning the
-    * corpus and scanning 1/32 of it. Queries precompute an ADC lookup
-    * table once ([[graft.functions.PqLut]]); scoring a vector is M table
-    * reads + adds ([[graft.functions.PqAdc]]). The approximate top
-    * `rerank·k` per query are re-ranked EXACTLY (vectors re-attached by
-    * equi-join on the small candidate set), so the emitted ranking is an
-    * exact cosine ordering of an approximate candidate set — recall is
-    * the only approximation, and the sim_pq oracle emits it as data.
-    *
-    * Codebooks are TRAINED, deterministically (round 17): a hash-ordered
-    * uniform pool (bounded driver metadata, immune to id-correlated
-    * content) feeds per-subspace Lloyd ([[lloydTrain]]) — sampled
-    * codewords left quantization error to draw luck. The finished books
-    * materialize as plan literals like the IVF centroids and the LSH
-    * planes: encoding is a narrow projection, the corpus never shuffles
-    * to be indexed. */
+  /** Product-quantization approximate top-k: [[ivfPqTopK]] with ONE
+    * coarse cell that every vector lands in and every query probes, so
+    * the ADC scan covers the whole corpus. Corpus vectors are
+    * L2-normalized, split into M subspaces and encoded as M small
+    * codebook indices (8 ints standing in for 64 floats): the scan that
+    * scores candidates reads CODES, not vectors — at 100 TB the
+    * difference between scanning the corpus and scanning 1/32 of it. The
+    * approximate top `rerank·k` per query re-rank EXACTLY, so recall is
+    * the only approximation, and the sim_pq oracle emits it as data. */
   def pqTopK(corpus: DataFrame, queries: DataFrame, k: Int,
-             m: Int = 8, ksub: Int = 32, rerank: Int = 10): DataFrame = {
-    import graft.functions.{PqAdc, PqEncode, PqLut}
-    // de-biased deterministic TRAINED codebooks (round 17, r16 verdict
-    // ask #7): a hash-ordered uniform pool (bounded driver metadata)
-    // feeds per-subspace Lloyd — see [[lloydTrain]]
-    val pool: Array[Array[Double]] = seedPool(corpus, ksub * 8)
-    require(pool.nonEmpty,
-      "pqTopK: corpus is empty — no vectors to sample codebooks from")
-    val dim = pool(0).length
-    val sub = dim / m
-    require(m * sub == dim, s"dim $dim must divide into $m subspaces")
-    val poolN: Array[Array[Double]] = pool.map { v =>
-      val n = math.sqrt(v.map(x => x * x).sum)
-      val inv = if (n > 0) 1.0 / n else 0.0
-      v.map(_ * inv)
-    }
-    // books(mi)(kk) = codeword kk of subspace mi, Lloyd-trained on the
-    // pool's normalized subvectors
-    val books: Array[Array[Array[Double]]] = Array.tabulate(m) { mi =>
-      lloydTrain(poolN.map(v => Array.tabulate(sub)(j => v(mi * sub + j))), ksub)
-    }
-    def colOf(e: org.apache.spark.sql.catalyst.expressions.Expression) =
-      ColumnBridge.column(e)
-    val codes = corpus.select(col("vec_id"),
-      colOf(PqEncode(ColumnBridge.expression(dvec(col("embedding"))), books)).as("code"))
-    val q = queries.select(col("vec_id").as("qid"),
-      colOf(PqLut(ColumnBridge.expression(dvec(col("embedding"))), books)).as("lut"))
-    // ADC stride must be the ACTUAL codebook size (min(ksub, pool rows)
-    // after training) — PqEncode/PqLut lay codes and LUT out with that
-    // size, so passing the requested ksub on a small corpus would
-    // misalign every subspace after the first
-    val scored = codes.crossJoin(broadcast(q))
-      .select(col("qid"), col("vec_id"),
-        colOf(PqAdc(ColumnBridge.expression(col("code")),
-          ColumnBridge.expression(col("lut")), books(0).length)).as("ascore"))
-    val w0 = Window.partitionBy(col("qid")).orderBy(col("ascore").desc, col("vec_id").asc)
-    val cands = scored.withColumn("arnk", row_number().over(w0))
-      .filter(col("arnk") <= rerank * k).select(col("qid"), col("vec_id"))
-    val exact = cands
-      .join(corpus.select(col("vec_id"), dvec(col("embedding")).as("v")), "vec_id")
-      .join(broadcast(queries.select(col("vec_id").as("qid"), dvec(col("embedding")).as("qv"))), "qid")
-      .select(col("qid"), col("vec_id"), cosine(col("v"), col("qv")).as("sim"))
-    val w = Window.partitionBy(col("qid")).orderBy(col("sim").desc, col("vec_id").asc)
-    exact.withColumn("rnk", row_number().over(w)).filter(col("rnk") <= k)
-      .select(col("qid"), col("rnk").cast("bigint").as("rnk"), col("vec_id"))
-  }
+             m: Int = 8, ksub: Int = 32, rerank: Int = 10): DataFrame =
+    ivfPqTopK(corpus, queries, k, cells = 1, probes = 1, m = m, ksub = ksub, rerank = rerank)
 
   /** IVF-PQ approximate top-k — the composed index every billion-vector
     * deployment actually runs (Jégou et al. 2011; FAISS `IVFx,PQy`):
@@ -654,12 +595,14 @@ object Similarity {
     * only; the approximate top `rerank·k` re-rank EXACTLY, so the output
     * is an exact cosine ordering of an approximate candidate set and
     * recall is the only approximation (emitted as data by the oracle
-    * query, like sim_ivf / sim_pq).
+    * query, like sim_ivf / sim_pq). With `cells = 1, probes = 1` it is
+    * plain PQ ([[pqTopK]]).
     *
-    * Same plan discipline as the parents: centroids AND codebooks are
-    * plan literals (O(C·dim + M·ksub·dim/M) bytes), assignment + encoding
-    * is one narrow projection — the corpus never shuffles to be indexed —
-    * and the only exchanges are the two bounded top-k windows.
+    * Plan discipline: the centroids ride one broadcast kernel
+    * ([[cellSimsFn]]) and the codebooks are bounded expression state
+    * (M·ksub·dim/M doubles); assignment + encoding is one narrow
+    * projection — the corpus never shuffles to be indexed — and the only
+    * exchanges are the two bounded top-k windows.
     *
     * `residual = false` encodes the normalized VECTOR; `residual = true`
     * encodes the CELL RESIDUAL `v̂ − ĉ(cell)` (FAISS-style `IVFx,PQy`
@@ -674,13 +617,9 @@ object Similarity {
   def ivfPqTopK(corpus: DataFrame, queries: DataFrame, k: Int,
                 cells: Int = 16, probes: Int = 4,
                 m: Int = 8, ksub: Int = 32, rerank: Int = 10,
-                residual: Boolean = false): DataFrame = {
-    val scored = ivfPqCandidates(corpus, queries, keep = rerank * k,
-      cells = cells, probes = probes, m = m, ksub = ksub, residual = residual)
-    val w = Window.partitionBy(col("qid")).orderBy(col("sim").desc, col("vec_id").asc)
-    scored.withColumn("rnk", row_number().over(w)).filter(col("rnk") <= k)
-      .select(col("qid"), col("rnk").cast("bigint").as("rnk"), col("vec_id"))
-  }
+                residual: Boolean = false): DataFrame =
+    topK(ivfPqCandidates(corpus, queries, keep = rerank * k,
+      cells = cells, probes = probes, m = m, ksub = ksub, residual = residual), k)
 
   /** The candidate stage of [[ivfPqTopK]], exposed (like [[lshCandidates]])
     * so other re-rankers can consume the composed-index scan: coarse-cell
@@ -691,32 +630,26 @@ object Similarity {
                       m: Int = 8, ksub: Int = 32,
                       residual: Boolean = false): DataFrame = {
     import graft.functions.{PqAdc, PqEncode, PqLut}
-    // de-biased deterministic seeds + TRAINED codebooks (round 17, r16
-    // verdict ask #7): one hash-ordered uniform pool (bounded driver
-    // metadata) serves both needs through DIFFERENT selections — coarse
-    // centroids take the greedy farthest-point picks (spread = coverage,
-    // the [[seedSample]] rule), codebooks come out of per-subspace Lloyd
-    // over the pool ([[lloydTrain]]; sampled codewords left
-    // quantization error to draw luck).
+    // de-biased deterministic TRAINED quantizers (round 17, r16 verdict
+    // ask #7): one hash-ordered uniform pool (bounded driver metadata)
+    // feeds Lloyd ([[lloydTrain]]) twice — once for the coarse centroids,
+    // once per subspace for the codebooks (sampled codewords left
+    // quantization error to draw luck)
     val pool = seedPool(corpus, math.max(cells, ksub) * 8)
     require(pool.nonEmpty,
       "ivfPqTopK: corpus is empty — no vectors to sample centroids from")
     val dim = pool(0).length
     val sub = dim / m
     require(m * sub == dim, s"dim $dim must divide into $m subspaces")
-    def normalized(v: Array[Double]): Array[Double] = {
-      val n = math.sqrt(v.map(x => x * x).sum)
-      val inv = if (n > 0) 1.0 / n else 0.0
-      v.map(_ * inv)
-    }
+    val poolN = pool.map(unit)
     // coarse centroids: Lloyd-trained cell CENTERS over the normalized
     // pool — by-residual coding needs centroids the cell's mass is
     // actually near (a farthest-point pick is an outlier; residuals off
     // it are as large as the raw vectors)
-    val cents = lloydTrain(pool.map(normalized), cells)
+    val cents = lloydTrain(poolN, cells)
     // normalized centroids: the residual frame of reference (assignment by
     // cosine is scale-invariant, so coarse geometry is unchanged)
-    val centsN: Array[Array[Double]] = cents.map(normalized)
+    val centsN: Array[Array[Double]] = cents.map(unit)
     def driverBestCell(vn: Array[Double]): Int = {
       var best = 0; var bestD = Double.MinValue; var c = 0
       while (c < centsN.length) {
@@ -734,9 +667,8 @@ object Similarity {
     // corpus vectors, so no pool vector's residual is exactly zero.)
     val books: Array[Array[Array[Double]]] = {
       val trainFull: Array[Array[Double]] =
-        if (!residual) pool.map(normalized)
-        else pool.map { v =>
-          val vn = normalized(v)
+        if (!residual) poolN
+        else poolN.map { vn =>
           val cn = centsN(driverBestCell(vn))
           Array.tabulate(dim)(j => vn(j) - cn(j))
         }
@@ -744,38 +676,25 @@ object Similarity {
         trainFull.map(t => Array.tabulate(sub)(j => t(mi * sub + j))), ksub))
     }
     val simsTo = cellSimsFn(corpus.sparkSession, cents)
-    def bestCell(v: Column): Column = array_position(simsTo(v), array_max(simsTo(v)))
-    def colOf(e: org.apache.spark.sql.catalyst.expressions.Expression) =
-      ColumnBridge.column(e)
-    // normalized-centroid row lookup, 1-indexed like `cell` (plan-literal
-    // element_at below the broadcast threshold, CellVec above)
+    // normalized-centroid row lookup, 1-indexed like `cell`
     lazy val centNAt: Column => Column = cellVecFn(corpus.sparkSession, centsN)
 
     // one narrow indexing projection: coarse cell + PQ code per vector
     // (residual mode subtracts the assigned cell's normalized centroid
     // inside the same projection — `v` is still pruned after encode)
-    val codes =
-      if (!residual)
-        corpus.select(col("vec_id"), dvec(col("embedding")).as("v"))
-          .select(col("vec_id"), bestCell(col("v")).as("cell"),
-            colOf(PqEncode(ColumnBridge.expression(col("v")), books)).as("code"))
+    val encoded =
+      if (!residual) col("v")
       else {
         val n = sqrt(dot(col("v"), col("v")))
         val vhat = transform(col("v"), x => when(n > 0, x / n).otherwise(lit(0.0)))
-        val resid = zip_with(vhat, centNAt(col("cell")), (a, b) => a - b)
-        corpus.select(col("vec_id"), dvec(col("embedding")).as("v"))
-          .select(col("vec_id"), bestCell(col("v")).as("cell"), col("v"))
-          .select(col("vec_id"), col("cell"),
-            colOf(PqEncode(ColumnBridge.expression(resid), books,
-              normalize = false)).as("code"))
+        zip_with(vhat, centNAt(col("cell")), (a, b) => a - b)
       }
-    val qv = queries.select(col("vec_id").as("qid"), dvec(col("embedding")).as("qv"))
-    val qprobe = qv
-      .select(col("qid"), posexplode(simsTo(col("qv"))).as(Seq("cidx", "csim")))
-      .select(col("qid"), (col("cidx").cast("bigint") + 1L).as("cell"), col("csim"))
-    val w0 = Window.partitionBy(col("qid")).orderBy(col("csim").desc, col("cell").asc)
-    val probedCells = qprobe.withColumn("crnk", row_number().over(w0))
-      .filter(col("crnk") <= probes).select(col("qid"), col("cell"))
+    val codes = corpusVecs(corpus)
+      .select(col("vec_id"), bestCell(simsTo)(col("v")).as("cell"), col("v"))
+      .select(col("vec_id"), col("cell"), ColumnBridge.column(PqEncode(
+        ColumnBridge.expression(encoded), books, normalize = !residual)).as("code"))
+    val qv = queryVecs(queries)
+    val probedCells = probeCells(qv, simsTo, probes)
     // residual scoring needs the additive cell term dot(q, ĉ) per
     // (query, probed cell) — computed on the tiny qid×probes table, never
     // on the corpus scan
@@ -784,23 +703,22 @@ object Similarity {
       else probedCells.join(qv, "qid")
         .select(col("qid"), col("cell"),
           dot(col("qv"), centNAt(col("cell"))).as("cterm"))
-    val qlut = queries.select(col("vec_id").as("qid"),
-      colOf(PqLut(ColumnBridge.expression(dvec(col("embedding"))), books)).as("lut"))
+    val qlut = qv.select(col("qid"),
+      ColumnBridge.column(PqLut(ColumnBridge.expression(col("qv")), books)).as("lut"))
     // the scan: codes in probed cells only, scored via the broadcast LUT;
-    // residual mode adds the broadcast per-cell offset — same scan shape
-    val adc = colOf(PqAdc(ColumnBridge.expression(col("code")),
+    // residual mode adds the broadcast per-cell offset — same scan shape.
+    // The ADC stride is the ACTUAL codebook size (min(ksub, pool rows)
+    // after training): PqEncode/PqLut lay codes and LUT out with that
+    // size, so the requested ksub on a small corpus would misalign every
+    // subspace after the first
+    val adc = ColumnBridge.column(PqAdc(ColumnBridge.expression(col("code")),
       ColumnBridge.expression(col("lut")), books(0).length))
     val scored = codes.join(broadcast(probed), "cell")
       .join(broadcast(qlut), "qid")
       .select(col("qid"), col("vec_id"),
         (if (!residual) adc else col("cterm") + adc).as("ascore"))
-    val w1 = Window.partitionBy(col("qid")).orderBy(col("ascore").desc, col("vec_id").asc)
-    val cands = scored.withColumn("arnk", row_number().over(w1))
-      .filter(col("arnk") <= keep).select(col("qid"), col("vec_id"))
-    cands
-      .join(corpus.select(col("vec_id"), dvec(col("embedding")).as("v")), "vec_id")
-      .join(broadcast(qv), "qid")
-      .select(col("qid"), col("vec_id"), cosine(col("v"), col("qv")).as("sim"))
+    rerankExact(topPerQuery(scored, keep, "ascore").select(col("qid"), col("vec_id")),
+      corpus, queries)
   }
 
   // ------------------------------------------------------- LSH (scale path)
@@ -828,83 +746,29 @@ object Similarity {
     math.min(24, math.max(4, math.ceil(math.log(buckets) / math.log(2.0)).toInt))
   }
 
-  /** Deterministic, de-biased index seeds (round 17, r16 verdict ask #7).
+  /** Deterministic, de-biased training pool for every index build
+    * (round 17, r16 verdict ask #7): the first `n` vectors in
+    * (xxhash64(vec_id), vec_id) order — uniform over the corpus,
+    * id-independent, and bounded driver metadata like every centroid
+    * collect.
     *
     * The pre-r17 rule — first K vectors by `vec_id` — is biased on any
     * corpus whose content correlates with id (crawl order): the codebook
-    * describes the crawl's first shard. The naive fix, a plain
-    * xxhash64-ordered sample, was MEASURED here to be worse where it
-    * counts: a uniform sample of K=16 leaves clusters uncovered at
-    * non-trivial rates (coupon-collector odds), and the driver fixtures'
-    * recall@5 floor collapsed 2–4 → 1 across the whole IVF/PQ family
-    * (sf0.01/sf0.1; SCALING.md "ANN recall per driver SF"), with hier-P1
-    * even losing self-hits.
-    *
-    * So the shipped rule does both: collect a hash-ordered POOL of
-    * `poolFactor·k` vectors (uniform over the corpus, id-independent,
-    * still bounded driver metadata like every centroid collect), then
-    * pick k by GREEDY FARTHEST-POINT over angular distance — the
-    * k-center / k-means++ seeding discipline: each pick maximizes its
-    * minimum distance to the picked set, so every mass concentration the
-    * pool touches gets a seed before any gets two. Fully deterministic:
-    * pool order is (xxhash64(vec_id), vec_id), the walk starts at the
-    * pool head, ties break on pool index. O(poolFactor·k²·dim) driver
-    * arithmetic — trivial for production K (≤ 2²⁰ cells means the POOL
-    * collect, not this loop, is the bound). */
-  private[graft] def seedSample(corpus: DataFrame, k: Int,
-                                poolFactor: Int = 8): Array[Array[Double]] = {
-    val pool = seedPool(corpus, math.max(k, k * poolFactor))
-    farthestPoints(pool, k)
-  }
-
-  /** The hash-ordered uniform pool behind [[seedSample]] — also used
-    * directly where a UNIFORM (non-extreme) deterministic sample is the
-    * right training set (residual codebooks: farthest-point picks are
-    * boundary points whose residuals are atypically large). */
+    * describes the crawl's first shard. A plain hash-ordered sample of K
+    * used directly as centroids was MEASURED here to be worse where it
+    * counts: K=16 uniform picks leave clusters uncovered at non-trivial
+    * rates (coupon-collector odds), and the driver fixtures' recall@5
+    * floor collapsed 2–4 → 1 across the whole IVF/PQ family
+    * (sf0.01/sf0.1; SCALING.md "ANN recall per driver SF"). So callers
+    * collect a pool of 8·K and train K centers on it with
+    * [[lloydTrain]], whose greedy farthest-point seeding gives every mass
+    * concentration the pool touches a seed before any gets two. */
   private[graft] def seedPool(corpus: DataFrame, n: Int): Array[Array[Double]] =
     corpus
       .orderBy(xxhash64(col("vec_id")), col("vec_id"))
       .limit(n)
       .select(dvec(col("embedding")).as("v"))
       .collect().map(_.getSeq[Double](0).toArray)
-
-  /** Greedy farthest-point (k-center) selection over angular distance —
-    * deterministic: starts at the pool head, ties break on pool index. */
-  private[graft] def farthestPoints(pool: Array[Array[Double]],
-                                    k: Int): Array[Array[Double]] = {
-    if (pool.length <= k) pool
-    else {
-      val dim = pool(0).length
-      val norm = pool.map { v =>
-        val n = math.sqrt(v.map(x => x * x).sum)
-        val inv = if (n > 0) 1.0 / n else 0.0
-        v.map(_ * inv)
-      }
-      val picked = new Array[Int](k)
-      picked(0) = 0
-      // minDist(i) = min over picked of angular distance (1 - cosine)
-      val minDist = Array.fill(pool.length)(Double.MaxValue)
-      var p = 0
-      while (p + 1 < k) {
-        val last = norm(picked(p))
-        var i = 0
-        var best = -1
-        var bestD = -1.0
-        while (i < pool.length) {
-          var d = 0.0; var j = 0
-          while (j < dim) { d += norm(i)(j) * last(j); j += 1 }
-          val dist = 1.0 - d
-          if (dist < minDist(i)) minDist(i) = dist
-          if (minDist(i) > bestD + 1e-15) { bestD = minDist(i); best = i }
-          i += 1
-        }
-        picked(p + 1) = best
-        minDist(best) = -1.0 // never re-pick
-        p += 1
-      }
-      picked.map(pool)
-    }
-  }
 
   /** Driver-side Lloyd (k-means) training over a bounded pool
     * (round 17): quantizers built from SAMPLED vectors leave their error
@@ -919,7 +783,7 @@ object Similarity {
     * their previous centroid; the training set is the bounded
     * [[seedPool]] collect, so this is O(|pool|·k·iters·dim) driver
     * arithmetic on driver metadata — the plan still sees only the
-    * finished literal. */
+    * finished table. */
   private[graft] def lloydTrain(train: Array[Array[Double]], k: Int,
                                       iters: Int = 8): Array[Array[Double]] = {
     if (train.isEmpty) return Array.empty
@@ -997,10 +861,9 @@ object Similarity {
     }.reduce(_ + _)
 
   /** Builder for the one-kernel SRP banding column: flattens the plane
-    * matrix, ships it ONCE as a broadcast (the [[cellSimsFn]] hybrid
-    * discipline — hyperplane matrices are tables·h·dim doubles, always
-    * past the literal threshold at production widths), and returns the
-    * column factory. `probes = true` emits own-bucket + Hamming-1 probes
+    * matrix, ships it ONCE as a broadcast (the [[cellSimsFn]]
+    * discipline — hyperplane matrices are tables·h·dim doubles), and
+    * returns the column factory. `probes = true` emits own-bucket + Hamming-1 probes
     * per table (the query side); false emits one bucket per table. The
     * `coalesce` keeps NULL vectors on the literal form's bucket-0 path —
     * see [[graft.functions.SrpBuckets]]. */
@@ -1012,20 +875,8 @@ object Similarity {
     // reclaim — drop them whenever any session builds a kernel, so the
     // map holds live sessions only (the memo below documents the scope)
     srpPlanesBc.keySet.removeIf(k => k._1.sparkContext.isStopped)
-    val bc = srpPlanesBc.computeIfAbsent((spark, dim, tables, perTable), _ => {
-      val ps = planes(dim, tables, perTable)
-      val flat = new Array[Double](tables * perTable * dim)
-      var t = 0
-      while (t < tables) {
-        var j = 0
-        while (j < perTable) {
-          System.arraycopy(ps(t)(j), 0, flat, (t * perTable + j) * dim, dim)
-          j += 1
-        }
-        t += 1
-      }
-      spark.sparkContext.broadcast(flat)
-    })
+    val bc = srpPlanesBc.computeIfAbsent((spark, dim, tables, perTable),
+      _ => spark.sparkContext.broadcast(planes(dim, tables, perTable).flatten.flatten))
     v => ColumnBridge.column(graft.functions.SrpBuckets(
       ColumnBridge.expression(coalesce(v, lit(Array.empty[Double]))),
       bc, tables, perTable, dim, probes))
@@ -1069,18 +920,14 @@ object Similarity {
     val e = corpus.select(col("vec_id"), explode(tableBuckets(dvec(col("embedding")))).as("tb"))
     // queries: per table, own bucket + every Hamming-1 probe
     val probes = srpBucketsFn(spark, dim, tables, perTable, probes = true)
-    val q = queries.select(col("vec_id").as("qid"), dvec(col("embedding")).as("qv"))
+    val q = queryVecs(queries)
       .select(col("qid"), col("qv"), explode(probes(col("qv"))).as("tb"))
     // dedup candidates on the narrow (qid, vec_id) pair — shuffling the
     // full embedding vectors through the distinct would dominate the
-    // exchange at scale; the vectors are re-attached afterwards (corpus by
-    // equi-join on the small candidate set, queries by broadcast)
+    // exchange at scale; [[rerankExact]] re-attaches the vectors afterwards
     val cands = e.join(broadcast(q), "tb")
       .select(col("qid"), col("vec_id")).distinct()
-    cands
-      .join(corpus.select(col("vec_id"), dvec(col("embedding")).as("v")), "vec_id")
-      .join(broadcast(queries.select(col("vec_id").as("qid"), dvec(col("embedding")).as("qv"))), "qid")
-      .select(col("qid"), col("vec_id"), cosine(col("v"), col("qv")).as("sim"))
+    rerankExact(cands, corpus, queries)
   }
 
   /** Approximate top-k: exact rank within the [[lshCandidates]] set.
@@ -1088,12 +935,8 @@ object Similarity {
     * the knob that makes 100 TB ANN feasible. */
   def annTopK(corpus: DataFrame, queries: DataFrame, k: Int, dim: Int,
               tables: Int = Tables,
-              planesPerTable: Int = HyperPlanes): DataFrame = {
-    val scored = lshCandidates(corpus, queries, dim, tables, planesPerTable)
-    val w = Window.partitionBy(col("qid")).orderBy(col("sim").desc, col("vec_id").asc)
-    scored.withColumn("rnk", row_number().over(w)).filter(col("rnk") <= k)
-      .select(col("qid"), col("rnk").cast("bigint").as("rnk"), col("vec_id"))
-  }
+              planesPerTable: Int = HyperPlanes): DataFrame =
+    topK(lshCandidates(corpus, queries, dim, tables, planesPerTable), k)
 
   // ------------------------------------------------------- MMR re-rank
 
@@ -1141,32 +984,21 @@ object Similarity {
         s"mmrSelect requires an integral vec_id; $side has ${dt.simpleString}")
     }
     val lam = lambdaPermille.toLong
-    val e = corpus.select(col("vec_id"), dvec(col("embedding")).as("v"))
-    val q = queries.select(col("vec_id").as("qid"), dvec(col("embedding")).as("qv"))
-    val wTop = Window.partitionBy(col("qid")).orderBy(col("rel").desc, col("vec_id").asc)
-    // candidate set: top-`cands` by relevance, micro-quantized. Both
-    // generators end in the SAME (qid, vec_id, rel) shape and the same
+    val e = corpusVecs(corpus)
+    // candidate set: top-`cands` by relevance, micro-quantized. Every
+    // generator ends in the SAME (qid, vec_id, sim) shape and the same
     // deterministic greedy trace — the only difference is whether the
-    // relevance pool came from a full scan or the LSH bands.
-    val scored = candidates match {
-      case MmrCandidates.Exact =>
-        e.crossJoin(broadcast(q))
-          .select(col("qid"), col("vec_id"),
-            round(cosine(col("v"), col("qv")) * 1e6).cast("long").as("rel"))
-      case MmrCandidates.Lsh(dim, tables) =>
-        lshCandidates(corpus, queries, dim, tables)
-          .select(col("qid"), col("vec_id"),
-            round(col("sim") * 1e6).cast("long").as("rel"))
+    // relevance pool came from a full scan, the LSH bands or the IVF-PQ
+    // codes.
+    val scored = (candidates match {
+      case MmrCandidates.Exact => exactScan(corpus, queries)
+      case MmrCandidates.Lsh(dim, tables) => lshCandidates(corpus, queries, dim, tables)
       case MmrCandidates.IvfPq(cells, probes, m, ksub, rerank) =>
         ivfPqCandidates(corpus, queries, keep = rerank * cands,
-            cells = cells, probes = probes, m = m, ksub = ksub)
-          .select(col("qid"), col("vec_id"),
-            round(col("sim") * 1e6).cast("long").as("rel"))
-    }
+          cells = cells, probes = probes, m = m, ksub = ksub)
+    }).select(col("qid"), col("vec_id"), round(col("sim") * 1e6).cast("long").as("rel"))
     Checkpoints.scope() { s =>
-      val cand = s.checkpoint(scored
-        .withColumn("__r", row_number().over(wTop)).filter(col("__r") <= cands)
-        .drop("__r"))
+      val cand = s.checkpoint(topPerQuery(scored, cands, "rel").drop("rnk"))
       // candidate-candidate similarity matrix (|q|·cands² tiny rows)
       val cv = cand.join(e, "vec_id")
       val ca = cv.select(col("qid"), col("vec_id").as("id_a"), col("v").as("va"))

@@ -356,8 +356,8 @@ object DedupQueries {
       .copy(role = Some(Strawman("dedup_embedding_lsh_derived"))),
 
     // SemDeDup (Abbas et al. 2023): cluster-scoped embedding dedup —
-    // nearest-centroid assignment (literal centroids, zero-exchange
-    // projection), pairs only WITHIN a cluster (C balanced tasks, the
+    // nearest-centroid assignment (fixed centroids on one broadcast
+    // kernel, zero-exchange projection), pairs only WITHIN a cluster (C balanced tasks, the
     // subquadratic shape all-pairs dedup_embedding cannot have), keep
     // the smallest id of any ≥-threshold pair; micro-quantized integer
     // similarities make assignment + drops engine-exact

@@ -18,7 +18,7 @@ object SimQueries {
     * first K vectors by id, and the query set is `vec_id < 10` — the
     * queries WERE the centroids, so per-query recall was privileged.
     * De-biasing the seeds (hash-ordered pool + farthest-point/Lloyd,
-    * [[graft.operators.Similarity.seedSample]]) exposed the real
+    * [[graft.operators.Similarity.seedPool]]) exposed the real
     * per-query recall distribution of these small index configurations
     * (16 cells / 4 probes): mins of 1–2, too variable to pin per qid
     * without the cut going vacuous. The honest replacement is the

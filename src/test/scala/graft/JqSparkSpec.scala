@@ -100,7 +100,7 @@ class JqSparkSpec extends SparkTestBase {
   test("Variant interop: parse_json → jq pipeline") {
     val df = spark.read.parquet(s"$sfDir/events.parquet")
       .select(col("event_id"), parse_json(col("props")).as("vdoc"))
-    val out = df.select(col("event_id"), Jq.longVariant(".k + 1", col("vdoc")).as("k1"))
+    val out = df.select(col("event_id"), Jq.long(".k + 1", col("vdoc")).as("k1"))
       .limit(5).collect()
     assert(out.nonEmpty && out.forall(r => r.getLong(1) >= 1))
   }

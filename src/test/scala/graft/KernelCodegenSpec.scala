@@ -67,6 +67,17 @@ class KernelCodegenSpec extends SparkTestBase {
         col2(CborDecodeExpr(expr2(col2(CborEncodeExpr(p))))).as("cbor_rt"),
         col2(MsgPackDecodeExpr(expr2(col2(MsgPackEncodeExpr(p))))).as("mp_rt")): _*)
       assert(r.where(col("cbor_rt").isNotNull && col("mp_rt").isNotNull).count() > 0)
+      // jq_eval_meta over a meta column that is NULL on odd ids: a NULL
+      // meta still runs the pipeline, with no envelope
+      val meta = when(col("event_id") % 2 === 0, lit("""{"sources":["s"]}"""))
+      val m = ev.select(col("event_id"),
+          element_at(Jq.evalWithMeta(".", col("props"), meta), 1).as("o"))
+        .collect().map(r => (r.getLong(0), r.getStruct(1).getString(1)))
+      assert(m.length == 50 && m.map(_._1 % 2).toSet == Set(0L, 1L))
+      m.foreach { case (id, env) =>
+        assert(env == (if (id % 2 == 0) """{"domains":[],"keys":[],"sources":["s"]}""" else "null"),
+          s"event $id: $env")
+      }
     } finally spark.conf.unset("spark.sql.codegen.fallback")
   }
 }

@@ -62,54 +62,6 @@ class OperatorsSpec extends SparkTestBase {
     assert(mean >= 0.5, s"mean recall@5 too low: $mean")
   }
 
-  test("IVF top-k: self/identical always found, recall@5 against brute force, no corpus shuffle for indexing") {
-    val queries = emb.filter(col("vec_id") < 20)
-    val ivf = Similarity.ivfTopK(emb, queries, 5)
-    val rows = ivf.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-    // an identical vector shares the query's best cell deterministically —
-    // every in-corpus query must find ITSELF at rank 1 (sim = 1)
-    rows.filter(_._2 == 1L).foreach { case (q, _, id) => assert(q == id, s"query $q top-1 was $id") }
-    val exact = Similarity.cosineTopK(emb, queries, 5)
-      .collect().map(r => (r.getLong(0), r.getLong(2))).groupBy(_._1)
-    val approx = rows.map(t => (t._1, t._3)).groupBy(_._1)
-    val recalls = exact.keys.toSeq.map { q =>
-      val e = exact(q).map(_._2).toSet
-      val a = approx.getOrElse(q, Array.empty).map(_._2).toSet
-      (e intersect a).size.toDouble / e.size
-    }
-    val mean = recalls.sum / recalls.size
-    assert(mean >= 0.5, s"mean recall@5 too low: $mean")
-    // plan shape: indexing is a narrow projection (centroids are plan
-    // literals), so the corpus reaches its joins via broadcast with no
-    // Exchange. The only hashpartitioning exchanges allowed are per-QUERY
-    // windows (probe ranking over ~|queries| rows, final top-k over the
-    // candidate triples) — both keyed on qid, never on corpus columns
-    val plan = ivf.queryExecution.executedPlan.toString.split("== Initial Plan ==")(0)
-    val keys = "Exchange hashpartitioning\\((\\w+)".r.findAllMatchIn(plan).map(_.group(1)).toSeq
-    assert(keys.nonEmpty && keys.forall(_.startsWith("qid")),
-      s"every exchange must key on qid (query side), got $keys in:\n$plan")
-  }
-
-  test("PQ top-k: ADC candidates + exact re-rank, self always found") {
-    val queries = emb.filter(col("vec_id") < 20)
-    val pq = Similarity.pqTopK(emb, queries, 5)
-    val rows = pq.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-    // the exact re-rank puts the byte-identical vector (cosine 1) first
-    // whenever ADC admits it — and a vector's ADC score against its own
-    // code is the max the code can give, so self is always admitted
-    rows.filter(_._2 == 1L).foreach { case (q, _, id) => assert(q == id, s"query $q top-1 was $id") }
-    val exact = Similarity.cosineTopK(emb, queries, 5)
-      .collect().map(r => (r.getLong(0), r.getLong(2))).groupBy(_._1)
-    val approx = rows.map(t => (t._1, t._3)).groupBy(_._1)
-    val recalls = exact.keys.toSeq.map { q =>
-      val e = exact(q).map(_._2).toSet
-      val a = approx.getOrElse(q, Array.empty).map(_._2).toSet
-      (e intersect a).size.toDouble / e.size
-    }
-    val mean = recalls.sum / recalls.size
-    assert(mean >= 0.4, s"mean recall@5 too low: $mean")
-  }
-
   test("hardNegatives: self and near-positives excluded, exact rank of the rest") {
     import spark.implicits._
     // cos(q, dup)=1 and cos(q, near)≈0.994 are positives (≥0.9) → excluded;
@@ -126,31 +78,6 @@ class OperatorsSpec extends SparkTestBase {
         fixture, fixture.filter(col("vec_id") === 0L), k = 5, posThreshold = 0.9)
       .collect().map(r => (r.getLong(1), r.getLong(2)))
     assert(got.toSeq === Seq((1L, 3L), (2L, 4L), (3L, 5L)))
-  }
-
-  test("IVF-PQ: probed-cell code scan + exact re-rank, self found, exchanges stay query-keyed") {
-    val queries = emb.filter(col("vec_id") < 20)
-    val ivfpq = Similarity.ivfPqTopK(emb, queries, 5)
-    val rows = ivfpq.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-    // identical vector → identical coarse cell (always probed first) and
-    // max ADC score against its own code → admitted → exact re-rank top-1
-    rows.filter(_._2 == 1L).foreach { case (q, _, id) => assert(q == id, s"query $q top-1 was $id") }
-    val exact = Similarity.cosineTopK(emb, queries, 5)
-      .collect().map(r => (r.getLong(0), r.getLong(2))).groupBy(_._1)
-    val approx = rows.map(t => (t._1, t._3)).groupBy(_._1)
-    val recalls = exact.keys.toSeq.map { q =>
-      val e = exact(q).map(_._2).toSet
-      val a = approx.getOrElse(q, Array.empty).map(_._2).toSet
-      (e intersect a).size.toDouble / e.size
-    }
-    val mean = recalls.sum / recalls.size
-    assert(mean >= 0.4, s"mean recall@5 too low: $mean")
-    // indexing (cell + code) is a narrow projection over plan-literal
-    // centroids/codebooks — every exchange must key on the query side
-    val plan = ivfpq.queryExecution.executedPlan.toString.split("== Initial Plan ==")(0)
-    val keys = "Exchange hashpartitioning\\((\\w+)".r.findAllMatchIn(plan).map(_.group(1)).toSeq
-    assert(keys.nonEmpty && keys.forall(_.startsWith("qid")),
-      s"every exchange must key on qid (query side), got $keys in:\n$plan")
   }
 
   test("IVF with k-means refinement keeps the recall contract and is partitioning-invariant") {
@@ -300,29 +227,6 @@ class OperatorsSpec extends SparkTestBase {
       assert(out.as[(Int, Int)].collect().sorted.toSeq == Seq((1, 1), (2, 1), (3, 3)))
       Checkpoints.release(out)
     }
-  }
-
-  test("pqTopK: corpus smaller than the requested codebook size stays aligned") {
-    // 12 vectors < default ksub=32 — the ADC stride must follow the actual
-    // sampled codebook size or subspaces past the first read out of bounds
-    val small = emb.filter(col("vec_id") < 12)
-    val queries = small.filter(col("vec_id") < 3)
-    val pq = Similarity.pqTopK(small, queries, 5)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-    assert(pq.length == 3 * 5)
-    // exact re-rank on a corpus this small must reproduce brute force
-    val exact = Similarity.cosineTopK(small, queries, 5)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-    assert(pq.toSet == exact.toSet)
-  }
-
-  test("ivfTopK/pqTopK: empty corpus fails fast with a clear message") {
-    val empty = emb.filter(col("vec_id") < 0)
-    val queries = emb.filter(col("vec_id") < 3)
-    val e1 = intercept[IllegalArgumentException](Similarity.ivfTopK(empty, queries, 5))
-    assert(e1.getMessage.contains("corpus is empty"))
-    val e2 = intercept[IllegalArgumentException](Similarity.pqTopK(empty, queries, 5))
-    assert(e2.getMessage.contains("corpus is empty"))
   }
 
   test("dedup leaves no cached blocks behind; withShingles releases its cache") {

@@ -168,15 +168,6 @@ class Round10OpsSpec extends SparkTestBase {
     assert(got.sorted.toSeq == again.sorted.toSeq)
   }
 
-  test("ivfPqTopK unchanged by the candidate-stage refactor: self-hit at rank 1") {
-    val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
-    val qs = emb.filter(col("vec_id") < 5)
-    val top = Similarity.ivfPqTopK(emb, qs, k = 3)
-      .filter(col("rnk") === 1).collect().map(r => (r.getLong(0), r.getLong(2)))
-    // identical vector ⇒ same cell, ADC max, exact sim 1 ⇒ always rank 1
-    assert(top.forall { case (q, v) => q == v }, top.mkString(","))
-  }
-
   test("LSH candidate generation never cross-joins the corpus") {
     val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
     val qs = emb.filter(col("vec_id") < 4)

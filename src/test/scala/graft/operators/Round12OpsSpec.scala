@@ -1,50 +1,16 @@
 package graft.operators
 
 import graft.SparkTestBase
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** Specs for the round-12 changes (round-11 VERDICT/ADVICE follow-ups):
-  * the residual IVF-PQ path, the broadcast-centroid variant, and the
-  * expression-based BPE encode. */
+  * the residual codebook, the broadcast-centroid kernels against the
+  * literal formulation they replace, and the expression-based BPE encode
+  * (the residual and production-C top-k specs live in SimilaritySpec). */
 class Round12OpsSpec extends SparkTestBase {
 
   private def emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
-
-  test("ivfPqTopK residual: self-hit at rank 1 and recall >= non-residual at fixed rerank") {
-    val corpus = emb
-    val qs = corpus.filter(col("vec_id") < 10)
-    val exact = Similarity.cosineTopK(corpus, qs, k = 5)
-      .select(col("qid"), col("vec_id")).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    def hits(residual: Boolean): Int =
-      Similarity.ivfPqTopK(corpus, qs, k = 5, residual = residual)
-        .select(col("qid"), col("vec_id")).collect()
-        .count(r => exact((r.getLong(0), r.getLong(1))))
-    val res = Similarity.ivfPqTopK(corpus, qs, k = 5, residual = true)
-    // an identical copy of the query lives in the corpus: it shares the
-    // query's cell, its residual code is the query's own, and the exact
-    // re-rank puts it first — rank 1 must be the self-hit for every query
-    val self = res.filter(col("rnk") === 1)
-      .select(col("qid"), col("vec_id")).collect()
-    assert(self.length == 10 && self.forall(r => r.getLong(0) == r.getLong(1)),
-      s"residual self-hit broken: ${self.mkString(",")}")
-    // the reason by-residual coding exists: residuals span a tighter
-    // ball than raw vectors, so the same codebook budget quantizes
-    // finer. Round 17 (de-biased trained seeds): with only 10 queries
-    // the ordering is noise-bounded — measured resid-vs-raw at
-    // sf0.001/0.01/0.1 is +1/+1/−5 hits of 50 — so the pin is
-    // near-parity with slack, not strict superiority (the pre-r17
-    // strict pin was an artifact of the biased first-K-by-id seeds,
-    // which planted the query vectors in the codebook).
-    val (hRes, hRaw) = (hits(residual = true), hits(residual = false))
-    assert(hRes >= hRaw - 6, s"residual recall $hRes collapsed vs non-residual $hRaw")
-    // and the residual path must itself clear the oracle's corpus-level
-    // cut (>= 22 total hits, the sim_ivfpq_residual contract)
-    val total = Similarity.ivfPqTopK(corpus, qs, k = 5, residual = true)
-      .select(col("qid"), col("vec_id")).collect()
-      .count(r => exact((r.getLong(0), r.getLong(1))))
-    assert(total >= 22, s"residual macro recall under oracle cut: $total")
-  }
 
   test("residual codebook trains past the centroid prefix (non-zero residuals)") {
     // the first `cells` deterministic samples ARE the cell centroids; a
@@ -93,16 +59,18 @@ class Round12OpsSpec extends SparkTestBase {
       .select(transform(col("embedding"), x => x.cast("double")).as("v"))
       .collect().map(_.getSeq[Double](0).toArray)
     val v = transform(col("embedding"), x => x.cast("double"))
-    def simsWith(threshold: Int): Array[(Long, Seq[Double], Long)] = {
-      val f = Similarity.cellSimsFn(spark, cents, threshold)
+    // the literal formulation the kernel replaces: C cosine trees over
+    // plan-literal centroids
+    val literal: Column => Column = x => array(cents.toIndexedSeq.map(c =>
+      Similarity.cosine(x, array(c.toIndexedSeq.map(lit(_)): _*))): _*)
+    def simsWith(f: Column => Column): Array[(Long, Seq[Double], Long)] =
       corpus.select(col("vec_id"), f(v).as("sims"),
           array_position(f(v), array_max(f(v))).as("cell"))
         .collect()
         .map(r => (r.getLong(0), r.getSeq[Double](1), r.getLong(2)))
         .sortBy(_._1)
-    }
-    val litPath = simsWith(threshold = 1000) // 16 < 1000 → plan literals
-    val bcPath = simsWith(threshold = 1)     // 16 >= 1  → broadcast kernel
+    val litPath = simsWith(literal)
+    val bcPath = simsWith(Similarity.cellSimsFn(spark, cents))
     // BIT equality of every similarity (same accumulation order by
     // construction) — so argmax assignments cannot diverge either
     assert(litPath.length == bcPath.length && litPath.length == 500)
@@ -114,13 +82,14 @@ class Round12OpsSpec extends SparkTestBase {
 
   test("cellVec: broadcast path equals element_at over the literal table") {
     val cents = Array.tabulate(8)(i => Array.tabulate(4)(j => i * 10.0 + j))
-    def vecsWith(threshold: Int): Seq[(Long, Seq[Double])] = {
-      val f = Similarity.cellVecFn(spark, cents, threshold)
+    val centsLit = array(cents.toIndexedSeq.map(c => array(c.toIndexedSeq.map(lit(_)): _*)): _*)
+    def vecsWith(f: Column => Column): Seq[(Long, Seq[Double])] = {
       val idx = spark.range(0, 10).select((col("id") % 8 + 1).as("cell"))
       idx.select(col("cell"), f(col("cell")).as("v")).collect()
         .map(r => (r.getLong(0), r.getSeq[Double](1))).sortBy(_._1).toSeq
     }
-    assert(vecsWith(1000) == vecsWith(1))
+    assert(vecsWith(i => element_at(centsLit, i.cast("int"))) ==
+      vecsWith(Similarity.cellVecFn(spark, cents)))
   }
 
   test("DecodeMediaExpr: differently-configured decoder instances never compare equal") {
@@ -150,24 +119,6 @@ class Round12OpsSpec extends SparkTestBase {
     val shared = new Round12OpsSpec.ConfiguredDecoder(scale = 3)
     assert(DecodeMediaExpr(kind, content, Seq(shared), None) ==
       DecodeMediaExpr(kind, content, Seq(shared), None))
-  }
-
-  test("ivfTopK at production cell counts: plan stays bounded via broadcast centroids") {
-    val corpus = emb
-    val qs = corpus.filter(col("vec_id") < 3)
-    // cells=1024 asks for more centroids than the fixture holds; the 500
-    // collected put the operator above CentroidBroadcastThreshold, so the
-    // centroid matrix must ride as ONE broadcast, not 500×dim literals
-    val q = Similarity.ivfTopK(corpus, qs, k = 3, cells = 1024, probes = 4)
-    val opt = q.queryExecution.optimizedPlan.toString()
-    assert(opt.contains("cell_sims"), s"large-C plan should use the broadcast kernel")
-    // the plan text would be tens of MB with 500×dim literal doubles; the
-    // broadcast form keeps it bounded
-    assert(opt.length < 200000, s"plan blew up: ${opt.length} chars")
-    // and the operator still answers: self-hit at rank 1 for every query
-    val got = q.filter(col("rnk") === 1).select(col("qid"), col("vec_id"))
-      .collect().map(r => (r.getLong(0), r.getLong(1)))
-    assert(got.length == 3 && got.forall(t => t._1 == t._2), got.mkString(","))
   }
 
   test("bm25TopK: single-query rides the qid-partitioned multi path (no unpartitioned window)") {

@@ -45,24 +45,6 @@ class Round15OpsSpec extends SparkTestBase {
     assert(a2 > a1, "on this corpus P=2 must recover real P=1 parking losses")
   }
 
-  test("ivfTopK default superProbes keeps the measured macro-recall floor") {
-    // the sim_ivf_hier oracle cut is a corpus-level sum >= 24 (round 17:
-    // per-qid floors went to 1 with de-biased seeds — see
-    // graft.queries.SimQueries.annAggContract) — this pins the measured
-    // macro floor the cut rests on at the spec SF (sums 30/33/32 across
-    // driver SFs)
-    val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
-    val qs = emb.filter(col("vec_id") < 10)
-    val ivf = Similarity.ivfTopK(emb, qs, k = 5, superCells = 4)
-    val exact = Similarity.cosineTopK(emb, qs, k = 5)
-    val sumHits = exact.join(
-        ivf.select(col("qid"), col("vec_id"), lit(1L).as("hit")),
-        Seq("qid", "vec_id"), "left")
-      .agg(sum(coalesce(col("hit"), lit(0L))).as("h"))
-      .head().getLong(0)
-    assert(sumHits >= 24, s"multi-probe build macro floor regressed: $sumHits < 24")
-  }
-
   private def pairSet(df: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
     df.select("id_a", "id_b").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet

@@ -1,0 +1,206 @@
+package graft.operators
+
+import org.apache.spark.sql.functions._
+import graft.SparkTestBase
+
+/** The vector-search family of [[Similarity]]: IVF, PQ (one-cell IVF-PQ)
+  * and IVF-PQ top-k — self-hits, recall against brute force, plan shape,
+  * the residual and hierarchical builds, and the degenerate corpora. */
+class SimilaritySpec extends SparkTestBase {
+
+  private def emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
+
+  test("IVF top-k: self/identical always found, recall@5 against brute force, no corpus shuffle for indexing") {
+    val queries = emb.filter(col("vec_id") < 20)
+    val ivf = Similarity.ivfTopK(emb, queries, 5)
+    val rows = ivf.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+    // an identical vector shares the query's best cell deterministically —
+    // every in-corpus query must find ITSELF at rank 1 (sim = 1)
+    rows.filter(_._2 == 1L).foreach { case (q, _, id) => assert(q == id, s"query $q top-1 was $id") }
+    val exact = Similarity.cosineTopK(emb, queries, 5)
+      .collect().map(r => (r.getLong(0), r.getLong(2))).groupBy(_._1)
+    val approx = rows.map(t => (t._1, t._3)).groupBy(_._1)
+    val recalls = exact.keys.toSeq.map { q =>
+      val e = exact(q).map(_._2).toSet
+      val a = approx.getOrElse(q, Array.empty).map(_._2).toSet
+      (e intersect a).size.toDouble / e.size
+    }
+    val mean = recalls.sum / recalls.size
+    assert(mean >= 0.5, s"mean recall@5 too low: $mean")
+    // plan shape: indexing is a narrow projection (centroids ride one
+    // broadcast kernel), so the corpus reaches its joins via broadcast with no
+    // Exchange. The only hashpartitioning exchanges allowed are per-QUERY
+    // windows (probe ranking over ~|queries| rows, final top-k over the
+    // candidate triples) — both keyed on qid, never on corpus columns
+    val plan = ivf.queryExecution.executedPlan.toString.split("== Initial Plan ==")(0)
+    val keys = "Exchange hashpartitioning\\((\\w+)".r.findAllMatchIn(plan).map(_.group(1)).toSeq
+    assert(keys.nonEmpty && keys.forall(_.startsWith("qid")),
+      s"every exchange must key on qid (query side), got $keys in:\n$plan")
+  }
+
+  test("PQ top-k: ADC candidates + exact re-rank, self always found") {
+    val queries = emb.filter(col("vec_id") < 20)
+    val pq = Similarity.pqTopK(emb, queries, 5)
+    val rows = pq.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+    // the exact re-rank puts the byte-identical vector (cosine 1) first
+    // whenever ADC admits it — and a vector's ADC score against its own
+    // code is the max the code can give, so self is always admitted
+    rows.filter(_._2 == 1L).foreach { case (q, _, id) => assert(q == id, s"query $q top-1 was $id") }
+    val exact = Similarity.cosineTopK(emb, queries, 5)
+      .collect().map(r => (r.getLong(0), r.getLong(2))).groupBy(_._1)
+    val approx = rows.map(t => (t._1, t._3)).groupBy(_._1)
+    val recalls = exact.keys.toSeq.map { q =>
+      val e = exact(q).map(_._2).toSet
+      val a = approx.getOrElse(q, Array.empty).map(_._2).toSet
+      (e intersect a).size.toDouble / e.size
+    }
+    val mean = recalls.sum / recalls.size
+    assert(mean >= 0.4, s"mean recall@5 too low: $mean")
+  }
+
+  test("IVF-PQ: probed-cell code scan + exact re-rank, self found, exchanges stay query-keyed") {
+    val queries = emb.filter(col("vec_id") < 20)
+    val ivfpq = Similarity.ivfPqTopK(emb, queries, 5)
+    val rows = ivfpq.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+    // identical vector → identical coarse cell (always probed first) and
+    // max ADC score against its own code → admitted → exact re-rank top-1
+    rows.filter(_._2 == 1L).foreach { case (q, _, id) => assert(q == id, s"query $q top-1 was $id") }
+    val exact = Similarity.cosineTopK(emb, queries, 5)
+      .collect().map(r => (r.getLong(0), r.getLong(2))).groupBy(_._1)
+    val approx = rows.map(t => (t._1, t._3)).groupBy(_._1)
+    val recalls = exact.keys.toSeq.map { q =>
+      val e = exact(q).map(_._2).toSet
+      val a = approx.getOrElse(q, Array.empty).map(_._2).toSet
+      (e intersect a).size.toDouble / e.size
+    }
+    val mean = recalls.sum / recalls.size
+    assert(mean >= 0.4, s"mean recall@5 too low: $mean")
+    // indexing (cell + code) is a narrow projection over broadcast
+    // centroids and in-expression codebooks — every exchange must key on
+    // the query side
+    val plan = ivfpq.queryExecution.executedPlan.toString.split("== Initial Plan ==")(0)
+    val keys = "Exchange hashpartitioning\\((\\w+)".r.findAllMatchIn(plan).map(_.group(1)).toSeq
+    assert(keys.nonEmpty && keys.forall(_.startsWith("qid")),
+      s"every exchange must key on qid (query side), got $keys in:\n$plan")
+  }
+
+  test("pqTopK: corpus smaller than the requested codebook size stays aligned") {
+    // 12 vectors < default ksub=32 — the ADC stride must follow the actual
+    // sampled codebook size or subspaces past the first read out of bounds
+    val small = emb.filter(col("vec_id") < 12)
+    val queries = small.filter(col("vec_id") < 3)
+    val pq = Similarity.pqTopK(small, queries, 5)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+    assert(pq.length == 3 * 5)
+    // exact re-rank on a corpus this small must reproduce brute force
+    val exact = Similarity.cosineTopK(small, queries, 5)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+    assert(pq.toSet == exact.toSet)
+  }
+
+  test("ivfTopK/pqTopK: empty corpus fails fast with a clear message") {
+    val empty = emb.filter(col("vec_id") < 0)
+    val queries = emb.filter(col("vec_id") < 3)
+    val e1 = intercept[IllegalArgumentException](Similarity.ivfTopK(empty, queries, 5))
+    assert(e1.getMessage.contains("corpus is empty"))
+    val e2 = intercept[IllegalArgumentException](Similarity.pqTopK(empty, queries, 5))
+    assert(e2.getMessage.contains("corpus is empty"))
+  }
+
+  test("ivfPqTopK unchanged by the candidate-stage refactor: self-hit at rank 1") {
+    val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
+    val qs = emb.filter(col("vec_id") < 5)
+    val top = Similarity.ivfPqTopK(emb, qs, k = 3)
+      .filter(col("rnk") === 1).collect().map(r => (r.getLong(0), r.getLong(2)))
+    // identical vector ⇒ same cell, ADC max, exact sim 1 ⇒ always rank 1
+    assert(top.forall { case (q, v) => q == v }, top.mkString(","))
+  }
+
+  test("ivfPqTopK residual: self-hit at rank 1 and recall >= non-residual at fixed rerank") {
+    val corpus = emb
+    val qs = corpus.filter(col("vec_id") < 10)
+    val exact = Similarity.cosineTopK(corpus, qs, k = 5)
+      .select(col("qid"), col("vec_id")).collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSet
+    def hits(residual: Boolean): Int =
+      Similarity.ivfPqTopK(corpus, qs, k = 5, residual = residual)
+        .select(col("qid"), col("vec_id")).collect()
+        .count(r => exact((r.getLong(0), r.getLong(1))))
+    val res = Similarity.ivfPqTopK(corpus, qs, k = 5, residual = true)
+    // an identical copy of the query lives in the corpus: it shares the
+    // query's cell, its residual code is the query's own, and the exact
+    // re-rank puts it first — rank 1 must be the self-hit for every query
+    val self = res.filter(col("rnk") === 1)
+      .select(col("qid"), col("vec_id")).collect()
+    assert(self.length == 10 && self.forall(r => r.getLong(0) == r.getLong(1)),
+      s"residual self-hit broken: ${self.mkString(",")}")
+    // the reason by-residual coding exists: residuals span a tighter
+    // ball than raw vectors, so the same codebook budget quantizes
+    // finer. Round 17 (de-biased trained seeds): with only 10 queries
+    // the ordering is noise-bounded — measured resid-vs-raw at
+    // sf0.001/0.01/0.1 is +1/+1/−5 hits of 50 — so the pin is
+    // near-parity with slack, not strict superiority (the pre-r17
+    // strict pin was an artifact of the biased first-K-by-id seeds,
+    // which planted the query vectors in the codebook).
+    val (hRes, hRaw) = (hits(residual = true), hits(residual = false))
+    assert(hRes >= hRaw - 6, s"residual recall $hRes collapsed vs non-residual $hRaw")
+    // and the residual path must itself clear the oracle's corpus-level
+    // cut (>= 22 total hits, the sim_ivfpq_residual contract)
+    val total = Similarity.ivfPqTopK(corpus, qs, k = 5, residual = true)
+      .select(col("qid"), col("vec_id")).collect()
+      .count(r => exact((r.getLong(0), r.getLong(1))))
+    assert(total >= 22, s"residual macro recall under oracle cut: $total")
+  }
+
+  test("ivfTopK at production cell counts: plan stays bounded via broadcast centroids") {
+    val corpus = emb
+    val qs = corpus.filter(col("vec_id") < 3)
+    // cells=1024 asks for more centroids than the fixture holds; the 500
+    // collected must ride as ONE broadcast, not 500×dim literals
+    val q = Similarity.ivfTopK(corpus, qs, k = 3, cells = 1024, probes = 4)
+    val opt = q.queryExecution.optimizedPlan.toString()
+    assert(opt.contains("cell_sims"), s"large-C plan should use the broadcast kernel")
+    // the plan text would be tens of MB with 500×dim literal doubles; the
+    // broadcast form keeps it bounded
+    assert(opt.length < 200000, s"plan blew up: ${opt.length} chars")
+    // and the operator still answers: self-hit at rank 1 for every query
+    val got = q.filter(col("rnk") === 1).select(col("qid"), col("vec_id"))
+      .collect().map(r => (r.getLong(0), r.getLong(1)))
+    assert(got.length == 3 && got.forall(t => t._1 == t._2), got.mkString(","))
+  }
+
+  test("ivfTopK(superCells): identity grouping equals flat; sqrt(C) build keeps measured recall") {
+    val qs = emb.limit(8)
+    def rows(sup: Int) = Similarity.ivfTopK(emb, qs, k = 5, cells = 16,
+        probes = 4, superCells = sup)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sorted.toSeq
+    val flat = rows(0)
+    assert(rows(16) == flat,
+      "supers == cells must reproduce the flat index build exactly on well-separated sims")
+    val hier = rows(4)
+    assert(hier == rows(4).sorted && hier.nonEmpty, "deterministic")
+    // recall vs the flat index: the sqrt(C) build may park corpus vectors
+    // outside the probed cells, but on the clustered synthetic embeddings
+    // the overlap stays high — reported as an assertion with slack
+    val overlap = hier.toSet.intersect(flat.toSet).size.toDouble / flat.size
+    assert(overlap >= 0.5, f"hier index recall vs flat collapsed: $overlap%.2f")
+  }
+
+  test("ivfTopK default superProbes keeps the measured macro-recall floor") {
+    // the sim_ivf_hier oracle cut is a corpus-level sum >= 24 (round 17:
+    // per-qid floors went to 1 with de-biased seeds — see
+    // graft.queries.SimQueries.annAggContract) — this pins the measured
+    // macro floor the cut rests on at the spec SF (sums 30/33/32 across
+    // driver SFs)
+    val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
+    val qs = emb.filter(col("vec_id") < 10)
+    val ivf = Similarity.ivfTopK(emb, qs, k = 5, superCells = 4)
+    val exact = Similarity.cosineTopK(emb, qs, k = 5)
+    val sumHits = exact.join(
+        ivf.select(col("qid"), col("vec_id"), lit(1L).as("hit")),
+        Seq("qid", "vec_id"), "left")
+      .agg(sum(coalesce(col("hit"), lit(0L))).as("h"))
+      .head().getLong(0)
+    assert(sumHits >= 24, s"multi-probe build macro floor regressed: $sumHits < 24")
+  }
+}
