@@ -61,6 +61,7 @@ object Cli {
         .appName("graft-q")
         .config("spark.sql.shuffle.partitions", "32")
         .config("spark.ui.enabled", "false")
+        .config("spark.sql.extensions", "graft.GraftExtensions") // jq over `doc` reads the line's one parse
         .config("spark.sql.unionOutputPartitioning", "false") // Spark 4.1 union claim/exec mismatch; see Checkpoints.scala
         .getOrCreate()
       s.sparkContext.setLogLevel("ERROR")

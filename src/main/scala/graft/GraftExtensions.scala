@@ -22,8 +22,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         (exprs: Seq[Expression]) => builder(exprs)))
     }
     // jq index paths over typed struct/map columns compile to native
-    // Catalyst field accesses (nested-schema pruning + codegen); see
-    // graft.plans.JqPathCompile for the equivalence argument.
+    // Catalyst field accesses (nested-schema pruning + codegen), and jq
+    // over readJsonl's `doc` reads the line's parse; see
+    // graft.plans.JqPathCompile for the equivalence arguments.
     e.injectOptimizerRule(_ => graft.plans.JqPathCompile)
   }
 }

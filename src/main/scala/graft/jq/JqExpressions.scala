@@ -74,9 +74,12 @@ private[jq] object JqGuard {
   * monomorphic converter + compiled-pipeline call. */
 trait JqDocInput extends Expression {
 
-  /** The document column (STRING json text, STRUCT, ARRAY, MAP, VARIANT
-    * or a scalar). */
-  protected def docInput: Expression
+  /** The document column (STRING json text, STRUCT, ARRAY, MAP, VARIANT,
+    * a scalar, or a kept parse of [[JqInput.ParsedType]]). */
+  def docInput: Expression
+
+  /** This expression over another document operand. */
+  def withDocInput(doc: Expression): Expression
 
   @transient protected final lazy val inputConv: JqInput.Conv = JqInput.converter(docInput.dataType)
 
@@ -94,7 +97,8 @@ trait JqDocInput extends Expression {
   * for the whole stage. */
 trait JqNativeInput extends graft.functions.NativeUnaryCodegen with JqDocInput {
 
-  override protected final def docInput: Expression = child
+  override final def docInput: Expression = child
+  override final def withDocInput(doc: Expression): Expression = withNewChildren(Seq(doc))
 
   /** Run `compiled` over one input value and render the entries with `f`;
     * malformed JSON *text* becomes the errors-as-data record, never an
@@ -207,7 +211,8 @@ case class JqEvalMeta(ast: Ast, queryText: String,
                       left: Expression, right: Expression)
     extends graft.functions.NativeBinaryCodegen with JqDocInput {
   @transient private lazy val compiled = Interp.compileE(ast)
-  override protected def docInput: Expression = left
+  override def docInput: Expression = left
+  override def withDocInput(doc: Expression): Expression = copy(left = doc)
   override def dataType: DataType = JqEvalMeta.outputType
   override def prettyName: String = "jq_eval_meta"
   override def checkInputDataTypes(): TypeCheckResult = checkDocType() match {

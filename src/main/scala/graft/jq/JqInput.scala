@@ -34,10 +34,15 @@ object JqInput {
 
   type Conv = Any => JDoc
 
+  /** A [[JsonText.Parsed]] kept by [[graft.sources.JsonDocs.readJsonl]]:
+    * jq over its canonical text reads the parse instead
+    * ([[graft.plans.JqPathCompile]]). */
+  val ParsedType: DataType = ObjectType(classOf[JsonText.Parsed])
+
   /** Can `dt` feed the jq engine directly? (Used by checkInputDataTypes —
     * unsupported types are an analysis-time error, not a runtime one.) */
   def supports(dt: DataType): Boolean = dt match {
-    case StringType | BooleanType | NullType => true
+    case StringType | BooleanType | NullType | ParsedType => true
     case LongType | IntegerType | ShortType | ByteType => true
     case DoubleType | FloatType => true
     case _: DecimalType => true
@@ -53,6 +58,7 @@ object JqInput {
     * non-throwing structural conversions. */
   def converter(dt: DataType): Conv = dt match {
     case StringType => v => JsonText.parse(v.asInstanceOf[UTF8String].toString)
+    case ParsedType => v => v.asInstanceOf[JsonText.Parsed].readBack
     case other      => valueConverter(other)
   }
 
@@ -79,29 +85,42 @@ object JqInput {
       val names = st.fields.map(_.name)
       val types = st.fields.map(_.dataType)
       val convs = types.map(valueConverter)
+      // Distinct names are sorted into JObj's key order once, here, so a
+      // row builds its object directly; repeated names keep the
+      // last-wins fold of `fromProps`.
+      val distinct = names.distinct.length == names.length
+      val order =
+        if (distinct) names.indices.sortWith((a, b) => JOps.cmpStr(names(a), names(b)) < 0).toArray
+        else names.indices.toArray
+      val build: Vector[(String, JDoc)] => JObj = if (distinct) JObj(_) else JObj.fromProps
       v => {
         val row = v.asInstanceOf[InternalRow]
-        val kvs = Vector.newBuilder[(String, JDoc)]
-        var i = 0
-        while (i < names.length) {
-          // null fields omitted (to_json ignoreNullFields parity, see above)
-          if (!row.isNullAt(i)) kvs += ((names(i), convs(i)(row.get(i, types(i)))))
-          i += 1
+        // null fields omitted (to_json ignoreNullFields parity, see above)
+        var present = 0
+        var f = 0
+        while (f < order.length) { if (!row.isNullAt(f)) present += 1; f += 1 }
+        val kvs = new Array[AnyRef](present)
+        var j = 0
+        var k = 0
+        while (j < order.length) {
+          val i = order(j)
+          if (!row.isNullAt(i)) { kvs(k) = (names(i), convs(i)(row.get(i, types(i)))); k += 1 }
+          j += 1
         }
-        JObj.fromProps(kvs.result())
+        build(leaf(kvs))
       }
     case ArrayType(et, _) =>
       val conv = valueConverter(et)
       v => {
         val arr = v.asInstanceOf[ArrayData]
         val n = arr.numElements()
-        val items = Vector.newBuilder[JDoc]
+        val items = new Array[AnyRef](n)
         var i = 0
         while (i < n) {
-          items += (if (arr.isNullAt(i)) JNull else conv(arr.get(i, et)))
+          items(i) = if (arr.isNullAt(i)) JNull else conv(arr.get(i, et))
           i += 1
         }
-        JArr(items.result())
+        JArr(leaf(items))
       }
     case MapType(StringType, vt, _) =>
       val conv = valueConverter(vt)
@@ -122,6 +141,12 @@ object JqInput {
     case other =>
       throw new IllegalArgumentException(s"jq input does not support $other")
   }
+
+  /** The elements of a filled array as a Vector; up to 32 of them become
+    * its one leaf without a copy (`Vector.from` keeps an `ArraySeq.ofRef`'s
+    * array). */
+  private def leaf[A](xs: Array[AnyRef]): Vector[A] =
+    Vector.from(scala.collection.immutable.ArraySeq.unsafeWrapArray(xs)).asInstanceOf[Vector[A]]
 
   /** Binary-native Variant → JDoc walk (no JSON text round-trip). The
     * variant was parsed once at its source (`parse_json` / a variant scan);

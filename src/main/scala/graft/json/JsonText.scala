@@ -26,13 +26,29 @@ object JsonText {
       extends Exception(s"cannot render a value nested deeper than $limit")
 
   /** Parse one JSON value; trailing content is an error. */
-  def parse(text: String): JDoc = {
+  def parse(text: String): JDoc = new Parser(text).document()
+
+  /** One parse of a JSON text, kept for several readers: the document, or
+    * the parse error's message (`doc` is then null).
+    *
+    * `exact` is false when the document holds a negative zero or a
+    * non-finite double, the only values whose canonical text does not
+    * parse back to them: `-0.0` renders `0e0`, which reads back as `0.0`,
+    * and `1e999` renders `inf`, which does not read back at all. */
+  final class Parsed private[JsonText] (val doc: JDoc, val error: String, val exact: Boolean) {
+
+    /** The document a parse of `canonical(doc)` gives: `doc` itself when
+      * `exact`, else that parse, which throws [[JsonParseException]] on
+      * a non-finite double as reading the canonical text would. */
+    def readBack: JDoc = if (exact) doc else parse(canonical(doc))
+  }
+
+  /** [[parse]], with a malformed text as a [[Parsed]] error instead of an
+    * exception. */
+  def parseOnce(text: String): Parsed = {
     val p = new Parser(text)
-    p.skipWs()
-    val v = p.parseValue()
-    p.skipWs()
-    if (!p.atEnd) throw JsonParseException("trailing content", p.pos)
-    v
+    try { val v = p.document(); new Parsed(v, null, p.exact) }
+    catch { case e: JsonParseException => new Parsed(null, e.getMessage, true) }
   }
 
   /** Parse a stream of whitespace-separated JSON values (the reference's
@@ -69,10 +85,23 @@ object JsonText {
     * inside the JVM's default stack for the recursive-descent walk. */
   val MaxDepth = 512
 
+  private val NegZeroBits = java.lang.Double.doubleToRawLongBits(-0.0)
+
   private final class Parser(val text: String) {
     var pos = 0
     private var depth = 0
+    /** No negative zero or non-finite double parsed so far (see [[Parsed]]). */
+    var exact = true
     def atEnd: Boolean = pos >= text.length
+
+    /** One value and nothing after it. */
+    def document(): JDoc = {
+      skipWs()
+      val v = parseValue()
+      skipWs()
+      if (!atEnd) fail("trailing content")
+      v
+    }
     def skipWs(): Unit = {
       while (pos < text.length && (text.charAt(pos) match {
         case ' ' | '\t' | '\n' | '\r' => true
@@ -118,8 +147,14 @@ object JsonText {
       }
       val s = text.substring(start, pos)
       try {
-        if (isFloat) JDouble(java.lang.Double.parseDouble(s))
-        else JLong(java.lang.Long.parseLong(s))
+        if (isFloat) {
+          val d = java.lang.Double.parseDouble(s)
+          // the integer branch below saturates, so only here can a value
+          // without a canonical round trip arise
+          if (java.lang.Double.isInfinite(d) || java.lang.Double.doubleToRawLongBits(d) == NegZeroBits)
+            exact = false
+          JDouble(d)
+        } else JLong(java.lang.Long.parseLong(s))
       } catch {
         case _: NumberFormatException if !isFloat =>
           // Reference i128 semantics (json.rs:234,469): an integer past

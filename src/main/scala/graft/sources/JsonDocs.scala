@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ColumnBridge
 
 import graft.json.JsonText
 
@@ -24,17 +25,15 @@ import graft.json.JsonText
   */
 object JsonDocs {
 
-  /** One JSON value per line; bad lines yield an error row. */
-  def readJsonl(spark: SparkSession, path: String): DataFrame = {
-    import spark.implicits._
-    spark.read.textFile(path)
-      .filter(l => l.trim.nonEmpty)
-      .map { line =>
-        try (JsonText.canonical(JsonText.parse(line)), null: String)
-        catch { case e: JsonText.JsonParseException => (null: String, e.getMessage) }
-      }
-      .toDF("doc", "error")
-  }
+  /** One JSON value per line; blank lines are skipped and bad lines yield
+    * an error row. `doc` and `error` are Catalyst expressions over one
+    * parse of the line ([[ParseJson]]), so a row parses once however many
+    * of them a query reads; and a jq expression over `doc` reads that
+    * parse instead of re-parsing the canonical text
+    * ([[graft.plans.JqPathCompile]]), which is then never written unless
+    * `doc` itself is selected. */
+  def readJsonl(spark: SparkSession, path: String): DataFrame =
+    parsedLines(spark.read.text(path))
 
   /** Whitespace-separated concatenated values (the reference's on-disk
     * format), one partition per file. */
@@ -100,14 +99,17 @@ object JsonDocs {
   }
 
   /** Unbounded variant of [[readJsonl]] for Structured Streaming. */
-  def streamJsonl(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    spark.readStream.textFile(dir)
-      .filter(l => l.trim.nonEmpty)
-      .map { line =>
-        try (JsonText.canonical(JsonText.parse(line)), null: String)
-        catch { case e: JsonText.JsonParseException => (null: String, e.getMessage) }
-      }
-      .toDF("doc", "error")
+  def streamJsonl(spark: SparkSession, dir: String): DataFrame =
+    parsedLines(spark.readStream.text(dir))
+
+  /** Text lines (`value`) → (doc, error), the one projection behind
+    * [[readJsonl]] and [[streamJsonl]]. */
+  private def parsedLines(lines: DataFrame): DataFrame = {
+    val line = ColumnBridge.expression(lines.col("value"))
+    val parse = ParseJson(line)
+    lines.filter(ColumnBridge.column(NonBlank(line)))
+      .select(
+        ColumnBridge.column(ParsedText(parse)).as("doc"),
+        ColumnBridge.column(ParsedError(parse)).as("error"))
   }
 }

@@ -1,0 +1,147 @@
+package graft.sources
+
+import java.nio.file.Files
+
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.functions.{col, lit}
+
+import graft.{Jq, SparkTestBase}
+
+/** `readJsonl` as Catalyst expressions over one parse of each line, and jq
+  * over its `doc` reading that parse (graft.plans.JqPathCompile): results
+  * equal the rule-off plan, where jq re-parses the canonical text, and
+  * `doc`/`error` equal a per-line `String.trim` filter and parse. */
+class JsonlParseOnceSpec extends SparkTestBase {
+  import spark.implicits._
+
+  /** The ten programs of perfbench's `jq_scan`. */
+  private val scanPrograms = Seq(
+    ("p01_path", ".user.name", "string"),
+    ("p02_iter_arith_add", "[.items.[] | .qty * .price] | add", "long"),
+    ("p03_select", "[.items.[] | select(.qty > 3) | .sku] | length", "long"),
+    ("p04_reduce", "reduce .items.[] as $it (0; . + ($it | .qty))", "long"),
+    ("p05_update_sort_by", ".items |= sort_by(.price) | .items.[0].price", "long"),
+    ("p06_interpolate", "\"\\(.user.country)/\\(.user.tier)\"", "string"),
+    ("p07_paths", "[paths] | length", "long"),
+    ("p08_walk", "walk(if type == \"number\" then . * 2 else . end) | [.items.[] | .qty] | add", "long"),
+    ("p09_unique", "[.items.[] | .tags.[]] | unique | length", "long"),
+    ("p10_object_values", "[.meta.flags.[] | select(.)] | length", "long"))
+
+  private def order(r: scala.util.Random, i: Int): String = {
+    val items = (0 until 1 + r.nextInt(4)).map { _ =>
+      val tags = Seq.fill(r.nextInt(3))("\"" + Seq("red", "new", "eco")(r.nextInt(3)) + "\"")
+      s"""{"sku":"S${r.nextInt(1000)}","qty":${1 + r.nextInt(9)},"price":${100 + r.nextInt(900)},"tags":[${tags.mkString(",")}]}"""
+    }
+    s"""{"id":$i,"user":{"name":"u$i","country":"DE","tier":"gold","age":${18 + r.nextInt(60)}},""" +
+      s""""items":[${items.mkString(",")}],"meta":{"flags":{"gift":${r.nextBoolean()},"promo":true,"express":false}}}"""
+  }
+
+  /** Orders, then lines no order is like: malformed, blank under
+    * `String.trim`, non-blank whitespace, negative zero, non-finite
+    * doubles, repeated keys, raw non-ASCII. */
+  private val lines: Seq[String] = {
+    val r = new scala.util.Random(7)
+    (0 until 200).map(order(r, _)) ++ Seq(
+      "not json", "{\"a\":", "[1,]", "", "\t", "\u000b", "  \u0000 \u001f ", " ",
+      "-0.0", "1e999", "-1e999", "[1, -0.0]",
+      """{"items":[{"qty":-0.0,"price":1e999,"tags":[]}],"user":{"name":"z"}}""",
+      """{"items":[{"qty":2.5,"price":-0.0}],"meta":{"flags":{"gift":true}}}""",
+      """{"a":1,"a":2,"user":{"name":"dup","name":"last"}}""",
+      """ {"user": {"name": "é😀é"}} """, "12345678901234567890123", "\"s\"", "null")
+  }
+
+  private lazy val path: String = {
+    val dir = Files.createTempDirectory("jsonl-parse-once").toFile
+    val f = new java.io.File(dir, "docs.jsonl")
+    Files.writeString(f.toPath, lines.mkString("\n") + "\n")
+    f.getAbsolutePath
+  }
+
+  private def rows(df: DataFrame): Seq[String] = df.collect().map(_.toString).toSeq.sorted
+
+  private def ruleOff[A](body: => A): A = {
+    spark.conf.set("spark.sql.optimizer.excludedRules", "graft.plans.JqPathCompile")
+    try body finally spark.conf.unset("spark.sql.optimizer.excludedRules")
+  }
+
+  private def planExprs(df: DataFrame): Seq[Expression] =
+    df.queryExecution.optimizedPlan.collect { case p => p.expressions.flatMap(_.collect { case e => e }) }.flatten
+
+  test("doc and error equal a per-line String.trim filter, parse and canonical write") {
+    val reference = spark.read.textFile(path)
+      .filter(l => l.trim.nonEmpty)
+      .map { line =>
+        try (graft.json.JsonText.canonical(graft.json.JsonText.parse(line)), null: String)
+        catch { case e: graft.json.JsonText.JsonParseException => (null: String, e.getMessage) }
+      }
+      .toDF("doc", "error")
+    val got = JsonDocs.readJsonl(spark, path)
+    assert(got.schema == reference.schema)
+    assert(rows(got) == rows(reference))
+    assert(got.count() == lines.count(_.trim.nonEmpty))
+  }
+
+  test("jq over doc: rule on equals rule off on the ten scan programs and on error entries") {
+    // one jq expression per select: two readers of `doc` keep it a column
+    // of its own (CollapseProject does not inline a costly alias twice)
+    def queries(): Seq[DataFrame] = {
+      val docs = JsonDocs.readJsonl(spark, path)
+      Seq(
+        Jq.multi(scanPrograms, col("doc")),
+        Jq.query(".user.name", col("doc")),
+        // error entries: a failing operator, a raised error
+        Jq.query(".items.[0].qty + \"x\"", col("doc")),
+        Jq.query("error(\"boom\")", col("doc")),
+        // pow(x, -1) tells -0.0 (-inf) from 0.0 (inf)
+        Jq.query("[.. | numbers | pow(., -1)]", col("doc")),
+        Jq.query("[.[]?] | tostring", col("doc")),
+        Jq.docs(".items.[]?.price", col("doc")),
+        Jq.long(".id", col("doc")),
+        Jq.double(".items.[0].qty", col("doc")),
+        Jq.bool(".meta.flags.gift", col("doc")),
+        Jq.string(".", col("doc")),
+        Jq.evalWithMeta(".user", col("doc"), lit("{\"sources\":[\"s\"]}"))
+      ).map(jq => docs.select(jq.as("jq"), col("error")))
+    }
+    val on = queries()
+    on.foreach(q => assert(planExprs(q).exists(_.isInstanceOf[ParsedDoc]), q.queryExecution.optimizedPlan))
+    val off = ruleOff(queries().map { q => assert(!planExprs(q).exists(_.isInstanceOf[ParsedDoc])); rows(q) })
+    on.map(rows).zip(off).zipWithIndex.foreach { case ((a, b), i) =>
+      assert(a == b, s"query $i: rule on and rule off differ")
+    }
+    // the flagged lines keep today's answers: -0.0 reads back as 0.0, and
+    // 1e999 does not read back, so jq over it is an error entry
+    def first(doc: String, program: String, field: String) =
+      JsonDocs.readJsonl(spark, path).filter(col("doc") === doc)
+        .select(Jq.query(program, col("doc")).getItem(0).getField(field).cast("string")).as[String].collect().toSeq
+    assert(first("0e0", "pow(., -1)", "doc") == Seq("inf"))
+    val inf = first("inf", ".", "errors")
+    assert(inf.length == 1 && inf.head.contains("invalid json"), inf)
+  }
+
+  test("plan: select(Jq.multi(doc), error) holds one parse and no canonical write") {
+    val q = JsonDocs.readJsonl(spark, path)
+      .select(Jq.multi(scanPrograms, col("doc")).as("m"), col("error"))
+    val exprs = planExprs(q)
+    val parses = exprs.collect { case p: ParseJson => p.canonicalized }.distinct
+    assert(parses.length == 1, q.queryExecution.optimizedPlan)
+    assert(!exprs.exists(_.isInstanceOf[ParsedText]), q.queryExecution.optimizedPlan)
+    // doc alone: the canonical write stays, the error read is pruned
+    val docOnly = planExprs(JsonDocs.readJsonl(spark, path).select(col("doc")))
+    assert(docOnly.exists(_.isInstanceOf[ParsedText]) && !docOnly.exists(_.isInstanceOf[ParsedError]))
+  }
+
+  test("streamJsonl: the same projection over a stream") {
+    val dir = Files.createTempDirectory("jsonl-stream").toFile
+    Files.writeString(new java.io.File(dir, "part-0.jsonl").toPath, lines.mkString("\n") + "\n")
+    val name = "jsonl_parse_once"
+    val query = JsonDocs.streamJsonl(spark, dir.getAbsolutePath)
+      .select(col("doc"), col("error"), Jq.long(".id", col("doc")).as("id"))
+      .writeStream.format("memory").queryName(name).start()
+    try query.processAllAvailable() finally query.stop()
+    val batch = JsonDocs.readJsonl(spark, path)
+      .select(col("doc"), col("error"), Jq.long(".id", col("doc")).as("id"))
+    assert(rows(spark.table(name)) == rows(batch))
+  }
+}
