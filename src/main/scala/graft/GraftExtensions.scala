@@ -4,7 +4,6 @@ import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
-import graft.jq.{JqParser, JqEval, JqEvalMeta, JqDocs, JqExtract}
 import graft.functions._
 
 /** Session-extension entry point: registers every graft SQL function at
@@ -44,20 +43,13 @@ object GraftExtensions {
   /** name → expression builder, shared by [[GraftExtensions]] and
     * [[Jq.register]]. */
   val functionBuilders: Seq[(String, Seq[Expression] => Expression)] = {
-    val jqFns: Seq[(String, Seq[Expression] => Expression)] =
-      Seq[(String, (String, Expression) => Expression)](
-        "jq_eval" -> ((q, j) => JqEval(JqParser.parse(q), q, j)),
-        "jq_docs" -> ((q, j) => JqDocs(JqParser.parse(q), q, j)),
-        "jq_string" -> ((q, j) => JqExtract(JqParser.parse(q), q, "string", j)),
-        "jq_long" -> ((q, j) => JqExtract(JqParser.parse(q), q, "long", j)),
-        "jq_double" -> ((q, j) => JqExtract(JqParser.parse(q), q, "double", j)),
-        "jq_bool" -> ((q, j) => JqExtract(JqParser.parse(q), q, "bool", j))
-      ).map { case (name, build) =>
-        name -> { (exprs: Seq[Expression]) =>
-          require(exprs.length == 2, s"$name(query, json) takes 2 arguments")
-          build(foldableString(exprs.head, name), exprs(1))
-        }
-      }
+    def arity(n: Int, name: String)(b: Seq[Expression] => Expression): Seq[Expression] => Expression =
+      exprs => { require(exprs.length == n, s"$name takes $n arguments"); b(exprs) }
+
+    // jq_eval/jq_docs/jq_<kind>(query, json), jq_eval_meta(query, json, meta)
+    val jqFns: Seq[(String, Seq[Expression] => Expression)] = Jq.functions.map { f =>
+      f.name -> arity(f.operands + 1, f.name)(exprs => f(foldableString(exprs.head, f.name), exprs.tail))
+    }
 
     val binFns: Seq[(String, Seq[Expression] => Expression)] =
       Seq("add", "sub", "mul", "div", "rem", "shl", "shr", "band", "bxor", "bbor").map { op =>
@@ -75,8 +67,6 @@ object GraftExtensions {
         }
       }
 
-    def arity(n: Int, name: String)(b: Seq[Expression] => Expression): Seq[Expression] => Expression =
-      exprs => { require(exprs.length == n, s"$name takes $n arguments"); b(exprs) }
     jqFns ++ binFns ++ unaryFns ++ Seq[(String, Seq[Expression] => Expression)](
       "json_cmp" -> arity(2, "json_cmp")(exprs => JsonCmp(exprs.head, exprs(1))),
       "json_eq" -> arity(2, "json_eq")(exprs => JsonEq(exprs.head, exprs(1))),
@@ -99,11 +89,6 @@ object GraftExtensions {
         RollingFingerprint(exprs.head)),
       "vec_cosine" -> arity(2, "vec_cosine")(exprs => CosineSim(exprs.head, exprs(1))),
       "vec_dot" -> arity(2, "vec_dot")(exprs => VecDot(exprs.head, exprs(1))),
-      // lineage-entry evaluation (round 10): jq with a seeded meta envelope
-      "jq_eval_meta" -> arity(3, "jq_eval_meta")(exprs => {
-        val q = foldableString(exprs.head, "jq_eval_meta")
-        JqEvalMeta.seeded(JqParser.parse(q), q, exprs(1), exprs(2))
-      }),
       // media decode from SQL (round 10): the builder runs at analysis
       // time on the driver — plan time — so it captures the SAME decoder
       // snapshot the Scala API does; SQL and Scala decodes of one payload

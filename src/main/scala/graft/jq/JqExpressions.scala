@@ -25,7 +25,9 @@ import graft.json._
   *   1. input is converted to [[JDoc]] straight from Spark internal values
   *      ([[JqInput]]): STRING parses as JSON text (unchanged), but STRUCT /
   *      ARRAY / MAP / VARIANT / scalars convert structurally with no
-  *      serialize→re-parse round trip;
+  *      serialize→re-parse round trip. The conversion is its own
+  *      expression, [[JqDoc]], the document operand of every jq
+  *      expression;
   *   2. generated code makes a direct call on the expression instance (via
   *      `ctx.addReferenceObj`), so jq projections participate in
   *      whole-stage codegen instead of forcing the interpreted fallback path
@@ -48,8 +50,14 @@ import graft.json._
 private[jq] object JqGuard {
   private def failed(msg: String): Vector[JEntry] = Vector(JEntry(JNull, Vector(msg)))
 
+  /** The record of a [[JqDoc]] value whose conversion failed: the one a
+    * thrown parse exception makes. */
+  def invalid(doc: Any): Vector[JEntry] = invalidJson(JqDoc.error(doc))
+
+  private def invalidJson(msg: String): Vector[JEntry] = failed(s"invalid json: $msg")
+
   private val failure: PartialFunction[Throwable, Vector[JEntry]] = {
-    case e: JsonText.JsonParseException => failed(s"invalid json: ${e.getMessage}")
+    case e: JsonText.JsonParseException => invalidJson(e.getMessage)
     case e: JsonText.JsonDepthException => failed(e.getMessage)
     case _: StackOverflowError => failed("jq evaluation exceeded the stack — runaway recursion")
   }
@@ -69,48 +77,30 @@ private[jq] object JqGuard {
     catch failure.andThen(f)
 }
 
-/** The document operand every jq expression converts: resolved once on
-  * the driver from the operand's type, so the per-row path is a
-  * monomorphic converter + compiled-pipeline call. */
-trait JqDocInput extends Expression {
+/** A jq expression over one document operand, a [[JqDoc]]. The pipeline
+  * itself is a compiled closure tree (driver-compiled, executor-cached), so
+  * it joins whole-stage codegen through
+  * [[graft.functions.NativeUnaryCodegen]]'s one virtual call: the
+  * surrounding project/filter/explode fuses into a single generated
+  * function instead of falling back to interpreted rows for the whole
+  * stage. */
+trait JqNativeInput extends graft.functions.NativeUnaryCodegen {
 
-  /** The document column (STRING json text, STRUCT, ARRAY, MAP, VARIANT,
-    * a scalar, or a kept parse of [[JqInput.ParsedType]]). */
-  def docInput: Expression
-
-  /** This expression over another document operand. */
-  def withDocInput(doc: Expression): Expression
-
-  @transient protected final lazy val inputConv: JqInput.Conv = JqInput.converter(docInput.dataType)
-
-  protected final def checkDocType(): TypeCheckResult =
-    if (JqInput.supports(docInput.dataType)) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName cannot run over input type ${docInput.dataType.catalogString}")
-}
-
-/** A jq expression over one input column. The pipeline itself is a
-  * compiled closure tree (driver-compiled, executor-cached), so it joins
-  * whole-stage codegen through [[graft.functions.NativeUnaryCodegen]]'s
-  * one virtual call: the surrounding project/filter/explode fuses into a
-  * single generated function instead of falling back to interpreted rows
-  * for the whole stage. */
-trait JqNativeInput extends graft.functions.NativeUnaryCodegen with JqDocInput {
-
-  override final def docInput: Expression = child
-  override final def withDocInput(doc: Expression): Expression = withNewChildren(Seq(doc))
-
-  /** Run `compiled` over one input value and render the entries with `f`;
-    * malformed JSON *text* becomes the errors-as-data record, never an
-    * exception (reference: src/entry.rs:5-10), and so does an output too
-    * deep to render. */
-  protected final def renderPipe[A](compiled: Interp.Pipe, input: Any)(f: Vector[JEntry] => A): A =
-    JqGuard.render(compiled(inputConv(input), Nil))(f)
-
-  override def checkInputDataTypes(): TypeCheckResult = checkDocType()
+  /** Run `compiled` over one converted document and render the entries
+    * with `f`; a failed conversion (malformed JSON *text*) becomes the
+    * errors-as-data record, never an exception (reference:
+    * src/entry.rs:5-10), and so does an output too deep to render. */
+  protected final def renderPipe[A](compiled: Interp.Pipe, input: Any)(f: Vector[JEntry] => A): A = {
+    val doc = JqDoc.document(input)
+    JqGuard.render(if (doc == null) JqGuard.invalid(input) else compiled(doc, Nil))(f)
+  }
 }
 
 object JqEval {
+  /** The result type of each typed-extraction kind (JqExtract, JqMulti). */
+  private[jq] val kinds: Map[String, DataType] =
+    Map("string" -> StringType, "long" -> LongType, "double" -> DoubleType, "bool" -> BooleanType)
+
   /** ARRAY<STRUCT<doc: STRING, errors: ARRAY<STRING>>> — the full output
     * stream for one input document; `doc` is canonical JSON text. */
   val outputType: DataType = ArrayType(
@@ -180,12 +170,7 @@ case class JqDocs(ast: Ast, queryText: String, child: Expression) extends JqNati
   * doesn't fit the requested type. Kinds: string | long | double | bool. */
 case class JqExtract(ast: Ast, queryText: String, kind: String, child: Expression)
     extends JqNativeInput {
-  override def dataType: DataType = kind match {
-    case "long"   => LongType
-    case "double" => DoubleType
-    case "bool"   => BooleanType
-    case _        => StringType
-  }
+  override def dataType: DataType = JqEval.kinds(kind)
   override def nullable: Boolean = true
   override def prettyName: String = s"jq_$kind"
   @transient private lazy val compiled = Interp.compile(ast)
@@ -209,18 +194,14 @@ case class JqExtract(ast: Ast, queryText: String, kind: String, child: Expressio
   * reads a NULL meta as no envelope. */
 case class JqEvalMeta(ast: Ast, queryText: String,
                       left: Expression, right: Expression)
-    extends graft.functions.NativeBinaryCodegen with JqDocInput {
+    extends graft.functions.NativeBinaryCodegen {
   @transient private lazy val compiled = Interp.compileE(ast)
-  override def docInput: Expression = left
-  override def withDocInput(doc: Expression): Expression = copy(left = doc)
   override def dataType: DataType = JqEvalMeta.outputType
   override def prettyName: String = "jq_eval_meta"
-  override def checkInputDataTypes(): TypeCheckResult = checkDocType() match {
-    case TypeCheckResult.TypeCheckSuccess if right.dataType != StringType =>
-      TypeCheckResult.TypeCheckFailure(
-        s"$prettyName meta envelope must be STRING json, got ${right.dataType.catalogString}")
-    case docCheck => docCheck
-  }
+  override def checkInputDataTypes(): TypeCheckResult =
+    if (right.dataType == StringType) TypeCheckResult.TypeCheckSuccess
+    else TypeCheckResult.TypeCheckFailure(
+      s"$prettyName meta envelope must be STRING json, got ${right.dataType.catalogString}")
   override protected def nullSafeEval(doc: Any, meta: Any): Any = {
     val metaObj: Option[JObj] =
       try JsonText.parse(meta.asInstanceOf[UTF8String].toString) match {
@@ -231,7 +212,9 @@ case class JqEvalMeta(ast: Ast, queryText: String,
         case o: JObj => Some(graft.json.JMeta.normalize(o))
         case _       => None
       } catch { case _: JsonText.JsonParseException => None }
-    JqGuard.render(compiled(JEntry(inputConv(doc), Vector.empty, metaObj), Nil)) { entries =>
+    val d = JqDoc.document(doc)
+    JqGuard.render(
+        if (d == null) JqGuard.invalid(doc) else compiled(JEntry(d, Vector.empty, metaObj), Nil)) { entries =>
       new GenericArrayData(entries.collect {
         case en if en.errors.isEmpty =>
           InternalRow(
@@ -266,27 +249,27 @@ object JqEvalMeta {
   * single input conversion — returns STRUCT<name: typedValue, ...>. N
   * extractions of the same column otherwise each re-convert the document;
   * this fuses them (the same way a reader fuses column decoders). Field
-  * kinds follow [[JqExtract]] (string | long | double | bool). */
+  * kinds follow [[JqExtract]] (string | long | double | bool); any other
+  * kind is rejected when the expression is built. The struct itself is
+  * NULL only for a NULL document: a document that fails to convert gives
+  * a struct of NULL fields. */
 case class JqMulti(fields: Seq[(String, Ast, String)], queryText: String, child: Expression)
     extends JqNativeInput {
+  fields.foreach { case (name, _, kind) =>
+    require(JqEval.kinds.contains(kind),
+      s"jq_multi field '$name': unknown kind '$kind' (one of string|long|double|bool)")
+  }
   @transient private lazy val compiled: Array[Interp.Pipe] =
     fields.map { case (_, ast, _) => Interp.compile(ast) }.toArray
   @transient private lazy val firstValues: Array[Vector[JEntry] => Any] =
     fields.map { case (_, _, kind) => JqEval.firstValue(kind) _ }.toArray
   override def dataType: DataType = StructType(fields.map { case (name, _, kind) =>
-    StructField(name, kind match {
-      case "long"   => LongType
-      case "double" => DoubleType
-      case "bool"   => BooleanType
-      case _        => StringType
-    }, nullable = true)
+    StructField(name, JqEval.kinds(kind), nullable = true)
   })
   override def nullable: Boolean = true
   override def prettyName: String = "jq_multi"
   override protected def nullSafeEval(input: Any): Any = {
-    val doc =
-      try inputConv(input)
-      catch { case _: JsonText.JsonParseException => null }
+    val doc = JqDoc.document(input)
     val values = new Array[Any](fields.length)
     if (doc != null) {
       var i = 0

@@ -1,20 +1,25 @@
 package graft.jq
 
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.{ArrayData, MapData}
 import org.apache.spark.sql.types._
 import org.apache.spark.types.variant.{Variant, VariantUtil}
 import org.apache.spark.unsafe.types.{UTF8String, VariantVal}
 
+import graft.functions.NativeUnaryCodegen
 import graft.json._
 
-/** Driver-compiled converters from Spark internal values straight to
-  * [[JDoc]] — the round-2 replacement for the `to_json` → text → re-parse
-  * bridge (SURVEY.md §1.4's dynamic-value design).
+/** How a jq operand becomes a [[JDoc]]: one Catalyst expression,
+  * [[JqDoc]], converts it, straight from Spark internal values — the
+  * round-2 replacement for the `to_json` → text → re-parse bridge
+  * (SURVEY.md §1.4's dynamic-value design).
   *
   * Semantics: a STRING input is still *parsed* as JSON text (the engine's
   * document streams are JSON text, reference src/json.rs:123-160); every
-  * other supported type converts structurally with NO serialization:
+  * other supported type converts structurally with NO serialization
+  * ([[converter]]):
   *
   *   - STRUCT → object (null fields omitted, matching `to_json`'s default
   *     `ignoreNullFields` so plans migrated off the to_json bridge keep
@@ -26,23 +31,23 @@ import graft.json._
   *     same value a text round-trip would produce — NOT the raw widening
   *     cast, which would turn 0.1f into 0.10000000149011612.
   *
-  * The converter is resolved per expression from `child.dataType` on the
-  * driver, so the per-row path is a monomorphic call tree with zero type
-  * dispatch on the hot path.
+  * The converter is resolved once per expression from the operand's type
+  * on the driver, so the per-row path is a monomorphic call tree with zero
+  * type dispatch on the hot path.
   */
 object JqInput {
 
   type Conv = Any => JDoc
 
-  /** A [[JsonText.Parsed]] kept by [[graft.sources.JsonDocs.readJsonl]]:
-    * jq over its canonical text reads the parse instead
-    * ([[graft.plans.JqPathCompile]]). */
-  val ParsedType: DataType = ObjectType(classOf[JsonText.Parsed])
+  /** The type of a [[JqDoc]] value: the converted [[JDoc]], or a
+    * [[JsonText.Parsed]] (a text operand's parse, or a failed conversion).
+    * Never written to a row. */
+  val DocType: DataType = ObjectType(classOf[AnyRef])
 
   /** Can `dt` feed the jq engine directly? (Used by checkInputDataTypes —
     * unsupported types are an analysis-time error, not a runtime one.) */
   def supports(dt: DataType): Boolean = dt match {
-    case StringType | BooleanType | NullType | ParsedType => true
+    case StringType | BooleanType | NullType | DocType => true
     case LongType | IntegerType | ShortType | ByteType => true
     case DoubleType | FloatType => true
     case _: DecimalType => true
@@ -53,18 +58,11 @@ object JqInput {
     case _ => false
   }
 
-  /** Converter for a *top-level* input column. STRING means JSON text and
-    * may throw [[JsonText.JsonParseException]]; all other types are
-    * non-throwing structural conversions. */
-  def converter(dt: DataType): Conv = dt match {
-    case StringType => v => JsonText.parse(v.asInstanceOf[UTF8String].toString)
-    case ParsedType => v => v.asInstanceOf[JsonText.Parsed].readBack
-    case other      => valueConverter(other)
-  }
-
   /** Structural converter: a STRING here is a string *value* (struct field,
-    * array element), not a JSON document. */
-  private def valueConverter(dt: DataType): Conv = dt match {
+    * array element), not a JSON document — JSON text is [[JqDoc]]'s own
+    * case. Non-throwing except on VARIANT nesting past
+    * [[JsonText.MaxDepth]]. */
+  def converter(dt: DataType): Conv = dt match {
     case StringType  => v => JStr(v.asInstanceOf[UTF8String].toString)
     case BooleanType => v => JBool(v.asInstanceOf[Boolean])
     case LongType    => v => JLong(v.asInstanceOf[Long])
@@ -84,7 +82,7 @@ object JqInput {
     case st: StructType =>
       val names = st.fields.map(_.name)
       val types = st.fields.map(_.dataType)
-      val convs = types.map(valueConverter)
+      val convs = types.map(converter)
       // Distinct names are sorted into JObj's key order once, here, so a
       // row builds its object directly; repeated names keep the
       // last-wins fold of `fromProps`.
@@ -110,7 +108,7 @@ object JqInput {
         build(leaf(kvs))
       }
     case ArrayType(et, _) =>
-      val conv = valueConverter(et)
+      val conv = converter(et)
       v => {
         val arr = v.asInstanceOf[ArrayData]
         val n = arr.numElements()
@@ -123,7 +121,7 @@ object JqInput {
         JArr(leaf(items))
       }
     case MapType(StringType, vt, _) =>
-      val conv = valueConverter(vt)
+      val conv = converter(vt)
       v => {
         val m = v.asInstanceOf[MapData]
         val n = m.numElements()
@@ -191,5 +189,65 @@ object JqInput {
         // produced) and lift it into the document model
         JsonText.parse(v.toJson(java.time.ZoneOffset.UTC))
     }
+  }
+}
+
+/** The one conversion of a jq document operand: every jq expression reads
+  * `JqDoc(column)`, so Spark's subexpression elimination evaluates a
+  * repeated `JqDoc(c)` once per row, and any number of jq expressions over
+  * `c` in one projection convert it once.
+  *
+  * Three operand cases, resolved once on the driver from the type:
+  *   - STRING is JSON text: its [[JsonText.parseOnce]], which keeps the raw
+  *     parsed document (negative zero, non-finite doubles) or the error;
+  *   - a [[JqDoc]] value ([[JqInput.DocType]]) reads back through its
+  *     canonical text: the document a parse of
+  *     [[graft.sources.ParsedText]] of it gives, NULL where that text is
+  *     NULL ([[JsonText.Parsed.readBack]] when it is a parse). jq over
+  *     `readJsonl`'s `doc` reads the line's parse so
+  *     ([[graft.plans.JqPathCompile]]);
+  *   - any other type converts structurally ([[JqInput.converter]]).
+  *
+  * A conversion that fails (malformed text, a failed read-back, VARIANT
+  * nesting past [[JsonText.MaxDepth]]) is a [[JsonText.Parsed]] error,
+  * which a jq expression renders as the record of that parse exception.
+  * Not foldable: a case-class [[JDoc]] literal would be read as a row. */
+case class JqDoc(child: Expression) extends NativeUnaryCodegen {
+  override def dataType: DataType = JqInput.DocType
+  override def nullable: Boolean = child.nullable || child.dataType == JqInput.DocType
+  override def foldable: Boolean = false
+  override def prettyName: String = "jq_doc"
+
+  override def checkInputDataTypes(): TypeCheckResult =
+    if (JqInput.supports(child.dataType)) TypeCheckResult.TypeCheckSuccess
+    else TypeCheckResult.TypeCheckFailure(
+      s"jq cannot run over input type ${child.dataType.catalogString}")
+
+  @transient private lazy val conv: Any => AnyRef = child.dataType match {
+    case StringType => v => JsonText.parseOnce(v.toString)
+    case JqInput.DocType => {
+      case p: JsonText.Parsed => if (p.error == null) p.readBack else null
+      case d: JDoc            => JsonText.parse(JsonText.canonical(d))
+    }
+    case other => JqInput.converter(other)
+  }
+
+  override protected def nullSafeEval(v: Any): Any =
+    try conv(v) catch { case e: JsonText.JsonParseException => JsonText.failed(e) }
+  override protected def withNewChildInternal(c: Expression): JqDoc = copy(child = c)
+}
+
+object JqDoc {
+
+  /** The document of a [[JqDoc]] value; null when its conversion failed. */
+  def document(v: Any): JDoc = v match {
+    case p: JsonText.Parsed => p.doc
+    case d: JDoc            => d
+  }
+
+  /** The parse error of a [[JqDoc]] value; null when it converted. */
+  def error(v: Any): String = v match {
+    case p: JsonText.Parsed => p.error
+    case _                  => null
   }
 }

@@ -99,11 +99,7 @@ object CborCodec {
     * becomes the error half of the result (errors-as-data for scans). */
   def decodeMany(bytes: Array[Byte]): (Vector[JDoc], Option[String]) = {
     val p = new Decoder(bytes)
-    val out = Vector.newBuilder[JDoc]
-    try {
-      while (p.pos < bytes.length) out += p.readValue(0)
-      (out.result(), None)
-    } catch { case e: CborException => (out.result(), Some(e.getMessage)) }
+    JsonText.readMany[CborException](p.pos < bytes.length, p.readValue(0))
   }
 
   private final class Decoder(bytes: Array[Byte]) {

@@ -48,35 +48,30 @@ object JsonText {
   def parseOnce(text: String): Parsed = {
     val p = new Parser(text)
     try { val v = p.document(); new Parsed(v, null, p.exact) }
-    catch { case e: JsonParseException => new Parsed(null, e.getMessage, true) }
+    catch { case e: JsonParseException => failed(e) }
   }
 
-  /** Parse a stream of whitespace-separated JSON values (the reference's
-    * `Jsons` scan format, src/json.rs:123-160). */
-  def parseMany(text: String): Vector[JDoc] = {
-    val p = new Parser(text)
-    val out = Vector.newBuilder[JDoc]
-    p.skipWs()
-    while (!p.atEnd) {
-      out += p.parseValue()
-      p.skipWs()
-    }
-    out.result()
-  }
+  /** A parse that failed with `e`. */
+  def failed(e: JsonParseException): Parsed = new Parsed(null, e.getMessage, true)
 
-  /** Parse as many leading values as possible; on malformed input returns
-    * everything parsed so far plus the error for the remainder (the
-    * error-as-data discipline for whole-file scans). */
+  /** Parse as many leading whitespace-separated values as possible (the
+    * reference's `Jsons` scan format, src/json.rs:123-160); on malformed
+    * input returns everything parsed so far plus the error for the
+    * remainder (the error-as-data discipline for whole-file scans). */
   def parseManyLenient(text: String): (Vector[JDoc], Option[String]) = {
     val p = new Parser(text)
+    readMany[JsonParseException]({ p.skipWs(); !p.atEnd }, p.parseValue())
+  }
+
+  /** The lenient stream loop every codec shares: values from `next` while
+    * `more`, until `next` throws an `E`, whose message ends the stream. */
+  private[json] def readMany[E <: Exception: scala.reflect.ClassTag](more: => Boolean, next: => JDoc)
+      : (Vector[JDoc], Option[String]) = {
     val out = Vector.newBuilder[JDoc]
-    p.skipWs()
-    while (!p.atEnd) {
-      try out += p.parseValue()
-      catch { case e: JsonParseException => return (out.result(), Some(e.getMessage)) }
-      p.skipWs()
-    }
-    (out.result(), None)
+    try {
+      while (more) out += next
+      (out.result(), None)
+    } catch { case e: E => (out.result(), Some(e.getMessage)) }
   }
 
   /** Max container nesting: deeper input raises [[JsonParseException]] (the

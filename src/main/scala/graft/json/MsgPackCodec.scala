@@ -97,11 +97,7 @@ object MsgPackCodec {
   /** Concatenated-values stream decode (see CborCodec.decodeMany). */
   def decodeMany(bytes: Array[Byte]): (Vector[JDoc], Option[String]) = {
     val p = new Decoder(bytes)
-    val out = Vector.newBuilder[JDoc]
-    try {
-      while (p.pos < bytes.length) out += p.readValue(0)
-      (out.result(), None)
-    } catch { case e: MsgPackException => (out.result(), Some(e.getMessage)) }
+    JsonText.readMany[MsgPackException](p.pos < bytes.length, p.readValue(0))
   }
 
   private final class Decoder(bytes: Array[Byte]) {

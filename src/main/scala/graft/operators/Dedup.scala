@@ -715,16 +715,6 @@ object Dedup {
       .select(col("id_a"), col("id_b"), jaccard(col("sh_a"), col("sh_b")).as("j"))
   }
 
-  /** Asymmetric shingle CONTAINMENT over a pairs list:
-    * c(a→b) = |A∩B| / |A| and c(b→a) = |A∩B| / |B| — the
-    * doc-inside-doc signal Jaccard misses: a short document quoted
-    * verbatim inside a long one has Jaccard ≈ |A|/|B| (small) but
-    * containment c(a→b) = 1. The training-data use is exactly that
-    * asymmetry — drop the CONTAINED side, keep the superset document.
-    * Empty shingle sets (docs shorter than n words) yield NULL, never a
-    * division error. Same scale shape as [[pairwiseJaccard]]: the pair
-    * list drives two hash joins; shingles attach per side, nothing
-    * corpus-sized self-joins. */
   /** Segment-level boilerplate removal — the corpus-wide "line dedup" pass
     * of a web-scale curation pipeline (RefinedWeb/CCNet remove lines that
     * recur across many pages: headers, footers, cookie banners), restated
@@ -767,6 +757,16 @@ object Dedup {
           .as("kept_fp"))
   }
 
+  /** Asymmetric shingle CONTAINMENT over a pairs list:
+    * c(a→b) = |A∩B| / |A| and c(b→a) = |A∩B| / |B| — the
+    * doc-inside-doc signal Jaccard misses: a short document quoted
+    * verbatim inside a long one has Jaccard ≈ |A|/|B| (small) but
+    * containment c(a→b) = 1. The training-data use is exactly that
+    * asymmetry — drop the CONTAINED side, keep the superset document.
+    * Empty shingle sets (docs shorter than n words) yield NULL, never a
+    * division error. Same scale shape as [[pairwiseJaccard]]: the pair
+    * list drives two hash joins; shingles attach per side, nothing
+    * corpus-sized self-joins. */
   def pairwiseContainment(docs: DataFrame, id: String, text: Column, n: Int,
                           pairs: DataFrame): DataFrame = {
     val shingled = docs.select(col(id), wordShingles(text, n).as("sh"))

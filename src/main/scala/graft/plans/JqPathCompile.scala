@@ -6,8 +6,8 @@ import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.jq.{Ast, JqDocInput, JqExtract}
-import graft.sources.{ParsedDoc, ParsedText}
+import graft.jq.{Ast, JqDoc, JqExtract}
+import graft.sources.ParsedText
 
 /** Optimizer rule: compile jq INDEX-PATH programs over STRUCT/MAP columns
   * into native Catalyst field accesses.
@@ -40,16 +40,16 @@ import graft.sources.{ParsedDoc, ParsedText}
   * propagates NULL natively, and the document conversion omits null
   * struct fields so the jq index yields null → extract NULL.
   *
-  * The same pass makes a jq expression over `readJsonl`'s `doc` read the
-  * line's parse: where the document operand of any jq expression is the
-  * canonical text of a [[graft.sources.ParseJson]] ([[ParsedText]]), it
-  * becomes the parse itself ([[ParsedDoc]]). That is exact by construction:
+  * Every jq expression reads its document through one [[JqDoc]], so the
+  * same pass also makes jq over `readJsonl`'s `doc` read the line's parse:
+  * `JqDoc(ParsedText(p))`, the conversion of a conversion's canonical
+  * text, becomes `JqDoc(p)`, which reads `p` back through that text
+  * without writing it. That is exact by construction:
   * [[graft.json.JsonText.Parsed.readBack]] is the document a parse of the
   * canonical text gives, and it is the parsed document except on the two
   * values without a canonical round trip (negative zero, non-finite
   * doubles), where it does parse that text. The jq expression and the
-  * `error` column then share one `ParseJson`, and the canonical text is
-  * not written unless `doc` itself is read.
+  * `error` column then share one line parse.
   *
   * Registered via [[graft.GraftExtensions]] (`injectOptimizerRule`) — the
   * same session switch that installs the SQL functions installs their
@@ -58,15 +58,9 @@ object JqPathCompile extends Rule[LogicalPlan] {
 
   override def apply(plan: LogicalPlan): LogicalPlan =
     plan.transformAllExpressions {
-      case e: JqDocInput if e.docInput.resolved =>
-        val native = e match {
-          case JqExtract(ast, _, kind, child) => pathKeys(ast).flatMap(compilePath(child, _, kind))
-          case _                              => None
-        }
-        native.getOrElse(e.docInput match {
-          case ParsedText(parse) => e.withDocInput(ParsedDoc(parse))
-          case _                 => e
-        })
+      case JqDoc(ParsedText(p)) => JqDoc(p)
+      case e @ JqExtract(ast, _, kind, JqDoc(root)) =>
+        pathKeys(ast).flatMap(compilePath(root, _, kind)).getOrElse(e)
     }
 
   /** The key chain of a pure index-path program; None for anything else. */

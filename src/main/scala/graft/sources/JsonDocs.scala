@@ -1,10 +1,11 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.ColumnBridge
 
-import graft.json.JsonText
+import graft.jq.JqDoc
+import graft.json.{JDoc, JsonText}
 
 /** Sources for the reference's document-stream formats (SURVEY.md §2.1).
   *
@@ -20,16 +21,21 @@ import graft.json.JsonText
   *     sub-file splits can't be cut safely) — the documented trade-off of
   *     the reference's format; prefer JSONL at scale.
   *
-  * Both yield (doc: canonical JSON text, errors): malformed input becomes
+  * Both yield (doc: canonical JSON text, error): malformed input becomes
   * per-record errors, never exceptions (the engine's error-as-data rule).
+  * The whole-file readers (concatenated text, CBOR, MessagePack) share one
+  * lenient decode into those rows; JSONL is Catalyst expressions over the
+  * jq document conversion of each line, so jq over its `doc` reads that
+  * parse.
   */
 object JsonDocs {
 
   /** One JSON value per line; blank lines are skipped and bad lines yield
     * an error row. `doc` and `error` are Catalyst expressions over one
-    * parse of the line ([[ParseJson]]), so a row parses once however many
-    * of them a query reads; and a jq expression over `doc` reads that
-    * parse instead of re-parsing the canonical text
+    * parse of the line, the jq document conversion
+    * [[graft.jq.JqDoc]]`(value)`, so a row parses once however many of
+    * them a query reads; and a jq expression over `doc` reads that parse
+    * instead of re-parsing the canonical text
     * ([[graft.plans.JqPathCompile]]), which is then never written unless
     * `doc` itself is selected. */
   def readJsonl(spark: SparkSession, path: String): DataFrame =
@@ -37,18 +43,8 @@ object JsonDocs {
 
   /** Whitespace-separated concatenated values (the reference's on-disk
     * format), one partition per file. */
-  def readConcatenated(spark: SparkSession, path: String): DataFrame = {
-    import spark.implicits._
-    spark.read.option("wholetext", "true").textFile(path)
-      .flatMap { content =>
-        // keep every successfully parsed value; only the malformed
-        // remainder becomes an error record
-        val (docs, err) = JsonText.parseManyLenient(content)
-        docs.map(d => (JsonText.canonical(d), null: String)) ++
-          err.map(m => (null: String, m))
-      }
-      .toDF("doc", "error")
-  }
+  def readConcatenated(spark: SparkSession, path: String): DataFrame =
+    decodedDocs(spark.read.option("wholetext", "true").textFile(path), JsonText.parseManyLenient)
 
   /** The `InputMem` analogue (reference: src/input_mem.rs:4-46): an
     * in-memory document vector as a DataFrame. */
@@ -62,24 +58,28 @@ object JsonDocs {
     * a document stream with no separators). Per-file parallelism; yields
     * (doc: canonical JSON text, error). */
   def readCbor(spark: SparkSession, path: String): DataFrame =
-    readBinaryStream(spark, path, graft.json.CborCodec.decodeMany)
+    decodedDocs(binaryFiles(spark, path), graft.json.CborCodec.decodeMany)
 
   /** Concatenated MessagePack values per file. */
   def readMsgPack(spark: SparkSession, path: String): DataFrame =
-    readBinaryStream(spark, path, graft.json.MsgPackCodec.decodeMany)
+    decodedDocs(binaryFiles(spark, path), graft.json.MsgPackCodec.decodeMany)
 
-  private def readBinaryStream(spark: SparkSession, path: String,
-      decodeMany: Array[Byte] => (Vector[graft.json.JDoc], Option[String])): DataFrame = {
+  private def binaryFiles(spark: SparkSession, path: String): Dataset[Array[Byte]] = {
     import spark.implicits._
-    spark.read.format("binaryFile").load(path)
-      .select(col("content"))
-      .as[Array[Byte]]
-      .flatMap { bytes =>
-        val (docs, err) = decodeMany(bytes)
-        docs.map(d => (JsonText.canonical(d), null: String)) ++
-          err.map(m => (null: String, m))
-      }
-      .toDF("doc", "error")
+    spark.read.format("binaryFile").load(path).select(col("content")).as[Array[Byte]]
+  }
+
+  /** Whole-file document streams → (doc, error) rows: every value the
+    * lenient `decodeMany` reads, canonical, then the error of the
+    * malformed remainder, if any. */
+  private def decodedDocs[A](files: Dataset[A],
+      decodeMany: A => (Vector[JDoc], Option[String])): DataFrame = {
+    val spark = files.sparkSession
+    import spark.implicits._
+    files.flatMap { file =>
+      val (docs, err) = decodeMany(file)
+      docs.map(d => (JsonText.canonical(d), null: String)) ++ err.map(m => (null: String, m))
+    }.toDF("doc", "error")
   }
 
   /** Distributed JSONL sink — the write path symmetric to [[readJsonl]]:
@@ -106,7 +106,7 @@ object JsonDocs {
     * [[readJsonl]] and [[streamJsonl]]. */
   private def parsedLines(lines: DataFrame): DataFrame = {
     val line = ColumnBridge.expression(lines.col("value"))
-    val parse = ParseJson(line)
+    val parse = JqDoc(line)
     lines.filter(ColumnBridge.column(NonBlank(line)))
       .select(
         ColumnBridge.column(ParsedText(parse)).as("doc"),

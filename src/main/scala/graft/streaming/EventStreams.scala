@@ -204,37 +204,9 @@ object EventStreams {
       .flatMapGroupsWithState[List[SessionState], SessionOut](
         OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
         (userId: Long, batch: Iterator[SessionEventT], state: GroupState[List[SessionState]]) =>
-          if (state.hasTimedOut) {
-            val closed = state.getOption.getOrElse(Nil)
-              .map(s => SessionOut(userId, s.start, s.last - s.start, s.n))
-            state.remove()
-            closed.iterator
-          } else {
-            val sorted = batch.map(_.ts).toVector.sorted
-            var sessions = state.getOption.getOrElse(Nil)
-            val closed = List.newBuilder[SessionOut]
-            sorted.foreach { ts =>
-              sessions match {
-                case cur :: rest if ts - cur.last <= gapNanos =>
-                  // late (cross-batch out-of-order) events fold INTO the
-                  // session: last never moves backward, start can extend
-                  // earlier — otherwise a late event would shrink the span
-                  // (negative duration) and re-arm the timeout too early
-                  sessions = cur.copy(start = math.min(cur.start, ts),
-                    last = math.max(cur.last, ts), n = cur.n + 1) :: rest
-                case cur :: rest =>
-                  closed += SessionOut(userId, cur.start, cur.last - cur.start, cur.n)
-                  sessions = SessionState(ts, ts, 1) :: rest
-                case Nil =>
-                  sessions = SessionState(ts, ts, 1) :: Nil
-              }
-            }
-            state.update(sessions)
-            sessions.headOption.foreach { cur =>
-              // flush when the watermark passes last + gap (event time)
-              state.setTimeoutTimestamp(cur.last / 1000000L + gapMillis)
-            }
-            closed.result().iterator
+          foldSessions(userId, batch.map(_.ts), state, gapNanos) { open =>
+            // flush when the watermark passes last + gap (event time)
+            open.headOption.foreach(cur => state.setTimeoutTimestamp(cur.last / 1000000L + gapMillis))
           }
       }
   }
@@ -262,37 +234,47 @@ object EventStreams {
       .flatMapGroupsWithState[List[SessionState], SessionOut](
         OutputMode.Append, timeoutConf) {
         (userId: Long, batch: Iterator[SessionEvent], state: GroupState[List[SessionState]]) =>
-          if (state.hasTimedOut) {
-            // user idle past the gap: flush every open session, drop state
-            val closed = state.getOption.getOrElse(Nil)
-              .map(s => SessionOut(userId, s.start, s.last - s.start, s.n))
-            state.remove()
-            closed.iterator
-          } else {
-            // sessions tracked newest-first; a batch may close several
-            val sorted = batch.map(_.ts).toVector.sorted
-            var sessions = state.getOption.getOrElse(Nil)
-            val closed = List.newBuilder[SessionOut]
-            sorted.foreach { ts =>
-              sessions match {
-                case cur :: rest if ts - cur.last <= gapNanos =>
-                  // late (cross-batch out-of-order) events fold INTO the
-                  // session: last never moves backward, start can extend
-                  // earlier — otherwise a late event would shrink the span
-                  // (negative duration) and re-arm the timeout too early
-                  sessions = cur.copy(start = math.min(cur.start, ts),
-                    last = math.max(cur.last, ts), n = cur.n + 1) :: rest
-                case cur :: rest =>
-                  closed += SessionOut(userId, cur.start, cur.last - cur.start, cur.n)
-                  sessions = SessionState(ts, ts, 1) :: rest
-                case Nil =>
-                  sessions = SessionState(ts, ts, 1) :: Nil
-              }
-            }
-            state.update(sessions)
+          foldSessions(userId, batch.map(_.ts), state, gapNanos) { _ =>
             if (idleTimeouts) state.setTimeoutDuration(gapMillis)
-            closed.result().iterator
           }
       }
+  }
+
+  /** The session state machine of both streaming sessionizers, one call
+    * per user and trigger. On a timeout it flushes every open session and
+    * drops the state. Otherwise it folds the batch's event times, sorted,
+    * into the open sessions (tracked newest-first; a batch may close
+    * several), emits the sessions a gap closes, stores the open ones and
+    * hands them to `arm`, which sets the caller's timeout. */
+  private def foldSessions(userId: Long, times: Iterator[Long], state: GroupState[List[SessionState]],
+                           gapNanos: Long)(arm: List[SessionState] => Unit): Iterator[SessionOut] = {
+    def out(s: SessionState) = SessionOut(userId, s.start, s.last - s.start, s.n)
+    if (state.hasTimedOut) {
+      val closed = state.getOption.getOrElse(Nil).map(out)
+      state.remove()
+      closed.iterator
+    } else {
+      var sessions = state.getOption.getOrElse(Nil)
+      val closed = List.newBuilder[SessionOut]
+      times.toVector.sorted.foreach { ts =>
+        sessions match {
+          case cur :: rest if ts - cur.last <= gapNanos =>
+            // late (cross-batch out-of-order) events fold INTO the
+            // session: last never moves backward, start can extend
+            // earlier — otherwise a late event would shrink the span
+            // (negative duration) and re-arm the timeout too early
+            sessions = cur.copy(start = math.min(cur.start, ts),
+              last = math.max(cur.last, ts), n = cur.n + 1) :: rest
+          case cur :: rest =>
+            closed += out(cur)
+            sessions = SessionState(ts, ts, 1) :: rest
+          case Nil =>
+            sessions = SessionState(ts, ts, 1) :: Nil
+        }
+      }
+      state.update(sessions)
+      arm(sessions)
+      closed.result().iterator
+    }
   }
 }

@@ -149,6 +149,39 @@ class JqSparkSpec extends SparkTestBase {
     } finally spark.conf.unset("spark.sql.codegen.fallback")
   }
 
+  test("a failed conversion reaches every jq expression as its error entry or NULL") {
+    def parseError(text: String) =
+      "invalid json: " + intercept[JsonText.JsonParseException](JsonText.parse(text)).getMessage
+    val deep = "[" * 600 + "]" * 600
+    // malformed text; a VARIANT nested past the conversion's depth bound
+    val cases = Seq(
+      (lit("{\"a\":"), parseError("{\"a\":")),
+      (parse_json(lit(deep)), s"invalid json: variant nesting deeper than ${JsonText.MaxDepth} at offset 0"))
+    cases.foreach { case (doc, error) =>
+      val r = spark.range(1).select(
+        Jq.query(".", doc).as("q"), Jq.docs(".", doc).as("d"), Jq.long(".", doc).as("l"),
+        Jq.evalWithMeta(".", doc, lit("{}")).as("em"),
+        Jq.multi(Seq(("x", ".", "string"), ("y", ".", "long")), doc).as("m")).head()
+      val q = r.getSeq[org.apache.spark.sql.Row](0)
+      assert(q.length == 1 && q.head.getString(0) == "null" && q.head.getSeq[String](1) == Seq(error))
+      assert(r.getSeq[String](1).isEmpty && r.isNullAt(2) && r.getSeq[org.apache.spark.sql.Row](3).isEmpty)
+      assert(!r.isNullAt(4) && r.getStruct(4).isNullAt(0) && r.getStruct(4).isNullAt(1),
+        "a document that fails to convert is a struct of NULL fields")
+    }
+    // a NULL document is NULL everywhere
+    val n = spark.range(1).select(
+      Jq.query(".", lit(null).cast("string")), Jq.multi(Seq(("x", ".", "string")), lit(null).cast("string"))).head()
+    assert(n.isNullAt(0) && n.isNullAt(1))
+  }
+
+  test("Jq.multi rejects an unknown kind when the column is built") {
+    // a STRING field that is NULL on every row would hide the typo
+    val e = intercept[IllegalArgumentException](Jq.multi(Seq(("x", ".a", "int")), col("doc")))
+    assert(e.getMessage.contains("unknown kind 'int'"), e.getMessage)
+    assert(Jq.multi(Seq(("s", ".", "string"), ("l", ".", "long"), ("d", ".", "double"),
+      ("b", ".", "bool")), col("doc")) != null)
+  }
+
   test("jq over numeric/array/map inputs (native converters)") {
     val df = spark.range(1).select(
       lit(41L).as("l"),

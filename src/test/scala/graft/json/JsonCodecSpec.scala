@@ -37,11 +37,12 @@ class JsonCodecSpec extends AnyFunSuite {
     }
   }
 
-  test("parseMany streams whitespace-separated values") {
-    val docs = JsonText.parseMany("""null  true {"a": 1}
+  test("parseManyLenient streams whitespace-separated values") {
+    val (docs, err) = JsonText.parseManyLenient("""null  true {"a": 1}
       [1, 2]   "x" 10 10.5""")
     assert(docs.map(JsonText.canonical) ==
       Vector("null", "true", """{"a":1}""", "[1,2]", "\"x\"", "10", "1.05e1"))
+    assert(err == None)
   }
 
   test("objects sort keys with last-wins duplicate upsert") {

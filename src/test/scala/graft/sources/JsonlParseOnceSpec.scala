@@ -4,14 +4,18 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.functions.{col, lit}
+import org.apache.spark.sql.functions.{col, concat, lit, struct}
+import org.apache.spark.sql.types.StringType
 
 import graft.{Jq, SparkTestBase}
+import graft.jq.JqDoc
 
 /** `readJsonl` as Catalyst expressions over one parse of each line, and jq
   * over its `doc` reading that parse (graft.plans.JqPathCompile): results
   * equal the rule-off plan, where jq re-parses the canonical text, and
-  * `doc`/`error` equal a per-line `String.trim` filter and parse. */
+  * `doc`/`error` equal a per-line `String.trim` filter and parse. Every jq
+  * expression reads its document through one `JqDoc`, so several over one
+  * column share its conversion. */
 class JsonlParseOnceSpec extends SparkTestBase {
   import spark.implicits._
 
@@ -105,8 +109,8 @@ class JsonlParseOnceSpec extends SparkTestBase {
       ).map(jq => docs.select(jq.as("jq"), col("error")))
     }
     val on = queries()
-    on.foreach(q => assert(planExprs(q).exists(_.isInstanceOf[ParsedDoc]), q.queryExecution.optimizedPlan))
-    val off = ruleOff(queries().map { q => assert(!planExprs(q).exists(_.isInstanceOf[ParsedDoc])); rows(q) })
+    on.foreach(q => assert(readsLineParse(q), q.queryExecution.optimizedPlan))
+    val off = ruleOff(queries().map { q => assert(!readsLineParse(q)); rows(q) })
     on.map(rows).zip(off).zipWithIndex.foreach { case ((a, b), i) =>
       assert(a == b, s"query $i: rule on and rule off differ")
     }
@@ -120,16 +124,44 @@ class JsonlParseOnceSpec extends SparkTestBase {
     assert(inf.length == 1 && inf.head.contains("invalid json"), inf)
   }
 
+  /** A jq operand that reads a conversion back: the line's parse. */
+  private def readsLineParse(df: DataFrame): Boolean =
+    planExprs(df).exists { case JqDoc(_: JqDoc) => true; case _ => false }
+
+  /** The distinct conversions in a plan that parse JSON text. */
+  private def lineParses(exprs: Seq[Expression]): Seq[Expression] =
+    exprs.collect { case d @ JqDoc(c) if c.dataType == StringType => d.canonicalized }.distinct
+
+  private def conversions(df: DataFrame): Seq[Expression] =
+    planExprs(df).collect { case d: JqDoc => d.canonicalized }.distinct
+
   test("plan: select(Jq.multi(doc), error) holds one parse and no canonical write") {
     val q = JsonDocs.readJsonl(spark, path)
       .select(Jq.multi(scanPrograms, col("doc")).as("m"), col("error"))
     val exprs = planExprs(q)
-    val parses = exprs.collect { case p: ParseJson => p.canonicalized }.distinct
-    assert(parses.length == 1, q.queryExecution.optimizedPlan)
+    assert(lineParses(exprs).length == 1, q.queryExecution.optimizedPlan)
     assert(!exprs.exists(_.isInstanceOf[ParsedText]), q.queryExecution.optimizedPlan)
     // doc alone: the canonical write stays, the error read is pruned
     val docOnly = planExprs(JsonDocs.readJsonl(spark, path).select(col("doc")))
     assert(docOnly.exists(_.isInstanceOf[ParsedText]) && !docOnly.exists(_.isInstanceOf[ParsedError]))
+  }
+
+  test("two jq expressions over one column share one conversion") {
+    // two readers of `doc` keep it a column (CollapseProject does not
+    // inline a costly alias twice): the line's parse, and one conversion
+    // of the canonical text that both jq expressions read
+    def twoReaders(): DataFrame = JsonDocs.readJsonl(spark, path)
+      .select(Jq.query(".user.name", col("doc")).as("a"), Jq.query("[paths] | length", col("doc")).as("b"))
+    val q = twoReaders()
+    assert(conversions(q).length <= 2, q.queryExecution.optimizedPlan)
+    assert(rows(q) == ruleOff(rows(twoReaders())))
+    assert(q.where(col("a").getItem(0).getField("doc") === "\"u7\"").count() == 1)
+    // a STRUCT column: programs the path rule does not compile away
+    val s = spark.range(0, 50, 1, 2)
+      .select(struct(col("id").as("a"), concat(lit("x"), col("id").cast("string")).as("b")).as("s"))
+    val sq = s.select(Jq.long(".a + 1", col("s")).as("n"), Jq.string(".b | ascii_upcase", col("s")).as("u"))
+    assert(conversions(sq).length == 1, sq.queryExecution.optimizedPlan)
+    assert(sq.collect().map(r => (r.getLong(0), r.getString(1))).toSet == (0L until 50L).map(i => (i + 1, s"X$i")).toSet)
   }
 
   test("streamJsonl: the same projection over a stream") {
