@@ -64,10 +64,8 @@ case class JsonCmp(left: Expression, right: Expression)
     val a = JsonFunctions.parseOrNull(l.asInstanceOf[UTF8String])
     val b = JsonFunctions.parseOrNull(r.asInstanceOf[UTF8String])
     if (a == null || b == null) return null
-    JOps.cmp(a, b) match {
-      case Some(c) => Integer.valueOf(if (c < 0) -1 else if (c > 0) 1 else 0)
-      case None    => null
-    }
+    val c = JOps.cmp(a, b)
+    if (c == JOps.Incomparable) null else Integer.valueOf(Integer.signum(c))
   }
   override protected def withNewChildrenInternal(l: Expression, r: Expression): JsonCmp =
     copy(left = l, right = r)

@@ -20,11 +20,11 @@ object JEntry {
 }
 
 /** The jq evaluator, structured as a closure compiler: [[compile]] turns an
-  * AST into a [[Interp.Pipe]], a `(JDoc, Env) => Vector[JEntry]`, once —
-  * node dispatch is resolved and literal subtrees are pre-evaluated at
-  * compile time, so per-document evaluation is a call through a tree of
-  * monomorphic closures (≈3-5× faster than re-walking the AST per row;
-  * JqEval caches the compiled form per executor instance).
+  * AST into a [[Interp.Pipe]] once — node dispatch is resolved and
+  * literal subtrees are pre-evaluated at compile time, so per-document
+  * evaluation is a call through a tree of monomorphic closures (≈3-5×
+  * faster than re-walking the AST per row; JqEval caches the compiled form
+  * per executor instance).
   *
   * A jq expression is set-valued: one input document produces a stream of
   * output entries, which is what makes the whole pipeline a narrow per-row
@@ -32,16 +32,38 @@ object JEntry {
   * src/ops.rs with the intended (not buggy) behavior where the reference
   * differs from its own tests (SURVEY.md §1.2, §2.7).
   *
-  * Most nodes emit exactly one entry per input, so the per-row cost is
-  * dominated by how cheaply a one-entry stream is built and combined:
+  * Most nodes emit exactly one entry per input, so each node compiles to
+  * two forms at once, one [[Interp.Pipe]]:
+  *   - the general form, `apply`, is the node's output stream, with its
+  *     errors, lineage envelopes, empty and multi-output streams and
+  *     `break`;
+  *   - the single-value form, `value`, is the node's one error-free
+  *     output as a bare `JDoc`, or null when the general form must decide.
+  *     It covers identity, literals, `.key`/ident/`.[n]` access, `?`,
+  *     pipes, binary operators, `not`/negation, if/then/else, `$var`,
+  *     string interpolation and the zero-argument builtins over `.`
+  *     (`type`, `length`, …) that no user def shadows. It builds no
+  *     stream and never throws `break`, and whenever it returns `v` the
+  *     general form returns exactly one error-free entry whose doc is `v`
+  *     (ValuePathSpec checks this on random documents).
+  *
+  * A consumer that reads only a value tries `value` first and falls back
+  * to `apply` on the same input when it returns null: an if condition,
+  * `select`'s predicate, a binary operator's operands, a builtin's
+  * first-output argument (`firstOut`, `sort_by`'s key), `reduce`'s
+  * update, the first-output sinks (`JqExtract`, `JqMulti`). A value
+  * drops the entry's lineage envelope, so only consumers that ignore it
+  * read one; a binary operator may, because its combined envelope is the
+  * shared `JMeta.init` whenever its operands carry none or that same
+  * constant, and a plain evaluation produces nothing else. On the
+  * general form's one-entry path:
   *   - every one-entry stream is built by `one` (`Vector.empty :+ e`, a
   *     bare `Vector1`), never by the varargs `Vector(e)`;
   *   - the stream combinators (`breakFlatMap`, `Bin`, `MkList`) take a
   *     no-builder path when their input stream has one entry, and
   *     build an error list only when an operand has errors;
-  *   - a combined entry's lineage envelope is the shared `JMeta.init`
-  *     constant whenever every operand carried none or that same constant
-  *     (see [[graft.json.JMeta.merge]]), so the plain jq path allocates no
+  *   - a combined entry's envelope is that shared constant (see
+  *     [[graft.json.JMeta.merge]]), so the plain jq path allocates no
   *     envelope per combine.
   */
 object Interp {
@@ -51,7 +73,13 @@ object Interp {
     * `$x`, binders and reduce/foreach work anywhere in a program. */
   type Env = List[(String, JDoc)]
 
-  type Pipe = (JDoc, Env) => Vector[JEntry]
+  /** A compiled node: `apply` is its general form, `value` its
+    * single-value form (see [[Interp]]). A function literal is a node with
+    * no single-value form. */
+  abstract class Pipe {
+    def apply(doc: JDoc, env: Env): Vector[JEntry]
+    def value(doc: JDoc, env: Env): JDoc = null
+  }
 
   def run(query: String, doc: JDoc): Vector[JEntry] =
     compile(JqParser.parse(query))(doc, Nil)
@@ -68,17 +96,20 @@ object Interp {
     * duplicate-free. Documented deviation, pinned in JMetaSpec). */
   def compileE(ast: Ast): (JEntry, Env) => Vector[JEntry] = {
     val f = compile(ast)
-    (e, env) =>
-      if (e.errors.nonEmpty) one(e)
-      else if (e.meta.isEmpty) f(e.doc, env)
-      else f(e.doc, env).map { out =>
-        if (out.meta.isEmpty) out.copy(meta = e.meta)
-        else {
-          val m = JMeta.merge(out.meta, e.meta)
-          if (m eq out.meta) out else out.copy(meta = m)
-        }
-      }
+    (e, env) => onEntry(f, e, env)
   }
+
+  /** [[compileE]]'s step: `f` over one streamed entry. */
+  private def onEntry(f: Pipe, e: JEntry, env: Env): Vector[JEntry] =
+    if (e.errors.nonEmpty) one(e)
+    else if (e.meta.isEmpty) f(e.doc, env)
+    else f(e.doc, env).map { out =>
+      if (out.meta.isEmpty) out.copy(meta = e.meta)
+      else {
+        val m = JMeta.merge(out.meta, e.meta)
+        if (m eq out.meta) out else out.copy(meta = m)
+      }
+    }
 
   /** The one-entry stream: `Vector.empty :+ e` is a bare `Vector1`, where
     * `Vector(e)` wraps a varargs `ArraySeq` and copies it. */
@@ -129,35 +160,40 @@ object Interp {
     }
 
   def compile(ast: Ast): Pipe = ast match {
-    case Identity => (doc, env) => one(JEntry.ok(doc))
+    case Identity => new Pipe {
+      def apply(doc: JDoc, env: Env) = one(JEntry.ok(doc))
+      override def value(doc: JDoc, env: Env) = doc
+    }
     case Recurse  => (doc, env) => JOps.recurse(doc).map(JEntry.ok)
 
     case Lit(v) =>
       val out = one(JEntry.ok(v)) // literals are constant per input
-      (_, _) => out
+      new Pipe {
+        def apply(doc: JDoc, env: Env) = out
+        override def value(doc: JDoc, env: Env) = v
+      }
 
     case OptMark(e) =>
       val f = compile(e)
-      (doc, env) => f(doc, env).filter(_.errors.isEmpty)
-
-    case IndexKey(key, opt) =>
-      (doc, env) => JOps.getKey(doc, key) match {
-        case Some(v) => one(JEntry.ok(v))
-        case None    => err(s"cannot index $key into ${doc.typeName}", opt)
+      new Pipe {
+        def apply(doc: JDoc, env: Env) = f(doc, env).filter(_.errors.isEmpty)
+        override def value(doc: JDoc, env: Env) = f.value(doc, env) // `?` keeps an error-free output
       }
 
+    case IndexKey(key, opt) => keyAccess(key, opt)
+
     case IndexNum(off, opt) =>
-      (doc, env) => JOps.indexAt(doc, off) match {
-        case Some(v) => one(JEntry.ok(v))
-        case None    => err(s"cannot index $off into ${doc.typeName}", opt)
+      new Pipe {
+        def apply(doc: JDoc, env: Env) = {
+          val v = JOps.elementAt(doc, off)
+          if (v != null) one(JEntry.ok(v)) else err(s"cannot index $off into ${doc.typeName}", opt)
+        }
+        override def value(doc: JDoc, env: Env) = JOps.elementAt(doc, off)
       }
 
     case Ident(name, opt) =>
       // bare identifier ≡ field access (reference: src/ops.rs:332-341)
-      (doc, env) => JOps.getKey(doc, name) match {
-        case Some(v) => one(JEntry.ok(v))
-        case None    => err(s"cannot index $name into ${doc.typeName}", opt)
-      }
+      keyAccess(name, opt)
 
     case Slice(start, end, opt) =>
       (doc, env) => JOps.slice(doc, start, end) match {
@@ -169,6 +205,14 @@ object Interp {
       (doc, env) => JOps.docValues(doc) match {
         case Some(vs) => vs.map(JEntry.ok)
         case None     => err(s"cannot iterate ${doc.typeName}", opt)
+      }
+
+    case Iterate(item :: Nil, _) =>
+      // `.[n]`: one sub-pipeline, whose stream is the whole round-robin
+      val f = compile(item)
+      new Pipe {
+        def apply(doc: JDoc, env: Env) = f(doc, env)
+        override def value(doc: JDoc, env: Env) = f.value(doc, env)
       }
 
     case Iterate(items, _) =>
@@ -214,12 +258,8 @@ object Interp {
     case MkDict(pairs, _) =>
       compileDict(pairs)
 
-    case Neg(e) =>
-      val f = compile(e)
-      (doc, env) => f(doc, env).map(mapOk(_)(JOps.neg))
-    case Not(e) =>
-      val f = compile(e)
-      (doc, env) => f(doc, env).map(mapOk(_)(JOps.not))
+    case Neg(e) => unary(compile(e), JOps.neg)
+    case Not(e) => unary(compile(e), JOps.not)
 
     case Bin(op, l, r) =>
       // per-entry zip of both operand streams, truncated to the shorter
@@ -236,26 +276,50 @@ object Interp {
         JEntry(kernel(le.doc, re.doc), errors,
           JMeta.newMerged(le.meta, re.meta)) // reference: Entry::new_merged, ops.rs:832+
       }
-      (doc, env) => {
-        val ls = fl(doc, env)
-        val rs = fr(doc, env)
-        if (ls.length == 1 && rs.length == 1) one(combine(ls(0), rs(0)))
-        else {
-          val n = math.min(ls.length, rs.length)
-          val out = Vector.newBuilder[JEntry]
-          var i = 0
-          while (i < n) {
-            out += combine(ls(i), rs(i))
-            i += 1
+      new Pipe {
+        def apply(doc: JDoc, env: Env) = {
+          // operands read as values when they have one: a value's entry
+          // has no envelope, which combines to the same `init` as an
+          // operand entry's own (see [[Interp]])
+          val lv = fl.value(doc, env)
+          val rv = fr.value(doc, env)
+          if (lv != null && rv != null) one(JEntry(kernel(lv, rv), Vector.empty, combinedMeta))
+          else {
+            val ls = if (lv != null) one(JEntry.ok(lv)) else fl(doc, env)
+            val rs = if (rv != null) one(JEntry.ok(rv)) else fr(doc, env)
+            if (ls.length == 1 && rs.length == 1) one(combine(ls(0), rs(0)))
+            else {
+              val n = math.min(ls.length, rs.length)
+              val out = Vector.newBuilder[JEntry]
+              var i = 0
+              while (i < n) {
+                out += combine(ls(i), rs(i))
+                i += 1
+              }
+              out.result()
+            }
           }
-          out.result()
+        }
+        override def value(doc: JDoc, env: Env) = {
+          val lv = fl.value(doc, env)
+          if (lv == null) null
+          else {
+            val rv = fr.value(doc, env)
+            if (rv == null) null else kernel(lv, rv)
+          }
         }
       }
 
     case Pipe(l, r) =>
       val fl = compile(l)
-      val fr = compileE(r)
-      (doc, env) => breakFlatMap(fl(doc, env))(fr(_, env))
+      val fr = compile(r)
+      new Pipe {
+        def apply(doc: JDoc, env: Env) = breakFlatMap(fl(doc, env))(onEntry(fr, _, env))
+        override def value(doc: JDoc, env: Env) = {
+          val v = fl.value(doc, env)
+          if (v == null) null else fr.value(v, env)
+        }
+      }
 
     case Comma(l, r) =>
       // `(a, b)`: a's outputs then b's; a break mid-right keeps the
@@ -320,11 +384,23 @@ object Interp {
       // EXTENSION (jq if/then/elif/else/end): branch per condition output
       val fc = compile(cond)
       val ft = compile(thenB)
-      val fe = elseB.map(compile).getOrElse((d: JDoc, _: Env) => one(JEntry.ok(d)))
-      (doc, env) => breakFlatMap(fc(doc, env)) { ce =>
-        if (ce.errors.nonEmpty) one(ce)
-        else if (JOps.truthy(ce.doc)) ft(doc, env)
-        else fe(doc, env)
+      val fe = compile(elseB.getOrElse(Identity))
+      new Pipe {
+        def apply(doc: JDoc, env: Env) = {
+          val c = fc.value(doc, env)
+          if (c != null) { if (JOps.truthy(c)) ft(doc, env) else fe(doc, env) }
+          else breakFlatMap(fc(doc, env)) { ce =>
+            if (ce.errors.nonEmpty) one(ce)
+            else if (JOps.truthy(ce.doc)) ft(doc, env)
+            else fe(doc, env)
+          }
+        }
+        override def value(doc: JDoc, env: Env) = {
+          val c = fc.value(doc, env)
+          if (c == null) null
+          else if (JOps.truthy(c)) ft.value(doc, env)
+          else fe.value(doc, env)
+        }
       }
 
     case Defs(defs, body) =>
@@ -354,9 +430,20 @@ object Interp {
 
     case Var(name) =>
       // EXTENSION (jq `$x`): innermost binding wins (env is a prepend list)
-      (doc, env) => env.collectFirst { case (n, v) if n == name => v } match {
-        case Some(v) => one(JEntry.ok(v))
-        case None    => one(JEntry(JNull, Vector(s"$$$name is not defined")))
+      new Pipe {
+        private def lookup(env: Env): JDoc = {
+          var e = env
+          while (e.nonEmpty) {
+            if (e.head._1 == name) return e.head._2
+            e = e.tail
+          }
+          null
+        }
+        def apply(doc: JDoc, env: Env) = {
+          val v = lookup(env)
+          if (v != null) one(JEntry.ok(v)) else one(JEntry(JNull, Vector(s"$$$name is not defined")))
+        }
+        override def value(doc: JDoc, env: Env) = lookup(env)
       }
 
     case BindAs(src, name, body) =>
@@ -392,19 +479,25 @@ object Interp {
                 var failed: Option[JEntry] = None
                 srcs.foreach { s =>
                   if (failed.isEmpty) {
-                    val ups =
-                      try fu(acc, (name, s.doc) :: env)
-                      catch {
-                        // foreach's already-emitted scan outputs survive
-                        // a break (reduce emits nothing until the end,
-                        // so its prefix is empty and the signal passes)
-                        case b: BreakSignal if foreach => b.prependAndRethrow(outs.result())
+                    val bound = (name, s.doc) :: env
+                    // reduce reads only the update's value; foreach emits its entries
+                    val v = if (foreach) null else fu.value(acc, bound)
+                    if (v != null) acc = v
+                    else {
+                      val ups =
+                        try fu(acc, bound)
+                        catch {
+                          // foreach's already-emitted scan outputs survive
+                          // a break (reduce emits nothing until the end,
+                          // so its prefix is empty and the signal passes)
+                          case b: BreakSignal if foreach => b.prependAndRethrow(outs.result())
+                        }
+                      ups.find(_.errors.nonEmpty) match {
+                        case Some(e) => failed = Some(e)
+                        case None =>
+                          acc = ups.lastOption.map(_.doc).getOrElse(JNull)
+                          if (foreach) ups.foreach(outs += _)
                       }
-                    ups.find(_.errors.nonEmpty) match {
-                      case Some(e) => failed = Some(e)
-                      case None =>
-                        acc = ups.lastOption.map(_.doc).getOrElse(JNull)
-                        if (foreach) ups.foreach(outs += _)
                     }
                   }
                 }
@@ -424,30 +517,41 @@ object Interp {
       // the same order dict value fan-out uses
       val compiled: List[Either[String, Pipe]] =
         parts.map { case Left(s) => Left(s); case Right(a) => Right(compile(a)) }
-      (doc, env) => {
-        var results: Vector[JEntry] = one(JEntry.ok(JStr("")))
-        compiled.foreach { part =>
-          results = results.flatMap { cur =>
-            if (cur.errors.nonEmpty) one(cur)
-            else {
-              val prefix = cur.doc.asInstanceOf[JStr].v
-              part match {
-                case Left(txt) => one(JEntry.ok(JStr(prefix + txt)))
-                case Right(f) => f(doc, env).map { e =>
-                  if (e.errors.nonEmpty) e
-                  else {
-                    val s = e.doc match {
-                      case JStr(x) => x
-                      case d       => JsonText.canonical(d)
-                    }
-                    JEntry.ok(JStr(prefix + s))
+      def text(d: JDoc): String = d match {
+        case JStr(x) => x
+        case _       => JsonText.canonical(d)
+      }
+      new Pipe {
+        def apply(doc: JDoc, env: Env) = {
+          var results: Vector[JEntry] = one(JEntry.ok(JStr("")))
+          compiled.foreach { part =>
+            results = results.flatMap { cur =>
+              if (cur.errors.nonEmpty) one(cur)
+              else {
+                val prefix = cur.doc.asInstanceOf[JStr].v
+                part match {
+                  case Left(txt) => one(JEntry.ok(JStr(prefix + txt)))
+                  case Right(f) => f(doc, env).map { e =>
+                    if (e.errors.nonEmpty) e
+                    else JEntry.ok(JStr(prefix + text(e.doc)))
                   }
                 }
               }
             }
           }
+          results
         }
-        results
+        override def value(doc: JDoc, env: Env): JDoc = {
+          val sb = new java.lang.StringBuilder
+          compiled.foreach {
+            case Left(txt) => sb.append(txt)
+            case Right(f) =>
+              val v = f.value(doc, env)
+              if (v == null) return null
+              sb.append(text(v))
+          }
+          JStr(sb.toString)
+        }
       }
 
     case Assign(pathAst, valueAst, update) =>
@@ -543,6 +647,38 @@ object Interp {
           }
       }
   }
+
+  /** `.key` and a bare identifier. The position the key was found at
+    * last is tried first ([[graft.json.JObj.indexOf]]'s hint): the rows
+    * of one column mostly share a shape. A hint written by another thread
+    * is still only a guess the lookup checks. */
+  private def keyAccess(key: String, opt: Boolean): Pipe = new Pipe {
+    private[this] var hint = 0
+    private def find(doc: JDoc): JDoc = doc match {
+      case o: JObj =>
+        val i = o.indexOf(key, hint)
+        if (i < 0) null else { hint = i; o.props(i)._2 }
+      case _ => null
+    }
+    def apply(doc: JDoc, env: Env) = {
+      val v = find(doc)
+      if (v != null) one(JEntry.ok(v)) else err(s"cannot index $key into ${doc.typeName}", opt)
+    }
+    override def value(doc: JDoc, env: Env) = find(doc)
+  }
+
+  /** Negation and `not`: `op` over each error-free output. */
+  private def unary(f: Pipe, op: JDoc => JDoc): Pipe = new Pipe {
+    def apply(doc: JDoc, env: Env) = f(doc, env).map(mapOk(_)(op))
+    override def value(doc: JDoc, env: Env) = {
+      val v = f.value(doc, env)
+      if (v == null) null else op(v)
+    }
+  }
+
+  /** The envelope of every combined entry of a plain evaluation, whose
+    * operands carry no envelope or this same one. */
+  private val combinedMeta: Option[JObj] = JMeta.newMerged(None, None)
 
   /** Flatten a parsed path (`.a.b[0]` arrives as a Pipe chain of
     * IndexKey/Ident/IndexNum) into static segments; None if any node is
@@ -827,22 +963,23 @@ object Interp {
       case Mul    => JOps.mul
       case Div    => JOps.div
       case Rem    => JOps.rem
-      case Eq     => (a, b) => JBool(JOps.eqDoc(a, b))
-      case Ne     => (a, b) => JBool(!JOps.eqDoc(a, b))
+      case Eq     => (a, b) => JBool.of(JOps.eqDoc(a, b))
+      case Ne     => (a, b) => JBool.of(!JOps.eqDoc(a, b))
       // collation comparisons; incomparable (NaN) → false, and `<=` is the
       // CORRECT relation, not the reference's copy/paste `>=`
-      // (reference bug at src/ops.rs:1272; SURVEY.md §2.5)
-      case Lt     => (a, b) => JBool(JOps.cmp(a, b).exists(_ < 0))
-      case Le     => (a, b) => JBool(JOps.cmp(a, b).exists(_ <= 0))
-      case Gt     => (a, b) => JBool(JOps.cmp(a, b).exists(_ > 0))
-      case Ge     => (a, b) => JBool(JOps.cmp(a, b).exists(_ >= 0))
+      // (reference bug at src/ops.rs:1272; SURVEY.md §2.5). Incomparable
+      // is Int.MinValue, so only `<` and `<=` need to rule it out.
+      case Lt     => (a, b) => { val c = JOps.cmp(a, b); JBool.of(c < 0 && c != JOps.Incomparable) }
+      case Le     => (a, b) => { val c = JOps.cmp(a, b); JBool.of(c <= 0 && c != JOps.Incomparable) }
+      case Gt     => (a, b) => JBool.of(JOps.cmp(a, b) > 0)
+      case Ge     => (a, b) => JBool.of(JOps.cmp(a, b) >= 0)
       case Shl    => JOps.shl
       case Shr    => JOps.shr
       case BitAnd => JOps.bitAnd
       case BitXor => JOps.bitXor
       case BitOr  => JOps.bitOr
-      case And    => (a, b) => JBool(JOps.truthy(a) && JOps.truthy(b))
-      case Or     => (a, b) => JBool(JOps.truthy(a) || JOps.truthy(b))
+      case And    => (a, b) => JBool.of(JOps.truthy(a) && JOps.truthy(b))
+      case Or     => (a, b) => JBool.of(JOps.truthy(a) || JOps.truthy(b))
     }
   }
 
@@ -1108,17 +1245,27 @@ object Interp {
         case Right(v)  => JEntry.ok(v)
         case Left(msg) => JEntry(JNull, Vector(msg))
       }
-      if (compiledArgs.isEmpty) (doc, _) => one(step(doc)) // the input is the one value
+      if (compiledArgs.isEmpty) new Pipe { // the input is the one value
+        def apply(doc: JDoc, env: Env) = one(step(doc))
+        override def value(doc: JDoc, env: Env) = f(doc) match {
+          case Right(v) => v
+          case Left(_)  => null
+        }
+      }
       else (doc, env) => compiledArgs.head(doc, env).map { e =>
         if (e.errors.nonEmpty) e else step(e.doc)
       }
     }
 
     /** first output of the compiled arg against `d` (builtin arg position,
-      * reference: `thunk(value)?.remove(0)`). */
+      * reference: `thunk(value)?.remove(0)`): its value when it has one. */
     def firstOut(f: Pipe, d: JDoc, env: Env): Either[String, JEntry] = {
-      val out = f(d, env)
-      if (out.isEmpty) Left(s"$name: argument produced no output") else Right(out.head)
+      val v = f.value(d, env)
+      if (v != null) Right(JEntry.ok(v))
+      else {
+        val out = f(d, env)
+        if (out.isEmpty) Left(s"$name: argument produced no output") else Right(out.head)
+      }
     }
 
     def wrongArity: Pipe =
@@ -1715,9 +1862,9 @@ object Interp {
         val takeFirst = name == "first"
         if (args.length > 1) return wrongArity
         if (args.isEmpty) {
-          (doc, env) => JOps.indexAt(doc, if (takeFirst) 0 else -1) match {
-            case Some(v) => one(JEntry.ok(v))
-            case None    => one(JEntry(JNull, Vector(s"cannot index ${doc.typeName}")))
+          (doc, env) => {
+            val v = JOps.elementAt(doc, if (takeFirst) 0 else -1)
+            if (v != null) one(JEntry.ok(v)) else one(JEntry(JNull, Vector(s"cannot index ${doc.typeName}")))
           }
         } else {
           val fa = compiledArgs.head
@@ -1744,10 +1891,8 @@ object Interp {
           case Right(e) => e.doc match {
             case JLong(n) => fg match {
               case None =>
-                JOps.indexAt(doc, n) match {
-                  case Some(v) => one(JEntry.ok(v))
-                  case None    => one(JEntry(JNull, Vector(s"cannot index ${doc.typeName}")))
-                }
+                val v = JOps.elementAt(doc, n)
+                if (v != null) one(JEntry.ok(v)) else one(JEntry(JNull, Vector(s"cannot index ${doc.typeName}")))
               case Some(g) =>
                 if (n < 0) one(JEntry(JNull, Vector("nth: index must not be negative")))
                 else {
@@ -1839,10 +1984,14 @@ object Interp {
         // the predicate — `if f then . else empty end` with fan-out
         if (args.length != 1) return wrongArity
         val fa = compiledArgs.head
-        (doc, env) => breakFlatMap(fa(doc, env)) { e =>
-          if (e.errors.nonEmpty) one(JEntry(JNull, e.errors))
-          else if (JOps.truthy(e.doc)) one(JEntry.ok(doc))
-          else Vector.empty
+        (doc, env) => {
+          val v = fa.value(doc, env)
+          if (v != null) { if (JOps.truthy(v)) one(JEntry.ok(doc)) else Vector.empty }
+          else breakFlatMap(fa(doc, env)) { e =>
+            if (e.errors.nonEmpty) one(JEntry(JNull, e.errors))
+            else if (JOps.truthy(e.doc)) one(JEntry.ok(doc))
+            else Vector.empty
+          }
         }
 
       case "test" if args.length == 2 =>
@@ -1999,10 +2148,14 @@ object Interp {
         def keyed(items: Vector[JDoc], env: Env): Either[Vector[String], Vector[(JDoc, JDoc)]] = {
           val out = Vector.newBuilder[(JDoc, JDoc)]
           items.foreach { item =>
-            val entries = fa(item, env)
-            entries.find(_.errors.nonEmpty) match {
-              case Some(e) => return Left(e.errors)
-              case None    => out += ((JArr(entries.map(_.doc)), item))
+            val v = fa.value(item, env)
+            if (v != null) out += ((JArr(Vector.empty :+ v), item))
+            else {
+              val entries = fa(item, env)
+              entries.find(_.errors.nonEmpty) match {
+                case Some(e) => return Left(e.errors)
+                case None    => out += ((JArr(entries.map(_.doc)), item))
+              }
             }
           }
           Right(out.result())

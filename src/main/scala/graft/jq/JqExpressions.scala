@@ -75,6 +75,19 @@ private[jq] object JqGuard {
   def render[A](thunk: => Vector[JEntry])(f: Vector[JEntry] => A): A =
     try f(entries(thunk))
     catch failure.andThen(f)
+
+  /** The typed value of `pipe`'s first successful output on `doc`, as
+    * [[JqEval.firstValue]] reads it: from the pipe's single-value form
+    * when that decides, else from its guarded entries. A value form never
+    * breaks, and anything it throws takes the same ladder as [[render]]. */
+  def firstValue(pipe: Interp.Pipe, doc: JDoc, kind: String): Any = {
+    val fromEntries: Vector[JEntry] => Any = JqEval.firstValue(kind)
+    try {
+      val v = pipe.value(doc, Nil)
+      if (v != null) JqEval.extract(kind, v)
+      else render(pipe(doc, Nil))(fromEntries)
+    } catch failure.andThen(fromEntries)
+  }
 }
 
 /** A jq expression over one document operand, a [[JqDoc]]. The pipeline
@@ -119,7 +132,7 @@ object JqEval {
 
   /** Typed extraction of one successful entry's doc: null when the value
     * doesn't fit the requested kind. */
-  private def extract(kind: String, doc: JDoc): Any = (kind, doc) match {
+  private[jq] def extract(kind: String, doc: JDoc): Any = (kind, doc) match {
     case ("long", JLong(v))     => v
     case ("double", JLong(v))   => v.toDouble
     case ("double", JDouble(v)) => v
@@ -174,8 +187,11 @@ case class JqExtract(ast: Ast, queryText: String, kind: String, child: Expressio
   override def nullable: Boolean = true
   override def prettyName: String = s"jq_$kind"
   @transient private lazy val compiled = Interp.compile(ast)
-  override protected def nullSafeEval(input: Any): Any =
-    renderPipe(compiled, input)(JqEval.firstValue(kind))
+  override protected def nullSafeEval(input: Any): Any = {
+    val doc = JqDoc.document(input)
+    if (doc == null) null // a failed conversion has only its error entry
+    else JqGuard.firstValue(compiled, doc, kind)
+  }
   override protected def withNewChildInternal(newChild: Expression): JqExtract =
     copy(child = newChild)
 }
@@ -261,8 +277,7 @@ case class JqMulti(fields: Seq[(String, Ast, String)], queryText: String, child:
   }
   @transient private lazy val compiled: Array[Interp.Pipe] =
     fields.map { case (_, ast, _) => Interp.compile(ast) }.toArray
-  @transient private lazy val firstValues: Array[Vector[JEntry] => Any] =
-    fields.map { case (_, _, kind) => JqEval.firstValue(kind) _ }.toArray
+  private val kinds: Array[String] = fields.map(_._3).toArray
   override def dataType: DataType = StructType(fields.map { case (name, _, kind) =>
     StructField(name, JqEval.kinds(kind), nullable = true)
   })
@@ -275,7 +290,7 @@ case class JqMulti(fields: Seq[(String, Ast, String)], queryText: String, child:
       var i = 0
       while (i < values.length) {
         // each field evaluates and renders under the guard on its own
-        values(i) = JqGuard.render(compiled(i)(doc, Nil))(firstValues(i))
+        values(i) = JqGuard.firstValue(compiled(i), doc, kinds(i))
         i += 1
       }
     }

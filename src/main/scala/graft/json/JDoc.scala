@@ -28,6 +28,13 @@ sealed trait JDoc extends Serializable {
 
 case object JNull extends JDoc { val typeOrder = 0; val typeName = "Null" }
 final case class JBool(v: Boolean) extends JDoc { val typeOrder = 1; val typeName = "Bool" }
+object JBool {
+  /** The two booleans, shared: comparisons and predicates return these
+    * instead of allocating a result per call. */
+  val True: JBool = new JBool(true)
+  val False: JBool = new JBool(false)
+  def of(b: Boolean): JBool = if (b) True else False
+}
 final case class JLong(v: Long) extends JDoc { val typeOrder = 2; val typeName = "Integer" }
 
 /** Exact integer beyond ±2^63-1 — the reference's i128 literals
@@ -89,16 +96,30 @@ final case class JArr(items: Vector[JDoc]) extends JDoc { val typeOrder = 5; val
 final case class JObj(props: Vector[(String, JDoc)]) extends JDoc {
   val typeOrder = 6; val typeName = "Object"
   def get(key: String): Option[JDoc] = {
-    // binary search over the sorted props (reference: src/prop.rs:86-110)
+    val i = search(key)
+    if (i < 0) None else Some(props(i)._2)
+  }
+
+  /** Position of `key` in [[props]], or -1. The position `hint` is
+    * checked before the binary search: a call site that reads one key
+    * from a stream of same-shaped objects passes the position it found
+    * last time and skips the search. */
+  def indexOf(key: String, hint: Int): Int =
+    if (hint < props.length && props(hint)._1 == key) hint
+    else math.max(search(key), -1)
+
+  /** Binary search over the sorted props (reference: src/prop.rs:86-110):
+    * >=0 found index, else -(insertion point)-1. */
+  private def search(key: String): Int = {
     var lo = 0; var hi = props.length - 1
     while (lo <= hi) {
       val mid = (lo + hi) >>> 1
       val c = JOps.cmpStr(props(mid)._1, key)
-      if (c == 0) return Some(props(mid)._2)
+      if (c == 0) return mid
       else if (c < 0) lo = mid + 1
       else hi = mid - 1
     }
-    None
+    -(lo + 1)
   }
 }
 
@@ -108,26 +129,52 @@ object JObj {
   /** Build from properties in encounter order with last-wins upsert on
     * duplicate keys, result sorted by key (reference: src/json.rs:501-507). */
   def fromProps(pairs: Iterable[(String, JDoc)]): JObj = {
-    val buf = scala.collection.mutable.ArrayBuffer.empty[(String, JDoc)]
-    pairs.foreach { kv =>
-      val idx = search(buf, kv._1)
-      if (idx >= 0) buf(idx) = kv
-      else buf.insert(-(idx + 1), kv)
-    }
-    JObj(buf.toVector)
+    val b = new Builder(pairs.knownSize)
+    pairs.foreach(b += _)
+    b.result()
   }
 
-  /** Binary search by key: >=0 found index, else -(insertion point)-1. */
-  private def search(buf: scala.collection.mutable.ArrayBuffer[(String, JDoc)], key: String): Int = {
-    var lo = 0; var hi = buf.length - 1
-    while (lo <= hi) {
-      val mid = (lo + hi) >>> 1
-      val c = JOps.cmpStr(buf(mid)._1, key)
-      if (c == 0) return mid
-      else if (c < 0) lo = mid + 1
-      else hi = mid - 1
+  /** [[fromProps]] one property at a time: the properties are kept sorted
+    * in place in one array (a binary-search insert, last key wins; keys
+    * arriving in order append), and the result wraps that array as the
+    * props vector without another copy when it holds at most 32. */
+  final class Builder(sizeHint: Int) {
+    private var arr = new Array[AnyRef](if (sizeHint > 0) sizeHint else 8)
+    private var n = 0
+
+    private def keyAt(i: Int): String = arr(i).asInstanceOf[(String, JDoc)]._1
+
+    def +=(kv: (String, JDoc)): Unit = {
+      val key = kv._1
+      if (n > 0 && JOps.cmpStr(keyAt(n - 1), key) >= 0) {
+        var lo = 0; var hi = n - 1
+        while (lo <= hi) {
+          val mid = (lo + hi) >>> 1
+          val c = JOps.cmpStr(keyAt(mid), key)
+          if (c == 0) { arr(mid) = kv; return }
+          else if (c < 0) lo = mid + 1
+          else hi = mid - 1
+        }
+        insert(lo, kv)
+      } else insert(n, kv)
     }
-    -(lo + 1)
+
+    private def insert(at: Int, kv: (String, JDoc)): Unit = {
+      if (n == arr.length) arr = java.util.Arrays.copyOf(arr, n * 2)
+      System.arraycopy(arr, at, arr, at + 1, n - at)
+      arr(at) = kv
+      n += 1
+    }
+
+    def result(): JObj =
+      if (n == 0) empty
+      else {
+        val exact = if (n == arr.length) arr else java.util.Arrays.copyOf(arr, n)
+        // an AnyRef-array ArraySeq of at most 32 elements becomes the
+        // Vector's own leaf array
+        JObj(Vector.from(scala.collection.immutable.ArraySeq.unsafeWrapArray(exact))
+          .asInstanceOf[Vector[(String, JDoc)]])
+      }
   }
 }
 
@@ -137,15 +184,35 @@ object JObj {
 object JOps {
 
   /** UTF-8 byte-order string comparison (Rust `String: Ord` compares UTF-8
-    * bytes; equivalent to comparing Unicode code points). */
+    * bytes; equivalent to comparing Unicode code points). UTF-16 chars
+    * compare in code-point order except when both sides of the first
+    * difference are at or above U+D800, where a surrogate (half of a
+    * supplementary code point) may sort after U+E000–U+FFFF: only that
+    * case decodes code points, from the start of the one that differs. */
   def cmpStr(a: String, b: String): Int = {
-    var i = 0; var j = 0
-    while (i < a.length && j < b.length) {
-      val ca = a.codePointAt(i); val cb = b.codePointAt(j)
-      if (ca != cb) return java.lang.Integer.compare(ca, cb)
-      i += Character.charCount(ca); j += Character.charCount(cb)
+    val n = math.min(a.length, b.length)
+    var i = 0
+    while (i < n) {
+      val ca = a.charAt(i); val cb = b.charAt(i)
+      if (ca != cb) {
+        if (ca < 0xD800 || cb < 0xD800) return ca - cb
+        return cmpCodePoints(a, b, if (i > 0 && Character.isHighSurrogate(a.charAt(i - 1))) i - 1 else i)
+      }
+      i += 1
     }
-    java.lang.Integer.compare(a.length - i, b.length - j)
+    a.length - b.length
+  }
+
+  /** Code-point comparison from `from`, where both strings split into
+    * the same code points before it. */
+  private def cmpCodePoints(a: String, b: String, from: Int): Int = {
+    var i = from
+    while (i < a.length && i < b.length) {
+      val ca = a.codePointAt(i); val cb = b.codePointAt(i)
+      if (ca != cb) return java.lang.Integer.compare(ca, cb)
+      i += Character.charCount(ca)
+    }
+    java.lang.Integer.compare(a.length - i, b.length - i)
   }
 
   /** Truthiness: null/false falsy, everything else truthy
@@ -160,56 +227,73 @@ object JOps {
     *   - variant-strict: `1 == 1.0` is FALSE (Integer vs Float variants);
     *   - object equality compares KEYS ONLY (Property eq is key-only).
     */
-  def eqDoc(a: JDoc, b: JDoc): Boolean = (a, b) match {
-    case (JNull, JNull)             => true
-    case (JBool(x), JBool(y))       => x == y
-    case (JLong(x), JLong(y))       => x == y
-    case (JBigInt(x), JBigInt(y))   => x == y // JLong↔JBigInt never equal (JInt.of invariant)
-    case (JDouble(x), JDouble(y))   => x == y // IEEE: NaN != NaN, -0.0 == 0.0
-    case (JStr(x), JStr(y))         => x == y
-    case (JArr(x), JArr(y))         => x.length == y.length && x.indices.forall(i => eqDoc(x(i), y(i)))
-    case (JObj(x), JObj(y))         => x.length == y.length && x.indices.forall(i => x(i)._1 == y(i)._1)
-    case _                          => false
+  def eqDoc(a: JDoc, b: JDoc): Boolean = a match {
+    case JNull      => b eq JNull
+    case JBool(x)   => b match { case JBool(y) => x == y; case _ => false }
+    case JLong(x)   => b match { case JLong(y) => x == y; case _ => false }
+    case JBigInt(x) => b match { case JBigInt(y) => x == y; case _ => false } // JLong↔JBigInt never equal (JInt.of invariant)
+    case JDouble(x) => b match { case JDouble(y) => x == y; case _ => false } // IEEE: NaN != NaN, -0.0 == 0.0
+    case JStr(x)    => b match { case JStr(y) => x == y; case _ => false }
+    case JArr(x)    => b match {
+      case JArr(y) => x.length == y.length && x.indices.forall(i => eqDoc(x(i), y(i)))
+      case _       => false
+    }
+    case JObj(x)    => b match {
+      case JObj(y) => x.length == y.length && x.indices.forall(i => x(i)._1 == y(i)._1)
+      case _       => false
+    }
   }
 
+  /** [[cmp]]'s result for an incomparable pair (NaN). No comparable pair
+    * gives it: every other result is a `compare` sign or a difference of
+    * two chars or two string lengths. */
+  final val Incomparable = Int.MinValue
+
   /** Cross-type collation compare (reference: src/db.rs:21-30 derive order;
-    * within-type per derived `PartialOrd` on src/json.rs:469):
-    * None = incomparable (NaN). Objects compare by KEYS ONLY
-    * (reference: src/prop.rs:79-83), arrays lexicographically. */
-  def cmp(a: JDoc, b: JDoc): Option[Int] = {
-    if (a.typeOrder != b.typeOrder) return Some(java.lang.Integer.compare(a.typeOrder, b.typeOrder))
-    (a, b) match {
-      case (JNull, JNull)           => Some(0)
-      case (JBool(x), JBool(y))     => Some(java.lang.Boolean.compare(x, y))
-      case (JLong(x), JLong(y))     => Some(java.lang.Long.compare(x, y))
+    * within-type per derived `PartialOrd` on src/json.rs:469): the sign
+    * orders `a` against `b`, or [[Incomparable]] (NaN). Objects compare by
+    * KEYS ONLY (reference: src/prop.rs:79-83), arrays lexicographically. */
+  def cmp(a: JDoc, b: JDoc): Int = {
+    if (a.typeOrder != b.typeOrder) return java.lang.Integer.compare(a.typeOrder, b.typeOrder)
+    a match {
+      case JNull    => 0
+      case JBool(x) => java.lang.Boolean.compare(x, b.asInstanceOf[JBool].v)
       // Integer class spans both widths: order numerically
-      case (JLong(x), JBigInt(y))   => Some(BigInt(x).compare(y))
-      case (JBigInt(x), JLong(y))   => Some(x.compare(BigInt(y)))
-      case (JBigInt(x), JBigInt(y)) => Some(x.compare(y))
-      case (JDouble(x), JDouble(y)) =>
-        if (x.isNaN || y.isNaN) None
-        else Some(if (x < y) -1 else if (x > y) 1 else 0) // IEEE: -0.0 == 0.0
-      case (JStr(x), JStr(y))       => Some(cmpStr(x, y))
-      case (JArr(x), JArr(y))       =>
+      case JLong(x) => b match {
+        case JLong(y)   => java.lang.Long.compare(x, y)
+        case JBigInt(y) => BigInt(x).compare(y)
+        case _          => Incomparable // unreachable: same typeOrder
+      }
+      case JBigInt(x) => b match {
+        case JLong(y)   => x.compare(BigInt(y))
+        case JBigInt(y) => x.compare(y)
+        case _          => Incomparable // unreachable: same typeOrder
+      }
+      case JDouble(x) =>
+        val y = b.asInstanceOf[JDouble].v
+        if (x.isNaN || y.isNaN) Incomparable
+        else if (x < y) -1 else if (x > y) 1 else 0 // IEEE: -0.0 == 0.0
+      case JStr(x)  => cmpStr(x, b.asInstanceOf[JStr].v)
+      case JArr(x)  =>
+        val y = b.asInstanceOf[JArr].items
         var i = 0
         val n = math.min(x.length, y.length)
         while (i < n) {
-          cmp(x(i), y(i)) match {
-            case Some(0) => i += 1
-            case other   => return other
-          }
+          val c = cmp(x(i), y(i))
+          if (c != 0) return c
+          i += 1
         }
-        Some(java.lang.Integer.compare(x.length, y.length))
-      case (JObj(x), JObj(y))       =>
+        java.lang.Integer.compare(x.length, y.length)
+      case JObj(x)  =>
+        val y = b.asInstanceOf[JObj].props
         var i = 0
         val n = math.min(x.length, y.length)
         while (i < n) {
           val c = cmpStr(x(i)._1, y(i)._1)
-          if (c != 0) return Some(c)
+          if (c != 0) return c
           i += 1
         }
-        Some(java.lang.Integer.compare(x.length, y.length))
-      case _                        => None // unreachable
+        java.lang.Integer.compare(x.length, y.length)
     }
   }
 
@@ -235,7 +319,7 @@ object JOps {
           i += 1
         }
         java.lang.Integer.compare(x.length, y.length)
-      case _ => cmp(a, b).getOrElse(0) // scalar/object cases are already total
+      case _ => cmp(a, b) // scalar/object cases are already total (no NaN here)
     }
   }
 
@@ -421,7 +505,7 @@ object JOps {
   }
 
   /** `!a`: truthiness negation, always a bool (reference: src/json.rs:884-891). */
-  def not(a: JDoc): JDoc = JBool(!truthy(a))
+  def not(a: JDoc): JDoc = JBool.of(!truthy(a))
 
   /** Shifts and bitwise ops: integer-only, else null
     * (reference: src/json.rs:1019-1072). Shift counts outside [0, 63] →
@@ -514,13 +598,14 @@ object JOps {
   }
 
   /** Array index with negative-wraps-from-end normalization
-    * (reference: src/util.rs:25-29, src/json.rs:720-729). */
-  def indexAt(d: JDoc, off: Long): Option[JDoc] = d match {
+    * (reference: src/util.rs:25-29, src/json.rs:720-729); null when there
+    * is no such element. */
+  def elementAt(d: JDoc, off: Long): JDoc = d match {
     case JArr(a) =>
       val n = a.length.toLong
       val o = if (off < 0) off + n else off
-      if (o >= 0 && o < n) Some(a(o.toInt)) else None
-    case _ => None
+      if (o >= 0 && o < n) a(o.toInt) else null
+    case _ => null
   }
 
   /** Object field get; None on missing key or non-object

@@ -64,12 +64,14 @@ object JMeta {
     * an empty array to each canonical key, which is exactly [[normalize]]:
     * that case returns `self` itself when it already holds all three keys
     * (and the shared `Some(init)` for None), so a combine over envelope-less
-    * operands allocates nothing. */
+    * operands allocates nothing; `init` into `init` is `self` with no
+    * lookup. */
   def merge(self: Option[JObj], other: Option[JObj]): Option[JObj] = other match {
     case None => self
     case Some(o) if o eq init =>
       self match {
         case None => emptyMerged
+        case Some(s) if s eq init => self
         case Some(s) =>
           val n = normalize(s)
           if (n eq s) self else Some(n)

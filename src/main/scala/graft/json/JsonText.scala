@@ -110,8 +110,8 @@ object JsonText {
       if (atEnd) fail("unexpected end of input")
       text.charAt(pos) match {
         case 'n' => expect("null"); JNull
-        case 't' => expect("true"); JBool(true)
-        case 'f' => expect("false"); JBool(false)
+        case 't' => expect("true"); JBool.True
+        case 'f' => expect("false"); JBool.False
         case '"' => JStr(parseString())
         case '[' => parseArray()
         case '{' => parseObject()
@@ -176,11 +176,17 @@ object JsonText {
     }
 
     /** String with RFC 8259 escapes incl. UTF-16 surrogate pairs
-      * (reference: src/json.rs:251-365). */
+      * (reference: src/json.rs:251-365). A string with no escape is one
+      * `substring` of the text. */
     def parseString(): String = {
       if (text.charAt(pos) != '"') fail("not a string")
       pos += 1
-      val sb = new java.lang.StringBuilder
+      val start = pos
+      while (pos < text.length && text.charAt(pos) != '"' && text.charAt(pos) != '\\') pos += 1
+      if (atEnd) fail("incomplete string")
+      if (text.charAt(pos) == '"') { pos += 1; return text.substring(start, pos - 1) }
+      val sb = new java.lang.StringBuilder(pos - start + 16)
+      sb.append(text, start, pos)
       while (true) {
         if (atEnd) fail("incomplete string")
         val c = text.charAt(pos)
@@ -263,9 +269,9 @@ object JsonText {
       depth += 1
       if (depth > MaxDepth) fail(s"nesting deeper than $MaxDepth")
       pos += 1 // '{'
-      val props = Vector.newBuilder[(String, JDoc)]
       skipWs()
-      if (!atEnd && text.charAt(pos) == '}') { pos += 1; depth -= 1; return JObj.fromProps(props.result()) }
+      if (!atEnd && text.charAt(pos) == '}') { pos += 1; depth -= 1; return JObj.empty }
+      val props = new JObj.Builder(8)
       var done = false
       while (!done) {
         skipWs()
@@ -285,7 +291,7 @@ object JsonText {
         }
       }
       depth -= 1
-      JObj.fromProps(props.result())
+      props.result()
     }
   }
 

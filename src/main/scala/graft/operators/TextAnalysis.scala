@@ -332,12 +332,13 @@ object TextAnalysis {
     * job per merge — vocabulary-bounded data, but a production tokenizer
     * wants ~32k merges ⇒ ~32k job-scheduling round-trips, hours of pure
     * overhead at ANY data scale. So after the one corpus-scale (word,
-    * freq) pass, the DISTINCT-WORD COUNT is measured (one agg); when it
-    * fits `localVocabLimit` (default 2M words ≈ tens of MB — true for
-    * any natural-language corpus at any byte scale, since the vocabulary
-    * grows ~Heaps-law sublinearly) the vocabulary is collected once and
-    * ALL merges run in driver memory over a pair-count heap with lazy
-    * invalidation — zero Spark jobs per merge. The collected frame is the
+    * freq) pass, one job collects at most `localVocabLimit` + 1 distinct
+    * words; when the vocabulary fits `localVocabLimit` (default 2M words
+    * ≈ tens of MB — true for any natural-language corpus at any byte
+    * scale, since the vocabulary grows ~Heaps-law sublinearly) that
+    * collect is the whole vocabulary and ALL merges run in driver memory
+    * over a pair-count heap with lazy invalidation — zero Spark jobs per
+    * merge. The collected frame is the
     * same bounded-metadata class as the IVF/PQ centroid collects. Corpora
     * whose vocabulary exceeds the budget keep the per-merge distributed
     * loop (correct at any size, just schedule-bound). Both paths produce
@@ -353,8 +354,12 @@ object TextAnalysis {
     import spark.implicits._
     val words = corpus.select(explode(wordTokens(text)).as("w"))
       .groupBy(col("w")).agg(count(lit(1)).as("cnt"))
-    if (words.count() <= localVocabLimit) {
-      val wordCnt = words.collect().map(r => (r.getString(0), r.getLong(1)))
+    // one pass decides and collects: more than the budget comes back only
+    // when the vocabulary does not fit
+    val budget = math.min(localVocabLimit, Int.MaxValue - 1L).toInt
+    val local = words.limit(budget + 1).collect()
+    if (local.length <= budget) {
+      val wordCnt = local.map(r => (r.getString(0), r.getLong(1)))
       return bpeMergeLoopLocal(wordCnt, merges).toDF("merge_rank", "lhs", "rhs", "pair_count")
     }
     Checkpoints.scope(checkpointDir) { s =>

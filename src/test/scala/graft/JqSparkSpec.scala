@@ -237,9 +237,9 @@ class JqSparkSpec extends SparkTestBase {
   test("property: collation order is total (modulo NaN) and antisymmetric") {
     forAllN(gen2) { case (a, b) =>
       (JOps.cmp(a, b), JOps.cmp(b, a)) match {
-        case (Some(x), Some(y)) => Integer.signum(x) == -Integer.signum(y)
-        case (None, None)       => true // NaN somewhere
-        case _                  => false
+        case (JOps.Incomparable, JOps.Incomparable) => true // NaN somewhere
+        case (JOps.Incomparable, _) | (_, JOps.Incomparable) => false
+        case (x, y) => Integer.signum(x) == -Integer.signum(y)
       }
     }
   }
@@ -247,8 +247,8 @@ class JqSparkSpec extends SparkTestBase {
   test("property: eqDoc agrees with cmp == 0 on comparable values") {
     forAllN(gen2) { case (a, b) =>
       JOps.cmp(a, b) match {
-        case Some(0) => JOps.eqDoc(a, b) || a.isInstanceOf[JObj] // obj cmp is key-only
-        case _       => true
+        case 0 => JOps.eqDoc(a, b) || a.isInstanceOf[JObj] // obj cmp is key-only
+        case _ => true
       }
     }
   }

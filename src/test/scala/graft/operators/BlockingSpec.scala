@@ -257,4 +257,26 @@ class BlockingSpec extends SparkTestBase {
     assert(pairsOf(corpus, 8).subsetOf(pairsOf(corpus, 0)),
       "the valve may only drop pairs, never invent them")
   }
+
+  test("simhash valve: no-op at the gate corpus, with occupancy headroom") {
+    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+    assert(simhashPairs(docs, 256) == simhashPairs(docs, 0),
+      "cap 256 must not change the pair set on the gate corpus")
+    // pin the headroom the dedup_simhash_capped oracle comment claims:
+    // the largest block-pair bucket sits far under the shipped cap
+    val largest = docs
+      .select(col("doc_id"), Dedup.simhash64(
+        Dedup.wordShingles(col("text"), 3)).as("simhash"))
+      .select(explode(array((0 until 14).flatMap(i => (i + 1 until 14).map { j =>
+        val offs = Dedup.SimhashBlockWidths.scanLeft(0)(_ + _)
+        val p = (0 until 14).flatMap(a => (a + 1 until 14).map((a, _))).indexOf((i, j))
+        lit(p.toLong * 4096L) +
+          (shiftright(col("simhash"), offs(i)) bitwiseAND
+            lit((1L << Dedup.SimhashBlockWidths(i)) - 1L)) * 64L +
+          (shiftright(col("simhash"), offs(j)) bitwiseAND
+            lit((1L << Dedup.SimhashBlockWidths(j)) - 1L))
+      }): _*)).as("bb"))
+      .groupBy("bb").count().agg(max("count")).head().getLong(0)
+    assert(largest <= 64, s"gate-corpus occupancy crept toward the cap: $largest")
+  }
 }

@@ -1,13 +1,12 @@
 package graft.operators
 
 import graft.SparkTestBase
-import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** Specs for the round-12 changes (round-11 VERDICT/ADVICE follow-ups):
-  * the residual codebook, the broadcast-centroid kernels against the
-  * literal formulation they replace, and the expression-based BPE encode
-  * (the residual and production-C top-k specs live in SimilaritySpec). */
+  * the residual codebook and the expression-based BPE encode (the
+  * residual and production-C top-k specs and the broadcast-centroid
+  * kernels live in SimilaritySpec). */
 class Round12OpsSpec extends SparkTestBase {
 
   private def emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
@@ -50,46 +49,6 @@ class Round12OpsSpec extends SparkTestBase {
     }
     assert(code(normalize = true) == Seq(0), "normalized [3,0] should match [1,0]")
     assert(code(normalize = false) == Seq(1), "raw [3,0] should match [3,0]")
-  }
-
-  test("cellSims: broadcast path is bit-identical to the literal path") {
-    val corpus = emb
-    val cents: Array[Array[Double]] = corpus
-      .orderBy(col("vec_id")).limit(16)
-      .select(transform(col("embedding"), x => x.cast("double")).as("v"))
-      .collect().map(_.getSeq[Double](0).toArray)
-    val v = transform(col("embedding"), x => x.cast("double"))
-    // the literal formulation the kernel replaces: C cosine trees over
-    // plan-literal centroids
-    val literal: Column => Column = x => array(cents.toIndexedSeq.map(c =>
-      Similarity.cosine(x, array(c.toIndexedSeq.map(lit(_)): _*))): _*)
-    def simsWith(f: Column => Column): Array[(Long, Seq[Double], Long)] =
-      corpus.select(col("vec_id"), f(v).as("sims"),
-          array_position(f(v), array_max(f(v))).as("cell"))
-        .collect()
-        .map(r => (r.getLong(0), r.getSeq[Double](1), r.getLong(2)))
-        .sortBy(_._1)
-    val litPath = simsWith(literal)
-    val bcPath = simsWith(Similarity.cellSimsFn(spark, cents))
-    // BIT equality of every similarity (same accumulation order by
-    // construction) — so argmax assignments cannot diverge either
-    assert(litPath.length == bcPath.length && litPath.length == 500)
-    litPath.zip(bcPath).foreach { case ((idA, sA, cA), (idB, sB, cB)) =>
-      assert(idA == idB && cA == cB, s"assignment diverged at $idA: $cA vs $cB")
-      assert(sA == sB, s"sims diverged at $idA")
-    }
-  }
-
-  test("cellVec: broadcast path equals element_at over the literal table") {
-    val cents = Array.tabulate(8)(i => Array.tabulate(4)(j => i * 10.0 + j))
-    val centsLit = array(cents.toIndexedSeq.map(c => array(c.toIndexedSeq.map(lit(_)): _*)): _*)
-    def vecsWith(f: Column => Column): Seq[(Long, Seq[Double])] = {
-      val idx = spark.range(0, 10).select((col("id") % 8 + 1).as("cell"))
-      idx.select(col("cell"), f(col("cell")).as("v")).collect()
-        .map(r => (r.getLong(0), r.getSeq[Double](1))).sortBy(_._1).toSeq
-    }
-    assert(vecsWith(i => element_at(centsLit, i.cast("int"))) ==
-      vecsWith(Similarity.cellVecFn(spark, cents)))
   }
 
   test("DecodeMediaExpr: differently-configured decoder instances never compare equal") {
