@@ -6,6 +6,15 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * environment they read, the session they run in, the host-load probe,
   * and the one way a query is timed.
   *
+  * The timing rule, [[minOfN]], the same for Bench and Scale:
+  *   - one untimed warm-up, then the scheduled runs;
+  *   - then one more run while the runs' max/min exceeds [[VarBar]], up
+  *     to [[MaxRuns]] (a single run has a band of 1, so it never
+  *     escalates);
+  *   - the figure is the min of the runs;
+  *   - a measurement still above the bar after [[MaxRuns]] is not
+  *     [[Timing.resolved]], and the mains report it as unresolved.
+  *
   * Env, read once:
   *   SPARK_GRAFT_SF_DIR  the sf dir the mains read; Scale scales it
   *                       (default /root/testdata/sf0.1)
@@ -53,16 +62,6 @@ object Harness {
     if (v.isNaN) -1.0 else v
   }
 
-  /** Sleeps in 5 s steps while the load average is above `max`, for at
-    * most `waitSec`, saying `what` on stderr at each step. */
-  def waitForLoad(max: Double, waitSec: Int, what: String): Unit = {
-    val deadline = System.nanoTime() + waitSec * 1_000_000_000L
-    while (loadAvg() > max && System.nanoTime() < deadline) {
-      System.err.println(s"$what (loadavg ${num(loadAvg(), 2)} > ${num(max, 1)})")
-      Thread.sleep(5000)
-    }
-  }
-
   /** Drops every cached plan and persisted RDD the session holds and
     * returns the bytes they held in memory and on disk: what the queries
     * since the last reset left behind. */
@@ -74,11 +73,22 @@ object Harness {
     held
   }
 
+  /** The widest max/min a measurement's runs may span before [[minOfN]]
+    * takes another run. */
+  val VarBar: Double = 1.5
+  /** The most timed runs [[minOfN]] takes for one measurement. */
+  val MaxRuns: Int = 4
+
   /** One query's measurement: the min of its timed runs in seconds (-1
     * when a run threw), the runs themselves, the failure, and the bytes
     * the storage reset after it dropped. */
   final case class Timing(sec: Double, runs: Vector[Double], err: Option[String],
-                          leakedBytes: Long)
+                          leakedBytes: Long) {
+    /** max/min of the runs; 1 for a single run or none. */
+    def band: Double = if (runs.isEmpty) 1.0 else runs.max / runs.min
+    /** The runs agree within [[VarBar]]. */
+    def resolved: Boolean = !(band > VarBar)
+  }
 
   /** One timed run of `query`; see [[minOfN]]. */
   def timeOnce(spark: SparkSession, label: String)(query: => DataFrame): Timing =
@@ -87,15 +97,15 @@ object Harness {
   /** Times `query` into the noop sink, which forces every output column (a
     * bare count() would let Catalyst prune the projected expressions and
     * time nothing but the scan): one untimed warm-up when `warmup`, then
-    * `runs` timed runs, then one more while their max/min exceeds `varBar`,
-    * up to `maxRuns`. A throw ends the measurement with -1 and its cause;
-    * `label` names the query on stderr. Each run's frame is the caller's
-    * under the `Checkpoints.scope` contract, so it is released once the
-    * clock stops; the session's storage is then reset in `finally`, once
-    * after the last run, so a query that leaves blocks behind never taxes
-    * the queries after it, and only such strays count as leaked. */
-  def minOfN(spark: SparkSession, label: String, runs: Int, warmup: Boolean,
-             varBar: Double = Double.PositiveInfinity, maxRuns: Int = 0)(
+    * `runs` timed runs, then one more while their max/min exceeds
+    * [[VarBar]], up to [[MaxRuns]]. A throw ends the measurement with -1
+    * and its cause; `label` names the query on stderr. Each run's frame
+    * is the caller's under the `Checkpoints.scope` contract, so it is
+    * released once the clock stops; the session's storage is then reset
+    * in `finally`, once after the last run, so a query that leaves blocks
+    * behind never taxes the queries after it, and only such strays count
+    * as leaked. */
+  def minOfN(spark: SparkSession, label: String, runs: Int, warmup: Boolean)(
       query: => DataFrame): Timing = {
     def sink(): DataFrame = {
       val df = query
@@ -115,9 +125,9 @@ object Harness {
         require(runs >= 1, s"$runs timed runs")
         if (warmup) operators.Checkpoints.release(sink())
         val ts = scala.collection.mutable.ArrayBuffer.fill(runs)(timed())
-        while (ts.size < maxRuns && ts.max / ts.min > varBar) {
-          System.err.println(s"$label band ${num(ts.max / ts.min, 2)} > ${num(varBar, 2)}" +
-            s" — escalating to min-of-${ts.size + 1}")
+        while (ts.size < MaxRuns && ts.max / ts.min > VarBar) {
+          System.err.println(s"$label band ${num(ts.max / ts.min, 2)} > ${num(VarBar, 2)}" +
+            s", escalating to min-of-${ts.size + 1}")
           ts += timed()
         }
         (ts.toVector, None)

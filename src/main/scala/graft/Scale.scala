@@ -48,11 +48,13 @@ import org.apache.spark.sql.functions._
   * [[scaleEmbeddings]] — which replicates intra-replica cosine structure
   * BIT-exactly while decorrelating replicas.
   *
-  * Timing mirrors Bench: noop sink (forces every output column), each
-  * (query, factor) runs twice and keeps the min, factors ascend so JIT /
-  * codegen warm-up is paid at the cheapest factor. Output: one JSON line
-  * with per-(query, factor) seconds plus input row counts; loadavg at
-  * start/end for the same host-noise provenance the bench carries.
+  * Timing is [[Harness.minOfN]]'s rule, the one Bench uses: noop sink
+  * (forces every output column), each (query, factor) runs twice, more
+  * while its band exceeds [[Harness.VarBar]], and keeps the min; factors
+  * ascend so JIT / codegen warm-up is paid at the cheapest factor.
+  * Output: one JSON line with per-(query, factor) seconds plus input row
+  * counts; loadavg at start/end for the same host-noise provenance the
+  * bench carries.
   *
   * Env: SPARK_GRAFT_SF_DIR is the base corpus, SPARK_GRAFT_CPUS the
   * core count and SPARK_GRAFT_ONLY the queries (see [[Harness]]; unset =
@@ -282,34 +284,23 @@ object Scale {
     }.reduce(_ unionByName _)
   }
 
-  /** The round-17 variance-aware anchor rule (r16 verdict ask #4):
-    * slopes read off a noisy anchor have false-tailed
-    * stream_neardup_hashed twice — its ×256 point spanned 16.9–40.8 s
-    * boot-to-boot on identical code. So after the scheduled runs, a
-    * (query, factor) point whose same-session runs span more than
-    * [[VarBar]] (max/min) escalates to min-of-3, min-of-4, … up to
-    * [[MaxRuns]]; the final band and run count land in the artifact per
-    * point, so every reported slope carries its anchor confidence. */
-  val VarBar: Double = 1.5
-  val MaxRuns: Int = 4
-
-  /** Artifact JSON for one (query, factor) point: the min-of-N seconds,
-    * the anchor-confidence band/run-count pair when ≥2 runs were taken
-    * (r16 verdict ask #4), and — round 17 — the failure cause when the
-    * point died (`x{f}_err`), so a -1.0 can never be mute: the ×1024
-    * stream_neardup_hashed disk-full death dropped its own stderr line
-    * (PrintStream swallows IO errors on a full disk) and the artifact
-    * alone had to carry the evidence.
+  /** Artifact JSON for one (query, factor) point: the min-of-N seconds;
+    * when ≥2 runs were taken, the band and run count (slopes read off a
+    * noisy anchor have false-tailed stream_neardup_hashed twice, so every
+    * slope carries its anchor confidence) and an `x{f}_unresolved` marker
+    * when the band stayed above [[Harness.VarBar]]; and the failure cause
+    * when the point died (`x{f}_err`), so a -1.0 can never be mute: the
+    * ×1024 stream_neardup_hashed disk-full death dropped its own stderr
+    * line (PrintStream swallows IO errors on a full disk) and the
+    * artifact alone had to carry the evidence.
     */
-  def pointJson(f: Int, sec: Double,
-                band: Option[(Double, Int)], err: Option[String]): String = {
-    val base = s""""x$f":${Harness.num(sec)}"""
-    val withBand = band match {
-      case Some((b, n)) if n >= 2 =>
-        s"""$base,"x${f}_band":${Harness.num(b)},"x${f}_runs":$n"""
-      case _ => base
-    }
-    err match {
+  def pointJson(f: Int, t: Harness.Timing): String = {
+    val base = s""""x$f":${Harness.num(t.sec)}"""
+    val withBand =
+      if (t.runs.size < 2) base
+      else s"""$base,"x${f}_band":${Harness.num(t.band)},"x${f}_runs":${t.runs.size}""" +
+        (if (t.resolved) "" else s""","x${f}_unresolved":true""")
+    t.err match {
       case Some(m) =>
         val esc = m.replace("\\", "\\\\").replace("\"", "\\\"")
           .replace("\n", " ").replace("\r", " ").replace("\t", " ")
@@ -414,12 +405,11 @@ object Scale {
       spark.conf.set("spark.sql.shuffle.partitions", shufP.toString)
       queries.foreach { q =>
         // one untimed warm-up at the SMALLEST factor per query pays JIT +
-        // codegen once where data is cheapest, mirroring Bench's warm-up
-        // rule; variance escalation only in timing mode (nRuns >= 2 — a
-        // single-pass robustness sweep asks "completes?", not "how fast")
+        // codegen once where data is cheapest; a single-pass robustness
+        // sweep (nRuns 1) takes no warm-up and, with a band of 1, never
+        // escalates — it asks "completes?", not "how fast"
         val t = Harness.minOfN(spark, s"[scale] ${q.name} ×$f", nRuns,
-          warmup = fi == 0 && nRuns > 1, VarBar, if (nRuns > 1) MaxRuns else nRuns)(
-          q.runAt(spark, dir, f))
+          warmup = fi == 0 && nRuns > 1)(q.runAt(spark, dir, f))
         System.err.println(s"[scale] ${q.name} ×$f: ${Harness.num(t.sec, 2)} s")
         timings((q.name, f)) = t
       }
@@ -429,9 +419,8 @@ object Scale {
     val qJson = queries.map { q =>
       val per = factors.map { f =>
         val t = timings((q.name, f))
-        val band = if (t.runs.isEmpty) None else Some((t.runs.max / t.runs.min, t.runs.size))
         val leaked = if (t.leakedBytes > 0) s""","x${f}_leaked":${t.leakedBytes}""" else ""
-        pointJson(f, t.sec, band, t.err) + leaked
+        pointJson(f, t) + leaked
       }.mkString(",")
       val role = q.role
         .map(r => s""","role":"${r.kind}","twin":"${r.twin}"""").getOrElse("")
@@ -466,7 +455,7 @@ object Scale {
     }
     val tailsJson = tails.map(q => s""""${q.name}"""").mkString(",")
     println(s"""{"metric":"scale_linearity","mode":"$mode","gc_mode":"periodic","runs_per_point":$nRuns,""" +
-      s""""variance_bar":${Harness.num(VarBar)},"max_runs_per_point":$MaxRuns,""" +
+      s""""variance_bar":${Harness.num(Harness.VarBar)},"max_runs_per_point":${Harness.MaxRuns},""" +
       s""""base":"$base","factors":[${factors.mkString(",")}],""" +
       s""""queries":{$qJson},"rows":{$rowsJson},""" +
       s""""tail_bar_per_octave":$tailBar,"tails_pending_retake":[$tailsJson],""" +

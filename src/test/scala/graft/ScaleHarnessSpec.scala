@@ -275,18 +275,20 @@ class ScaleHarnessSpec extends SparkTestBase {
   }
 
   test("pointJson: band fields only for >=2 runs, err field carries an escaped cause") {
-    // a clean min-of-1 point is just the number
-    assert(Scale.pointJson(512, 86.555, None, None) == """"x512":86.555""")
+    def t(runs: Double*) = Harness.Timing(runs.min, runs.toVector, None, 0L)
     // a single run never emits a band (there is no spread to report)
-    assert(Scale.pointJson(512, 86.555, Some((1.0, 1)), None) == """"x512":86.555""")
+    assert(Scale.pointJson(512, t(86.555)) == """"x512":86.555""")
     // min-of-N carries its anchor confidence
-    assert(Scale.pointJson(256, 17.946, Some((1.06, 2)), None) ==
+    assert(Scale.pointJson(256, t(17.946, 17.946 * 1.06)) ==
       """"x256":17.946,"x256_band":1.060,"x256_runs":2""")
+    // a point still above VarBar at MaxRuns says so
+    assert(Scale.pointJson(64, t(2.0, 1.0, 1.9, 1.8)) ==
+      """"x64":1.000,"x64_band":2.000,"x64_runs":4,"x64_unresolved":true""")
     // a failed point records its cause INSIDE the artifact (round 17:
     // the disk-full death whose stderr line was itself dropped), with
     // JSON-hostile characters escaped/flattened
-    val j = Scale.pointJson(1024, -1.0,
-      None, Some("IOException: No space\nleft on \"device\" \\ path"))
+    val j = Scale.pointJson(1024, Harness.Timing(-1.0, Vector.empty,
+      Some("IOException: No space\nleft on \"device\" \\ path"), 0L))
     assert(j == """"x1024":-1.000,"x1024_err":"IOException: No space left on \"device\" \\ path"""")
     // the emitted fragment must parse as JSON when wrapped
     val parsed = graft.json.JsonText.parse(s"{$j}")
@@ -299,7 +301,7 @@ class ScaleHarnessSpec extends SparkTestBase {
     val saved = java.util.Locale.getDefault
     try {
       java.util.Locale.setDefault(java.util.Locale.GERMANY)
-      val j = Scale.pointJson(256, 17.946, Some((1.06, 2)), None)
+      val j = Scale.pointJson(256, Harness.Timing(17.946, Vector(17.946, 17.946 * 1.06), None, 0L))
       assert(j == """"x256":17.946,"x256_band":1.060,"x256_runs":2""")
       assert(graft.json.JsonText.parse(s"{$j}").isInstanceOf[graft.json.JDoc])
       assert(Harness.num(86.555) == "86.555")

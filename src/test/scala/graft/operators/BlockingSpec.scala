@@ -10,8 +10,11 @@ import org.apache.spark.sql.catalyst.plans.logical.Join
   * operator that uses it: MinHash LSH (unbounded key: semi-join),
   * SimHash block pairs and fixed-width SRP (bounded keys: a driver
   * probe, then a NOT-IN only when engaged), derived-width SRP
-  * (semi-join) and dHash bands (probe). Plan assertions collect typed
-  * nodes from the optimized LOGICAL plan, not executed-plan substrings. */
+  * (semi-join) and dHash bands (probe); and the edit-blocking tuner's
+  * engagement floor (re-keying must not engage when the verify work it
+  * saves is cheaper than the O(n) re-key machinery). Plan assertions
+  * collect typed nodes from the optimized LOGICAL plan, not
+  * executed-plan substrings. */
 class BlockingSpec extends SparkTestBase {
 
   import spark.implicits._
@@ -278,5 +281,74 @@ class BlockingSpec extends SparkTestBase {
       }): _*)).as("bb"))
       .groupBy("bb").count().agg(max("count")).head().getLong(0)
     assert(largest <= 64, s"gate-corpus occupancy crept toward the cap: $largest")
+  }
+
+  // ------------------------------- edit-blocking tuner engagement floor
+
+  private def pairSet(df: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
+    df.select("id_a", "id_b").collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSet
+
+  private def mkDocs(rows: Seq[(Long, String)]) = rows.toDF("doc_id", "text")
+
+  // helper: a block of `n` docs sharing the level-0 key (first token +
+  // length band), split at level 1 by distinct second tokens
+  private def block(tag: String, n: Int, startId: Long): Seq[(Long, String)] =
+    (1 to n).map(i => (startId + i, s"$tag w$i " + ("pad " * 20).trim))
+
+  test("engagement floor: blocks over cap but under 4x stay on the fixed key") {
+    // cap 4, blocks of 8 (= 2x cap, under the 4x floor of 16): the r14
+    // always-engage default would re-key; the floor must skip, and the
+    // result must be IDENTICAL to exact fixed blocking both in content
+    // and in plan shape (no extra exchange beyond the fixed path's)
+    val d = mkDocs(block("alpha", 8, 0L) ++ block("beta", 8, 100L) ++
+      Seq((900L, "alpha same " + ("pad " * 20).trim),
+          (901L, "alpha same " + ("pad " * 20).trim + " z")))
+    def run(cap: Int) = Dedup.editDistancePairs(
+      d, "doc_id", col("text"), minSim = 0.8, maxBlockSize = cap, maxWiden = 2)
+    val tuned = run(4)
+    val exact = run(0)
+    assert(pairSet(tuned) == pairSet(exact),
+      "under the floor the tuned default must be the exact fixed-key result")
+    def exchanges(df: org.apache.spark.sql.DataFrame): Int =
+      df.queryExecution.executedPlan.toString
+        .linesIterator.count(_.contains("Exchange hashpartitioning"))
+    assert(exchanges(run(4)) == exchanges(run(0)),
+      "a floor-skipped probe must keep the fixed path's exact plan shape")
+  }
+
+  test("engagement floor: a lone mega-block with trivial excess pairs stays fixed") {
+    // largest = 24 > 4x cap(4) = 16, but projected excess pairs
+    // (24*23/2 = 276) <= 4n with n = 206 padding rows: the verify work is
+    // cheaper than re-keying, so the floor skips on the second scalar
+    val pad = (1 to 200).map(i => (2000L + i, s"uniq$i only " + ("pad " * 20).trim))
+    val d = mkDocs(block("gamma", 24, 0L) ++ pad)
+    val tuned = Dedup.editDistancePairs(
+      d, "doc_id", col("text"), minSim = 0.8, maxBlockSize = 4, maxWiden = 2)
+    val exact = Dedup.editDistancePairs(
+      d, "doc_id", col("text"), minSim = 0.8, maxBlockSize = 0)
+    assert(pairSet(tuned) == pairSet(exact),
+      "excess-pairs floor: lone small mega-block must not trigger re-keying")
+  }
+
+  test("engagement floor: a true quadratic mega-block still engages") {
+    // largest = 60 > 16 and excess pairs 60*59/2 = 1770 > 4n (n = 64):
+    // both floors clear, re-keying engages, and level-1 widening splits
+    // the block (distinct second tokens) — the candidate count visibly
+    // collapses versus the fixed key while intended pairs survive
+    val d = mkDocs(block("delta", 60, 0L) ++
+      Seq((900L, "delta same " + ("pad " * 20).trim),
+          (901L, "delta same " + ("pad " * 20).trim + " z")))
+    val tuned = Dedup.editDistancePairs(
+      d, "doc_id", col("text"), minSim = 0.8, maxBlockSize = 4, maxWiden = 2)
+    assert(pairSet(tuned).contains((900L, 901L)),
+      "pairs agreeing through the widened prefix survive engagement")
+    // count CANDIDATES via the fixed path: the widened key must generate
+    // strictly fewer (the 62-block explodes quadratically on the fixed key)
+    val fixedCands = 62L * 61L / 2  // one level-0 block of 62 docs
+    val tunedBlocks = Dedup.editDistancePairs(
+      d, "doc_id", col("text"), minSim = 0.0001, maxBlockSize = 4, maxWiden = 2)
+    assert(tunedBlocks.count() < fixedCands,
+      "engaged widening must cut the candidate space of the mega-block")
   }
 }

@@ -6,7 +6,8 @@ import graft.SparkTestBase
 
 /** The vector-search family of [[Similarity]]: IVF, PQ (one-cell IVF-PQ)
   * and IVF-PQ top-k — self-hits, recall against brute force, plan shape,
-  * the residual and hierarchical builds, the degenerate corpora, and the
+  * the residual and hierarchical builds (with the hierarchical
+  * assignment's build-side multi-probe), the degenerate corpora, and the
   * broadcast-centroid kernels against the literal formulation they
   * replace. */
 class SimilaritySpec extends SparkTestBase {
@@ -245,5 +246,39 @@ class SimilaritySpec extends SparkTestBase {
     }
     assert(vecsWith(i => element_at(centsLit, i.cast("int"))) ==
       vecsWith(Similarity.cellVecFn(spark, cents)))
+  }
+
+  // ------------------------------- hier assignment build-side multi-probe
+
+  test("multi-probe: probes >= supers reproduces the flat argmax bit-for-bit") {
+    val emb = spark.read.parquet(s"$sfDir/embeddings.parquet").limit(200)
+    val cents = emb.orderBy("vec_id").limit(12)
+      .select(col("embedding")).collect()
+      .map(_.getSeq[Float](0).map(_.toDouble).toSeq).toSeq
+    def m(df: org.apache.spark.sql.DataFrame) = df.select("vec_id", "cluster")
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
+    val flat = m(Similarity.assignClusters(emb, cents))
+    // probing every super searches every member list — the grouping
+    // becomes irrelevant and the result must equal flat exactly
+    val full = m(Similarity.assignClustersHier(emb, cents, supers = 3, probes = 3))
+    assert(full == flat, "probes == supers must equal the flat argmax")
+  }
+
+  test("multi-probe recall is monotone and recovers single-probe parking losses") {
+    val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
+    val cents = emb.orderBy("vec_id").limit(16)
+      .select(col("embedding")).collect()
+      .map(_.getSeq[Float](0).map(_.toDouble).toSeq).toSeq
+    val flat = Similarity.assignClusters(emb, cents)
+      .select("vec_id", "cluster").collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toMap
+    def agree(p: Int): Int = Similarity.assignClustersHier(emb, cents, 4, p)
+      .select("vec_id", "cluster").collect()
+      .count(r => flat(r.getLong(0)) == r.getLong(1))
+    val (a1, a2, a4) = (agree(1), agree(2), agree(4))
+    assert(a1 <= a2 && a2 <= a4,
+      s"flat-agreement must be monotone in probes: $a1, $a2, $a4")
+    assert(a4 == flat.size, "probing all supers recovers flat exactly")
+    assert(a2 > a1, "on this corpus P=2 must recover real P=1 parking losses")
   }
 }
