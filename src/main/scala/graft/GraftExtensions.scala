@@ -30,11 +30,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
 object GraftExtensions {
 
-  private def foldableString(e: Expression, fn: String): String = {
-    require(e.foldable, s"$fn: the query argument must be a literal string")
-    e.eval(null).asInstanceOf[org.apache.spark.unsafe.types.UTF8String].toString
-  }
-
   private def foldableInt(e: Expression, fn: String): Int = {
     require(e.foldable, s"$fn: the width argument must be a literal integer")
     e.eval(null).asInstanceOf[Number].intValue
@@ -46,36 +41,7 @@ object GraftExtensions {
     def arity(n: Int, name: String)(b: Seq[Expression] => Expression): Seq[Expression] => Expression =
       exprs => { require(exprs.length == n, s"$name takes $n arguments"); b(exprs) }
 
-    // jq_eval/jq_docs/jq_<kind>(query, json), jq_eval_meta(query, json, meta)
-    val jqFns: Seq[(String, Seq[Expression] => Expression)] = Jq.functions.map { f =>
-      f.name -> arity(f.operands + 1, f.name)(exprs => f(foldableString(exprs.head, f.name), exprs.tail))
-    }
-
-    val binFns: Seq[(String, Seq[Expression] => Expression)] =
-      Seq("add", "sub", "mul", "div", "rem", "shl", "shr", "band", "bxor", "bbor").map { op =>
-        s"json_$op" -> { (exprs: Seq[Expression]) =>
-          require(exprs.length == 2, s"json_$op takes 2 arguments")
-          JsonBinary(op, exprs.head, exprs(1)): Expression
-        }
-      }
-
-    val unaryFns: Seq[(String, Seq[Expression] => Expression)] =
-      Seq("neg", "not", "truthy", "length", "keys", "chars", "canonical").map { kind =>
-        s"json_$kind" -> { (exprs: Seq[Expression]) =>
-          require(exprs.length == 1, s"json_$kind takes 1 argument")
-          JsonUnary(kind, exprs.head): Expression
-        }
-      }
-
-    jqFns ++ binFns ++ unaryFns ++ Seq[(String, Seq[Expression] => Expression)](
-      "json_cmp" -> arity(2, "json_cmp")(exprs => JsonCmp(exprs.head, exprs(1))),
-      "json_eq" -> arity(2, "json_eq")(exprs => JsonEq(exprs.head, exprs(1))),
-      "json_recurse" -> arity(1, "json_recurse")(exprs => JsonRecurse(exprs.head)),
-      "json_patch" -> arity(2, "json_patch")(exprs => JsonPatchExpr(exprs.head, exprs(1))),
-      "json_to_cbor" -> arity(1, "json_to_cbor")(exprs => CborEncodeExpr(exprs.head)),
-      "cbor_to_json" -> arity(1, "cbor_to_json")(exprs => CborDecodeExpr(exprs.head)),
-      "json_to_msgpack" -> arity(1, "json_to_msgpack")(exprs => MsgPackEncodeExpr(exprs.head)),
-      "msgpack_to_json" -> arity(1, "msgpack_to_json")(exprs => MsgPackDecodeExpr(exprs.head)),
+    Jq.functions.map(f => f.name -> (f(_: Seq[Expression]))) ++ Seq[(String, Seq[Expression] => Expression)](
       // text/vector kernels (round 6): the curation surface from SQL
       "word_shingles" -> arity(2, "word_shingles")(exprs =>
         WordShingles(exprs.head, foldableInt(exprs(1), "word_shingles"))),

@@ -90,10 +90,6 @@ object Harness {
     def resolved: Boolean = !(band > VarBar)
   }
 
-  /** One timed run of `query`; see [[minOfN]]. */
-  def timeOnce(spark: SparkSession, label: String)(query: => DataFrame): Timing =
-    minOfN(spark, label, runs = 1, warmup = false)(query)
-
   /** Times `query` into the noop sink, which forces every output column (a
     * bare count() would let Catalyst prune the projected expressions and
     * time nothing but the scan): one untimed warm-up when `warmup`, then

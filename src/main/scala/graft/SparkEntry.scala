@@ -130,66 +130,21 @@ object SparkEntry {
     // instant, matching DuckDB's epoch_us() reading of the same file.
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    val df = normalizeTs(spark.read.parquet(s"$dir/$name.parquet"))
-    // The bench tables are single-row-group parquet files, so the scan is
-    // ONE task regardless of core count — every downstream kernel
-    // (jq/dedup/text) would run single-threaded. When the scan yields
-    // fewer splits than the session's parallelism, add one explicit
+    val raw = spark.read.parquet(s"$dir/$name.parquet")
+    // Scan parallelism comes from the file layout: a bench table is one
+    // parquet file in one row group, so its scan runs in one task
+    // whatever the core count, and every kernel before the first exchange
+    // (jq/dedup/text) would run single-threaded. So a table with fewer
+    // data files than the session's parallelism gets one explicit
     // exchange to spread the work; filters and column pruning still reach
     // the scan (Catalyst pushes both through Repartition, verified via
-    // .explain: PushedFilters stays populated). On a real multi-TB layout
-    // the scan splits exceed parallelism and this is a no-op — the
-    // repartition exists exactly when file granularity, not data volume,
-    // is the parallelism limit. The split count comes from file METADATA
-    // (Spark's own packing formula over the listed sizes): asking the
-    // DataFrame itself (`df.rdd.getNumPartitions`) would convert the scan
-    // to a physical plan a second time per call — measured ~55 ms of
-    // driver work per table, for a number the listing already determines.
+    // .explain: PushedFilters stays populated). A multi-file layout as
+    // wide as the parallelism (a real multi-TB table, Scale's scaled
+    // tables) scans in parallel and is left alone. The file count is the
+    // listing the read already made.
     val par = spark.sparkContext.defaultParallelism
-    if (estimatedScanPartitions(spark, s"$dir/$name.parquet", par) < par)
-      df.repartition(par)
-    else df
-  }
-
-  /** Spark's file-split packing formula over the directory listing:
-    * maxSplit = min(maxPartitionBytes, max(openCost, total/parallelism)),
-    * partitions ≈ ceil(Σ(size + openCost) / maxSplit). Metadata-only. */
-  private def estimatedScanPartitions(spark: SparkSession, path: String,
-                                      parallelism: Int): Long = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // recurse: a partitioned layout nests data files under key=value
-    // dirs — a one-level listing would see no files and under-estimate
-    val sizes = {
-      if (fs.getFileStatus(p).isDirectory) {
-        val it = fs.listFiles(p, /* recursive = */ true)
-        val buf = scala.collection.mutable.ArrayBuffer.empty[Long]
-        while (it.hasNext) {
-          val st = it.next()
-          val name = st.getPath.getName
-          if (st.isFile && !name.startsWith("_") && !name.startsWith("."))
-            buf += st.getLen
-        }
-        buf.toSeq
-      } else Seq(fs.getFileStatus(p).getLen)
-    }.filter(_ > 0)
-    if (sizes.isEmpty) return 1L
-    // the same parser Spark applies to these confs — no hand-rolled
-    // suffix table to silently diverge from it
-    def bytesConf(key: String, default: Long): Long =
-      spark.conf.getOption(key)
-        .map(v => org.apache.spark.network.util.JavaUtils.byteStringAsBytes(v))
-        .getOrElse(default)
-    val maxPartition = bytesConf("spark.sql.files.maxPartitionBytes", 128L * 1024 * 1024)
-    val openCost = bytesConf("spark.sql.files.openCostInBytes", 4L * 1024 * 1024)
-    // Spark divides by files.minPartitionNum when set (else the leaf-node
-    // default parallelism) — mirror that so the estimate tracks the real
-    // split count
-    val minPartitionNum = spark.conf.getOption("spark.sql.files.minPartitionNum")
-      .map(_.toLong).getOrElse(parallelism.toLong)
-    val total = sizes.map(_ + openCost).sum
-    val maxSplit = math.min(maxPartition, math.max(openCost, total / math.max(1L, minPartitionNum)))
-    (total + maxSplit - 1) / maxSplit
+    val df = normalizeTs(raw)
+    if (raw.inputFiles.length < par) df.repartition(par) else df
   }
 
   /** If `df` has a timestamp-typed `ts` column, rewrite it in place to

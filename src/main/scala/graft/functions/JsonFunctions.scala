@@ -1,36 +1,34 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
-
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
+import graft.jq.JqDoc
 import graft.json._
 
-/** Standalone Catalyst expressions exposing the document value semantics to
-  * SQL / Column users (the §2.4-2.6 operator kernels of SURVEY.md), over
-  * JSON-text operands. These are the same kernels the fused jq pipeline
-  * uses; they exist so the value algebra is usable directly —
-  * e.g. `SELECT json_add(a, b)` or `json_cmp(x, y) < 0` for collation-order
-  * sorting of heterogeneous documents. */
-private[functions] object JsonFunctions {
-  def parseOrNull(s: UTF8String): JDoc =
-    try JsonText.parse(s.toString)
-    catch { case _: JsonText.JsonParseException => null }
-}
+// Standalone Catalyst expressions exposing the document value semantics to
+// SQL / Column users (the §2.4-2.6 operator kernels of SURVEY.md). These
+// are the same kernels the fused jq pipeline uses; they exist so the value
+// algebra is usable directly — e.g. `SELECT json_add(a, b)` or
+// `json_cmp(x, y) < 0` for collation-order sorting of heterogeneous
+// documents. Every document operand is a graft.jq.JqDoc, built by the
+// function's one constructor (graft.Jq.functions): JSON text parses, any
+// other supported type converts structurally, and a document that fails to
+// convert reads as null here, so the result is SQL NULL.
 
 /** Binary value op: json_add/sub/mul/div/rem/shl/shr/band/bxor/bbor →
   * canonical JSON text (op-specific null results serialize as "null");
-  * SQL NULL only for unparseable input. */
+  * SQL NULL only for a document that fails to convert. */
 case class JsonBinary(op: String, left: Expression, right: Expression)
     extends BinaryExpression with NativeBinaryCodegen {
   override def dataType: DataType = StringType
   override def nullable: Boolean = true
   override def prettyName: String = s"json_$op"
   override protected def nullSafeEval(l: Any, r: Any): Any = {
-    val a = JsonFunctions.parseOrNull(l.asInstanceOf[UTF8String])
-    val b = JsonFunctions.parseOrNull(r.asInstanceOf[UTF8String])
+    val a = JqDoc.document(l)
+    val b = JqDoc.document(r)
     if (a == null || b == null) return null
     val out = op match {
       case "add"  => JOps.add(a, b)
@@ -53,16 +51,17 @@ case class JsonBinary(op: String, left: Expression, right: Expression)
 
 /** `json_cmp(a, b)` → -1/0/1 in the cross-type collation order
   * (Null < Bool < Integer < Float < String < Array < Object); NULL when
-  * incomparable (NaN) or unparseable. Usable as a SQL sort key via e.g.
-  * `sort_array` over pre-compared tuples or `ORDER BY json_cmp(doc, ref)`. */
+  * incomparable (NaN) or a document fails to convert. Usable as a SQL
+  * sort key via e.g. `sort_array` over pre-compared tuples or
+  * `ORDER BY json_cmp(doc, ref)`. */
 case class JsonCmp(left: Expression, right: Expression)
     extends BinaryExpression with NativeBinaryCodegen {
   override def dataType: DataType = IntegerType
   override def nullable: Boolean = true
   override def prettyName: String = "json_cmp"
   override protected def nullSafeEval(l: Any, r: Any): Any = {
-    val a = JsonFunctions.parseOrNull(l.asInstanceOf[UTF8String])
-    val b = JsonFunctions.parseOrNull(r.asInstanceOf[UTF8String])
+    val a = JqDoc.document(l)
+    val b = JqDoc.document(r)
     if (a == null || b == null) return null
     val c = JOps.cmp(a, b)
     if (c == JOps.Incomparable) null else Integer.valueOf(Integer.signum(c))
@@ -79,8 +78,8 @@ case class JsonEq(left: Expression, right: Expression)
   override def nullable: Boolean = true
   override def prettyName: String = "json_eq"
   override protected def nullSafeEval(l: Any, r: Any): Any = {
-    val a = JsonFunctions.parseOrNull(l.asInstanceOf[UTF8String])
-    val b = JsonFunctions.parseOrNull(r.asInstanceOf[UTF8String])
+    val a = JqDoc.document(l)
+    val b = JqDoc.document(r)
     if (a == null || b == null) null else java.lang.Boolean.valueOf(JOps.eqDoc(a, b))
   }
   override protected def withNewChildrenInternal(l: Expression, r: Expression): JsonEq =
@@ -101,7 +100,7 @@ case class JsonUnary(kind: String, child: Expression)
   override def nullable: Boolean = true
   override def prettyName: String = s"json_$kind"
   override protected def nullSafeEval(input: Any): Any = {
-    val d = JsonFunctions.parseOrNull(input.asInstanceOf[UTF8String])
+    val d = JqDoc.document(input)
     if (d == null) return null
     kind match {
       case "length" => JOps.lengthOf(d).map(java.lang.Long.valueOf).orNull
@@ -126,7 +125,7 @@ case class JsonRecurse(child: Expression)
   override def nullable: Boolean = true
   override def prettyName: String = "json_recurse"
   override protected def nullSafeEval(input: Any): Any = {
-    val d = JsonFunctions.parseOrNull(input.asInstanceOf[UTF8String])
+    val d = JqDoc.document(input)
     if (d == null) return null
     new GenericArrayData(
       JOps.recurse(d).map(v => UTF8String.fromString(JsonText.canonical(v))).toArray[Any])
@@ -137,15 +136,15 @@ case class JsonRecurse(child: Expression)
 
 /** `json_patch(doc, patch)` → RFC 6902 patch application, canonical JSON
   * text; SQL NULL when the patch fails (failed `test`, bad path) or input
-  * is unparseable — errors-as-data, never an exception. */
+  * fails to convert — errors-as-data, never an exception. */
 case class JsonPatchExpr(left: Expression, right: Expression)
     extends BinaryExpression with NativeBinaryCodegen {
   override def dataType: DataType = StringType
   override def nullable: Boolean = true
   override def prettyName: String = "json_patch"
   override protected def nullSafeEval(l: Any, r: Any): Any = {
-    val doc = JsonFunctions.parseOrNull(l.asInstanceOf[UTF8String])
-    val patch = JsonFunctions.parseOrNull(r.asInstanceOf[UTF8String])
+    val doc = JqDoc.document(l)
+    val patch = JqDoc.document(r)
     if (doc == null || patch == null) return null
     JsonPatch.apply(doc, patch) match {
       case Right(out) => UTF8String.fromString(JsonText.canonical(out))
@@ -156,16 +155,16 @@ case class JsonPatchExpr(left: Expression, right: Expression)
     copy(left = l, right = r)
 }
 
-/** `json_to_cbor(jsonText)` → RFC 8949 CBOR bytes of the document
+/** `json_to_cbor(doc)` → RFC 8949 CBOR bytes of the document
   * (the reference README's declared second Document codec, realized —
-  * graft.json.CborCodec). SQL NULL for unparseable JSON. */
+  * graft.json.CborCodec). SQL NULL for a document that fails to convert. */
 case class CborEncodeExpr(child: Expression)
     extends UnaryExpression with NativeUnaryCodegen {
   override def dataType: DataType = BinaryType
   override def nullable: Boolean = true
   override def prettyName: String = "json_to_cbor"
   override protected def nullSafeEval(input: Any): Any = {
-    val d = JsonFunctions.parseOrNull(input.asInstanceOf[UTF8String])
+    val d = JqDoc.document(input)
     if (d == null) null else CborCodec.encode(d)
   }
   override protected def withNewChildInternal(newChild: Expression): CborEncodeExpr =
@@ -189,15 +188,15 @@ case class CborDecodeExpr(child: Expression)
     copy(child = newChild)
 }
 
-/** `json_to_msgpack(jsonText)` → MessagePack bytes (third Document codec,
-  * graft.json.MsgPackCodec). SQL NULL for unparseable JSON. */
+/** `json_to_msgpack(doc)` → MessagePack bytes (third Document codec,
+  * graft.json.MsgPackCodec). SQL NULL for a document that fails to convert. */
 case class MsgPackEncodeExpr(child: Expression)
     extends UnaryExpression with NativeUnaryCodegen {
   override def dataType: DataType = BinaryType
   override def nullable: Boolean = true
   override def prettyName: String = "json_to_msgpack"
   override protected def nullSafeEval(input: Any): Any = {
-    val d = JsonFunctions.parseOrNull(input.asInstanceOf[UTF8String])
+    val d = JqDoc.document(input)
     if (d == null) null else MsgPackCodec.encode(d)
   }
   override protected def withNewChildInternal(newChild: Expression): MsgPackEncodeExpr =

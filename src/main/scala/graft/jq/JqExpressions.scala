@@ -1,8 +1,7 @@
 package graft.jq
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Coalesce, Expression, GenericInternalRow, Literal}
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -196,38 +195,33 @@ case class JqExtract(ast: Ast, queryText: String, kind: String, child: Expressio
     copy(child = newChild)
 }
 
-/** `jq_eval_meta(query, json, meta_json)`: the lineage envelope
+/** `jq_eval_meta(query, json, meta)`: the lineage envelope
   * (reference: src/meta.rs, src/entry.rs:5-28) exercised END-TO-END — the
-  * input entry is seeded with a meta object parsed from `meta_json` (the
-  * way a reference source WOULD populate it: provenance domains/sources
-  * per record), the pipeline runs with full entry semantics
-  * ([[Interp.compileE]]: navigation clones the envelope, combining
-  * operators new_merge it), and each successful output carries its final
-  * envelope back as canonical text. Returns
+  * input entry is seeded with the meta object of `meta`, a second
+  * document operand (the way a reference source WOULD populate it:
+  * provenance domains/sources per record), the pipeline runs with full
+  * entry semantics ([[Interp.compileE]]: navigation clones the envelope,
+  * combining operators new_merge it), and each successful output carries
+  * its final envelope back as canonical text. Returns
   * ARRAY<STRUCT<doc STRING, meta STRING>>; a malformed or non-object
-  * `meta_json` means "no envelope" (errors-as-data discipline — lineage
-  * must never kill the batch). Build it with [[JqEvalMeta.seeded]], which
-  * reads a NULL meta as no envelope. */
+  * `meta` means "no envelope" (errors-as-data discipline — lineage must
+  * never kill the batch). Built by `jq_eval_meta`'s constructor in
+  * [[graft.Jq]], which reads a NULL meta as no envelope. */
 case class JqEvalMeta(ast: Ast, queryText: String,
                       left: Expression, right: Expression)
     extends graft.functions.NativeBinaryCodegen {
   @transient private lazy val compiled = Interp.compileE(ast)
   override def dataType: DataType = JqEvalMeta.outputType
   override def prettyName: String = "jq_eval_meta"
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (right.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName meta envelope must be STRING json, got ${right.dataType.catalogString}")
   override protected def nullSafeEval(doc: Any, meta: Any): Any = {
-    val metaObj: Option[JObj] =
-      try JsonText.parse(meta.asInstanceOf[UTF8String].toString) match {
-        // normalize on seed (reference meta.rs Meta::some invariant):
-        // every envelope carries all of domains/sources/keys, so a
-        // seeded envelope missing `keys` cannot propagate verbatim
-        // through cloning navigation (round-10 advice)
-        case o: JObj => Some(graft.json.JMeta.normalize(o))
-        case _       => None
-      } catch { case _: JsonText.JsonParseException => None }
+    val metaObj: Option[JObj] = JqDoc.document(meta) match {
+      // normalize on seed (reference meta.rs Meta::some invariant): every
+      // envelope carries all of domains/sources/keys, so a seeded
+      // envelope missing `keys` cannot propagate verbatim through cloning
+      // navigation (round-10 advice)
+      case o: JObj => Some(graft.json.JMeta.normalize(o))
+      case _       => None
+    }
     val d = JqDoc.document(doc)
     JqGuard.render(
         if (d == null) JqGuard.invalid(doc) else compiled(JEntry(d, Vector.empty, metaObj), Nil)) { entries =>
@@ -249,16 +243,6 @@ object JqEvalMeta {
       StructField("doc", StringType, nullable = false),
       StructField("meta", StringType, nullable = false))),
     containsNull = false)
-
-  /** `jq_eval_meta` over `doc`, seeded from `meta`. NULL gates on the
-    * DOCUMENT only: a NULL meta column is the natural "this record has no
-    * provenance" representation and must evaluate the pipeline with no
-    * envelope — swallowing the row's outputs because its lineage is
-    * absent would violate the lineage-never-kills-the-batch contract
-    * (round-10 review finding). The meta operand is therefore coalesced to
-    * the JSON text `null`, which already means "no envelope". */
-  def seeded(ast: Ast, queryText: String, doc: Expression, meta: Expression): JqEvalMeta =
-    JqEvalMeta(ast, queryText, doc, Coalesce(Seq(meta, Literal("null"))))
 }
 
 /** `jq_multi`: evaluate SEVERAL jq pipelines against one document with a

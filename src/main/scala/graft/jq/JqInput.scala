@@ -221,7 +221,7 @@ case class JqDoc(child: Expression) extends NativeUnaryCodegen {
   override def checkInputDataTypes(): TypeCheckResult =
     if (JqInput.supports(child.dataType)) TypeCheckResult.TypeCheckSuccess
     else TypeCheckResult.TypeCheckFailure(
-      s"jq cannot run over input type ${child.dataType.catalogString}")
+      s"no JSON document converts from type ${child.dataType.catalogString}")
 
   @transient private lazy val conv: Any => AnyRef = child.dataType match {
     case StringType => v => JsonText.parseOnce(v.toString)

@@ -79,15 +79,6 @@ object Checkpoints {
   // ClusteredDistribution) and equal-count join sides (e.g. mmrSelect's
   // candidate pair self-join).
 
-  /** Evidence tap (round 17, optimization-round deliverable): iterative
-    * operators end in an eager checkpoint, so the caller-visible plan of
-    * the RESULT frame is one `Scan ExistingRDD` leaf — every Exchange /
-    * join the judge needs to see lives in the subtrees materialized
-    * here. A tool (PlanDump) may install a callback that receives each
-    * to-be-checkpointed frame's formatted plan; production code never
-    * sets it and pays one null check. */
-  private[graft] var planTap: String => Unit = null
-
   /** Truncate lineage eagerly. With `dir` set this is a RELIABLE
     * checkpoint (blocks re-readable from storage after executor loss —
     * `localCheckpoint` data dies with its executor, which on a real
@@ -96,9 +87,6 @@ object Checkpoints {
     * lifetimes and local mode. Reliable-checkpoint files are owned by
     * the caller's `dir` and are not deleted here. */
   def checkpoint(df: DataFrame, dir: Option[String] = None): DataFrame = {
-    if (planTap != null)
-      planTap(df.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode))
     val ck = dir match {
       case Some(d) =>
         df.sparkSession.sparkContext.setCheckpointDir(d)

@@ -424,7 +424,7 @@ object Similarity {
     * constant instead: H = ⌈log₂(n / target)⌉, i.e. every doubling of
     * the corpus adds one signature bit — occupancy-constant by
     * construction, so the default caller's plan has no unbounded bucket
-    * self-join at ANY corpus size (Round17OpsSpec pins this). The
+    * self-join at ANY corpus size (SimilaritySpec pins this). The
     * count() is one cheap partial-agg'd job producing a driver-side
     * scalar at plan-build — the same bounded-metadata class as the IVF
     * centroid sample. Recall moves with H as the contract above states;

@@ -84,17 +84,20 @@ object JsonDocs {
 
   /** Distributed JSONL sink — the write path symmetric to [[readJsonl]]:
     * one canonical JSON value per line, one file per partition (a 100 TB
-    * corpus writes with no coordination). Canonicalization (sorted keys,
-    * shortest floats) makes the write→read round trip byte-identical;
-    * non-canonical input text is normalized, malformed text is an error.
-    * Line order within a partition follows row order — `orderBy`/
+    * corpus writes with no coordination). `docCol` converts as every
+    * document operand does ([[graft.jq.JqDoc]]): JSON text parses, a
+    * STRUCT, ARRAY, MAP or VARIANT column converts structurally.
+    * Canonicalization (sorted keys, shortest floats) makes the write→read
+    * round trip byte-identical; non-canonical input text is normalized,
+    * and malformed text or a NULL document fails the write. Line order
+    * within a partition follows row order — `orderBy`/
     * `sortWithinPartitions` upstream if a stable order matters. */
   def writeJsonl(docs: DataFrame, docCol: String, path: String): Unit = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs.select(col(docCol).cast("string"))
-      .as[String]
-      .map(line => JsonText.canonical(JsonText.parse(line)))
+    val parse = JqDoc(ColumnBridge.expression(docs.col(docCol)))
+    val text = ColumnBridge.column(ParsedText(parse))
+    val error = coalesce(ColumnBridge.column(ParsedError(parse)), lit("NULL document"))
+    docs.select(when(text.isNotNull, text)
+        .otherwise(raise_error(concat(lit(s"writeJsonl: $docCol is not a JSON document: "), error))))
       .write.mode("overwrite").text(path)
   }
 

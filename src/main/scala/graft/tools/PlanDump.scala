@@ -1,5 +1,11 @@
 package graft.tools
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.execution.{FormattedMode, QueryExecution}
+import org.apache.spark.sql.graft.ColumnBridge
+import org.apache.spark.sql.util.QueryExecutionListener
+
 /** Dump `.explain("formatted")` for declared queries to files.
   *
   * Optimization-round evidence tool (guide §1.1/§7.2): the judge cannot
@@ -29,29 +35,37 @@ object PlanDump {
     selected.foreach { query =>
       val name = query.name
       // iterative operators end in an eager checkpoint, so the final
-      // frame explains as one ExistingRDD leaf — tap every checkpointed
-      // subtree's plan so the file carries the REAL stage shapes
-      val ckptPlans = scala.collection.mutable.ArrayBuffer.empty[String]
-      graft.operators.Checkpoints.planTap = p => ckptPlans += p
+      // frame explains as one ExistingRDD leaf: keep the plan of every
+      // checkpoint action the query runs, so the file carries the REAL
+      // stage shapes
+      val ckptPlans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+      val listener = new QueryExecutionListener {
+        override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+          if (funcName == "localCheckpoint" || funcName == "checkpoint")
+            ckptPlans.add(qe.explainString(FormattedMode))
+        override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+      }
+      spark.listenerManager.register(listener)
       try {
         val df = query.run(spark, sfDir)
-        val txt = df.queryExecution.explainString(
-          org.apache.spark.sql.execution.FormattedMode)
+        val txt = df.queryExecution.explainString(FormattedMode)
+        ColumnBridge.drainListeners(spark)
+        val plans = ckptPlans.asScala.toSeq
         val w = new java.io.PrintWriter(new java.io.File(dir, s"$name$suffix.txt"), "UTF-8")
         try {
           w.println(txt)
-          ckptPlans.zipWithIndex.foreach { case (p, i) =>
-            w.println(s"\n== Checkpointed subtree ${i + 1} of ${ckptPlans.size} " +
+          plans.zipWithIndex.foreach { case (p, i) =>
+            w.println(s"\n== Checkpointed subtree ${i + 1} of ${plans.size} " +
               "(materialized eagerly during plan construction) ==")
             w.println(p)
           }
         } finally w.close()
-        println(s"[plandump] $name ok (${txt.length} chars, ${ckptPlans.size} ckpt subtrees)")
+        println(s"[plandump] $name ok (${txt.length} chars, ${plans.size} ckpt subtrees)")
       } catch {
         case e: Throwable =>
           System.err.println(s"[plandump] $name FAILED: ${e.getMessage}")
       } finally {
-        graft.operators.Checkpoints.planTap = null
+        spark.listenerManager.unregister(listener)
         graft.Harness.resetStorage(spark)
       }
     }

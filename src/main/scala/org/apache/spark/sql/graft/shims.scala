@@ -113,4 +113,10 @@ object ColumnBridge {
       .find(_.id == rddId)
       .map(i => i.memSize + i.diskSize)
       .filter(_ > 0)
+
+  /** Blocks until every event posted so far has reached its listeners,
+    * `QueryExecutionListener`s included (they hear of an action only
+    * through the asynchronous listener bus). */
+  def drainListeners(spark: org.apache.spark.sql.SparkSession): Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty()
 }

@@ -8,7 +8,7 @@ class HarnessSpec extends SparkTestBase {
 
   test("timeOnce: a query that throws gives -1 and its message, and its persisted frame is released") {
     var held = -1
-    val t = Harness.timeOnce(spark, "[spec] boom") {
+    val t = Harness.minOfN(spark, "[spec] boom", runs = 1, warmup = false) {
       val df = spark.range(2000).toDF("id").persist()
       df.count()
       held = df.rdd.id

@@ -198,6 +198,32 @@ class JqSparkSpec extends SparkTestBase {
     assert(r.getDouble(3) == 0.1)
   }
 
+  test("json_* over STRUCT and MAP columns equal json_* over their to_json text") {
+    Jq.register(spark)
+    val df = spark.range(0, 40, 1, 2).select(col("id"),
+      struct(col("id").as("n"), concat(lit("s"), col("id").cast("string")).as("t")).as("st"),
+      map(lit("b"), col("id"), lit("a"), col("id") * 3).as("m"))
+    def calls(c: String): Seq[String] = Seq(
+      "id", s"json_length($c)", s"json_keys($c)", s"json_canonical($c)", s"json_truthy($c)",
+      s"json_cmp($c, '{\"n\":3}')", s"json_eq($c, $c)", s"json_add($c, '{\"z\":1}')",
+      s"json_recurse($c)", s"""json_patch($c, '[{"op":"add","path":"/z","value":1}]')""",
+      s"cbor_to_json(json_to_cbor($c))", s"msgpack_to_json(json_to_msgpack($c))")
+    for (c <- Seq("st", "m")) {
+      val native = df.selectExpr(calls(c): _*).collect().toSeq
+      val text = df.select(col("id"), to_json(col(c)).as(c)).selectExpr(calls(c): _*).collect().toSeq
+      assert(native == text, c)
+      assert(native.forall(r => !r.isNullAt(1) && !r.isNullAt(3)), c)
+    }
+  }
+
+  test("a document operand of an unsupported type fails at analysis") {
+    Jq.register(spark)
+    val bin = spark.range(1).select(lit("x").cast("binary").as("b"))
+    val e = intercept[org.apache.spark.sql.AnalysisException](bin.selectExpr("json_length(b)"))
+    assert(e.getMessage.contains("binary"), e.getMessage)
+    intercept[org.apache.spark.sql.AnalysisException](bin.select(Jq.jsonCmp(col("b"), col("b"))))
+  }
+
   // ---------------------------------------------------------- properties
 
   private val genScalar: Gen[JDoc] = Gen.oneOf(

@@ -54,18 +54,21 @@ class KernelCodegenSpec extends SparkTestBase {
     spark.conf.set("spark.sql.codegen.fallback", "false")
     try {
       val ev = spark.read.parquet(s"$sfDir/events.parquet").limit(50)
-      val p = expr2(col("props"))
+      // built through the one constructor each function has, the shape
+      // SQL and the Column API ship: every document operand a JqDoc
+      val fn = Jq.functions.map(f => f.name -> f).toMap
+      val p = col("props")
       val binOps = Seq("add", "sub", "mul", "div", "rem", "shl", "shr", "band", "bxor", "bbor")
-      val binCols = binOps.map(op => col2(JsonBinary(op, p, p)).as(s"b_$op"))
+      val binCols = binOps.map(op => fn(s"json_$op")(p, p).as(s"b_$op"))
       val unKinds = Seq("neg", "not", "truthy", "length", "keys", "chars", "canonical")
-      val unCols = unKinds.map(k => col2(JsonUnary(k, p)).as(s"u_$k"))
+      val unCols = unKinds.map(k => fn(s"json_$k")(p).as(s"u_$k"))
       val r = ev.select(binCols ++ unCols ++ Seq(
-        col2(JsonCmp(p, p)).as("cmp"),
-        col2(JsonEq(p, p)).as("eq"),
-        col2(JsonRecurse(p)).as("rec"),
-        col2(JsonPatchExpr(p, expr2(lit("""[{"op":"add","path":"/z","value":1}]""")))).as("patch"),
-        col2(CborDecodeExpr(expr2(col2(CborEncodeExpr(p))))).as("cbor_rt"),
-        col2(MsgPackDecodeExpr(expr2(col2(MsgPackEncodeExpr(p))))).as("mp_rt")): _*)
+        Jq.jsonCmp(p, p).as("cmp"),
+        fn("json_eq")(p, p).as("eq"),
+        fn("json_recurse")(p).as("rec"),
+        Jq.jsonPatch(p, lit("""[{"op":"add","path":"/z","value":1}]""")).as("patch"),
+        Jq.fromCbor(Jq.toCbor(p)).as("cbor_rt"),
+        Jq.fromMsgPack(Jq.toMsgPack(p)).as("mp_rt")): _*)
       assert(r.where(col("cbor_rt").isNotNull && col("mp_rt").isNotNull).count() > 0)
       // jq_eval_meta over a meta column that is NULL on odd ids: a NULL
       // meta still runs the pipeline, with no envelope

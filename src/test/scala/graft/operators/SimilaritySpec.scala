@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.SparkTestBase
 
@@ -9,8 +9,13 @@ import graft.SparkTestBase
   * the residual and hierarchical builds (with the hierarchical
   * assignment's build-side multi-probe), the degenerate corpora, and the
   * broadcast-centroid kernels against the literal formulation they
-  * replace. */
+  * replace; and the SRP-LSH near-dup pairs' default, the occupancy-derived
+  * width H = ⌈log₂(n/16)⌉, which holds expected bucket occupancy constant
+  * where the former fixed 8 planes grew the bucket self-join
+  * quadratically. */
 class SimilaritySpec extends SparkTestBase {
+
+  import spark.implicits._
 
   private def emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
 
@@ -280,5 +285,81 @@ class SimilaritySpec extends SparkTestBase {
       s"flat-agreement must be monotone in probes: $a1, $a2, $a4")
     assert(a4 == flat.size, "probing all supers recovers flat exactly")
     assert(a2 > a1, "on this corpus P=2 must recover real P=1 parking losses")
+  }
+
+  // --- nearDupPairsLSH's default: the occupancy-derived width ---
+
+  private def doubled(base: DataFrame): DataFrame =
+    base.unionByName(base.withColumn("vec_id", col("vec_id") + lit(1000000)))
+
+  test("lsh pair default: the plain caller gets the derived-width plan, not the fixed-8 strawman") {
+    val corpus = doubled(emb)
+    val n = corpus.count()
+    val h = Similarity.deriveSrpPlanes(n)
+    assert(h != 8,
+      s"fixture too large/small to distinguish derived ($h) from fixed 8 — pick another corpus")
+    val byDefault = Similarity.nearDupPairsLSH(corpus, threshold = 0.9, dim = 64)
+    val derived = Similarity.nearDupPairsLSH(corpus, threshold = 0.9, dim = 64,
+      planesPerTable = 0)
+    val explicitH = Similarity.nearDupPairsLSH(corpus, threshold = 0.9, dim = 64,
+      planesPerTable = h)
+    val fixed8 = Similarity.nearDupPairsLSH(corpus, threshold = 0.9, dim = 64,
+      planesPerTable = 8)
+    assert(byDefault.queryExecution.optimizedPlan.sameResult(
+             derived.queryExecution.optimizedPlan),
+      "the default must BE the derived-width path")
+    assert(byDefault.queryExecution.optimizedPlan.sameResult(
+             explicitH.queryExecution.optimizedPlan),
+      "derived width must equal deriveSrpPlanes(n) made explicit")
+    assert(!byDefault.queryExecution.optimizedPlan.sameResult(
+             fixed8.queryExecution.optimizedPlan),
+      "the default caller must no longer get the fixed-8 strawman plan")
+  }
+
+  test("lsh pair default: bucket occupancy is corpus-independent where fixed width's grows linearly") {
+    // two corpora, ×4 apart, of well-spread deterministic unit vectors
+    // (splitmix-style coordinate hash — no duplicate pairs, so occupancy
+    // is purely the banding's). Under the DEFAULT (derived width) the
+    // mean per-(table,bucket) occupancy must stay flat from n to 4n —
+    // the "no unbounded bucket self-join" property, measured; under
+    // fixed 8 bits the same corpora show it growing ~4× (the strawman's
+    // quadratic candidate term). Everything is deterministic: fixed
+    // vectors, fixed hyperplanes — pinned, not sampled.
+    def vec(id: Long): Array[Float] = Array.tabulate(64) { j =>
+      var z = id * 0x9E3779B97F4A7C15L + j * 0xBF58476D1CE4E5B9L
+      z = (z ^ (z >>> 30)) * 0xBF58476D1CE4E5B9L
+      z = (z ^ (z >>> 27)) * 0x94D049BB133111EBL
+      ((z ^ (z >>> 31)).toDouble / Long.MaxValue).toFloat
+    }
+    def corpus(n: Int): DataFrame =
+      (0L until n.toLong).map(i => (i, vec(i))).toDF("vec_id", "embedding")
+    def meanOcc(df: DataFrame, planes: Int): Double = {
+      val r = Similarity.srpBucketCounts(df, dim = 64, planesPerTable = planes)
+        .agg(sum("count").cast("double").as("arrivals"),
+          count(lit(1)).cast("double").as("buckets")).head()
+      r.getDouble(0) / r.getDouble(1)
+    }
+    val small = corpus(512)
+    val big = corpus(2048)
+    assert(Similarity.deriveSrpPlanes(512) == 5 &&
+           Similarity.deriveSrpPlanes(2048) == 7,
+      "every corpus doubling must add one derived signature bit")
+    val dSmall = meanOcc(small, 0)
+    val dBig = meanOcc(big, 0)
+    assert(dBig <= dSmall * 1.5,
+      f"derived-width occupancy must hold flat across a ×4 corpus: $dSmall%.1f -> $dBig%.1f")
+    val fSmall = meanOcc(small, 8)
+    val fBig = meanOcc(big, 8)
+    assert(fBig >= fSmall * 3.0,
+      f"fixed-width occupancy should show the ~linear growth the flip removes: $fSmall%.1f -> $fBig%.1f")
+  }
+
+  test("lsh pair default: byte-identical duplicate recall survives the flip exactly") {
+    val corpus = doubled(emb)
+    val pairs = Similarity.nearDupPairsLSH(corpus, threshold = 0.9, dim = 64)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val ids = emb.select("vec_id").collect().map(_.getLong(0)).toSet
+    assert(pairs == ids.map(i => (i, i + 1000000L)),
+      "derived width must keep recall exactly 1 on the duplicated pairs")
   }
 }

@@ -4,7 +4,7 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.functions.{col, concat, lit, struct}
+import org.apache.spark.sql.functions.{col, concat, lit, struct, to_json}
 import org.apache.spark.sql.types.StringType
 
 import graft.{Jq, SparkTestBase}
@@ -162,6 +162,41 @@ class JsonlParseOnceSpec extends SparkTestBase {
     val sq = s.select(Jq.long(".a + 1", col("s")).as("n"), Jq.string(".b | ascii_upcase", col("s")).as("u"))
     assert(conversions(sq).length == 1, sq.queryExecution.optimizedPlan)
     assert(sq.collect().map(r => (r.getLong(0), r.getString(1))).toSet == (0L until 50L).map(i => (i + 1, s"X$i")).toSet)
+  }
+
+  test("json_* and jq_* over one column share one conversion; over doc, the line's parse") {
+    Jq.register(spark)
+    val calls = Seq("json_length(c)", "json_cmp(c, c)", "json_canonical(c)", "jq_long('.id', c)")
+    val text = spark.read.text(path).select(col("value").as("c"))
+    val q = text.selectExpr(calls: _*)
+    assert(conversions(q).length == 1, q.queryExecution.optimizedPlan)
+    // over readJsonl's doc: a lone reader of `doc` is inlined, and its
+    // conversion reads the line's parse back
+    Seq("json_length(doc)", "json_cmp(doc, 0)", "json_canonical(doc)", "jq_long('.id', doc)").foreach { call =>
+      def one(): DataFrame = JsonDocs.readJsonl(spark, path).selectExpr(call, "error")
+      val q = one()
+      assert(lineParses(planExprs(q)).length == 1 && readsLineParse(q), q.queryExecution.optimizedPlan)
+      assert(rows(q) == ruleOff(rows(one())), call)
+    }
+    // several readers keep `doc` a column (CollapseProject does not inline
+    // a costly alias twice): the line's parse, and one conversion of its
+    // canonical text that all four read
+    def four(): DataFrame = JsonDocs.readJsonl(spark, path).select(col("doc").as("c")).selectExpr(calls: _*)
+    assert(conversions(four()).length == 2, four().queryExecution.optimizedPlan)
+    assert(rows(four()) == ruleOff(rows(four())))
+  }
+
+  test("writeJsonl: a STRUCT column round-trips through readJsonl, and malformed text fails the write") {
+    val out = Files.createTempDirectory("jsonl-write").toFile
+    val s = spark.range(0, 30, 1, 3)
+      .select(struct(col("id").as("n"), concat(lit("s"), col("id").cast("string")).as("t")).as("st"))
+    JsonDocs.writeJsonl(s, "st", new java.io.File(out, "st").getAbsolutePath)
+    val back = JsonDocs.readJsonl(spark, new java.io.File(out, "st").getAbsolutePath)
+    assert(rows(back) == rows(s.select(to_json(col("st")).as("doc"), lit(null).cast(StringType).as("error"))))
+    val bad = JsonDocs.fromStrings(spark, Seq("{\"a\":1}", "not json"))
+    val e = intercept[Exception](JsonDocs.writeJsonl(bad, "doc", new java.io.File(out, "bad").getAbsolutePath))
+    val messages = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).map(_.getMessage).mkString("\n")
+    assert(messages.contains("doc is not a JSON document"), messages)
   }
 
   test("streamJsonl: the same projection over a stream") {
