@@ -1,5 +1,6 @@
 package graft.functions
 
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
@@ -171,11 +172,20 @@ case class CborEncodeExpr(child: Expression)
     copy(child = newChild)
 }
 
+/** A binary-codec decoder: its one operand is BINARY, and any other type
+  * fails at analysis, naming that type. */
+trait BinaryDecoder extends UnaryExpression {
+  override def checkInputDataTypes(): TypeCheckResult =
+    if (child.dataType == BinaryType) TypeCheckResult.TypeCheckSuccess
+    else TypeCheckResult.TypeCheckFailure(
+      s"$prettyName takes a BINARY operand, not ${child.dataType.catalogString}")
+}
+
 /** `cbor_to_json(bytes)` → canonical JSON text of a CBOR document; SQL
   * NULL for CBOR the document model cannot hold (tags, byte strings,
   * indefinite lengths) — errors-as-data, never an exception. */
 case class CborDecodeExpr(child: Expression)
-    extends UnaryExpression with NativeUnaryCodegen {
+    extends UnaryExpression with BinaryDecoder with NativeUnaryCodegen {
   override def dataType: DataType = StringType
   override def nullable: Boolean = true
   override def prettyName: String = "cbor_to_json"
@@ -206,7 +216,7 @@ case class MsgPackEncodeExpr(child: Expression)
 /** `msgpack_to_json(bytes)` → canonical JSON text; SQL NULL for MsgPack
   * the document model cannot hold (bin/ext) — errors-as-data. */
 case class MsgPackDecodeExpr(child: Expression)
-    extends UnaryExpression with NativeUnaryCodegen {
+    extends UnaryExpression with BinaryDecoder with NativeUnaryCodegen {
   override def dataType: DataType = StringType
   override def nullable: Boolean = true
   override def prettyName: String = "msgpack_to_json"

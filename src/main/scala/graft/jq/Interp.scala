@@ -32,31 +32,45 @@ object JEntry {
   * src/ops.rs with the intended (not buggy) behavior where the reference
   * differs from its own tests (SURVEY.md §1.2, §2.7).
   *
-  * Most nodes emit exactly one entry per input, so each node compiles to
-  * two forms at once, one [[Interp.Pipe]]:
-  *   - the general form, `apply`, is the node's output stream, with its
-  *     errors, lineage envelopes, empty and multi-output streams and
-  *     `break`;
+  * Most outputs are error-free and need no envelope, so each node compiles
+  * to three forms at once, one [[Interp.Pipe]]:
+  *   - the general form, `apply`, is the node's output stream as entries,
+  *     with their errors and lineage envelopes, and `break`;
   *   - the single-value form, `value`, is the node's one error-free
   *     output as a bare `JDoc`, or null when the general form must decide.
-  *     It covers identity, literals, `.key`/ident/`.[n]` access, `?`,
-  *     pipes, binary operators, `not`/negation, if/then/else, `$var`,
-  *     string interpolation and the zero-argument builtins over `.`
-  *     (`type`, `length`, …) that no user def shadows. It builds no
-  *     stream and never throws `break`, and whenever it returns `v` the
-  *     general form returns exactly one error-free entry whose doc is `v`
-  *     (ValuePathSpec checks this on random documents).
+  *     Whenever it returns `v`, the general form returns exactly one
+  *     error-free entry whose doc is `v`. Identity, literals,
+  *     `.key`/ident/`.[n]` access, `?`, pipes, binary operators,
+  *     `not`/negation, if/then/else, `$var`, string interpolation and the
+  *     zero-argument builtins over `.` (`type`, `length`, …) that no user
+  *     def shadows have one; so do list construction, `reduce`, `walk`, a
+  *     static-path `|=` and the `*_by` family, each built on the
+  *     multi-value form of its operands;
+  *   - the multi-value form, `values(doc, env, out)`, appends the node's
+  *     outputs to `out` as bare `JDoc`s and returns true when every output
+  *     is error-free and no `break` is reached. Then the general form
+  *     returns exactly those docs, in that order, all error-free. It
+  *     returns false when the general form must decide, and whoever made
+  *     `out` discards it. By default it reads `value`; pipes, `,`, `.[]`,
+  *     `?` (also on access, where a miss is the empty stream), `select`,
+  *     `empty`, `..` and `paths`/`leaf_paths` have their own.
+  * The last two forms build no entry, never call `apply` and never throw
+  * `break` (their `break` node has neither form), so a failed attempt
+  * wastes at most one partial evaluation. ValuePathSpec checks both
+  * contracts on random documents.
   *
-  * A consumer that reads only a value tries `value` first and falls back
-  * to `apply` on the same input when it returns null: an if condition,
-  * `select`'s predicate, a binary operator's operands, a builtin's
-  * first-output argument (`firstOut`, `sort_by`'s key), `reduce`'s
-  * update, the first-output sinks (`JqExtract`, `JqMulti`). A value
-  * drops the entry's lineage envelope, so only consumers that ignore it
-  * read one; a binary operator may, because its combined envelope is the
-  * shared `JMeta.init` whenever its operands carry none or that same
-  * constant, and a plain evaluation produces nothing else. On the
-  * general form's one-entry path:
+  * A consumer that reads only values tries those forms first and falls
+  * back to `apply` on the same input when they do not decide: an if
+  * condition, `select`'s predicate, a binary operator's operands, a
+  * builtin's first-output argument (`firstOut`, `sort_by`'s key),
+  * `reduce`'s update, the first-output sinks (`JqExtract`, `JqMulti`)
+  * and the whole-stream sinks (`JqEval`, `JqDocs`). A value drops the
+  * entry's lineage envelope, so only consumers that ignore it read one; a
+  * binary operator and a list construction may, because their combined
+  * envelope is the shared `JMeta.init` whenever their operands carry none
+  * or that same constant, and a plain evaluation produces nothing else.
+  * `jq_eval_meta` ([[compileE]]), errors, `label`/`break` and `try` stay
+  * on the general form. On the general form's one-entry path:
   *   - every one-entry stream is built by `one` (`Vector.empty :+ e`, a
   *     bare `Vector1`), never by the varargs `Vector(e)`;
   *   - the stream combinators (`breakFlatMap`, `Bin`, `MkList`) take a
@@ -74,11 +88,59 @@ object Interp {
   type Env = List[(String, JDoc)]
 
   /** A compiled node: `apply` is its general form, `value` its
-    * single-value form (see [[Interp]]). A function literal is a node with
-    * no single-value form. */
+    * single-value form and `values` its multi-value form (see [[Interp]]).
+    * A function literal is a node with only the general form. */
   abstract class Pipe {
     def apply(doc: JDoc, env: Env): Vector[JEntry]
     def value(doc: JDoc, env: Env): JDoc = null
+    def values(doc: JDoc, env: Env, out: ValueBuf): Boolean = {
+      val v = value(doc, env)
+      v != null && { out += v; true }
+    }
+  }
+
+  /** The documents a [[Pipe.values]] call appends to, in output order. A
+    * pipe stage evaluates its left side onto the tail and replaces that
+    * run by the right side's outputs, so one buffer serves a whole chain
+    * of stages. */
+  final class ValueBuf {
+    private[this] var docs = new Array[AnyRef](16)
+    private[this] var n = 0
+    def size: Int = n
+    def apply(i: Int): JDoc = docs(i).asInstanceOf[JDoc]
+    def +=(d: JDoc): Unit = {
+      if (n == docs.length) docs = java.util.Arrays.copyOf(docs, 2 * n)
+      docs(n) = d
+      n += 1
+    }
+    def ++=(ds: Vector[JDoc]): Unit = {
+      val it = ds.iterator
+      while (it.hasNext) this += it.next()
+    }
+    /** Keep the first `k` documents. */
+    def truncate(k: Int): Unit = n = k
+    /** Drop the documents at `[from, until)`; later ones move down. */
+    def remove(from: Int, until: Int): Unit = {
+      System.arraycopy(docs, until, docs, from, n - until)
+      n -= until - from
+    }
+    def toVector: Vector[JDoc] = vectorOf(java.util.Arrays.copyOf(docs, n))
+  }
+
+  /** The vector of `arr`'s elements; up to 32 of them become a `Vector1`
+    * over `arr` itself, so the caller must not write to it again. */
+  private def vectorOf[A](arr: Array[AnyRef]): Vector[A] =
+    Vector.from(scala.collection.immutable.ArraySeq.unsafeWrapArray(arr)).asInstanceOf[Vector[A]]
+
+  /** The first output of `f` on `doc`, when its value forms decide and it
+    * has one; else null. */
+  private def headValue(f: Pipe, doc: JDoc, env: Env): JDoc = {
+    val v = f.value(doc, env)
+    if (v != null) v
+    else {
+      val out = new ValueBuf
+      if (f.values(doc, env, out) && out.size > 0) out(0) else null
+    }
   }
 
   def run(query: String, doc: JDoc): Vector[JEntry] =
@@ -164,7 +226,10 @@ object Interp {
       def apply(doc: JDoc, env: Env) = one(JEntry.ok(doc))
       override def value(doc: JDoc, env: Env) = doc
     }
-    case Recurse  => (doc, env) => JOps.recurse(doc).map(JEntry.ok)
+    case Recurse => new Pipe {
+      def apply(doc: JDoc, env: Env) = JOps.recurse(doc).map(JEntry.ok)
+      override def values(doc: JDoc, env: Env, out: ValueBuf) = { out ++= JOps.recurse(doc); true }
+    }
 
     case Lit(v) =>
       val out = one(JEntry.ok(v)) // literals are constant per input
@@ -178,6 +243,7 @@ object Interp {
       new Pipe {
         def apply(doc: JDoc, env: Env) = f(doc, env).filter(_.errors.isEmpty)
         override def value(doc: JDoc, env: Env) = f.value(doc, env) // `?` keeps an error-free output
+        override def values(doc: JDoc, env: Env, out: ValueBuf) = f.values(doc, env, out)
       }
 
     case IndexKey(key, opt) => keyAccess(key, opt)
@@ -189,6 +255,10 @@ object Interp {
           if (v != null) one(JEntry.ok(v)) else err(s"cannot index $off into ${doc.typeName}", opt)
         }
         override def value(doc: JDoc, env: Env) = JOps.elementAt(doc, off)
+        override def values(doc: JDoc, env: Env, out: ValueBuf) = {
+          val v = JOps.elementAt(doc, off)
+          if (v != null) { out += v; true } else opt // `.[n]?` that misses is the empty stream
+        }
       }
 
     case Ident(name, opt) =>
@@ -202,9 +272,19 @@ object Interp {
       }
 
     case IterValues(opt) =>
-      (doc, env) => JOps.docValues(doc) match {
-        case Some(vs) => vs.map(JEntry.ok)
-        case None     => err(s"cannot iterate ${doc.typeName}", opt)
+      new Pipe {
+        def apply(doc: JDoc, env: Env) = JOps.docValues(doc) match {
+          case Some(vs) => vs.map(JEntry.ok)
+          case None     => err(s"cannot iterate ${doc.typeName}", opt)
+        }
+        override def values(doc: JDoc, env: Env, out: ValueBuf) = doc match {
+          case JArr(items) => out ++= items; true
+          case o: JObj =>
+            val props = o.props.iterator
+            while (props.hasNext) out += props.next()._2
+            true
+          case _ => opt // `.[]?` on a scalar is the empty stream
+        }
       }
 
     case Iterate(item :: Nil, _) =>
@@ -213,6 +293,7 @@ object Interp {
       new Pipe {
         def apply(doc: JDoc, env: Env) = f(doc, env)
         override def value(doc: JDoc, env: Env) = f.value(doc, env)
+        override def values(doc: JDoc, env: Env, out: ValueBuf) = f.values(doc, env, out)
       }
 
     case Iterate(items, _) =>
@@ -246,12 +327,20 @@ object Interp {
           if (entries.exists(_.errors.nonEmpty)) entries.flatMap(_.errors) else Vector.empty[String]
         one(JEntry(JArr(entries.map(_.doc)), errors, JMeta.newMerged(entries.iterator.map(_.meta))))
       }
-      items.map(compile) match {
-        case f :: Nil => (doc, env) => collect(f(doc, env))
-        case fs => (doc, env) => {
-          val entries = Vector.newBuilder[JEntry]
-          fs.foreach(f => entries ++= f(doc, env))
-          collect(entries.result())
+      val fs = items.map(compile)
+      new Pipe {
+        def apply(doc: JDoc, env: Env) = fs match {
+          case f :: Nil => collect(f(doc, env))
+          case _ =>
+            val entries = Vector.newBuilder[JEntry]
+            fs.foreach(f => entries ++= f(doc, env))
+            collect(entries.result())
+        }
+        override def value(doc: JDoc, env: Env) = {
+          val out = new ValueBuf
+          var rest = fs
+          while (rest.nonEmpty && rest.head.values(doc, env, out)) rest = rest.tail
+          if (rest.isEmpty) JArr(out.toVector) else null
         }
       }
 
@@ -319,6 +408,17 @@ object Interp {
           val v = fl.value(doc, env)
           if (v == null) null else fr.value(v, env)
         }
+        override def values(doc: JDoc, env: Env, out: ValueBuf) = {
+          // the left side's outputs land on the tail, the right side's
+          // outputs of each after them; then the left run is dropped
+          val start = out.size
+          fl.values(doc, env, out) && {
+            val end = out.size
+            var i = start
+            while (i < end && fr.values(out(i), env, out)) i += 1
+            i == end && { out.remove(start, end); true }
+          }
+        }
       }
 
     case Comma(l, r) =>
@@ -326,10 +426,14 @@ object Interp {
       // already-emitted left outputs (same rule as breakFlatMap)
       val fl = compile(l)
       val fr = compile(r)
-      (doc, env) => {
-        val left = fl(doc, env)
-        try left ++ fr(doc, env)
-        catch { case b: BreakSignal => b.prependAndRethrow(left) }
+      new Pipe {
+        def apply(doc: JDoc, env: Env) = {
+          val left = fl(doc, env)
+          try left ++ fr(doc, env)
+          catch { case b: BreakSignal => b.prependAndRethrow(left) }
+        }
+        override def values(doc: JDoc, env: Env, out: ValueBuf) =
+          fl.values(doc, env, out) && fr.values(doc, env, out)
       }
 
     case Call(name, args) =>
@@ -466,7 +570,7 @@ object Interp {
       val fs = compile(src)
       val fi = compile(init)
       val fu = compile(update)
-      (doc, env) => {
+      def general(doc: JDoc, env: Env): Vector[JEntry] = {
         val srcs = fs(doc, env)
         srcs.find(_.errors.nonEmpty) match {
           case Some(e) => one(e)
@@ -508,6 +612,32 @@ object Interp {
               }
             }
         }
+      }
+      new Pipe {
+        def apply(doc: JDoc, env: Env) = general(doc, env)
+        override def value(doc: JDoc, env: Env): JDoc =
+          if (foreach) null
+          else {
+            // the source and the updates as values, the init as a value
+            val srcs = new ValueBuf
+            var acc = if (fs.values(doc, env, srcs)) fi.value(doc, env) else null
+            var ups: ValueBuf = null
+            var i = 0
+            while (acc != null && i < srcs.size) {
+              val bound = (name, srcs(i)) :: env
+              val v = fu.value(acc, bound)
+              if (v != null) acc = v
+              else {
+                if (ups == null) ups = new ValueBuf else ups.truncate(0)
+                acc =
+                  if (!fu.values(acc, bound, ups)) null
+                  else if (ups.size == 0) JNull
+                  else ups(ups.size - 1)
+              }
+              i += 1
+            }
+            acc
+          }
       }
 
     case StrInterp(parts) =>
@@ -631,7 +761,7 @@ object Interp {
             }
           } else {
             // `.p |= f`: f runs against the CURRENT value; first output wins
-            (doc, env) => JOps.getPath(doc, segs) match {
+            def general(doc: JDoc, env: Env): Vector[JEntry] = JOps.getPath(doc, segs) match {
               case Left(msg) => one(JEntry(JNull, Vector(msg)))
               case Right(cur) =>
                 fv(cur, env).headOption match {
@@ -643,6 +773,15 @@ object Interp {
                       case Left(msg)  => one(JEntry(JNull, Vector(msg)))
                     }
                 }
+            }
+            new Pipe {
+              def apply(doc: JDoc, env: Env) = general(doc, env)
+              override def value(doc: JDoc, env: Env) = JOps.getPath(doc, segs) match {
+                case Right(cur) =>
+                  val v = headValue(fv, cur, env)
+                  if (v == null) null else JOps.setPath(doc, segs, v).getOrElse(null)
+                case Left(_) => null
+              }
             }
           }
       }
@@ -665,6 +804,10 @@ object Interp {
       if (v != null) one(JEntry.ok(v)) else err(s"cannot index $key into ${doc.typeName}", opt)
     }
     override def value(doc: JDoc, env: Env) = find(doc)
+    override def values(doc: JDoc, env: Env, out: ValueBuf) = {
+      val v = find(doc)
+      if (v != null) { out += v; true } else opt // `.key?` that misses is the empty stream
+    }
   }
 
   /** Negation and `not`: `op` over each error-free output. */
@@ -1384,40 +1527,49 @@ object Interp {
         // first) and ALSO works now via specialization cells.
         if (args.length != 1) return wrongArity
         val fw = compiledArgs.head
-        def wk(doc: JDoc, env: Env): Either[String, JDoc] = {
-          val rebuilt: Either[String, JDoc] = doc match {
+        // `step` on every node, children first; null as soon as a step is.
+        // A container whose children all come back as they were is kept.
+        def wk(doc: JDoc, step: JDoc => JDoc): JDoc = {
+          val rebuilt: JDoc = doc match {
             case JArr(xs) =>
-              val out = Vector.newBuilder[JDoc]
-              xs.foreach { x =>
-                wk(x, env) match {
-                  case Left(m)  => return Left(m)
-                  case Right(v) => out += v
-                }
+              var out: Array[AnyRef] = null
+              var i = 0
+              while (i < xs.length) {
+                val v = wk(xs(i), step)
+                if (v == null) return null
+                if (out == null && (v ne xs(i))) { out = new Array[AnyRef](xs.length); xs.copyToArray(out, 0, i) }
+                if (out != null) out(i) = v
+                i += 1
               }
-              Right(JArr(out.result()))
+              if (out == null) doc else JArr(vectorOf(out))
             case JObj(props) =>
               // same keys in the same (sorted, unique) order: no re-sort
-              val out = Vector.newBuilder[(String, JDoc)]
-              props.foreach { case (k, v) =>
-                wk(v, env) match {
-                  case Left(m)   => return Left(m)
-                  case Right(nv) => out += ((k, nv))
-                }
+              var out: Array[AnyRef] = null
+              var i = 0
+              while (i < props.length) {
+                val kv = props(i)
+                val v = wk(kv._2, step)
+                if (v == null) return null
+                if (out == null && (v ne kv._2)) { out = new Array[AnyRef](props.length); props.copyToArray(out, 0, i) }
+                if (out != null) out(i) = if (v eq kv._2) kv else (kv._1, v)
+                i += 1
               }
-              Right(JObj(out.result()))
-            case other => Right(other)
+              if (out == null) doc else JObj(vectorOf(out))
+            case other => other
           }
-          rebuilt.flatMap { d =>
-            firstOut(fw, d, env) match {
-              case Left(m)                       => Left(m)
-              case Right(e) if e.errors.nonEmpty => Left(e.errors.head)
-              case Right(e)                      => Right(e.doc)
-            }
-          }
+          step(rebuilt)
         }
-        (doc, env) => wk(doc, env) match {
-          case Left(m)  => one(JEntry(JNull, Vector(m)))
-          case Right(d) => one(JEntry.ok(d))
+        new Pipe {
+          def apply(doc: JDoc, env: Env) = {
+            var failure: String = null
+            val d = wk(doc, n => firstOut(fw, n, env) match {
+              case Left(m)                       => failure = m; null
+              case Right(e) if e.errors.nonEmpty => failure = e.errors.head; null
+              case Right(e)                      => e.doc
+            })
+            if (d == null) one(JEntry(JNull, Vector(failure))) else one(JEntry.ok(d))
+          }
+          override def value(doc: JDoc, env: Env) = wk(doc, headValue(fw, _, env))
         }
 
       case "map_values" =>
@@ -1615,12 +1767,15 @@ object Interp {
             // totalCmp, NOT cmp: a partial comparator (NaN) makes TimSort
             // throw mid-task on >=32 elements — never an option here
             val sorted = items.sortWith((a, b) => JOps.totalCmp(a, b) < 0)
-            val out =
-              if (!uniq) sorted
-              else sorted.foldLeft(Vector.empty[JDoc]) { (acc, d) =>
-                if (acc.nonEmpty && JOps.totalCmp(acc.last, d) == 0) acc else acc :+ d
+            if (!uniq) Right(JArr(sorted))
+            else {
+              val out = Vector.newBuilder[JDoc]
+              var last: JDoc = null
+              sorted.foreach { d =>
+                if (last == null || JOps.totalCmp(last, d) != 0) { out += d; last = d }
               }
-            Right(JArr(out))
+              Right(JArr(out.result()))
+            }
           case other => Left(s"cannot sort ${other.typeName}")
         }
 
@@ -1854,7 +2009,10 @@ object Interp {
 
       case "empty" =>
         // EXTENSION (jq empty): the empty stream
-        (_, _) => Vector.empty
+        new Pipe {
+          def apply(doc: JDoc, env: Env) = Vector.empty
+          override def values(doc: JDoc, env: Env, out: ValueBuf) = true
+        }
 
       case "first" | "last" =>
         // EXTENSION: bare first/last are .[0]/.[-1]; with an argument,
@@ -1984,13 +2142,28 @@ object Interp {
         // the predicate — `if f then . else empty end` with fan-out
         if (args.length != 1) return wrongArity
         val fa = compiledArgs.head
-        (doc, env) => {
-          val v = fa.value(doc, env)
-          if (v != null) { if (JOps.truthy(v)) one(JEntry.ok(doc)) else Vector.empty }
-          else breakFlatMap(fa(doc, env)) { e =>
-            if (e.errors.nonEmpty) one(JEntry(JNull, e.errors))
-            else if (JOps.truthy(e.doc)) one(JEntry.ok(doc))
-            else Vector.empty
+        new Pipe {
+          def apply(doc: JDoc, env: Env) = {
+            val v = fa.value(doc, env)
+            if (v != null) { if (JOps.truthy(v)) one(JEntry.ok(doc)) else Vector.empty }
+            else breakFlatMap(fa(doc, env)) { e =>
+              if (e.errors.nonEmpty) one(JEntry(JNull, e.errors))
+              else if (JOps.truthy(e.doc)) one(JEntry.ok(doc))
+              else Vector.empty
+            }
+          }
+          override def values(doc: JDoc, env: Env, out: ValueBuf) = {
+            // the predicate's outputs land on the tail; one `doc` replaces
+            // them per truthy output
+            val start = out.size
+            fa.values(doc, env, out) && {
+              var truthy = 0
+              var i = start
+              while (i < out.size) { if (JOps.truthy(out(i))) truthy += 1; i += 1 }
+              out.truncate(start)
+              while (truthy > 0) { out += doc; truthy -= 1 }
+              true
+            }
           }
         }
 
@@ -2162,40 +2335,61 @@ object Interp {
         }
         val byKey: Ordering[(JDoc, JDoc)] =
           (a, b) => JOps.totalCmp(a._1, b._1)
-        (doc, env) => doc match {
-          case JArr(items) =>
-            keyed(items, env) match {
-              case Left(errs) => one(JEntry(JNull, errs))
-              case Right(kv) =>
-                val sorted = kv.sorted(byKey)
-                name match {
-                  case "sort_by" => one(JEntry.ok(JArr(sorted.map(_._2))))
-                  case "unique_by" =>
-                    val out = sorted.foldLeft(Vector.empty[(JDoc, JDoc)]) { (acc, d) =>
-                      if (acc.nonEmpty && JOps.totalCmp(acc.last._1, d._1) == 0) acc
-                      else acc :+ d
-                    }
-                    one(JEntry.ok(JArr(out.map(_._2))))
-                  case "group_by" =>
-                    val groups = Vector.newBuilder[JDoc]
-                    var cur = Vector.empty[JDoc]
-                    var curKey: Option[JDoc] = None
-                    sorted.foreach { case (k, v) =>
-                      curKey match {
-                        case Some(ck) if JOps.totalCmp(ck, k) == 0 => cur :+= v
-                        case Some(_) => groups += JArr(cur); cur = Vector(v); curKey = Some(k)
-                        case None    => cur = Vector(v); curKey = Some(k)
-                      }
-                    }
-                    if (curKey.isDefined) groups += JArr(cur)
-                    one(JEntry.ok(JArr(groups.result())))
-                  case "min_by" =>
-                    one(JEntry.ok(sorted.headOption.map(_._2).getOrElse(JNull)))
-                  case _ => // max_by
-                    one(JEntry.ok(sorted.lastOption.map(_._2).getOrElse(JNull)))
+        def ordered(kv: Vector[(JDoc, JDoc)]): JDoc = {
+          val sorted = kv.sorted(byKey)
+          name match {
+            case "sort_by" => JArr(sorted.map(_._2))
+            case "unique_by" =>
+              val out = sorted.foldLeft(Vector.empty[(JDoc, JDoc)]) { (acc, d) =>
+                if (acc.nonEmpty && JOps.totalCmp(acc.last._1, d._1) == 0) acc
+                else acc :+ d
+              }
+              JArr(out.map(_._2))
+            case "group_by" =>
+              val groups = Vector.newBuilder[JDoc]
+              var cur = Vector.empty[JDoc]
+              var curKey: Option[JDoc] = None
+              sorted.foreach { case (k, v) =>
+                curKey match {
+                  case Some(ck) if JOps.totalCmp(ck, k) == 0 => cur :+= v
+                  case Some(_) => groups += JArr(cur); cur = Vector(v); curKey = Some(k)
+                  case None    => cur = Vector(v); curKey = Some(k)
                 }
-            }
-          case other => one(JEntry(JNull, Vector(s"cannot $name over ${other.typeName}")))
+              }
+              if (curKey.isDefined) groups += JArr(cur)
+              JArr(groups.result())
+            case "min_by" => sorted.headOption.map(_._2).getOrElse(JNull)
+            case _        => sorted.lastOption.map(_._2).getOrElse(JNull) // max_by
+          }
+        }
+        new Pipe {
+          def apply(doc: JDoc, env: Env) = doc match {
+            case JArr(items) =>
+              keyed(items, env) match {
+                case Left(errs) => one(JEntry(JNull, errs))
+                case Right(kv)  => one(JEntry.ok(ordered(kv)))
+              }
+            case other => one(JEntry(JNull, Vector(s"cannot $name over ${other.typeName}")))
+          }
+          override def value(doc: JDoc, env: Env): JDoc = doc match {
+            case JArr(items) =>
+              // each key from the argument's value stream
+              val kv = Vector.newBuilder[(JDoc, JDoc)]
+              val keys = new ValueBuf
+              val it = items.iterator
+              while (it.hasNext) {
+                val item = it.next()
+                val v = fa.value(item, env)
+                if (v != null) kv += ((JArr(Vector.empty :+ v), item))
+                else {
+                  keys.truncate(0)
+                  if (!fa.values(item, env, keys)) return null
+                  kv += ((JArr(keys.toVector), item))
+                }
+              }
+              ordered(kv.result())
+            case _ => null
+          }
         }
 
       case "flatten" =>
@@ -2275,28 +2469,33 @@ object Interp {
         // EXTENSION (jq): one path array per sub-value, pre-order, root
         // excluded; object fields visited in document (canonical) order —
         // the same traversal `..` uses, but emitting paths not values
-        (doc, env) => breakFlatMap(inputFor(doc, env)) { e =>
-          if (e.errors.nonEmpty) one(e)
-          else {
-            val out = Vector.newBuilder[JEntry]
-            def walk(d: JDoc, path: Vector[JDoc]): Unit = {
-              val leaf = d match {
-                case _: JArr | _: JObj => false
-                case _                 => true
-              }
-              if (path.nonEmpty && (!leavesOnly || leaf)) out += JEntry.ok(JArr(path))
-              d match {
-                case JArr(items) =>
-                  var i = 0
-                  while (i < items.length) { walk(items(i), path :+ JLong(i.toLong)); i += 1 }
-                case JObj(props) =>
-                  props.foreach { case (k, v) => walk(v, path :+ JStr(k)) }
-                case _ => ()
-              }
-            }
-            walk(e.doc, Vector.empty)
-            out.result()
+        def walk(d: JDoc, path: Vector[JDoc], emit: JDoc => Unit): Unit = {
+          val leaf = d match {
+            case _: JArr | _: JObj => false
+            case _                 => true
           }
+          if (path.nonEmpty && (!leavesOnly || leaf)) emit(JArr(path))
+          d match {
+            case JArr(items) =>
+              var i = 0
+              while (i < items.length) { walk(items(i), path :+ JLong(i.toLong), emit); i += 1 }
+            case JObj(props) =>
+              props.foreach { case (k, v) => walk(v, path :+ JStr(k), emit) }
+            case _ => ()
+          }
+        }
+        new Pipe {
+          def apply(doc: JDoc, env: Env) = breakFlatMap(inputFor(doc, env)) { e =>
+            if (e.errors.nonEmpty) one(e)
+            else {
+              val out = Vector.newBuilder[JEntry]
+              walk(e.doc, Vector.empty, p => out += JEntry.ok(p))
+              out.result()
+            }
+          }
+          // over `.` only: an argument selecting the input keeps the general form
+          override def values(doc: JDoc, env: Env, out: ValueBuf) =
+            compiledArgs.isEmpty && { walk(doc, Vector.empty, out += _); true }
         }
 
       case "getpath" =>

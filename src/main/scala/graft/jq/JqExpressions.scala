@@ -79,14 +79,24 @@ private[jq] object JqGuard {
     * [[JqEval.firstValue]] reads it: from the pipe's single-value form
     * when that decides, else from its guarded entries. A value form never
     * breaks, and anything it throws takes the same ladder as [[render]]. */
-  def firstValue(pipe: Interp.Pipe, doc: JDoc, kind: String): Any = {
-    val fromEntries: Vector[JEntry] => Any = JqEval.firstValue(kind)
+  def firstValue(pipe: Interp.Pipe, doc: JDoc, kind: String): Any =
     try {
       val v = pipe.value(doc, Nil)
       if (v != null) JqEval.extract(kind, v)
+      else render(pipe(doc, Nil))(JqEval.firstValue(kind))
+    } catch failure.andThen(JqEval.firstValue(kind)(_))
+
+  /** Every output of `pipe` on `doc`: rendered by `fromDocs` from the
+    * pipe's multi-value form when that decides (every output is
+    * error-free), else by `fromEntries` from its guarded entries. The
+    * same ladder as [[firstValue]]. */
+  def stream[A](pipe: Interp.Pipe, doc: JDoc)(fromDocs: Interp.ValueBuf => A)(
+      fromEntries: Vector[JEntry] => A): A =
+    try {
+      val out = new Interp.ValueBuf
+      if (pipe.values(doc, Nil, out)) fromDocs(out)
       else render(pipe(doc, Nil))(fromEntries)
     } catch failure.andThen(fromEntries)
-  }
 }
 
 /** A jq expression over one document operand, a [[JqDoc]]. The pipeline
@@ -98,13 +108,25 @@ private[jq] object JqGuard {
   * stage. */
 trait JqNativeInput extends graft.functions.NativeUnaryCodegen {
 
-  /** Run `compiled` over one converted document and render the entries
-    * with `f`; a failed conversion (malformed JSON *text*) becomes the
-    * errors-as-data record, never an exception (reference:
-    * src/entry.rs:5-10), and so does an output too deep to render. */
-  protected final def renderPipe[A](compiled: Interp.Pipe, input: Any)(f: Vector[JEntry] => A): A = {
+  /** Run `compiled` over one converted document and render its outputs:
+    * with `fromDocs` when they are all error-free values, else the
+    * entries with `f` ([[JqGuard.stream]]). A failed conversion (malformed
+    * JSON *text*) becomes the errors-as-data record, never an exception
+    * (reference: src/entry.rs:5-10), and so does an output too deep to
+    * render. */
+  protected final def renderPipe[A](compiled: Interp.Pipe, input: Any)(
+      fromDocs: Interp.ValueBuf => A)(f: Vector[JEntry] => A): A = {
     val doc = JqDoc.document(input)
-    JqGuard.render(if (doc == null) JqGuard.invalid(input) else compiled(doc, Nil))(f)
+    if (doc == null) JqGuard.render(JqGuard.invalid(input))(f)
+    else JqGuard.stream(compiled, doc)(fromDocs)(f)
+  }
+
+  /** The canonical text of each document in `out`. */
+  protected final def canonicalTexts(out: Interp.ValueBuf): Array[Any] = {
+    val texts = new Array[Any](out.size)
+    var i = 0
+    while (i < texts.length) { texts(i) = UTF8String.fromString(JsonText.canonical(out(i))); i += 1 }
+    texts
   }
 }
 
@@ -149,7 +171,11 @@ case class JqEval(ast: Ast, queryText: String, child: Expression) extends JqNati
   override def dataType: DataType = JqEval.outputType
   override def prettyName: String = "jq_eval"
   override protected def nullSafeEval(input: Any): Any =
-    renderPipe(compiled, input) { entries =>
+    renderPipe(compiled, input) { out =>
+      new GenericArrayData(canonicalTexts(out).map { doc =>
+        InternalRow(doc, new GenericArrayData(Array.empty[Any])): Any
+      })
+    } { entries =>
       new GenericArrayData(entries.map { en =>
         InternalRow(
           UTF8String.fromString(JsonText.canonical(en.doc)),
@@ -168,7 +194,7 @@ case class JqDocs(ast: Ast, queryText: String, child: Expression) extends JqNati
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
   override def prettyName: String = "jq_docs"
   override protected def nullSafeEval(input: Any): Any =
-    renderPipe(compiled, input) { entries =>
+    renderPipe(compiled, input)(out => new GenericArrayData(canonicalTexts(out))) { entries =>
       new GenericArrayData(entries.collect {
         case en if en.errors.isEmpty => UTF8String.fromString(JsonText.canonical(en.doc))
       }.toArray[Any])

@@ -224,6 +224,24 @@ class JqSparkSpec extends SparkTestBase {
     intercept[org.apache.spark.sql.AnalysisException](bin.select(Jq.jsonCmp(col("b"), col("b"))))
   }
 
+  test("cbor_to_json: a non-BINARY operand fails at analysis, naming its type") {
+    Jq.register(spark)
+    val df = spark.range(1).toDF()
+    val viaColumn = intercept[org.apache.spark.sql.AnalysisException](df.select(Jq.fromCbor(lit("x"))))
+    assert(viaColumn.getMessage.contains("cbor_to_json takes a BINARY operand, not string"), viaColumn.getMessage)
+    val viaSql = intercept[org.apache.spark.sql.AnalysisException](df.selectExpr("cbor_to_json(42)"))
+    assert(viaSql.getMessage.contains("not int"), viaSql.getMessage)
+  }
+
+  test("msgpack_to_json: a non-BINARY operand fails at analysis, naming its type") {
+    Jq.register(spark)
+    val df = spark.range(1).toDF()
+    val viaColumn = intercept[org.apache.spark.sql.AnalysisException](df.select(Jq.fromMsgPack(lit("x"))))
+    assert(viaColumn.getMessage.contains("msgpack_to_json takes a BINARY operand, not string"), viaColumn.getMessage)
+    val viaSql = intercept[org.apache.spark.sql.AnalysisException](df.selectExpr("msgpack_to_json('x')"))
+    assert(viaSql.getMessage.contains("not string"), viaSql.getMessage)
+  }
+
   // ---------------------------------------------------------- properties
 
   private val genScalar: Gen[JDoc] = Gen.oneOf(

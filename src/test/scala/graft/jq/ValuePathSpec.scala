@@ -4,12 +4,16 @@ import org.scalacheck.Gen
 import org.scalatest.funsuite.AnyFunSuite
 import graft.json._
 
-/** The single-value form of a compiled node against its general form:
-  * wherever `value` returns a document, `apply` on the same input must
-  * return exactly one error-free entry holding that document. Checked for
-  * every sub-expression of the jq_scan programs, the interactive query
+/** The single- and multi-value forms of a compiled node against its
+  * general form: wherever `value` returns a document, `apply` on the same
+  * input must return exactly one error-free entry holding that document;
+  * wherever `values` returns true, `apply` must return error-free entries
+  * holding exactly the appended documents, in order. Checked for every
+  * sub-expression of the jq_scan programs, the interactive query
   * templates and the golden programs, over random documents with missing
-  * keys, wrong types, NaN, wide integers and surrogate-pair keys. Beside
+  * keys, wrong types, NaN, wide integers and surrogate-pair keys; and
+  * `values` must leave a mid-stream error or a reached `break` to the
+  * general form. Beside
   * it, the two `graft.json` orderings the value path leans on: `cmpStr`
   * against a code-point reference, and parsed objects against
   * `JObj.fromProps`. */
@@ -22,17 +26,7 @@ class ValuePathSpec extends AnyFunSuite {
     }
   }
 
-  private val scanPrograms = Seq(
-    ".user.name",
-    "[.items.[] | .qty * .price] | add",
-    "[.items.[] | select(.qty > 3) | .sku] | length",
-    "reduce .items.[] as $it (0; . + ($it | .qty))",
-    ".items |= sort_by(.price) | .items.[0].price",
-    "\"\\(.user.country)/\\(.user.tier)\"",
-    "[paths] | length",
-    "walk(if type == \"number\" then . * 2 else . end) | [.items.[] | .qty] | add",
-    "[.items.[] | .tags.[]] | unique | length",
-    "[.meta.flags.[] | select(.)] | length")
+  private val scanPrograms = JqKernelLoop.programs.map(_._2)
 
   private val interactiveTemplates = Seq(
     ".user.country", ".user.tier", ".meta.source",
@@ -167,6 +161,80 @@ class ValuePathSpec extends AnyFunSuite {
       _ == Ast.Call("not", Nil))
     covered.zipWithIndex.foreach { case (kind, i) =>
       assert(hitAsts.exists(kind), s"no value produced by value-form kind #$i")
+    }
+  }
+
+  /** Forms the multi-value path covers that the programs above reach rarely. */
+  private val streamForms = Seq(
+    "[..]", "[.[]?]", "[.a, .b]", "[.a.[]?, empty]", "[leaf_paths]", "[.[] | select(. > 1)]",
+    "sort_by(.a)", "sort_by(.a, .b)", "group_by(.a) | length", "reduce (1, 2) as $i (.; [.])",
+    ".a |= (.b, .c)", "walk(.a?)", "[.[]?.a?]", "(.a, .b) | .[]?")
+
+  test("multi-value form: the general form's outputs, all error-free and in order, over every sub-expression") {
+    val streamAsts = (asts ++ streamForms.flatMap(p => subtrees(JqParser.parse(p)))).distinct
+    val compiled = streamAsts.map { a =>
+      (a, Interp.compile(a), names(a, { case Ast.Var(n) => n }).toList)
+    }
+    val hitAsts = scala.collection.mutable.Set.empty[Ast]
+    var hits = 0
+    var multi = 0
+    forAllN(Gen.zip(genInput, genDoc(2)), 200) { case (doc, bound) =>
+      compiled.foreach { case (ast, pipe, vars) =>
+        val env = vars.map(_ -> bound)
+        Seq(Nil, env).distinct.foreach { e =>
+          val out = new Interp.ValueBuf
+          if (pipe.values(doc, e, out)) {
+            hits += 1
+            if (out.size != 1) multi += 1
+            hitAsts += ast
+            val general = pipe(doc, e)
+            assert(general.length == out.size && general.indices.forall { i =>
+                general(i).errors.isEmpty && identical(general(i).doc, out(i))
+              },
+              s"$ast on ${JsonText.canonical(doc)}: values " +
+                out.toVector.map(JsonText.canonical).mkString("[", ", ", "]") + ", general " +
+                general.map(o => JsonText.canonical(o.doc) + o.errors.mkString("[", ";", "]")).mkString(", "))
+          }
+        }
+      }
+    }
+    // the check is not vacuous: streams of every length, from every form
+    assert(hits > 10000 && multi > 2000, s"only $hits value streams, $multi not of one value")
+    val covered = Seq[Ast => Boolean](
+      _.isInstanceOf[Ast.Pipe], _.isInstanceOf[Ast.Comma], _.isInstanceOf[Ast.IterValues],
+      _.isInstanceOf[Ast.MkList], _.isInstanceOf[Ast.Reduce], _.isInstanceOf[Ast.Assign],
+      _ == Ast.Recurse, _ == Ast.IterValues(opt = true), _ == Ast.Call("paths", Nil),
+      _ == Ast.Call("leaf_paths", Nil), _ == Ast.Call("empty", Nil),
+      { case Ast.Call("select", _) => true; case _ => false },
+      { case Ast.Call("walk", _) => true; case _ => false },
+      { case Ast.Call("sort_by", _) => true; case _ => false })
+    covered.zipWithIndex.foreach { case (kind, i) =>
+      assert(hitAsts.exists(kind), s"no value stream produced by multi-value kind #$i")
+    }
+  }
+
+  test("multi-value form: a mid-stream error and a break leave the stream to the general form") {
+    val doc = JsonText.parse("""{"items":[{"qty":1},{"sku":"x"},{"qty":3}]}""")
+    def values(program: String): Option[Vector[JDoc]] = {
+      val out = new Interp.ValueBuf
+      if (Interp.compile(JqParser.parse(program)).values(doc, Nil, out)) Some(out.toVector) else None
+    }
+    def general(program: String): Vector[String] =
+      Interp.run(program, doc).map(e => JsonText.canonical(e.doc) + e.errors.mkString("[", ";", "]"))
+    // the second item has no qty: an error between two values
+    for (p <- Seq("[.items.[] | .qty]", ".items.[] | .qty")) {
+      assert(values(p).isEmpty, p)
+      assert(general(p).exists(_.contains("[cannot index qty")), p)
+    }
+    assert(values("[.items.[] | .qty?]").contains(Vector(JArr(Vector(JLong(1), JLong(3))))))
+    // a reached break: its label's outputs come from the general form only
+    val broken = Seq(
+      "label $f | .items.[] | (., break $f)" -> Vector("""{"qty":1}[]"""),
+      "[label $f | (1, 2, 3) | if . == 2 then break $f else . end]" -> Vector("[1][]"),
+      "label $f | (1, break $f, 2)" -> Vector("1[]"))
+    broken.foreach { case (p, expected) =>
+      assert(values(p).isEmpty, p)
+      assert(general(p) == expected, p)
     }
   }
 

@@ -10,9 +10,11 @@ import org.apache.spark.sql.catalyst.plans.logical.Join
   * operator that uses it: MinHash LSH (unbounded key: semi-join),
   * SimHash block pairs and fixed-width SRP (bounded keys: a driver
   * probe, then a NOT-IN only when engaged), derived-width SRP
-  * (semi-join) and dHash bands (probe); and the edit-blocking tuner's
-  * engagement floor (re-keying must not engage when the verify work it
-  * saves is cheaper than the O(n) re-key machinery); and the capped
+  * (semi-join) and dHash bands (probe), whose dedup keeps a row with a
+  * null band as a singleton; the edit-blocking tuner's engagement floor
+  * (re-keying must not engage when the verify work it saves is cheaper
+  * than the O(n) re-key machinery), its two oversized-key tagging paths
+  * and its default cap at the gate SF; and the capped
   * postings of `duplicateRuns` (a bounded-state aggregate that drops a
   * saturated gram whole). Plan assertions collect typed nodes from the
   * optimized LOGICAL plan, not executed-plan substrings. */
@@ -101,6 +103,24 @@ class BlockingSpec extends SparkTestBase {
     assert(capped.subsetOf(uncapped), "capping must never invent a pair")
     assert(capped == Set((1L, 2L), (5L, 6L)),
       "cap keeps exactly the pairs that agree on an uncapped band")
+  }
+
+  test("dhashDedupKeep: partially-null band rows are kept as singletons, one output row per input") {
+    val hs = Seq(
+      (1L, Some(1), Some(2), Some(3), Some(4)),
+      (2L, Some(1), Some(2), Some(3), Some(4)),
+      (5L, Some(1), None, Some(3), Some(4)),   // b0 set, b1 null: the r13 vanishing row
+      (6L, None, Some(2), None, None),          // b0 null, b1 set
+      (7L, None, None, None, None)
+    ).toDF("media_id", "b0", "b1", "b2", "b3")
+    val got = Multimodal.dhashDedupKeep(hs, "media_id", maxDist = 3)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).sortBy(_._1)
+    assert(got.map(_._1).toSeq == Seq(1L, 2L, 5L, 6L, 7L),
+      "every input id appears exactly once")
+    assert(got.map { case (id, rep, _) => id -> rep }.toMap ==
+      Map(1L -> 1L, 2L -> 1L, 5L -> 5L, 6L -> 6L, 7L -> 7L),
+      "partial hashes are incomparable: singleton reps")
+    assert(got.count(_._3) == 4, "1 kept of {1,2}; 5,6,7 kept as singletons")
   }
 
   // --------------------------------------------- SimHash block pairs (probe)
@@ -351,6 +371,65 @@ class BlockingSpec extends SparkTestBase {
       d, "doc_id", col("text"), minSim = 0.0001, maxBlockSize = 4, maxWiden = 2)
     assert(tunedBlocks.count() < fixedCands,
       "engaged widening must cut the candidate space of the mega-block")
+  }
+
+  // ------------------------- edit-blocking oversized-key tagging and cap
+
+  test("editDistancePairs: broadcast oversized-key tagging == decision-map shuffle join") {
+    // an engaging corpus: 20 docs share the ("dup" | band) level-0 block
+    // (cap 4 ⇒ oversized), differing second tokens split them at level 1;
+    // plus near-identical pairs that must survive either tagging path
+    // all texts sit mid-band (~86-90 chars, band 1 of lenBand 64) so the
+    // length band never splits an intended pair
+    val filler = (1 to 20).map(i => (100L + i, s"dup w$i " + ("pad " * 20).trim))
+    val d = (Seq(
+      (1L, "dup aa " + ("pad " * 20).trim),
+      (2L, "dup aa " + ("pad " * 20).trim + " x"),
+      (3L, "uniq one " + ("pad " * 20).trim),
+      (4L, "uniq one " + ("pad " * 20).trim + " y")
+    ) ++ filler).toDF("doc_id", "text")
+    def run(budget: Int) = Dedup.editDistancePairs(
+        d, "doc_id", col("text"), minSim = 0.8, maxBlockSize = 4, maxWiden = 2,
+        broadcastKeyBudget = budget)
+      .select("id_a", "id_b").collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSet
+    val viaBroadcast = run(Dedup.OversizedKeyBroadcastBudget)
+    val viaShuffle = run(0) // budget 0 forces the decision-map fallback
+    assert(viaBroadcast == viaShuffle,
+      s"tagging strategies must agree: bcast=$viaBroadcast shuffle=$viaShuffle")
+    assert(viaBroadcast.contains((1L, 2L)) && viaBroadcast.contains((3L, 4L)),
+      "near-dup pairs survive both inside and outside the widened block")
+    // the broadcast path must NOT move the corpus through an extra
+    // exchange: its only shuffle is the blocking repartition both paths
+    // share, so it carries strictly fewer exchanges than the fallback
+    def exchanges(budget: Int): Int = {
+      val df = Dedup.editDistancePairs(
+        d, "doc_id", col("text"), minSim = 0.8, maxBlockSize = 4, maxWiden = 2,
+        broadcastKeyBudget = budget)
+      df.queryExecution.executedPlan.toString
+        .linesIterator.count(_.contains("Exchange hashpartitioning"))
+    }
+    assert(exchanges(Dedup.OversizedKeyBroadcastBudget) < exchanges(0),
+      "broadcast tagging must shed the decision-map's corpus exchange")
+  }
+
+  test("editDistancePairs: the round-14 default cap (16) never engages at the gate SF") {
+    // sf0.001/sf0.01 max level-0 block is 7 — the tuned DEFAULT must
+    // equal exact fixed blocking wherever the driver hashes results.
+    // (At sf0.1, where blocks reach 40, tuning engages and the widened
+    // pair set is still measured identical — 235 pairs either way — and
+    // the widen-aware dedup_edit oracle replays the CASE exactly.)
+    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+    val tunedDefault = Dedup.editDistancePairs(
+        docs, "doc_id", col("text"), minSim = 0.8)
+      .select("id_a", "id_b").collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSet
+    val exact = Dedup.editDistancePairs(
+        docs, "doc_id", col("text"), minSim = 0.8, maxBlockSize = 0)
+      .select("id_a", "id_b").collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(tunedDefault == exact,
+      "no gate-SF block exceeds 16: tuned default ≡ exact fixed blocking")
   }
 
   // --- BoundedPostingsAgg: the single-exchange capped postings of duplicateRuns ---

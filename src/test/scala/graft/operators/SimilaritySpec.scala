@@ -7,7 +7,8 @@ import graft.SparkTestBase
 /** The vector-search family of [[Similarity]]: IVF, PQ (one-cell IVF-PQ)
   * and IVF-PQ top-k — self-hits, recall against brute force, plan shape,
   * the residual and hierarchical builds (with the hierarchical
-  * assignment's build-side multi-probe), the degenerate corpora, and the
+  * assignment's build-side multi-probe and its zero-norm guard), the
+  * degenerate corpora, and the
   * broadcast-centroid kernels against the literal formulation they
   * replace; and the SRP-LSH near-dup pairs' default, the occupancy-derived
   * width H = ⌈log₂(n/16)⌉, which holds expected bucket occupancy constant
@@ -285,6 +286,44 @@ class SimilaritySpec extends SparkTestBase {
       s"flat-agreement must be monotone in probes: $a1, $a2, $a4")
     assert(a4 == flat.size, "probing all supers recovers flat exactly")
     assert(a2 > a1, "on this corpus P=2 must recover real P=1 parking losses")
+  }
+
+  test("CellAssignHier degrades like the flat kernel on zero-norm vectors (no crash)") {
+    // centroid 2 and vector 99 are zero-norm: cosine is NaN everywhere
+    // they appear. Pre-fix, BOTH paths crashed (the flat kernel's
+    // round(NaN·1e6).cast(long) throws CAST_OVERFLOW under Spark 4's
+    // default ANSI mode; the hier kernel's BigDecimal.valueOf(NaN) threw
+    // NumberFormatException). Now: a NaN sim never wins, an all-NaN row
+    // assigns NULL, and identity-grouped hier stays bit-equal to flat on
+    // the degenerate rows too.
+    val cents = Seq(Seq(1.0, 0.0), Seq(0.0, 0.0), Seq(0.0, 1.0))
+    val vecs = Seq(
+      (1L, Seq(1.0f, 0.1f)),
+      (99L, Seq(0.0f, 0.0f)), // zero-norm input
+      (3L, Seq(0.1f, 1.0f))
+    ).toDF("vec_id", "embedding")
+    val flat = Similarity.assignClusters(vecs, cents)
+      .select("vec_id", "cluster").collect()
+      .map(r => r.getLong(0) -> (if (r.isNullAt(1)) -1L else r.getLong(1))).toMap
+    assert(flat(99L) == -1L, "zero-norm input: NULL cluster, never arbitrary")
+    assert(flat(1L) == 1L && flat(3L) == 3L,
+      "the zero-norm CENTROID never wins; real centroids assign normally")
+    // identity grouping: hier must equal flat BIT-for-bit, degenerate
+    // rows included
+    val hierId = Similarity.assignClustersHier(vecs, cents, supers = 3)
+      .select("vec_id", "cluster").collect()
+      .map(r => r.getLong(0) -> (if (r.isNullAt(1)) -1L else r.getLong(1))).toMap
+    assert(hierId == flat, s"identity-grouped hier $hierId != flat $flat")
+    // non-identity grouping must also complete without crashing and
+    // co-assign the well-formed vectors sensibly
+    val hier2 = Similarity.assignClustersHier(vecs, cents, supers = 2)
+      .select("vec_id", "cluster").collect()
+    assert(hier2.length == 3)
+    // semanticDedup through the hier path on the same degenerate corpus
+    val kept = Similarity.semanticDedup(
+      vecs.withColumn("embedding", transform(col("embedding"), x => x.cast("float"))),
+      cents, thresholdMicro = 999999L, superCells = 2)
+    assert(kept.count() == 3, "nothing above threshold: all rows kept")
   }
 
   // --- nearDupPairsLSH's default: the occupancy-derived width ---
