@@ -1,5 +1,6 @@
 package graft.functions
 
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -185,6 +186,77 @@ case class WordShingles(child: Expression, n: Int)
   }
   override protected def withNewChildInternal(newChild: Expression): WordShingles =
     copy(child = newChild)
+}
+
+/** `set_overlap(a, b)` over two ARRAY<STRING> operands: |A∩B| divided by
+  * `over` — |A∪B| (Jaccard), |A| or |B| (containment) — as a DOUBLE, the
+  * one verify kernel of every near-dup operator. One pass per side
+  * counts each side's distinct elements into its own hash set and |A∩B|
+  * on the way; |A∪B| is |A| + |B| − |A∩B|. Duplicates and NULL elements
+  * count once, as `array_intersect`/`array_union` count them, so the
+  * ratio is bit-identical to `size(array_intersect(a, b)).cast("double")
+  * / size(array_union(a, b))` (and its |A|, |B| twins); an empty
+  * denominator is SQL NULL, never a division error. Either operand of
+  * another type fails at analysis, naming that type. */
+case class SetOverlap(left: Expression, right: Expression, over: SetOverlap.Over)
+    extends BinaryExpression with NativeBinaryCodegen {
+  override def dataType: DataType = DoubleType
+  override def nullable: Boolean = true
+  override def prettyName: String = "set_overlap"
+  override def checkInputDataTypes(): TypeCheckResult =
+    Seq(left, right).map(_.dataType).find {
+      case ArrayType(StringType, _) => false
+      case _ => true
+    } match {
+      case None => TypeCheckResult.TypeCheckSuccess
+      case Some(dt) => TypeCheckResult.TypeCheckFailure(
+        s"$prettyName takes two ARRAY<STRING> operands, not ${dt.catalogString}")
+    }
+  override protected def nullSafeEval(l: Any, r: Any): Any = {
+    val a = l.asInstanceOf[ArrayData]
+    val b = r.asInstanceOf[ArrayData]
+    val na = a.numElements()
+    val seenA = new java.util.HashSet[UTF8String](math.max(16, na * 2))
+    var nullA = false
+    var i = 0
+    while (i < na) {
+      if (a.isNullAt(i)) nullA = true else seenA.add(a.getUTF8String(i))
+      i += 1
+    }
+    val nb = b.numElements()
+    val seenB = new java.util.HashSet[UTF8String](math.max(16, nb * 2))
+    var nullB = false
+    var inter = 0
+    i = 0
+    while (i < nb) {
+      if (b.isNullAt(i)) {
+        if (!nullB && nullA) inter += 1
+        nullB = true
+      } else {
+        val s = b.getUTF8String(i)
+        if (seenB.add(s) && seenA.contains(s)) inter += 1
+      }
+      i += 1
+    }
+    val sizeA = seenA.size + (if (nullA) 1 else 0)
+    val sizeB = seenB.size + (if (nullB) 1 else 0)
+    val den = over match {
+      case SetOverlap.Union => sizeA + sizeB - inter
+      case SetOverlap.LeftSide => sizeA
+      case SetOverlap.RightSide => sizeB
+    }
+    if (den == 0) null else java.lang.Double.valueOf(inter.toDouble / den)
+  }
+  override protected def withNewChildrenInternal(l: Expression, r: Expression): SetOverlap =
+    copy(left = l, right = r)
+}
+
+object SetOverlap {
+  /** The denominator of [[SetOverlap]]'s ratio. */
+  sealed trait Over extends Serializable
+  case object Union extends Over
+  case object LeftSide extends Over
+  case object RightSide extends Over
 }
 
 /** Single-pass text statistics for the quality-scoring pipeline:

@@ -7,7 +7,7 @@ import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
 import org.apache.spark.storage.StorageLevel
 
-import graft.functions.{MinhashSig, Simhash64}
+import graft.functions.{MinhashSig, SetOverlap, Simhash64}
 
 import scala.concurrent.Await
 import scala.concurrent.duration.DurationInt
@@ -92,10 +92,18 @@ object Dedup {
   def wordShingles(text: Column, n: Int): Column =
     ColumnBridge.column(graft.functions.WordShingles(ColumnBridge.expression(text), n))
 
-  /** Exact Jaccard similarity of two distinct-element array columns:
-    * |A∩B| / |A∪B| (an exact integer ratio — reproducible bit-for-bit). */
-  def jaccard(a: Column, b: Column): Column =
-    size(array_intersect(a, b)).cast("double") / size(array_union(a, b))
+  /** Exact Jaccard similarity |A∩B| / |A∪B| of two ARRAY<STRING> columns
+    * (shingle sets from [[wordShingles]]), a DOUBLE: an exact integer
+    * ratio, reproducible bit-for-bit, with duplicate and NULL elements
+    * counted once as Spark's set functions count them. An empty union
+    * (both documents shorter than n words) is NULL, so a filter on it
+    * keeps no pair; a NULL operand is NULL; an operand of another type
+    * fails at analysis. Native one-pass kernel
+    * (graft.functions.SetOverlap), shared with [[pairwiseContainment]]. */
+  def jaccard(a: Column, b: Column): Column = overlap(a, b, SetOverlap.Union)
+
+  private def overlap(a: Column, b: Column, over: SetOverlap.Over): Column =
+    ColumnBridge.column(SetOverlap(ColumnBridge.expression(a), ColumnBridge.expression(b), over))
 
   /** Scoped shingle cache for iterative dedup pipelines (several passes
     * over one corpus): persists the shingle frame, hands it to `f`, and
@@ -705,7 +713,8 @@ object Dedup {
   // ------------------------------------------------------------ n-gram pairs
 
   /** Exact n-gram jaccard for an explicit pair list (deterministic
-    * pair-similarity surface; used for adjacent-id document pairs). */
+    * pair-similarity surface; used for adjacent-id document pairs). A
+    * pair of documents both shorter than n words gets NULL `j`. */
   def pairwiseJaccard(docs: DataFrame, id: String, text: Column, n: Int,
                       pairs: DataFrame): DataFrame = {
     val shingled = docs.select(col(id), wordShingles(text, n).as("sh"))
@@ -764,19 +773,19 @@ object Dedup {
     * containment c(a→b) = 1. The training-data use is exactly that
     * asymmetry — drop the CONTAINED side, keep the superset document.
     * Empty shingle sets (docs shorter than n words) yield NULL, never a
-    * division error. Same scale shape as [[pairwiseJaccard]]: the pair
-    * list drives two hash joins; shingles attach per side, nothing
-    * corpus-sized self-joins. */
+    * division error; both ratios come from [[jaccard]]'s kernel
+    * (graft.functions.SetOverlap). Same scale shape as
+    * [[pairwiseJaccard]]: the pair list drives two hash joins; shingles
+    * attach per side, nothing corpus-sized self-joins. */
   def pairwiseContainment(docs: DataFrame, id: String, text: Column, n: Int,
                           pairs: DataFrame): DataFrame = {
     val shingled = docs.select(col(id), wordShingles(text, n).as("sh"))
     val sa = shingled.select(col(id).as("id_a"), col("sh").as("sh_a"))
     val sb = shingled.select(col(id).as("id_b"), col("sh").as("sh_b"))
-    val inter = size(array_intersect(col("sh_a"), col("sh_b"))).cast("double")
     pairs.join(sa, "id_a").join(sb, "id_b")
       .select(col("id_a"), col("id_b"),
-        when(size(col("sh_a")) > 0, inter / size(col("sh_a"))).as("c_ab"),
-        when(size(col("sh_b")) > 0, inter / size(col("sh_b"))).as("c_ba"))
+        overlap(col("sh_a"), col("sh_b"), SetOverlap.LeftSide).as("c_ab"),
+        overlap(col("sh_a"), col("sh_b"), SetOverlap.RightSide).as("c_ba"))
   }
 
   /** Ceiling on TOTAL oversized keys the tuner's tagging path may

@@ -32,6 +32,11 @@ class KernelCodegenSpec extends SparkTestBase {
         col2(TextStats(expr2(col("text")), Set("the", "a"))).as("st"),
         col2(RollingFingerprint(expr2(col("text")))).as("fp"))
       assert(r.count() > 0)
+      // a set and its reverse overlap fully; the filter keeps the kernel
+      // in the plan (a bare count() prunes an unused projection)
+      val rev = expr2(reverse(operators.Dedup.wordShingles(col("text"), 3)))
+      assert(docs.select(col2(SetOverlap(sh, rev, SetOverlap.Union)).as("ov"))
+        .where(col("ov") === 1.0).count() > 0)
       val books = Array.tabulate(8)(_ => Array.tabulate(4)(k => Array.fill(8)(k * 0.1)))
       val pq = emb.select(col2(PqEncode(vec, books)).as("code"), col2(PqLut(vec, books)).as("lut"))
         .select(col2(PqAdc(expr2(col("code")), expr2(col("lut")), 4)).as("adc"))

@@ -11,16 +11,22 @@ import org.apache.spark.sql.catalyst.plans.logical.Join
   * SimHash block pairs and fixed-width SRP (bounded keys: a driver
   * probe, then a NOT-IN only when engaged), derived-width SRP
   * (semi-join) and dHash bands (probe), whose dedup keeps a row with a
-  * null band as a singleton; the edit-blocking tuner's engagement floor
-  * (re-keying must not engage when the verify work it saves is cheaper
-  * than the O(n) re-key machinery), its two oversized-key tagging paths
-  * and its default cap at the gate SF; and the capped
+  * null band as a singleton and one min-id rep per class; the
+  * edit-blocking tuner's engagement floor (re-keying must not engage
+  * when the verify work it saves is cheaper than the O(n) re-key
+  * machinery), its two oversized-key tagging paths, its default cap at
+  * the gate SF and its widen-only drops; the capped
   * postings of `duplicateRuns` (a bounded-state aggregate that drops a
-  * saturated gram whole). Plan assertions collect typed nodes from the
-  * optimized LOGICAL plan, not executed-plan substrings. */
+  * saturated gram whole); and the exact verify every near-dup operator
+  * shares, which keeps no pair of documents shorter than n words. Plan
+  * assertions collect typed nodes from the optimized LOGICAL plan, not
+  * executed-plan substrings. */
 class BlockingSpec extends SparkTestBase {
 
   import spark.implicits._
+  private implicit def sp: org.apache.spark.sql.SparkSession = spark
+
+  private def docs = spark.read.parquet(s"$sfDir/documents.parquet")
 
   private def leftSemiCount(df: DataFrame): Int =
     df.queryExecution.optimizedPlan.collect {
@@ -121,6 +127,84 @@ class BlockingSpec extends SparkTestBase {
       Map(1L -> 1L, 2L -> 1L, 5L -> 5L, 6L -> 6L, 7L -> 7L),
       "partial hashes are incomparable: singleton reps")
     assert(got.count(_._3) == 4, "1 kept of {1,2}; 5,6,7 kept as singletons")
+  }
+
+  test("dhashDedupKeep equals brute-force min-id-per-cluster on hand-built hashes") {
+    // exact-dup class {1,2,3} (identical hashes), near-dup 4 (hamming 1
+    // to the class hash), far hash 9, and an undecodable row 7 (null
+    // bands) that must be kept as its own singleton
+    val hs = Seq(
+      (1L, Some(1), Some(2), Some(3), Some(4)),
+      (2L, Some(1), Some(2), Some(3), Some(4)),
+      (3L, Some(1), Some(2), Some(3), Some(4)),
+      (4L, Some(1), Some(2), Some(3), Some(5)), // band 3: 4^5 = 1 bit
+      (9L, Some(8), Some(8), Some(8), Some(8)),
+      (7L, None, None, None, None)
+    ).toDF("media_id", "b0", "b1", "b2", "b3")
+    val got = Multimodal.dhashDedupKeep(hs, "media_id", maxDist = 3)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSet
+    assert(got == Set(
+      (1L, 1L, true), (2L, 1L, false), (3L, 1L, false), (4L, 1L, false),
+      (9L, 9L, true), (7L, 7L, true)))
+  }
+
+  test("dhashDedupKeep output is linear and consistent: one row per id, one keep per cluster") {
+    val media = Multimodal.pngMedia(
+      docs, "doc_id",
+      lit(16) + col("n_chars") % 64, lit(16) + (col("n_chars") * 7) % 48,
+      gradient = true)
+    val hashes = Multimodal.imageDhash(media)
+    val keep = Multimodal.dhashDedupKeep(hashes, "media_id", maxDist = 3)
+    val rows = keep.collect().map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2)))
+    assert(rows.length == docs.count(), "exactly one keep row per input image")
+    assert(rows.map(_._1).distinct.length == rows.length, "ids unique")
+    val byCluster = rows.groupBy(_._2)
+    byCluster.foreach { case (rep, members) =>
+      assert(members.count(_._3) == 1, s"cluster $rep must keep exactly one")
+      assert(members.filter(_._3).head._1 == rep, "the kept id is the rep")
+      assert(members.map(_._1).min == rep, "rep is the cluster min id")
+    }
+    // consistency with the pair surface: every near-dup pair must land in
+    // the same cluster (the keep reduce can merge transitively, never split)
+    val pairs = Multimodal.dhashNearDups(hashes, "media_id", maxDist = 3)
+      .select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1)))
+    val repOf = rows.map(t => t._1 -> t._2).toMap
+    pairs.foreach { case (a, b) =>
+      assert(repOf(a) == repOf(b), s"pair ($a,$b) split across clusters")
+    }
+  }
+
+  test("dhashDedupKeep on a mega duplicate class stays linear in the class (pairs would be quadratic)") {
+    // 200 identical hashes + 1 near-dup: the pair surface is C(200,2)+200
+    // rows; the keep surface is 201 rows and only ONE rep enters the join
+    val mega = (1L to 200L).map(i => (i, 10, 20, 30, 40)) :+ ((201L, 10, 20, 30, 41))
+    val hs = mega.toDF("media_id", "b0", "b1", "b2", "b3")
+    val keep = Multimodal.dhashDedupKeep(hs, "media_id", maxDist = 3)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2)))
+    assert(keep.length == 201)
+    assert(keep.forall(_._2 == 1L), "everything clusters to rep 1")
+    assert(keep.count(_._3) == 1 && keep.find(_._3).get._1 == 1L)
+  }
+
+  test("capping only splits or shrinks reported clusters, never merges or invents") {
+    // same degenerate-band fixture as above, pushed through the keep
+    // reduce: each capped cluster must be a SUBSET of an uncapped cluster
+    // (fewer candidate edges can only refine the partition)
+    val hs = Seq(
+      (1L, 100, 7, 1, 1), (2L, 100, 7, 2, 1),
+      (3L, 100, 20, 30, 40), (4L, 100, 21, 31, 41),
+      (5L, 100, 50, 60, 70), (6L, 100, 51, 61, 70)
+    ).toDF("media_id", "b0", "b1", "b2", "b3")
+    def clusters(cap: Int): Map[Long, Set[Long]] =
+      Multimodal.dhashDedupKeep(hs, "media_id", maxDist = 3, maxBucketSize = cap)
+        .collect().map(r => (r.getLong(0), r.getLong(1)))
+        .groupBy(_._2).map { case (rep, m) => rep -> m.map(_._1).toSet }
+    val un = clusters(0).values.toSeq
+    val capped = clusters(4).values.toSeq
+    capped.foreach { c =>
+      assert(un.exists(u => c.subsetOf(u)),
+        s"capped cluster $c is not contained in any uncapped cluster $un")
+    }
   }
 
   // --------------------------------------------- SimHash block pairs (probe)
@@ -432,6 +516,97 @@ class BlockingSpec extends SparkTestBase {
       "no gate-SF block exceeds 16: tuned default ≡ exact fixed blocking")
   }
 
+  test("editDistancePairs: self-tuning default equals fixed blocking at the bench SF") {
+    def pairs(cap: Int) = Dedup.editDistancePairs(
+        docs, "doc_id", col("text"), minSim = 0.8, maxBlockSize = cap)
+      .select("id_a", "id_b").collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(pairs(256) == pairs(0),
+      "no sf0.001 block exceeds the default cap, so the pair sets must be identical")
+  }
+
+  test("editDistancePairs: oversized blocks re-key wider; kept pairs agree through the widened prefix") {
+    // 14 filler docs bloat the ("the" | band) level-0 block past cap 4
+    // AND past the round-15 engagement floor (largest 18 > 4x cap = 16,
+    // excess pairs 153 > 4n = 72, so re-keying genuinely engages); the
+    // true near-dup pair (1,2) agrees on the first TWO tokens and must
+    // survive re-blocking; (3,4) differs at token 2 (still sim >= 0.8 —
+    // only 4 of 46 chars differ) and is the documented drop
+    val fill = (10L to 23L).map(i =>
+      (i, s"the filler$i zzzz yyyy xxxx wwww vvvv uuuu $i"))
+    val d = (Seq(
+      (1L, "the alpha beta gamma delta epsilon zeta etaX"),
+      (2L, "the alpha beta gamma delta epsilon zeta etaY"),
+      (3L, "the aaaa cccc dddd eeee ffff gggg hhhh iiii j"),
+      (4L, "the bbbb cccc dddd eeee ffff gggg hhhh iiii j")
+    ) ++ fill).toDF("doc_id", "text")
+    def run(cap: Int) = Dedup.editDistancePairs(
+        d, "doc_id", col("text"), minSim = 0.8, maxBlockSize = cap, maxWiden = 3)
+      .select("id_a", "id_b").collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSet
+    val fixed = run(0)
+    val tuned = run(4)
+    assert(fixed.contains((1L, 2L)) && fixed.contains((3L, 4L)),
+      s"fixture sanity: both pairs clear minSim under fixed blocking: $fixed")
+    assert(tuned.subsetOf(fixed), "re-blocking must never invent a pair")
+    assert(tuned.contains((1L, 2L)),
+      "a pair agreeing through the widened prefix must survive")
+    assert(!tuned.contains((3L, 4L)),
+      "a pair disagreeing inside the widened prefix is the documented drop")
+    // and every dropped pair disagrees within the first two tokens
+    val texts = d.collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+    (fixed -- tuned).foreach { case (a, b) =>
+      val ta = texts(a).split(" ").take(2).mkString(" ")
+      val tb = texts(b).split(" ").take(2).mkString(" ")
+      assert(ta != tb, s"dropped pair ($a,$b) agrees on the widened prefix — must not drop")
+    }
+  }
+
+  test("property: tuner pairs are a subset of fixed; drops always disagree inside the widened prefix") {
+    // randomized corpora over a tiny vocabulary (forces shared prefixes
+    // and near-dup mass), deterministic seed. Invariants:
+    //   1. tuned ⊆ fixed (re-blocking never invents a pair);
+    //   2. a dropped pair disagrees somewhere within the first
+    //      blockTokens+maxWiden tokens — rows agreeing on the whole
+    //      widened prefix share every level's key and can never separate;
+    //   3. cap ≥ corpus size ⇒ tuned == fixed exactly.
+    val vocab = Vector("the", "cat", "dog", "sat", "ran", "x1", "x2", "x3")
+    val rnd = new scala.util.Random(0xC0FFEE)
+    for (trial <- 1 to 4) {
+      val docs = (1L to 60L).map { i =>
+        val n = 6 + rnd.nextInt(4)
+        (i, Seq.fill(n)(vocab(rnd.nextInt(vocab.size))).mkString(" "))
+      }.toDF("doc_id", "text")
+      def pairs(cap: Int) = Dedup.editDistancePairs(
+          docs, "doc_id", col("text"), minSim = 0.7, maxBlockSize = cap, maxWiden = 3)
+        .select("id_a", "id_b").collect()
+        .map(r => (r.getLong(0), r.getLong(1))).toSet
+      val fixed = pairs(0)
+      val tuned = pairs(4)
+      assert(tuned.subsetOf(fixed), s"trial $trial: tuner invented pairs")
+      val texts = docs.collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+      (fixed -- tuned).foreach { case (a, b) =>
+        val pa = texts(a).split(" ").take(4).mkString(" ")
+        val pb = texts(b).split(" ").take(4).mkString(" ")
+        assert(pa != pb,
+          s"trial $trial: dropped pair ($a,$b) agrees through the widened prefix")
+      }
+      assert(pairs(10000) == fixed, s"trial $trial: a never-engaging cap must be a no-op")
+    }
+  }
+
+  test("editDistancePairs: final widening level assigns unconditionally (widen-only, never drop)") {
+    // every doc identical except the last char: blocks stay oversized at
+    // EVERY level (same prefix at any width, same length band) — the
+    // final level must still pair them all rather than dropping the block
+    val d = (1L to 8L).map(i => (i, s"same same same same same same same $i"))
+      .toDF("doc_id", "text")
+    val got = Dedup.editDistancePairs(
+        d, "doc_id", col("text"), minSim = 0.8, maxBlockSize = 2, maxWiden = 2)
+      .select("id_a", "id_b").count()
+    assert(got == 8L * 7 / 2, "true near-dup mass must never be dropped by the tuner")
+  }
+
   // --- BoundedPostingsAgg: the single-exchange capped postings of duplicateRuns ---
 
   test("capped postings: BoundedPostingsAgg == the retired count+semi-join+collect_list form") {
@@ -497,5 +672,42 @@ class BlockingSpec extends SparkTestBase {
         .select("d1", "d2").collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
     assert(pairs(docs) == pairs(docs.repartition(7)),
       "saturation is a pure function of the group count, not the partitioning")
+  }
+
+  // ----------------------------------- exact verify (the SetOverlap kernel)
+
+  test("short documents: every near-dup verify returns, and an empty union forms no pair") {
+    // 1 and 2 are shorter than n = 3 words (empty shingle sets, equal
+    // empty signatures and sketches, so they collide in every bucket);
+    // 3 and 4 share 2 of 3 distinct shingles
+    val d = Seq((1L, "a b"), (2L, "c"), (3L, "x y z w"), (4L, "x y z w q"))
+      .toDF("doc_id", "text")
+    val short = Set(1L, 2L)
+    def triples(df: DataFrame): Set[(Long, Long, Option[Double])] =
+      df.collect().map(r => (r.getLong(0), r.getLong(1),
+        if (r.isNullAt(2)) None else Some(r.getDouble(2)))).toSet
+    def check(op: String, got: Set[(Long, Long, Option[Double])]): Unit = {
+      assert(!got.exists { case (a, b, j) => (short(a) || short(b)) && j.exists(_ > 0) },
+        s"$op: a short document formed a pair: $got")
+      got.collect { case (3L, 4L, j) => j }.foreach(j =>
+        assert(j == Some(2.0 / 3), s"$op: (3,4) must keep j = 2/3, got $j"))
+    }
+    val mh = triples(Dedup.minhashNearDups(d, "doc_id", col("text"), 3, 0.5))
+    check("minhashNearDups", mh)
+    assert(mh.map(t => (t._1, t._2)) == Set((3L, 4L)), s"minhashNearDups: $mh")
+    val sh = triples(Dedup.simhashNearDups(d, "doc_id", col("text"), 3, 0.5))
+    check("simhashNearDups", sh)
+    val inc = triples(Dedup.incrementalNearDups(d, d, "doc_id", col("text"), 3, 0.5))
+    check("incrementalNearDups", inc)
+    assert(!inc.exists(t => short(t._1) || short(t._2)), s"incrementalNearDups: $inc")
+    val pairs = Seq((1L, 2L), (3L, 4L)).toDF("id_a", "id_b")
+    val pj = triples(Dedup.pairwiseJaccard(d, "doc_id", col("text"), 3, pairs))
+    check("pairwiseJaccard", pj)
+    assert(pj == Set((1L, 2L, None), (3L, 4L, Some(2.0 / 3))), s"pairwiseJaccard: $pj")
+    val pc = Dedup.pairwiseContainment(d, "doc_id", col("text"), 3, pairs)
+      .collect().map(r => (r.getLong(0), r.getLong(1),
+        Option(r.get(2)), Option(r.get(3)))).toSet
+    assert(pc == Set((1L, 2L, None, None), (3L, 4L, Some(1.0), Some(2.0 / 3))),
+      s"pairwiseContainment: $pc")
   }
 }

@@ -5,11 +5,14 @@ import org.apache.spark.sql.functions._
 
 /** Connected components over near-dup pairs ([[Dedup.nearDupClusters]]):
   * the pairs pipeline is evaluated once on the driver-local path and on
-  * the overflow-to-fixpoint fallback, and every working checkpoint is
-  * released on the non-convergence throw as on the success paths. */
+  * the overflow-to-fixpoint fallback, every working checkpoint is
+  * released on the non-convergence throw as on the success paths, and
+  * the driver-local union-find lands the fixpoint's labels. */
 class ComponentsSpec extends SparkTestBase {
 
   import spark.implicits._
+
+  private def docs = spark.read.parquet(s"$sfDir/documents.parquet")
 
   test("nearDupClusters evaluates the pairs pipeline ONCE on the overflow→fallback path") {
     // 60 ids, complete graph: 1770 edges > localLimit=100 ≥ n=60, so the
@@ -78,5 +81,33 @@ class ComponentsSpec extends SparkTestBase {
       Checkpoints.release(out)
       assert((persisted() -- before).isEmpty)
     }
+  }
+
+  test("nearDupClusters: driver-local union-find == distributed fixpoint, fallback intact") {
+    // real pair surface: minhash near-dups over the corpus
+    val d = docs
+    val pairs = Dedup.minhashNearDups(d, "doc_id", col("text"), 3, 0.8)
+      .select(col("id_a"), col("id_b"))
+    val ids = d.select(col("doc_id"))
+    def labels(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
+    // localLimit=0 forces the distributed fixpoint
+    val dist = labels(Dedup.nearDupClusters(ids, "doc_id", pairs, localLimit = 0))
+    val local = labels(Dedup.nearDupClusters(ids, "doc_id", pairs))
+    assert(local == dist, "driver-local union-find must reproduce the fixpoint labels")
+    // a nonzero budget the edge set overflows falls back to the fixpoint
+    assert(pairs.count() > 1)
+    val fb = labels(Dedup.nearDupClusters(ids, "doc_id", pairs, localLimit = 1))
+    assert(fb == dist)
+    // deep chain (diameter 300 — past the default 2^10-safe regime is
+    // exercised in dhashDedupKeep; here the point is exact equality on a
+    // long path, the fixpoint's worst shape)
+    val chainIds = (1L to 300L).toDF("id")
+    val chainPairs = (1L until 300L).map(i => (i, i + 1)).toDF("id_a", "id_b")
+    val lc = labels(Dedup.nearDupClusters(chainIds, "id", chainPairs))
+    assert(lc.forall(_._2 == 1L), "one chain, one min-id cluster")
+    val lf = labels(Dedup.nearDupClusters(chainIds, "id", chainPairs,
+      maxIters = 40, jumps = 2, localLimit = 0))
+    assert(lf == lc, "the fixpoint must land the driver-local labels on the chain")
   }
 }

