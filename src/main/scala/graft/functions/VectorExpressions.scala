@@ -5,6 +5,8 @@ import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, 
 
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.Platform
+import org.apache.spark.unsafe.array.ByteArrayMethods
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Tight-loop kernels for the hot paths of similarity and sketching.
@@ -71,28 +73,37 @@ case class VecDot(left: Expression, right: Expression)
     copy(left = l, right = r)
 }
 
-/** MinHash signature of an ARRAY<STRING> shingle set: one 32-bit murmur
-  * base hash per shingle (identical to Spark's `hash()`), K affine
-  * permutations, min per permutation — all in a single pass. */
-case class MinhashSig(child: Expression, a: Array[Long], b: Array[Long])
+/** MinHash signature of a shingle set: one 32-bit murmur base hash per
+  * shingle (identical to Spark's `hash()`), K affine permutations, min per
+  * permutation — all in a single pass. The operand's type picks the
+  * shingles ([[ByteRanges]]): the elements of an ARRAY<STRING>, or the
+  * word `n`-grams of a STRING, hashed in place. A minimum does not change
+  * when a value repeats, so the text form needs no distinct set and
+  * equals `minhash_sig(word_shingles(text, n))` element for element (all
+  * `Long.MaxValue` for a text shorter than `n` words). NULL elements
+  * contribute nothing. */
+case class MinhashSig(child: Expression, a: Array[Long], b: Array[Long], n: Int = 0)
     extends UnaryExpression with NativeUnaryCodegen {
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "minhash_sig"
+  override def checkInputDataTypes(): TypeCheckResult =
+    ByteRanges.checkOperands(prettyName, Seq(child), n)
   override protected def nullSafeEval(input: Any): Any = {
-    val shingles = input.asInstanceOf[ArrayData]
+    val shingles = ByteRanges(input, n)
     val k = a.length
     val mins = Array.fill(k)(Long.MaxValue)
-    val n = shingles.numElements()
+    val count = shingles.count
     var i = 0
-    while (i < n) {
-      val s = shingles.getUTF8String(i)
-      val h = org.apache.spark.unsafe.hash.Murmur3_x86_32
-        .hashUnsafeBytes(s.getBaseObject, s.getBaseOffset, s.numBytes(), 42) & 0xFFFFFFFFL
-      var j = 0
-      while (j < k) {
-        val v = h * a(j) + b(j)
-        if (v < mins(j)) mins(j) = v
-        j += 1
+    while (i < count) {
+      if (shingles.load(i)) {
+        val h = org.apache.spark.unsafe.hash.Murmur3_x86_32.hashUnsafeBytes(
+          shingles.base, shingles.offset, shingles.length, 42) & 0xFFFFFFFFL
+        var j = 0
+        while (j < k) {
+          val v = h * a(j) + b(j)
+          if (v < mins(j)) mins(j) = v
+          j += 1
+        }
       }
       i += 1
     }
@@ -136,110 +147,232 @@ case class Simhash64(child: Expression)
     copy(child = newChild)
 }
 
+/** The byte ranges a near-dup kernel reads from one operand, through a
+  * cursor: [[load]] points `base`/`offset`/`length` at range `i` in
+  * place, with no copy and no per-range UTF8String. An ARRAY<STRING>
+  * gives its elements ([[ArrayElements]]), a STRING its word n-grams
+  * ([[NgramWindows]]), so [[MinhashSig]], [[SetOverlap]] and
+  * [[WordShingles]] each read either source through one loop. */
+private[functions] sealed abstract class ByteRanges {
+  var base: AnyRef = _
+  var offset: Long = 0L
+  var length: Int = 0
+
+  /** The number of ranges. */
+  def count: Int
+
+  /** Points the cursor at range `i`; false for a NULL array element. */
+  def load(i: Int): Boolean
+
+  /** A fresh string holding a copy of the current range's bytes. */
+  def copyString(): UTF8String = {
+    val bytes = new Array[Byte](length)
+    Platform.copyMemory(base, offset, bytes, Platform.BYTE_ARRAY_OFFSET, length)
+    UTF8String.fromBytes(bytes)
+  }
+}
+
+private[functions] object ByteRanges {
+
+  /** The ranges of one evaluated operand: a STRING's word `n`-grams, or
+    * an ARRAY<STRING>'s elements. */
+  def apply(v: Any, n: Int): ByteRanges = v match {
+    case s: UTF8String => new NgramWindows(s, n)
+    case a: ArrayData => new ArrayElements(a)
+  }
+
+  /** The analysis check of a kernel's operands: every operand is
+    * ARRAY<STRING>, or every operand is STRING with an n-gram width
+    * `n >= 1`; the first operand's type says which. */
+  def checkOperands(name: String, operands: Seq[Expression], n: Int): TypeCheckResult = {
+    val text = operands.head.dataType == StringType
+    val what = if (text) "STRING" else "ARRAY<STRING>"
+    val arity = if (operands.length == 1) s"an $what operand" else s"two $what operands"
+    operands.map(_.dataType).find {
+      case StringType => !text
+      case ArrayType(StringType, _) => text
+      case _ => true
+    } match {
+      case Some(dt) => TypeCheckResult.TypeCheckFailure(s"$name takes $arity, not ${dt.catalogString}")
+      case None if text && n < 1 => TypeCheckResult.TypeCheckFailure(
+        s"$name over STRING operands needs an n-gram width n >= 1, not $n")
+      case None => TypeCheckResult.TypeCheckSuccess
+    }
+  }
+}
+
+/** The elements of an ARRAY<STRING> as [[ByteRanges]]. */
+private[functions] final class ArrayElements(a: ArrayData) extends ByteRanges {
+  val count: Int = a.numElements()
+  def load(i: Int): Boolean = !a.isNullAt(i) && {
+    val s = a.getUTF8String(i)
+    base = s.getBaseObject; offset = s.getBaseOffset; length = s.numBytes()
+    true
+  }
+}
+
+/** The word n-grams of a single-space-tokenized text as [[ByteRanges]]
+  * of its UTF8String: `n` consecutive tokens joined by single spaces ARE
+  * a substring of the text, so window k runs from token k's first byte
+  * to the byte before the space that ends token k+n−1. Empty tokens from
+  * leading, trailing and adjacent spaces count, as `split(text, " ")`
+  * counts them; a text of fewer than `n` tokens has no window, and a
+  * repeated n-gram is a repeated window. ' ' (0x20) never occurs inside
+  * a multibyte UTF-8 sequence, so the scan reads bytes. */
+private[functions] final class NgramWindows(s: UTF8String, n: Int) extends ByteRanges {
+  base = s.getBaseObject
+  private val textOffset = s.getBaseOffset
+  // starts(t) is token t's first byte, relative to textOffset; a sentinel
+  // one past the end closes the last token
+  private val starts: Array[Int] = {
+    val len = s.numBytes()
+    var nTokens = 1
+    var i = 0
+    while (i < len) { if (Platform.getByte(base, textOffset + i) == ' ') nTokens += 1; i += 1 }
+    val st = new Array[Int](nTokens + 1)
+    var t = 1
+    i = 0
+    while (i < len) {
+      if (Platform.getByte(base, textOffset + i) == ' ') { st(t) = i + 1; t += 1 }
+      i += 1
+    }
+    st(nTokens) = len + 1
+    st
+  }
+  val count: Int = math.max(0, starts.length - n)
+  def load(k: Int): Boolean = {
+    offset = textOffset + starts(k)
+    length = starts(k + n) - 1 - starts(k)
+    true
+  }
+}
+
+/** An open-addressing set of byte ranges keyed on each range's Murmur3
+  * hash; a hash match counts only after the bytes compare equal, so the
+  * set is exact. Each slot records which sides hold its range (bit 1:
+  * left, bit 2: right). Sized once for `expected` ranges at a load of at
+  * most 2/3, so it never rehashes. */
+private[functions] final class RangeTable(expected: Int) {
+  private val mask = { var c = 16; while (c * 2 < expected * 3) c <<= 1; c - 1 }
+  private val bases = new Array[AnyRef](mask + 1)
+  private val offsets = new Array[Long](mask + 1)
+  private val lengths = new Array[Int](mask + 1)
+  private val hashes = new Array[Int](mask + 1)
+  private val sides = new Array[Byte](mask + 1) // 0: an empty slot
+
+  /** Adds the cursor's current range for `side` (1 or 2) and returns the
+    * sides that held it before: 0 for a range new to the table. */
+  def mark(r: ByteRanges, side: Int): Int = {
+    val h = org.apache.spark.unsafe.hash.Murmur3_x86_32.hashUnsafeBytes(r.base, r.offset, r.length, 42)
+    var i = h & mask
+    while (sides(i) != 0) {
+      if (hashes(i) == h && lengths(i) == r.length &&
+          ByteArrayMethods.arrayEquals(bases(i), offsets(i), r.base, r.offset, r.length)) {
+        val before = sides(i).toInt
+        sides(i) = (before | side).toByte
+        return before
+      }
+      i = (i + 1) & mask
+    }
+    bases(i) = r.base; offsets(i) = r.offset; lengths(i) = r.length
+    hashes(i) = h; sides(i) = side.toByte
+    0
+  }
+}
+
 /** Distinct word n-gram shingles of a single-space-tokenized text column —
   * the native kernel behind `Dedup.wordShingles`. Semantics identical to
   * the HOF formulation `array_distinct(transform(sequence(...),
   * i => concat_ws(" ", slice(split(text, " "), i+1, n))))` (empty tokens
   * from adjacent/leading/trailing spaces preserved, first-occurrence
-  * order), but one pass over the UTF-8 bytes with zero string building:
-  * consecutive tokens joined by single spaces ARE a substring of the
-  * input, so each shingle is a byte-range slice. The HOF pipeline
-  * evaluates interpreted closures per element and cost ~1.8s per pass at
-  * sf0.1; this kernel makes re-shingling cheaper than caching, which is
-  * what lets the dedup operators stay persist-free (no block-manager
-  * leak, no 100 TB shingle cache). */
+  * order), but one pass over the UTF-8 bytes: the windows are
+  * [[NgramWindows]] byte ranges of the input, a [[RangeTable]] sized from
+  * the window count keeps the first of each, and only a distinct window
+  * is copied into a string. The near-dup signature and verify kernels
+  * read the same windows from the text and build no shingle array; this
+  * one serves the callers that need the set itself (SimHash votes,
+  * distinct-n-gram counts, the SQL `word_shingles`). */
 case class WordShingles(child: Expression, n: Int)
     extends UnaryExpression with NativeUnaryCodegen {
   require(n >= 1, "shingle width must be >= 1")
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
   override def prettyName: String = "word_shingles"
   override protected def nullSafeEval(input: Any): Any = {
-    val s = input.asInstanceOf[UTF8String]
-    val bytes = s.getBytes // ' ' (0x20) never occurs inside a UTF-8 sequence
-    val len = bytes.length
-    // token start offsets (token i spans [starts(i), starts(i+1) - 2 + 1))
-    var nTokens = 1
-    var i = 0
-    while (i < len) { if (bytes(i) == ' ') nTokens += 1; i += 1 }
-    if (nTokens < n) return new GenericArrayData(Array.empty[Any])
-    val starts = new Array[Int](nTokens + 1)
-    var t = 1
-    i = 0
-    while (i < len) {
-      if (bytes(i) == ' ') { starts(t) = i + 1; t += 1 }
-      i += 1
-    }
-    starts(nTokens) = len + 1
-    val seen = new java.util.LinkedHashSet[UTF8String]()
+    val windows = new NgramWindows(input.asInstanceOf[UTF8String], n)
+    val count = windows.count
+    val seen = new RangeTable(count)
+    val out = new Array[Any](count)
+    var size = 0
     var k = 0
-    while (k <= nTokens - n) {
-      val from = starts(k)
-      val until = starts(k + n) - 1 // drop the trailing separator
-      seen.add(UTF8String.fromBytes(bytes, from, until - from))
+    while (k < count) {
+      windows.load(k)
+      if (seen.mark(windows, 1) == 0) { out(size) = windows.copyString(); size += 1 }
       k += 1
     }
-    val out = new Array[Any](seen.size)
-    val it = seen.iterator()
-    var j = 0
-    while (it.hasNext) { out(j) = it.next(); j += 1 }
-    new GenericArrayData(out)
+    if (size == count) new GenericArrayData(out)
+    else {
+      val distinct = new Array[Any](size)
+      System.arraycopy(out, 0, distinct, 0, size)
+      new GenericArrayData(distinct)
+    }
   }
   override protected def withNewChildInternal(newChild: Expression): WordShingles =
     copy(child = newChild)
 }
 
-/** `set_overlap(a, b)` over two ARRAY<STRING> operands: |A∩B| divided by
-  * `over` — |A∪B| (Jaccard), |A| or |B| (containment) — as a DOUBLE, the
-  * one verify kernel of every near-dup operator. One pass per side
-  * counts each side's distinct elements into its own hash set and |A∩B|
+/** `set_overlap(a, b)`: |A∩B| divided by `over` — |A∪B| (Jaccard), |A| or
+  * |B| (containment) — as a DOUBLE, the one verify kernel of every
+  * near-dup operator. The operands' type picks the sets ([[ByteRanges]]):
+  * the elements of two ARRAY<STRING>s, or the word `n`-grams of two
+  * STRINGs read in place, so the verify needs no shingle array. One
+  * [[RangeTable]] collects both sides' distinct ranges and counts |A∩B|
   * on the way; |A∪B| is |A| + |B| − |A∩B|. Duplicates and NULL elements
   * count once, as `array_intersect`/`array_union` count them, so the
   * ratio is bit-identical to `size(array_intersect(a, b)).cast("double")
-  * / size(array_union(a, b))` (and its |A|, |B| twins); an empty
-  * denominator is SQL NULL, never a division error. Either operand of
-  * another type fails at analysis, naming that type. */
-case class SetOverlap(left: Expression, right: Expression, over: SetOverlap.Over)
+  * / size(array_union(a, b))` (and its |A|, |B| twins), and the text
+  * form to the array form over `word_shingles(_, n)`; an empty
+  * denominator is SQL NULL, never a division error. Operands of mixed or
+  * other types fail at analysis, naming the type. */
+case class SetOverlap(left: Expression, right: Expression, over: SetOverlap.Over, n: Int = 0)
     extends BinaryExpression with NativeBinaryCodegen {
   override def dataType: DataType = DoubleType
   override def nullable: Boolean = true
   override def prettyName: String = "set_overlap"
   override def checkInputDataTypes(): TypeCheckResult =
-    Seq(left, right).map(_.dataType).find {
-      case ArrayType(StringType, _) => false
-      case _ => true
-    } match {
-      case None => TypeCheckResult.TypeCheckSuccess
-      case Some(dt) => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName takes two ARRAY<STRING> operands, not ${dt.catalogString}")
-    }
+    ByteRanges.checkOperands(prettyName, Seq(left, right), n)
   override protected def nullSafeEval(l: Any, r: Any): Any = {
-    val a = l.asInstanceOf[ArrayData]
-    val b = r.asInstanceOf[ArrayData]
-    val na = a.numElements()
-    val seenA = new java.util.HashSet[UTF8String](math.max(16, na * 2))
+    val a = ByteRanges(l, n)
+    val b = ByteRanges(r, n)
+    val na = a.count
+    val nb = b.count
+    val table = new RangeTable(na + nb)
+    var sizeA = 0
     var nullA = false
     var i = 0
     while (i < na) {
-      if (a.isNullAt(i)) nullA = true else seenA.add(a.getUTF8String(i))
+      if (!a.load(i)) nullA = true
+      else if (table.mark(a, 1) == 0) sizeA += 1
       i += 1
     }
-    val nb = b.numElements()
-    val seenB = new java.util.HashSet[UTF8String](math.max(16, nb * 2))
+    var sizeB = 0
     var nullB = false
     var inter = 0
     i = 0
     while (i < nb) {
-      if (b.isNullAt(i)) {
+      if (!b.load(i)) {
         if (!nullB && nullA) inter += 1
         nullB = true
       } else {
-        val s = b.getUTF8String(i)
-        if (seenB.add(s) && seenA.contains(s)) inter += 1
+        val before = table.mark(b, 2)
+        if ((before & 2) == 0) {
+          sizeB += 1
+          if (before != 0) inter += 1
+        }
       }
       i += 1
     }
-    val sizeA = seenA.size + (if (nullA) 1 else 0)
-    val sizeB = seenB.size + (if (nullB) 1 else 0)
+    if (nullA) sizeA += 1
+    if (nullB) sizeB += 1
     val den = over match {
       case SetOverlap.Union => sizeA + sizeB - inter
       case SetOverlap.LeftSide => sizeA

@@ -88,7 +88,10 @@ object Dedup {
   /** Distinct word n-gram shingles of a whitespace-tokenized text column;
     * documents shorter than n words yield no shingles. Native one-pass
     * kernel (graft.functions.WordShingles) — the equivalent HOF pipeline
-    * is interpreted per element and dominated every dedup pass. */
+    * is interpreted per element and dominated every dedup pass. The
+    * MinHash signature and the exact verify do not need it: their text
+    * forms ([[minhashSignature]], [[jaccard]] with `n`) read the n-grams
+    * in place. */
   def wordShingles(text: Column, n: Int): Column =
     ColumnBridge.column(graft.functions.WordShingles(ColumnBridge.expression(text), n))
 
@@ -100,10 +103,17 @@ object Dedup {
     * keeps no pair; a NULL operand is NULL; an operand of another type
     * fails at analysis. Native one-pass kernel
     * (graft.functions.SetOverlap), shared with [[pairwiseContainment]]. */
-  def jaccard(a: Column, b: Column): Column = overlap(a, b, SetOverlap.Union)
+  def jaccard(a: Column, b: Column): Column = overlap(a, b, SetOverlap.Union, 0)
 
-  private def overlap(a: Column, b: Column, over: SetOverlap.Over): Column =
-    ColumnBridge.column(SetOverlap(ColumnBridge.expression(a), ColumnBridge.expression(b), over))
+  /** Exact word `n`-gram Jaccard of two text columns: the same value as
+    * `jaccard(wordShingles(a, n), wordShingles(b, n))`, bit for bit and
+    * NULL included, with the n-grams read in place from the text — no
+    * shingle array is built. What every near-dup verify calls. */
+  def jaccard(a: Column, b: Column, n: Int): Column = overlap(a, b, SetOverlap.Union, n)
+
+  private def overlap(a: Column, b: Column, over: SetOverlap.Over, n: Int): Column =
+    ColumnBridge.column(
+      SetOverlap(ColumnBridge.expression(a), ColumnBridge.expression(b), over, n))
 
   /** Scoped shingle cache for iterative dedup pipelines (several passes
     * over one corpus): persists the shingle frame, hands it to `f`, and
@@ -137,6 +147,23 @@ object Dedup {
     * ~10× slower at the sf0.1 bench). */
   def minhashSignature(shingles: Column): Column =
     ColumnBridge.column(MinhashSig(ColumnBridge.expression(shingles), hashA, hashB))
+
+  /** The MinHash signature of a text's word `n`-grams, read in place:
+    * equal to `minhashSignature(wordShingles(text, n))` element for
+    * element, with no shingle array built. */
+  def minhashSignature(text: Column, n: Int): Column =
+    ColumnBridge.column(MinhashSig(ColumnBridge.expression(text), hashA, hashB, n))
+
+  /** The verify joins of every near-dup operator: `pairs`' `idA` and
+    * `idB` joined to their documents' `text`, as `t_a` (from `docsA`) and
+    * `t_b` (from `docsB`). Only the text crosses the joins: the verify
+    * kernels read its n-grams in place, so no shingle array is built,
+    * broadcast or shuffled. */
+  private def joinTexts(pairs: DataFrame, id: String, text: Column,
+                        idA: String, docsA: DataFrame,
+                        idB: String, docsB: DataFrame): DataFrame =
+    pairs.join(docsA.select(col(id).as(idA), text.as("t_a")), idA)
+      .join(docsB.select(col(id).as(idB), text.as("t_b")), idB)
 
   /** Candidate pairs from LSH banding: docs sharing any band bucket.
     * Shuffles on (band, bucket slice); self-join inside buckets.
@@ -173,32 +200,22 @@ object Dedup {
     * (the pair list, bounded by the near-dup rate). */
   def minhashNearDups(docs: DataFrame, id: String, text: Column,
                       n: Int, threshold: Double, maxBucketSize: Int = 0): DataFrame = {
-    // the shingle table feeds bucketing AND both verify joins. It is NOT
-    // persisted: an un-released persist() leaks block-manager entries for
-    // the session's lifetime (round-1 ADVICE), and at 100 TB the shingle
-    // frame is LARGER than the corpus — recomputing a narrow codegen'd
-    // projection under a pruned scan is the scalable trade. Callers doing
-    // many dedup passes over one corpus can scope a cache via
-    // [[withShingles]], which guarantees release.
-    val shingled = docs.select(col(id), wordShingles(text, n).as("sh"))
-    // Signatures MATERIALIZE once (round 17, optimization): the banding
-    // self-join's two sides each re-evaluated the shingle + signature
-    // kernel over the corpus (no exchange/stage reuse fires across the
-    // aliased sides — measured on the executed plan), so one narrow
-    // checkpoint (id + K longs, ~270 B/doc — an order smaller than the
-    // text) halves the most expensive pass. The shingle frame itself
-    // stays unpersisted — at 100 TB it is LARGER than the corpus
-    // (round-1 ADVICE); the verify joins recompute it, which is the
-    // documented scalable trade.
+    // No shingle array is built anywhere: the signature and the verify
+    // both read the text's word n-grams in place. Signatures MATERIALIZE
+    // once (round 17, optimization): the banding self-join's two sides
+    // each re-evaluated the signature kernel over the corpus (no
+    // exchange/stage reuse fires across the aliased sides — measured on
+    // the executed plan), so one narrow checkpoint (id + K longs,
+    // ~270 B/doc) serves both. The verify joins attach each candidate's
+    // text, nothing persisted: the text is what the scan already reads,
+    // and a shingle frame would be larger than the corpus (round-1
+    // ADVICE).
     Checkpoints.scope() { s =>
-      val sigCk = s.checkpoint(
-        docs.select(col(id), minhashSignature(wordShingles(text, n)).as("sig")))
+      val sigCk = s.checkpoint(docs.select(col(id), minhashSignature(text, n).as("sig")))
       val cands = lshCandidatesFromSig(sigCk, id, maxBucketSize)
-      val sa = shingled.select(col(id).as("id_a"), col("sh").as("sh_a"))
-      val sb = shingled.select(col(id).as("id_b"), col("sh").as("sh_b"))
       s.checkpoint(
-        cands.join(sa, "id_a").join(sb, "id_b")
-          .select(col("id_a"), col("id_b"), jaccard(col("sh_a"), col("sh_b")).as("j"))
+        joinTexts(cands, id, text, "id_a", docs, "id_b", docs)
+          .select(col("id_a"), col("id_b"), jaccard(col("t_a"), col("t_b"), n).as("j"))
           .filter(col("j") >= threshold))
     }
   }
@@ -274,19 +291,18 @@ object Dedup {
     * under a pruned scan); the join shuffles 16 band rows per doc on the
     * (band, bucket) key, and only the DELTA-sized side is new work each
     * refresh. Candidates dedupe on the narrow id pair before the verify
-    * joins re-attach shingles. */
+    * joins attach each side's text; signatures and the verify read the
+    * n-grams from the text, so no shingle array is built. */
   def incrementalNearDups(corpus: DataFrame, delta: DataFrame, id: String,
                           text: Column, n: Int, threshold: Double): DataFrame = {
     def banded(docs: DataFrame, outId: String): DataFrame =
-      docs.select(col(id).as(outId), minhashSignature(wordShingles(text, n)).as("sig"))
+      docs.select(col(id).as(outId), minhashSignature(text, n).as("sig"))
         .select(col(outId), minhashBands(col("sig")).as("bb"))
     val cands = banded(delta, "id_d").hint("shuffle_hash")
       .join(banded(corpus, "id_c"), "bb")
       .select(col("id_d"), col("id_c")).distinct()
-    val sd = delta.select(col(id).as("id_d"), wordShingles(text, n).as("sh_d"))
-    val sc = corpus.select(col(id).as("id_c"), wordShingles(text, n).as("sh_c"))
-    cands.join(sd, "id_d").join(sc, "id_c")
-      .select(col("id_d"), col("id_c"), jaccard(col("sh_d"), col("sh_c")).as("j"))
+    joinTexts(cands, id, text, "id_d", delta, "id_c", corpus)
+      .select(col("id_d"), col("id_c"), jaccard(col("t_a"), col("t_b"), n).as("j"))
       .filter(col("j") >= threshold)
   }
 
@@ -323,21 +339,21 @@ object Dedup {
   def simhashNearDups(docs: DataFrame, id: String, text: Column,
                       n: Int, threshold: Double,
                       maxBucketSize: Int = 0): DataFrame = {
-    val shingled = docs.select(col(id), wordShingles(text, n).as("sh"))
     // The (id, simhash) SKETCH is materialized once (round 18 — the same
     // move [[minhashNearDups]] got in r17, and an order narrower still:
     // id + ONE long per doc): without it the shingle→simhash kernel is
     // re-evaluated by BOTH sides of the banded self-join AND (when
     // maxBucketSize > 0) a third time by the valve's bucket-count probe —
     // no stage reuse fires across the aliased sides (r17 plan-dump
-    // finding on the minhash twin). Shingles deliberately stay
-    // unpersisted (the documented 100 TB trade: the shingle frame is
-    // larger than the corpus); the verify joins recompute them. Returns
-    // one checkpointed frame the caller owns, as minhashNearDups does.
+    // finding on the minhash twin). The sketch is the one shingle array
+    // built: its votes need the distinct set. The verify joins attach
+    // each candidate's text and read its n-grams in place. Returns one
+    // checkpointed frame the caller owns, as minhashNearDups does.
     Checkpoints.scope() { s =>
       val sketchCk = s.checkpoint(
-        shingled.select(col(id), simhash64(col("sh")).as("simhash")))
-      s.checkpoint(simhashPairsPlan(sketchCk, shingled, id, threshold, maxBucketSize))
+        docs.select(col(id), simhash64(wordShingles(text, n)).as("simhash")))
+      s.checkpoint(simhashPairsPlan(sketchCk, docs.select(col(id), text.as("text")),
+        id, n, threshold, maxBucketSize))
     }
   }
 
@@ -345,9 +361,10 @@ object Dedup {
     * LAZY (no checkpoint): [[simhashNearDups]] feeds it the materialized
     * sketch and checkpoints the result; tests feed it a raw projection so
     * plan-shape assertions (valve filter presence, no-op plan identity)
-    * can see the full lineage. */
-  private[graft] def simhashPairsPlan(sketched: DataFrame, shingled: DataFrame,
-                                      id: String, threshold: Double,
+    * can see the full lineage. `texts` is an (id, `text`) frame the
+    * verify reads its word `n`-grams from. */
+  private[graft] def simhashPairsPlan(sketched: DataFrame, texts: DataFrame,
+                                      id: String, n: Int, threshold: Double,
                                       maxBucketSize: Int): DataFrame = {
     val offsets = SimhashBlockWidths.scanLeft(0)(_ + _)
     def block(b: Int): Column =
@@ -372,10 +389,8 @@ object Dedup {
       id, "bb",
       payload = Some(s => col("simhash").as(s"sim_$s")),
       keep = Some(bit_count(col("sim_a").bitwiseXOR(col("sim_b"))) <= SimhashHammingGuarantee))
-    val sa = shingled.select(col(id).as("id_a"), col("sh").as("sh_a"))
-    val sb = shingled.select(col(id).as("id_b"), col("sh").as("sh_b"))
-    cands.join(sa, "id_a").join(sb, "id_b")
-      .select(col("id_a"), col("id_b"), jaccard(col("sh_a"), col("sh_b")).as("j"))
+    joinTexts(cands, id, col("text"), "id_a", texts, "id_b", texts)
+      .select(col("id_a"), col("id_b"), jaccard(col("t_a"), col("t_b"), n).as("j"))
       .filter(col("j") >= threshold)
   }
 
@@ -716,13 +731,9 @@ object Dedup {
     * pair-similarity surface; used for adjacent-id document pairs). A
     * pair of documents both shorter than n words gets NULL `j`. */
   def pairwiseJaccard(docs: DataFrame, id: String, text: Column, n: Int,
-                      pairs: DataFrame): DataFrame = {
-    val shingled = docs.select(col(id), wordShingles(text, n).as("sh"))
-    val sa = shingled.select(col(id).as("id_a"), col("sh").as("sh_a"))
-    val sb = shingled.select(col(id).as("id_b"), col("sh").as("sh_b"))
-    pairs.join(sa, "id_a").join(sb, "id_b")
-      .select(col("id_a"), col("id_b"), jaccard(col("sh_a"), col("sh_b")).as("j"))
-  }
+                      pairs: DataFrame): DataFrame =
+    joinTexts(pairs, id, text, "id_a", docs, "id_b", docs)
+      .select(col("id_a"), col("id_b"), jaccard(col("t_a"), col("t_b"), n).as("j"))
 
   /** Segment-level boilerplate removal — the corpus-wide "line dedup" pass
     * of a web-scale curation pipeline (RefinedWeb/CCNet remove lines that
@@ -774,19 +785,16 @@ object Dedup {
     * asymmetry — drop the CONTAINED side, keep the superset document.
     * Empty shingle sets (docs shorter than n words) yield NULL, never a
     * division error; both ratios come from [[jaccard]]'s kernel
-    * (graft.functions.SetOverlap). Same scale shape as
-    * [[pairwiseJaccard]]: the pair list drives two hash joins; shingles
-    * attach per side, nothing corpus-sized self-joins. */
+    * (graft.functions.SetOverlap), reading the n-grams from the text.
+    * Same scale shape as [[pairwiseJaccard]]: the pair list drives two
+    * hash joins; the text attaches per side, nothing corpus-sized
+    * self-joins. */
   def pairwiseContainment(docs: DataFrame, id: String, text: Column, n: Int,
-                          pairs: DataFrame): DataFrame = {
-    val shingled = docs.select(col(id), wordShingles(text, n).as("sh"))
-    val sa = shingled.select(col(id).as("id_a"), col("sh").as("sh_a"))
-    val sb = shingled.select(col(id).as("id_b"), col("sh").as("sh_b"))
-    pairs.join(sa, "id_a").join(sb, "id_b")
+                          pairs: DataFrame): DataFrame =
+    joinTexts(pairs, id, text, "id_a", docs, "id_b", docs)
       .select(col("id_a"), col("id_b"),
-        overlap(col("sh_a"), col("sh_b"), SetOverlap.LeftSide).as("c_ab"),
-        overlap(col("sh_a"), col("sh_b"), SetOverlap.RightSide).as("c_ba"))
-  }
+        overlap(col("t_a"), col("t_b"), SetOverlap.LeftSide, n).as("c_ab"),
+        overlap(col("t_a"), col("t_b"), SetOverlap.RightSide, n).as("c_ba"))
 
   /** Ceiling on TOTAL oversized keys the tuner's tagging path may
     * broadcast (across all widening levels): 2^18 keys ≈ tens of MB of

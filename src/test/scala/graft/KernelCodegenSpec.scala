@@ -26,17 +26,24 @@ class KernelCodegenSpec extends SparkTestBase {
         col2(VecDot(vec, vec)).as("dot")).where(col("cos") > 0.99)
       assert(n.count() > 0)
       val sh = expr2(operators.Dedup.wordShingles(col("text"), 3))
+      val text = expr2(col("text"))
       val r = docs.select(
         col2(MinhashSig(sh, Array(3L, 5L), Array(7L, 11L))).as("mh"),
+        col2(MinhashSig(text, Array(3L, 5L), Array(7L, 11L), 3)).as("mh_text"),
         col2(Simhash64(sh)).as("sim"),
         col2(TextStats(expr2(col("text")), Set("the", "a"))).as("st"),
         col2(RollingFingerprint(expr2(col("text")))).as("fp"))
       assert(r.count() > 0)
+      assert(r.where(col("mh") === col("mh_text")).count() == r.count())
       // a set and its reverse overlap fully; the filter keeps the kernel
       // in the plan (a bare count() prunes an unused projection)
       val rev = expr2(reverse(operators.Dedup.wordShingles(col("text"), 3)))
       assert(docs.select(col2(SetOverlap(sh, rev, SetOverlap.Union)).as("ov"))
         .where(col("ov") === 1.0).count() > 0)
+      // the text form: a text overlaps itself fully, in every ratio
+      val self = Seq(SetOverlap.Union, SetOverlap.LeftSide, SetOverlap.RightSide)
+        .map(o => col2(SetOverlap(text, text, o, 3)) === 1.0).reduce(_ && _)
+      assert(docs.where(self).count() > 0)
       val books = Array.tabulate(8)(_ => Array.tabulate(4)(k => Array.fill(8)(k * 0.1)))
       val pq = emb.select(col2(PqEncode(vec, books)).as("code"), col2(PqLut(vec, books)).as("lut"))
         .select(col2(PqAdc(expr2(col("code")), expr2(col("lut")), 4)).as("adc"))

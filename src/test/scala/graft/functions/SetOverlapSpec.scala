@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.AnalysisException
+import org.apache.spark.sql.{AnalysisException, Column}
 import org.apache.spark.sql.functions._
 
 import graft.operators.Dedup
@@ -11,7 +11,10 @@ import graft.operators.Dedup
   * wherever the union is non-empty (duplicates, NULL elements, empty
   * sides and multibyte strings included), `pairwiseContainment` keeps its
   * former `array_intersect` ratios, and a NULL operand or an empty
-  * denominator is SQL NULL. */
+  * denominator is SQL NULL. The text forms, which read word n-grams in
+  * place, equal the array forms over `word_shingles` bit for bit: the
+  * MinHash signature element for element, and Jaccard, |A∩B|/|A| and
+  * |A∩B|/|B|, NULL included. */
 class SetOverlapSpec extends graft.SparkTestBase {
 
   import spark.implicits._
@@ -83,5 +86,62 @@ class SetOverlapSpec extends graft.SparkTestBase {
       df.select(Dedup.jaccard(col("a"), array(lit(1), lit(2)))).collect())
     assert(e.getMessage.contains("set_overlap takes two ARRAY<STRING> operands, not array<int>"),
       e.getMessage)
+  }
+
+  /** Texts whose tokens include empty ones (leading, trailing and
+    * adjacent spaces), multibyte and supplementary-plane characters and
+    * a small vocabulary (so n-grams repeat), from zero to nine tokens
+    * (shorter than most `n`), or NULL. */
+  private def randomText(rng: scala.util.Random): Option[String] = {
+    val words = Vector("a", "b", "a b", "", "é", "日本", "😀", "straße", "x𝄞y")
+    if (rng.nextInt(12) == 0) None
+    else Some(Seq.fill(rng.nextInt(10))(words(rng.nextInt(words.size))).mkString(" "))
+  }
+
+  test("text forms equal the array forms over word_shingles: signature, jaccard and containment") {
+    import org.apache.spark.sql.graft.ColumnBridge.{column, expression}
+    val rng = new scala.util.Random(0x7e47)
+    val fixed = Seq("", " ", "  ", "a", " a", "a ", "a  b", " a b ", "a b a b a b", "é 日本 😀",
+      "a b c a b c a b d").map(Option(_))
+    val texts = fixed ++ Seq.fill(300)(randomText(rng))
+    val df = (texts.zip(texts.reverse) ++ texts.map(t => (t, t)) ++
+      Seq.fill(200)((randomText(rng), randomText(rng)))).toDF("a", "b")
+    val (a, b) = (col("a"), col("b"))
+    def bits(v: Any): Option[Long] =
+      Option(v).map(x => java.lang.Double.doubleToLongBits(x.asInstanceOf[Double]))
+    def ratio(over: SetOverlap.Over, x: Column, y: Column, width: Int): Column =
+      column(SetOverlap(expression(x), expression(y), over, width))
+    val overs = Seq(SetOverlap.Union, SetOverlap.LeftSide, SetOverlap.RightSide)
+    var nonNull = 0
+    for (n <- 1 to 5; frame <- Seq(df, df.repartition(3))) {
+      val (sa, sb) = (Dedup.wordShingles(a, n), Dedup.wordShingles(b, n))
+      val got = frame.select(Seq(a, b,
+          Dedup.minhashSignature(a, n), Dedup.minhashSignature(sa)) ++
+          overs.flatMap(o => Seq(ratio(o, a, b, n), ratio(o, sa, sb, 0))): _*)
+        .collect()
+      assert(got.length == df.count())
+      got.foreach { r =>
+        val where = s"n=$n a=${r.get(0)} b=${r.get(1)}"
+        assert(Option(r.getSeq[Long](2)) == Option(r.getSeq[Long](3)), s"$where: signature")
+        assert(r.isNullAt(0) == r.isNullAt(2), s"$where: NULL text, NULL signature")
+        overs.indices.foreach { k =>
+          assert(bits(r.get(4 + 2 * k)) == bits(r.get(5 + 2 * k)),
+            s"$where ${overs(k)}: text ${r.get(4 + 2 * k)} vs array ${r.get(5 + 2 * k)}")
+          if (!r.isNullAt(4 + 2 * k)) nonNull += 1
+        }
+      }
+    }
+    assert(nonNull > 1000, s"most ratios are defined: $nonNull")
+  }
+
+  test("text forms: mixed operand types and a missing n-gram width fail at analysis") {
+    val df = Seq(("a b", Seq("a"))).toDF("t", "s")
+    val mixed = intercept[AnalysisException](
+      df.select(Dedup.jaccard(col("t"), col("s"), 2)).collect())
+    assert(mixed.getMessage.contains("set_overlap takes two STRING operands, not array<string>"),
+      mixed.getMessage)
+    val noWidth = intercept[AnalysisException](df.select(Dedup.jaccard(col("t"), col("t"))).collect())
+    assert(noWidth.getMessage.contains("set_overlap over STRING operands needs an n-gram width n >= 1"),
+      noWidth.getMessage)
   }
 }

@@ -5,6 +5,12 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.catalyst.plans.LeftSemi
 import org.apache.spark.sql.catalyst.plans.logical.Join
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.Exchange
+import org.apache.spark.sql.graft.ColumnBridge
+import org.apache.spark.sql.types.{ArrayType, StringType}
+import org.apache.spark.sql.util.QueryExecutionListener
 
 /** The banded-blocking valve ([[Blocking.valve]]) through each near-dup
   * operator that uses it: MinHash LSH (unbounded key: semi-join),
@@ -18,9 +24,12 @@ import org.apache.spark.sql.catalyst.plans.logical.Join
   * the gate SF and its widen-only drops; the capped
   * postings of `duplicateRuns` (a bounded-state aggregate that drops a
   * saturated gram whole); and the exact verify every near-dup operator
-  * shares, which keeps no pair of documents shorter than n words. Plan
-  * assertions collect typed nodes from the optimized LOGICAL plan, not
-  * executed-plan substrings. */
+  * shares, which keeps no pair of documents shorter than n words and
+  * reads the n-grams from the text: no executed near-dup plan builds,
+  * broadcasts or shuffles a shingle array outside the SimHash sketch.
+  * Plan assertions collect typed nodes from the optimized LOGICAL plan,
+  * or from the executed plans a `QueryExecutionListener` hears, not
+  * plan substrings. */
 class BlockingSpec extends SparkTestBase {
 
   import spark.implicits._
@@ -246,7 +255,7 @@ class BlockingSpec extends SparkTestBase {
   private def simhashPlan(d: DataFrame, cap: Int) = {
     val shingled = d.select(col("doc_id"), Dedup.wordShingles(col("text"), 3).as("sh"))
     val sketch = shingled.select(col("doc_id"), Dedup.simhash64(col("sh")).as("simhash"))
-    Dedup.simhashPairsPlan(sketch, shingled, "doc_id", 0.8, cap)
+    Dedup.simhashPairsPlan(sketch, d.select(col("doc_id"), col("text")), "doc_id", 3, 0.8, cap)
   }
 
   test("simhash valve: no-op cap compiles to the exact uncapped plan") {
@@ -709,5 +718,65 @@ class BlockingSpec extends SparkTestBase {
         Option(r.get(2)), Option(r.get(3)))).toSet
     assert(pc == Set((1L, 2L, None, None), (3L, 4L, Some(1.0), Some(2.0 / 3))),
       s"pairwiseContainment: $pc")
+  }
+
+  /** The action name and executed plan of every action `run` starts. */
+  private def executedPlans(run: => Unit): Seq[(String, SparkPlan)] = {
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, SparkPlan)]
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        seen.add((funcName, qe.executedPlan))
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    ColumnBridge.drainListeners(spark)
+    spark.listenerManager.register(listener)
+    try { run; ColumnBridge.drainListeners(spark) }
+    finally spark.listenerManager.unregister(listener)
+    seen.toArray(Array.empty[(String, SparkPlan)]).toSeq
+  }
+
+  private object Aqe extends AdaptiveSparkPlanHelper
+
+  private def buildsShingles(p: SparkPlan): Boolean =
+    Aqe.collect(p) {
+      case n if n.expressions.exists(_.exists(_.isInstanceOf[graft.functions.WordShingles])) => n
+    }.nonEmpty
+
+  /** The exchanges (shuffles and broadcasts) of an executed plan. */
+  private def exchanges(p: SparkPlan): Seq[Exchange] = Aqe.collect(p) { case e: Exchange => e }
+
+  /** Exchanges that carry an ARRAY<STRING> column. */
+  private def arrayExchanges(p: SparkPlan): Seq[Exchange] =
+    exchanges(p).filter(_.output.exists(_.dataType match {
+      case ArrayType(StringType, _) => true
+      case _ => false
+    }))
+
+  test("near-dup plans: no shingle array is built, broadcast or shuffled outside the SimHash sketch") {
+    val d = docs
+    val pairs = d.select(col("doc_id").as("id_a"), (col("doc_id") + 1).as("id_b"))
+    val calls: Seq[(String, () => DataFrame)] = Seq(
+      "minhashNearDups" -> (() => Dedup.minhashNearDups(d, "doc_id", col("text"), 3, 0.5)),
+      "incrementalNearDups" -> (() => Dedup.incrementalNearDups(d, d, "doc_id", col("text"), 3, 0.5)),
+      "pairwiseJaccard" -> (() => Dedup.pairwiseJaccard(d, "doc_id", col("text"), 3, pairs)),
+      "pairwiseContainment" -> (() => Dedup.pairwiseContainment(d, "doc_id", col("text"), 3, pairs)))
+    calls.foreach { case (op, call) =>
+      val plans = executedPlans(call().collect())
+      assert(plans.exists(p => exchanges(p._2).nonEmpty), s"$op: no exchange seen in $plans")
+      plans.foreach { case (action, p) =>
+        assert(!buildsShingles(p), s"$op: $action builds word_shingles:\n$p")
+        assert(arrayExchanges(p).isEmpty, s"$op: $action moves an ARRAY<STRING> column:\n$p")
+      }
+    }
+    val plans = executedPlans(Dedup.simhashNearDups(d, "doc_id", col("text"), 3, 0.5).collect())
+    val shingling = plans.filter(p => buildsShingles(p._2))
+    assert(shingling.nonEmpty, "the SimHash sketch votes over the shingle set")
+    shingling.foreach { case (action, p) =>
+      assert(action == "localCheckpoint" && p.output.map(_.name) == Seq("doc_id", "simhash"),
+        s"simhashNearDups: word_shingles outside the sketch checkpoint ($action):\n$p")
+    }
+    plans.foreach { case (action, p) =>
+      assert(arrayExchanges(p).isEmpty, s"simhashNearDups: $action moves an ARRAY<STRING> column:\n$p")
+    }
   }
 }

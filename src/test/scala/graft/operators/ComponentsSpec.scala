@@ -6,8 +6,9 @@ import org.apache.spark.sql.functions._
 /** Connected components over near-dup pairs ([[Dedup.nearDupClusters]]):
   * the pairs pipeline is evaluated once on the driver-local path and on
   * the overflow-to-fixpoint fallback, every working checkpoint is
-  * released on the non-convergence throw as on the success paths, and
-  * the driver-local union-find lands the fixpoint's labels. */
+  * released on the non-convergence throw as on the success paths, the
+  * driver-local union-find lands the fixpoint's labels, and the `jumps`
+  * parameter changes the fixpoint's round count, never its labels. */
 class ComponentsSpec extends SparkTestBase {
 
   import spark.implicits._
@@ -109,5 +110,24 @@ class ComponentsSpec extends SparkTestBase {
     val lf = labels(Dedup.nearDupClusters(chainIds, "id", chainPairs,
       maxIters = 40, jumps = 2, localLimit = 0))
     assert(lf == lc, "the fixpoint must land the driver-local labels on the chain")
+  }
+
+  test("nearDupClusters: jumps parameter changes round count, never labels") {
+    // 30-node ring with shuffled ids — the adversarial layout where label
+    // distance crawls; multi-jump must land the identical labeling
+    val ids = (0L until 30L).toDF("id")
+    val ring = (0L until 30L).map(i => (i, (i + 1) % 30))
+      .map { case (a, b) => (math.min(a * 7 % 30, b * 7 % 30), math.max(a * 7 % 30, b * 7 % 30)) }
+      .toDF("id_a", "id_b")
+    val one = Dedup.nearDupClusters(ids, "id", ring, maxIters = 40, jumps = 1, localLimit = 0)
+      .orderBy("id").as[(Long, Long)].collect().toSeq
+    val three = Dedup.nearDupClusters(ids, "id", ring, maxIters = 15, jumps = 3, localLimit = 0)
+      .orderBy("id").as[(Long, Long)].collect().toSeq
+    assert(one == three)
+    // and the driver-local path lands the same labels
+    val local = Dedup.nearDupClusters(ids, "id", ring)
+      .orderBy("id").as[(Long, Long)].collect().toSeq
+    assert(local == one)
+    assert(one.forall(_._2 == 0L)) // one ring → everyone labels to min id 0
   }
 }

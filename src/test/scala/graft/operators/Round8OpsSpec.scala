@@ -45,25 +45,6 @@ class Round8OpsSpec extends SparkTestBase {
     assert(got.toSeq == Seq((1L, 1L), (2L, 1L), (3L, 1L)))
   }
 
-  test("nearDupClusters: jumps parameter changes round count, never labels") {
-    // 30-node ring with shuffled ids — the adversarial layout where label
-    // distance crawls; multi-jump must land the identical labeling
-    val ids = (0L until 30L).toDF("id")
-    val ring = (0L until 30L).map(i => (i, (i + 1) % 30))
-      .map { case (a, b) => (math.min(a * 7 % 30, b * 7 % 30), math.max(a * 7 % 30, b * 7 % 30)) }
-      .toDF("id_a", "id_b")
-    val one = Dedup.nearDupClusters(ids, "id", ring, maxIters = 40, jumps = 1, localLimit = 0)
-      .orderBy("id").as[(Long, Long)].collect().toSeq
-    val three = Dedup.nearDupClusters(ids, "id", ring, maxIters = 15, jumps = 3, localLimit = 0)
-      .orderBy("id").as[(Long, Long)].collect().toSeq
-    assert(one == three)
-    // and the driver-local path lands the same labels
-    val local = Dedup.nearDupClusters(ids, "id", ring)
-      .orderBy("id").as[(Long, Long)].collect().toSeq
-    assert(local == one)
-    assert(one.forall(_._2 == 0L)) // one ring → everyone labels to min id 0
-  }
-
   // --- sessionize --------------------------------------------------------
 
   test("sessionize: gaps strictly over the threshold split sessions") {
